@@ -59,6 +59,7 @@ from timeseriescorrelation_spark.operators.textstats import (  # noqa: E402
     langid_heuristic,
     text_stats,
 )
+from timeseriescorrelation_spark.session import cache_once  # noqa: E402
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,7 +288,7 @@ def q_corr_report(spark, sf_dir):
     # hourly prep) feeds both self-join sides of the candidate join AND
     # both probe sides of the exact-corr join — uncached it recomputes
     # ~5x (measured 6.3s -> ~2s at sf0.1)
-    vectors = _cache_once(dft_sketch(build_vectors(aligned)))
+    vectors = cache_once(dft_sketch(build_vectors(aligned)))
     cand = candidate_pairs(vectors, _CORR_THETA)
     rep = exact_corr(cand, vectors, _CORR_THETA)
     return rep.select("id_a", "id_b", F.round("rho", 6).alias("rho"))
@@ -307,7 +308,7 @@ def q_spearman_pruned(spark, sf_dir):
     )
 
     aligned = rank_transform(_aligned_from_events(spark, sf_dir))
-    vectors = _cache_once(dft_sketch(build_vectors(aligned)))
+    vectors = cache_once(dft_sketch(build_vectors(aligned)))
     cand = candidate_pairs(vectors, _CORR_THETA)
     rep = exact_corr(cand, vectors, _CORR_THETA)
     return rep.select("id_a", "id_b", F.round("rho", 6).alias("rho_s"))
@@ -429,15 +430,6 @@ def _embs(spark, sf_dir):
 # (applicationId, sf_dir, kind), so the driver gate's separate
 # sessions and sf dirs never cross-contaminate, and results are
 # byte-identical to the unshared builds (same plan, evaluated once).
-def _cache_once(df):
-    """See session.cache_once — avoids re-marking an equivalent plan
-    cached by an earlier query in the same session (the corr family
-    shares its sketch-vectors lineage across 4 gate keys)."""
-    from timeseriescorrelation_spark.session import cache_once
-
-    return cache_once(df)
-
-
 _GRAPH_CACHE: dict = {}
 
 
@@ -4708,7 +4700,7 @@ def q_corr_clusters(spark, sf_dir):
 
     def build():
         aligned = _aligned_from_events(spark, sf_dir)
-        vectors = _cache_once(dft_sketch(build_vectors(aligned)))
+        vectors = cache_once(dft_sketch(build_vectors(aligned)))
         cand = candidate_pairs(vectors, _CORR_THETA)
         return exact_corr(cand, vectors, _CORR_THETA).select(
             "id_a", "id_b"
@@ -6654,7 +6646,7 @@ def q_prune_sweep(spark, sf_dir):
     integer-exactly.  Soundness is additionally gate-proven by
     corr_report (its oracle IS the naive all-pairs answer)."""
     aligned = _aligned_from_events(spark, sf_dir)
-    vectors = _cache_once(dft_sketch(build_vectors(aligned)))
+    vectors = cache_once(dft_sketch(build_vectors(aligned)))
     n = vectors.agg(F.count(F.lit(1)).alias("n_series"))
     frames = []
     for theta in (0.5, 0.7, 0.9):

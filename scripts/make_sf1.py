@@ -30,9 +30,11 @@ OUT = sys.argv[1] if len(sys.argv) > 1 else "/tmp/testdata_sf1"
 REPLICAS = 10
 
 # per-table key columns to offset, with a stride comfortably past the
-# sf0.1 max of each key domain (keys stay BIGINT, no collisions)
+# sf0.1 max of each key domain (keys stay BIGINT, no collisions).
+# __spark_entry__.py casts event_id to an int32 turn_idx, so the largest
+# shifted id (REPLICAS - 1) * stride + 99_999 must stay below 2**31.
 SHIFTS: dict[str, dict[str, int]] = {
-    "events": {"event_id": 10**9, "user_id": 10**6},
+    "events": {"event_id": 10**6, "user_id": 10**6},
     "documents": {"doc_id": 10**7},
     "embeddings": {"vec_id": 10**7},
     "customer": {"c_custkey": 10**6},

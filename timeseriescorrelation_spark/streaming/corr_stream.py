@@ -17,10 +17,10 @@ pair containing m (a CONFIGURED pair set — the monitor form; the
 all-pairs batch report stays the discovery tool).  Per-event cost is
 |pairs containing m|, state is 13 int64s per live pair — constant.
 
-Emission contract (same as the other stateful twins): a day emits when
-a LATER-day event of the same pair arrives; each pair's final day
-never closes.  Hours/days arrive via the event-time watermark; late
-rows under the open hour are dropped.
+Emission contract: a day emits when a LATER-day event of the same pair
+arrives; each pair's final day never closes.  Rows under an already-
+closed hour are late and dropped; ordering and eviction (anchored on
+the open hour): see `streaming.scan`.
 """
 
 from __future__ import annotations
@@ -31,6 +31,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from timeseriescorrelation_spark.streaming.scan import (
+    micros,
+    snap_cents,
+    stateful_scan,
+)
 
 OUT_SCHEMA = ("metric_a string, metric_b string, day_ts timestamp, "
               "n_hours long, r double")
@@ -85,15 +91,12 @@ def stream_corr(stream: DataFrame, pairs: list[tuple[str, str]],
                 "ts", "value")
     )
 
-    def _mon(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _mon(key, pdf, st):
         (pk,) = key
         ma, mb = pk.split("\x00")
-        if state.exists:
+        if st is not None:
             (open_h, oa, ona, ob, onb, day_us,
-             n, sa, sb, saa, sbb, sab) = state.get
+             n, sa, sb, saa, sbb, sab) = st
         else:
             open_h = None
             oa = ona = ob = onb = 0
@@ -121,62 +124,49 @@ def stream_corr(stream: DataFrame, pairs: list[tuple[str, str]],
                 )
             n = sa = sb = saa = sbb = sab = 0
 
-        parts = [x for x in pdfs if len(x)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            side = pdf["side"].to_numpy(dtype=np.int64)
-            x = pdf["value"].to_numpy(dtype=np.float64) * 100
-            cents = np.where(
-                x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-            ).astype(np.int64)
-            order = np.argsort(ts_us, kind="stable")
-            for i in order:
-                h = int(ts_us[i]) // HOUR_US * HOUR_US
-                if open_h is None:
-                    open_h = h
-                    day_us = h // DAY_US * DAY_US
-                elif h > open_h:
-                    fold_hour()
-                    d = h // DAY_US * DAY_US
-                    if d > day_us:
-                        close_day(day_us)
-                        day_us = d
-                    open_h = h
-                elif h < open_h:
-                    continue  # late row under the open hour: dropped
-                if side[i] == 0:
-                    oa += int(cents[i])
-                    ona += 1
-                else:
-                    ob += int(cents[i])
-                    onb += 1
+        ts_us = micros(pdf["ts"])
+        side = pdf["side"].to_numpy(dtype=np.int64)
+        cents = snap_cents(pdf["value"].to_numpy(dtype=np.float64))
+        for i in np.argsort(ts_us, kind="stable"):
+            h = int(ts_us[i]) // HOUR_US * HOUR_US
+            if open_h is None:
+                open_h = h
+                day_us = h // DAY_US * DAY_US
+            elif h > open_h:
+                fold_hour()
+                d = h // DAY_US * DAY_US
+                if d > day_us:
+                    close_day(day_us)
+                    day_us = d
+                open_h = h
+            elif h < open_h:
+                continue  # late row under the open hour: dropped
+            if side[i] == 0:
+                oa += int(cents[i])
+                ona += 1
+            else:
+                ob += int(cents[i])
+                onb += 1
 
-        if open_h is not None:
-            state.update((
-                int(open_h), int(oa), int(ona), int(ob), int(onb),
-                int(day_us), int(n), int(sa), int(sb), int(saa),
-                int(sbb), int(sab),
-            ))
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, open_h // 1_000 + evict_seconds * 1_000)
-            )
-        if rows:
-            yield pd.DataFrame(
-                {
-                    "metric_a": ma,
-                    "metric_b": mb,
-                    "day_ts": np.array([r[0] for r in rows],
-                                       dtype=np.int64)
-                    .astype("datetime64[us]"),
-                    "n_hours": [r[1] for r in rows],
-                    "r": [r[2] for r in rows],
-                }
-            )
+        new = (
+            int(open_h), int(oa), int(ona), int(ob), int(onb),
+            int(day_us), int(n), int(sa), int(sb), int(saa),
+            int(sbb), int(sab),
+        )
+        if not rows:
+            return new, None
+        return new, pd.DataFrame(
+            {
+                "metric_a": ma,
+                "metric_b": mb,
+                "day_ts": np.array([r[0] for r in rows], dtype=np.int64)
+                .astype("datetime64[us]"),
+                "n_hours": [r[1] for r in rows],
+                "r": [r[2] for r in rows],
+            }
+        )
 
-    return routed.groupBy("pk").applyInPandasWithState(
-        _mon, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout",
+    return stateful_scan(
+        routed, ["pk"], _mon, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )

@@ -10,14 +10,7 @@ window algebra term for term, so the streamed scores are BIT-EQUAL to
 batch on any split (asserted in tests/test_cusum_stream.py).  Floats
 in state would accumulate in a split-dependent order; ints cannot.
 
-Ordering/late-data contract (same as zscore_stream / ewma_stream):
-within a micro-batch rows sort by (ts, turn_idx); rows at or before
-the state's last (ts, turn_idx) are late past emission and dropped —
-scores are never retracted.  Run with a watermark at least the
-expected disorder.
-
-State hygiene: EventTimeTimeout evicts series idle past
-``evict_seconds`` beyond the watermark — O(live series) state.
+Ordering, replay cutoff and eviction: see `streaming.scan`.
 """
 
 from __future__ import annotations
@@ -25,6 +18,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    snap_cents,
+    stateful_scan,
+)
 
 OUT_SCHEMA = (
     "conv_id string, metric string, ts timestamp, turn_idx int,"
@@ -40,67 +39,38 @@ def stream_cusum(stream: DataFrame, mu: float, sigma: float,
     mu_c = int(round(mu * 100))
     thr = float(h) * int(round(sigma * 100))
 
-    def _cusum(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _cusum(key, pdf, st):
         conv_id, metric = key
-        lt, li, p0, lo0, hi0 = (
-            state.get if state.exists else (None, None, 0, 0, 0)
+        lt, li, p0, lo0, hi0 = st or (None, None, 0, 0, 0)
+        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        if not len(pos):
+            return None, None
+        vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
+        p = p0 + np.cumsum(snap_cents(vals) - mu_c)
+        # running extrema seeded by state: min(0, lo0, min p), identical
+        # to the batch least(0, min over prefix)
+        lo = np.minimum(np.minimum(np.minimum.accumulate(p), lo0), 0)
+        hi = np.maximum(np.maximum(np.maximum.accumulate(p), hi0), 0)
+        sp = (p - lo).astype(np.float64)
+        sm = (hi - p).astype(np.float64)
+        new = (
+            int(ts_us[-1]), int(idx[-1]),
+            int(p[-1]), int(lo[-1]), int(hi[-1]),
+        )
+        return new, pd.DataFrame(
+            {
+                "conv_id": conv_id,
+                "metric": metric,
+                "ts": ts_us.astype("datetime64[us]"),
+                "turn_idx": idx.astype(np.int32),
+                "value": vals,
+                "s_plus": sp / 100,
+                "s_minus": sm / 100,
+                "alert": (sp > thr) | (sm > thr),
+            }
         )
 
-        parts = [x for x in pdfs if len(x)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            idx = pdf["turn_idx"].to_numpy().astype(np.int64)
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            order = np.lexsort((idx, ts_us))
-            ts_us, idx, vals = ts_us[order], idx[order], vals[order]
-            if lt is not None:
-                live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-                ts_us, idx, vals = ts_us[live], idx[live], vals[live]
-            if len(ts_us):
-                # half-away-from-zero cent snap (matches F.round)
-                x = vals * 100
-                v = np.where(
-                    x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-                ).astype(np.int64)
-                p = p0 + np.cumsum(v - mu_c)
-                # running extrema seeded by state: min(0, lo0, min p),
-                # identical to the batch least(0, min over prefix)
-                lo = np.minimum(np.minimum.accumulate(p), lo0)
-                lo = np.minimum(lo, 0)
-                hi = np.maximum(np.maximum.accumulate(p), hi0)
-                hi = np.maximum(hi, 0)
-                sp = (p - lo).astype(np.float64)
-                sm = (hi - p).astype(np.float64)
-                state.update((
-                    int(ts_us[-1]), int(idx[-1]),
-                    int(p[-1]), int(lo[-1]), int(hi[-1]),
-                ))
-                yield pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "metric": metric,
-                        "ts": ts_us.astype("datetime64[us]"),
-                        "turn_idx": idx.astype(np.int32),
-                        "value": vals,
-                        "s_plus": sp / 100,
-                        "s_minus": sm / 100,
-                        "alert": (sp > thr) | (sm > thr),
-                    }
-                )
-
-        if state.exists:
-            lt_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt_now // 1_000 + evict_seconds * 1_000)
-            )
-
-    return stream.groupBy("conv_id", "metric").applyInPandasWithState(
-        _cusum, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, ["conv_id", "metric"], _cusum, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )

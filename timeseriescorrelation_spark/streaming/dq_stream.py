@@ -11,21 +11,23 @@ across any micro-batch split produces identical counts (asserted
 batch-equal in tests/test_fdr_incremental.py).
 
 Output mode is "update": each batch re-emits the current totals for
-every conversation that received turns, so the sink always holds the
-latest verdict per conversation (the DQ-on-ingest dashboard shape).
+every conversation that received turns (even when all of them are
+late), so the sink always holds the latest verdict per conversation
+(the DQ-on-ingest dashboard shape).
 
-Late-data contract: rows at or before the state's last (ts, turn_idx)
-are late past counting and dropped (counters never retract); run with
-a watermark at least the expected disorder.  State hygiene:
-EventTimeTimeout evicts conversations idle past ``evict_seconds``
-beyond the watermark — the final emitted totals remain in the sink.
+Ordering, replay cutoff and eviction: see `streaming.scan` (an evicted
+conversation's final emitted totals remain in the sink).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    stateful_scan,
+)
 
 OUT_SCHEMA = (
     "conv_id string, n_turns long, n_same_adjacent long,"
@@ -44,36 +46,13 @@ def stream_dq_sequence(stream: DataFrame, conv_col: str = "conv_id",
     """stream (conv_id, ts, turn_idx, metric) with a watermark on ts →
     update stream of current per-conversation DQ counters."""
 
-    def _scan(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _scan(key, pdf, st):
         (conv,) = key
         lt, li, ltp, n_turns, n_same, n_ties, n_inv = (
-            state.get if state.exists else (None, None, None, 0, 0, 0, 0)
+            st or (None, None, None, 0, 0, 0, 0)
         )
-
-        parts = [p for p in pdfs if len(p)]
-        if not parts:
-            if state.exists:
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(
-                    max(wm + 1,
-                        state.get[0] // 1_000 + evict_seconds * 1_000)
-                )
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        ts_us = (
-            pdf[ts_col].to_numpy().astype("datetime64[us]")
-            .view(np.int64)
-        )
-        idx = pdf[idx_col].to_numpy().astype(np.int64)
-        tps = pdf[type_col].astype(str).to_numpy()
-        order = np.lexsort((idx, ts_us))
-        ts_us, idx, tps = ts_us[order], idx[order], tps[order]
-        if lt is not None:
-            live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-            ts_us, idx, tps = ts_us[live], idx[live], tps[live]
+        ts_us, idx, pos = ordered_live(pdf, ts_col, idx_col, lt, li)
+        tps = pdf[type_col].astype(str).to_numpy()[pos]
         for t, i, tp in zip(ts_us, idx, tps):
             if ltp is not None:
                 n_same += int(tp == ltp)
@@ -81,26 +60,20 @@ def stream_dq_sequence(stream: DataFrame, conv_col: str = "conv_id",
                 n_inv += int(t > lt and i < li)
             n_turns += 1
             lt, li, ltp = int(t), int(i), tp
-        if lt is not None:
-            state.update(
-                (lt, li, ltp, int(n_turns), int(n_same), int(n_ties),
-                 int(n_inv))
-            )
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt // 1_000 + evict_seconds * 1_000)
-            )
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv],
-                    "n_turns": [n_turns],
-                    "n_same_adjacent": [n_same],
-                    "n_time_ties": [n_ties],
-                    "n_idx_inversions": [n_inv],
-                    "is_clean": [n_same + n_ties + n_inv == 0],
-                }
-            )
+        new = (lt, li, ltp, int(n_turns), int(n_same), int(n_ties),
+               int(n_inv))
+        return new, pd.DataFrame(
+            {
+                "conv_id": [conv],
+                "n_turns": [n_turns],
+                "n_same_adjacent": [n_same],
+                "n_time_ties": [n_ties],
+                "n_idx_inversions": [n_inv],
+                "is_clean": [n_same + n_ties + n_inv == 0],
+            }
+        )
 
-    return stream.groupBy(conv_col).applyInPandasWithState(
-        _scan, OUT_SCHEMA, STATE_SCHEMA, "update", "EventTimeTimeout"
+    return stateful_scan(
+        stream, [conv_col], _scan, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000, mode="update",
     )

@@ -12,18 +12,11 @@ The seed trick keeps the pandas C kernel: prepend the carried y as a
 synthetic row, run ``ewm(adjust=False)`` (whose first output is its
 first input), drop the synthetic row.  No Python per-row loop.
 
-Ordering/late-data contract (same as rate_stream /
-stateful_fill): within a micro-batch rows are sorted by
-(ts, turn_idx); rows at or before the state's last (ts, turn_idx) are
-late past emission and dropped — smoothed values are never retracted.
-Run with a watermark at least the expected disorder.
-
-State hygiene: EventTimeTimeout evicts series idle past
-``evict_seconds`` beyond the watermark, bounding state to live
-series.  State is 3 numbers (last_ts_us, last_idx, y) — the same
-O(live series) bound as the LOCF filler, independent of history
-length (this is the telescoped form the batch ewma docstring points
-to for series longer than one partition's memory).
+Ordering, replay cutoff and eviction: see `streaming.scan`.  State is
+3 numbers (last_ts_us, last_idx, y) — the same O(live series) bound as
+the LOCF filler, independent of history length (this is the telescoped
+form the batch ewma docstring points to for series longer than one
+partition's memory).
 """
 
 from __future__ import annotations
@@ -31,6 +24,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    stateful_scan,
+)
 
 OUT_SCHEMA = (
     "conv_id string, metric string, ts timestamp, turn_idx int,"
@@ -45,57 +43,31 @@ def stream_ewma(stream: DataFrame, alpha: float = 0.3,
     on ts → append stream with the running EWMA per series."""
     a = float(alpha)
 
-    def _ewm(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _ewm(key, pdf, st):
         conv_id, metric = key
-        lt, li, y0 = state.get if state.exists else (None, None, None)
+        lt, li, y0 = st or (None, None, None)
+        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        if not len(pos):
+            return None, None
+        vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
+        if y0 is None:
+            y = pd.Series(vals).ewm(alpha=a, adjust=False).mean().to_numpy()
+        else:
+            # seed the C kernel: prepend carried y, drop it
+            seq = pd.Series(np.r_[y0, vals])
+            y = seq.ewm(alpha=a, adjust=False).mean().to_numpy()[1:]
+        return (int(ts_us[-1]), int(idx[-1]), float(y[-1])), pd.DataFrame(
+            {
+                "conv_id": conv_id,
+                "metric": metric,
+                "ts": ts_us.astype("datetime64[us]"),
+                "turn_idx": idx.astype(np.int32),
+                "value": vals,
+                "ewma": np.floor(y * 1e6) / 1e6,
+            }
+        )
 
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            idx = pdf["turn_idx"].to_numpy().astype(np.int64)
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            order = np.lexsort((idx, ts_us))
-            ts_us, idx, vals = ts_us[order], idx[order], vals[order]
-            if lt is not None:
-                live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-                ts_us, idx, vals = ts_us[live], idx[live], vals[live]
-            if len(ts_us):
-                if y0 is None:
-                    seq = pd.Series(vals)
-                    y = seq.ewm(alpha=a, adjust=False).mean().to_numpy()
-                else:
-                    # seed the C kernel: prepend carried y, drop it
-                    seq = pd.Series(np.r_[y0, vals])
-                    y = (
-                        seq.ewm(alpha=a, adjust=False)
-                        .mean()
-                        .to_numpy()[1:]
-                    )
-                state.update((int(ts_us[-1]), int(idx[-1]), float(y[-1])))
-                yield pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "metric": metric,
-                        "ts": ts_us.astype("datetime64[us]"),
-                        "turn_idx": idx.astype(np.int32),
-                        "value": vals,
-                        "ewma": np.floor(y * 1e6) / 1e6,
-                    }
-                )
-
-        if state.exists:
-            lt_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt_now // 1_000 + evict_seconds * 1_000)
-            )
-
-    return stream.groupBy("conv_id", "metric").applyInPandasWithState(
-        _ewm, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, ["conv_id", "metric"], _ewm, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )

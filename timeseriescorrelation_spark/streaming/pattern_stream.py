@@ -9,18 +9,18 @@ function of the processed step-event sequence, and the carried
 micro-batch boundaries — matches are bit-equal to batch on any split
 (asserted in tests/test_pattern_stream.py).
 
-Late-data contract: rows at or before the state's last (ts, tie) are
-late past emission and dropped (matches are never retracted); run
-with a watermark at least the expected disorder.  State hygiene:
-EventTimeTimeout evicts keys idle past ``evict_seconds`` beyond the
-watermark.
+Ordering, replay cutoff and eviction: see `streaming.scan`.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    stateful_scan,
+)
 
 OUT_SCHEMA = (
     "key string, start_ts timestamp, end_ts timestamp,"
@@ -39,71 +39,42 @@ def stream_pattern(stream: DataFrame, steps: list[str],
     step_list = [str(s) for s in steps]
     win_us = int(within_seconds) * 1_000_000
 
-    def _scan(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _scan(key, pdf, st):
         (key_val,) = key
-        lt, li, stage, t0 = (
-            state.get if state.exists else (None, None, 0, 0)
+        lt, li, stage, t0 = st or (None, None, 0, 0)
+        ts_us, idx, pos = ordered_live(pdf, ts_col, tie_col, lt, li)
+        if not len(pos):
+            return None, None
+        sts = pdf[type_col].astype(str).to_numpy()[pos]
+        out_s, out_e = [], []
+        for t, ev in zip(ts_us, sts):
+            if ev not in step_list:
+                continue
+            if stage > 0 and t - t0 > win_us:
+                stage = 0
+            if ev == step_list[stage]:
+                if stage == 0:
+                    t0 = int(t)
+                stage += 1
+                if stage == len(step_list):
+                    out_s.append(t0)
+                    out_e.append(int(t))
+                    stage = 0
+        new = (int(ts_us[-1]), int(idx[-1]), int(stage), int(t0))
+        if not out_s:
+            return new, None
+        return new, pd.DataFrame(
+            {
+                "key": key_val,
+                "start_ts": pd.Series(out_s, dtype="int64")
+                .astype("datetime64[us]"),
+                "end_ts": pd.Series(out_e, dtype="int64")
+                .astype("datetime64[us]"),
+                "duration_s": [(e - s) / 1e6 for s, e in zip(out_s, out_e)],
+            }
         )
 
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf[ts_col].to_numpy().astype("datetime64[us]")
-                .view(np.int64)
-            )
-            idx = pdf[tie_col].to_numpy().astype(np.int64)
-            sts = pdf[type_col].astype(str).to_numpy()
-            order = np.lexsort((idx, ts_us))
-            ts_us, idx, sts = ts_us[order], idx[order], sts[order]
-            if lt is not None:
-                live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-                ts_us, idx, sts = ts_us[live], idx[live], sts[live]
-            if len(ts_us):
-                out_s, out_e = [], []
-                for t, st in zip(ts_us, sts):
-                    if st not in step_list:
-                        continue
-                    if stage > 0 and t - t0 > win_us:
-                        stage = 0
-                    if st == step_list[stage]:
-                        if stage == 0:
-                            t0 = int(t)
-                        stage += 1
-                        if stage == len(step_list):
-                            out_s.append(t0)
-                            out_e.append(int(t))
-                            stage = 0
-                state.update(
-                    (int(ts_us[-1]), int(idx[-1]), int(stage), int(t0))
-                )
-                if out_s:
-                    yield pd.DataFrame(
-                        {
-                            "key": key_val,
-                            "start_ts": pd.Series(
-                                out_s, dtype="int64"
-                            ).astype("datetime64[us]"),
-                            "end_ts": pd.Series(
-                                out_e, dtype="int64"
-                            ).astype("datetime64[us]"),
-                            "duration_s": [
-                                (e - s) / 1e6
-                                for s, e in zip(out_s, out_e)
-                            ],
-                        }
-                    )
-
-        if state.exists:
-            lt_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt_now // 1_000 + evict_seconds * 1_000)
-            )
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _scan, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, [key_col], _scan, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )

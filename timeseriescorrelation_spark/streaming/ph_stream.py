@@ -23,11 +23,7 @@ identical recursion, so streamed scores are BIT-EQUAL across splits
 (asserted in tests/test_ph_stream.py against a pure-Python reference
 and across a chunked replay).
 
-Ordering/late-data contract (same as cusum_stream / ewma_stream):
-rows sort by (ts, turn_idx) within a batch; rows at or before the
-state's last (ts, turn_idx) are dropped — scores never retract.  Run
-with a watermark at least the expected disorder.  EventTimeTimeout
-evicts series idle past ``evict_seconds`` — O(live series) state.
+Ordering, replay cutoff and eviction: see `streaming.scan`.
 """
 
 from __future__ import annotations
@@ -35,6 +31,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    snap_cents,
+    stateful_scan,
+)
 
 CENT_U = 1_000_000  # micro-cents per cent (fixed point = value × 10⁸)
 
@@ -58,74 +60,47 @@ def stream_page_hinkley(stream: DataFrame, delta: float = 0.0,
     delta_u = int(round(delta * 100)) * CENT_U
     lam_u = int(round(lam * 100)) * CENT_U
 
-    def _ph(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _ph(key, pdf, st):
         conv_id, metric = key
-        lt, li, t0, mean0, cum0, lo0 = (
-            state.get if state.exists else (None, None, 0, 0, 0, 0)
+        lt, li, t, mean_u, cum, lo = st or (None, None, 0, 0, 0, 0)
+        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        if not len(pos):
+            return None, None
+        vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
+        # cent snap, then micro-cent fixed point
+        cents = snap_cents(vals)
+        ph = np.empty(len(cents), dtype=np.float64)
+        alert = np.empty(len(cents), dtype=bool)
+        for i, c in enumerate(cents):
+            xu = int(c) * CENT_U
+            t += 1
+            # floor-DIV running mean: deterministic in any engine,
+            # error < 1 μ-cent per step
+            mean_u = ((t - 1) * mean_u + xu) // t
+            cum += xu - mean_u - delta_u
+            lo = min(lo, cum)
+            ph_u = cum - lo
+            ph[i] = ph_u / (100.0 * CENT_U)
+            alert[i] = ph_u > lam_u
+        new = (
+            int(ts_us[-1]), int(idx[-1]),
+            int(t), int(mean_u), int(cum), int(lo),
+        )
+        return new, pd.DataFrame(
+            {
+                "conv_id": conv_id,
+                "metric": metric,
+                "ts": ts_us.astype("datetime64[us]"),
+                "turn_idx": idx.astype(np.int32),
+                "value": vals,
+                "ph": ph,
+                "alert": alert,
+            }
         )
 
-        parts = [x for x in pdfs if len(x)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            idx = pdf["turn_idx"].to_numpy().astype(np.int64)
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            order = np.lexsort((idx, ts_us))
-            ts_us, idx, vals = ts_us[order], idx[order], vals[order]
-            if lt is not None:
-                live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-                ts_us, idx, vals = ts_us[live], idx[live], vals[live]
-            if len(ts_us):
-                # half-away-from-zero cent snap (matches F.round), then
-                # micro-cent fixed point
-                x = vals * 100
-                cents = np.where(
-                    x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-                ).astype(np.int64)
-                t, mean_u, cum, lo = t0, mean0, cum0, lo0
-                ph = np.empty(len(cents), dtype=np.float64)
-                alert = np.empty(len(cents), dtype=bool)
-                for i, c in enumerate(cents):
-                    xu = int(c) * CENT_U
-                    t += 1
-                    # floor-DIV running mean: deterministic in any
-                    # engine, error < 1 μ-cent per step
-                    mean_u = ((t - 1) * mean_u + xu) // t
-                    cum += xu - mean_u - delta_u
-                    lo = min(lo, cum)
-                    ph_u = cum - lo
-                    ph[i] = ph_u / (100.0 * CENT_U)
-                    alert[i] = ph_u > lam_u
-                state.update((
-                    int(ts_us[-1]), int(idx[-1]),
-                    int(t), int(mean_u), int(cum), int(lo),
-                ))
-                yield pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "metric": metric,
-                        "ts": ts_us.astype("datetime64[us]"),
-                        "turn_idx": idx.astype(np.int32),
-                        "value": vals,
-                        "ph": ph,
-                        "alert": alert,
-                    }
-                )
-
-        if state.exists:
-            lt_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt_now // 1_000 + evict_seconds * 1_000)
-            )
-
-    return stream.groupBy("conv_id", "metric").applyInPandasWithState(
-        _ph, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, ["conv_id", "metric"], _ph, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )
 
 

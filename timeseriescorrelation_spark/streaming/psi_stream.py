@@ -12,9 +12,8 @@ split (asserted in tests/test_psi_stream.py).
 Emission contract: an hour emits when a LATER-hour event of the same
 key arrives (hour closure) — identical to the batch operator's
 "hours with data" rows minus each key's final (never-closed) hour.
-Events at or before the open hour's start that arrive after closure
-are late and dropped (watermark contract, same as the other stateful
-twins).
+Events under an already-closed hour are late and dropped; ordering
+and eviction (anchored on the open hour): see `streaming.scan`.
 """
 
 from __future__ import annotations
@@ -24,6 +23,12 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    micros,
+    snap_cents,
+    stateful_scan,
+)
 
 OUT_SCHEMA = "metric string, hour_ts timestamp, n_total long, psi double"
 HOUR_US = 3_600_000_000
@@ -55,13 +60,9 @@ def stream_psi(stream: DataFrame, edges: list[float],
                        dtype=np.int64)
     b_n = len(edges) + 1
 
-    def _drift(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _drift(key, pdf, st):
         (metric,) = key
-        if state.exists:
-            st = state.get
+        if st is not None:
             open_h = st[0]
             closed = np.array(st[1:1 + b_n], dtype=np.int64)
             opened = np.array(st[1 + b_n:1 + 2 * b_n], dtype=np.int64)
@@ -70,58 +71,44 @@ def stream_psi(stream: DataFrame, edges: list[float],
             opened = np.zeros(b_n, dtype=np.int64)
 
         rows = []
-        parts = [x for x in pdfs if len(x)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            order = np.argsort(ts_us, kind="stable")
-            ts_us, vals = ts_us[order], vals[order]
-            hours = (ts_us // HOUR_US) * HOUR_US
-            if open_h is not None:
-                live = hours >= open_h
-                hours, vals = hours[live], vals[live]
-            x = vals * 100
-            cents = np.where(
-                x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-            ).astype(np.int64)
-            bins = np.searchsorted(edges_c, cents, side="left")
-            for h in np.unique(hours):
-                if open_h is not None and h > open_h:
-                    closed += opened
-                    opened[:] = 0
-                    n, psi = _psi_from_counts(closed, b_n)
-                    rows.append((open_h, n, psi))
-                    open_h = int(h)
-                elif open_h is None:
-                    open_h = int(h)
-                bc = np.bincount(bins[hours == h], minlength=b_n)
-                opened += bc.astype(np.int64)
-
+        ts_us = micros(pdf["ts"])
+        vals = pdf["value"].to_numpy(dtype=np.float64)
+        order = np.argsort(ts_us, kind="stable")
+        ts_us, vals = ts_us[order], vals[order]
+        hours = (ts_us // HOUR_US) * HOUR_US
         if open_h is not None:
-            state.update((
-                int(open_h), *[int(c) for c in closed],
-                *[int(c) for c in opened],
-            ))
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, open_h // 1_000 + evict_seconds * 1_000)
-            )
-        if rows:
-            yield pd.DataFrame(
-                {
-                    "metric": metric,
-                    "hour_ts": np.array([r[0] for r in rows],
-                                        dtype=np.int64)
-                    .astype("datetime64[us]"),
-                    "n_total": [r[1] for r in rows],
-                    "psi": [r[2] for r in rows],
-                }
-            )
+            live = hours >= open_h
+            hours, vals = hours[live], vals[live]
+        bins = np.searchsorted(edges_c, snap_cents(vals), side="left")
+        for h in np.unique(hours):
+            if open_h is not None and h > open_h:
+                closed += opened
+                opened[:] = 0
+                n, psi = _psi_from_counts(closed, b_n)
+                rows.append((open_h, n, psi))
+                open_h = int(h)
+            elif open_h is None:
+                open_h = int(h)
+            bc = np.bincount(bins[hours == h], minlength=b_n)
+            opened += bc.astype(np.int64)
 
-    return stream.groupBy("metric").applyInPandasWithState(
-        _drift, OUT_SCHEMA, _state_schema(b_n), "append",
-        "EventTimeTimeout",
+        new = (
+            int(open_h), *[int(c) for c in closed],
+            *[int(c) for c in opened],
+        )
+        if not rows:
+            return new, None
+        return new, pd.DataFrame(
+            {
+                "metric": metric,
+                "hour_ts": np.array([r[0] for r in rows], dtype=np.int64)
+                .astype("datetime64[us]"),
+                "n_total": [r[1] for r in rows],
+                "psi": [r[2] for r in rows],
+            }
+        )
+
+    return stateful_scan(
+        stream, ["metric"], _drift, OUT_SCHEMA, _state_schema(b_n),
+        evict_seconds * 1_000,
     )

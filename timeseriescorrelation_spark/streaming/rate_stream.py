@@ -11,15 +11,7 @@ is how the production pipeline composes: stateful delta extraction →
 tier aggregation.  Batch equivalence (aggregated sink == batch
 counter_rate) is asserted in tests/test_rate_stream.py.
 
-Ordering/late-data contract (same as stateful_fill.stream_fill_locf):
-within a micro-batch rows are sorted by (ts, turn_idx); a row at or
-before the state's last (ts, turn_idx) is LATE past emission and is
-dropped — deltas already emitted are never retracted.  Run with a
-watermark at least the expected disorder.
-
-State hygiene: EventTimeTimeout evicts series idle past
-``evict_seconds`` beyond the watermark, bounding state to live series
-exactly like the LOCF filler.
+Ordering, replay cutoff and eviction: see `streaming.scan`.
 """
 
 from __future__ import annotations
@@ -27,6 +19,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    stateful_scan,
+)
 
 OUT_SCHEMA = "conv_id string, metric string, ts timestamp, inc double"
 STATE_SCHEMA = "last_ts_us long, last_idx long, last_value double"
@@ -37,49 +34,29 @@ def stream_counter_increments(stream: DataFrame,
     """stream (conv_id, metric, ts, turn_idx, value) with a watermark
     on ts → append stream of clamped increments."""
 
-    def _inc(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _inc(key, pdf, st):
         conv_id, metric = key
-        lt, li, lv = state.get if state.exists else (None, None, None)
+        lt, li, lv = st or (None, None, None)
+        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        if not len(pos):
+            return None, None
+        vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
+        prev = np.r_[np.nan if lv is None else lv, vals[:-1]]
+        inc = np.maximum(vals - prev, 0.0)
+        has_prev = ~np.isnan(prev)
+        new = (int(ts_us[-1]), int(idx[-1]), float(vals[-1]))
+        if not has_prev.any():
+            return new, None
+        return new, pd.DataFrame(
+            {
+                "conv_id": conv_id,
+                "metric": metric,
+                "ts": ts_us[has_prev].astype("datetime64[us]"),
+                "inc": inc[has_prev],
+            }
+        )
 
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            idx = pdf["turn_idx"].to_numpy().astype(np.int64)
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            order = np.lexsort((idx, ts_us))
-            ts_us, idx, vals = ts_us[order], idx[order], vals[order]
-            if lt is not None:
-                live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-                ts_us, idx, vals = ts_us[live], idx[live], vals[live]
-            if len(ts_us):
-                prev = np.r_[np.nan if lv is None else lv, vals[:-1]]
-                inc = np.maximum(vals - prev, 0.0)
-                has_prev = ~np.isnan(prev)
-                state.update((int(ts_us[-1]), int(idx[-1]),
-                              float(vals[-1])))
-                if has_prev.any():
-                    yield pd.DataFrame(
-                        {
-                            "conv_id": conv_id,
-                            "metric": metric,
-                            "ts": ts_us[has_prev].astype("datetime64[us]"),
-                            "inc": inc[has_prev],
-                        }
-                    )
-
-        if state.exists:
-            lt_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt_now // 1_000 + evict_seconds * 1_000)
-            )
-
-    return stream.groupBy("conv_id", "metric").applyInPandasWithState(
-        _inc, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, ["conv_id", "metric"], _inc, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )

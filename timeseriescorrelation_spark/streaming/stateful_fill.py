@@ -17,12 +17,10 @@ Semantics (mirrors operators.gapfill.fill_locf):
   reached; the `test_stateful_fill` equivalence test demonstrates the
   in-order case is bit-identical to batch `fill_locf`.
 
-State hygiene: the watermark drives EventTimeTimeout eviction — a
-series idle for `evict_steps` grid steps past the watermark has its
-state removed, so total state is O(live series), not O(ever-seen
-series).  A re-appearing evicted series simply restarts its grid (a
-new segment — the same dormancy semantics as fill_locf's
-max_gap_steps, with evict_steps as the bound).
+Eviction (anchored on the last emitted bucket, `evict_steps` grid
+steps past the watermark): see `streaming.scan`.  A re-appearing
+evicted series restarts its grid — the same dormancy semantics as
+fill_locf's max_gap_steps, with evict_steps as the bound.
 
 Scale notes: state is 16 bytes + key per series; each micro-batch
 shuffles only the batch's observations on (conv_id, metric); grid rows
@@ -42,6 +40,10 @@ from timeseriescorrelation_spark.operators.gapfill import (
     STEP_TRUNC,
 )
 from timeseriescorrelation_spark.operators.rollup import _OFF_BITS
+from timeseriescorrelation_spark.streaming.scan import (
+    micros,
+    stateful_scan,
+)
 
 OUT_SCHEMA = (
     "conv_id string, metric string, grid_ts timestamp, "
@@ -61,66 +63,50 @@ def stream_fill_locf(stream: DataFrame, step: str = "1h",
     idx_bits = 63 - _OFF_BITS[STEP_TRUNC[step]]
     cap = (1 << idx_bits) - 1
 
-    def _fill(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _fill(key, pdf, st):
         conv_id, metric = key
-        lb, lv = state.get if state.exists else (None, None)
+        lb, lv = st or (None, None)
+        ts_us = micros(pdf["ts"])
+        bucket = ts_us // step_us * step_us
+        off = ts_us - bucket
+        keyv = off * (1 << idx_bits) + np.minimum(
+            pdf["turn_idx"].to_numpy().astype(np.int64), cap
+        )
+        vals = pdf["value"].to_numpy(dtype=np.float64)
+        order = np.lexsort((keyv, bucket))
+        b_s, v_s = bucket[order], vals[order]
+        last_of_bucket = np.r_[b_s[1:] != b_s[:-1], True]
+        ub, uv = b_s[last_of_bucket], v_s[last_of_bucket]
+        if lb is not None:
+            live = ub > lb  # late past emission: dropped (see doc)
+            ub, uv = ub[live], uv[live]
+        if not len(ub):
+            return None, None
 
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            bucket = ts_us // step_us * step_us
-            off = ts_us - bucket
-            keyv = off * (1 << idx_bits) + np.minimum(
-                pdf["turn_idx"].to_numpy().astype(np.int64), cap
-            )
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            order = np.lexsort((keyv, bucket))
-            b_s, v_s = bucket[order], vals[order]
-            last_of_bucket = np.r_[b_s[1:] != b_s[:-1], True]
-            ub, uv = b_s[last_of_bucket], v_s[last_of_bucket]
-            if lb is not None:
-                live = ub > lb  # late past emission: dropped (see doc)
-                ub, uv = ub[live], uv[live]
+        g_ts, g_v, g_f = [], [], []
+        prev_b, prev_v = lb, lv
+        for b, v in zip(ub, uv):
+            if prev_b is not None:
+                gap = np.arange(prev_b + step_us, b, step_us)
+                if len(gap):
+                    g_ts.append(gap)
+                    g_v.append(np.full(len(gap), prev_v))
+                    g_f.append(np.ones(len(gap), dtype=bool))
+            g_ts.append(np.array([b]))
+            g_v.append(np.array([v]))
+            g_f.append(np.array([False]))
+            prev_b, prev_v = b, v
+        return (int(prev_b), float(prev_v)), pd.DataFrame(
+            {
+                "conv_id": conv_id,
+                "metric": metric,
+                "grid_ts": np.concatenate(g_ts).astype("datetime64[us]"),
+                "value": np.concatenate(g_v),
+                "filled": np.concatenate(g_f),
+            }
+        )
 
-            if len(ub):
-                g_ts, g_v, g_f = [], [], []
-                prev_b, prev_v = lb, lv
-                for b, v in zip(ub, uv):
-                    if prev_b is not None:
-                        gap = np.arange(prev_b + step_us, b, step_us)
-                        if len(gap):
-                            g_ts.append(gap)
-                            g_v.append(np.full(len(gap), prev_v))
-                            g_f.append(np.ones(len(gap), dtype=bool))
-                    g_ts.append(np.array([b]))
-                    g_v.append(np.array([v]))
-                    g_f.append(np.array([False]))
-                    prev_b, prev_v = b, v
-                state.update((int(prev_b), float(prev_v)))
-                out_ts = np.concatenate(g_ts)
-                yield pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "metric": metric,
-                        "grid_ts": out_ts.astype("datetime64[us]"),
-                        "value": np.concatenate(g_v),
-                        "filled": np.concatenate(g_f),
-                    }
-                )
-
-        if state.exists:
-            lb_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lb_now // 1_000 + evict_steps * step_ms)
-            )
-
-    return stream.groupBy("conv_id", "metric").applyInPandasWithState(
-        _fill, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, ["conv_id", "metric"], _fill, OUT_SCHEMA, STATE_SCHEMA,
+        evict_steps * step_ms,
     )

@@ -15,20 +15,21 @@ group's current counters (audit-log style; n_seen stamps the
 snapshot, so "latest" = max n_seen per key).  Appended rows are
 never retracted, which is what keeps the file sink usable; a true
 update sink (e.g. foreachBatch upsert) can key on (key, item).
-Rows at or before the state's last (ts, tie) are late past emission
-and dropped — same policy as ewma/zscore streams.
 
-State hygiene: EventTimeTimeout evicts groups idle past
-``evict_seconds`` beyond the watermark; state is O(k) per live group
-regardless of history length or distinct-item count (the whole
-point).
+Ordering, replay cutoff and eviction: see `streaming.scan`.  State is
+O(k) per live group regardless of history length or distinct-item
+count (the whole point).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    stateful_scan,
+)
 
 OUT_SCHEMA = (
     "key string, item string, mg_count long, n_seen long"
@@ -49,70 +50,39 @@ def stream_heavy_hitters(stream: DataFrame, k: int = 8,
     stream of per-batch MG counter snapshots per key."""
     kk = int(k)
 
-    def _mg(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _mg(key, pdf, st):
         (key_val,) = key
-        if state.exists:
-            lt, li, n, items, counts = state.get
+        if st is not None:
+            lt, li, n, items, counts = st
             counters = dict(zip(items, (int(c) for c in counts)))
         else:
             lt, li, n, counters = None, None, 0, {}
+        ts_us, idx, pos = ordered_live(pdf, ts_col, tie_col, lt, li)
+        if not len(pos):
+            return None, None
+        for it in pdf[item_col].astype(str).to_numpy()[pos]:
+            n += 1
+            if it in counters:
+                counters[it] += 1
+            elif len(counters) < kk:
+                counters[it] = 1
+            else:
+                dead = [key2 for key2, c in counters.items() if c == 1]
+                for key2 in counters:
+                    counters[key2] -= 1
+                for key2 in dead:
+                    del counters[key2]
+        items = list(counters.keys())
+        counts = [int(c) for c in counters.values()]
+        new = (int(ts_us[-1]), int(idx[-1]), int(n), items, counts)
+        if not counters:  # a wipe round can empty the summary
+            return new, None
+        return new, pd.DataFrame(
+            {"key": key_val, "item": items, "mg_count": counts,
+             "n_seen": int(n)}
+        )
 
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf[ts_col].to_numpy().astype("datetime64[us]")
-                .view(np.int64)
-            )
-            idx = pdf[tie_col].to_numpy().astype(np.int64)
-            its = pdf[item_col].astype(str).to_numpy()
-            order = np.lexsort((idx, ts_us))
-            ts_us, idx, its = ts_us[order], idx[order], its[order]
-            if lt is not None:
-                live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-                ts_us, idx, its = ts_us[live], idx[live], its[live]
-            if len(ts_us):
-                for it in its:
-                    n += 1
-                    if it in counters:
-                        counters[it] += 1
-                    elif len(counters) < kk:
-                        counters[it] = 1
-                    else:
-                        dead = [
-                            key2 for key2, c in counters.items() if c == 1
-                        ]
-                        for key2 in counters:
-                            counters[key2] -= 1
-                        for key2 in dead:
-                            del counters[key2]
-                state.update((
-                    int(ts_us[-1]), int(idx[-1]), int(n),
-                    list(counters.keys()),
-                    [int(c) for c in counters.values()],
-                ))
-                if counters:  # a wipe round can empty the summary
-                    yield pd.DataFrame(
-                        {
-                            "key": key_val,
-                            "item": list(counters.keys()),
-                            "mg_count": [
-                                int(c) for c in counters.values()
-                            ],
-                            "n_seen": int(n),
-                        }
-                    )
-
-        if state.exists:
-            lt_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt_now // 1_000 + evict_seconds * 1_000)
-            )
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _mg, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, [key_col], _mg, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )

@@ -11,16 +11,9 @@ tests/test_zscore_stream.py), not approximately equal.  This is the
 integer-state version of the ewma_stream argument: floats would
 accumulate in a different order across batch splits; ints cannot.
 
-Ordering/late-data contract (same as ewma_stream / stateful_fill):
-within a micro-batch rows sort by (ts, turn_idx); rows at or before
-the state's last (ts, turn_idx) are late past emission and dropped —
-scores are never retracted.  Run with a watermark at least the
-expected disorder.
-
-State hygiene: EventTimeTimeout evicts series idle past
-``evict_seconds`` beyond the watermark — O(live series) state,
-independent of history length (the whole point: the batch form's
-prior-rows window re-reads history; this never does).
+Ordering, replay cutoff and eviction: see `streaming.scan`.  State is
+O(live series), independent of history length (the whole point: the
+batch form's prior-rows window re-reads history; this never does).
 """
 
 from __future__ import annotations
@@ -28,6 +21,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from timeseriescorrelation_spark.streaming.scan import (
+    ordered_live,
+    snap_cents,
+    stateful_scan,
+)
 
 OUT_SCHEMA = (
     "conv_id string, metric string, ts timestamp, turn_idx int,"
@@ -42,78 +41,48 @@ def stream_zscore(stream: DataFrame, min_n: int = 3,
     on ts → append stream with each event's expanding z-score."""
     mn = int(min_n)
 
-    def _z(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def _z(key, pdf, st):
         conv_id, metric = key
-        lt, li, n0, s0, ss0 = (
-            state.get if state.exists else (None, None, 0, 0, 0)
+        lt, li, n0, s0, ss0 = st or (None, None, 0, 0, 0)
+        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        if not len(pos):
+            return None, None
+        vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
+        v = snap_cents(vals)
+        k = len(v)
+        # expanding priors: state + everything earlier in this (sorted)
+        # batch — exact int64 throughout
+        cn = n0 + np.arange(k, dtype=np.int64)
+        cs = s0 + np.cumsum(v) - v
+        css = ss0 + np.cumsum(v * v) - v * v
+        var_num = cn * css - cs * cs
+        ok = (cn >= mn) & (var_num > 0)
+        z = np.full(k, np.nan)
+        num = (v * cn - cs).astype(np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            z[ok] = num[ok] / np.sqrt(var_num[ok].astype(np.float64))
+        z = np.floor(z * 1e6) / 1e6
+        # batch emits NULL (not NaN) where z is undefined — nullable
+        # Float64 makes Arrow carry real nulls
+        z_col = pd.array(z, dtype="Float64")
+        z_col[~ok] = pd.NA
+        new = (
+            int(ts_us[-1]), int(idx[-1]), int(cn[-1] + 1),
+            int(cs[-1] + v[-1]), int(css[-1] + v[-1] * v[-1]),
+        )
+        return new, pd.DataFrame(
+            {
+                "conv_id": conv_id,
+                "metric": metric,
+                "ts": ts_us.astype("datetime64[us]"),
+                "turn_idx": idx.astype(np.int32),
+                "value": vals,
+                "n_prior": cn,
+                "z": z_col,
+            }
         )
 
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True)
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").view(np.int64)
-            )
-            idx = pdf["turn_idx"].to_numpy().astype(np.int64)
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            order = np.lexsort((idx, ts_us))
-            ts_us, idx, vals = ts_us[order], idx[order], vals[order]
-            if lt is not None:
-                live = (ts_us > lt) | ((ts_us == lt) & (idx > li))
-                ts_us, idx, vals = ts_us[live], idx[live], vals[live]
-            if len(ts_us):
-                # half-away-from-zero, matching Spark F.round / DuckDB
-                # round (np.rint is half-even and diverges at .5 cents)
-                x = vals * 100
-                v = np.where(
-                    x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-                ).astype(np.int64)
-                k = len(v)
-                # expanding priors: state + everything earlier in
-                # this (sorted) batch — exact int64 throughout
-                cn = n0 + np.arange(k, dtype=np.int64)
-                cs = s0 + np.cumsum(v) - v
-                css = ss0 + np.cumsum(v * v) - v * v
-                var_num = cn * css - cs * cs
-                ok = (cn >= mn) & (var_num > 0)
-                z = np.full(k, np.nan)
-                num = (v * cn - cs).astype(np.float64)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    z[ok] = num[ok] / np.sqrt(
-                        var_num[ok].astype(np.float64)
-                    )
-                z = np.floor(z * 1e6) / 1e6
-                # batch emits NULL (not NaN) where z is undefined —
-                # nullable Float64 makes Arrow carry real nulls
-                z_col = pd.array(z, dtype="Float64")
-                z_col[~ok] = pd.NA
-                state.update((
-                    int(ts_us[-1]), int(idx[-1]),
-                    int(cn[-1] + 1), int(cs[-1] + v[-1]),
-                    int(css[-1] + v[-1] * v[-1]),
-                ))
-                yield pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "metric": metric,
-                        "ts": ts_us.astype("datetime64[us]"),
-                        "turn_idx": idx.astype(np.int32),
-                        "value": vals,
-                        "n_prior": cn,
-                        "z": z_col,
-                    }
-                )
-
-        if state.exists:
-            lt_now = state.get[0]
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm + 1, lt_now // 1_000 + evict_seconds * 1_000)
-            )
-
-    return stream.groupBy("conv_id", "metric").applyInPandasWithState(
-        _z, OUT_SCHEMA, STATE_SCHEMA, "append", "EventTimeTimeout"
+    return stateful_scan(
+        stream, ["conv_id", "metric"], _z, OUT_SCHEMA, STATE_SCHEMA,
+        evict_seconds * 1_000,
     )
