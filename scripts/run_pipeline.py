@@ -12,8 +12,8 @@ Cluster (see scripts/submit_example.sh for the packaging step):
 ``--input`` is either a directory containing transcripts/events parquet
 (the sandbox layout) or a catalog-qualified Iceberg table name — the
 TableIO seam resolves it.  Re-running with the same --root/--run-id
-resumes idempotently from the checkpoint manifest (completed
-part_keys are anti-joined away).
+resumes idempotently from the checkpoint manifest (the driver reads
+the completed part_keys and filters them out of the stage input).
 """
 
 from __future__ import annotations

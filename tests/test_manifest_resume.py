@@ -5,6 +5,22 @@ from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.operators.manifest import ManifestStore
 from timeseriescorrelation_spark.plans.pipeline import PipelineConfig, run
+from timeseriescorrelation_spark.schemas import manifest_schema
+
+
+def delete_stage_parts(store: ManifestStore, run_id: str, stage: str,
+                       keep_frac: float) -> None:
+    """Simulate a crash mid-stage: keep only a fraction of (run_id,
+    stage)'s manifest rows.  The kept rows are collected before the
+    overwrite deletes the files they were read from."""
+    k = max(2, round(1.0 / max(keep_frac, 1e-9)))
+    kept = store.read().where(
+        ~((F.col("run_id") == run_id) & (F.col("stage") == stage))
+        | (F.pmod(F.col("part_key").cast("long"), F.lit(k)) == 0)
+    ).collect()
+    store.spark.createDataFrame(kept, manifest_schema()).write.mode(
+        "overwrite"
+    ).parquet(store.path)
 
 
 def _tier_pdf(df):
@@ -27,7 +43,7 @@ def test_pipeline_and_resume(spark, tiny_transcripts, tmp_path):
     assert (m1["output_rows"] > 0).any()
 
     # --- simulate a crash mid-tier: drop half of agg_1h's manifest rows
-    store.delete_stage_parts("r1", "agg_1h", keep_frac=0.5)
+    delete_stage_parts(store, "r1", "agg_1h", keep_frac=0.5)
     n_after_delete = len(store.read().toPandas())
     assert n_after_delete < len(m1)
 

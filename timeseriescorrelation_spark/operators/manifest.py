@@ -13,17 +13,26 @@ Design:
   directory with identical bytes → crash between data-write and
   manifest-append is safe (the re-run converges, never duplicates).
 - ``content_hash`` is an order-insensitive bit_xor of xxhash64 over all
-  output columns — cheap, associative, shuffle-order independent.
-- Resume = left_anti join of the input's part keys against the
-  manifest's completed parts for (run_id, stage) (J6).
+  output columns — cheap, associative, shuffle-order independent.  A
+  part whose input rows all map to no output row is still recorded, as
+  ``output_rows = 0`` with ``content_hash = "0"``, so resume skips it.
+- Resume: the driver collects the manifest's completed part keys for
+  (run_id, stage) as a list of ints (one small job) and filters the
+  input with ``part_key NOT IN (...)`` (J6) — no join, no broadcast.
+- Every read names its schema (the manifest's, or the stage plan's),
+  so no read runs a schema-inference job.  The manifest rows of one
+  stage call are built on the driver and appended as one file.
 """
 
 from __future__ import annotations
 
 import os
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from timeseriescorrelation_spark.schemas import manifest_schema
 
 MANIFEST_TABLE = "manifest"
 
@@ -67,40 +76,34 @@ class ManifestStore:
         return bool(fs.exists(hpath))
 
     def read(self) -> DataFrame:
-        from timeseriescorrelation_spark.schemas import manifest_schema
-
         if not self._exists():
             return self.spark.createDataFrame([], manifest_schema())
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(manifest_schema()).parquet(self.path)
 
-    def done_parts(self, run_id: str, stage: str) -> DataFrame:
-        return (
+    def done_parts(self, run_id: str, stage: str) -> list[int]:
+        """Completed part keys of (run_id, stage), sorted: one small job
+        (the manifest holds one row per committed part), none before
+        the first commit."""
+        if not self._exists():
+            return []
+        rows = (
             self.read()
             .where((F.col("run_id") == run_id) & (F.col("stage") == stage))
-            .select(F.col("part_key").cast("int").alias("part_key"))
-            .distinct()
+            .select("part_key")
+            .collect()
         )
+        return sorted({int(r["part_key"]) for r in rows})
 
-    def append(self, rows: DataFrame) -> None:
-        rows.write.mode("append").parquet(self.path)
-
-    def delete_stage_parts(self, run_id: str, stage: str, keep_frac: float) -> None:
-        """Test helper: keep only a fraction of a stage's manifest rows
-        (simulates a mid-tier crash)."""
-        df = self.read().cache()
-        df.count()
-        k = max(2, round(1.0 / max(keep_frac, 1e-9)))
-        kept = df.where(
-            ~((F.col("run_id") == run_id) & (F.col("stage") == stage))
-            | (F.pmod(F.col("part_key").cast("long"), F.lit(k)) == 0)
+    def append(self, rows: list[tuple]) -> None:
+        """Append manifest rows (``manifest_schema`` order) as one file:
+        a local DataFrame has one partition per core, and every later
+        stage call re-reads each tiny file it would leave."""
+        (
+            self.spark.createDataFrame(rows, manifest_schema())
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(self.path)
         )
-        kept_local = kept.collect()
-        df.unpersist()
-        from timeseriescorrelation_spark.schemas import manifest_schema
-
-        self.spark.createDataFrame(kept_local, manifest_schema()).write.mode(
-            "overwrite"
-        ).parquet(self.path)
 
 
 def run_stage(
@@ -112,7 +115,6 @@ def run_stage(
     fn,
     key_col: str = "conv_id",
     n_parts: int = 64,
-    extra_metrics: dict[str, str] | None = None,
 ) -> DataFrame:
     """Run ``fn(todo_df) -> DataFrame`` over the not-yet-done logical
     partitions, write output partitioned by part_key (dynamic
@@ -122,27 +124,19 @@ def run_stage(
     out_path = os.path.join(root, stage)
 
     inp = with_part_key(input_df, key_col, n_parts)
-    done = store.done_parts(run_id, stage)
-    todo = inp.join(done, "part_key", "left_anti")
+    todo = inp.where(~F.col("part_key").isin(store.done_parts(run_id, stage)))
+    out = with_part_key(fn(todo.drop("part_key")), key_col, n_parts)
+    # Built lazily: its schema comes from analysis alone and pins every
+    # read of the stage directory below (no schema-inference job).
+    schema = out.schema
 
-    # One job computes the per-part input counts (<= n_parts rows) AND
-    # answers "anything left to do?" — collected to the driver so the
-    # manifest append later joins a tiny local DataFrame instead of
-    # recomputing todo's whole lineage a second time.  (Previously a
-    # separate todo.limit(1).count() job existed just for the emptiness
-    # test — one extra scheduler round-trip per stage per run.)
-    in_count_rows = (
-        todo.groupBy("part_key")
-        .agg(F.count("*").alias("input_rows"))
-        .collect()
-    )
-
-    if in_count_rows:
-        in_counts = spark.createDataFrame(
-            in_count_rows, "part_key int, input_rows long"
-        )
-        out = fn(todo.drop("part_key"))
-        out = with_part_key(out, key_col, n_parts)
+    # One job gives the per-part input counts (<= n_parts rows) and
+    # answers "anything left to do?": a fully resumed stage stops here.
+    input_rows = {
+        r["part_key"]: r["count"]
+        for r in todo.groupBy("part_key").count().collect()
+    }
+    if input_rows:
         (
             out.repartition("part_key")
             .write.mode("overwrite")
@@ -150,26 +144,20 @@ def run_stage(
             .partitionBy("part_key")
             .parquet(out_path)
         )
-
-        written = spark.read.parquet(out_path).join(
-            in_counts.select("part_key"), "part_key", "left_semi"
+        written = spark.read.schema(schema).parquet(out_path).where(
+            F.col("part_key").isin(list(input_rows))
         )
-        mrows = (
-            content_hash(written, ["part_key"])
-            .join(in_counts, "part_key", "left")
-            .select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("part_key").cast("string").alias("part_key"),
-                F.coalesce("input_rows", F.lit(0)).alias("input_rows"),
-                "output_rows",
-                "content_hash",
-                F.create_map(
-                    F.lit("points_out"), F.col("output_rows")
-                ).alias("metrics"),
-                F.current_timestamp().alias("completed_at"),
-            )
-        )
-        store.append(mrows)
+        hashes = {
+            r["part_key"]: (r["output_rows"], r["content_hash"])
+            for r in content_hash(written, ["part_key"]).collect()
+        }
+        now = datetime.now()
+        rows = []
+        for part, n_in in sorted(input_rows.items()):
+            # a part whose rows all map to no output is done too
+            n_out, h = hashes.get(part, (0, "0"))
+            rows.append((run_id, stage, str(part), n_in, n_out, h,
+                         {"points_out": n_out}, now))
+        store.append(rows)
 
-    return spark.read.parquet(out_path).drop("part_key")
+    return spark.read.schema(schema).parquet(out_path).drop("part_key")
