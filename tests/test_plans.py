@@ -24,6 +24,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _series(spark):
+    """events.parquet in the series shape the tier folds read."""
+    from pyspark.sql import functions as F
+
+    return spark.read.parquet(f"{SF}/events.parquet").select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        F.col("event_type").alias("metric"),
+        "ts",
+        F.col("event_id").cast("int").alias("turn_idx"),
+        "value",
+    )
+
+
 def test_filter_pushdown_reaches_scan(spark):
     plan = _plan(em.queries()["filter_range"](spark, SF))
     m = re.search(r"PushedFilters: \[([^\]]*)", plan)
@@ -64,14 +77,18 @@ def test_lsh_band_join_is_equi(spark):
 
 
 def test_rollup_single_shuffle_and_codegen(spark):
-    plan = _plan(em.queries()["rollup_1m"](spark, SF))
-    # partial agg -> ONE hash-partition exchange -> final agg
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "HashAggregate" in plan
-    # struct min_by/max_by keys would silently degrade to SortAggregate
-    # (struct buffers aren't hash-aggregable) — the packed-long order
-    # key must keep the tier build hash-based
-    assert "SortAggregate" not in plan, plan
+    from timeseriescorrelation_spark.operators.rollup import rollup_interval
+
+    for df in (em.queries()["rollup_1m"](spark, SF),
+               rollup_interval(_series(spark))):
+        plan = _plan(df)
+        # partial agg -> ONE hash-partition exchange -> final agg
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "HashAggregate" in plan
+        # struct min_by/max_by keys would silently degrade to
+        # SortAggregate (struct buffers aren't hash-aggregable) — the
+        # packed-long order key must keep the tier build hash-based
+        assert "SortAggregate" not in plan, plan
 
 
 def test_tier_cascade_reuses_lower_tier_grouping(spark):
@@ -279,10 +296,20 @@ def test_hdr_sketch_partial_agg_and_hash(spark):
 def test_tier_merge_single_shuffle_per_side(spark):
     """Upsert merge: two upsertable partials + the merge re-agg; the
     merge groupBy re-shuffles the union once — and everything stays
-    HashAggregate (packed long fkey/lkey, no struct buffers)."""
-    plan = _plan(em.queries()["tier_upsert_1h"](spark, SF))
-    assert "SortAggregate" not in plan, plan
-    assert "Join" not in plan, plan
+    HashAggregate (packed long fkey/lkey, no struct buffers).  The
+    streaming cascade's 1h and 1d partials carry the same keys."""
+    from timeseriescorrelation_spark.operators.rollup import rollup_raw
+    from timeseriescorrelation_spark.streaming.cascade_stream import (
+        partials_1d_from_1h,
+        partials_1h_from_1m,
+    )
+
+    p1h = partials_1h_from_1m(rollup_raw(_series(spark), "1m"))
+    for df in (em.queries()["tier_upsert_1h"](spark, SF), p1h,
+               partials_1d_from_1h(p1h)):
+        plan = _plan(df)
+        assert "SortAggregate" not in plan, plan
+        assert "Join" not in plan, plan
 
 
 def test_bloom_probe_broadcasts_filter(spark):

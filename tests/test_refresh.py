@@ -81,3 +81,20 @@ def test_refresh_empty_delta_noop(tiny_series, spark, tmp_path):
         spark, path, tiny_series.where(F.lit(False)), "1h"
     ) == []
     assert _files(path) == before
+
+
+def test_refresh_first_write_returns_sorted_days(spark, tmp_path):
+    """A missing path is the initial materialization; it reports the
+    day partitions it wrote in sorted order, like the merge path."""
+    import datetime as dt
+
+    from timeseriescorrelation_spark.schemas import series_schema
+
+    t0 = dt.datetime(2024, 1, 1, 12)
+    rows = [("c1", "m", t0 + dt.timedelta(days=d), d, float(d))
+            for d in range(40)]
+    delta = spark.createDataFrame(rows, series_schema())
+    touched = refresh_tier(spark, str(tmp_path / "tier1h"), delta, "1h")
+    want = [(t0 + dt.timedelta(days=d)).strftime("%Y-%m-%d")
+            for d in range(40)]
+    assert touched == want

@@ -38,8 +38,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.operators.rollup import (
+    TIER_TRUNC,
+    packed_order_key,
+)
+
 STEP_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-STEP_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
 
 _KEY = ["conv_id", "metric"]
 
@@ -48,18 +52,16 @@ def collapse_last_wins(series: DataFrame, step: str = "1m") -> DataFrame:
     """Collapse raw points to one value per grid bucket (last by
     (ts, turn_idx), packed into one int64 so the agg stays
     HashAggregate — see rollup.packed_order_key)."""
-    from timeseriescorrelation_spark.operators.rollup import packed_order_key
-
     return series.groupBy(
-        *_KEY, F.date_trunc(STEP_TRUNC[step], "ts").alias("grid_ts")
+        *_KEY, F.date_trunc(TIER_TRUNC[step], "ts").alias("grid_ts")
     ).agg(
-        F.max_by("value", packed_order_key(STEP_TRUNC[step])).alias("value")
+        F.max_by("value", packed_order_key(TIER_TRUNC[step])).alias("value")
     )
 
 
 def make_grid(series: DataFrame, step: str = "1m") -> DataFrame:
     """Dense per-key timeline from min(ts) to max(ts), one row per step."""
-    trunc = STEP_TRUNC[step]
+    trunc = TIER_TRUNC[step]
     secs = STEP_SECONDS[step]
     spans = series.groupBy(*_KEY).agg(
         F.date_trunc(trunc, F.min("ts")).alias("lo"),

@@ -10,9 +10,10 @@ fkey/lkey packed order keys), and a refresh is
                     →  tier_merge  →  dynamic partition overwrite
 
 so a late day of transcripts costs O(delta + touched partitions), not
-O(history).  With `partitionOverwriteMode=dynamic` Spark replaces
-exactly the partitions present in the written DataFrame — untouched
-day directories are not rewritten (asserted by file-identity in
+O(history).  With `partitionOverwriteMode=dynamic`, set on each write
+rather than on the shared session conf, Spark replaces exactly the
+partitions present in the written DataFrame — untouched day
+directories are not rewritten (asserted by file-identity in
 tests/test_refresh.py).  On Iceberg the same shape is
 `MERGE INTO`/`overwritePartitions` with the manifest pruning the read;
 day-partitioned parquet is the jar-free equivalent this sandbox can
@@ -104,31 +105,18 @@ def refresh_partials(spark: SparkSession, path: str,
     if batch_id is not None and _ledger_has(spark, path, batch_id):
         return []
     up = _with_part(partials)
-    if not _path_exists(spark, path):
-        up.write.partitionBy(PART_COL).mode("overwrite").parquet(path)
-        if batch_id is not None:
-            _ledger_mark(spark, path, batch_id)
-        return [r[0] for r in up.select(PART_COL).distinct().collect()]
-    days = [r[0] for r in up.select(PART_COL).distinct().collect()]
-    if not days:
-        return []
-    existing = spark.read.parquet(path).where(F.col(PART_COL).isin(days))
-    merged = tier_merge(existing.drop(PART_COL), up.drop(PART_COL))
-    old_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        _with_part(merged).write.partitionBy(PART_COL).mode(
-            "overwrite"
-        ).parquet(path)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", old_mode
-        )
+    days = sorted(r[0] for r in up.select(PART_COL).distinct().collect())
+    if _path_exists(spark, path):
+        if not days:
+            return []
+        existing = spark.read.parquet(path).where(F.col(PART_COL).isin(days))
+        up = _with_part(tier_merge(existing.drop(PART_COL), up.drop(PART_COL)))
+    up.write.partitionBy(PART_COL).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
     if batch_id is not None:
         _ledger_mark(spark, path, batch_id)
-    return sorted(days)
+    return days
 
 
 def refresh_tier(spark: SparkSession, path: str, delta: DataFrame,

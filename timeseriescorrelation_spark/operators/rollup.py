@@ -1,19 +1,37 @@
-"""Continuous-aggregate tier cascade raw→1m→1h→1d (SURVEY A2/A3).
+"""Continuous-aggregate tier cascade raw→1m→1h→1d (SURVEY A2/A3) —
+the one owner of the tier algebra.
 
-Semantics (BASELINE.json:6): the 1m tier aggregates raw points; every
-higher tier re-aggregates **from the tier below it**, never from raw:
-``cnt=sum(cnt), sum=sum(sum), min=min(min), max=max(max),
-first=min_by(first, bucket_ts), last=max_by(last, bucket_ts)``.
+**The fold.** Every tier operation — raw points → a tier, a tier → the
+next tier up, merging same-grain partials, the streaming 1m tier and
+the streaming 1h/1d cascade — is one sum-product fold over the same
+aggregate vector, written once in `tier_fold`:
 
-Determinism under parallelism: ``first``/``last`` at the raw level are
-``min_by``/``max_by`` on the composite order (ts, turn_idx) — never the
-order-dependent ``first()`` aggregate (SURVEY §7 "hard parts").  The
-composite is packed into ONE int64 (bucket-relative microsecond offset
-shifted left, plus turn_idx): a struct(ts, turn_idx) key would force
+    from raw `value`:    cnt=count  sum=sum  min=min  max=max
+    from tier rows:      cnt=sum    sum=sum  min=min  max=max
+    both:                first=min_by(·, fkey)  last=max_by(·, lkey)
+
+plus, in the upsertable form, `fkey=min(fkey)` / `lkey=max(lkey)` so
+partials merge exactly later.  Every higher tier re-aggregates **from
+the tier below it**, never from raw (BASELINE.json:6).
+
+**The packed order key.** first/last are `min_by`/`max_by` on the
+composite order (ts, turn_idx) — never the order-dependent `first()`
+aggregate (SURVEY §7 "hard parts").  The composite is packed into ONE
+int64 by `pack_key`:
+
+    key = off << idx_bits(width_us) | min(idx, 2^idx_bits − 1)
+    idx_bits(width_us) = 63 − bit_length(width_us − 1)
+
+where `off` is the µs offset of the point inside its bucket of width
+`width_us` (minute 37 idx bits, hour 31, day 26, 5 min 34).  Keys are
+only compared within one bucket, so the offset preserves (ts, idx)
+order exactly; comparable across partials of the same bucket, and a
+key of a finer grain re-keys exactly to a coarser one
+(`partials_1d_from_1h`).  A struct(ts, turn_idx) key would force
 SortAggregate (struct agg buffers are not hash-aggregable), silently
 turning every tier build into a per-partition sort; the packed long
 keeps the whole cascade in HashAggregate + whole-stage codegen with
-map-side partial aggregation.
+map-side partial aggregation (tests/test_plans.py).
 
 Scale note: groupBy keys are (conv_id, metric, bucket_ts); partial
 aggregation collapses each task's rows before the shuffle, so shuffle
@@ -23,113 +41,100 @@ volume ≈ |buckets|, not |points|.  Tier N+1 reuses tier N's output
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.timeutil import epoch_us
+
 TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
-TIER_UP = {"1m": "1h", "1h": "1d"}
-
-# bits needed for the in-bucket microsecond offset per bucket width;
-# turn_idx gets the remaining 63 (minute: 37 idx bits, day: 26).
-_OFF_BITS = {"minute": 26, "hour": 32, "day": 37}
+TRUNC_US = {"minute": 60_000_000, "hour": 3_600_000_000,
+            "day": 86_400_000_000}
+TIER_COLS = ("cnt", "sum", "min", "max", "first", "last")
 
 
-def packed_order_key(trunc: str):
-    """(ts, turn_idx) composite order as ONE int64 — hash-aggregable.
+def idx_bits(width_us: int) -> int:
+    """Low bits left for the tie-break index once the in-bucket µs
+    offset of a `width_us`-wide bucket is packed into a signed int64."""
+    return 63 - (width_us - 1).bit_length()
 
-    key = (µs since bucket start) << idx_bits | min(turn_idx, cap).
-    Comparisons only ever happen within one bucket, so the
-    bucket-relative offset preserves the (ts, turn_idx) order exactly.
-    turn_idx is clamped to idx_bits (2^37 per minute-bucket, 2^26 per
-    day-bucket) — beyond that two same-ts turns would tie, which needs
-    >775 turns/sec sustained for a day in ONE conversation."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    idx_bits = 63 - _OFF_BITS[trunc]
-    off = epoch_us(F.col("ts")) - epoch_us(F.date_trunc(trunc, "ts"))
-    cap = (1 << idx_bits) - 1
-    return off * F.lit(1 << idx_bits) + F.least(
-        F.col("turn_idx").cast("long"), F.lit(cap)
-    )
+def pack_key(off: Column, idx: Column, bits: int) -> Column:
+    """off << bits | idx, with idx clamped to `bits` — beyond that two
+    same-µs turns tie, which at the day grain needs >775 turns/sec for
+    a whole day in one conversation."""
+    return off * F.lit(1 << bits) + F.least(idx, F.lit((1 << bits) - 1))
+
+
+def packed_order_key(trunc: str, ts: str = "ts",
+                     idx: Column | None = None) -> Column:
+    """(ts, idx) order inside a `trunc` bucket as ONE int64; `ts` names
+    the timestamp column, `idx` defaults to turn_idx."""
+    off = epoch_us(F.col(ts)) - epoch_us(F.date_trunc(trunc, ts))
+    if idx is None:
+        idx = F.col("turn_idx").cast("long")
+    return pack_key(off, idx, idx_bits(TRUNC_US[trunc]))
+
+
+def tier_fold(rows: DataFrame, bucket: Column | str, fkey: Column,
+              lkey: Column | None = None, keyed: bool = False) -> DataFrame:
+    """The tier aggregate, grouped by (conv_id, metric, bucket_ts).
+
+    `rows` are raw points when they carry `value`, else tier rows.
+    `bucket` is the bucket_ts expression, or a tumbling-window duration
+    on `ts` (epoch-aligned, matches DuckDB's time_bucket).  first/last
+    order by `fkey`/`lkey` (`lkey` defaults to `fkey`); `keyed` also
+    emits the merged keys as `fkey`/`lkey` after first/last."""
+    lkey = fkey if lkey is None else lkey
+    if "value" in rows.columns:
+        v = first = last = F.col("value")
+        head = [F.count(v), F.sum(v), F.min(v), F.max(v)]
+    else:
+        first, last = F.col("first"), F.col("last")
+        head = [F.sum("cnt"), F.sum("sum"), F.min("min"), F.max("max")]
+    aggs = [a.alias(n) for a, n in zip(head, TIER_COLS)]
+    aggs.append(F.min_by(first, fkey).alias("first"))
+    if keyed:
+        aggs.append(F.min(fkey).alias("fkey"))
+    aggs.append(F.max_by(last, lkey).alias("last"))
+    if keyed:
+        aggs.append(F.max(lkey).alias("lkey"))
+    if not isinstance(bucket, str):
+        return rows.groupBy(
+            "conv_id", "metric", bucket.alias("bucket_ts")
+        ).agg(*aggs)
+    out = rows.groupBy(
+        "conv_id", "metric", F.window("ts", bucket).alias("w")
+    ).agg(*aggs)
+    return out.select("conv_id", "metric",
+                      F.col("w.start").alias("bucket_ts"), *out.columns[3:])
 
 
 def rollup_raw(series: DataFrame, tier: str = "1m") -> DataFrame:
     """Raw series points → a tier of (cnt,sum,min,max,first,last)."""
     trunc = TIER_TRUNC[tier]
-    order_key = packed_order_key(trunc)
-    return (
-        series.groupBy(
-            "conv_id", "metric", F.date_trunc(trunc, "ts").alias("bucket_ts")
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.min_by("value", order_key).alias("first"),
-            F.max_by("value", order_key).alias("last"),
-        )
-    )
+    return tier_fold(series, F.date_trunc(trunc, "ts"),
+                     packed_order_key(trunc))
 
 
 def rollup_interval(series: DataFrame, interval: str = "5 minutes",
                     interval_seconds: int = 300) -> DataFrame:
     """Tier rollup at an arbitrary tumbling interval via window()
     (date_trunc only covers calendar units).  Same output schema as
-    rollup_raw; epoch-aligned buckets match DuckDB's time_bucket.
-
-    The order key packs the µs offset-in-bucket into the high bits:
-    at 5m the offset needs 29 bits (300e6 µs), leaving idx_bits =
-    63 − 29 = 34 bits for turn_idx (clamped, ties broken correctly up
-    to 2^34 turns per bucket)."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    # tumbling windows are epoch-aligned, so offset-in-bucket is just
-    # epoch µs mod the interval (avoids nesting window() inside aggs)
+    rollup_raw.  Tumbling windows are epoch-aligned, so the in-bucket
+    offset of the order key is epoch µs mod the interval."""
     ivl_us = interval_seconds * 1_000_000
-    off = F.pmod(epoch_us(F.col("ts")), F.lit(ivl_us))
-    idx_bits = 63 - (ivl_us - 1).bit_length()
-    key = off * F.lit(1 << idx_bits) + F.least(
-        F.col("turn_idx").cast("long"), F.lit((1 << idx_bits) - 1)
-    )
-    return (
-        series.groupBy(
-            "conv_id", "metric", F.window("ts", interval).alias("w")
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.min_by("value", key).alias("first"),
-            F.max_by("value", key).alias("last"),
-        )
-        .select(
-            "conv_id", "metric", F.col("w.start").alias("bucket_ts"),
-            "cnt", "sum", "min", "max", "first", "last",
-        )
-    )
+    key = pack_key(F.pmod(epoch_us(F.col("ts")), F.lit(ivl_us)),
+                   F.col("turn_idx").cast("long"), idx_bits(ivl_us))
+    return tier_fold(series, interval, key)
 
 
 def rollup_tier(lower: DataFrame, to_tier: str) -> DataFrame:
     """Re-aggregate tier N → tier N+1 from the lower tier only."""
-    trunc = TIER_TRUNC[to_tier]
     lo = lower.withColumnRenamed("bucket_ts", "lo_ts")
-    return (
-        lo.groupBy(
-            "conv_id",
-            "metric",
-            F.date_trunc(trunc, "lo_ts").alias("bucket_ts"),
-        )
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.min_by("first", F.col("lo_ts")).alias("first"),
-            F.max_by("last", F.col("lo_ts")).alias("last"),
-        )
-    )
+    return tier_fold(lo, F.date_trunc(TIER_TRUNC[to_tier], "lo_ts"),
+                     F.col("lo_ts"))
 
 
 def rollup_raw_upsertable(series: DataFrame, tier: str = "1m") -> DataFrame:
@@ -140,33 +145,17 @@ def rollup_raw_upsertable(series: DataFrame, tier: str = "1m") -> DataFrame:
     Plain tier rows cannot merge exactly at the SAME granularity:
     combining a base partial and a late-delta partial of one bucket
     needs to know which side's first point came earlier, and
-    `bucket_ts` ties by construction.  Carrying the packed key (µs
-    offset in bucket << idx_bits | turn_idx — comparable across
-    partials of the same bucket) makes first/last merge associative:
-    first = min_by(first, fkey), fkey = min(fkey); sums/counts add;
-    min/max fold.  This is the continuous-aggregate maintenance
-    contract: `merge(rollup(A), rollup(B)) == rollup(A ∪ B)` for any
-    partition of the input — the invariant that lets a 100 TB engine
-    fold a late-arriving day of transcripts into a materialized tier
-    without re-reading the other 99.9 TB (MERGE INTO-shaped at the
-    storage layer; exactness oracle-verified by `tier_upsert_1h`)."""
+    `bucket_ts` ties by construction.  Carrying the packed key makes
+    first/last merge associative (`tier_merge`).  This is the
+    continuous-aggregate maintenance contract:
+    `merge(rollup(A), rollup(B)) == rollup(A ∪ B)` for any partition of
+    the input — the invariant that lets a 100 TB engine fold a
+    late-arriving day of transcripts into a materialized tier without
+    re-reading the other 99.9 TB (MERGE INTO-shaped at the storage
+    layer; exactness oracle-verified by `tier_upsert_1h`)."""
     trunc = TIER_TRUNC[tier]
-    key = packed_order_key(trunc)
-    return (
-        series.groupBy(
-            "conv_id", "metric", F.date_trunc(trunc, "ts").alias("bucket_ts")
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.min_by("value", key).alias("first"),
-            F.min(key).alias("fkey"),
-            F.max_by("value", key).alias("last"),
-            F.max(key).alias("lkey"),
-        )
-    )
+    return tier_fold(series, F.date_trunc(trunc, "ts"),
+                     packed_order_key(trunc), keyed=True)
 
 
 def tier_merge(*parts: DataFrame) -> DataFrame:
@@ -175,30 +164,21 @@ def tier_merge(*parts: DataFrame) -> DataFrame:
     One hash-agg over the unioned partials; shuffle volume is
     |buckets touched|, so merging a late delta costs O(delta), not
     O(history).  Output keeps fkey/lkey so merges chain."""
-    from functools import reduce
-
     u = reduce(lambda a, b: a.unionByName(b), parts)
-    return (
-        u.groupBy("conv_id", "metric", "bucket_ts")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.min_by("first", F.col("fkey")).alias("first"),
-            F.min("fkey").alias("fkey"),
-            F.max_by("last", F.col("lkey")).alias("last"),
-            F.max("lkey").alias("lkey"),
-        )
-    )
+    return tier_fold(u, F.col("bucket_ts"), F.col("fkey"), F.col("lkey"),
+                     keyed=True)
+
+
+def _spread(df: DataFrame, n_parts: int | None, *cols: str) -> DataFrame:
+    return (df.repartition(n_parts, *cols) if n_parts
+            else df.repartition(*cols))
 
 
 def rollup_cascade(series: DataFrame) -> dict[str, DataFrame]:
     """Full cascade; returns {'1m': df, '1h': df, '1d': df}."""
     t1m = rollup_raw(series, "1m")
     t1h = rollup_tier(t1m, "1h")
-    t1d = rollup_tier(t1h, "1d")
-    return {"1m": t1m, "1h": t1h, "1d": t1d}
+    return {"1m": t1m, "1h": t1h, "1d": rollup_tier(t1h, "1d")}
 
 
 def rollup_cascade_fused(series: DataFrame,
@@ -216,15 +196,7 @@ def rollup_cascade_fused(series: DataFrame,
     scaling at 8→32 cores because its shuffle dominated).
 
     tests/test_plans.py asserts the single-exchange property."""
-    s = (
-        series.repartition(n_parts, "conv_id")
-        if n_parts
-        else series.repartition("conv_id")
-    )
-    t1m = rollup_raw(s, "1m")
-    t1h = rollup_tier(t1m, "1h")
-    t1d = rollup_tier(t1h, "1d")
-    return {"1m": t1m, "1h": t1h, "1d": t1d}
+    return rollup_cascade(_spread(series, n_parts, "conv_id"))
 
 
 def tier_summary(tier_df: DataFrame) -> DataFrame:
@@ -266,16 +238,8 @@ def tier_consistency_report(series: DataFrame, lo_tier: str = "1m",
     direct = rollup_raw(series, hi_tier)
 
     keys = ["conv_id", "metric", "bucket_ts"]
-    a = reagg.select(
-        *keys,
-        *[F.col(c).alias(f"a_{c}")
-          for c in ("cnt", "sum", "min", "max", "first", "last")],
-    )
-    b = direct.select(
-        *keys,
-        *[F.col(c).alias(f"b_{c}")
-          for c in ("cnt", "sum", "min", "max", "first", "last")],
-    )
+    a = reagg.select(*keys, *[F.col(c).alias(f"a_{c}") for c in TIER_COLS])
+    b = direct.select(*keys, *[F.col(c).alias(f"b_{c}") for c in TIER_COLS])
     j = a.join(b, keys, "full_outer")
 
     both = F.col("a_cnt").isNotNull() & F.col("b_cnt").isNotNull()
@@ -361,13 +325,5 @@ def rollup_cascade_auto(series: DataFrame, n_parts: int | None = None,
         )
     if not salted:
         return rollup_cascade_fused(series, n_parts)
-    s = with_salt(series, buckets)
-    s = (
-        s.repartition(n_parts, "conv_id", "salt")
-        if n_parts
-        else s.repartition("conv_id", "salt")
-    ).drop("salt")
-    t1m = rollup_raw(s, "1m")
-    t1h = rollup_tier(t1m, "1h")
-    t1d = rollup_tier(t1h, "1d")
-    return {"1m": t1m, "1h": t1h, "1d": t1d}
+    s = _spread(with_salt(series, buckets), n_parts, "conv_id", "salt")
+    return rollup_cascade(s.drop("salt"))

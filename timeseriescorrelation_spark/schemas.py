@@ -120,5 +120,3 @@ def manifest_schema() -> T.StructType:
 
 
 METRICS = ("turn_rate", "tool_calls", "token_len")
-
-TIER_STEPS = {"1m": "minute", "1h": "hour", "1d": "day"}

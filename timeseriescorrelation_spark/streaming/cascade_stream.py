@@ -18,10 +18,10 @@ tier_merge invariant (merge(rollup(A), rollup(B)) == rollup(A ∪ B)).
 First/last discipline: 1m rows arrive WITHOUT packed keys (the
 streaming tier emits plain buckets), but within one hour the minute
 buckets are totally ordered by bucket_ts and append mode emits each
-finalized bucket exactly once — so the in-hour order key is the
-bucket's µs offset packed with the hour-grain convention
-(off << 31, turn component 0), comparable across micro-batches of the
-same hour.
+finalized bucket exactly once — so each bucket's order key is its
+hour-grain packed key with turn component 0 (`operators.rollup` states
+the fold and the key layout once), comparable across micro-batches of
+the same hour.
 
 Resume: foreachBatch is at-least-once, and the tier merge is ADDITIVE
 — so exactly-once is engineered, not assumed: the inter-stage partials
@@ -43,90 +43,51 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us
 from timeseriescorrelation_spark.operators.refresh import (
     refresh_partials,
 )
-
-TIER_SCHEMA = (
-    "conv_id string, metric string, bucket_ts timestamp, cnt bigint, "
-    "sum double, min double, max double, first double, last double"
+from timeseriescorrelation_spark.operators.rollup import (
+    TIER_COLS,
+    TRUNC_US,
+    idx_bits,
+    pack_key,
+    packed_order_key,
+    tier_fold,
 )
+from timeseriescorrelation_spark.schemas import tier_schema
 
 
 def partials_1h_from_1m(tier_1m: DataFrame) -> DataFrame:
     """Plain 1m tier rows → upsertable 1h partials (tier columns +
-    fkey/lkey).  The order key is the minute bucket's offset in its
-    hour packed with the hour-grain convention (off µs << 31)."""
-    hour = F.date_trunc("hour", "bucket_ts")
-    off = (
-        (epoch_us(F.col("bucket_ts")) - epoch_us(hour))
-        * F.lit(1 << 31)
-    ).cast("long")
-    return (
-        tier_1m.select(
-            "conv_id", "metric", hour.alias("h"), off.alias("k"),
-            "cnt", "sum", "min", "max", "first", "last",
-        )
-        .groupBy("conv_id", "metric", F.col("h").alias("bucket_ts"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.min_by("first", "k").alias("first"),
-            F.min("k").alias("fkey"),
-            F.max_by("last", "k").alias("last"),
-            F.max("k").alias("lkey"),
-        )
+    fkey/lkey), keyed by the minute bucket's hour-grain packed key."""
+    # project the hour and the key once; the fold reads the key 4 times
+    pre = tier_1m.select(
+        "conv_id", "metric", F.date_trunc("hour", "bucket_ts").alias("h"),
+        packed_order_key("hour", ts="bucket_ts", idx=F.lit(0)).alias("k"),
+        *TIER_COLS,
     )
-
-
-PARTIALS_SCHEMA = TIER_SCHEMA + ", fkey bigint, lkey bigint"
-
-# hour-grain packed keys carry (off-in-hour µs << 31 | idx31); the
-# day grain packs (off-in-day µs << 26 | idx26) — rollup._OFF_BITS
-_H_IDX_BITS = 31
-_D_IDX_BITS = 26
+    return tier_fold(pre, F.col("h"), F.col("k"), keyed=True)
 
 
 def partials_1d_from_1h(p1h: DataFrame) -> DataFrame:
     """Upsertable 1h partials → upsertable 1d partials: re-key each
-    hour partial's fkey/lkey to the DAY-grain packed convention
-    (off-in-day µs << 26 | idx) and fold.  The re-keying is exact:
-    day offset = hour's offset-in-day + (fkey >> 31), and the turn
-    component min(idx31, 2²⁶−1) equals the batch path's direct
-    min(turn_idx, 2²⁶−1) clamp — so a chained 1m→1h→1d fold emits
-    the same tier VALUES as rollup_raw_upsertable(series, "1d")
-    (asserted in tests/test_cascade_stream.py; the key columns carry
-    turn component 0 when fed from the plain silver tier, which the
-    1h stage already documents).  The
-    chain map is monotone within an hour, so min/max distribute and
-    merges stay associative across micro-batches."""
+    hour partial's fkey/lkey from the hour-grain to the day-grain
+    packed key and fold.  The re-keying is exact: the day offset is
+    the hour's offset-in-day plus the key's in-hour offset, and the
+    turn component re-clamps to the day's idx bits exactly as the
+    batch path clamps turn_idx — so a chained 1m→1h→1d fold emits the
+    same tier VALUES as rollup_raw_upsertable(series, "1d") (asserted
+    in tests/test_cascade_stream.py; the key columns carry turn
+    component 0 when fed from the plain silver tier).  The chain map
+    is monotone within an hour, so min/max distribute and merges stay
+    associative across micro-batches."""
     day = F.date_trunc("day", "bucket_ts")
     hour_off = epoch_us(F.col("bucket_ts")) - epoch_us(day)
-    mask31 = (1 << _H_IDX_BITS) - 1
-    cap26 = (1 << _D_IDX_BITS) - 1
+    h_bits, d_bits = idx_bits(TRUNC_US["hour"]), idx_bits(TRUNC_US["day"])
 
     def chain(key: str):
-        in_hour_off = F.shiftright(F.col(key), _H_IDX_BITS)
-        idx = F.least(
-            F.col(key).bitwiseAND(F.lit(mask31)), F.lit(cap26)
-        )
-        return (
-            (hour_off + in_hour_off) * F.lit(1 << _D_IDX_BITS) + idx
-        ).cast("long")
+        k = F.col(key)
+        return pack_key(hour_off + F.shiftright(k, h_bits),
+                        k.bitwiseAND(F.lit((1 << h_bits) - 1)), d_bits)
 
-    kf, kl = chain("fkey"), chain("lkey")
-    return (
-        p1h.groupBy("conv_id", "metric", day.alias("bucket_ts"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.min_by("first", kf).alias("first"),
-            F.min(kf).alias("fkey"),
-            F.max_by("last", kl).alias("last"),
-            F.max(kl).alias("lkey"),
-        )
-    )
+    return tier_fold(p1h, day, chain("fkey"), chain("lkey"), keyed=True)
 
 
 def fold_1m_batch(batch: DataFrame, batch_id: int, gold_dir: str,
@@ -144,23 +105,11 @@ def fold_1m_batch(batch: DataFrame, batch_id: int, gold_dir: str,
     p1h = partials_1h_from_1m(batch)
     if partials_dir is not None:
         p1h = p1h.localCheckpoint()  # compute once, feed both sinks
-        sess = batch.sparkSession
-        old_mode = sess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        sess.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            p1h.withColumn(
-                "batch_id", F.lit(int(batch_id))
-            ).write.partitionBy("batch_id").mode(
-                "overwrite"
-            ).parquet(partials_dir)
-        finally:
-            sess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", old_mode
-            )
+        p1h.withColumn("batch_id", F.lit(int(batch_id))).write.partitionBy(
+            "batch_id"
+        ).mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(partials_dir)
     refresh_partials(
         batch.sparkSession, gold_dir, p1h, batch_id=int(batch_id)
     )
@@ -189,7 +138,7 @@ def stream_cascade_1h(spark: SparkSession, silver_dir: str,
     same deterministic contents, keeping the log idempotent at the
     batch boundary (same discipline refresh_partials applies to the
     gold tiers)."""
-    tier = spark.readStream.schema(TIER_SCHEMA).parquet(silver_dir)
+    tier = spark.readStream.schema(tier_schema()).parquet(silver_dir)
 
     q = (
         tier.writeStream.foreachBatch(
@@ -210,9 +159,12 @@ def stream_cascade_1d(spark: SparkSession, partials_1h_dir: str,
     log into the materialized 1d tier (own checkpoint, so the 1h and 1d
     stages resume independently).  The log's batch_id partition column
     is a stage-1 idempotency key only — dropped here before folding."""
-    feed = spark.readStream.schema(
-        PARTIALS_SCHEMA + ", batch_id long"
-    ).parquet(partials_1h_dir).drop("batch_id")
+    schema = tier_schema().add("fkey", "long").add("lkey", "long").add(
+        "batch_id", "long"
+    )
+    feed = spark.readStream.schema(schema).parquet(partials_1h_dir).drop(
+        "batch_id"
+    )
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():

@@ -38,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.schemas import tier_schema
 from timeseriescorrelation_spark.streaming.dedup_stream import stream_dedup
 from timeseriescorrelation_spark.streaming.rollup_stream import (
     run_available_now,
@@ -50,10 +51,6 @@ from timeseriescorrelation_spark.streaming.stateful_fill import (
 SERIES_SCHEMA = (
     "conv_id string, metric string, ts timestamp, "
     "turn_idx int, value double"
-)
-TIER_SCHEMA = (
-    "conv_id string, metric string, bucket_ts timestamp, cnt bigint, "
-    "sum double, min double, max double, first double, last double"
 )
 DEDUP_KEYS = ("conv_id", "metric", "turn_idx")
 
@@ -71,19 +68,13 @@ def tier_to_series(tier: DataFrame) -> DataFrame:
     )
 
 
-def run_pipeline_once(spark: SparkSession, src_dir: str, work_dir: str,
-                      watermark: str = "10 minutes",
-                      fill_step: str = "1h") -> dict[str, str]:
-    """Drain all currently-available input through the three stages
-    (each Trigger.AvailableNow, each with durable offsets under
-    ``work_dir``).  Safe to call repeatedly: new source files are
-    processed incrementally, previously-emitted rows are never
-    re-emitted.  Returns the stage output paths."""
+def _bronze_silver(spark: SparkSession, src_dir: str, work_dir: str,
+                   watermark: str, silver: bool = True) -> None:
+    """Stage 1 (bronze: ingest dedup, replay horizon = watermark) and,
+    unless ``silver`` is false, stage 2 (silver: the streaming 1m tier,
+    finalized buckets only), each draining under ``work_dir/ckpt``."""
     bronze = os.path.join(work_dir, "bronze")
-    silver = os.path.join(work_dir, "silver")
-    gold = os.path.join(work_dir, "gold")
     ck = os.path.join(work_dir, "ckpt")
-
     raw = (
         spark.readStream.schema(SERIES_SCHEMA)
         .parquet(src_dir)
@@ -92,24 +83,37 @@ def run_pipeline_once(spark: SparkSession, src_dir: str, work_dir: str,
     run_available_now(
         stream_dedup(raw, DEDUP_KEYS), bronze, os.path.join(ck, "bronze")
     )
+    if silver:
+        deduped = spark.readStream.schema(SERIES_SCHEMA).parquet(bronze)
+        run_available_now(
+            stream_rollup_1m(deduped, watermark),
+            os.path.join(work_dir, "silver"),
+            os.path.join(ck, "silver"),
+        )
 
-    deduped = spark.readStream.schema(SERIES_SCHEMA).parquet(bronze)
-    run_available_now(
-        stream_rollup_1m(deduped, watermark),
-        silver,
-        os.path.join(ck, "silver"),
-    )
 
+def run_pipeline_once(spark: SparkSession, src_dir: str, work_dir: str,
+                      watermark: str = "10 minutes",
+                      fill_step: str = "1h") -> dict[str, str]:
+    """Drain all currently-available input through the three stages
+    (each Trigger.AvailableNow, each with durable offsets under
+    ``work_dir``).  Safe to call repeatedly: new source files are
+    processed incrementally, previously-emitted rows are never
+    re-emitted.  Returns the stage output paths."""
+    paths = {n: os.path.join(work_dir, n)
+             for n in ("bronze", "silver", "gold")}
+    _bronze_silver(spark, src_dir, work_dir, watermark)
     tier = (
-        spark.readStream.schema(TIER_SCHEMA)
-        .parquet(silver)
+        spark.readStream.schema(tier_schema())
+        .parquet(paths["silver"])
         .transform(tier_to_series)
         .withWatermark("ts", watermark)
     )
     run_available_now(
-        stream_fill_locf(tier, fill_step), gold, os.path.join(ck, "gold")
+        stream_fill_locf(tier, fill_step), paths["gold"],
+        os.path.join(work_dir, "ckpt", "gold"),
     )
-    return {"bronze": bronze, "silver": silver, "gold": gold}
+    return paths
 
 
 def run_full_pipeline_once(spark: SparkSession, src_dir: str,
@@ -137,46 +141,25 @@ def run_full_pipeline_once(spark: SparkSession, src_dir: str,
         stream_cascade_1h,
     )
 
-    bronze = os.path.join(work_dir, "bronze")
-    silver = os.path.join(work_dir, "silver")
-    gold_1h = os.path.join(work_dir, "gold_1h")
-    log_1h = os.path.join(work_dir, "log_1h")
-    gold_1d = os.path.join(work_dir, "gold_1d")
+    paths = {n: os.path.join(work_dir, n)
+             for n in ("bronze", "silver", "gold_1h", "log_1h", "gold_1d")}
     ck = os.path.join(work_dir, "ckpt")
-    paths = {"bronze": bronze, "silver": silver, "gold_1h": gold_1h,
-             "log_1h": log_1h, "gold_1d": gold_1d}
-
-    raw = (
-        spark.readStream.schema(SERIES_SCHEMA)
-        .parquet(src_dir)
-        .withWatermark("ts", watermark)
-    )
-    run_available_now(
-        stream_dedup(raw, DEDUP_KEYS), bronze, os.path.join(ck, "bronze")
-    )
-    if stop_after_stage == 1:
-        return paths
-
-    deduped = spark.readStream.schema(SERIES_SCHEMA).parquet(bronze)
-    run_available_now(
-        stream_rollup_1m(deduped, watermark),
-        silver,
-        os.path.join(ck, "silver"),
-    )
-    if stop_after_stage == 2:
+    _bronze_silver(spark, src_dir, work_dir, watermark,
+                   silver=stop_after_stage != 1)
+    if stop_after_stage in (1, 2):
         return paths
 
     stream_cascade_1h(
-        spark, silver, gold_1h, os.path.join(ck, "gold_1h"),
-        partials_dir=log_1h,
+        spark, paths["silver"], paths["gold_1h"],
+        os.path.join(ck, "gold_1h"), partials_dir=paths["log_1h"],
     )
     if stop_after_stage == 3:
         return paths
 
     # a drain in which stage 3 saw zero batches never created the log
     # dir; stage 4's file source needs the path to exist
-    os.makedirs(log_1h, exist_ok=True)
+    os.makedirs(paths["log_1h"], exist_ok=True)
     stream_cascade_1d(
-        spark, log_1h, gold_1d, os.path.join(ck, "gold_1d")
+        spark, paths["log_1h"], paths["gold_1d"], os.path.join(ck, "gold_1d")
     )
     return paths

@@ -2,12 +2,11 @@
 streaming windowed aggregate with watermarked late-data handling, plus
 conversation sessionization via session_window (works in batch too).
 
-The streaming 1m tier computes the SAME (cnt,sum,min,max,first,last)
-bucket schema as the batch `rollup_raw` — `min_by/max_by` on the
-(ts, turn_idx) composite keep first/last deterministic under
-out-of-order arrival, exactly like the batch path.  Higher tiers stay
-batch (they re-aggregate closed 1m buckets; nothing streaming about
-them).
+The streaming 1m tier is the SAME fold as the batch `rollup_raw`
+(`operators.rollup.tier_fold`) — `min_by/max_by` on the packed
+(ts, turn_idx) key keep first/last deterministic under out-of-order
+arrival, exactly like the batch path.  Higher tiers re-aggregate
+closed 1m buckets (`streaming/cascade_stream.py`).
 
 Scale notes: state per key = one running aggregate per
 (conv_id, metric, window); the watermark bounds state retention —
@@ -42,31 +41,13 @@ def stream_rollup_1m(stream: DataFrame,
                      watermark: str = "10 minutes") -> DataFrame:
     """Streaming 1-minute tier: watermarked tumbling-window aggregate
     with the batch tier's exact output schema."""
-    from timeseriescorrelation_spark.operators.rollup import packed_order_key
-
-    order_key = packed_order_key("minute")
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(
-            "conv_id",
-            "metric",
-            F.window("ts", "1 minute").alias("w"),
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.min_by("value", order_key).alias("first"),
-            F.max_by("value", order_key).alias("last"),
-        )
-        .select(
-            "conv_id",
-            "metric",
-            F.col("w.start").alias("bucket_ts"),
-            "cnt", "sum", "min", "max", "first", "last",
-        )
+    from timeseriescorrelation_spark.operators.rollup import (
+        packed_order_key,
+        tier_fold,
     )
+
+    return tier_fold(stream.withWatermark("ts", watermark), "1 minute",
+                     packed_order_key("minute"))
 
 
 def run_available_now(result: DataFrame, out_dir: str,

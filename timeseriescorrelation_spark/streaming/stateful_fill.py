@@ -35,11 +35,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from timeseriescorrelation_spark.operators.gapfill import (
-    STEP_SECONDS,
-    STEP_TRUNC,
-)
-from timeseriescorrelation_spark.operators.rollup import _OFF_BITS
+from timeseriescorrelation_spark.operators.gapfill import STEP_SECONDS
+from timeseriescorrelation_spark.operators.rollup import idx_bits
 from timeseriescorrelation_spark.streaming.scan import (
     micros,
     stateful_scan,
@@ -60,8 +57,8 @@ def stream_fill_locf(stream: DataFrame, step: str = "1h",
     operator requires one for EventTimeTimeout eviction)."""
     step_us = STEP_SECONDS[step] * 1_000_000
     step_ms = step_us // 1_000
-    idx_bits = 63 - _OFF_BITS[STEP_TRUNC[step]]
-    cap = (1 << idx_bits) - 1
+    bits = idx_bits(step_us)
+    cap = (1 << bits) - 1
 
     def _fill(key, pdf, st):
         conv_id, metric = key
@@ -69,7 +66,7 @@ def stream_fill_locf(stream: DataFrame, step: str = "1h",
         ts_us = micros(pdf["ts"])
         bucket = ts_us // step_us * step_us
         off = ts_us - bucket
-        keyv = off * (1 << idx_bits) + np.minimum(
+        keyv = off * (1 << bits) + np.minimum(
             pdf["turn_idx"].to_numpy().astype(np.int64), cap
         )
         vals = pdf["value"].to_numpy(dtype=np.float64)
