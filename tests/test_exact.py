@@ -1,0 +1,362 @@
+"""The exact-arithmetic kit (`functions/exact.py`).
+
+Its numpy snap twin rounds like Spark; widened products stay exact past
+int64 — in the kit itself, in the three operators whose int64 products
+used to overflow (HITS, Huber trend, DiD readout) and in the streaming
+z-score kernel, which numpy used to wrap silently; and no other module
+restates the rule."""
+
+from __future__ import annotations
+
+import ast
+import datetime as dt
+import hashlib
+import math
+import re
+from decimal import ROUND_HALF_UP, Decimal
+from pathlib import Path
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+    snap_np,
+    wide_np,
+)
+
+PKG = Path(__file__).resolve().parents[1] / "timeseriescorrelation_spark"
+I64 = 2 ** 63
+T0 = dt.datetime(2024, 1, 1)
+ZS_SCHEMA = ("conv_id string, metric string, ts timestamp, turn_idx int,"
+             " value double")
+
+
+def _round(x: float, d: int = 0) -> float:
+    """Spark F.round on a double: HALF_UP on the shortest decimal repr."""
+    q = Decimal(1).scaleb(-d)
+    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def test_snap_np_matches_spark_round_at_half_units(spark):
+    vals = (
+        [k + 0.5 for k in range(-6, 6)]
+        + [k / 100 + 0.005 for k in range(-400, 400, 37)]
+        + [0.125, -0.125, 2.675, -2.675, 1.005, -1.005, 0.0, 1e-9]
+    )
+    df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)],
+                               "i int, v double")
+    for d in (0, 2, 3):
+        rows = df.select(
+            "i", snap("v", d).alias("kit"),
+            F.round(F.col("v") * 10 ** d).cast("long").alias("spark"),
+        ).orderBy("i").collect()
+        twin = snap_np(np.array(vals), d).tolist()
+        assert [r["kit"] for r in rows] == twin
+        assert [r["spark"] for r in rows] == twin
+
+
+def test_moments_widen_before_the_product(spark):
+    xs = [5_000_000_000, 5_000_000_007, -4_999_999_999]
+    ys = [4_000_000_001, 3_999_999_999, 4_000_000_000]
+    df = spark.createDataFrame(list(zip(xs, ys)), "x long, y long")
+    r = df.agg(*moments("x", "y")).select(
+        "*", co_moment("n", "sx", "sy", "sxy").alias("cxy"),
+        co_moment("n", "sx", "sx", "sxx").alias("cxx"),
+    ).first()
+    n, sx, sy = len(xs), sum(xs), sum(ys)
+    sxy = sum(x * y for x, y in zip(xs, ys))
+    sxx = sum(x * x for x in xs)
+    assert sxy > I64
+    assert (int(r["n"]), int(r["sx"]), int(r["sy"])) == (n, sx, sy)
+    assert int(r["sxx"]) == sxx
+    assert int(r["syy"]) == sum(y * y for y in ys)
+    assert int(r["sxy"]) == sxy
+    assert int(r["cxy"]) == n * sxy - sx * sy
+    assert int(r["cxx"]) == n * sxx - sx * sx
+    one = df.agg(*moments("x", names="k s - ")).first().asDict()
+    assert {k: int(v) for k, v in one.items()} == {"k": n, "s": sx}
+
+
+# --- the three operators that overflowed int64 at sf1 -----------------
+
+
+def _hits_ref(edges, n_iter):
+    w = {}
+    for s, d, x in edges:
+        w[(s, d)] = w.get((s, d), 0) + x
+    nodes = {v for e in w for v in e}
+    h = dict.fromkeys(nodes, 1)
+    a = {}
+    for _ in range(n_iter):
+        a = {}
+        for (s, d), x in w.items():
+            if s in h:
+                a[d] = a.get(d, 0) + x * h[s]
+        h = {}
+        for (s, d), x in w.items():
+            if d in a:
+                h[s] = h.get(s, 0) + x * a[d]
+    th, ta = sum(h.values()), sum(a.values())
+    return {
+        v: (h.get(v, 0) * 10 ** 6 // th, a.get(v, 0) * 10 ** 6 // ta)
+        for v in nodes
+    }, max(h.values())
+
+
+def test_hits_fixedpoint_scores_past_int64(spark):
+    from timeseriescorrelation_spark.operators.graphrank import (
+        hits_fixedpoint,
+    )
+
+    big = 10 ** 6
+    edges = [(1, 2, big), (1, 3, big), (4, 2, 3), (5, 3, 7), (5, 1, 2)]
+    want, h_max = _hits_ref(edges, 2)
+    assert h_max > I64  # the second power round leaves int64
+    df = spark.createDataFrame(edges, "src long, dst long, w long")
+    got = {
+        r["node"]: (r["hub_u"], r["auth_u"])
+        for r in hits_fixedpoint(df, n_iter=2).collect()
+    }
+    assert got == want
+
+
+def _huber_ref(ys, n_iter=2):
+    m = len(ys)
+    us = list(range(m))
+    su, sy = sum(us), sum(ys)
+    suu = sum(u * u for u in us)
+    suy = sum(u * y for u, y in zip(us, ys))
+    num, den = float(m * suy - su * sy), float(m * suu - su * su)
+    b1 = num / den
+    b0 = (float(sy) - (num / den) * float(su)) / float(m)
+
+    def resid(b0, b1):
+        return [int(_round((float(y) - (b0 + b1 * float(u))) * 1000.0))
+                for u, y in zip(us, ys)]
+
+    ru2_max = max(r * r for r in resid(b0, b1))
+    ndw = 0
+    for _ in range(n_iter):
+        ru = resid(b0, b1)
+        sr2 = sum(r * r for r in ru)
+        delta = 1.345 * math.sqrt(float(sr2) / (float(m) - 2.0))
+        sw = swu = swuu = swy = swuy = 0
+        ndw = 0
+        for u, y, r in zip(us, ys, ru):
+            absr = abs(float(r))
+            w = 1.0 if absr <= delta else delta / absr
+            ud, yd = float(u), float(y)
+            sw += int(_round(w * 1e9))
+            swu += int(_round(w * ud * 1e9))
+            swuu += int(_round(w * ud * ud * 1e9))
+            swy += int(_round(w * yd * 1e6))
+            swuy += int(_round(w * ud * yd * 1e6))
+            ndw += w < 1.0
+        swd, swud, swuud = float(sw) / 1e9, float(swu) / 1e9, \
+            float(swuu) / 1e9
+        swyd, swuyd = float(swy) / 1e6, float(swuy) / 1e6
+        wden = swd * swuud - swud * swud
+        b1 = (swd * swuyd - swud * swyd) / wden
+        b0 = (swyd - b1 * swud) / swd
+    ru = resid(b0, b1)
+    sr2 = sum(r * r for r in ru)
+    sig_mc = math.sqrt(float(sr2) / (float(m) - 2.0))
+    return {
+        "metric": "m", "n_days": m,
+        "slope_per_day": _round(b1 / 100.0, 6),
+        "intercept": _round(b0 / 100.0, 6),
+        "sigma": _round(sig_mc / 1e3 / 100.0, 6),
+        "n_downweighted": ndw,
+    }, ru2_max
+
+
+def test_huber_trend_residual_squares_past_int64(spark):
+    from timeseriescorrelation_spark.operators.analytics import huber_trend
+
+    ys = [1000 * d + 37 * (d % 3) for d in range(12)]
+    ys[5] = 500_000_000  # one outlier day: 5e6 currency units
+    want, ru2_max = _huber_ref(ys)
+    assert ru2_max > I64  # ru² of the first reweight leaves int64
+    df = spark.createDataFrame(
+        [("m", T0 + dt.timedelta(days=d), y / 100) for d, y in
+         enumerate(ys)],
+        "metric string, ts timestamp, value double",
+    )
+    got = huber_trend(df).collect()
+    assert [r.asDict() for r in got] == [want]
+
+
+def _did_ref(rows, num=3, den=5):
+    days = [ts.date() for _, ts, _ in rows]
+    d0, d1 = min(days), max(days)
+    split = d0 + dt.timedelta(days=((d1 - d0).days * num) // den)
+    cents = {}
+    for unit, ts, v in rows:
+        key = (unit, "pre" if ts.date() < split else "post")
+        cents.setdefault(key, []).append(int(_round(v * 100)))
+    cut = int(0.5 * (1 << 16))
+    cells = {}
+    for (unit, period), cs in cents.items():
+        mu = sum(cs) * 10 ** 4 // len(cs)
+        arm = "b" if int(hashlib.md5(unit.encode()).hexdigest()[:4], 16) \
+            < cut else "a"
+        n, sx, sxx = cells.get((arm, period), (0, 0, 0))
+        cells[(arm, period)] = (n + 1, sx + mu, sxx + mu * mu)
+
+    def mean(c):
+        return float(cells[c][1]) / float(cells[c][0])
+
+    def var_over_n(c):
+        n, sx, sxx = (float(x) for x in cells[c])
+        return (n * sxx - sx * sx) / (n * n * (n - 1))
+
+    did = (mean(("b", "post")) - mean(("b", "pre"))) - (
+        mean(("a", "post")) - mean(("a", "pre"))
+    )
+    se = math.sqrt(var_over_n(("a", "pre")) + var_over_n(("a", "post"))
+                   + var_over_n(("b", "pre")) + var_over_n(("b", "post")))
+    out = {f"n_{a}_{p}": cells[(a, p)][0]
+           for a in "ab" for p in ("pre", "post")}
+    for a in "ab":
+        for p in ("pre", "post"):
+            out[f"mean_{a}_{p}"] = _round(mean((a, p)) / 1e6, 6)
+    out.update(did=_round(did / 1e6, 6), se=_round(se / 1e6, 6),
+               z=_round(did / se, 6))
+    return out, max(c[2] for c in cells.values())
+
+
+def test_did_readout_cell_sums_past_int64(spark):
+    from timeseriescorrelation_spark.operators.abtest import did_readout
+
+    rows = []
+    # Σcents·10⁴ of each unit-period leaves int64 while its mean (mu)
+    # still fits a long and Σmu² fits decimal(38,0)
+    for u in range(8):
+        for d in range(6):
+            v = 3.4e12 + (u * 7 + d * 3) % 11 * 2e10 + d * 1e10
+            rows.append((f"u{u}", T0 + dt.timedelta(days=d, hours=u), v))
+    want, sxx_max = _did_ref(rows)
+    assert sxx_max > I64
+    assert min(want[k] for k in want if k.startswith("n_")) >= 2
+    df = spark.createDataFrame(rows, "conv_id string, ts timestamp, "
+                                     "value double")
+    got = did_readout(df).first().asDict()
+    assert got == want
+
+
+# --- the streaming kernels ---------------------------------------------
+
+
+def _drain(spark, tmp_path, rows, schema, build):
+    from timeseriescorrelation_spark.streaming.rollup_stream import (
+        run_available_now,
+    )
+
+    src = tmp_path / "src"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src))
+    stream = (
+        spark.readStream.schema(schema).parquet(str(src))
+        .withWatermark("ts", "10 minutes")
+    )
+    run_available_now(build(stream), str(tmp_path / "out"),
+                      str(tmp_path / "ckpt"))
+
+
+def test_stream_zscore_priors_past_int64(spark, tmp_path):
+    """n·Σx² and (Σx)² leave int64 while Σx² itself still fits the long
+    state: numpy int64 wrapped var_num silently; the widened kernel
+    scores the 4th point like an exact-integer recomputation."""
+    from timeseriescorrelation_spark.streaming.zscore_stream import (
+        stream_zscore,
+    )
+
+    vals = [2e7, -2e7, 0.0, 1e7]
+    cents = snap_np(np.array(vals), 2).tolist()
+    n, s = 3, sum(cents[:3])
+    ss = sum(c * c for c in cents[:3])
+    var_num = n * ss - s * s
+    assert var_num > I64 and sum(c * c for c in cents) < I64
+    z = (cents[3] * n - s) / math.sqrt(float(var_num))
+    want = math.floor(z * 1e6) / 1e6
+
+    rows = [("c", "m", T0 + dt.timedelta(hours=i), i, v)
+            for i, v in enumerate(vals)]
+    _drain(spark, tmp_path, rows, ZS_SCHEMA, stream_zscore)
+    out = str(tmp_path / "out")
+    got = {r["turn_idx"]: r["z"] for r in spark.read.parquet(out).collect()}
+    assert got == {0: None, 1: None, 2: None, 3: want}
+
+
+@pytest.mark.parametrize("kernel", ["zscore", "corr"])
+def test_stream_state_past_int64_raises(spark, tmp_path, kernel):
+    """A carried sum that leaves int64 cannot be stored in the long
+    state: the kernel raises (as ANSI mode does in the batch twin)
+    instead of carrying a wrapped value into later micro-batches."""
+    from timeseriescorrelation_spark.streaming.corr_stream import (
+        stream_corr,
+    )
+    from timeseriescorrelation_spark.streaming.zscore_stream import (
+        stream_zscore,
+    )
+
+    big = 4e7  # 4e9 cents: its square alone leaves int64
+    if kernel == "zscore":
+        schema = ZS_SCHEMA
+        rows = [("c", "m", T0 + dt.timedelta(hours=i), i, big)
+                for i in range(2)]
+        build = stream_zscore
+    else:
+        schema = "metric string, ts timestamp, value double"
+        rows = [(m, T0 + dt.timedelta(hours=h), big)
+                for h in range(2) for m in ("a", "b")]
+        build = lambda s: stream_corr(s, [("a", "b")])  # noqa: E731
+    with pytest.raises(Exception, match="does not fit a long"):
+        _drain(spark, tmp_path, rows, schema, build)
+
+
+def test_wide_np_is_exact_where_int64_wraps():
+    a = np.array([4_000_000_000, -5_000_000_001], dtype=np.int64)
+    with np.errstate(over="ignore"):
+        wrapped = (a * a).tolist()
+    exact = (wide_np(a) * wide_np(a)).tolist()
+    assert exact == [16_000_000_000_000_000_000, 25_000_000_010_000_000_001]
+    assert wrapped != exact
+
+
+# --- one declaration of the rule ---------------------------------------
+
+
+def _docstrings(tree):
+    return {
+        id(n.body[0].value) for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                          ast.AsyncFunctionDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+
+
+def test_exact_rule_is_declared_only_in_the_kit():
+    """Only functions/exact.py spells the decimal(38,0) type or defines a
+    snap: every other module widens and snaps through the kit."""
+    type_sites, snap_defs = [], []
+    for p in sorted(PKG.rglob("*.py")):
+        rel = str(p.relative_to(PKG))
+        if rel == "functions/exact.py":
+            continue
+        tree = ast.parse(p.read_text())
+        docs = _docstrings(tree)
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                    and id(n) not in docs
+                    and "decimal(38" in n.value.lower()):
+                type_sites.append(f"{rel}:{n.lineno}")
+            if (isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and re.match(r"snap(_|$)", n.name)):
+                snap_defs.append(f"{rel}:{n.lineno} {n.name}")
+    assert type_sites == []
+    assert snap_defs == []

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import idiv, snap, wide
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 from timeseriescorrelation_spark.operators.sampling import hash_bucket
 
@@ -112,8 +113,8 @@ def did_readout(series: DataFrame, treat_frac: float = 0.5,
     a deterministic placebo partition — with a real rollout pass the
     actual exposure flag).  Per-unit-period outcome = (Σcents·10⁴)
     div k — integer micro-cents, so every cell moment (n, Σx, Σx²)
-    is an EXACT int64 hash-agg and mean/variance/SE/z are one fixed
-    IEEE expression over twelve exact integers:
+    is an exact widened sum (`functions.exact`) and mean/variance/SE/z
+    are one fixed IEEE expression over twelve exact integers:
 
         se² = Σ_cells s²_c / n_c,   z = DiD / se   (Welch-style)
 
@@ -143,18 +144,18 @@ def did_readout(series: DataFrame, treat_frac: float = 0.5,
             F.col("conv_id").alias("unit"),
             F.when(epoch_us(F.col("ts")) < epoch_us(F.col("split_ts")),
                    F.lit("pre")).otherwise(F.lit("post")).alias("period"),
-            F.round(F.col("value") * 100).cast("long").alias("c"),
+            snap("value", 2).alias("c"),
         )
         .groupBy("unit", "period")
         .agg(
-            F.expr("(sum(c) * 10000) div count(1)").alias("mu"),
+            idiv(wide(F.sum("c")) * 10000, F.count(F.lit(1))).alias("mu"),
         )
     )
     assigned = ab_assign(per, id_col="unit", treat_frac=treat_frac)
 
     def cell(arm, period, col):
         m = (F.col("arm") == arm) & (F.col("period") == period)
-        return F.sum(F.when(m, col).otherwise(F.lit(0))).cast("long")
+        return F.sum(F.when(m, col).otherwise(F.lit(0)))
 
     cells = assigned.agg(
         *[
@@ -163,8 +164,8 @@ def did_readout(series: DataFrame, treat_frac: float = 0.5,
             for p in ("pre", "post")
             for n, agg in [
                 ("n", cell(a, p, F.lit(1))),
-                ("sx", cell(a, p, F.col("mu"))),
-                ("sxx", cell(a, p, F.col("mu") * F.col("mu"))),
+                ("sx", cell(a, p, wide("mu"))),
+                ("sxx", cell(a, p, wide("mu") * wide("mu"))),
             ]
         ]
     )
@@ -374,7 +375,6 @@ def odds_ratio_weekend(events: DataFrame, key: str = "event_type",
     ((days + 4) mod 7 ∈ {0, 6}, anchored to 1970-01-01 = Thursday) —
     no engine-specific dayofweek() convention ever consulted.  One
     hash agg; four exact integer cells per metric."""
-    scale = 10 ** int(value_decimals)
     days = F.floor(
         epoch_us(F.date_trunc("day", F.col(ts_col)))
         / F.lit(86_400_000_000)
@@ -382,7 +382,7 @@ def odds_ratio_weekend(events: DataFrame, key: str = "event_type",
     dow = F.pmod(days + F.lit(4), F.lit(7))
     wkd = dow.isin(0, 6)
     hi = (
-        F.round(F.col(value_col) * scale).cast("long")
+        snap(F.col(value_col), value_decimals)
         > F.lit(int(high_cents))
     )
     agg = events.groupBy(F.col(key).alias("metric")).agg(

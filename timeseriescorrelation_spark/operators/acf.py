@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import co_moment, snap, wide
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 HOUR_US = 3_600_000_000
@@ -188,7 +189,7 @@ def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
         (F.floor(epoch_us(F.col(ts_col)) / HOUR_US) * HOUR_US)
         .alias("h_us"),
     ).agg(
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("a")
+        F.sum(snap(F.col(value_col), value_decimals)).alias("a")
     )
     f = h.select(
         *keys,
@@ -199,9 +200,7 @@ def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
     ae = F.abs(F.col("a") - F.col("fc"))
     den = F.abs(F.col("a")) + F.abs(F.col("fc"))
     smape_term_u = F.when(den == 0, F.lit(0).cast("long")).otherwise(
-        F.round(
-            ae.cast("double") * F.lit(1_000_000.0) / den.cast("double")
-        ).cast("long")
+        snap(ae.cast("double") * F.lit(1_000_000.0) / den.cast("double"))
     )
     g = j.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
@@ -244,9 +243,7 @@ def seasonal_strength(series: DataFrame, keys: list[str] | None = None,
     Scale notes (100 TB): raw scan collapses map-side to ≤168 cells
     per key; two hash-aggs on (key, cell) then (key).  No windows."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
-    c = F.round(F.col(value_col) * scale).cast("long")
+    c = snap(F.col(value_col), value_decimals)
     pt = series.select(
         *keys,
         F.dayofweek(F.col(ts_col)).alias("dow"),
@@ -256,20 +253,20 @@ def seasonal_strength(series: DataFrame, keys: list[str] | None = None,
     g = pt.groupBy(*keys, "dow", "hod").agg(
         F.count(F.lit(1)).alias("ng"),
         F.sum("c").alias("sg"),
-        F.sum((F.col("c") * F.col("c")).cast(dec)).alias("qg"),
+        F.sum(wide("c") * wide("c")).alias("qg"),
     )
-    eg = F.round(
-        (F.col("sg").cast(dec) * F.col("sg").cast(dec)).cast("double")
+    eg = wide(F.round(
+        (wide("sg") * wide("sg")).cast("double")
         / F.col("ng").cast("double")
-    ).cast(dec)
+    ))
     t = g.groupBy(*keys).agg(
-        F.sum("ng").cast(dec).alias("n"),
-        F.sum("sg").cast(dec).alias("s"),
+        wide(F.sum("ng")).alias("n"),
+        wide(F.sum("sg")).alias("s"),
         F.sum("qg").alias("q"),
         F.sum(eg).alias("e"),
     )
-    ssb = F.col("e") * F.col("n") - F.col("s") * F.col("s")
-    sst = F.col("q") * F.col("n") - F.col("s") * F.col("s")
+    ssb = co_moment("n", "s", "s", "e")
+    sst = co_moment("n", "s", "s", "q")
     return t.select(
         *keys,
         F.col("n").cast("long").alias("n"),
@@ -331,12 +328,9 @@ def periodogram(series: DataFrame,
     a = (F.col("n") * F.col("y") - F.col("s")).cast("double")
     theta = two_pi * (F.col("t") % F.col("period_h")) / F.col("period_h")
 
-    def snap(trig):
-        return F.round(a * trig / F.col("n") * F.lit(1e6)).cast("long")
-
     g = ex.groupBy(*keys, "period_h").agg(
-        F.sum(snap(F.cos(theta))).alias("_sc"),
-        F.sum(snap(F.sin(theta))).alias("_ss"),
+        F.sum(snap(a * F.cos(theta) / F.col("n"), 6)).alias("_sc"),
+        F.sum(snap(a * F.sin(theta) / F.col("n"), 6)).alias("_ss"),
         F.max("n").alias("n_hours"),
     )
     amp = (
@@ -420,15 +414,15 @@ def hurst_rs(series: DataFrame, keys: list[str] | None = None,
         F.first("s").alias("s"), F.first("q").alias("q"),
     ).select(
         *keys, "w",
-        (F.col("w") * F.col("q") - F.col("s") * F.col("s")).alias("s2"),
+        co_moment("w", "s", "s", "q").alias("s2"),
         (F.col("mx") - F.col("mn")).alias("rng"),
     ).where((F.col("s2") > 0) & (F.col("rng") > 0))
     per_w = blk.select(
         *keys, "w",
-        F.round(
+        snap(
             F.log(F.col("rng").cast("double")
-                  / F.sqrt(F.col("s2").cast("double"))) * F.lit(1e6)
-        ).cast("long").alias("u"),
+                  / F.sqrt(F.col("s2").cast("double"))), 6
+        ).alias("u"),
     ).groupBy(*keys, "w").agg(
         F.count(F.lit(1)).alias("nb"), F.sum("u").alias("su")
     ).select(
@@ -486,9 +480,7 @@ def ljung_box(series: DataFrame, max_lag: int = 24,
     """
     keys = keys or ["metric"]
     a = acf_spectrum(series, max_lag, keys, ts_col, min_n)
-    term_u = F.round(
-        F.col("acf") * F.col("acf") / F.col("n_pairs") * F.lit(1e12)
-    ).cast("long")
+    term_u = snap(F.col("acf") * F.col("acf") / F.col("n_pairs"), 12)
     g = a.select(
         *keys,
         (F.col("n_pairs") + F.col("lag_h")).alias("n_grid"),
@@ -580,13 +572,11 @@ def semivariogram(series: DataFrame, max_lag: int = 6,
     Scale: grid agg then max_lag equi-joins on (keys, hour) — every
     join is grid-sized, shuffle bounded by |metrics|·|hours|·lags."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     g = series.groupBy(
         *[F.col(k) for k in keys],
         F.date_trunc("hour", "ts").alias("h"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     lags = series.sparkSession.range(1, int(max_lag) + 1).select(
         F.col("id").cast("int").alias("lag_h")
@@ -600,8 +590,8 @@ def semivariogram(series: DataFrame, max_lag: int = 6,
     b = g.select(*keys, F.col("h").alias("h2"), F.col("y").alias("y2"))
     pairs = a.join(b, [*keys, "h2"])
     dsq = (
-        (F.col("y2") - F.col("y1")).cast(dec)
-        * (F.col("y2") - F.col("y1")).cast(dec)
+        wide(F.col("y2") - F.col("y1"))
+        * wide(F.col("y2") - F.col("y1"))
     )
     out = pairs.groupBy(*keys, "lag_h").agg(
         F.count(F.lit(1)).alias("n_pairs"), F.sum(dsq).alias("sq")
@@ -643,12 +633,8 @@ def circadian_phase(series: DataFrame, keys: list[str] | None = None
     theta = us_day.cast("double") / F.lit(86_400_000_000.0) * F.lit(tau)
     agg = series.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.round(F.cos(theta) * F.lit(1.0e6)).cast("long")
-        ).alias("cu"),
-        F.sum(
-            F.round(F.sin(theta) * F.lit(1.0e6)).cast("long")
-        ).alias("su"),
+        F.sum(snap(F.cos(theta), 6)).alias("cu"),
+        F.sum(snap(F.sin(theta), 6)).alias("su"),
     )
     c = F.col("cu").cast("double") / F.lit(1.0e6)
     s = F.col("su").cast("double") / F.lit(1.0e6)
@@ -687,19 +673,18 @@ def harmonic_regression(series: DataFrame,
     |metrics| output rows."""
     keys = keys or ["metric"]
     scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     tau = 6.283185307179586
     g = series.groupBy(
         *keys,
         F.date_trunc("hour", "ts").alias("h"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     theta = (
         F.hour("h").cast("double") / F.lit(24.0) * F.lit(tau)
     )
-    cu = F.round(F.cos(theta) * F.lit(1.0e6)).cast("long")
-    su = F.round(F.sin(theta) * F.lit(1.0e6)).cast("long")
+    cu = snap(F.cos(theta), 6)
+    su = snap(F.sin(theta), 6)
     t = g.select(
         *keys, "y", cu.alias("cu"), su.alias("su")
     )
@@ -707,13 +692,13 @@ def harmonic_regression(series: DataFrame,
         F.count(F.lit(1)).alias("n"),
         F.sum("cu").alias("sc"),
         F.sum("su").alias("ss"),
-        F.sum(F.col("cu").cast(dec) * F.col("cu").cast(dec)).alias("scc"),
-        F.sum(F.col("su").cast(dec) * F.col("su").cast(dec)).alias("sss"),
-        F.sum(F.col("cu").cast(dec) * F.col("su").cast(dec)).alias("scs"),
+        F.sum(wide("cu") * wide("cu")).alias("scc"),
+        F.sum(wide("su") * wide("su")).alias("sss"),
+        F.sum(wide("cu") * wide("su")).alias("scs"),
         F.sum("y").alias("sy"),
-        F.sum(F.col("y").cast(dec) * F.col("y").cast(dec)).alias("syy"),
-        F.sum(F.col("y").cast(dec) * F.col("cu").cast(dec)).alias("syc"),
-        F.sum(F.col("y").cast(dec) * F.col("su").cast(dec)).alias("sys"),
+        F.sum(wide("y") * wide("y")).alias("syy"),
+        F.sum(wide("y") * wide("cu")).alias("syc"),
+        F.sum(wide("y") * wide("su")).alias("sys"),
     ).where(F.col("n") >= 4)
     u = F.lit(1.0e6)
     n = F.col("n").cast("double")
@@ -785,9 +770,7 @@ def spectral_entropy(series: DataFrame,
     pg = periodogram(series, periods, keys)
     q = pg.select(
         *keys,
-        F.round(
-            F.col("amp") * F.col("amp") * F.lit(1.0e9)
-        ).cast("long").alias("qu"),
+        snap(F.col("amp") * F.col("amp"), 9).alias("qu"),
     )
     tot = q.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("k_bands"),
@@ -796,10 +779,8 @@ def spectral_entropy(series: DataFrame,
     )
     j = q.join(tot, keys).where(F.col("qu") > 0)
     p = F.col("qu").cast("double") / F.col("qsum").cast("double")
-    ent_u = F.round(p * F.log(p) * F.lit(1.0e6)).cast("long")
-    lnq_u = F.round(
-        F.log(F.col("qu").cast("double")) * F.lit(1.0e6)
-    ).cast("long")
+    ent_u = snap(p * F.log(p), 6)
+    lnq_u = snap(F.log(F.col("qu").cast("double")), 6)
     agg = j.groupBy(*keys, "k_bands", "qsum", "qmin").agg(
         F.sum(ent_u).alias("eu"),
         F.sum(lnq_u).alias("lu"),
@@ -850,7 +831,7 @@ def hod_quantile_bands(series: DataFrame,
     g = series.groupBy(
         *keys, F.date_trunc("hour", "ts").alias("h")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     ).select(
         *keys, F.hour("h").alias("hod"),
         F.date_trunc("day", "h").alias("d"), "y",
@@ -936,11 +917,10 @@ def lomb_scargle(series: DataFrame,
     import math
 
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         *keys,
         epoch_us(F.col(ts_col)).alias("t_us"),
-        F.round(F.col(value_col) * scale).cast("long").alias("c"),
+        snap(F.col(value_col), value_decimals).alias("c"),
     )
     stats = pt.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
@@ -968,21 +948,14 @@ def lomb_scargle(series: DataFrame,
     a = (F.col("n") * F.col("c") - F.col("s")).cast("double")
     cos_t, sin_t = F.cos(theta), F.sin(theta)
 
-    def snap_y(trig):
-        return F.round(a * trig / F.col("n") * F.lit(1e4)).cast("long")
-
-    def snap_g(expr):
-        return F.round(expr * F.lit(1e6)).cast("long")
-
     g = ex.groupBy(*keys, "period_h").agg(
-        F.sum(snap_y(cos_t)).cast("decimal(38,0)").alias("yc"),
-        F.sum(snap_y(sin_t)).cast("decimal(38,0)").alias("ys"),
-        F.sum(snap_g(cos_t * cos_t)).cast("decimal(38,0)").alias("cc"),
-        F.sum(snap_g(sin_t * sin_t)).cast("decimal(38,0)").alias("ss"),
-        F.sum(snap_g(cos_t * sin_t)).cast("decimal(38,0)").alias("cs"),
+        wide(F.sum(snap(a * cos_t / F.col("n"), 4))).alias("yc"),
+        wide(F.sum(snap(a * sin_t / F.col("n"), 4))).alias("ys"),
+        wide(F.sum(snap(cos_t * cos_t, 6))).alias("cc"),
+        wide(F.sum(snap(sin_t * sin_t, 6))).alias("ss"),
+        wide(F.sum(snap(cos_t * sin_t, 6))).alias("cs"),
         F.max("n").alias("n"),
-        F.max(F.col("n") * F.col("ssq") - F.col("s") * F.col("s"))
-        .alias("v_num"),
+        F.max(co_moment("n", "s", "s", "ssq")).alias("v_num"),
     )
     yc, ys = F.col("yc").cast("double"), F.col("ys").cast("double")
     cc, ss, cs = (F.col("cc").cast("double"), F.col("ss").cast("double"),
@@ -1067,12 +1040,9 @@ def cross_coherence(series: DataFrame,
     )
     a = (F.lit(24) * F.col("y") - F.col("s_day")).cast("double")
 
-    def snap(trig):
-        return F.round(a * trig / F.lit(24.0) * F.lit(1e4)).cast("long")
-
     spec = ex.groupBy(*keys, "day_ts", "period_h").agg(
-        F.sum(snap(F.cos(theta))).alias("cr"),
-        F.sum(snap(-F.sin(theta))).alias("ci"),
+        F.sum(snap(a * F.cos(theta) / F.lit(24.0), 4)).alias("cr"),
+        F.sum(snap(a * -F.sin(theta) / F.lit(24.0), 4)).alias("ci"),
     )
     lhs = spec.select(
         *[F.col(k).alias(f"{k}_a") for k in keys], "day_ts", "period_h",
@@ -1085,19 +1055,18 @@ def cross_coherence(series: DataFrame,
     pairs = lhs.join(rhs, ["day_ts", "period_h"]).where(
         F.col(f"{keys[0]}_a") < F.col(f"{keys[0]}_b")
     )
-    dec = "decimal(38,0)"
     agg = pairs.groupBy(
         *[f"{k}_a" for k in keys], *[f"{k}_b" for k in keys], "period_h"
     ).agg(
         F.count(F.lit(1)).alias("n_days"),
-        F.sum((F.col("ar") * F.col("br")
-               + F.col("ai") * F.col("bi")).cast(dec)).alias("xre"),
-        F.sum((F.col("ai") * F.col("br")
-               - F.col("ar") * F.col("bi")).cast(dec)).alias("xim"),
-        F.sum((F.col("ar") * F.col("ar")
-               + F.col("ai") * F.col("ai")).cast(dec)).alias("paa"),
-        F.sum((F.col("br") * F.col("br")
-               + F.col("bi") * F.col("bi")).cast(dec)).alias("pbb"),
+        F.sum(wide("ar") * wide("br") + wide("ai") * wide("bi"))
+        .alias("xre"),
+        F.sum(wide("ai") * wide("br") - wide("ar") * wide("bi"))
+        .alias("xim"),
+        F.sum(wide("ar") * wide("ar") + wide("ai") * wide("ai"))
+        .alias("paa"),
+        F.sum(wide("br") * wide("br") + wide("bi") * wide("bi"))
+        .alias("pbb"),
     ).where(F.col("n_days") >= int(min_days))
     xre, xim = F.col("xre").cast("double"), F.col("xim").cast("double")
     paa, pbb = F.col("paa").cast("double"), F.col("pbb").cast("double")
@@ -1173,25 +1142,24 @@ def dfa_fluctuation(series: DataFrame,
         *keys, "t", "n", "p",
         F.explode(F.array(*[F.lit(s) for s in scales])).alias("scale_h"),
     )
-    dec = "decimal(38,0)"
     blocks = lv.groupBy(
         *keys, "n", "scale_h",
         (F.col("t") / F.col("scale_h")).cast("long").alias("b"),
     ).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col("p").cast(dec)).alias("sp"),
-        F.sum((F.col("t") % F.col("scale_h")).cast(dec)
-              * F.col("p").cast(dec)).alias("sxp"),
-        F.sum(F.col("p").cast(dec) * F.col("p").cast(dec)).alias("spp"),
+        F.sum(wide("p")).alias("sp"),
+        F.sum(wide(F.col("t") % F.col("scale_h")) * wide("p"))
+        .alias("sxp"),
+        F.sum(wide("p") * wide("p")).alias("spp"),
     )
-    L = F.col("scale_h").cast(dec)
-    sx = (F.col("scale_h") * (F.col("scale_h") - 1) / 2).cast(dec)
+    L = wide("scale_h")
+    sx = wide(F.col("scale_h") * (F.col("scale_h") - 1) / 2)
     a_m = L * F.col("sxp") - sx * F.col("sp")
     c_m = L * F.col("spp") - F.col("sp") * F.col("sp")
-    b_den = (
+    b_den = wide(
         (F.col("scale_h").cast("long") * F.col("scale_h")
          * (F.col("scale_h") * F.col("scale_h") - 1)) / 12
-    ).cast(dec)
+    )
     per_scale = (
         blocks.where(F.col("cnt") == F.col("scale_h"))
         .select(
@@ -1251,8 +1219,7 @@ def ess_hourly(series: DataFrame, max_lag: int = 24,
     a = acf_spectrum(series, max_lag, keys, ts_col, min_n)
     t = a.groupBy(*keys).agg(
         F.max(F.col("n_pairs") + F.col("lag_h")).alias("n_hours"),
-        F.sum(F.round(F.col("acf") * F.lit(1e6)).cast("long"))
-        .alias("su"),
+        F.sum(snap("acf", 6)).alias("su"),
         F.count("acf").alias("used"),
     )
     tau = F.lit(1.0) + F.lit(2.0) * (

@@ -7,12 +7,8 @@ series' activity profile before pruning (BASELINE.json:6 "dataset
 normalization"); these operators are that profile family re-expressed
 as Spark aggregates over the transcript table (BASELINE.json:15).
 
-Cross-engine determinism follows the repo-wide scheme (see
-operators/sax.py): every float that reaches a comparison or output is
-ONE IEEE operation chain over exact integers built identically in
-Spark and DuckDB — integer microsecond gaps, decimal(38,0)/hugeint
-squared sums, a single division per mean, sqrt of an
-exact-integer-quotient variance.
+Exactness: `functions.exact` (integer microsecond gaps are the snapped
+units here).
 """
 
 from __future__ import annotations
@@ -20,9 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap, wide
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-DEC = "decimal(38,0)"
 
 
 def trailing_distinct(events: DataFrame, keys: list[str] | None = None,
@@ -113,8 +108,8 @@ def burstiness_daily(series: DataFrame, keys: list[str] | None = None,
     )
     agg = g.groupBy(*keys, "day_ts").agg(
         F.count(F.lit(1)).alias("n_gaps"),
-        F.sum("gap_us").cast(DEC).alias("sg"),
-        F.sum(F.col("gap_us").cast(DEC) * F.col("gap_us")).alias("sgg"),
+        wide(F.sum("gap_us")).alias("sg"),
+        F.sum(wide("gap_us") * wide("gap_us")).alias("sgg"),
     )
     n = F.col("n_gaps")
     mu = F.col("sg").cast("double") / n.cast("double")
@@ -237,13 +232,11 @@ def decayed_leaderboard(series: DataFrame, keys: list[str] | None = None,
     scale = 10 ** int(value_decimals)
     us = epoch_us(F.col(ts_col))
     now = series.agg(F.max(us).alias("_now_us"))
-    c = F.round(F.col(value_col) * scale).cast("long")
+    c = snap(F.col(value_col), value_decimals)
     expo = (us - F.col("_now_us")).cast("double") / F.lit(
         float(half_life_s) * 1e6
     )
-    term = F.round(
-        c.cast("double") * F.pow(F.lit(2.0), expo) * 100.0
-    ).cast("long")
+    term = snap(c.cast("double") * F.pow(F.lit(2.0), expo), 2)
     per = (
         series.join(F.broadcast(now))
         .select(*keys, F.col(series_col).alias("series"),
@@ -292,12 +285,11 @@ def conformal_pvalue(series: DataFrame, keys: list[str] | None = None,
     products to decimal(38,0) past that).
     """
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     daily = series.groupBy(
         *keys, F.date_trunc("day", F.col(ts_col)).alias("day_ts")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("sc"),
+        F.sum(snap(F.col(value_col), value_decimals)).alias("sc"),
     )
     a = daily.select(*keys, "day_ts", F.col("n").alias("na"),
                      F.col("sc").alias("sa"))
@@ -439,10 +431,9 @@ def gini_concentration(series: DataFrame, keys: list[str] | None = None,
         F.row_number().over(w).alias("i"),
     )
     g = ranked.groupBy(*keys, "bucket_ts").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum(F.col("c").cast("decimal(38,0)")).alias("s"),
-        F.sum((F.col("i").cast("decimal(38,0)")
-               * F.col("c").cast("decimal(38,0)"))).alias("si"),
+        wide(F.count(F.lit(1))).alias("n"),
+        F.sum(wide("c")).alias("s"),
+        F.sum(wide("i") * wide("c")).alias("si"),
     )
     num = (2 * F.col("si") - (F.col("n") + 1) * F.col("s")).cast("double")
     den = (F.col("n") * F.col("s")).cast("double")
@@ -634,17 +625,16 @@ def theil_index_daily(events: DataFrame, group_col: str = "event_type",
     days), all map-side combinable; no window, no join, output
     day-grid-sized."""
     m = 1_000_000
-    scale = 10 ** int(value_decimals)
     cells = events.groupBy(
         F.date_trunc("day", "ts").alias("day_ts"),
         F.col(group_col).alias("grp"),
         F.col(unit_col).alias("unit"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     ).where(F.col("y") > 0)
     yd = F.col("y").cast("double")
     cells = cells.withColumn(
-        "yln_u", F.round(yd * F.log(yd) * m).cast("long")
+        "yln_u", snap(yd * F.log(yd), 6)
     )
     g = cells.groupBy("day_ts", "grp").agg(
         F.sum("y").alias("yg"),
@@ -654,7 +644,7 @@ def theil_index_daily(events: DataFrame, group_col: str = "event_type",
     ygd = F.col("yg").cast("double")
     ngd = F.col("ng").cast("double")
     g = g.withColumn(
-        "bterm_u", F.round(ygd * F.log(ygd / ngd) * m).cast("long")
+        "bterm_u", snap(ygd * F.log(ygd / ngd), 6)
     )
     d = g.groupBy("day_ts").agg(
         F.sum("yg").alias("ytot"),
@@ -701,10 +691,7 @@ def hhi_hourly(events: DataFrame, cat_col: str = "event_type",
     agg = per_cat.groupBy("hour_ts").agg(
         F.sum("n_c").alias("n"),
         F.count(F.lit(1)).alias("n_cats"),
-        F.sum(
-            F.col("n_c").cast("decimal(38,0)")
-            * F.col("n_c").cast("decimal(38,0)")
-        ).alias("sq"),
+        F.sum(wide("n_c") * wide("n_c")).alias("sq"),
     )
     nn = F.col("n").cast("double")
     kk = F.col("n_cats").cast("double")
@@ -742,19 +729,17 @@ def atkinson_daily(events: DataFrame, unit_col: str = "user_id",
 
     Scale: (unit, day) hash agg → day agg; grid-sized after the
     first pass."""
-    scale = 10 ** int(value_decimals)
     cells = events.groupBy(
         F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
         F.col(unit_col).alias("unit"),
     ).agg(
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("y")
+        F.sum(snap(F.col(value_col), value_decimals)).alias("y")
     ).where(F.col("y") > 0)
     agg = cells.groupBy("day_ts").agg(
         F.count(F.lit(1)).alias("n_units"),
         F.sum("y").alias("t_tot"),
-        F.sum(
-            F.round(F.log(F.col("y").cast("double")) * 1e6).cast("long")
-        ).alias("lnsum_micro"),
+        F.sum(snap(F.log(F.col("y").cast("double")), 6))
+        .alias("lnsum_micro"),
     )
     n = F.col("n_units").cast("double")
     t = F.col("t_tot").cast("double")
@@ -783,12 +768,11 @@ def lorenz_deciles(events: DataFrame, unit_col: str = "user_id",
     cents) rounded once.  The ntile window partitions by day; the
     cumulative window runs over n_tiles rows per day — both bounded,
     never a global sort."""
-    scale = 10 ** int(value_decimals)
     cells = events.groupBy(
         F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
         F.col(unit_col).alias("unit"),
     ).agg(
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("y")
+        F.sum(snap(F.col(value_col), value_decimals)).alias("y")
     )
     w = Window.partitionBy("day_ts").orderBy("y", "unit")
     tiled = cells.select(

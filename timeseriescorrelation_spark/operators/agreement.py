@@ -12,12 +12,8 @@ has high ICC/α; Friedman tests whether any metric systematically
 rates days higher; κ checks two independent categorical labelers of
 the hour grid (count-band vs user-band).
 
-Exactness policy (house rule): every sufficient statistic is an
-EXACT integer (cent sums, squared cent sums in decimal(38,0),
-doubled ranks, confusion counts) accumulated by map-side-combinable
-hash aggregates; each final statistic is ONE shared double
-expression over those integers, rounded to 6 — bit-comparable
-cross-engine with no float accumulation order anywhere.
+Exactness: `functions.exact` (doubled ranks and confusion counts are
+exact integers too).
 
 Scale (100 TB): every operator collapses the raw scan to the
 |metrics| x |days| (or |hours|) CALENDAR-bounded grid in one hash
@@ -31,7 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_DEC = "decimal(38,0)"
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+    wide,
+)
 
 
 def _complete_day_grid(series: DataFrame, key: str = "metric",
@@ -40,11 +41,10 @@ def _complete_day_grid(series: DataFrame, key: str = "metric",
     (days on which every metric observed at least one point) — the
     balanced panel the classical agreement formulas assume.  Two
     stacked hash aggs + one broadcast-sized semi-join."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     k = d.select(F.countDistinct("m").alias("k"))
     complete = (
@@ -78,7 +78,7 @@ def icc_oneway(series: DataFrame, key: str = "metric",
     g = _complete_day_grid(series, key, value_decimals)
     day = g.groupBy("day_ts").agg(
         F.sum("y").alias("s_i"),
-        F.sum(F.col("y").cast(_DEC) * F.col("y").cast(_DEC)).alias("sxx_i"),
+        F.sum(wide("y") * wide("y")).alias("sxx_i"),
         F.count(F.lit(1)).alias("k"),
     )
     agg = day.agg(
@@ -86,8 +86,7 @@ def icc_oneway(series: DataFrame, key: str = "metric",
         F.max("k").alias("k_raters"),
         F.sum("s_i").alias("t_tot"),
         F.sum("sxx_i").alias("sxx"),
-        F.sum(F.col("s_i").cast(_DEC) * F.col("s_i").cast(_DEC))
-        .alias("srow"),
+        F.sum(wide("s_i") * wide("s_i")).alias("srow"),
     )
     n = F.col("n_days").cast("double")
     k = F.col("k_raters").cast("double")
@@ -138,7 +137,7 @@ def cronbach_alpha(series: DataFrame, key: str = "metric",
     g = _complete_day_grid(series, key, value_decimals)
     item = g.groupBy("m").agg(
         F.sum("y").alias("c_j"),
-        F.sum(F.col("y").cast(_DEC) * F.col("y").cast(_DEC)).alias("sxx_j"),
+        F.sum(wide("y") * wide("y")).alias("sxx_j"),
         F.count(F.lit(1)).alias("n"),
     )
     day = g.groupBy("day_ts").agg(F.sum("y").alias("s_i"))
@@ -147,13 +146,9 @@ def cronbach_alpha(series: DataFrame, key: str = "metric",
         F.max("n").alias("n_days"),
         F.sum("c_j").alias("t_tot"),
         F.sum("sxx_j").alias("sxx"),
-        F.sum(F.col("c_j").cast(_DEC) * F.col("c_j").cast(_DEC))
-        .alias("scol"),
+        F.sum(wide("c_j") * wide("c_j")).alias("scol"),
     )
-    a2 = day.agg(
-        F.sum(F.col("s_i").cast(_DEC) * F.col("s_i").cast(_DEC))
-        .alias("srow"),
-    )
+    a2 = day.agg(F.sum(wide("s_i") * wide("s_i")).alias("srow"))
     agg = a1.crossJoin(F.broadcast(a2))
     n = F.col("n_days").cast("double")
     k = F.col("k_items").cast("double")
@@ -305,12 +300,12 @@ def cohen_kappa(events: DataFrame, ts_col: str = "ts",
     banded = long.select(
         "hour_ts", "meas", F.ntile(int(n_bands)).over(w).alias("band")
     )
-    wide = (
+    paired = (
         banded.groupBy("hour_ts")
         .pivot("meas", ["a", "b"])
         .agg(F.first("band"))
     )
-    conf = wide.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c"))
+    conf = paired.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c"))
     tot = conf.agg(F.sum("c").alias("n_subjects"))
     diag = conf.where(F.col("a") == F.col("b")).agg(
         F.coalesce(F.sum("c"), F.lit(0)).alias("n_agree")
@@ -321,8 +316,8 @@ def cohen_kappa(events: DataFrame, ts_col: str = "ts",
         rows.join(cols, F.col("a") == F.col("b"))
         .agg(
             F.coalesce(
-                F.sum(F.col("ra").cast(_DEC) * F.col("cb").cast(_DEC)),
-                F.lit(0).cast(_DEC),
+                F.sum(wide("ra") * wide("cb")),
+                wide(F.lit(0)),
             ).alias("chance_num")
         )
     )
@@ -388,29 +383,19 @@ def bland_altman(series: DataFrame, key_a: str, key_b: str,
 
     Scale: metric-filtered hour hash-agg ×2 → |hours| equi-join →
     one moment agg + one broadcast-join count pass."""
-    scale = 10 ** int(value_decimals)
-
     def part(k, alias):
         return series.where(F.col(key) == k).groupBy(
             F.date_trunc("hour", "ts").alias("hour_ts")
-        ).agg(
-            F.sum(F.round(F.col("value") * scale).cast("long"))
-            .alias(alias)
-        )
+        ).agg(F.sum(snap("value", value_decimals)).alias(alias))
 
     j = part(key_a, "va").join(part(key_b, "vb"), "hour_ts").select(
         "hour_ts", (F.col("va") - F.col("vb")).alias("d")
     )
-    DEC = "decimal(38,0)"
-    m = j.agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("d").cast(DEC)).alias("sd_"),
-        F.sum((F.col("d") * F.col("d")).cast(DEC)).alias("sdd"),
-    )
+    m = j.agg(*moments("d", names="n sd_ sdd"))
     nn = F.col("n").cast("double")
     mu = F.col("sd_").cast("double") / nn
     sd = F.sqrt(
-        (F.col("n") * F.col("sdd") - F.col("sd_") * F.col("sd_"))
+        co_moment("n", "sd_", "sd_", "sdd")
         .cast("double") / (nn * (nn - F.lit(1.0)))
     )
     lims = m.select(
@@ -431,7 +416,7 @@ def bland_altman(series: DataFrame, key_a: str, key_b: str,
             ).cast("long")
         ).alias("n_outside"),
     )
-    fs = F.lit(float(scale))
+    fs = F.lit(float(10 ** int(value_decimals)))
     return out.select(
         F.col("n").cast("long").alias("n_hours"),
         F.round(F.col("mu") / fs, 6).alias("mean_diff"),

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
+
 MATCH = 2
 MISMATCH = -1
 GAP = -1
@@ -48,18 +50,15 @@ def _daily_symbol_pairs(series: DataFrame, key: str,
     pa/pb are the sorted (h, s) symbol profiles of each metric's day
     (s ∈ {1, 2} by the doubled-median rule; silent hours are absent
     and densify to 0 in the kernel)."""
-    scale = 10 ** int(value_decimals)
     hourly = series.groupBy(
         F.col(key).alias("k"),
         F.date_trunc("day", "ts").alias("day_ts"),
         F.hour("ts").alias("h"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     w_med = Window.partitionBy("k")
-    med2 = F.round(
-        F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med)
-    ).cast("long")
+    med2 = snap(F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med))
     sym = hourly.select(
         "k", "day_ts", "h",
         F.when(F.lit(2) * F.col("y") > med2, F.lit(2))

@@ -50,6 +50,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    idiv,
+    moments,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 from timeseriescorrelation_spark.operators.rollup import packed_order_key
 
@@ -1007,7 +1014,7 @@ def cusum(series: DataFrame, h: float = 5.0,
         .orderBy(epoch_us(F.col("ts")), "turn_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    v = F.round(F.col("value") * 100).cast("long")
+    v = snap("value", 2)
     base = series.select(
         *keys, "ts", "turn_idx", v.alias("_v")
     ).select(
@@ -1027,7 +1034,7 @@ def cusum(series: DataFrame, h: float = 5.0,
     sp = (F.col("_p") - F.col("_lo")).cast("double")
     sm = (F.col("_hi") - F.col("_p")).cast("double")
     var = (
-        F.col("_n") * F.col("_s2") - F.col("_s1") * F.col("_s1")
+        co_moment("_n", "_s1", "_s1", "_s2")
     ).cast("double")
     scale = F.col("_n").cast("double") * F.lit(100.0)
     hh = F.lit(float(h) * float(h))
@@ -1067,7 +1074,7 @@ def mad_outliers(series: DataFrame, k: float = 3.0,
     keys = keys or ["metric"]
     scale = 10 ** value_decimals
     s = series.withColumn(
-        "_v", F.round(F.col("value") * scale).cast("long")
+        "_v", snap("value", value_decimals)
     )
     med = s.groupBy(*keys).agg(
         F.expr("percentile(_v, 0.5)").alias("_med")
@@ -1177,24 +1184,15 @@ def trend_daily(series: DataFrame, keys: list[str] | None = None,
     x = ((epoch_us(F.col("ts")) - epoch_us(day)) / F.lit(1_000_000)).cast(
         "long"
     )
-    y = F.round(F.col("value") * scale).cast("long")
+    y = snap("value", value_decimals)
     s = series.select(
         *keys, day.alias("day_ts"), x.alias("x"), y.alias("y")
     )
-    dec = "decimal(38,0)"
     g = s.groupBy(*keys, "day_ts").agg(
-        F.count("*").cast(dec).alias("n"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
+        *moments("x", "y", names="n sx sy sxx - sxy"),
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    )
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
+    num = co_moment("n", "sx", "sy", "sxy").cast("double")
+    den = co_moment("n", "sx", "sx", "sxx").cast("double")
     slope_units_per_sec = F.when(den > 0, num / den)
     # value-units per hour: * 3600 / scale (exact double scaling)
     slope = slope_units_per_sec * F.lit(3600.0 / scale)
@@ -1254,8 +1252,6 @@ def lttb_downsample(series: DataFrame, trunc: str = "hour",
     )
 
     keys = keys or ["metric"]
-    scale = 10 ** value_decimals
-    dec = "decimal(38,0)"
 
     s = series.select(
         *keys, "ts", "turn_idx", "value",
@@ -1266,12 +1262,12 @@ def lttb_downsample(series: DataFrame, trunc: str = "hour",
             (epoch_us(F.col("ts")) - epoch_us(F.col("bucket_ts")))
             / F.lit(1_000_000)
         ).cast("long"),
-    ).withColumn("y", F.round(F.col("value") * scale).cast("long"))
+    ).withColumn("y", snap("value", value_decimals))
 
     g = s.groupBy(*keys, "bucket_ts").agg(
         F.count("*").alias("bn"),
-        F.sum(F.col("x").cast(dec)).alias("bsx"),
-        F.sum(F.col("y").cast(dec)).alias("bsy"),
+        F.sum(wide("x")).alias("bsx"),
+        F.sum(wide("y")).alias("bsy"),
     )
     w = Window.partitionBy(*keys).orderBy("bucket_ts")
     gg = g.select(
@@ -1290,18 +1286,18 @@ def lttb_downsample(series: DataFrame, trunc: str = "hour",
     # shift neighbor x-sums into the current bucket's second offsets:
     # Sx_rel = Sx_own + n * (neighbor_start - current_start) seconds
     def _shift(sx, n, b):
-        dsec = (
+        dsec = wide((
             (epoch_us(F.col(b)) - epoch_us(F.col("bucket_ts")))
             / F.lit(1_000_000)
-        ).cast("long").cast(dec)
-        return F.col(sx) + F.col(n).cast(dec) * dsec
+        ).cast("long"))
+        return F.col(sx) + wide(n) * dsec
 
     sx1 = _shift("sx1", "n1", "b1")
     sx3 = _shift("sx3", "n3", "b3")
-    n1 = F.col("n1").cast(dec)
-    n3 = F.col("n3").cast(dec)
-    xx = F.col("x").cast(dec)
-    yy = F.col("y").cast(dec)
+    n1 = wide("n1")
+    n3 = wide("n3")
+    xx = wide("x")
+    yy = wide("y")
     big_n = (sx1 * n3 - sx3 * n1) * (yy * n1 - F.col("sy1")) - (
         sx1 - xx * n1
     ) * (F.col("sy3") * n1 - F.col("sy1") * n3)
@@ -1425,13 +1421,12 @@ def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
     ti<tj condition would drop those pairs while Var(S) kept counting
     them in n, biasing z toward 0 on days with duplicate timestamps."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         *keys,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col(ord_col).cast("long").alias("o"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     a = pt.select(*keys, "day_ts", F.col("t_us").alias("ti"),
                   F.col("o").alias("oi"), F.col("c").alias("ci"))
@@ -1507,7 +1502,7 @@ def theil_sen_daily(series: DataFrame, keys: list[str] | None = None,
         *keys,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     a = pt.select(*keys, "day_ts", F.col("t_us").alias("ti"),
                   F.col("c").alias("ci"))
@@ -1554,14 +1549,13 @@ def quantile_transform_daily(series: DataFrame,
     rank would serialize each metric through one task; the daily grain
     is the scale-sound normalization anyway)."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         *keys,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
         "ts",
         "turn_idx",
         "value",
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     w = Window.partitionBy(*keys, "day_ts").orderBy("c")
     return pt.select(
@@ -1590,7 +1584,7 @@ def trimmed_mean(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc(trunc, "ts").alias("bucket_ts"),
-        F.round(F.col("value") * 100).cast("long").alias("_v"),
+        snap("value", 2).alias("_v"),
     )
     w = Window.partitionBy(*keys, "bucket_ts").orderBy("_v")
     cnt = Window.partitionBy(*keys, "bucket_ts")
@@ -1635,7 +1629,7 @@ def peak_census(series: DataFrame, keys: list[str] | None = None) -> DataFrame:
         *keys, F.date_trunc("hour", "ts").alias("hour_ts")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sc"),
+        F.sum(snap("value", 2)).alias("sc"),
     ).select(
         *keys, "hour_ts",
         (F.col("sc").cast("double") / F.col("n").cast("double"))
@@ -1733,7 +1727,7 @@ def expanding_zscore(series: DataFrame, min_n: int = 3) -> DataFrame:
 
     Scale notes: one shuffle to (conv, metric) groups, one in-group
     sort shared by all three running sums — O(points) state-free."""
-    v = F.round(F.col("value") * 100).cast("long")
+    v = snap("value", 2)
     w = (
         Window.partitionBy("conv_id", "metric")
         .orderBy("ts", "turn_idx")
@@ -1747,7 +1741,7 @@ def expanding_zscore(series: DataFrame, min_n: int = 3) -> DataFrame:
         F.sum("_v").over(w).alias("_cs"),
         F.sum(F.col("_v") * F.col("_v")).over(w).alias("_css"),
     )
-    var_num = F.col("_cn") * F.col("_css") - F.col("_cs") * F.col("_cs")
+    var_num = co_moment("_cn", "_cs", "_cs", "_css")
     z_raw = (
         (F.col("_v") * F.col("_cn") - F.col("_cs")).cast("double")
         / F.sqrt(var_num.cast("double"))
@@ -1922,9 +1916,7 @@ def markov_entropy_daily(events: DataFrame, cat_col: str = "event_type",
     )
 
     def xlx_u(c):
-        return F.round(
-            c.cast("double") * F.log(c.cast("double")) * F.lit(1e6)
-        ).cast("long")
+        return snap(c.cast("double") * F.log(c.cast("double")), 6)
 
     # day×type² metadata, referenced by three downstream aggs — the
     # checkpoint keeps the per-stream lag window (the expensive sort
@@ -1984,13 +1976,12 @@ def moments_daily(series: DataFrame, keys: list[str] | None = None,
     combine — the cheapest possible distributed shape; no window, no
     join, no second pass for the mean."""
     keys = keys or ["metric"]
-    dec = "decimal(38,0)"
     scale = 10 ** value_decimals
-    x = F.round(F.col("value") * scale).cast("long").cast(dec)
+    x = wide(snap("value", value_decimals))
     g = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
+        wide(F.count(F.lit(1))).alias("n"),
         F.sum(x).alias("s1"),
         F.sum(x * x).alias("s2"),
         F.sum(x * x * x).alias("s3"),
@@ -1998,11 +1989,11 @@ def moments_daily(series: DataFrame, keys: list[str] | None = None,
     )
     n, s1, s2, s3, s4 = (F.col(c) for c in ("n", "s1", "s2", "s3", "s4"))
     b = (n * s2 - s1 * s1).cast("double")
-    a = (n * n * s3 - F.lit(3).cast(dec) * n * s1 * s2
-         + F.lit(2).cast(dec) * s1 * s1 * s1).cast("double")
-    c = (n * n * n * s4 - F.lit(4).cast(dec) * n * n * s1 * s3
-         + F.lit(6).cast(dec) * n * s1 * s1 * s2
-         - F.lit(3).cast(dec) * s1 * s1 * s1 * s1).cast("double")
+    a = (n * n * s3 - wide(F.lit(3)) * n * s1 * s2
+         + wide(F.lit(2)) * s1 * s1 * s1).cast("double")
+    c = (n * n * n * s4 - wide(F.lit(4)) * n * n * s1 * s3
+         + wide(F.lit(6)) * n * s1 * s1 * s2
+         - wide(F.lit(3)) * s1 * s1 * s1 * s1).cast("double")
     nd = n.cast("double")
     return g.select(
         *keys, "day_ts",
@@ -2039,7 +2030,7 @@ def cusum_fixed(series: DataFrame, mu: float, sigma: float,
         .orderBy(epoch_us(F.col("ts")), "turn_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    dev = F.round(F.col("value") * 100).cast("long") - F.lit(mu_c)
+    dev = snap("value", 2) - F.lit(mu_c)
     p = F.sum(dev).over(word)
     scored = series.select(*keys, "ts", "turn_idx", "value").select(
         "*",
@@ -2081,7 +2072,7 @@ def cvar_daily(series: DataFrame, alpha_denom: int = 20) -> DataFrame:
     partition, so at 10^12 rows this runs day-sharded with the same
     plan per shard.
     """
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = snap("value", 2)
     day = F.date_trunc("day", "ts")
     base = series.select(
         F.col("metric"), day.alias("day_ts"), cents.alias("c")
@@ -2419,7 +2410,7 @@ def apdex_hourly(series: DataFrame, key: str = "metric",
     the output is grid-sized (|metrics|·|hours|)."""
     scale = 10 ** int(value_decimals)
     t_cents = int(round(threshold * scale))
-    cents = F.round(F.col("value") * scale).cast("long")
+    cents = snap("value", value_decimals)
     one = F.lit(1)
     g = series.groupBy(
         F.col(key).alias("metric"),
@@ -2470,13 +2461,11 @@ def capacity_projection(series: DataFrame, key: str = "metric",
     Scale: one day-grid hash agg, one broadcast of the 1-row global
     min, one per-metric agg.  Calendar-bounded like the trend
     family."""
-    dec = "decimal(38,0)"
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     d0 = d.agg(F.min("day_ts").alias("d0"))
     dx = d.crossJoin(F.broadcast(d0)).select(
@@ -2484,18 +2473,12 @@ def capacity_projection(series: DataFrame, key: str = "metric",
         F.datediff(F.col("day_ts"), F.col("d0")).cast("long").alias("x"),
     )
     g = dx.groupBy("metric").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
+        *moments("x", "y", names="n sx sy sxx - sxy"),
         F.max("y").alias("peak"),
         F.max("x").alias("xmax"),
     ).where(F.col("n") >= min_days)
-    n = F.col("n").cast(dec)
-    den = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    num = (n * F.col("sxy") - F.col("sx").cast(dec) * F.col("sy")) \
-        .cast("double")
+    den = co_moment("n", "sx", "sx", "sxx").cast("double")
+    num = co_moment("n", "sx", "sy", "sxy").cast("double")
     slope = F.when(den > 0, num / den)
     intercept = (
         F.col("sy").cast("double") - slope * F.col("sx").cast("double")
@@ -2539,14 +2522,13 @@ def brier_decomposition(series: DataFrame, num: int = 3,
     j = cal.crossJoin(F.broadcast(tot))
     n_b = F.col("n_pairs").cast("double")
     obar = F.col("pos").cast("double") / F.col("nn").cast("double")
-    rel_u = F.round(
+    rel_u = snap(
         n_b * (F.col("mean_pred") - F.col("frac_obs"))
-        * (F.col("mean_pred") - F.col("frac_obs")) * F.lit(1.0e6)
-    ).cast("long")
-    res_u = F.round(
-        n_b * (F.col("frac_obs") - obar)
-        * (F.col("frac_obs") - obar) * F.lit(1.0e6)
-    ).cast("long")
+        * (F.col("mean_pred") - F.col("frac_obs")), 6
+    )
+    res_u = snap(
+        n_b * (F.col("frac_obs") - obar) * (F.col("frac_obs") - obar), 6
+    )
     agg = j.groupBy("nn", "pos", "k").agg(
         F.sum(rel_u).alias("rel_u"), F.sum(res_u).alias("res_u")
     )
@@ -2602,9 +2584,7 @@ def kalman_level(series: DataFrame, keys: list[str] | None = None,
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(
-            F.round(F.col("value") * F.lit(scale)).cast("long")
-        ).alias("yc")
+        F.sum(snap("value", value_decimals)).alias("yc")
     )
     schema = (
         ", ".join(f"{k} string" for k in keys)
@@ -2717,11 +2697,10 @@ def theta_forecast(series: DataFrame, key: str = "metric",
 
 def _daily_cents(series: DataFrame, key: str,
                  value_decimals: int) -> DataFrame:
-    scale = 10 ** int(value_decimals)
     return series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long"))
+        F.sum(snap("value", value_decimals))
          .cast("long").alias("y")
     )
 
@@ -2732,16 +2711,11 @@ def _theta_fit(dd: DataFrame, key: str, alpha: float,
     (key, n, nb, dn, anum, dd_den, level) — exact trend integers plus
     the SES level of the θ=2 line (see theta_forecast)."""
     a_f = float(alpha)
-    dec = "decimal(38,0)"
     g = dd.groupBy(key).agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(F.col("t").cast(dec)).alias("st"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
-        F.sum((F.col("t") * F.col("y")).cast(dec)).alias("sty"),
+        *moments("t", "y", names="n st sy stt - sty"),
     ).where(F.col("n") >= min_days)
-    nb = F.col("n") * F.col("sty") - F.col("st") * F.col("sy")
-    dn = F.col("n") * F.col("stt") - F.col("st") * F.col("st")
+    nb = co_moment("n", "st", "sy", "sty")
+    dn = co_moment("n", "st", "st", "stt")
     anum = F.col("sy") * dn - nb * F.col("st")
     p = g.select(
         key, "n", nb.alias("nb"), dn.alias("dn"), anum.alias("anum"),
@@ -2750,9 +2724,9 @@ def _theta_fit(dd: DataFrame, key: str, alpha: float,
     q = dd.join(F.broadcast(p), key).select(
         key, "t",
         (
-            (F.lit(2).cast(dec) * F.col("y").cast(dec)
+            (wide(F.lit(2)) * wide("y")
              * F.col("dd_den") - F.col("anum")
-             - F.col("nb") * F.col("n") * F.col("t").cast(dec))
+             - F.col("nb") * F.col("n") * wide("t"))
             .cast("double") / F.col("dd_den").cast("double")
         ).alias("q"),
     )
@@ -2838,9 +2812,7 @@ def theta_backtest(series: DataFrame, key: str = "metric",
         F.lit(0.5) * F.col("level")
         + F.lit(0.5) * (a_d + b_d * (F.col("n").cast("double") + h_d))
     )
-    err_t = F.round(
-        F.abs(F.col("y").cast("double") - fc) * F.lit(1e4)
-    ).cast("long")
+    err_t = snap(F.abs(F.col("y").cast("double") - fc), 4)
     err_n = F.abs(F.col("y") - F.col("last_y")) * F.lit(10000)
     g = j.select(
         key,
@@ -2896,11 +2868,10 @@ def seasonal_mann_kendall(series: DataFrame, key: str = "metric",
     corpus-sized; one grid hash-agg in front."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -2986,11 +2957,10 @@ def lad_trend_daily(series: DataFrame, key: str = "metric",
     fine for a diagnostic; never in HEADLINE).  trend_daily is the
     O(T) scale path."""
     scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     d0 = series.groupBy(
         F.col(key), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     ed = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -3011,17 +2981,13 @@ def lad_trend_daily(series: DataFrame, key: str = "metric",
     k = d.select(key, F.col("x").alias("xk"), F.col("y").alias("yk"))
     r = cand.join(k, key)
     term = F.abs(
-        (F.col("yk") - F.col("yi")).cast(dec) * F.col("den").cast(dec)
-        - F.col("num").cast(dec)
-        * (F.col("xk") - F.col("xi")).cast(dec)
+        wide(F.col("yk") - F.col("yi")) * wide("den")
+        - wide("num") * wide(F.col("xk") - F.col("xi"))
     )
     sc = r.groupBy(key, "xi", "xj", "yi", "num", "den").agg(
         F.sum(term).alias("loss_den")
     )
-    loss_u = F.expr(
-        "CAST(loss_den * 1000000 AS decimal(38,0)) DIV "
-        "CAST(den AS decimal(38,0))"
-    )
+    loss_u = idiv(wide("loss_den") * F.lit(1000000), wide("den"))
     best = sc.select(
         key,
         F.struct(
@@ -3081,11 +3047,10 @@ def skyline_volume_errors(events: DataFrame,
         .alias("errs"),
     )
     levels = per.groupBy("vol").agg(F.min("errs").alias("e_min"))
-    dec = "decimal(38,0)"
     dom = (
         (F.col("l.vol") > F.col("u.vol"))
-        & (F.col("l.e_min").cast(dec) * F.col("u.vol").cast(dec)
-           <= F.col("u.errs").cast(dec) * F.col("l.vol").cast(dec))
+        & (wide("l.e_min") * wide("u.vol")
+           <= wide("u.errs") * wide("l.vol"))
     ) | (
         (F.col("l.vol") == F.col("u.vol"))
         & (F.col("l.e_min") < F.col("u.errs"))
@@ -3132,7 +3097,7 @@ def gmd_daily(series: DataFrame, key: str = "metric",
     pt = series.select(
         F.col(key),
         F.date_trunc("day", "ts").alias("day_ts"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     w = Window.partitionBy(key, "day_ts").orderBy("c")
     ranked = pt.select(
@@ -3145,8 +3110,7 @@ def gmd_daily(series: DataFrame, key: str = "metric",
     g = ranked.groupBy(key, "day_ts").agg(
         F.max("n").alias("n"),
         F.sum(
-            (F.lit(2) * F.col("i") - F.col("n") - F.lit(1))
-            .cast("decimal(38,0)") * F.col("c").cast("decimal(38,0)")
+            wide(F.lit(2) * F.col("i") - F.col("n") - F.lit(1)) * wide("c")
         ).alias("s"),
     ).where(F.col("n") >= int(min_n))
     nd = F.col("n").cast("double")
@@ -3181,7 +3145,7 @@ def isotonic_trend_daily(series: DataFrame, key: str = "metric",
     g = series.groupBy(
         F.col(key), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("c")
+        F.sum(snap("value", value_decimals)).alias("c")
     )
     rows = sorted(
         ((r[key], r["day_ts"], int(r["c"])) for r in g.collect()),
@@ -3252,12 +3216,11 @@ def huber_trend(series: DataFrame, key: str = "metric",
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
     scale = 10 ** int(value_decimals)
-    DEC = "decimal(38,0)"
     d = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     ).select(
         "metric", "y",
         (epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
@@ -3272,19 +3235,11 @@ def huber_trend(series: DataFrame, key: str = "metric",
 
     # step 0: plain OLS on exact integer moments
     g0 = base.groupBy("metric").agg(
-        F.count(F.lit(1)).cast(DEC).alias("m"),
-        F.sum(F.col("u").cast(DEC)).alias("su"),
-        F.sum(F.col("y").cast(DEC)).alias("sy"),
-        F.sum((F.col("u") * F.col("u")).cast(DEC)).alias("suu"),
-        F.sum((F.col("u") * F.col("y")).cast(DEC)).alias("suy"),
+        *moments("u", "y", names="m su sy suu - suy"),
     )
     md = F.col("m").cast("double")
-    num = (F.col("m") * F.col("suy") - F.col("su") * F.col("sy")).cast(
-        "double"
-    )
-    den = (F.col("m") * F.col("suu") - F.col("su") * F.col("su")).cast(
-        "double"
-    )
+    num = co_moment("m", "su", "sy", "suy").cast("double")
+    den = co_moment("m", "su", "su", "suu").cast("double")
     beta = g0.where(den > 0).select(
         "metric",
         (num / den).alias("b1"),
@@ -3302,11 +3257,11 @@ def huber_trend(series: DataFrame, key: str = "metric",
             F.col("y").cast("double")
             - (F.col("b0") + F.col("b1") * F.col("u").cast("double"))
         )
-        ru = F.round(r * F.lit(1e3)).cast("long")  # milli-cents
+        ru = snap(r, 3)  # milli-cents
         t = j.select("metric", "u", "y", ru.alias("ru"))
         sc = t.groupBy("metric").agg(
-            F.count(F.lit(1)).cast(DEC).alias("m"),
-            F.sum((F.col("ru") * F.col("ru")).cast(DEC)).alias("sr2"),
+            wide(F.count(F.lit(1))).alias("m"),
+            F.sum(wide("ru") * wide("ru")).alias("sr2"),
         )
         t2 = t.join(F.broadcast(sc), "metric")
         sig_mc = F.sqrt(
@@ -3320,15 +3275,15 @@ def huber_trend(series: DataFrame, key: str = "metric",
         yd = F.col("y").cast("double")
         terms = t2.select(
             "metric",
-            F.round(w * F.lit(snap9)).cast(DEC).alias("tw"),
-            F.round(w * ud * F.lit(snap9)).cast(DEC).alias("twu"),
-            F.round(w * ud * ud * F.lit(snap9)).cast(DEC).alias("twuu"),
-            F.round(w * yd * F.lit(snap6)).cast(DEC).alias("twy"),
-            F.round(w * ud * yd * F.lit(snap6)).cast(DEC).alias("twuy"),
+            wide(F.round(w * F.lit(snap9))).alias("tw"),
+            wide(F.round(w * ud * F.lit(snap9))).alias("twu"),
+            wide(F.round(w * ud * ud * F.lit(snap9))).alias("twuu"),
+            wide(F.round(w * yd * F.lit(snap6))).alias("twy"),
+            wide(F.round(w * ud * yd * F.lit(snap6))).alias("twuy"),
             (w < F.lit(1.0)).cast("long").alias("dw"),
         )
         gw = terms.groupBy("metric").agg(
-            F.count(F.lit(1)).cast(DEC).alias("m"),
+            wide(F.count(F.lit(1))).alias("m"),
             F.sum("tw").alias("sw"),
             F.sum("twu").alias("swu"),
             F.sum("twuu").alias("swuu"),
@@ -3359,10 +3314,10 @@ def huber_trend(series: DataFrame, key: str = "metric",
         F.col("y").cast("double")
         - (F.col("b0") + F.col("b1") * F.col("u").cast("double"))
     )
-    ruf = F.round(rf * F.lit(1e3)).cast("long")
+    ruf = snap(rf, 3)
     sf = jf.select("metric", ruf.alias("ru")).groupBy("metric").agg(
-        F.count(F.lit(1)).cast(DEC).alias("m"),
-        F.sum((F.col("ru") * F.col("ru")).cast(DEC)).alias("sr2"),
+        wide(F.count(F.lit(1))).alias("m"),
+        F.sum(wide("ru") * wide("ru")).alias("sr2"),
     )
     out = beta.join(sf.select(
         "metric",
@@ -3497,7 +3452,7 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("hour", "ts").alias("hour_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     w = Window.partitionBy("metric").orderBy("hour_ts")
     wn = Window.partitionBy("metric")
@@ -3525,10 +3480,9 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
         "metric", F.col("rn").alias("lag_rn"), F.col("y").alias("y_lag")
     )
     j = test.join(F.broadcast(anchors), "metric")
-    DEC = "decimal(38,0)"
     naive = j.groupBy("metric").agg(
         F.count(F.lit(1)).alias("n_test"),
-        F.sum(F.abs(F.col("yt") - F.col("y_te")).cast(DEC)).alias("sae"),
+        F.sum(wide(F.abs(F.col("yt") - F.col("y_te")))).alias("sae"),
     ).select(
         "metric", F.lit("naive").alias("model"),
         F.col("n_test").cast("long").alias("n_test"),
@@ -3554,8 +3508,7 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
     ).join(lagged, ["metric", "lag_rn"])
     snaive = sn.groupBy("metric").agg(
         F.count(F.lit(1)).alias("n_test"),
-        F.sum(F.abs(F.col("yt") - F.col("y_lag")).cast(DEC))
-        .alias("sae"),
+        F.sum(wide(F.abs(F.col("yt") - F.col("y_lag")))).alias("sae"),
     ).select(
         "metric", F.lit("snaive").alias("model"),
         F.col("n_test").cast("long").alias("n_test"),
@@ -3574,7 +3527,7 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
     )
     drift = j.groupBy("metric").agg(
         F.count(F.lit(1)).alias("n_test"),
-        F.sum(derr.cast(DEC)).alias("sae"),
+        F.sum(wide(derr)).alias("sae"),
         F.max(den).alias("den"),
     ).select(
         "metric", F.lit("drift").alias("model"),

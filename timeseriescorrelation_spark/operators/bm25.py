@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
 from timeseriescorrelation_spark.operators.dedup import tokenize
 
 
@@ -71,7 +72,7 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
         + F.lit(k1)
         * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
     )
-    contrib_u = F.round(idf * tfn * F.lit(1_000_000.0)).cast("long")
+    contrib_u = snap(idf * tfn, 6)
     scored = j.select("doc_id", contrib_u.alias("cu")).groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_terms"),
         F.sum("cu").alias("score_u"),

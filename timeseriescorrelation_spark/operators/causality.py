@@ -11,12 +11,12 @@ over raw rows — the same property that makes corr_matrix_daily
 Exactness:
 - engle_granger keeps the OLS residual EXACT up to one shared double
   expression: with centered moments Sxx_c = nΣx²−(Σx)² and
-  Sxy_c = nΣxy−ΣxΣy (decimal38 integers), the residual scales to the
+  Sxy_c = nΣxy−ΣxΣy (`exact.co_moment`), the residual scales to the
   integer numerator  NUM_t = Sxx_c·(n·y_t − Σy) − Sxy_c·(n·x_t − Σx)
   and one divide by n·Sxx_c turns it into value units.  Each residual
   is then snapped to integer micro-units (both engines compute the
   SAME double from the SAME integers, so the snap agrees), and the
-  lag-1 products/squares accumulate exactly in decimal38 again —
+  lag-1 products/squares accumulate widened again —
   summation order can't bend the statistic.
 - transfer_entropy is pure counting: quartile bins via ntile over a
   deterministic (mean, hour) order (the mutual_info recipe), every ln
@@ -29,10 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.operators.crossmetric import (
-    DEC,
-    _hourly_cents,
-)
+from timeseriescorrelation_spark.functions.exact import co_moment, snap, wide
+from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
 def _dbl(c):
@@ -78,19 +76,19 @@ def engle_granger(series: DataFrame, key: str = "metric",
     wp = Window.partitionBy("mx", "my")
     m = pairs.select(
         "mx", "my", "hour_ts", "vx", "vy",
-        F.count(F.lit(1)).over(wp).cast(DEC).alias("n"),
-        F.sum(F.col("vx").cast(DEC)).over(wp).alias("sx"),
-        F.sum(F.col("vy").cast(DEC)).over(wp).alias("sy"),
-        F.sum((F.col("vx") * F.col("vx")).cast(DEC)).over(wp)
+        wide(F.count(F.lit(1)).over(wp)).alias("n"),
+        F.sum(wide("vx")).over(wp).alias("sx"),
+        F.sum(wide("vy")).over(wp).alias("sy"),
+        F.sum(wide("vx") * wide("vx")).over(wp)
         .alias("sxx"),
-        F.sum((F.col("vx") * F.col("vy")).cast(DEC)).over(wp)
+        F.sum(wide("vx") * wide("vy")).over(wp)
         .alias("sxy"),
     ).where(F.col("n") >= min_hours)
     j = m.select(
         "mx", "my", "hour_ts", "vx", "vy", "n", "sx", "sy",
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+        co_moment("n", "sx", "sx", "sxx")
         .alias("sxxc"),
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
+        co_moment("n", "sx", "sy", "sxy")
         .alias("sxyc"),
     ).where(F.col("sxxc") > 0)
     num = (
@@ -100,7 +98,7 @@ def engle_granger(series: DataFrame, key: str = "metric",
     e_val = _dbl(num) / (
         _dbl(F.col("n") * F.col("sxxc")) * F.lit(float(scale))
     )
-    e_u = F.round(e_val * F.lit(1e6)).cast("long")
+    e_u = snap(e_val, 6)
     wlag = Window.partitionBy("mx", "my").orderBy("hour_ts")
     r = j.select(
         "mx", "my", "hour_ts", "n", "sxxc", "sxyc",
@@ -114,8 +112,8 @@ def engle_granger(series: DataFrame, key: str = "metric",
         F.count("ep").cast("long").alias("n_lag"),
         # residual micro-units can reach ~1e10; promote to decimal38
         # BEFORE the product so the cross/square terms cannot wrap
-        F.sum(F.col("eu").cast(DEC) * F.col("ep")).alias("s01"),
-        F.sum(F.col("ep").cast(DEC) * F.col("ep")).alias("s11"),
+        F.sum(wide("eu") * wide("ep")).alias("s01"),
+        F.sum(wide("ep") * wide("ep")).alias("s11"),
     ).where(F.col("s11") > 0)
     rho = _dbl(F.col("s01")) / _dbl(F.col("s11"))
     return g.select(
@@ -156,13 +154,12 @@ def transfer_entropy(series: DataFrame, key_col: str = "metric",
     grid equi-joins for the (y', y, x) alignment, then counting —
     everything sized by |metrics|²·|hours| aggregates.
     """
-    scale = 10 ** int(value_decimals)
     hourly = series.groupBy(
         F.col(key_col).alias("m"),
         F.date_trunc("hour", F.col(ts_col)).alias("h"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("sc"),
+        F.sum(snap(F.col(value_col), value_decimals)).alias("sc"),
     ).select(
         "m", "h",
         (F.col("sc").cast("double") / F.col("n").cast("double"))
@@ -213,10 +210,9 @@ def transfer_entropy(series: DataFrame, key_col: str = "metric",
         (F.col("cxyz") * F.col("cy")).cast("double")
         / (F.col("cyz") * F.col("cyy")).cast("double")
     )
-    term_u = F.round(
-        F.col("cxyz").cast("double") / F.col("nn").cast("double")
-        * lnr * 1e6
-    ).cast("long")
+    term_u = snap(
+        F.col("cxyz").cast("double") / F.col("nn").cast("double") * lnr, 6
+    )
     return (
         jt.select("mx", "my", "nn", term_u.alias("_t"))
         .groupBy(
@@ -270,7 +266,7 @@ def its_readout(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     ).select(
         "metric", "y",
         (epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
@@ -295,29 +291,27 @@ def its_readout(series: DataFrame, key: str = "metric",
         (F.col("u") >= 0).cast("long").alias("dd"),
         (F.col("u") * (F.col("u") >= 0).cast("long")).alias("w"),
     )
-    c = lambda e: e.cast(DEC)  # noqa: E731
     g = r.groupBy("metric").agg(
         F.max("t_brk").alias("t_brk"),
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(c(F.col("u"))).alias("s1"),
-        F.sum(c(F.col("dd"))).alias("s2"),
-        F.sum(c(F.col("w"))).alias("s3"),
-        F.sum(c(F.col("y"))).alias("sy"),
-        F.sum(c(F.col("u") * F.col("u"))).alias("s11"),
-        F.sum(c(F.col("u") * F.col("dd"))).alias("s12"),
-        F.sum(c(F.col("u") * F.col("w"))).alias("s13"),
-        F.sum(c(F.col("dd"))).alias("s22_"),
-        F.sum(c(F.col("dd") * F.col("w"))).alias("s23"),
-        F.sum(c(F.col("w") * F.col("w"))).alias("s33"),
-        F.sum(c(F.col("u") * F.col("y"))).alias("s1y"),
-        F.sum(c(F.col("dd") * F.col("y"))).alias("s2y"),
-        F.sum(c(F.col("w") * F.col("y"))).alias("s3y"),
-        F.sum(c(F.col("y") * F.col("y"))).alias("syy"),
+        wide(F.count(F.lit(1))).alias("n"),
+        F.sum(wide("u")).alias("s1"),
+        F.sum(wide("dd")).alias("s2"),
+        F.sum(wide("w")).alias("s3"),
+        F.sum(wide("y")).alias("sy"),
+        F.sum(wide("u") * wide("u")).alias("s11"),
+        F.sum(wide("u") * wide("dd")).alias("s12"),
+        F.sum(wide("u") * wide("w")).alias("s13"),
+        F.sum(wide("dd")).alias("s22_"),
+        F.sum(wide("dd") * wide("w")).alias("s23"),
+        F.sum(wide("w") * wide("w")).alias("s33"),
+        F.sum(wide("u") * wide("y")).alias("s1y"),
+        F.sum(wide("dd") * wide("y")).alias("s2y"),
+        F.sum(wide("w") * wide("y")).alias("s3y"),
+        F.sum(wide("y") * wide("y")).alias("syy"),
     )
-    m = F.col("n")
 
     def cen(sab, sa, sb):
-        return (m * F.col(sab) - F.col(sa) * F.col(sb)).cast("double")
+        return co_moment("n", sa, sb, sab).cast("double")
 
     S11, S22, S33 = (cen("s11", "s1", "s1"), cen("s22_", "s2", "s2"),
                      cen("s33", "s3", "s3"))
@@ -350,7 +344,7 @@ def its_readout(series: DataFrame, key: str = "metric",
     )
     return g.where(det > 0).select(
         "metric",
-        m.cast("long").alias("n_days"),
+        F.col("n").cast("long").alias("n_days"),
         F.col("t_brk").cast("long").alias("break_day_idx"),
         F.round(b0, 6).alias("b0"),
         F.round(b1 / fs, 6).alias("slope_pre"),

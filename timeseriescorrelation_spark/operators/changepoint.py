@@ -40,6 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 
@@ -63,7 +69,7 @@ def changepoint_daily(series: DataFrame, keys: list[str] | None = None,
         F.col("ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col("turn_idx"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     w = Window.partitionBy(*keys, "day_ts").orderBy("t_us", "turn_idx")
     wall = Window.partitionBy(*keys, "day_ts")
@@ -192,7 +198,7 @@ def changepoints_multi(series: DataFrame, keys: list[str] | None = None,
         F.date_trunc("day", "ts").alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col("turn_idx"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     ).withColumn("seg", F.lit(0).cast("long")).localCheckpoint(
         eager=True
     )
@@ -306,11 +312,10 @@ def pettitt_test(series: DataFrame, keys: list[str] | None = None,
     metric regardless of corpus size (the bounded-quadratic policy);
     one partitioned cumulative window over T rows."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     i = d.select(*keys, F.col("day_ts").alias("di"),
                  F.col("y").alias("yi"))
@@ -402,7 +407,6 @@ def segmented_trend(series: DataFrame, keys: list[str] | None = None,
     once, by the grid aggregation."""
     keys = keys or ["metric"]
     scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     bp = pettitt_test(
         series, keys=keys, value_decimals=value_decimals,
         min_days=min_days,
@@ -410,26 +414,22 @@ def segmented_trend(series: DataFrame, keys: list[str] | None = None,
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     j = d.join(F.broadcast(bp), keys)
-    x = (
+    x = wide(
         F.floor(epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
         - F.floor(epoch_us(F.col("change_day")) / F.lit(86_400_000_000))
-    ).cast(dec)
+    )
     seg = (F.col("day_ts") > F.col("change_day")).cast("int")
     per = j.select(
         *keys, "change_day", seg.alias("seg"), x.alias("x"),
-        F.col("y").cast(dec).alias("y"),
+        wide("y").alias("y"),
     ).groupBy(*keys, "change_day", "seg").agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        *moments("x", "y", names="n sx sy sxx - sxy"),
     ).where(F.col("n") >= int(min_seg))
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
+    den = co_moment("n", "sx", "sx", "sxx")
+    num = co_moment("n", "sx", "sy", "sxy")
     slope = F.when(
         den > 0,
         num.cast("double") / den.cast("double") / F.lit(float(scale)),

@@ -9,13 +9,8 @@ against everything" 100-TB-safe: with k metrics and H hours the pair
 join is k²·H rows of pre-aggregated integers, independent of corpus
 row count.
 
-Exactness: hourly values are exact integer cent sums; all second
-moments accumulate in decimal(38,0) (Spark) / hugeint→cast (DuckDB);
-each statistic is assembled from the exact integers with one identical
-double expression tree, so Pearson r and the R² pair agree bit-for-bit
-cross-engine (same recipe as trend_daily / acf).  Overflow bound:
-n·Σy² < 10³⁸ holds until ≈10⁵ hours of ≈10¹² cents/hour — ANSI mode
-errors loudly beyond.
+Exactness: `functions.exact`.  Overflow bound: n·Σy² < 10³⁸ holds until
+≈10⁵ hours of ≈10¹² cents/hour — ANSI mode errors loudly beyond.
 """
 
 from __future__ import annotations
@@ -23,20 +18,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-DEC = "decimal(38,0)"
+# the (a, b) pair moments as `moments` names them here
+_AB = "n sa sb saa sbb sab"
 
 
 def _hourly_cents(series: DataFrame, keys: list[str],
                   value_decimals: int) -> DataFrame:
-    scale = 10 ** int(value_decimals)
     return series.groupBy(
         *keys, F.date_trunc("hour", "ts").alias("hour_ts")
     ).agg(
-        F.sum(
-            F.round(F.col("value") * scale).cast("long")
-        ).cast("long").alias("y")
+        F.sum(snap("value", value_decimals)).cast("long").alias("y")
     )
 
 
@@ -65,22 +64,11 @@ def corr_matrix_daily(series: DataFrame, key: str = "metric",
         "metric_a", "metric_b",
         F.date_trunc("day", "hour_ts").alias("day_ts"),
     ).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("ya").cast(DEC)).alias("sa"),
-        F.sum(F.col("yb").cast(DEC)).alias("sb"),
-        F.sum((F.col("ya") * F.col("ya")).cast(DEC)).alias("saa"),
-        F.sum((F.col("yb") * F.col("yb")).cast(DEC)).alias("sbb"),
-        F.sum((F.col("ya") * F.col("yb")).cast(DEC)).alias("sab"),
+        *moments("ya", "yb", names=_AB),
     )
-    num = (F.col("n") * F.col("sab") - F.col("sa") * F.col("sb")).cast(
-        "double"
-    )
-    da = (F.col("n") * F.col("saa") - F.col("sa") * F.col("sa")).cast(
-        "double"
-    )
-    db = (F.col("n") * F.col("sbb") - F.col("sb") * F.col("sb")).cast(
-        "double"
-    )
+    num = co_moment("n", "sa", "sb", "sab").cast("double")
+    da = co_moment("n", "sa", "sa", "saa").cast("double")
+    db = co_moment("n", "sb", "sb", "sbb").cast("double")
     return g.where(F.col("n") >= int(min_hours)).select(
         "metric_a", "metric_b", "day_ts",
         F.col("n").cast("long").alias("n_hours"),
@@ -143,35 +131,16 @@ def granger_gain(series: DataFrame, key: str = "metric",
         .where(F.col("metric_x") != F.col("metric_y"))
     )
     g = obs.groupBy("metric_x", "metric_y").agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("yt").cast(DEC)).alias("sy"),
-        F.sum(F.col("y1").cast(DEC)).alias("s1"),
-        F.sum(F.col("x1").cast(DEC)).alias("s2"),
-        F.sum((F.col("yt") * F.col("yt")).cast(DEC)).alias("syy"),
-        F.sum((F.col("y1") * F.col("y1")).cast(DEC)).alias("s11"),
-        F.sum((F.col("x1") * F.col("x1")).cast(DEC)).alias("s22"),
-        F.sum((F.col("y1") * F.col("yt")).cast(DEC)).alias("s1y"),
-        F.sum((F.col("x1") * F.col("yt")).cast(DEC)).alias("s2y"),
-        F.sum((F.col("y1") * F.col("x1")).cast(DEC)).alias("s12"),
+        *moments("y1", "yt", names="n s1 sy s11 syy s1y"),
+        *moments("x1", "yt", names="- s2 - s22 - s2y"),
+        F.sum(wide("y1") * wide("x1")).alias("s12"),
     )
-    cyy = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-        "double"
-    )
-    c11 = (F.col("n") * F.col("s11") - F.col("s1") * F.col("s1")).cast(
-        "double"
-    )
-    c22 = (F.col("n") * F.col("s22") - F.col("s2") * F.col("s2")).cast(
-        "double"
-    )
-    c1y = (F.col("n") * F.col("s1y") - F.col("s1") * F.col("sy")).cast(
-        "double"
-    )
-    c2y = (F.col("n") * F.col("s2y") - F.col("s2") * F.col("sy")).cast(
-        "double"
-    )
-    c12 = (F.col("n") * F.col("s12") - F.col("s1") * F.col("s2")).cast(
-        "double"
-    )
+    cyy = co_moment("n", "sy", "sy", "syy").cast("double")
+    c11 = co_moment("n", "s1", "s1", "s11").cast("double")
+    c22 = co_moment("n", "s2", "s2", "s22").cast("double")
+    c1y = co_moment("n", "s1", "sy", "s1y").cast("double")
+    c2y = co_moment("n", "s2", "sy", "s2y").cast("double")
+    c12 = co_moment("n", "s1", "s2", "s12").cast("double")
     det = c11 * c22 - c12 * c12
     r2_r = F.when((cyy > 0) & (c11 > 0), c1y * c1y / (cyy * c11))
     r2_f = F.when(
@@ -221,13 +190,12 @@ def mutual_information_pairs(series: DataFrame,
     """
     from pyspark.sql import Window
 
-    scale = 10 ** int(value_decimals)
     hourly = series.groupBy(
         F.col(key_col).alias("m"),
         F.date_trunc("hour", F.col(ts_col)).alias("h"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("sc"),
+        F.sum(snap(F.col(value_col), value_decimals)).alias("sc"),
     ).select(
         "m", "h",
         (F.col("sc").cast("double") / F.col("n").cast("double"))
@@ -257,10 +225,9 @@ def mutual_information_pairs(series: DataFrame,
         (F.col("cxy") * F.col("nn")).cast("double")
         / (F.col("cx") * F.col("cy")).cast("double")
     )
-    term_u = F.round(
-        F.col("cxy").cast("double") / F.col("nn").cast("double")
-        * lnr * 1e6
-    ).cast("long")
+    term_u = snap(
+        F.col("cxy").cast("double") / F.col("nn").cast("double") * lnr, 6
+    )
     return (
         jt.select("mx", "my", "nn", term_u.alias("_t"))
         .groupBy(F.col("mx").alias("metric_x"),
@@ -310,16 +277,10 @@ def beta_daily(series: DataFrame, key: str = "metric",
         "metric_x", "metric_y",
         F.date_trunc("day", "hour_ts").alias("day_ts"),
     ).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("vx").cast(DEC)).alias("sx"),
-        F.sum(F.col("vy").cast(DEC)).alias("sy"),
-        F.sum((F.col("vx") * F.col("vx")).cast(DEC)).alias("sxx"),
-        F.sum((F.col("vx") * F.col("vy")).cast(DEC)).alias("sxy"),
+        *moments("vx", "vy", names="n sx sy sxx - sxy"),
     ).where(F.col("n") >= min_hours)
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double")
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double")
+    num = co_moment("n", "sx", "sy", "sxy").cast("double")
+    den = co_moment("n", "sx", "sx", "sxx").cast("double")
     beta = F.when(den > 0, num / den)
     alpha = (
         (F.col("sy").cast("double") - beta * F.col("sx").cast("double"))
@@ -378,21 +339,13 @@ def lead_lag_best(series: DataFrame, key: str = "metric",
         .where(F.col("mx") < F.col("my"))
         .groupBy("mx", "my", "lag_h")
         .agg(
-            F.count(F.lit(1)).cast(DEC).alias("n"),
-            F.sum(F.col("vx").cast(DEC)).alias("sx"),
-            F.sum(F.col("vy").cast(DEC)).alias("sy"),
-            F.sum((F.col("vx") * F.col("vx")).cast(DEC)).alias("sxx"),
-            F.sum((F.col("vy") * F.col("vy")).cast(DEC)).alias("syy"),
-            F.sum((F.col("vx") * F.col("vy")).cast(DEC)).alias("sxy"),
+            *moments("vx", "vy"),
         )
         .where(F.col("n") >= min_n)
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double")
-    dx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double")
-    dy = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-        "double")
+    num = co_moment("n", "sx", "sy", "sxy").cast("double")
+    dx = co_moment("n", "sx", "sx", "sxx").cast("double")
+    dy = co_moment("n", "sy", "sy", "syy").cast("double")
     r = F.when(
         (dx > 0) & (dy > 0),
         F.round(num / F.sqrt(dx) / F.sqrt(dy), 6),
@@ -405,7 +358,7 @@ def lead_lag_best(series: DataFrame, key: str = "metric",
     # packed ordering key: |r| micro-units dominate, then smaller
     # |lag|, then smaller lag (unique per row within the pair group)
     key_col = (
-        F.round(F.abs(F.col("r")) * 1_000_000).cast("long") * 10_000
+        snap(F.abs(F.col("r")), 6) * 10_000
         + (F.lit(L) - F.abs(F.col("lag_h"))).cast("long") * 100
         + (F.lit(L) - F.col("lag_h")).cast("long")
     )
@@ -533,26 +486,16 @@ def ols2_daily(series: DataFrame, y_key: str, x1_key: str, x2_key: str,
         .join(part(x1_key, "v1"), "hour_ts")
         .join(part(x2_key, "v2"), "hour_ts")
     )
-    c = lambda e: e.cast(DEC)  # noqa: E731
     g = j.groupBy(
         F.date_trunc("day", "hour_ts").alias("day_ts")
     ).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(c(F.col("v1"))).alias("s1"),
-        F.sum(c(F.col("v2"))).alias("s2"),
-        F.sum(c(F.col("vy"))).alias("sy"),
-        F.sum(c(F.col("v1") * F.col("v1"))).alias("s11"),
-        F.sum(c(F.col("v2") * F.col("v2"))).alias("s22"),
-        F.sum(c(F.col("v1") * F.col("v2"))).alias("s12"),
-        F.sum(c(F.col("v1") * F.col("vy"))).alias("s1y"),
-        F.sum(c(F.col("v2") * F.col("vy"))).alias("s2y"),
-        F.sum(c(F.col("vy") * F.col("vy"))).alias("syy"),
+        *moments("v1", "vy", names="n s1 sy s11 syy s1y"),
+        *moments("v2", "vy", names="- s2 - s22 - s2y"),
+        F.sum(wide("v1") * wide("v2")).alias("s12"),
     ).where(F.col("n") >= int(min_hours))
 
     def cen(sab, sa, sb):
-        return (F.col("n") * F.col(sab) - F.col(sa) * F.col(sb)).cast(
-            "double"
-        )
+        return co_moment("n", sa, sb, sab).cast("double")
 
     S11, S22, S12 = cen("s11", "s1", "s1"), cen("s22", "s2", "s2"), \
         cen("s12", "s1", "s2")
@@ -598,16 +541,8 @@ def corr_pair_moments(series: DataFrame, key: str = "metric",
         "metric_a", "metric_b",
         F.date_trunc("day", "hour_ts").alias("day_ts"),
     ).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("ya").cast(DEC)).alias("sa"),
-        F.sum(F.col("yb").cast(DEC)).alias("sb"),
-        F.sum((F.col("ya") * F.col("ya")).cast(DEC)).alias("saa"),
-        F.sum((F.col("yb") * F.col("yb")).cast(DEC)).alias("sbb"),
-        F.sum((F.col("ya") * F.col("yb")).cast(DEC)).alias("sab"),
+        *moments("ya", "yb", names=_AB),
     )
-
-
-_MOMENT_COLS = ["n", "sa", "sb", "saa", "sbb", "sab"]
 
 
 def merge_corr_moments(*parts: DataFrame) -> DataFrame:
@@ -618,7 +553,7 @@ def merge_corr_moments(*parts: DataFrame) -> DataFrame:
     for p in parts[1:]:
         u = u.unionByName(p)
     return u.groupBy("metric_a", "metric_b", "day_ts").agg(
-        *[F.sum(c).cast(DEC).alias(c) for c in _MOMENT_COLS]
+        *[wide(F.sum(c)).alias(c) for c in _AB.split()]
     )
 
 
@@ -627,15 +562,9 @@ def corr_from_moments(m: DataFrame, min_hours: int = 4) -> DataFrame:
     moments — corr_matrix_daily's terminal expression, factored so
     merged (incremental) state produces BIT-IDENTICAL reports to a
     full rescan."""
-    num = (F.col("n") * F.col("sab") - F.col("sa") * F.col("sb")).cast(
-        "double"
-    )
-    da = (F.col("n") * F.col("saa") - F.col("sa") * F.col("sa")).cast(
-        "double"
-    )
-    db = (F.col("n") * F.col("sbb") - F.col("sb") * F.col("sb")).cast(
-        "double"
-    )
+    num = co_moment("n", "sa", "sb", "sab").cast("double")
+    da = co_moment("n", "sa", "sa", "saa").cast("double")
+    db = co_moment("n", "sb", "sb", "sbb").cast("double")
     return m.where(F.col("n") >= int(min_hours)).select(
         "metric_a", "metric_b", "day_ts",
         F.col("n").cast("long").alias("n_hours"),
@@ -678,17 +607,12 @@ def ccc_pairs(series: DataFrame, key: str = "metric",
         F.col("metric_a") < F.col("metric_b")
     )
     g = pairs.groupBy("metric_a", "metric_b").agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("ya").cast(DEC)).alias("sa"),
-        F.sum(F.col("yb").cast(DEC)).alias("sb"),
-        F.sum((F.col("ya") * F.col("ya")).cast(DEC)).alias("saa"),
-        F.sum((F.col("yb") * F.col("yb")).cast(DEC)).alias("sbb"),
-        F.sum((F.col("ya") * F.col("yb")).cast(DEC)).alias("sab"),
+        *moments("ya", "yb", names=_AB),
     ).where(F.col("n") >= min_hours)
     n = F.col("n")
-    num = n * F.col("sab") - F.col("sa") * F.col("sb")
-    da = n * F.col("saa") - F.col("sa") * F.col("sa")
-    db = n * F.col("sbb") - F.col("sb") * F.col("sb")
+    num = co_moment("n", "sa", "sb", "sab")
+    da = co_moment("n", "sa", "sa", "saa")
+    db = co_moment("n", "sb", "sb", "sbb")
     dd = F.col("sa") - F.col("sb")
     denc = da + db + dd * dd
     r = F.when(
@@ -731,17 +655,17 @@ def corr_deseasonalized(series: DataFrame, key: str = "metric",
     whod = Window.partitionBy(key, F.hour("hour_ts"))
     res = h.select(
         F.col(key), "hour_ts",
-        F.round(
+        snap(
             (
-                F.count(F.lit(1)).over(whod).cast(DEC) * F.col("y")
-                - F.sum(F.col("y").cast(DEC)).over(whod)
+                wide(F.count(F.lit(1)).over(whod)) * F.col("y")
+                - F.sum(wide("y")).over(whod)
             ).cast("double")
             / (
                 F.count(F.lit(1)).over(whod).cast("double")
                 * F.lit(float(scale))
-            )
-            * F.lit(1e6)
-        ).cast("long").alias("ru"),
+            ),
+            6,
+        ).alias("ru"),
     )
     a = res.select(
         F.col(key).alias("metric_a"), "hour_ts", F.col("ru").alias("ra")
@@ -753,17 +677,12 @@ def corr_deseasonalized(series: DataFrame, key: str = "metric",
         F.col("metric_a") < F.col("metric_b")
     )
     g = pairs.groupBy("metric_a", "metric_b").agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("ra").cast(DEC)).alias("sa"),
-        F.sum(F.col("rb").cast(DEC)).alias("sb"),
-        F.sum(F.col("ra").cast(DEC) * F.col("ra")).alias("saa"),
-        F.sum(F.col("rb").cast(DEC) * F.col("rb")).alias("sbb"),
-        F.sum(F.col("ra").cast(DEC) * F.col("rb")).alias("sab"),
+        *moments("ra", "rb", names=_AB),
     ).where(F.col("n") >= min_hours)
     n = F.col("n")
-    num = (n * F.col("sab") - F.col("sa") * F.col("sb")).cast("double")
-    da = (n * F.col("saa") - F.col("sa") * F.col("sa")).cast("double")
-    db = (n * F.col("sbb") - F.col("sb") * F.col("sb")).cast("double")
+    num = co_moment("n", "sa", "sb", "sab").cast("double")
+    da = co_moment("n", "sa", "sa", "saa").cast("double")
+    db = co_moment("n", "sb", "sb", "sbb").cast("double")
     r = F.when(
         (da > 0) & (db > 0), num / F.sqrt(da) / F.sqrt(db)
     )
@@ -823,17 +742,12 @@ def corr_winsorized(series: DataFrame, key: str = "metric",
         F.col("metric_a") < F.col("metric_b")
     )
     g = pairs.groupBy("metric_a", "metric_b").agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("ya").cast(DEC)).alias("sa"),
-        F.sum(F.col("yb").cast(DEC)).alias("sb"),
-        F.sum((F.col("ya") * F.col("ya")).cast(DEC)).alias("saa"),
-        F.sum((F.col("yb") * F.col("yb")).cast(DEC)).alias("sbb"),
-        F.sum((F.col("ya") * F.col("yb")).cast(DEC)).alias("sab"),
+        *moments("ya", "yb", names=_AB),
     ).where(F.col("n") >= min_hours)
     n = F.col("n")
-    num = (n * F.col("sab") - F.col("sa") * F.col("sb")).cast("double")
-    da = (n * F.col("saa") - F.col("sa") * F.col("sa")).cast("double")
-    db = (n * F.col("sbb") - F.col("sb") * F.col("sb")).cast("double")
+    num = co_moment("n", "sa", "sb", "sab").cast("double")
+    da = co_moment("n", "sa", "sa", "saa").cast("double")
+    db = co_moment("n", "sb", "sb", "sbb").cast("double")
     r = F.when((da > 0) & (db > 0), num / F.sqrt(da) / F.sqrt(db))
     return g.select(
         "metric_a", "metric_b", n.cast("long").alias("n_hours"),
@@ -871,11 +785,10 @@ def kendall_tau_pairs(series: DataFrame, key: str = "metric",
     single long series; at the pair-matrix shape the bounded
     quadratic over aggregates is simpler and shuffle-free beyond the
     one grid agg."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
@@ -950,13 +863,11 @@ def panel_fe(events: DataFrame, unit_col: str = "user_id",
     shuffle) → one global agg.  No window, no quadratic anything;
     entities with < min_days cells carry zero within variance and are
     dropped (they only inflate dof)."""
-    m = 1_000_000
-    scale = 10 ** int(value_decimals)
     cells = events.groupBy(
         F.col(unit_col).alias("u"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y"),
+        F.sum(snap("value", value_decimals)).alias("y"),
         F.count(F.lit(1)).alias("x"),
     )
     um = cells.groupBy("u").agg(
@@ -964,21 +875,21 @@ def panel_fe(events: DataFrame, unit_col: str = "user_id",
         F.count(F.lit(1)).alias("c"),
     ).where(F.col("c") >= min_days)
     j = cells.join(um, "u")
-    yt = F.round(
-        (F.col("y").cast("double")
-         - F.col("sy").cast("double") / F.col("c").cast("double")) * m
-    ).cast("long")
-    xt = F.round(
-        (F.col("x").cast("double")
-         - F.col("sx").cast("double") / F.col("c").cast("double")) * m
-    ).cast("long")
+    yt = snap(
+        F.col("y").cast("double")
+        - F.col("sy").cast("double") / F.col("c").cast("double"), 6
+    )
+    xt = snap(
+        F.col("x").cast("double")
+        - F.col("sx").cast("double") / F.col("c").cast("double"), 6
+    )
     p = j.select(yt.alias("yt"), xt.alias("xt"), "u")
     g = p.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("u").alias("ne"),
-        F.sum(F.col("xt").cast(DEC) * F.col("xt")).alias("sxx"),
-        F.sum(F.col("xt").cast(DEC) * F.col("yt")).alias("sxy"),
-        F.sum(F.col("yt").cast(DEC) * F.col("yt")).alias("syy"),
+        F.sum(wide("xt") * wide("xt")).alias("sxx"),
+        F.sum(wide("xt") * wide("yt")).alias("sxy"),
+        F.sum(wide("yt") * wide("yt")).alias("syy"),
     )
     sxx = F.col("sxx").cast("double")
     sxy = F.col("sxy").cast("double")
@@ -1026,12 +937,10 @@ def distance_corr(series: DataFrame, key: str = "metric",
     whole operator is k²·n² grid rows regardless of raw corpus size
     (the kendall_tau/mann_kendall bounded-quadratic policy).  Three
     hash aggs + two grid joins; nothing raw-sized."""
-    scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
@@ -1075,9 +984,9 @@ def distance_corr(series: DataFrame, key: str = "metric",
     tb = (n * n * F.col("b") - n * F.col("rb_i") - n * F.col("rb_j")
           + F.col("sb"))
     agg = full.groupBy(*pk, "n").agg(
-        F.sum(ta.cast(dec) * tb.cast(dec)).alias("sab"),
-        F.sum(ta.cast(dec) * ta.cast(dec)).alias("saa"),
-        F.sum(tb.cast(dec) * tb.cast(dec)).alias("sbb"),
+        F.sum(wide(ta) * wide(tb)).alias("sab"),
+        F.sum(wide(ta) * wide(ta)).alias("saa"),
+        F.sum(wide(tb) * wide(tb)).alias("sbb"),
     )
     den = F.sqrt(
         F.col("saa").cast("double") * F.col("sbb").cast("double")
@@ -1117,7 +1026,7 @@ def energy_distance_weekend(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -1186,11 +1095,10 @@ def tail_dependence(series: DataFrame, key: str = "metric",
 
     Scale: the pair-day grid is |metrics|²·|days| aggregates; the
     rank windows partition per (pair, metric) — bounded, parallel."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
@@ -1315,20 +1223,15 @@ def corr_grain_audit(series: DataFrame, key: str = "metric",
         g = series.groupBy(
             F.col(key).alias("k"),
             F.date_trunc(trunc, "ts").alias("b"),
-        ).agg(
-            F.sum(
-                F.round(F.col("value") * (10 ** int(value_decimals)))
-                .cast("long")
-            ).alias("y")
-        )
+        ).agg(F.sum(snap("value", value_decimals)).alias("y"))
         a = g.select(F.col("k").alias("metric_a"), "b",
                      F.col("y").alias("ya"))
         bb = g.select(F.col("k").alias("metric_b"), "b",
                       F.col("y").alias("yb"))
         p = a.join(bb, "b").where(F.col("metric_a") < F.col("metric_b"))
-        ya, yb = F.col("ya").cast(DEC), F.col("yb").cast(DEC)
+        ya, yb = wide("ya"), wide("yb")
         m = p.groupBy("metric_a", "metric_b").agg(
-            F.count(F.lit(1)).cast(DEC).alias("n"),
+            wide(F.count(F.lit(1))).alias("n"),
             F.sum(ya).alias("sx"), F.sum(yb).alias("sy"),
             F.sum(ya * ya).alias("sxx"), F.sum(yb * yb).alias("syy"),
             F.sum(ya * yb).alias("sxy"),
@@ -1380,7 +1283,6 @@ def xcorr_prewhitened(series: DataFrame, key: str = "metric",
     Scale: one grid hash-agg, two per-metric lag windows over grid
     rows, one k² aggregate-sized pair join per statistic — the
     corr_matrix_daily shape with a prewhitening stage in front."""
-    scale = 10 ** int(value_decimals)
     h = _hourly_cents(series, [key], value_decimals)
     w = Window.partitionBy(key).orderBy("hour_ts")
     lagged = h.select(
@@ -1396,9 +1298,9 @@ def xcorr_prewhitened(series: DataFrame, key: str = "metric",
     # but the RESIDUAL stream keeps only true lag-1 pairs (a residual
     # across a gap would mix horizons)
     pairs = lagged.where(F.col("yp").isNotNull())
-    u, v = F.col("yp").cast(DEC), F.col("y").cast(DEC)
+    u, v = wide("yp"), wide("y")
     mom = pairs.groupBy(key).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
+        wide(F.count(F.lit(1))).alias("n"),
         F.sum(u).alias("su"), F.sum(v).alias("sv"),
         F.sum(u * v).alias("suv"),
         F.sum(u * u).alias("suu"), F.sum(v * v).alias("svv"),
@@ -1420,11 +1322,10 @@ def xcorr_prewhitened(series: DataFrame, key: str = "metric",
         .select(
             key, "hour_ts",
             F.col("y").cast("long").alias("yc"),
-            F.round(
-                (F.col("y").cast("double")
-                 - F.col("rho") * F.col("yp").cast("double"))
-                * F.lit(1000.0)
-            ).cast("long").alias("e_u"),
+            snap(
+                F.col("y").cast("double")
+                - F.col("rho") * F.col("yp").cast("double"), 3
+            ).alias("e_u"),
         )
     )
 
@@ -1436,9 +1337,9 @@ def xcorr_prewhitened(series: DataFrame, key: str = "metric",
         p = a.join(b, "hour_ts").where(
             F.col("metric_a") < F.col("metric_b")
         )
-        xa, xb = F.col("xa").cast(DEC), F.col("xb").cast(DEC)
+        xa, xb = wide("xa"), wide("xb")
         m = p.groupBy("metric_a", "metric_b").agg(
-            F.count(F.lit(1)).cast(DEC).alias("n"),
+            wide(F.count(F.lit(1))).alias("n"),
             F.sum(xa).alias("sx"), F.sum(xb).alias("sy"),
             F.sum(xa * xb).alias("sxy"),
             F.sum(xa * xa).alias("sxx"), F.sum(xb * xb).alias("syy"),
@@ -1489,26 +1390,24 @@ def tier_info_loss(series: DataFrame, key: str = "metric",
 
     Scale: two grid hash-aggs (minute grain dominates), per-metric
     scalar algebra — no joins beyond aggregate-sized."""
-    scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     g = series.groupBy(
         F.col(key),
         F.date_trunc("minute", "ts").alias("b"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     hs = g.groupBy(
         key, F.date_trunc("hour", "b").alias("h")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("y").alias("s"),
-        F.sum(F.col("y").cast(dec) * F.col("y").cast(dec)).alias("sxx"),
+        F.sum(wide("y") * wide("y")).alias("sxx"),
     )
-    ssw_u = F.round(
+    ssw_u = wide(F.round(
         (F.col("sxx").cast("double")
          - F.col("s").cast("double") * F.col("s").cast("double")
            / F.col("n").cast("double")) * F.lit(1e6)
-    ).cast(dec)
+    ))
     per = hs.select(
         key, "n", "s", "sxx", ssw_u.alias("ssw_u")
     ).groupBy(key).agg(

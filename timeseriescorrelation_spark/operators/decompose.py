@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import moments, snap, wide
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 M = 1_000_000.0
@@ -45,7 +46,7 @@ def stl_lite(series: DataFrame, half_window_h: int = 84,
         series.select(
             *keys,
             F.date_trunc("hour", "ts").alias("bucket_ts"),
-            F.round(F.col("value") * 100).cast("long").alias("_vc"),
+            snap("value", 2).alias("_vc"),
         )
         .groupBy(*keys, "bucket_ts")
         .agg(
@@ -73,8 +74,7 @@ def stl_lite(series: DataFrame, half_window_h: int = 84,
         *keys, "bucket_ts", "_mean", "_trend",
         F.dayofweek("bucket_ts").alias("_dow"),
         F.hour("bucket_ts").alias("_hod"),
-        F.round((F.col("_mean") - F.col("_trend")) * F.lit(M))
-        .cast("long").alias("_du"),
+        snap(F.col("_mean") - F.col("_trend"), 6).alias("_du"),
     )
     # seasonal floors to integer micro-units: its value then has
     # EXACTLY six decimals, so the 6dp output rounding has no half-way
@@ -127,33 +127,31 @@ def dow_anova(series: DataFrame, keys: list[str] | None = None) -> DataFrame:
     hourly = series.groupBy(
         *keys, F.date_trunc("hour", "ts").alias("hour_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(snap("value", 2))
         .cast("long").alias("y")
     )
     per_g = hourly.groupBy(
         *keys, F.dayofweek("hour_ts").alias("dow")
     ).agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("ng"),
-        F.sum(F.col("y").cast("decimal(38,0)")).alias("sg"),
-        F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)")).alias("sxxg"),
+        *moments("y", names="ng sg sxxg"),
     )
-    tg_u = F.round(
+    tg_u = snap(
         (F.col("sg") * F.col("sg")).cast("double")
         / F.col("ng").cast("double")
-    ).cast("long")
+    )
     tot = per_g.select(*keys, "ng", "sg", "sxxg", tg_u.alias("tg")).groupBy(
         *keys
     ).agg(
         F.sum(F.col("ng")).alias("n"),
         F.count(F.lit(1)).cast("long").alias("k"),
         F.sum("sg").alias("s"),
-        F.sum("sxxg").cast("decimal(38,0)").alias("sxx"),
+        wide(F.sum("sxxg")).alias("sxx"),
         F.sum("tg").cast("long").alias("sum_tg"),
     )
-    sn_u = F.round(
+    sn_u = snap(
         (F.col("s") * F.col("s")).cast("double")
         / F.col("n").cast("double")
-    ).cast("long")
+    )
     n_l = F.col("n").cast("long")
     g = tot.select(
         *keys, n_l.alias("n_obs"), F.col("k").alias("k_groups"),
@@ -199,7 +197,7 @@ def stl_anomaly(series: DataFrame, half_window_h: int = 84,
     s = stl_lite(series, half_window_h=half_window_h, keys=keys)
     base = s.select(
         *keys, "bucket_ts", "mean_v", "resid",
-        F.round(F.col("resid") * 1e6).cast("long").alias("_ru"),
+        snap("resid", 6).alias("_ru"),
     )
     wr = Window.partitionBy(*keys).orderBy("_ru", "bucket_ts")
     ranked = base.withColumn("_rn", F.row_number().over(wr))
@@ -270,11 +268,10 @@ def dow_contrasts(series: DataFrame, key: str = "metric",
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
     scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     hourly = series.groupBy(
         F.col(key), F.date_trunc("hour", "ts").alias("hour_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long"))
+        F.sum(snap("value", value_decimals))
         .cast("long").alias("y")
     )
     ed = F.floor(
@@ -284,15 +281,12 @@ def dow_contrasts(series: DataFrame, key: str = "metric",
     per_g = hourly.groupBy(
         key, F.pmod(ed + F.lit(4), F.lit(7)).alias("dow")
     ).agg(
-        F.count(F.lit(1)).cast(dec).alias("ng"),
-        F.sum(F.col("y").cast(dec)).alias("sg"),
-        F.sum(F.col("y").cast(dec) * F.col("y").cast(dec))
-        .alias("sxxg"),
+        *moments("y", names="ng sg sxxg"),
     ).where(F.col("ng") >= int(min_per_group))
-    tg_u = F.round(
+    tg_u = wide(F.round(
         (F.col("sg") * F.col("sg")).cast("double")
         / F.col("ng").cast("double")
-    ).cast(dec)
+    ))
     g2 = per_g.select(key, "dow", "ng", "sg", "sxxg",
                       tg_u.alias("tg_u"))
     tot = g2.groupBy(key).agg(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap, wide
+
 P31 = (1 << 31) - 1  # Mersenne prime 2^31-1, the affine-hash modulus
 
 # legacy small constants (kept for the positional fingerprint, where
@@ -843,7 +845,7 @@ def connected_components_star(pairs: DataFrame, a_col: str = "id_a",
         r = ed.agg(
             F.count(F.lit(1)).alias("c"),
             F.sum(
-                F.xxhash64("u", "v").cast("decimal(38,0)")
+                wide(F.xxhash64("u", "v"))
             ).alias("h"),
         ).first()
         return (r["c"], r["h"])
@@ -1001,7 +1003,7 @@ def minhash_error_audit(docs: DataFrame, n: int = 3,
         F.col("inter_n").cast("double")
         / F.col("union_n").cast("double")
     )
-    eu = F.round((est - true) * F.lit(1e6)).cast("long")
+    eu = snap(est - true, 6)
     t = j.select(eu.alias("eu"))
     g = t.agg(
         F.count(F.lit(1)).alias("n_pairs"),

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
+
 M = 1_000_000
 
 # Benford expected first-digit probabilities log10(1 + 1/d), hardcoded
@@ -55,11 +57,10 @@ def ks_drift_daily(series: DataFrame, keys: list[str] | None = None,
     with fewer than min_n points on either side) are dropped — a
     1-point baseline is not a distribution."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         *keys,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     cur = pt.select(*keys, "day_ts", "c", F.lit(1).alias("is_b"))
     prev = pt.select(
@@ -120,10 +121,8 @@ def entropy_daily(events: DataFrame, cat_col: str = "event_type") -> DataFrame:
         F.date_trunc("day", "ts").alias("day_ts"),
         F.col(cat_col).alias("cat"),
     ).agg(F.count(F.lit(1)).alias("c"))
-    term_u = F.round(
-        F.col("c").cast("double") * F.log(F.col("c").cast("double"))
-        * F.lit(M)
-    ).cast("long")
+    c = F.col("c").cast("double")
+    term_u = snap(c * F.log(c), 6)
     g = cnt.groupBy("day_ts").agg(
         F.sum("c").alias("n"),
         F.count(F.lit(1)).alias("n_types"),
@@ -156,8 +155,7 @@ def benford_check(series: DataFrame, keys: list[str] | None = None,
     χ² terms are micro-snapped before the sum.  χ²(8 dof) > 20.1 is
     the usual 99% nonconformance call, left to the reader."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
-    c = F.round(F.abs(F.col("value")) * scale).cast("long")
+    c = snap(F.abs(F.col("value")), value_decimals)
     d = series.select(
         *keys, c.alias("c")
     ).where(F.col("c") > 0).select(
@@ -176,10 +174,8 @@ def benford_check(series: DataFrame, keys: list[str] | None = None,
         F.coalesce(F.col("o"), F.lit(0)).alias("o"),
     )
     exp = F.col("n").cast("double") * F.col("p")
-    term_u = F.round(
-        (F.col("o").cast("double") - exp) * (F.col("o").cast("double") - exp)
-        / exp * F.lit(M)
-    ).cast("long")
+    dev = F.col("o").cast("double") - exp
+    term_u = snap(dev * dev / exp, 6)
     g = grid.groupBy(*keys).agg(
         F.max("n").alias("n"), F.sum(term_u).alias("chi2_u")
     )
@@ -224,7 +220,7 @@ def psi_daily(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc("day", "ts").alias("day_ts"),
-        F.round(F.col("value") * 100).cast("long").alias("_v"),
+        snap("value", 2).alias("_v"),
     )
     edges = v.groupBy(*keys, "day_ts").agg(
         F.percentile("_v", F.lit(pcts).cast("array<double>")).alias("_edges")
@@ -276,7 +272,7 @@ def psi_daily(series: DataFrame, keys: list[str] | None = None,
         ((F.col("c_t") + 1) * (F.col("n_b") + b)).cast("double")
         / ((F.col("c_b") + 1) * (F.col("n_t") + b)).cast("double")
     )
-    term_u = F.round((p_num - q_num) * lnr * F.lit(float(M))).cast("long")
+    term_u = snap((p_num - q_num) * lnr, 6)
     return (
         jt.select(*keys, "day_ts", "n_t", "n_b", term_u.alias("_t"))
         .groupBy(*keys, "day_ts")
@@ -317,7 +313,7 @@ def js_drift_daily(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc("day", "ts").alias("day_ts"),
-        F.round(F.col("value") * 100).cast("long").alias("_v"),
+        snap("value", 2).alias("_v"),
     )
     edges = v.groupBy(*keys, "day_ts").agg(
         F.percentile("_v", F.lit(pcts).cast("array<double>")).alias("_edges")
@@ -376,7 +372,7 @@ def js_drift_daily(series: DataFrame, keys: list[str] | None = None,
         * F.log((2 * F.col("c_b") * F.col("n_t")).cast("double")
                 / mix.cast("double")),
     ).otherwise(F.lit(0.0))
-    term_u = F.round((t_p + t_q) / 2 * F.lit(float(M))).cast("long")
+    term_u = snap((t_p + t_q) / 2, 6)
     return (
         jt.select(*keys, "day_ts", "n_t", "n_b", term_u.alias("_t"))
         .groupBy(*keys, "day_ts")
@@ -421,7 +417,7 @@ def emd_drift_daily(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc("day", "ts").alias("day_ts"),
-        F.round(F.col("value") * 100).cast("long").alias("_v"),
+        snap("value", 2).alias("_v"),
     )
     edges = v.groupBy(*keys, "day_ts").agg(
         F.percentile("_v", F.lit(pcts).cast("array<double>")).alias("_edges")
@@ -525,7 +521,7 @@ def psi_fixed_hourly(series: DataFrame, edges: list[float],
     keys = keys or ["metric"]
     b_n = len(edges) + 1
     edges_c = [int(round(e * 100)) for e in edges]
-    v = F.round(F.col("value") * 100).cast("long")
+    v = snap("value", 2)
     bin_id = F.lit(1)
     for e in edges_c:
         bin_id = bin_id + F.when(v > e, 1).otherwise(0)
@@ -557,7 +553,7 @@ def psi_fixed_hourly(series: DataFrame, edges: list[float],
         t = (
             (F.lit(b_n) * cp - nd) / (F.lit(b_n) * nd)
         ) * F.log(F.lit(b_n) * cp / nd)
-        terms.append(F.round(t * F.lit(1e6)).cast("long"))
+        terms.append(snap(t, 6))
     out = per_hour.withColumn("_n", n)
     total = terms[0]
     for t in terms[1:]:

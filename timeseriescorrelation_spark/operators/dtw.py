@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
+
 
 def dtw_daily_pairs(series: DataFrame, key: str = "metric",
                     value_decimals: int = 2, band: int = 3,
@@ -44,9 +46,7 @@ def dtw_daily_pairs(series: DataFrame, key: str = "metric",
         F.date_trunc("day", "ts").alias("day_ts"),
         F.hour("ts").alias("h"),
     ).agg(
-        F.sum(
-            F.round(F.col("value") * scale).cast("long")
-        ).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     prof = hourly.groupBy("k", "day_ts").agg(
         F.array_sort(F.collect_list(F.struct("h", "y"))).alias("hy")

@@ -32,6 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    idiv,
+    moments,
+    wide,
+)
+
 DAMP_NUM, DAMP_DEN = 85, 100   # d = 0.85 as an exact rational
 BASE_U = 150_000               # floor((1-d)·10⁶)
 M_U = 1_000_000
@@ -285,7 +292,6 @@ def degree_assortativity(edges: DataFrame, src_col: str = "src",
     Scale notes (100 TB): distinct-edge dedup + one degree hash-agg +
     two shuffle joins of the edge list against the |nodes|-row degree
     table + a 1-row aggregate — no windows, no iteration."""
-    dec = "decimal(38,0)"
     # the deduped edge list is referenced five times downstream (sym
     # twice, degree agg, both sides of the moment join) — without a
     # checkpoint the whole upstream pair-construction pipeline
@@ -312,24 +318,15 @@ def degree_assortativity(edges: DataFrame, src_col: str = "src",
             "b",
         )
     )
-    da = F.col("da").cast(dec)
-    db = F.col("db").cast(dec)
-    m = j.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(da).alias("sx"),
-        F.sum(db).alias("sy"),
-        F.sum(da * da).alias("sxx"),
-        F.sum(db * db).alias("syy"),
-        F.sum(da * db).alias("sxy"),
-    )
+    m = j.agg(*moments("da", "db"))
     nodes = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.max("d").alias("max_degree"),
     )
-    n, sx, sy = (F.col(c) for c in ("n", "sx", "sy"))
-    num = (n * F.col("sxy") - sx * sy).cast("double")
-    dx = (n * F.col("sxx") - sx * sx).cast("double")
-    dy = (n * F.col("syy") - sy * sy).cast("double")
+    n = F.col("n")
+    num = co_moment("n", "sx", "sy", "sxy").cast("double")
+    dx = co_moment("n", "sx", "sx", "sxx").cast("double")
+    dy = co_moment("n", "sy", "sy", "syy").cast("double")
     return m.crossJoin(F.broadcast(nodes)).select(
         F.col("n_nodes").cast("long").alias("n_nodes"),
         (n.cast("long") / 2).cast("long").alias("n_edges"),
@@ -819,19 +816,18 @@ def hits_fixedpoint(edges: DataFrame, n_iter: int = 2,
     from h_0 = 1.  Per-round normalization (the textbook form) would
     need a float divide inside the loop; because each round is
     HOMOGENEOUS (scaling h scales a and h by the same factor), all K
-    rounds run in pure int64 and ONE final integer division
-    h·10⁶ DIV Σh (decimal(38,0) / hugeint for the product) yields the
-    same micro-unit ranking bit-exactly in any engine — the
-    pagerank_fixedpoint discipline applied to the two-sided iteration.
+    rounds run in widened integers (`functions.exact`) and ONE final
+    integer division h·10⁶ DIV Σh yields the same micro-unit ranking
+    bit-exactly in any engine — the pagerank_fixedpoint discipline
+    applied to the two-sided iteration.
 
     Scale notes: per round, two equi-joins of the grouped edge list
     against a |V|-row score table + two hash-aggs — the PageRank loop
     run twice; K fixed, localCheckpoint seam as connected_components
     for long chains.  Integer bound: scores grow like (σ₁²)^K — with
     count weights W_tot per node-neighborhood, h_K ~ (deg·w)^{2K};
-    int64 holds 2 rounds at w·deg ≲ 3·10⁴ per hop (ANSI mode errors
-    loudly beyond); widen the score column to decimal(38,0) beyond
-    (documented seam, same as pagerank)."""
+    the widened scores hold 2 rounds at w·deg ≲ 10⁹ per hop (ANSI
+    mode errors loudly beyond)."""
     e = edges.groupBy(src_col, dst_col).agg(
         F.sum(w_col).cast("long").alias("w")
     ).select(
@@ -848,34 +844,27 @@ def hits_fixedpoint(edges: DataFrame, n_iter: int = 2,
         a = (
             e.join(h, e["src"] == h["node"])
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("h")).alias("a"))
+            .agg(F.sum(wide("w") * wide("h")).alias("a"))
         )
         h = (
             e.join(a, e["dst"] == a["node"])
             .groupBy(F.col("src").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("a")).alias("h"))
+            .agg(F.sum(wide("w") * wide("a")).alias("h"))
         )
     hf = nodes.join(h, "node", "left").select(
-        "node", F.coalesce("h", F.lit(0)).cast("long").alias("h")
+        "node", wide(F.coalesce("h", F.lit(0))).alias("h")
     )
     af = nodes.join(a, "node", "left").select(
-        "node", F.coalesce("a", F.lit(0)).cast("long").alias("a")
+        "node", wide(F.coalesce("a", F.lit(0))).alias("a")
     )
     j = hf.join(af, "node")
-    tot = j.agg(
-        F.sum("h").cast("decimal(38,0)").alias("th"),
-        F.sum("a").cast("decimal(38,0)").alias("ta"),
-    )
+    tot = j.agg(F.sum("h").alias("th"), F.sum("a").alias("ta"))
     return (
         j.crossJoin(F.broadcast(tot))
         .select(
             "node",
-            F.expr(
-                "cast(cast(h as decimal(38,0)) * 1000000 div th as bigint)"
-            ).alias("hub_u"),
-            F.expr(
-                "cast(cast(a as decimal(38,0)) * 1000000 div ta as bigint)"
-            ).alias("auth_u"),
+            idiv(F.col("h") * M_U, "th").alias("hub_u"),
+            idiv(F.col("a") * M_U, "ta").alias("auth_u"),
         )
     )
 
@@ -907,7 +896,6 @@ def modularity(edges: DataFrame, labels: DataFrame,
     total crossJoin (broadcast by construction).  Communities with no
     internal edge (sync-LPA 2-cycles can strand one) still appear via
     the left join, i_c = 0."""
-    dec = "decimal(38,0)"
     e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
     und = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -915,7 +903,7 @@ def modularity(edges: DataFrame, labels: DataFrame,
         .distinct()
     )
     lab = labels.select("node", "lbl")
-    tot = und.agg(F.count(F.lit(1)).cast(dec).alias("M"))
+    tot = und.agg(wide(F.count(F.lit(1))).alias("M"))
     degs = und.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -924,7 +912,7 @@ def modularity(edges: DataFrame, labels: DataFrame,
         .groupBy("lbl")
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
-            F.sum("deg").cast(dec).alias("d_sum"),
+            wide(F.sum("deg")).alias("d_sum"),
         )
     )
     la = lab.select(F.col("node").alias("a"), F.col("lbl").alias("la"))
@@ -934,9 +922,9 @@ def modularity(edges: DataFrame, labels: DataFrame,
         .join(lb, "b")
         .where(F.col("la") == F.col("lb"))
         .groupBy(F.col("la").alias("lbl"))
-        .agg(F.count(F.lit(1)).cast(dec).alias("i_c"))
+        .agg(wide(F.count(F.lit(1))).alias("i_c"))
     )
-    i_c = F.coalesce(F.col("i_c"), F.lit(0).cast(dec))
+    i_c = F.coalesce(F.col("i_c"), wide(F.lit(0)))
     return (
         dc.join(ic, "lbl", "left")
         .crossJoin(F.broadcast(tot))

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
+
 RRF_C = 60
 NANO = 1_000_000_000.0
 
@@ -42,8 +44,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 20,
     def term(rank_col):
         return F.when(
             rank_col.isNotNull(),
-            F.round(F.lit(NANO) / (F.lit(int(c)) + rank_col).cast("double"))
-            .cast("long"),
+            snap(F.lit(NANO) / (F.lit(int(c)) + rank_col).cast("double")),
         ).otherwise(F.lit(0))
 
     return (

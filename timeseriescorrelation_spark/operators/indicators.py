@@ -34,10 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.operators.crossmetric import (
-    DEC,
-    _hourly_cents,
-)
+from timeseriescorrelation_spark.functions.exact import snap, wide
+from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 # 2·ln 2 − 1 and 4·ln 2, pinned as literals so both engines use the
 # identical double (not their own libm ln(2)).
@@ -51,13 +49,10 @@ def _dbl(c):
 
 def _daily_cents(series: DataFrame, key: str,
                  value_decimals: int) -> DataFrame:
-    scale = 10 ** int(value_decimals)
     return series.groupBy(
         F.col(key), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(
-            F.round(F.col("value") * scale).cast("long")
-        ).cast("long").alias("y")
+        F.sum(snap("value", value_decimals)).cast("long").alias("y")
     )
 
 
@@ -135,9 +130,8 @@ def bollinger_daily(series: DataFrame, key: str = "metric",
     g = d.select(
         F.col(key), "day_ts", F.col("y"),
         F.count(F.lit(1)).over(wf).alias("n"),
-        F.sum(F.col("y").cast(DEC)).over(wf).alias("s"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).over(wf)
-        .alias("q"),
+        F.sum(wide("y")).over(wf).alias("s"),
+        F.sum(wide("y") * wide("y")).over(wf).alias("q"),
     ).where(F.col("n") >= window)
     nd = _dbl(F.col("n"))
     mean = _dbl(F.col("s")) / nd
@@ -146,8 +140,8 @@ def bollinger_daily(series: DataFrame, key: str = "metric",
         / (nd * nd)
     )
     # integer breach decision: dev = n·y − Σ, spread = n·Σy² − Σ²
-    dev = F.col("n").cast(DEC) * F.col("y") - F.col("s")
-    spread = F.col("n").cast(DEC) * F.col("q") - F.col("s") * F.col("s")
+    dev = wide("n") * wide("y") - F.col("s")
+    spread = wide("n") * wide("q") - F.col("s") * F.col("s")
     kk = F.lit(int(k) * int(k))
     return g.select(
         key, "day_ts", F.col("n").cast("long").alias("n_win"),
@@ -192,9 +186,8 @@ def stochastic_k(series: DataFrame, key: str = "metric",
     t = d.select(
         F.col(key), "day_ts",
         F.count(F.lit(1)).over(wf).alias("n_win"),
-        (F.col("y") - F.min("y").over(wf)).cast(DEC).alias("num"),
-        (F.max("y").over(wf) - F.min("y").over(wf)).cast(DEC)
-        .alias("den"),
+        wide(F.col("y") - F.min("y").over(wf)).alias("num"),
+        wide(F.max("y").over(wf) - F.min("y").over(wf)).alias("den"),
     )
     w1 = Window.partitionBy(key).orderBy("day_ts")
     t2 = t.select(
@@ -215,7 +208,7 @@ def stochastic_k(series: DataFrame, key: str = "metric",
         + F.col("n2") * F.col("den") * F.col("d3")
         + F.col("n3") * F.col("den") * F.col("d2")
     )
-    dden = F.lit(3).cast(DEC) * F.col("den") * F.col("d2") * F.col("d3")
+    dden = wide(F.lit(3)) * F.col("den") * F.col("d2") * F.col("d3")
     return t2.select(
         key, "day_ts", F.col("n_win").cast("long").alias("n_win"),
         F.when(
@@ -266,12 +259,8 @@ def range_volatility(series: DataFrame, key: str = "metric",
         F.min("y").alias("l"),
         F.expr("max_by(y, hour_ts)").alias("c"),
     ).where((F.col("n_hours") >= min_hours) & (F.col("l") > 0))
-    lhl = F.round(
-        F.log(_dbl(F.col("h")) / _dbl(F.col("l"))) * F.lit(1e8)
-    ).cast("long")
-    lco = F.round(
-        F.log(_dbl(F.col("c")) / _dbl(F.col("o"))) * F.lit(1e8)
-    ).cast("long")
+    lhl = snap(F.log(_dbl(F.col("h")) / _dbl(F.col("l"))), 8)
+    lco = snap(F.log(_dbl(F.col("c")) / _dbl(F.col("o"))), 8)
     t = g.select(
         F.col(key), "day_ts", "n_hours", "o", "h", "l", "c",
         lhl.alias("lhl"), lco.alias("lco"),
@@ -315,7 +304,7 @@ def ohlc_daily(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("hour", "ts").alias("hour_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     g = h.groupBy(
         "metric", F.date_trunc("day", "hour_ts").alias("day_ts")

@@ -28,9 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap, wide
 from timeseriescorrelation_spark.operators.dedup import tokenize
-
-M = 1_000_000.0
 
 
 def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -56,13 +55,13 @@ def doc_surprisal(docs: DataFrame, text_col: str = "text",
         .crossJoin(F.broadcast(tot))
         .select(
             "doc_id",
-            F.round(
+            snap(
                 F.log(
                     F.col("n_total").cast("double")
                     / F.col("c").cast("double")
-                )
-                * F.lit(M)
-            ).cast("long").alias("su"),
+                ),
+                6,
+            ).alias("su"),
         )
     )
     g = per_tok.groupBy("doc_id").agg(
@@ -129,13 +128,13 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
         .crossJoin(F.broadcast(vocab_n))
         .select(
             "doc_id",
-            F.round(
+            snap(
                 F.log(
                     (F.col("c_a") + F.col("v")).cast("double")
                     / (F.col("c_ab") + F.lit(1)).cast("double")
-                )
-                * F.lit(M)
-            ).cast("long").alias("su"),
+                ),
+                6,
+            ).alias("su"),
         )
     )
     g = per_bg.groupBy("doc_id").agg(
@@ -183,17 +182,14 @@ def source_drift(docs: DataFrame, text_col: str = "text",
     # round(cs · ln((cs·N)/(c·ns)) · 1e6) keeps the weighting exact.
     # The integer products go through decimal(38,0) (hugeint in the
     # oracle): cs·N at a 10¹⁴-token corpus would overflow int64
-    dec = "decimal(38,0)"
-    term_u = F.round(
+    term_u = snap(
         F.col("cs").cast("double")
         * F.log(
-            (F.col("cs").cast(dec) * F.col("n_total").cast(dec))
-            .cast("double")
-            / (F.col("c").cast(dec) * F.col("ns").cast(dec))
-            .cast("double")
-        )
-        * F.lit(M)
-    ).cast("long")
+            (wide("cs") * wide("n_total")).cast("double")
+            / (wide("c") * wide("ns")).cast("double")
+        ),
+        6,
+    )
     g = j.groupBy("source").agg(
         F.max("ns").alias("n_toks"),
         F.sum(term_u).alias("ksum"),
@@ -257,7 +253,6 @@ def collocations_pmi(docs: DataFrame, min_pair_n: int = 5,
     # depend on the reporting threshold
     n_pair = pairs_all.agg(F.sum("pair_n").alias("n_pair"))
     pairs = pairs_all.where(F.col("pair_n") >= int(min_pair_n))
-    dec = "decimal(38,0)"
     j = (
         pairs.join(
             uni.select(F.col("tok").alias("tok_a"), F.col("c").alias("ca")),
@@ -270,21 +265,13 @@ def collocations_pmi(docs: DataFrame, min_pair_n: int = 5,
         .crossJoin(F.broadcast(n_tok))
         .crossJoin(F.broadcast(n_pair))
     )
-    pmi_u = F.round(
+    pmi_u = snap(
         F.log(
-            (
-                F.col("pair_n").cast(dec)
-                * F.col("n_tok").cast(dec)
-                * F.col("n_tok").cast(dec)
-            ).cast("double")
-            / (
-                F.col("n_pair").cast(dec)
-                * F.col("ca").cast(dec)
-                * F.col("cb").cast(dec)
-            ).cast("double")
-        )
-        * F.lit(M)
-    ).cast("long")
+            (wide("pair_n") * wide("n_tok") * wide("n_tok")).cast("double")
+            / (wide("n_pair") * wide("ca") * wide("cb")).cast("double")
+        ),
+        6,
+    )
     return j.select(
         "tok_a", "tok_b",
         F.col("pair_n").cast("long").alias("pair_n"),
@@ -387,16 +374,13 @@ def zipf_fit(docs: DataFrame, top_k: int = 100,
     x = F.log(F.col("r").cast("double"))
     y = F.log(F.col("f").cast("double"))
 
-    def snap(c):
-        return F.round(c * F.lit(1e6)).cast("long")
-
     m = ranked.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap(x)).alias("sx"),
-        F.sum(snap(x * x)).alias("sxx"),
-        F.sum(snap(y)).alias("sy"),
-        F.sum(snap(y * y)).alias("syy"),
-        F.sum(snap(x * y)).alias("sxy"),
+        F.sum(snap(x, 6)).alias("sx"),
+        F.sum(snap(x * x, 6)).alias("sxx"),
+        F.sum(snap(y, 6)).alias("sy"),
+        F.sum(snap(y * y, 6)).alias("syy"),
+        F.sum(snap(x * y, 6)).alias("sxy"),
         F.min(F.when(F.col("r") == 1, F.col("tok"))).alias("top_token"),
     )
     n = F.col("n").cast("double")
@@ -501,19 +485,17 @@ def dsir_weights(docs: DataFrame, target_source: str,
     )
     model = per_bkt.crossJoin(F.broadcast(tot)).select(
         "bkt",
-        F.round(
-            (
-                F.log(
-                    (F.col("ct") + 1).cast("double")
-                    / (F.col("nt") + n_buckets).cast("double")
-                )
-                - F.log(
-                    (F.col("cr") + 1).cast("double")
-                    / (F.col("nr") + n_buckets).cast("double")
-                )
+        snap(
+            F.log(
+                (F.col("ct") + 1).cast("double")
+                / (F.col("nt") + n_buckets).cast("double")
             )
-            * M
-        ).cast("long").alias("lr_u"),
+            - F.log(
+                (F.col("cr") + 1).cast("double")
+                / (F.col("nr") + n_buckets).cast("double")
+            ),
+            6,
+        ).alias("lr_u"),
     )
     return (
         bucketed.where(~is_t)
@@ -600,14 +582,12 @@ def lang_temperature_weights(docs: DataFrame, alpha: float = 0.3,
     )
     tot = g.agg(F.sum("n_docs").alias("nn"))
     j = g.crossJoin(F.broadcast(tot))
-    lnp_u = F.round(
-        F.log(F.col("n_docs").cast("double") / F.col("nn").cast("double"))
-        * F.lit(1e6)
-    ).cast("long")
-    e_u = F.round(
-        F.exp(F.lit(float(alpha)) * (lnp_u.cast("double") / F.lit(1e6)))
-        * F.lit(1e9)
-    ).cast("long")
+    lnp_u = snap(
+        F.log(F.col("n_docs").cast("double") / F.col("nn").cast("double")), 6
+    )
+    e_u = snap(
+        F.exp(F.lit(float(alpha)) * (lnp_u.cast("double") / F.lit(1e6))), 9
+    )
     t = j.select(
         "lang", "n_docs", "nn", e_u.alias("eu"),
     )

@@ -17,8 +17,8 @@ Exactness recipe: features are exact rationals of integers (chars /
 grid straight out of the sigmoid, then every per-row IRLS term
 (gradient components (y−μ)·x_j, Hessian entries w·x_j·x_k) is ONE
 double expression over the snapped μ, SNAPPED again to 1e-9 units,
-so the cross-row sums are exact decimal(38,0) integers in both
-engines and the 3×3 Cramer solve is a shared double tree over those
+so the cross-row sums are exact widened integers (`functions.exact`)
+in both engines and the 3×3 Cramer solve is a shared double tree over those
 integers (the harmonic_regression pattern; the snap scale cancels
 inside H⁻¹g).  Residual cross-engine risk is exactly ONE surface:
 round(μ·1e9) where the sigmoid differs by <1 ulp of libm exp() —
@@ -37,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEC = "decimal(38,0)"
+from timeseriescorrelation_spark.functions.exact import wide
+
 SNAP = 1.0e9
 
 
@@ -78,27 +79,16 @@ def _newton_step(feat: DataFrame, beta: DataFrame) -> DataFrame:
     w = mu * (F.lit(1.0) - mu)
     yd = F.col("y").cast("double")
 
-    def snap(expr, name):
-        return F.round(expr * F.lit(SNAP)).cast(DEC).alias(name)
-
     x1, x2 = F.col("x1"), F.col("x2")
+    terms = {
+        "g0": yd - mu, "g1": (yd - mu) * x1, "g2": (yd - mu) * x2,
+        "h00": w, "h01": w * x1, "h02": w * x2,
+        "h11": w * x1 * x1, "h12": w * x1 * x2, "h22": w * x2 * x2,
+    }
     g = j.select(
-        snap(yd - mu, "g0"),
-        snap((yd - mu) * x1, "g1"),
-        snap((yd - mu) * x2, "g2"),
-        snap(w, "h00"),
-        snap(w * x1, "h01"),
-        snap(w * x2, "h02"),
-        snap(w * x1 * x1, "h11"),
-        snap(w * x1 * x2, "h12"),
-        snap(w * x2 * x2, "h22"),
-    ).groupBy().agg(
-        *[F.sum(c).alias(c)
-          for c in ("g0", "g1", "g2", "h00", "h01", "h02",
-                    "h11", "h12", "h22")]
-    )
-    d = {c: F.col(c).cast("double") for c in
-         ("g0", "g1", "g2", "h00", "h01", "h02", "h11", "h12", "h22")}
+        *[wide(F.round(e * F.lit(SNAP))).alias(c) for c, e in terms.items()]
+    ).groupBy().agg(*[F.sum(c).alias(c) for c in terms])
+    d = {c: F.col(c).cast("double") for c in terms}
     det = (
         d["h00"] * (d["h11"] * d["h22"] - d["h12"] * d["h12"])
         - d["h01"] * (d["h01"] * d["h22"] - d["h12"] * d["h02"])

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
 from timeseriescorrelation_spark.operators.acf import hourly_counts_dense
 
 
@@ -146,9 +147,8 @@ def matrix_profile_daily(series: DataFrame,
     den_j = F.lit(m) * F.col("sxx_j") - F.col("sx_j") * F.col("sx_j")
     rho = num / F.sqrt(den_i.cast("double") * den_j.cast("double"))
     d2 = F.greatest(F.lit(0.0), F.lit(2.0 * m) * (F.lit(1.0) - rho))
-    snap = F.round(F.sqrt(d2) * F.lit(1e6)).cast("long")
     scored = pr.where((den_i > 0) & (den_j > 0)).select(
-        *keys, "day_ts", "i", "j", snap.alias("dsnap")
+        *keys, "day_ts", "i", "j", snap(F.sqrt(d2), 6).alias("dsnap")
     )
     both = scored.unionByName(
         scored.select(

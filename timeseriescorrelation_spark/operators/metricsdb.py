@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
+
 
 def _dbl(c):
     return c.cast("double")
@@ -96,7 +98,7 @@ def histogram_quantile_est(series: DataFrame, edges_cents: list[int],
     ≤|buckets|-row window per group."""
     scale = 10 ** int(value_decimals)
     edges = sorted(int(e) for e in edges_cents)
-    c = F.round(F.col("value") * scale).cast("long")
+    c = snap("value", value_decimals)
     b = sum(
         (c >= F.lit(e)).cast("int") for e in edges
     )  # 0..len(edges): number of edges passed

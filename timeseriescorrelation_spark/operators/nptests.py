@@ -8,12 +8,8 @@ the parametric mean comparison, kruskal_wallis is its rank-based twin
 independence, and the sign test is the paired nonparametric
 contrast.
 
-Exactness recipe (house style): every count/rank/moment accumulates as
-an exact integer (decimal(38,0) on Spark / hugeint on DuckDB); each
-per-group rational is snapped to integer micro-units (round for one
-double divide of exact ints, floor-DIV where the quotient itself must
-be engine-exact), the micro-units sum exactly, and the final statistic
-is ONE identical double expression, rounded to 6 dp.
+Exactness: `functions.exact`; a per-group rational is snapped to
+micro-units, or floor-DIVed where the quotient itself must be exact.
 
 Day-of-week is used as a GROUPING only and never output by the test
 operators: Spark's dayofweek() is 1-7 Sunday-first and DuckDB's is
@@ -33,10 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.operators.crossmetric import (
-    DEC,
-    _hourly_cents,
-)
+from timeseriescorrelation_spark.functions.exact import idiv, snap, wide
+from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
 def _dbl(c):
@@ -66,23 +60,22 @@ def chi2_independence(events: DataFrame, row_col: str = "event_type",
     ).agg(F.count(F.lit(1)).alias("o"))
     rows = cells.groupBy("rv").agg(F.sum("o").alias("r"))
     cols = cells.groupBy("cv").agg(F.sum("o").alias("c"))
-    tot = cells.agg(F.sum("o").cast(DEC).alias("nn"))
+    tot = cells.agg(wide(F.sum("o")).alias("nn"))
     full = (
         rows.crossJoin(F.broadcast(cols))
         .join(cells, ["rv", "cv"], "left")
         .crossJoin(F.broadcast(tot))
         .select(
             "rv", "cv", "nn",
-            F.col("r").cast(DEC).alias("r"),
-            F.col("c").cast(DEC).alias("c"),
-            F.coalesce(F.col("o"), F.lit(0)).cast(DEC).alias("o"),
+            wide("r").alias("r"),
+            wide("c").alias("c"),
+            wide(F.coalesce(F.col("o"), F.lit(0))).alias("o"),
         )
     )
     num = F.col("nn") * F.col("o") - F.col("r") * F.col("c")
-    term_u = F.round(
-        _dbl(num * num)
-        / _dbl(F.col("nn") * F.col("r") * F.col("c")) * F.lit(1e6)
-    ).cast("long")
+    term_u = snap(
+        _dbl(num * num) / _dbl(F.col("nn") * F.col("r") * F.col("c")), 6
+    )
     g = full.select("rv", "cv", "nn", term_u.alias("t_u")).groupBy().agg(
         F.max("nn").cast("long").alias("n_events"),
         F.countDistinct("rv").alias("n_rows"),
@@ -130,19 +123,17 @@ def kruskal_wallis(series: DataFrame, key: str = "metric",
         .alias("r2"),
     )
     per_g = ranked.groupBy(key, "dow").agg(
-        F.count(F.lit(1)).cast(DEC).alias("ng"),
-        F.sum(F.col("r2").cast(DEC)).alias("r2g"),
+        wide(F.count(F.lit(1))).alias("ng"),
+        F.sum(wide("r2")).alias("r2g"),
     )
-    t_u = F.expr(
-        "CAST((r2g * r2g * CAST(250000 AS DECIMAL(38,0))) DIV ng AS LONG)"
-    )
+    t_u = idiv(F.col("r2g") * F.col("r2g") * wide(F.lit(250000)), "ng")
     per_m = per_g.select(key, "ng", t_u.alias("t_u")).groupBy(key).agg(
-        F.sum("ng").cast(DEC).alias("n"),
+        wide(F.sum("ng")).alias("n"),
         F.count(F.lit(1)).cast("long").alias("k_groups"),
         F.sum("t_u").alias("s_u"),
     )
     ties = h.groupBy(key, "y").agg(
-        F.count(F.lit(1)).cast(DEC).alias("t")
+        wide(F.count(F.lit(1))).alias("t")
     ).groupBy(key).agg(
         F.sum(
             F.col("t") * F.col("t") * F.col("t") - F.col("t")
@@ -231,13 +222,12 @@ def grubbs_daily(series: DataFrame, key: str = "metric",
     pt = series.select(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
-    dec = "decimal(38,0)"
     agg = pt.groupBy("metric", "day_ts").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("c").alias("t_tot"),
-        F.sum(F.col("c").cast(dec) * F.col("c").cast(dec)).alias("sxx"),
+        F.sum(wide("c") * wide("c")).alias("sxx"),
         F.min("c").alias("c_min"),
         F.max("c").alias("c_max"),
     ).where(F.col("n") >= int(min_n))
@@ -274,11 +264,10 @@ def _weekend_daily(series: DataFrame, key: str,
     family (Welch t / Mann-Whitney / energy distance)."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -300,7 +289,6 @@ def welch_t_weekend(series: DataFrame, key: str = "metric",
 
     Exact integer moments per arm (Σy, Σy² in decimal38); t and df
     are one shared double tree.  mean_diff in value units."""
-    dec = "decimal(38,0)"
     dd = _weekend_daily(series, key, value_decimals)
     agg = dd.groupBy("m").agg(
         F.sum(F.lit(1) - F.col("g")).alias("nx"),
@@ -313,13 +301,13 @@ def welch_t_weekend(series: DataFrame, key: str = "metric",
         ).alias("sy"),
         F.sum(
             F.when(F.col("g") == 0,
-                   F.col("y").cast(dec) * F.col("y").cast(dec))
-            .otherwise(F.lit(0).cast(dec))
+                   wide("y") * wide("y"))
+            .otherwise(wide(F.lit(0)))
         ).alias("sxx"),
         F.sum(
             F.when(F.col("g") == 1,
-                   F.col("y").cast(dec) * F.col("y").cast(dec))
-            .otherwise(F.lit(0).cast(dec))
+                   wide("y") * wide("y"))
+            .otherwise(wide(F.lit(0)))
         ).alias("syy"),
     ).where(
         (F.col("nx") >= int(min_days)) & (F.col("ny") >= int(min_days))
@@ -444,11 +432,10 @@ def wilcoxon_signed(series: DataFrame, key: str = "metric",
     grid against itself shifted `lag_days` on (metric, day), one rank
     window over per-metric day counts (aggregate-sized partitions),
     two hash-aggs.  No raw-row pair space anywhere."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     prev = d.select(
         "m",
@@ -559,8 +546,8 @@ def brown_forsythe_weekend(series: DataFrame, key: str = "metric",
     )
     per_g = z.groupBy("m", "g").agg(
         F.count(F.lit(1)).alias("ng"),
-        F.sum(F.col("z").cast(DEC)).alias("s"),
-        F.sum(F.col("z").cast(DEC) * F.col("z").cast(DEC)).alias("q"),
+        F.sum(wide("z")).alias("s"),
+        F.sum(wide("z") * wide("z")).alias("q"),
         F.min("med").alias("med"),
     )
     per_m = per_g.groupBy("m").agg(
@@ -740,14 +727,9 @@ def chi2_cells(events: DataFrame, row_col: str = "event_type",
         )
     )
     # chi2 micro-terms exactly as chi2_independence computes them
-    num = (
-        F.col("nn").cast(DEC) * F.col("o").cast(DEC)
-        - F.col("r").cast(DEC) * F.col("c").cast(DEC)
-    )
-    den = F.col("nn").cast(DEC) * F.col("r").cast(DEC) \
-        * F.col("c").cast(DEC)
-    t_u = F.round(_dbl(num * num) / _dbl(den) * F.lit(1e6)) \
-        .cast("long")
+    num = wide("nn") * wide("o") - wide("r") * wide("c")
+    den = wide("nn") * wide("r") * wide("c")
+    t_u = snap(_dbl(num * num) / _dbl(den), 6)
     terms = full.select(
         "rv", "dw", "nn", "r", "c", "o", t_u.alias("t_u")
     )
@@ -806,7 +788,7 @@ def effect_sizes_weekend(series: DataFrame, key: str = "metric",
     Scale: daily grid hash-agg, one aggregate-sized self-join for
     the pair counts, two tiny hash-aggs, one broadcast-sized join."""
     dd = _weekend_daily(series, key, value_decimals)
-    x = F.col("y").cast(DEC)
+    x = wide("y")
     mo = dd.groupBy("m").agg(
         F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).alias("n0"),
         F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).alias("n1"),
@@ -831,11 +813,11 @@ def effect_sizes_weekend(series: DataFrame, key: str = "metric",
     md = F.col("s1").cast("double") / n1d \
         - F.col("s0").cast("double") / n0d
     sp_num = (
-        F.col("n1").cast(DEC)
-        * (F.col("n0").cast(DEC) * F.col("q0")
+        wide("n1")
+        * (wide("n0") * wide("q0")
            - F.col("s0") * F.col("s0"))
-        + F.col("n0").cast(DEC)
-        * (F.col("n1").cast(DEC) * F.col("q1")
+        + wide("n0")
+        * (wide("n1") * wide("q1")
            - F.col("s1") * F.col("s1"))
     ).cast("double")
     sp2 = sp_num / (n0d * n1d * (nd - F.lit(2.0)))
@@ -881,13 +863,12 @@ def esd_outliers(series: DataFrame, key: str = "metric",
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
     scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     pt = series.select(
         F.col(key).alias("m"),
         F.date_trunc("day", "ts").alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col("turn_idx").cast("long").alias("o"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     out_rounds = []
     cur = pt
@@ -895,8 +876,7 @@ def esd_outliers(series: DataFrame, key: str = "metric",
         agg = cur.groupBy("m", "day_ts").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("c").alias("t_tot"),
-            F.sum(F.col("c").cast(dec) * F.col("c").cast(dec))
-            .alias("sxx"),
+            F.sum(wide("c") * wide("c")).alias("sxx"),
         ).where(F.col("n") >= int(min_n))
         j = cur.join(agg, ["m", "day_ts"])
         dev = F.abs(F.col("n") * F.col("c") - F.col("t_tot"))

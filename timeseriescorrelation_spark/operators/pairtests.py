@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 from timeseriescorrelation_spark.operators.crossmetric import (
     _hourly_cents,
@@ -70,9 +71,7 @@ def mcnemar_wow(series: DataFrame, key: str = "metric",
     # grid is not cached by contract); the window runs over the
     # already-aggregated grid partitioned per metric
     w_med = Window.partitionBy(key)
-    med2 = F.round(
-        F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med)
-    ).cast("long")
+    med2 = snap(F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med))
     eh = F.floor(
         epoch_us(F.col("hour_ts")) / F.lit(3_600_000_000)
     ).cast("long")
@@ -127,16 +126,13 @@ def cochran_q_dow(series: DataFrame, key: str = "metric",
 
     Scale: day-grid hash-agg (|metrics|·|days| rows), broadcast
     median join, two grid-sized re-aggregations."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     w_med = Window.partitionBy(key)
-    med2 = F.round(
-        F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med)
-    ).cast("long")
+    med2 = snap(F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med))
     ed = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
     ).cast("long")
@@ -189,11 +185,10 @@ def _ranked_weekend(series: DataFrame, key: str,
     # _weekend_daily drops day_ts, which the deterministic in-sample
     # tiebreak needs (the day grid is unique per (m, day), so (y,
     # day_ts) is a total order) — rebuild the tagged grid inline.
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)

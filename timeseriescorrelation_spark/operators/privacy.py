@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import wide
+
 
 def kanon_report(df: DataFrame, quasi: list[Column | str],
                  ks: list[int] = (2, 5, 10)) -> DataFrame:
@@ -139,7 +141,6 @@ def t_closeness(df: DataFrame, quasi: list[Column | str],
     Scale: (QI, value) hash-agg → QI hash-agg → broadcast of the
     |values|-row global histogram → threshold explode on the
     collapsed group table.  Same shape family as kanon_report."""
-    dec = "decimal(38,0)"
     cols = [
         (F.col(q) if isinstance(q, str) else q).alias(f"_q{i}")
         for i, q in enumerate(quasi)
@@ -157,10 +158,10 @@ def t_closeness(df: DataFrame, quasi: list[Column | str],
         .join(gsz, qnames).crossJoin(F.broadcast(tot))
     term = (
         F.abs(
-            F.col("cgv").cast(dec) * F.col("n")
-            - F.col("cv").cast(dec) * F.col("ng")
+            wide("cgv") * wide("n")
+            - wide("cv") * wide("ng")
         )
-        - F.col("cv").cast(dec) * F.col("ng")
+        - wide("cv") * wide("ng")
     )
     per_g = j.groupBy(*qnames).agg(
         F.first("ng").alias("ng"),
@@ -169,7 +170,7 @@ def t_closeness(df: DataFrame, quasi: list[Column | str],
     ).select(
         "ng", "n",
         (F.col("present_sum")
-         + F.col("n").cast(dec) * F.col("ng")).alias("num"),
+         + wide("n") * wide("ng")).alias("num"),
     )
     per_t = per_g.select(
         "ng", "n", "num",
@@ -179,7 +180,7 @@ def t_closeness(df: DataFrame, quasi: list[Column | str],
     )
     above = (
         10 * F.col("num")
-        > F.col("t10").cast(dec) * 2 * F.col("ng") * F.col("n")
+        > wide("t10") * 2 * F.col("ng") * F.col("n")
     )
     tvd = F.col("num").cast("double") / (
         2.0 * F.col("ng").cast("double") * F.col("n").cast("double")

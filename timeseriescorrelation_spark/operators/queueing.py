@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import co_moment, moments
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 _HOUR_US = 3_600_000_000
@@ -299,18 +300,14 @@ def dispersion_test(events: DataFrame, key: str = "event_type",
     Scale: one hash-agg raw→(metric, day) counts, one hash-agg to
     per-metric moments — the cheapest distributed shape, no joins,
     no windows."""
-    dec = "decimal(38,0)"
     d = events.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", ts_col).alias("day_ts")
     ).agg(F.count(F.lit(1)).alias("c"))
-    x = F.col("c").cast(dec)
-    g = d.groupBy("m").agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(x).alias("s"),
-        F.sum(x * x).alias("q"),
-    ).where(F.col("n") >= int(min_days))
+    g = d.groupBy("m").agg(*moments("c", names="n s q")).where(
+        F.col("n") >= int(min_days)
+    )
     chi2 = (
-        (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
+        co_moment("n", "s", "s", "q")
         .cast("double") / F.col("s").cast("double")
     )
     nd = F.col("n").cast("double")

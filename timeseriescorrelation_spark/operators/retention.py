@@ -18,6 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 
@@ -105,9 +110,7 @@ def rfm_features(orders: DataFrame, n_tiles: int = 5,
         .agg(
             F.max(date_col).alias("_last"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(
-                F.round(F.col(amount_col) * 100).cast("long")
-            ).alias("monetary_c"),
+            F.sum(snap(F.col(amount_col), 2)).alias("monetary_c"),
         )
         .crossJoin(F.broadcast(ref))
         .select(
@@ -225,7 +228,7 @@ def cohort_ltv(events: DataFrame, user_col: str = "user_id",
         F.col(user_col).alias("u"),
         F.date_trunc("week", F.col(ts_col)).alias("w"),
     ).agg(
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("c")
+        F.sum(snap(F.col(value_col), value_decimals)).alias("c")
     )
     first = uw.groupBy("u").agg(F.min("w").alias("cw"))
     sizes = first.groupBy("cw").agg(
@@ -457,25 +460,15 @@ def retention_decay_fit(events: DataFrame, id_col: str = "user_id",
         (F.col("num") > 0) & (F.col("den") > 0)
     )
     M = 1e6
-    xu = F.round(
-        F.log(F.col("age").cast("double")) * F.lit(M)
-    ).cast("long")
-    yu = F.round(
-        F.log(
-            F.col("num").cast("double") / F.col("den").cast("double")
-        ) * F.lit(M)
-    ).cast("long")
+    xu = snap(F.log(F.col("age").cast("double")), 6)
+    yu = snap(
+        F.log(F.col("num").cast("double") / F.col("den").cast("double")), 6
+    )
     t = r.select(
         "age", "num", "den", xu.alias("x"), yu.alias("y")
     )
-    DEC = "decimal(38,0)"
     g = t.agg(
-        F.count(F.lit(1)).cast(DEC).alias("m"),
-        F.sum(F.col("x").cast(DEC)).alias("sx"),
-        F.sum(F.col("y").cast(DEC)).alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("syy"),
-        F.sum((F.col("x") * F.col("y")).cast(DEC)).alias("sxy"),
+        *moments("x", "y", names="m sx sy sxx syy sxy"),
         F.max(
             F.when(
                 F.col("age") == 1,
@@ -496,9 +489,9 @@ def retention_decay_fit(events: DataFrame, id_col: str = "user_id",
         ).alias("r_day7"),
     ).where(F.col("m") >= int(min_ages))
     m = F.col("m")
-    cxx = (m * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    cyy = (m * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    cxy = (m * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    cxx = co_moment("m", "sx", "sx", "sxx").cast("double")
+    cyy = co_moment("m", "sy", "sy", "syy").cast("double")
+    cxy = co_moment("m", "sx", "sy", "sxy").cast("double")
     b = cxy / cxx
     a = (
         (F.col("sy").cast("double") - b * F.col("sx").cast("double"))

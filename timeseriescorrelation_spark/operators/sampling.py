@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
+
 N_BUCKETS = 1 << 16
 
 
@@ -81,9 +83,7 @@ def weighted_sample_topk(df: DataFrame, strata: list[str], weight_col,
     two60 = float((1 << 60) + 1)
     u = (h + F.lit(1)).cast("double") / F.lit(two60)
     wcol = weight_col if not isinstance(weight_col, str) else F.col(weight_col)
-    key = F.round(
-        F.log(u) / wcol.cast("double") * F.lit(1e9)
-    ).cast("long")
+    key = snap(F.log(u) / wcol.cast("double"), 9)
     from pyspark.sql import Window
 
     win = Window.partitionBy(*strata).orderBy(
@@ -191,7 +191,7 @@ def bootstrap_mean_ci(series: DataFrame, n_boot: int = 32,
     ).alias("b")
     rows = series.select(
         "metric",
-        F.round(F.col("value") * 100).cast("long").alias("c"),
+        snap("value", 2).alias("c"),
         F.col("turn_idx").cast("long").alias("eid"),
         b,
     )
@@ -235,7 +235,7 @@ def bootstrap_mean_ci(series: DataFrame, n_boot: int = 32,
     )
     point = series.groupBy("metric").agg(
         F.count(F.lit(1)).alias("n_points"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sc"),
+        F.sum(snap("value", 2)).alias("sc"),
     )
     return (
         point.join(ci, "metric")

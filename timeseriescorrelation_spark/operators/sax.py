@@ -9,20 +9,16 @@ Downstream uses: symbolic grep over telemetry ("find days shaped like
 shape-based clustering — all on a string column a 100 TB scan can
 carry for ~24 bytes/series-day.
 
-Cross-engine determinism: every float that reaches a comparison is
-built the same way in Spark and DuckDB — integer cent sums (BIGINT /
-decimal(38,0) moments), ONE division per mean, variance as a division
-of two exact integers, IEEE sqrt — so the symbol breaks at the
-breakpoint literals land identically (same scheme as
-analytics.trend_daily).  z-scores are scale-invariant, so values stay
-in CENTS end to end; no /100 anywhere.
+Exactness: `functions.exact`, so the symbol breaks at the breakpoint
+literals land identically in both engines.  z-scores are
+scale-invariant, so values stay in CENTS end to end; no /100 anywhere.
 
 Scale notes (100 TB): one hash-agg shuffle keyed (key, day, hour)
 collapses the raw scan to ≤24 rows per series-day (map-side partial
 combine does the heavy lifting); the day-level moments re-aggregate
 those 24 rows (second, tiny shuffle) and join back on (key, day).  No
 windows, no sorts except the in-row array_sort of ≤24 structs.
-decimal(38,0) moments survive per-day groups up to ~10¹⁵ points
+The widened moments survive per-day groups up to ~10¹⁵ points
 (cents ≤ 5·10⁶ → Σc² per point ≤ 2.5·10¹³; 38 digits hold 10²⁴ of
 those); ANSI mode overflows loudly, not wrongly.
 """
@@ -32,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEC = "decimal(38,0)"
+from timeseriescorrelation_spark.functions.exact import co_moment, snap, wide
+
 # N(0,1) quartile breakpoints for alphabet size 4
 BREAKS = (-0.6745, 0.0, 0.6745)
 
@@ -53,8 +50,7 @@ def sax_daily(series: DataFrame, keys: list[str] | None = None,
     whose collision space is small enough for motif mining
     (activity.sax_motifs)."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
-    cents = F.round(F.col(value_col) * scale).cast("long")
+    cents = snap(F.col(value_col), value_decimals)
     pt = series.select(
         *keys,
         F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
@@ -65,17 +61,17 @@ def sax_daily(series: DataFrame, keys: list[str] | None = None,
     h = pt.groupBy(*keys, "day_ts", "hour_idx").agg(
         F.count(F.lit(1)).alias("hn"),
         F.sum("c").alias("hsum"),
-        F.sum((F.col("c") * F.col("c")).cast(DEC)).alias("hsxx"),
+        F.sum(wide("c") * wide("c")).alias("hsxx"),
     )
     d = h.groupBy(*keys, "day_ts").agg(
-        F.sum("hn").cast(DEC).alias("dn"),
-        F.sum("hsum").cast(DEC).alias("dsum"),
+        wide(F.sum("hn")).alias("dn"),
+        wide(F.sum("hsum")).alias("dsum"),
         F.sum("hsxx").alias("dsxx"),
     )
     j = h.join(d, [*keys, "day_ts"])
     hmean = F.col("hsum").cast("double") / F.col("hn").cast("double")
     dmean = F.col("dsum").cast("double") / F.col("dn").cast("double")
-    vnum = F.col("dn") * F.col("dsxx") - F.col("dsum") * F.col("dsum")
+    vnum = co_moment("dn", "dsum", "dsum", "dsxx")
     dvar = vnum.cast("double") / (F.col("dn") * F.col("dn")).cast("double")
     z = (hmean - dmean) / F.sqrt(dvar)
     sym = (

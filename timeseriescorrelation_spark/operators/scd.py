@@ -26,6 +26,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import wide
+
 
 def scd2_history(log: DataFrame, keys: list[str], attr_cols: list[str],
                  ts_col: str = "ts",
@@ -94,12 +96,8 @@ def cdc_snapshot(changes: DataFrame, key_col: str = "user_id",
     writing the snapshot back IS the compacted table."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    dec = "decimal(38,0)"
-    ten19 = F.expr("CAST('10000000000000000000' AS DECIMAL(38,0))")
-    pk = (
-        epoch_us(F.col(ts_col)).cast(dec) * ten19
-        + F.col(seq_col).cast(dec)
-    )
+    ten19 = wide(F.lit("10000000000000000000"))
+    pk = wide(epoch_us(F.col(ts_col))) * ten19 + wide(seq_col)
     ch = changes.withColumn("_pk", pk)
     latest = ch.groupBy(key_col).agg(
         F.max("_pk").alias("_mx"),

@@ -21,6 +21,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    WIDE,
+    co_moment,
+    moments,
+    snap,
+    snap_np,
+    wide,
+)
+
 
 def _to_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -871,7 +880,7 @@ def centroid_drift(emb: DataFrame, batch_size: int = 200,
         .groupBy("b", "dim")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("x") * 1e6).cast("long")).alias("s"),
+            F.sum(snap("x", 6)).alias("s"),
         )
     )
     cur = per_dim.select(
@@ -1042,9 +1051,7 @@ def int8_quantize_recall(emb: DataFrame, n_queries: int = 5, k: int = 10,
 def _cov_from_moments(g: DataFrame) -> DataFrame:
     """(i, j, n, sa, sb, sab) decimal moments → (i, j, n, cov): the
     shared terminal double tree of both covariance forms."""
-    s = (F.col("n") * F.col("sab") - F.col("sa") * F.col("sb")).cast(
-        "double"
-    )
+    s = co_moment("n", "sa", "sb", "sab").cast("double")
     return g.select(
         "i", "j",
         F.col("n").cast("long").alias("n"),
@@ -1070,8 +1077,7 @@ def _gram_partials(emb: DataFrame, vec_col: str) -> DataFrame:
     import pandas as pd
     from decimal import Decimal
 
-    schema = ("i int, j int, n decimal(38,0), sa decimal(38,0),"
-              " sb decimal(38,0), sab decimal(38,0)")
+    schema = f"i int, j int, n {WIDE}, sa {WIDE}, sb {WIDE}, sab {WIDE}"
 
     def _partial(batches):
         d = None
@@ -1082,7 +1088,7 @@ def _gram_partials(emb: DataFrame, vec_col: str) -> DataFrame:
             if not len(pdf):
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xu = np.round(X * 1e6).astype(np.int64)
+            Xu = snap_np(X, 6)
             if d is None:
                 d = Xu.shape[1]
                 S = np.zeros(d, dtype=object)
@@ -1148,15 +1154,13 @@ def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
             F.sum("sab").alias("sab"),
         )
         return _cov_from_moments(g)
-    dec = "decimal(38,0)"
     x = emb.select(
         F.col(id_col).alias("rid"),
         F.posexplode(vec_col).alias("dim0", "v"),
     ).select(
         "rid",
         (F.col("dim0") + 1).alias("dim"),
-        F.round(F.col("v").cast("double") * 1_000_000).cast("long")
-         .alias("xu"),
+        snap(F.col("v").cast("double"), 6).alias("xu"),
     )
     a = x.select("rid", F.col("dim").alias("i"), F.col("xu").alias("xa"))
     b = x.select("rid", F.col("dim").alias("j"), F.col("xu").alias("xb"))
@@ -1164,12 +1168,7 @@ def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
         a.join(b, "rid")
         .where(F.col("i") <= F.col("j"))
         .groupBy("i", "j")
-        .agg(
-            F.count(F.lit(1)).cast(dec).alias("n"),
-            F.sum(F.col("xa").cast(dec)).alias("sa"),
-            F.sum(F.col("xb").cast(dec)).alias("sb"),
-            F.sum((F.col("xa") * F.col("xb")).cast(dec)).alias("sab"),
-        )
+        .agg(*moments("xa", "xb", names="n sa sb - - sab"))
     )
     return _cov_from_moments(g)
 
@@ -1264,7 +1263,7 @@ def auc_by_label(emb: DataFrame, id_col: str = "vec_id",
         F.posexplode(_to_double(F.col(vec_col))).alias("dim", "x"),
     ).select(
         "vid", "lab", "dim",
-        F.round(F.col("x") * 1e6).cast("long").alias("xu"),
+        snap("x", 6).alias("xu"),
     )
     cent = (
         base.where(F.col("vid") % 2 == 0)
@@ -1287,12 +1286,12 @@ def auc_by_label(emb: DataFrame, id_col: str = "vec_id",
         "L",
         F.when(F.col("lab") == F.col("L"), F.lit(1))
         .otherwise(F.lit(0)).alias("y"),
-        F.round(
+        snap(
             F.col("dot").cast("double")
             / (F.sqrt(F.col("nv").cast("double"))
-               * F.sqrt(F.col("nc").cast("double")))
-            * 1e6
-        ).cast("long").alias("score_u"),
+               * F.sqrt(F.col("nc").cast("double"))),
+            6,
+        ).alias("score_u"),
     )
     g = scored.groupBy("L", "score_u").agg(
         F.sum("y").alias("np"),
@@ -1641,10 +1640,7 @@ def pca_project(emb: DataFrame, n_components: int = 4,
         emb.select(F.posexplode(vec_col).alias("dim0", "v"))
         .groupBy("dim0")
         .agg(
-            F.sum(
-                F.round(F.col("v").cast("double") * 1_000_000)
-                .cast("long")
-            ).alias("s"),
+            F.sum(snap(F.col("v").cast("double"), 6)).alias("s"),
             F.count(F.lit(1)).alias("c"),
         )
         .collect()
@@ -1746,7 +1742,7 @@ def silhouette_clusters(emb: DataFrame, k: int = 8, n_iter: int = 2,
         top > 0, (F.col("b_d") - F.col("a_d")) / top
     ).otherwise(F.lit(0.0))
     per = ab.select(
-        "cell", F.round(sil * F.lit(1.0e6)).cast("long").alias("sm")
+        "cell", snap(sil, 6).alias("sm")
     )
     return per.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n"), F.sum("sm").alias("ssm")
@@ -1788,7 +1784,6 @@ def embedding_mmd(emb: DataFrame, vec_col: str = "embedding",
     (d(d+1)/2 blow-up; past ~10⁸ rows switch to the mapInPandas
     partial-Gram form noted there); stage 2 joins L·d(d+1)/2 rows
     pairwise — thousands of rows at any corpus size, broadcast-safe."""
-    dec = "decimal(38,0)"
     x = emb.select(
         F.col(label_col).alias("lbl"),
         F.col(id_col).alias("rid"),
@@ -1796,8 +1791,7 @@ def embedding_mmd(emb: DataFrame, vec_col: str = "embedding",
     ).select(
         "lbl", "rid",
         (F.col("dim0") + 1).alias("dim"),
-        F.round(F.col("v").cast("double") * 1_000_000).cast("long")
-         .alias("xu"),
+        snap(F.col("v").cast("double"), 6).alias("xu"),
     )
     a = x.select("lbl", "rid", F.col("dim").alias("i"),
                  F.col("xu").alias("xa"))
@@ -1807,8 +1801,8 @@ def embedding_mmd(emb: DataFrame, vec_col: str = "embedding",
         a.join(b, (F.col("rid") == F.col("rid2"))
                & (F.col("i") <= F.col("j")))
         .groupBy("lbl", "i", "j")
-        .agg(F.count(F.lit(1)).cast(dec).alias("n"),
-             F.sum((F.col("xa") * F.col("xb")).cast(dec)).alias("s"))
+        .agg(wide(F.count(F.lit(1))).alias("n"),
+             F.sum(wide("xa") * wide("xb")).alias("s"))
     )
     l = mom.select(F.col("lbl").alias("label_a"), "i", "j",
                    F.col("n").alias("na"), F.col("s").alias("sa"))
@@ -1819,15 +1813,15 @@ def embedding_mmd(emb: DataFrame, vec_col: str = "embedding",
     )
     # per-entry moment difference in 1e-9 real units: µ² scale is
     # 1e12, so descale by 1e12 then rescale by 1e9 → divide by 1e3.
-    d_ij = F.round(
+    d_ij = wide(F.round(
         (F.col("sa") * F.col("nb") - F.col("sb") * F.col("na"))
         .cast("double")
         / (F.col("na") * F.col("nb")).cast("double") / 1e3
-    ).cast(dec)
+    ))
     wgt = F.when(F.col("i") == F.col("j"), F.lit(1)).otherwise(F.lit(2))
     return (
         paired.select("label_a", "label_b", "na", "nb",
-                      (d_ij * d_ij * wgt.cast(dec)).alias("t"))
+                      (d_ij * d_ij * wide(wgt)).alias("t"))
         .groupBy("label_a", "label_b")
         .agg(F.max(F.col("na")).alias("n_a"),
              F.max(F.col("nb")).alias("n_b"),
@@ -1871,22 +1865,17 @@ def embedding_mahalanobis(emb: DataFrame, vec_col: str = "embedding",
     ).select(
         "vid", "lbl",
         (F.col("dim0") + 1).alias("dim"),
-        F.round(F.col("v").cast("double") * 1_000_000).cast("long")
-         .alias("xu"),
+        snap(F.col("v").cast("double"), 6).alias("xu"),
     )
-    dec = "decimal(38,0)"
     stats = x.groupBy("lbl", "dim").agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(F.col("xu").cast(dec)).alias("s"),
-        F.sum((F.col("xu") * F.col("xu")).cast(dec)).alias("q"),
+        *moments("xu", names="n s q"),
     )
     j = x.join(F.broadcast(stats), ["lbl", "dim"])
     num = (F.col("n") * F.col("xu") - F.col("s")).cast("double")
-    den = (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
+    den = co_moment("n", "s", "s", "q")
     term_u = F.when(
         den.cast("double") > 0,
-        F.round(F.lit(1e6) * num * num / den.cast("double"))
-         .cast("long"),
+        snap(F.lit(1e6) * num * num / den.cast("double")),
     )
     g = j.select("vid", "lbl", term_u.alias("tu")).groupBy(
         "vid", "lbl"
@@ -1930,12 +1919,11 @@ def embedding_anisotropy(emb: DataFrame, vec_col: str = "embedding",
         F.posexplode("v").alias("dim", "x")
     ).select(
         "dim",
-        F.round(F.col("x") * F.lit(1e6)).cast("long").alias("xu"),
+        snap("x", 6).alias("xu"),
     )
-    dec = "decimal(38,0)"
     g = ex.groupBy("dim").agg(
-        F.sum(F.col("xu").cast(dec)).alias("sd"),
-        F.sum((F.col("xu") * F.col("xu")).cast(dec)).alias("sq"),
+        F.sum(wide("xu")).alias("sd"),
+        F.sum(wide("xu") * wide("xu")).alias("sq"),
     )
     tot = g.agg(
         F.count(F.lit(1)).alias("n_dims"),

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
+
 _HASH_BITS = 60  # top 15 hex chars of md5 — positive in int64
 
 
@@ -204,10 +206,9 @@ def hdr_sketch(df: DataFrame, keys: list[str], value_col: str = "value",
     shuffle volume ≤ |groups|·n_buckets rows where n_buckets ≤
     (63-s)·2^s + 2^(s+1) (~1.9k at s=5) REGARDLESS of input rows —
     the same bounded-shuffle shape as `hll_sketch`."""
-    scale = 10 ** decimals
     s = sub_bits
     v = F.greatest(
-        F.round(F.col(value_col) * scale).cast("long"), F.lit(1).cast("long")
+        snap(F.col(value_col), decimals), F.lit(1).cast("long")
     )
     base = df.select(*keys, v.alias("_v")).withColumn(
         "_e", (F.length(F.bin(F.col("_v"))) - 1).cast("long")

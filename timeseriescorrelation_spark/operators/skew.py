@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import wide
+
 
 def with_salt(df: DataFrame, buckets: int = 16,
               row_col: str = "turn_idx", salt_col: str = "salt") -> DataFrame:
@@ -118,7 +120,6 @@ def key_skew_report(series: DataFrame, group_col: str = "metric",
     buckets first (same telescoped-prefix trick as
     intervals.max_concurrency); at the engine's conv_id cardinalities
     the single per-group window is the right plan."""
-    dec = "decimal(38,0)"
     counts = series.groupBy(group_col, key_col).agg(
         F.count(F.lit(1)).alias("x")
     )
@@ -129,13 +130,13 @@ def key_skew_report(series: DataFrame, group_col: str = "metric",
         group_col, "x", F.row_number().over(w).alias("i")
     )
     g = ranked.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum((F.col("i").cast(dec) * F.col("x").cast(dec))).alias("six"),
+        wide(F.count(F.lit(1))).alias("n"),
+        F.sum(wide("x")).alias("sx"),
+        F.sum(wide("i") * wide("x")).alias("six"),
         F.max("x").alias("xmax"),
     )
-    num = F.lit(2).cast(dec) * F.col("six") - (
-        F.col("n") + F.lit(1).cast(dec)
+    num = wide(F.lit(2)) * F.col("six") - (
+        F.col("n") + wide(F.lit(1))
     ) * F.col("sx")
     den = F.col("n") * F.col("sx")
     return g.select(

@@ -23,6 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+    wide,
+)
+
 
 def p_chart(series: DataFrame, key: str = "metric",
             defect_cents: int = 10_000,
@@ -37,14 +44,13 @@ def p_chart(series: DataFrame, key: str = "metric",
         LCL = max(0, p̄ − 3·√(...))       by day, the textbook form)
 
     ooc ∈ {-1, 0, 1}: below LCL / in control / above UCL."""
-    scale = 10 ** int(value_decimals)
     day = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            (F.round(F.col("value") * scale).cast("long")
+            (snap("value", value_decimals)
              > F.lit(int(defect_cents))).cast("long")
         ).alias("defects"),
     )
@@ -182,9 +188,6 @@ def we_rules(series: DataFrame, key: str = "metric") -> DataFrame:
     )
 
 
-DEC = "decimal(38,0)"
-
-
 def ewma_chart(series: DataFrame, key: str = "metric",
                lam_num: int = 1, lam_den: int = 4, k_window: int = 24,
                value_decimals: int = 2) -> DataFrame:
@@ -227,12 +230,12 @@ def ewma_chart(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("hour", "ts").alias("hour_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     win = Window.partitionBy("metric").orderBy("hour_ts")
     num = None
     for j in range(K):
-        term = F.lag("y", j).over(win).cast(DEC) * F.lit(w[j]).cast(DEC)
+        term = wide(F.lag("y", j).over(win)) * wide(F.lit(w[j]))
         num = term if num is None else num + term
     t = h.select(
         "metric", "hour_ts", "y",
@@ -240,17 +243,13 @@ def ewma_chart(series: DataFrame, key: str = "metric",
         F.row_number().over(win).alias("rn"),
     ).where(F.col("rn") >= K)
     mom = h.groupBy("metric").agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("y").cast(DEC)).alias("s"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("ss"),
+        *moments("y", names="n s ss"),
     )
     j2 = t.join(F.broadcast(mom), "metric")
     nn = F.col("n").cast("double")
     mu = F.col("s").cast("double") / nn
     # population variance from exact integers
-    var = (F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast(
-        "double"
-    ) / (nn * nn)
+    var = co_moment("n", "s", "s", "ss").cast("double") / (nn * nn)
     sig = F.sqrt(var)
     z = F.col("num").cast("double") / F.lit(float(W))
     half = F.lit(3.0) * sig * F.sqrt(F.lit(float(varfac)))
@@ -298,7 +297,7 @@ def xmr_chart(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     w = Window.partitionBy("metric").orderBy("day_ts")
     t = d.withColumn(
@@ -357,13 +356,10 @@ def process_capability(series: DataFrame, lsl: float, usl: float,
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
-    DEC = "decimal(38,0)"
     g = d.groupBy("metric").agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("y").cast(DEC)).alias("s"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("ss"),
+        *moments("y", names="n s ss"),
         F.sum(
             ((F.col("y") < lsl_c) | (F.col("y") > usl_c)).cast("long")
         ).alias("n_out"),
@@ -371,7 +367,7 @@ def process_capability(series: DataFrame, lsl: float, usl: float,
     nn = F.col("n").cast("double")
     mu = F.col("s").cast("double") / nn
     sd = F.sqrt(
-        (F.col("n") * F.col("ss") - F.col("s") * F.col("s"))
+        co_moment("n", "s", "s", "ss")
         .cast("double") / (nn * (nn - F.lit(1.0)))
     )
     fs = F.lit(float(scale))
@@ -434,10 +430,9 @@ def g_chart(events: DataFrame, adverse_type: str = "error",
         (F.col("pos") - F.lag("pos", 1).over(we) - F.lit(1))
         .alias("g")
     ).where(F.col("g").isNotNull())
-    DEC = "decimal(38,0)"
     m = gaps.agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("g").cast(DEC)).alias("s"),
+        wide(F.count(F.lit(1))).alias("n"),
+        F.sum(wide("g")).alias("s"),
         F.max("g").alias("mx"),
     )
     nn = F.col("n").cast("double")
@@ -486,14 +481,13 @@ def u_chart(series: DataFrame, key: str = "metric",
     stream shows proportion- vs rate-framing of the same signal).
     Exact integer counts; limits and the ooc flag are one shared
     double tree.  One hash-agg + one broadcast join."""
-    scale = 10 ** int(value_decimals)
     day = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            (F.round(F.col("value") * scale).cast("long")
+            (snap("value", value_decimals)
              > F.lit(int(defect_cents))).cast("long")
         ).alias("defects"),
     )

@@ -34,6 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 M_U = 1_000_000.0
@@ -85,13 +91,13 @@ def km_survival(series: DataFrame, keys: list[str] | None = None,
                           int(censor_horizon_s) * 1_000_000)
     lnu = F.when(
         F.col("n_risk") > F.col("d"),
-        F.round(
+        snap(
             F.log(
                 (F.col("n_risk") - F.col("d")).cast("double")
                 / F.col("n_risk").cast("double")
-            )
-            * F.lit(M_U)
-        ).cast("long"),
+            ),
+            6,
+        ),
     )
     w_cum = (
         Window.partitionBy(*keys)
@@ -144,10 +150,7 @@ def na_hazard(series: DataFrame, keys: list[str] | None = None,
     keys = keys or ["metric"]
     events = _risk_events(series, keys, conv_col, ts_col,
                           int(censor_horizon_s) * 1_000_000)
-    inc = F.round(
-        F.col("d").cast("double") / F.col("n_risk").cast("double")
-        * F.lit(M_U)
-    ).cast("long")
+    inc = snap(F.col("d").cast("double") / F.col("n_risk").cast("double"), 6)
     w_cum = (
         Window.partitionBy(*keys)
         .orderBy("dur")
@@ -228,13 +231,13 @@ def logrank_weekend(series: DataFrame, keys: list[str] | None = None,
     n1 = F.col("n1").cast("double")
     n0 = F.col("n0").cast("double")
     nn = (F.col("n1") + F.col("n0")).cast("double")
-    e1_u = F.round(dd * n1 / nn * F.lit(1.0e6)).cast("long")
+    e1_u = snap(dd * n1 / nn, 6)
     v_u = F.when(
         F.col("n1") + F.col("n0") > 1,
-        F.round(
-            dd * (n1 / nn) * (n0 / nn)
-            * ((nn - dd) / (nn - F.lit(1.0))) * F.lit(1.0e6)
-        ).cast("long"),
+        snap(
+            dd * (n1 / nn) * (n0 / nn) * ((nn - dd) / (nn - F.lit(1.0))),
+            6,
+        ),
     ).otherwise(F.lit(0))
     terms = r.groupBy(*keys).agg(
         F.sum("d1").alias("o1"),
@@ -326,10 +329,8 @@ def _cox_score_pass(r: DataFrame, keys: list[str],
     s1 = F.col("n1").cast("double") * F.col("eb")
     s0 = F.col("n0").cast("double") + s1
     frac = s1 / s0
-    u_u = F.round(dd * frac * F.lit(1.0e6)).cast("long")
-    i_u = F.round(
-        dd * frac * (F.lit(1.0) - frac) * F.lit(1.0e6)
-    ).cast("long")
+    u_u = snap(dd * frac, 6)
+    i_u = snap(dd * frac * (F.lit(1.0) - frac), 6)
     return rb.groupBy(*keys).agg(
         F.sum("d1").alias("o1"),
         F.sum(u_u).alias("uu"),
@@ -413,16 +414,15 @@ def gumbel_maxima(series: DataFrame, keys: list[str] | None = None,
     Scale: two stacked hash aggs, day-grid bounded."""
     keys = keys or ["metric"]
     scale = 10 ** int(value_decimals)
-    dec = "decimal(38,0)"
     dm = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.max(F.round(F.col("value") * scale).cast("long")).alias("mx")
+        F.max(snap("value", value_decimals)).alias("mx")
     )
     agg = dm.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("mx").alias("t_tot"),
-        F.sum(F.col("mx").cast(dec) * F.col("mx").cast(dec)).alias("sxx"),
+        F.sum(wide("mx") * wide("mx")).alias("sxx"),
     ).where(F.col("n_days") >= int(min_days))
     n = F.col("n_days").cast("double")
     t = F.col("t_tot").cast("double")
@@ -527,7 +527,7 @@ def gpd_tail(series: DataFrame, keys: list[str] | None = None,
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     w_rank = Window.partitionBy(*keys).orderBy("y", "day_ts")
     w_all = Window.partitionBy(*keys)
@@ -633,34 +633,24 @@ def weibull_fit(series: DataFrame, keys: list[str] | None = None,
         F.count(F.lit(1)).over(wn).alias("n"),
     )
     # x = ln(hours) in µ-nats; y = ln(−ln(1−F)) in µ-nats, two snaps
-    x_u = F.round(
-        F.log(F.col("dur").cast("double") / F.lit(3.6e9)) * F.lit(M_U)
-    ).cast("long")
-    m1 = F.round(
+    x_u = snap(F.log(F.col("dur").cast("double") / F.lit(3.6e9)), 6)
+    m1 = snap(
         F.log(
             (F.lit(10) * (F.col("n") - F.col("i")) + F.lit(7))
             .cast("double")
             / (F.lit(10) * F.col("n") + F.lit(4)).cast("double")
-        )
-        * F.lit(M_U)
-    ).cast("long")
-    y_u = F.round(
-        F.log(-(m1.cast("double") / F.lit(M_U))) * F.lit(M_U)
-    ).cast("long")
+        ),
+        6,
+    )
+    y_u = snap(F.log(-(m1.cast("double") / F.lit(M_U))), 6)
     t = r.select(*keys, x_u.alias("x"), y_u.alias("y"))
-    DEC = "decimal(38,0)"
     g = t.groupBy(*keys).agg(
-        F.count(F.lit(1)).cast(DEC).alias("m"),
-        F.sum(F.col("x").cast(DEC)).alias("sx"),
-        F.sum(F.col("y").cast(DEC)).alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("syy"),
-        F.sum((F.col("x") * F.col("y")).cast(DEC)).alias("sxy"),
+        *moments("x", "y", names="m sx sy sxx syy sxy"),
     ).where(F.col("m") >= int(min_n))
     m = F.col("m")
-    cxx = (m * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    cyy = (m * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    cxy = (m * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    cxx = co_moment("m", "sx", "sx", "sxx").cast("double")
+    cyy = co_moment("m", "sy", "sy", "syy").cast("double")
+    cxy = co_moment("m", "sx", "sy", "sxy").cast("double")
     k = cxy / cxx
     b0 = (
         (F.col("sy").cast("double") - k * F.col("sx").cast("double"))

@@ -14,6 +14,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+)
 from timeseriescorrelation_spark.operators.dedup import (
     A_MUL,
     B_ADD,
@@ -726,10 +731,8 @@ def char_entropy(docs: DataFrame, id_col: str = "doc_id",
         F.sum("c").alias("n"),
         F.count(F.lit(1)).alias("k"),
         F.sum(
-            F.round(
-                F.col("c").cast("double")
-                * F.log2(F.col("c").cast("double")) * F.lit(1.0e6)
-            ).cast("long")
+            snap(F.col("c").cast("double")
+                 * F.log2(F.col("c").cast("double")), 6)
         ).alias("clg_u"),
     )
     n = F.col("n").cast("double")
@@ -925,25 +928,17 @@ def heaps_fit(docs: DataFrame, id_col: str = "doc_id",
          .alias("cum_vocab"),
     )
     pts = vg.where((F.col("cum_docs") > 0) & (F.col("cum_vocab") > 0))
-    dec = "decimal(38,0)"
     snapped = pts.select(
-        F.round(F.log(F.col("cum_docs").cast("double")) * 1e6)
-         .cast("long").alias("xu"),
-        F.round(F.log(F.col("cum_vocab").cast("double")) * 1e6)
-         .cast("long").alias("yu"),
+        snap(F.log(F.col("cum_docs").cast("double")), 6).alias("xu"),
+        snap(F.log(F.col("cum_vocab").cast("double")), 6).alias("yu"),
     )
     g = snapped.agg(
-        F.count(F.lit(1)).cast(dec).alias("k"),
-        F.sum(F.col("xu").cast(dec)).alias("sx"),
-        F.sum(F.col("yu").cast(dec)).alias("sy"),
-        F.sum((F.col("xu") * F.col("xu")).cast(dec)).alias("sxx"),
-        F.sum((F.col("yu") * F.col("yu")).cast(dec)).alias("syy"),
-        F.sum((F.col("xu") * F.col("yu")).cast(dec)).alias("sxy"),
+        *moments("xu", "yu", names="k sx sy sxx syy sxy"),
     )
     k = F.col("k")
-    cxx = k * F.col("sxx") - F.col("sx") * F.col("sx")
-    cyy = k * F.col("syy") - F.col("sy") * F.col("sy")
-    cxy = k * F.col("sxy") - F.col("sx") * F.col("sy")
+    cxx = co_moment("k", "sx", "sx", "sxx")
+    cyy = co_moment("k", "sy", "sy", "syy")
+    cxy = co_moment("k", "sx", "sy", "sxy")
     beta = cxy.cast("double") / cxx.cast("double")
     ln_k = (
         (F.col("sy").cast("double")
@@ -1041,27 +1036,22 @@ def burrows_delta(docs: DataFrame, top_k: int = 30,
     grid = totals.crossJoin(F.broadcast(topw))
     dense = grid.join(cnt, ["src", "w"], "left").select(
         "src", "w",
-        F.round(
+        snap(
             F.coalesce(F.col("cw"), F.lit(0)).cast("double")
-            / F.col("tot").cast("double") * F.lit(1e9)
-        ).cast("long").alias("fu"),
+            / F.col("tot").cast("double"), 9
+        ).alias("fu"),
     )
-    DEC = "decimal(38,0)"
     mom = dense.groupBy("w").agg(
-        F.count(F.lit(1)).cast(DEC).alias("ns"),
-        F.sum(F.col("fu").cast(DEC)).alias("s1"),
-        F.sum((F.col("fu") * F.col("fu")).cast(DEC)).alias("s2"),
+        *moments("fu", names="ns s1 s2"),
     )
     jz = dense.join(F.broadcast(mom), "w")
     nsd = F.col("ns").cast("double")
-    var = (F.col("ns") * F.col("s2") - F.col("s1") * F.col("s1")).cast(
-        "double"
-    ) / (nsd * nsd)
+    var = co_moment("ns", "s1", "s1", "s2").cast("double") / (nsd * nsd)
     z = (
         F.col("fu").cast("double") - F.col("s1").cast("double") / nsd
     ) / F.sqrt(var)
     zt = jz.where(var > 0).select(
-        "src", "w", F.round(z * F.lit(1e6)).cast("long").alias("zu")
+        "src", "w", snap(z, 6).alias("zu")
     )
     a = zt.select(F.col("src").alias("source_a"), "w",
                   F.col("zu").alias("za"))

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import snap
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 _TRUNC_US = {
@@ -106,7 +107,7 @@ def time_weighted_avg(series: DataFrame, trunc: str = "hour",
         twa = F.round(num / den, 6)
     else:
         scale = 10 ** value_decimals
-        v_i = F.round(F.col("value") * scale).cast("long")
+        v_i = snap("value", value_decimals)
         num = F.sum(v_i * dt)
         den = F.sum(dt)
         twa = F.round(num / (F.lit(float(scale)) * den), 6)

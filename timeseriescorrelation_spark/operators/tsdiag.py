@@ -10,11 +10,8 @@ and every statistic after that runs over the tiny grid — window lags
 partitioned per (metric, day) are ≤24-row frames over aggregates, so
 the whole family is 100-TB-safe regardless of raw turn count.
 
-Exactness recipe (same as trend_daily / beta_daily / acf): every
-moment accumulates in decimal(38,0) on Spark and hugeint on DuckDB;
-each statistic is ONE identical double expression tree over those
-exact integers, rounded to 6 dp, so the engines agree bit-for-bit.
-Divisions never happen in integer space except documented floor-DIVs.
+Exactness: `functions.exact` (integer division only in documented
+floor-DIVs).
 
 Sequence convention: operators that need consecutive observations
 (lags, runs, turning points) operate on the SEQUENCE of observed
@@ -30,11 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
-from timeseriescorrelation_spark.operators.crossmetric import (
-    DEC,
-    _hourly_cents,
+from timeseriescorrelation_spark.functions.exact import (
+    co_moment,
+    moments,
+    snap,
+    wide,
 )
+from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
 def _dbl(c):
@@ -80,17 +80,13 @@ def ar2_forecast(series: DataFrame, key: str = "metric",
         ).alias("y2"),
     )
     g = lagged.groupBy(key, "day_ts").agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("y").cast(DEC)).alias("s"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("p0"),
-        F.sum((F.col("y") * F.col("y1")).cast(DEC)).alias("p1"),
-        F.sum((F.col("y") * F.col("y2")).cast(DEC)).alias("p2"),
-        F.sum(F.col("y1").cast(DEC)).alias("a1"),
-        F.sum(F.when(F.col("y1").isNotNull(), F.col("y"))
-              .cast(DEC)).alias("b1"),
-        F.sum(F.col("y2").cast(DEC)).alias("a2"),
-        F.sum(F.when(F.col("y2").isNotNull(), F.col("y"))
-              .cast(DEC)).alias("b2"),
+        *moments("y", names="n s p0"),
+        F.sum(wide("y") * wide("y1")).alias("p1"),
+        F.sum(wide("y") * wide("y2")).alias("p2"),
+        F.sum(wide("y1")).alias("a1"),
+        F.sum(wide(F.when(F.col("y1").isNotNull(), F.col("y")))).alias("b1"),
+        F.sum(wide("y2")).alias("a2"),
+        F.sum(wide(F.when(F.col("y2").isNotNull(), F.col("y")))).alias("b2"),
         F.max_by("y", "hour_ts").alias("xn"),
         F.max_by("y1", "hour_ts").alias("xn1"),
     ).where(F.col("n") >= min_hours)
@@ -145,17 +141,17 @@ def variance_ratio(series: DataFrame, key: str = "metric",
         (F.col("y") - F.lag("y", int(q)).over(wspec)).alias("dq"),
     )
     g = d.groupBy(key, "day_ts").agg(
-        F.count("d1").cast(DEC).alias("n1"),
-        F.sum(F.col("d1").cast(DEC)).alias("s1"),
-        F.sum((F.col("d1") * F.col("d1")).cast(DEC)).alias("s11"),
-        F.count("dq").cast(DEC).alias("nq"),
-        F.sum(F.col("dq").cast(DEC)).alias("sq"),
-        F.sum((F.col("dq") * F.col("dq")).cast(DEC)).alias("sqq"),
+        wide(F.count("d1")).alias("n1"),
+        F.sum(wide("d1")).alias("s1"),
+        F.sum(wide("d1") * wide("d1")).alias("s11"),
+        wide(F.count("dq")).alias("nq"),
+        F.sum(wide("dq")).alias("sq"),
+        F.sum(wide("dq") * wide("dq")).alias("sqq"),
     ).where(
         (F.col("n1") + 1 >= min_hours) & (F.col("nq") >= 2)
     )
-    var1 = _dbl(F.col("n1") * F.col("s11") - F.col("s1") * F.col("s1"))
-    varq = _dbl(F.col("nq") * F.col("sqq") - F.col("sq") * F.col("sq"))
+    var1 = _dbl(co_moment("n1", "s1", "s1", "s11"))
+    varq = _dbl(co_moment("nq", "sq", "sq", "sqq"))
     vr = F.when(
         var1 > 0,
         varq * _dbl(F.col("n1")) * _dbl(F.col("n1"))
@@ -304,7 +300,7 @@ def allan_variance(series: DataFrame, key: str = "metric",
             F.col(key), (hidx / t).cast("long").alias("bkt"), "y"
         ).groupBy(key, "bkt").agg(
             F.count(F.lit(1)).alias("nh"),
-            F.sum(F.col("y").cast(DEC)).alias("sb"),
+            F.sum(wide("y")).alias("sb"),
         ).where(F.col("nh") == t)
         wspec = Window.partitionBy(key).orderBy("bkt")
         d = b.select(
@@ -314,7 +310,7 @@ def allan_variance(series: DataFrame, key: str = "metric",
         ).where(F.col("gap") == 1)
         g = d.groupBy(key).agg(
             F.count(F.lit(1)).alias("m_pairs"),
-            F.sum((F.col("dd") * F.col("dd")).cast(DEC)).alias("num"),
+            F.sum(wide("dd") * wide("dd")).alias("num"),
         ).where(F.col("m_pairs") >= 2)
         rows.append(
             g.select(
@@ -361,14 +357,14 @@ def page_hinkley(series: DataFrame, key: str = "metric",
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     tot = h.groupBy(key).agg(
-        F.sum(F.col("y").cast(DEC)).alias("s_all"),
-        F.count(F.lit(1)).cast(DEC).alias("n_all"),
+        F.sum(wide("y")).alias("s_all"),
+        wide(F.count(F.lit(1))).alias("n_all"),
     )
     cum = h.join(tot, key).select(
         F.col(key), "hour_ts", "n_all",
         (
-            F.col("n_all") * F.sum(F.col("y").cast(DEC)).over(wcum)
-            - F.count(F.lit(1)).over(wcum).cast(DEC) * F.col("s_all")
+            F.col("n_all") * F.sum(wide("y")).over(wcum)
+            - wide(F.count(F.lit(1)).over(wcum)) * F.col("s_all")
         ).alias("mprime"),
     )
     exc = cum.select(
@@ -486,16 +482,14 @@ def newey_west(series: DataFrame, key: str = "metric",
         sel.append(F.lag("y", k).over(wspec).alias(f"y{k}"))
     lagged = h.select(*sel)
     aggs = [
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("y").cast(DEC)).alias("s"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("p0"),
+        *moments("y", names="n s p0"),
     ]
     for k in lags:
         yk = F.col(f"y{k}")
         aggs += [
-            F.sum((F.col("y") * yk).cast(DEC)).alias(f"p{k}"),
-            F.sum(yk.cast(DEC)).alias(f"a{k}"),
-            F.sum(F.when(yk.isNotNull(), F.col("y")).cast(DEC))
+            F.sum(wide("y") * wide(yk)).alias(f"p{k}"),
+            F.sum(wide(yk)).alias(f"a{k}"),
+            F.sum(wide(F.when(yk.isNotNull(), F.col("y"))))
             .alias(f"b{k}"),
         ]
     g = lagged.groupBy(key).agg(*aggs).where(F.col("n") >= min_hours)
@@ -540,13 +534,12 @@ def crossing_rate(series: DataFrame, key: str = "metric",
 
     Scale: window partitions are (metric, day) — bounded, parallel;
     output is grid-sized."""
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col(ord_col).cast("long").alias("o"),
-        F.round(F.col("value") * scale).cast("long").alias("c"),
+        snap("value", value_decimals).alias("c"),
     )
     day = pt.groupBy("metric", "day_ts").agg(
         F.count(F.lit(1)).alias("n"), F.sum("c").alias("t_tot")
@@ -616,27 +609,25 @@ def kpss_level(series: DataFrame, key: str = "metric",
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     sel = [
         F.col(key), F.col("y"),
-        F.row_number().over(w).cast(DEC).alias("t"),
-        F.sum("y").over(w_cum).cast(DEC).alias("cum"),
-        F.count(F.lit(1)).over(w_full).cast(DEC).alias("nn"),
-        F.sum("y").over(w_full).cast(DEC).alias("tt"),
+        wide(F.row_number().over(w)).alias("t"),
+        wide(F.sum("y").over(w_cum)).alias("cum"),
+        wide(F.count(F.lit(1)).over(w_full)).alias("nn"),
+        wide(F.sum("y").over(w_full)).alias("tt"),
     ]
     for k in lags:
         sel.append(F.lag("y", k).over(w).alias(f"y{k}"))
     lagged = h.select(*sel)
     p = F.col("nn") * F.col("cum") - F.col("t") * F.col("tt")
     aggs = [
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum(F.col("y").cast(DEC)).alias("s"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("p0"),
+        *moments("y", names="n s p0"),
         F.sum(p * p).alias("sp2"),
     ]
     for k in lags:
         yk = F.col(f"y{k}")
         aggs += [
-            F.sum((F.col("y") * yk).cast(DEC)).alias(f"p{k}"),
-            F.sum(yk.cast(DEC)).alias(f"a{k}"),
-            F.sum(F.when(yk.isNotNull(), F.col("y")).cast(DEC))
+            F.sum(wide("y") * wide(yk)).alias(f"p{k}"),
+            F.sum(wide(yk)).alias(f"a{k}"),
+            F.sum(wide(F.when(yk.isNotNull(), F.col("y"))))
             .alias(f"b{k}"),
         ]
     g = lagged.groupBy(key).agg(*aggs).where(F.col("n") >= min_hours)
@@ -701,17 +692,12 @@ def df_unitroot(series: DataFrame, key: str = "metric",
         (F.col("y") - F.lag("y", 1).over(w)).alias("z"),
     ).where(F.col("x").isNotNull())
     g = lagged.groupBy(key).agg(
-        F.count(F.lit(1)).cast(DEC).alias("m"),
-        F.sum(F.col("x").cast(DEC)).alias("sx"),
-        F.sum(F.col("z").cast(DEC)).alias("sz"),
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).alias("sxx"),
-        F.sum((F.col("z") * F.col("z")).cast(DEC)).alias("szz"),
-        F.sum((F.col("x") * F.col("z")).cast(DEC)).alias("sxz"),
+        *moments("x", "z", names="m sx sz sxx szz sxz"),
     ).where(F.col("m") >= min_hours)
     m = F.col("m")
-    cxx = m * F.col("sxx") - F.col("sx") * F.col("sx")
-    czz = m * F.col("szz") - F.col("sz") * F.col("sz")
-    cxz = m * F.col("sxz") - F.col("sx") * F.col("sz")
+    cxx = co_moment("m", "sx", "sx", "sxx")
+    czz = co_moment("m", "sz", "sz", "szz")
+    cxz = co_moment("m", "sx", "sz", "sxz")
     g = g.select(
         key, m.alias("mm"),
         _dbl(cxx).alias("dxx"), _dbl(czz).alias("dzz"),
@@ -788,18 +774,15 @@ def adf_augmented(series: DataFrame, key: str = "metric", p: int = 1,
 
     regs = ["x"] + [f"d{i}" for i in range(1, p + 1)]
     names = {r: str(i + 1) for i, r in enumerate(regs)}
-    aggs = [F.count(F.lit(1)).cast(DEC).alias("m"),
-            F.sum(F.col("z").cast(DEC)).alias("sy"),
-            F.sum((F.col("z") * F.col("z")).cast(DEC)).alias("syy")]
+    aggs = [*moments("z", names="m sy syy")]
     for r in regs:
-        aggs.append(F.sum(F.col(r).cast(DEC)).alias(f"s{names[r]}"))
-        aggs.append(F.sum((F.col(r) * F.col("z")).cast(DEC))
-                    .alias(f"s{names[r]}y"))
+        aggs.append(F.sum(wide(r)).alias(f"s{names[r]}"))
+        aggs.append(F.sum(wide(r) * wide("z")).alias(f"s{names[r]}y"))
     for a in range(len(regs)):
         for b in range(a, len(regs)):
             ra, rb = regs[a], regs[b]
             aggs.append(
-                F.sum((F.col(ra) * F.col(rb)).cast(DEC))
+                F.sum(wide(ra) * wide(rb))
                 .alias(f"s{names[ra]}{names[rb]}")
             )
     g = rows.groupBy(key).agg(*aggs).where(
@@ -879,11 +862,10 @@ def streak_report(series: DataFrame, key: str = "metric",
 
     Scale: one lag window + one cumulative window over per-metric DAY
     counts (tiny partitions at any corpus size), two hash-aggs."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long"))
+        F.sum(snap("value", value_decimals))
          .cast("long").alias("y")
     )
     w = Window.partitionBy(key).orderBy("day_ts")
@@ -959,18 +941,17 @@ def jarque_bera(series: DataFrame, key: str = "metric",
     Scale: one hash-agg to the per-metric day grid, one lag window
     over |days| rows per metric (calendar-bounded), one hash-agg —
     no raw-row second pass."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     w = Window.partitionBy(key).orderBy("day_ts")
     v = (F.col("y") - F.lag("y", 1).over(w))
     dd = d.select(key, v.alias("v")).where(F.col("v").isNotNull())
-    x = F.col("v").cast(DEC)
+    x = wide("v")
     g = dd.groupBy(key).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
+        wide(F.count(F.lit(1))).alias("n"),
         F.sum(x).alias("s1"),
         F.sum(x * x).alias("s2"),
         F.sum(x * x * x).alias("s3"),
@@ -978,12 +959,12 @@ def jarque_bera(series: DataFrame, key: str = "metric",
     ).where(F.col("n") >= int(min_deltas))
     n, s1, s2, s3, s4 = (F.col(c) for c in ("n", "s1", "s2", "s3",
                                             "s4"))
-    two, three, four, six = (F.lit(k).cast(DEC) for k in (2, 3, 4, 6))
+    two, three, four, six = (wide(F.lit(k)) for k in (2, 3, 4, 6))
     b = (n * s2 - s1 * s1).cast("double")
     a = (n * n * s3 - three * n * s1 * s2
          + two * s1 * s1 * s1).cast("double")
     c = (n * n * n * s4 - four * n * n * s1 * s3
-         + F.lit(6).cast(DEC) * n * s1 * s1 * s2
+         + six * n * s1 * s1 * s2
          - three * s1 * s1 * s1 * s1).cast("double")
     nd = n.cast("double")
     g1 = a / (b * F.sqrt(b))
@@ -1030,28 +1011,23 @@ def durbin_watson(series: DataFrame, key: str = "metric",
     Scale: one hash-agg to the per-metric day grid, one ordinal
     window + one broadcast-sized agg join, one lag window, one final
     hash-agg — every post-grid stage is calendar-bounded."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(F.round(F.col("value") * scale).cast("long")).alias("y")
+        F.sum(snap("value", value_decimals)).alias("y")
     )
     w = Window.partitionBy(key).orderBy("day_ts")
     dd = d.select(
         key, "day_ts",
-        F.col("y").cast(DEC).alias("y"),
-        (F.row_number().over(w) - 1).cast(DEC).alias("t"),
+        wide("y").alias("y"),
+        wide(F.row_number().over(w) - 1).alias("t"),
     )
     agg = dd.groupBy(key).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
-        F.sum("t").alias("st"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).alias("stt"),
-        F.sum(F.col("t") * F.col("y")).alias("sty"),
+        *moments("t", "y", names="n st sy stt - sty"),
     ).where(F.col("n") >= int(min_days))
     j = dd.join(F.broadcast(agg), key)
-    bx = F.col("n") * F.col("stt") - F.col("st") * F.col("st")
-    by = F.col("n") * F.col("sty") - F.col("st") * F.col("sy")
+    bx = co_moment("n", "st", "st", "stt")
+    by = co_moment("n", "st", "sy", "sty")
     e_t = (
         F.col("n") * bx * F.col("y") - bx * F.col("sy")
         + by * F.col("st") - F.col("n") * by * F.col("t")
@@ -1111,7 +1087,7 @@ def arch_lm(series: DataFrame, key: str = "metric",
     ).where(F.col("dy").isNotNull())
     z = d.select(
         key, "hour_ts",
-        (F.col("dy").cast(DEC) * F.col("dy").cast(DEC)).alias("z"),
+        (wide("dy") * wide("dy")).alias("z"),
     )
     p = z.select(
         key,
@@ -1119,7 +1095,7 @@ def arch_lm(series: DataFrame, key: str = "metric",
         F.lag("z", 1).over(w).alias("u"),
     ).where(F.col("u").isNotNull())
     g = p.groupBy(key).agg(
-        F.count(F.lit(1)).cast(DEC).alias("n"),
+        wide(F.count(F.lit(1))).alias("n"),
         F.sum("u").alias("su"),
         F.sum("v").alias("sv"),
         F.sum(F.col("u") * F.col("v")).alias("suv"),

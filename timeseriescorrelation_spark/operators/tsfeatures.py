@@ -15,13 +15,10 @@ feature after that runs over the tiny grid — per-(metric, day) frames
 are ≤24 rows of aggregates, so the family is 100-TB-safe regardless
 of raw turn count.
 
-Exactness recipe: ordinal patterns, template-match counts, and moment
-sums are exact integers (decimal(38,0) on Spark, hugeint on DuckDB);
-each feature is ONE identical double expression tree over those
-integers, rounded to 6 dp, so the engines agree bit-for-bit.  The
-sample-entropy tolerance is an INTEGER cent radius (not 0.2·σ in
-doubles) precisely so the |Δ| ≤ r comparisons never tie-break in
-float space.
+Exactness: `functions.exact` (ordinal patterns and template-match
+counts are exact integers too).  The sample-entropy tolerance is an
+INTEGER cent radius (not 0.2·σ in doubles) precisely so the |Δ| ≤ r
+comparisons never tie-break in float space.
 
 Sequence convention: features operate on the SEQUENCE of observed
 hourly values ordered by hour_ts — a grid gap splices neighbours
@@ -34,10 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.operators.crossmetric import (
-    DEC,
-    _hourly_cents,
-)
+from timeseriescorrelation_spark.functions.exact import wide
+from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
 def _dbl(c):
@@ -208,14 +203,14 @@ def hjorth_params(series: DataFrame, key: str = "metric",
     )
     g = t.groupBy(key, "day_ts").agg(
         F.count(F.lit(1)).alias("n0"),
-        F.sum(F.col("y").cast(DEC)).alias("s0"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).alias("q0"),
+        F.sum(wide("y")).alias("s0"),
+        F.sum(wide("y") * wide("y")).alias("q0"),
         F.count("d1").alias("n1"),
-        F.sum(F.col("d1").cast(DEC)).alias("s1"),
-        F.sum((F.col("d1") * F.col("d1")).cast(DEC)).alias("q1"),
+        F.sum(wide("d1")).alias("s1"),
+        F.sum(wide("d1") * wide("d1")).alias("q1"),
         F.count("d2").alias("n2"),
-        F.sum(F.col("d2").cast(DEC)).alias("s2"),
-        F.sum((F.col("d2") * F.col("d2")).cast(DEC)).alias("q2"),
+        F.sum(wide("d2")).alias("s2"),
+        F.sum(wide("d2") * wide("d2")).alias("q2"),
     ).where(F.col("n0") >= min_hours)
 
     def var(n, s, q):
@@ -229,9 +224,9 @@ def hjorth_params(series: DataFrame, key: str = "metric",
     # degeneracy guards on the exact INTEGER numerators (n·Σx²−(Σx)²):
     # Var(y)=0 (constant day) ⇒ mobility undefined ⇒ NULL;
     # Var(Δy)=0 (pure trend)  ⇒ mobility 0, complexity NULL.
-    num0 = (F.col("n0").cast(DEC) * F.col("q0")
+    num0 = (wide("n0") * wide("q0")
             - F.col("s0") * F.col("s0"))
-    num1 = (F.col("n1").cast(DEC) * F.col("q1")
+    num1 = (wide("n1") * wide("q1")
             - F.col("s1") * F.col("s1"))
     mob = F.sqrt(v1 / v0)
     return g.select(
@@ -286,22 +281,16 @@ def complexity_stats(series: DataFrame, key: str = "metric",
     )
     g = t.groupBy(key, "day_ts").agg(
         F.count(F.lit(1)).alias("n_hours"),
-        F.sum(F.col("a").cast(DEC)).alias("s"),
-        F.sum((F.col("a") * F.col("a")).cast(DEC)).alias("q"),
+        F.sum(wide("a")).alias("s"),
+        F.sum(wide("a") * wide("a")).alias("q"),
         F.sum(
-            ((F.col("b") - F.col("a"))
-             * (F.col("b") - F.col("a"))).cast(DEC)
+            wide(F.col("b") - F.col("a")) * wide(F.col("b") - F.col("a"))
         ).alias("dq"),
         F.count(F.col("c")).alias("n3"),
+        F.sum(wide("a") * wide("b") * wide("c")).alias("p3"),
         F.sum(
-            (F.col("a").cast(DEC) * F.col("b").cast(DEC)
-             * F.col("c").cast(DEC))
-        ).alias("p3"),
-        F.sum(
-            (F.col("b").cast(DEC) * F.col("b").cast(DEC)
-             * F.col("a").cast(DEC)
-             - F.col("a").cast(DEC) * F.col("a").cast(DEC)
-             * F.col("b").cast(DEC))
+            wide("b") * wide("b") * wide("a")
+            - wide("a") * wide("a") * wide("b")
         ).alias("tr"),
     ).where(F.col("n_hours") >= min_hours)
     nd = _dbl(F.col("n_hours"))
@@ -313,7 +302,7 @@ def complexity_stats(series: DataFrame, key: str = "metric",
     cube = F.lit(scale ** 3)
     # σ = 0 (constant day) ⇒ cid_norm undefined ⇒ NULL — guard on
     # the exact integer numerator, never the double.
-    vnum = (F.col("n_hours").cast(DEC) * F.col("q")
+    vnum = (wide("n_hours") * wide("q")
             - F.col("s") * F.col("s"))
     return g.select(
         key, "day_ts", F.col("n_hours").cast("long").alias("n_hours"),

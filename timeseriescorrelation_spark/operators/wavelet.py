@@ -20,10 +20,8 @@ arithmetic on integer inputs — no filter taps, no trig, no ln:
 
 (the normalized coefficient is d = D/2^{j/2}; ν²_j is the mean of d²,
 so the 2^j lands in the denominator once, after the integer sum).
-Every D and every D² is an exact integer; Σ D² is summed as
-decimal(38,0) (hugeint in DuckDB) so the only float operation in the
-whole operator is the final divide — bit-identical cross-engine by
-IEEE determinism.
+Every D and every D² is an exact integer, so the only float operation
+is the final divide (`functions.exact`).
 
 Scale notes (100 TB): raw scan → |keys|·|hours| grid rows in one
 map-side-combined hash-agg; the level explode multiplies the GRID
@@ -43,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.functions.exact import wide
 from timeseriescorrelation_spark.operators.acf import hourly_counts_dense
 
 
@@ -94,7 +93,7 @@ def haar_variance(series: DataFrame, keys: list[str] | None = None,
         .agg(
             F.count(F.lit(1)).alias("n_blocks"),
             F.sum(
-                (F.col("d") * F.col("d")).cast("decimal(38,0)")
+                wide("d") * wide("d")
             ).alias("ssq"),
         )
         .where(F.col("n_blocks") >= F.lit(min_blocks))

@@ -32,11 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.streaming.scan import (
-    micros,
-    snap_cents,
-    stateful_scan,
-)
+from timeseriescorrelation_spark.functions.exact import narrow, snap_np
+from timeseriescorrelation_spark.streaming.scan import micros, stateful_scan
 
 OUT_SCHEMA = ("metric_a string, metric_b string, day_ts timestamp, "
               "n_hours long, r double")
@@ -126,7 +123,7 @@ def stream_corr(stream: DataFrame, pairs: list[tuple[str, str]],
 
         ts_us = micros(pdf["ts"])
         side = pdf["side"].to_numpy(dtype=np.int64)
-        cents = snap_cents(pdf["value"].to_numpy(dtype=np.float64))
+        cents = snap_np(pdf["value"].to_numpy(dtype=np.float64), 2)
         for i in np.argsort(ts_us, kind="stable"):
             h = int(ts_us[i]) // HOUR_US * HOUR_US
             if open_h is None:
@@ -148,11 +145,9 @@ def stream_corr(stream: DataFrame, pairs: list[tuple[str, str]],
                 ob += int(cents[i])
                 onb += 1
 
-        new = (
-            int(open_h), int(oa), int(ona), int(ob), int(onb),
-            int(day_us), int(n), int(sa), int(sb), int(saa),
-            int(sbb), int(sab),
-        )
+        new = tuple(narrow(x) for x in (
+            open_h, oa, ona, ob, onb, day_us, n, sa, sb, saa, sbb, sab,
+        ))
         if not rows:
             return new, None
         return new, pd.DataFrame(

@@ -19,9 +19,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from timeseriescorrelation_spark.functions.exact import snap_np
 from timeseriescorrelation_spark.streaming.scan import (
     ordered_live,
-    snap_cents,
     stateful_scan,
 )
 
@@ -46,7 +46,7 @@ def stream_cusum(stream: DataFrame, mu: float, sigma: float,
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
-        p = p0 + np.cumsum(snap_cents(vals) - mu_c)
+        p = p0 + np.cumsum(snap_np(vals, 2) - mu_c)
         # running extrema seeded by state: min(0, lo0, min p), identical
         # to the batch least(0, min over prefix)
         lo = np.minimum(np.minimum(np.minimum.accumulate(p), lo0), 0)

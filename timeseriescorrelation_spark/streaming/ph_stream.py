@@ -32,9 +32,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from timeseriescorrelation_spark.functions.exact import snap_np
 from timeseriescorrelation_spark.streaming.scan import (
     ordered_live,
-    snap_cents,
     stateful_scan,
 )
 
@@ -68,7 +68,7 @@ def stream_page_hinkley(stream: DataFrame, delta: float = 0.0,
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
         # cent snap, then micro-cent fixed point
-        cents = snap_cents(vals)
+        cents = snap_np(vals, 2)
         ph = np.empty(len(cents), dtype=np.float64)
         alert = np.empty(len(cents), dtype=bool)
         for i, c in enumerate(cents):

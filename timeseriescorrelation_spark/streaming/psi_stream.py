@@ -24,11 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from timeseriescorrelation_spark.streaming.scan import (
-    micros,
-    snap_cents,
-    stateful_scan,
-)
+from timeseriescorrelation_spark.functions.exact import snap_np
+from timeseriescorrelation_spark.streaming.scan import micros, stateful_scan
 
 OUT_SCHEMA = "metric string, hour_ts timestamp, n_total long, psi double"
 HOUR_US = 3_600_000_000
@@ -79,7 +76,7 @@ def stream_psi(stream: DataFrame, edges: list[float],
         if open_h is not None:
             live = hours >= open_h
             hours, vals = hours[live], vals[live]
-        bins = np.searchsorted(edges_c, snap_cents(vals), side="left")
+        bins = np.searchsorted(edges_c, snap_np(vals, 2), side="left")
         for h in np.unique(hours):
             if open_h is not None and h > open_h:
                 closed += opened

@@ -46,16 +46,6 @@ def micros(col: pd.Series) -> np.ndarray:
     return col.to_numpy().astype("datetime64[us]").view(np.int64)
 
 
-def snap_cents(vals: np.ndarray) -> np.ndarray:
-    """Values → int64 cents, rounding half away from zero (matches
-    Spark F.round / DuckDB round; np.rint is half-even and diverges at
-    .5 cents)."""
-    x = vals * 100
-    return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(
-        np.int64
-    )
-
-
 def ordered_live(pdf: pd.DataFrame, ts_col: str, tie_col: str,
                  last_ts: int | None, last_idx: int | None):
     """(ts, tie)-ordered rows of ``pdf`` past the replay cutoff →

@@ -22,9 +22,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from timeseriescorrelation_spark.functions.exact import (
+    narrow,
+    snap_np,
+    wide_np,
+)
 from timeseriescorrelation_spark.streaming.scan import (
     ordered_live,
-    snap_cents,
     stateful_scan,
 )
 
@@ -48,10 +52,11 @@ def stream_zscore(stream: DataFrame, min_n: int = 3,
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
-        v = snap_cents(vals)
+        v = wide_np(snap_np(vals, 2))
         k = len(v)
         # expanding priors: state + everything earlier in this (sorted)
-        # batch — exact int64 throughout
+        # batch — exact integers throughout: n·Σx² leaves int64 long
+        # before Σx² does, and numpy would wrap it silently
         cn = n0 + np.arange(k, dtype=np.int64)
         cs = s0 + np.cumsum(v) - v
         css = ss0 + np.cumsum(v * v) - v * v
@@ -68,7 +73,7 @@ def stream_zscore(stream: DataFrame, min_n: int = 3,
         z_col[~ok] = pd.NA
         new = (
             int(ts_us[-1]), int(idx[-1]), int(cn[-1] + 1),
-            int(cs[-1] + v[-1]), int(css[-1] + v[-1] * v[-1]),
+            narrow(cs[-1] + v[-1]), narrow(css[-1] + v[-1] * v[-1]),
         )
         return new, pd.DataFrame(
             {
