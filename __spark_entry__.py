@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry()      — flagship: full rollup cascade on sf0.001 events → 1h tier.
-queries()    — one entry per implemented operator (SURVEY.md §2).
+queries()    — every `q_<key>` builder below, keyed by <key> (SURVEY.md §2).
 oracle_sql() — DuckDB-equivalent ANSI SQL per query key.
 
 Events table is the stand-in transcript stream for the driver harness
@@ -457,7 +457,7 @@ def clear_graph_cache() -> None:
     rebuilds rather than reading blocks a lost executor dropped)."""
     for df in _GRAPH_CACHE.values():
         try:
-            df.unpersist()
+            df.unpersist(blocking=True)
         except Exception:
             pass  # session already stopped — blocks died with it
     _GRAPH_CACHE.clear()
@@ -740,8 +740,8 @@ def q_retention_counts(spark, sf_dir):
     # build the cascade with each tier cached: the report consumes all
     # three tiers, and uncached lineage would recompute 1m three times
     # (once inline and once under each coarser tier)
-    t1m = rollup_raw(s, "1m").cache()
-    t1h = rollup_tier(t1m, "1h").cache()
+    t1m = cache_once(rollup_raw(s, "1m"))
+    t1h = cache_once(rollup_tier(t1m, "1h"))
     tiers = {"1m": t1m, "1h": t1h, "1d": rollup_tier(t1h, "1d")}
     now_df = s.agg(F.max("ts").alias("_now"))
     rep = retention_report(
@@ -7488,7 +7488,7 @@ def q_cdc_snapshot(spark, sf_dir):
     )
 
 
-def q_modularity(spark, sf_dir):
+def q_modularity_lpa(spark, sf_dir):
     """Newman modularity per label-propagation community on the
     minute-grain co-activity graph — scores the partition on the very
     graph that produced it (see graphrank.modularity)."""
@@ -8235,442 +8235,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "rollup_1m": q_rollup_1m,
-        "rollup_1h": q_rollup_1h,
-        "rollup_1d": q_rollup_1d,
-        "rollup_5m": q_rollup_5m,
-        "locf_1h": q_locf_1h,
-        "stats_per_user": q_stats_per_user,
-        "lag_delta": q_lag_delta,
-        "topk_per_user": q_topk_per_user,
-        "filter_range": q_filter_range,
-        "distinct_users": q_distinct_users,
-        "rollup_summary_1d": q_rollup_summary_1d,
-        "interp_1h": q_interp_1h,
-        "locf_bounded_1h": q_locf_bounded_1h,
-        "series_metrics": q_series_metrics,
-        "corr_report": q_corr_report,
-        "spearman_pruned": q_spearman_pruned,
-        "corr_pairs_hourly": q_corr_pairs_hourly,
-        "join_broadcast_rev": q_join_broadcast_rev,
-        "anti_join_inactive": q_anti_join_inactive,
-        "set_ops_users": q_set_ops_users,
-        "props_extract": q_props_extract,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "emb_neardup": q_emb_neardup,
-        "ann_topk": q_ann_topk,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_kmeans": q_ann_ivf_kmeans,
-        "rolling_1h": q_rolling_1h,
-        "value_quantiles": q_value_quantiles,
-        "histogram_value": q_histogram_value,
-        "clip_p99": q_clip_p99,
-        "topk_global": q_topk_global,
-        "dedup_keep": q_dedup_keep,
-        "split_counts": q_split_counts,
-        "sample_hash": q_sample_hash,
-        "event_sessions": q_event_sessions,
-        "asof_last_error": q_asof_last_error,
-        "pivot_metrics": q_pivot_metrics,
-        "retention_counts": q_retention_counts,
-        "text_stats": q_text_stats,
-        "text_langid": q_text_langid,
-        "text_normalize": q_text_normalize,
-        "doc_fingerprint": q_doc_fingerprint,
-        "mm_meta": q_mm_meta,
-        "mm_frames": q_mm_frames,
-        "session_stats": q_session_stats,
-        "stats_salted": q_stats_salted,
-        "chunk_roundtrip": q_chunk_roundtrip,
-        "rechunk_roundtrip": q_rechunk_roundtrip,
-        "chunk_stats": q_chunk_stats,
-        "m4_1h": q_m4_1h,
-        "rate_1h": q_rate_1h,
-        "anomaly_1h": q_anomaly_1h,
-        "autocorr_lag1": q_autocorr_lag1,
-        "xcorr_lagged": q_xcorr_lagged,
-        "latency_percentiles": q_latency_percentiles,
-        "distinct_convs_1h": q_distinct_convs_1h,
-        "decontaminate": q_decontaminate,
-        "doc_repetition": q_doc_repetition,
-        "quantiles_scalable": q_quantiles_scalable,
-        "ewma_smooth": q_ewma_smooth,
-        "rollup_realtime_1h": q_rollup_realtime_1h,
-        "event_transitions": q_event_transitions,
-        "funnel_3step": q_funnel_3step,
-        "token_topk": q_token_topk,
-        "twa_1h": q_twa_1h,
-        "heartbeat_day": q_heartbeat_day,
-        "state_durations": q_state_durations,
-        "hll_distinct_day": q_hll_distinct_day,
-        "cms_tokens": q_cms_tokens,
-        "hdr_quantiles_day": q_hdr_quantiles_day,
-        "rolling_corr_1h": q_rolling_corr_1h,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "tier_upsert_1h": q_tier_upsert_1h,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_editdist": q_dedup_editdist,
-        "stratified_sample": q_stratified_sample,
-        "rank_family": q_rank_family,
-        "profile_events": q_profile_events,
-        "cusum_alerts": q_cusum_alerts,
-        "session_overlap": q_session_overlap,
-        "seasonal_profile": q_seasonal_profile,
-        "wow_delta": q_wow_delta,
-        "gap_report": q_gap_report,
-        "staleness_report": q_staleness_report,
-        "rolling_p95_1h": q_rolling_p95_1h,
-        "emb_clusters": q_emb_clusters,
-        "unpivot_tier": q_unpivot_tier,
-        "term_salience": q_term_salience,
-        "cohort_retention": q_cohort_retention,
-        "conv_lifetimes": q_conv_lifetimes,
-        "emb_centroid": q_emb_centroid,
-        "text_scrub": q_text_scrub,
-        "doc_chunks": q_doc_chunks,
-        "asof_tolerant": q_asof_tolerant,
-        "tier_consistency": q_tier_consistency,
-        "mad_outliers": q_mad_outliers,
-        "cube_counts": q_cube_counts,
-        "spearman_pairs": q_spearman_pairs,
-        "trend_daily": q_trend_daily,
-        "concurrency_1h": q_concurrency_1h,
-        "chunk_dedup": q_chunk_dedup,
-        "lttb_1h": q_lttb_1h,
-        "des_brown": q_des_brown,
-        "heatmap_bins": q_heatmap_bins,
-        "minmax_scale": q_minmax_scale,
-        "conv_digest": q_conv_digest,
-        "asof_forward": q_asof_forward,
-        "asof_nearest": q_asof_nearest,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q3": q_tpch_q3,
-        "acf_hourly": q_acf_hourly,
-        "dominant_period": q_dominant_period,
-        "sax_daily": q_sax_daily,
-        "bm25_search": q_bm25_search,
-        "dedup_prefix_jaccard": q_dedup_prefix_jaccard,
-        "doc_surprisal": q_doc_surprisal,
-        "source_drift": q_source_drift,
-        "collocations_pmi": q_collocations_pmi,
-        "phrase_search": q_phrase_search,
-        "skew_report": q_skew_report,
-        "forecast_eval": q_forecast_eval,
-        "pagerank_events": q_pagerank_events,
-        "pagerank_dangling": q_pagerank_dangling,
-        "changepoint_daily": q_changepoint_daily,
-        "burst_hours": q_burst_hours,
-        "theil_sen": q_theil_sen,
-        "corr_matrix_daily": q_corr_matrix_daily,
-        "granger_gain": q_granger_gain,
-        "mutual_info": q_mutual_info,
-        "beta_daily": q_beta_daily,
-        "js_drift": q_js_drift,
-        "gini_daily": q_gini_daily,
-        "na_hazard": q_na_hazard,
-        "dow_anova": q_dow_anova,
-        "lead_lag": q_lead_lag,
-        "error_wilson": q_error_wilson,
-        "trimmed_mean": q_trimmed_mean,
-        "peak_census": q_peak_census,
-        "vocab_growth": q_vocab_growth,
-        "ks_drift": q_ks_drift,
-        "entropy_daily": q_entropy_daily,
-        "benford": q_benford,
-        "ann_pq": q_ann_pq,
-        "quantile_transform": q_quantile_transform,
-        "dtw_daily": q_dtw_daily,
-        "assoc_rules": q_assoc_rules,
-        "bpe_vocab": q_bpe_vocab,
-        "trigram_paths": q_trigram_paths,
-        "sliding_quota": q_sliding_quota,
-        "changepoints_multi": q_changepoints_multi,
-        "hybrid_search": q_hybrid_search,
-        "seasonal_strength": q_seasonal_strength,
-        "hll_overlap": q_hll_overlap,
-        "km_survival": q_km_survival,
-        "mann_kendall": q_mann_kendall,
-        "bigram_surprisal": q_bigram_surprisal,
-        "activity_islands": q_activity_islands,
-        "rfm_features": q_rfm_features,
-        "seasonal_mad": q_seasonal_mad,
-        "hll_rolling_7d": q_hll_rolling_7d,
-        "scd2_state": q_scd2_state,
-        "weighted_sample": q_weighted_sample,
-        "seq_packing": q_seq_packing,
-        "psi_daily": q_psi_daily,
-        "ann_ivf_pq": q_ann_ivf_pq,
-        "dedup_canonical": q_dedup_canonical,
-        "funnel_timed": q_funnel_timed,
-        "dedup_triangles": q_dedup_triangles,
-        "dq_report": q_dq_report,
-        "ab_readout": q_ab_readout,
-        "stl_lite": q_stl_lite,
-        "trailing_active_24h": q_trailing_active_24h,
-        "burstiness_daily": q_burstiness_daily,
-        "weighted_median": q_weighted_median,
-        "sax_motifs": q_sax_motifs,
-        "decayed_topk": q_decayed_topk,
-        "kanon_report": q_kanon_report,
-        "conformal_pvalue": q_conformal_pvalue,
-        "centroid_drift": q_centroid_drift,
-        "ann_dim_ablation": q_ann_dim_ablation,
-        "expanding_zscore": q_expanding_zscore,
-        "growth_accounting": q_growth_accounting,
-        "ann_int8": q_ann_int8,
-        "holt_winters": q_holt_winters,
-        "tpch_q5": q_tpch_q5,
-        "tpch_q6": q_tpch_q6,
-        "tpch_q18": q_tpch_q18,
-        "current_pctile": q_current_pctile,
-        "heavy_hitters": q_heavy_hitters,
-        "drawdown_daily": q_drawdown_daily,
-        "corr_clusters": q_corr_clusters,
-        "attribution": q_attribution,
-        "ab_cuped": q_ab_cuped,
-        "mm_audio": q_mm_audio,
-        "sessions_capped": q_sessions_capped,
-        "pattern_matches": q_pattern_matches,
-        "scd2_enrich": q_scd2_enrich,
-        "fk_orphans": q_fk_orphans,
-        "bfs_reach": q_bfs_reach,
-        "emd_drift": q_emd_drift,
-        "mix_weights": q_mix_weights,
-        "markov_entropy": q_markov_entropy,
-        "periodogram": q_periodogram,
-        "fano_factor": q_fano_factor,
-        "cluster_terms": q_cluster_terms,
-        "moments": q_moments,
-        "partial_corr": q_partial_corr,
-        "hurst": q_hurst,
-        "cusum_fixed": q_cusum_fixed,
-        "zipf_fit": q_zipf_fit,
-        "dedup_cross_source": q_dedup_cross_source,
-        "source_scorecard": q_source_scorecard,
-        "assortativity": q_assortativity,
-        "psi_fixed": q_psi_fixed,
-        "heavy_hitters_verified": q_heavy_hitters_verified,
-        "tpch_q4": q_tpch_q4,
-        "tpch_q10": q_tpch_q10,
-        "tpch_q14": q_tpch_q14,
-        "tpch_q19": q_tpch_q19,
-        "tpch_q7": q_tpch_q7,
-        "tpch_q8": q_tpch_q8,
-        "tpch_q9": q_tpch_q9,
-        "tpch_q13": q_tpch_q13,
-        "tpch_q15": q_tpch_q15,
-        "tpch_q17": q_tpch_q17,
-        "tpch_q22": q_tpch_q22,
-        "tpch_q2": q_tpch_q2,
-        "tpch_q11": q_tpch_q11,
-        "tpch_q12": q_tpch_q12,
-        "tpch_q16": q_tpch_q16,
-        "tpch_q20": q_tpch_q20,
-        "tpch_q21": q_tpch_q21,
-        "hill_tail": q_hill_tail,
-        "fleet_coverage": q_fleet_coverage,
-        "edge_similarity": q_edge_similarity,
-        "ols_multi": q_ols_multi,
-        "dsir_weights": q_dsir_weights,
-        "textrank_keywords": q_textrank_keywords,
-        "emb_cov": q_emb_cov,
-        "emb_cov_gram": q_emb_cov_gram,
-        "triplet_mining": q_triplet_mining,
-        "bitmap_retention": q_bitmap_retention,
-        "rolling_slope_24h": q_rolling_slope_24h,
-        "corr_upsert": q_corr_upsert,
-        "kcore_events": q_kcore_events,
-        "adamic_adar": q_adamic_adar,
-        "cvar_daily": q_cvar_daily,
-        "conv_quality": q_conv_quality,
-        "dedup_containment": q_dedup_containment,
-        "label_prop": q_label_prop,
-        "emb_auc": q_emb_auc,
-        "bootstrap_ci": q_bootstrap_ci,
-        "markov_accuracy": q_markov_accuracy,
-        "stl_anomaly": q_stl_anomaly,
-        "ndcg_int8": q_ndcg_int8,
-        "did_readout": q_did_readout,
-        "rbo_int8": q_rbo_int8,
-        "slo_burn": q_slo_burn,
-        "fdr_anomalies": q_fdr_anomalies,
-        "dedup_incremental": q_dedup_incremental,
-        "dq_sequence": q_dq_sequence,
-        "markov_calibration": q_markov_calibration,
-        "clustering_coeff": q_clustering_coeff,
-        "mrr_int8": q_mrr_int8,
-        "croston": q_croston,
-        "rate_decomposition": q_rate_decomposition,
-        "prune_sweep": q_prune_sweep,
-        "ar2_forecast": q_ar2_forecast,
-        "variance_ratio": q_variance_ratio,
-        "runs_test": q_runs_test,
-        "turning_points": q_turning_points,
-        "allan_variance": q_allan_variance,
-        "page_hinkley": q_page_hinkley,
-        "ljung_box": q_ljung_box,
-        "chi2_independence": q_chi2_independence,
-        "kruskal_wallis": q_kruskal_wallis,
-        "sign_test_dod": q_sign_test_dod,
-        "record_counts": q_record_counts,
-        "engle_granger": q_engle_granger,
-        "transfer_entropy": q_transfer_entropy,
-        "pacf": q_pacf,
-        "l_diversity": q_l_diversity,
-        "category_churn": q_category_churn,
-        "newey_west": q_newey_west,
-        "kpss_level": q_kpss_level,
-        "df_unitroot": q_df_unitroot,
-        "adf_augmented": q_adf_augmented,
-        "ewma_chart": q_ewma_chart,
-        "its_readout": q_its_readout,
-        "lang_temperature": q_lang_temperature,
-        "coverage_greedy": q_coverage_greedy,
-        "ppr_terms": q_ppr_terms,
-        "weibull_fit": q_weibull_fit,
-        "huber_trend": q_huber_trend,
-        "ohlc_daily": q_ohlc_daily,
-        "bland_altman": q_bland_altman,
-        "ess_hourly": q_ess_hourly,
-        "minhash_error": q_minhash_error,
-        "burrows_delta": q_burrows_delta,
-        "retention_decay": q_retention_decay,
-        "emb_anisotropy": q_emb_anisotropy,
-        "markov_absorption": q_markov_absorption,
-        "xmr_chart": q_xmr_chart,
-        "process_capability": q_process_capability,
-        "g_chart": q_g_chart,
-        "exit_rates": q_exit_rates,
-        "u_chart": q_u_chart,
-        "forecast_baselines": q_forecast_baselines,
-        "cdc_snapshot": q_cdc_snapshot,
-        "kmv_overlap": q_kmv_overlap,
-        "emb_mahalanobis": q_emb_mahalanobis,
-        "ipw_strata": q_ipw_strata,
-        "theta_forecast": q_theta_forecast,
-        "dp_release": q_dp_release,
-        "streak_report": q_streak_report,
-        "heaps_fit": q_heaps_fit,
-        "theta_backtest": q_theta_backtest,
-        "ccc_pairs": q_ccc_pairs,
-        "corr_deseasonalized": q_corr_deseasonalized,
-        "corr_winsorized": q_corr_winsorized,
-        "rank_churn": q_rank_churn,
-        "allen_census": q_allen_census,
-        "pair_scorecard": q_pair_scorecard,
-        "kendall_tau": q_kendall_tau,
-        "apdex_hourly": q_apdex_hourly,
-        "theil_daily": q_theil_daily,
-        "panel_fe": q_panel_fe,
-        "emb_pca": q_emb_pca,
-        "text_readability": q_text_readability,
-        "isotonic_calibration": q_isotonic_calibration,
-        "capacity_projection": q_capacity_projection,
-        "t_closeness": q_t_closeness,
-        "icc_oneway": q_icc_oneway,
-        "cronbach_alpha": q_cronbach_alpha,
-        "friedman_test": q_friedman_test,
-        "cohen_kappa": q_cohen_kappa,
-        "littles_law": q_littles_law,
-        "mtbf_mttr": q_mtbf_mttr,
-        "p_chart": q_p_chart,
-        "c_chart": q_c_chart,
-        "hhi_hourly": q_hhi_hourly,
-        "atkinson_daily": q_atkinson_daily,
-        "grubbs_daily": q_grubbs_daily,
-        "crossing_rate": q_crossing_rate,
-        "reciprocity": q_reciprocity,
-        "silhouette": q_silhouette,
-        "stickiness_daily": q_stickiness_daily,
-        "lorenz_deciles": q_lorenz_deciles,
-        "odds_ratio_weekend": q_odds_ratio_weekend,
-        "semivariogram": q_semivariogram,
-        "logrank_weekend": q_logrank_weekend,
-        "hapax_share": q_hapax_share,
-        "cox_weekend": q_cox_weekend,
-        "gumbel_maxima": q_gumbel_maxima,
-        "circadian_phase": q_circadian_phase,
-        "lateness_audit": q_lateness_audit,
-        "median_survival": q_median_survival,
-        "kendall_w": q_kendall_w,
-        "harmonic_regression": q_harmonic_regression,
-        "charset_report": q_charset_report,
-        "doc_compressibility": q_doc_compressibility,
-        "spectral_entropy": q_spectral_entropy,
-        "sprt_readout": q_sprt_readout,
-        "distance_corr": q_distance_corr,
-        "energy_distance": q_energy_distance,
-        "brier_decomposition": q_brier_decomposition,
-        "pettitt_test": q_pettitt_test,
-        "welch_t": q_welch_t,
-        "mann_whitney": q_mann_whitney,
-        "wilcoxon_signed": q_wilcoxon_signed,
-        "brown_forsythe": q_brown_forsythe,
-        "fdr_pettitt": q_fdr_pettitt,
-        "chi2_cells": q_chi2_cells,
-        "jarque_bera": q_jarque_bera,
-        "durbin_watson": q_durbin_watson,
-        "effect_sizes": q_effect_sizes,
-        "seasonal_mk": q_seasonal_mk,
-        "dispersion_test": q_dispersion_test,
-        "rate_ratio": q_rate_ratio,
-        "cohort_ltv": q_cohort_ltv,
-        "we_rules": q_we_rules,
-        "char_entropy": q_char_entropy,
-        "tail_dependence": q_tail_dependence,
-        "coburst_jaccard": q_coburst_jaccard,
-        "hod_quantile_bands": q_hod_quantile_bands,
-        "permutation_entropy": q_permutation_entropy,
-        "sample_entropy": q_sample_entropy,
-        "hjorth_params": q_hjorth_params,
-        "complexity_stats": q_complexity_stats,
-        "rsi_cutler": q_rsi_cutler,
-        "wavelet_variance": q_wavelet_variance,
-        "lomb_scargle": q_lomb_scargle,
-        "matrix_profile": q_matrix_profile,
-        "gpd_tail": q_gpd_tail,
-        "hits_events": q_hits_events,
-        "kalman_level": q_kalman_level,
-        "cross_coherence": q_cross_coherence,
-        "dfa_fluctuation": q_dfa_fluctuation,
-        "erlang_staffing": q_erlang_staffing,
-        "code_likeness": q_code_likeness,
-        "emb_mmd": q_emb_mmd,
-        "boilerplate_ngrams": q_boilerplate_ngrams,
-        "modularity_lpa": q_modularity,
-        "bollinger_daily": q_bollinger_daily,
-        "stochastic_k": q_stochastic_k,
-        "range_volatility": q_range_volatility,
-        "mcnemar_wow": q_mcnemar_wow,
-        "cochran_q": q_cochran_q,
-        "cvm_weekend": q_cvm_weekend,
-        "mood_weekend": q_mood_weekend,
-        "arch_lm": q_arch_lm,
-        "segmented_trend": q_segmented_trend,
-        "recovery_after_error": q_recovery_after_error,
-        "trigram_novelty": q_trigram_novelty,
-        "lad_trend": q_lad_trend,
-        "skyline_users": q_skyline_users,
-        "langid_confusion": q_langid_confusion,
-        "counter_rate": q_counter_rate,
-        "histogram_p95": q_histogram_p95,
-        "corr_grain_audit": q_corr_grain_audit,
-        "time_to_nth": q_time_to_nth,
-        "esd_outliers": q_esd_outliers,
-        "gmd_daily": q_gmd_daily,
-        "nw_align": q_nw_align,
-        "sw_align": q_sw_align,
-        "xcorr_prewhitened": q_xcorr_prewhitened,
-        "tier_info_loss": q_tier_info_loss,
-        "logit_fit": q_logit_fit,
-        "isotonic_trend": q_isotonic_trend,
-        "dow_contrasts": q_dow_contrasts,
-        "capture_recapture": q_capture_recapture,
-    }
+    """Every query key, declared once by its `q_<key>` builder here."""
+    return {name[2:]: fn for name, fn in globals().items()
+            if name.startswith("q_")}
 
 
 # shared CTE prefix: word-trigram shingles + rank vocabulary + ids,

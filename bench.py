@@ -434,9 +434,29 @@ HEADLINE_R4 = [
 # compositions)
 HEADLINE_R5 = [
     "emb_cov_gram",
-    "prune_sweep",
     "coverage_greedy",
 ]
+
+# Every benched key sits in exactly one cohort, the round that added it
+# (tests/test_query_keys.py); the order is the order of the rounds.
+COHORTS = {"r02": HEADLINE, "r03": HEADLINE_R3, "r04": HEADLINE_R4,
+           "r05": HEADLINE_R5}
+
+
+def cohort_totals(timings: dict[str, float]) -> dict[str, float]:
+    """`r<n>_additions_total` per cohort after the first, and
+    `frozen_r<nn>_total` over that cohort and every earlier one."""
+    out: dict[str, float] = {}
+    frozen: set[str] = set()
+    for i, (rnd, names) in enumerate(COHORTS.items()):
+        frozen |= set(names)
+        if i:
+            added = set(names)
+            out[f"r{int(rnd[1:])}_additions_total"] = round(
+                sum(t for n, t in timings.items() if n in added), 3)
+        out[f"frozen_{rnd}_total"] = round(
+            sum(t for n, t in timings.items() if n in frozen), 3)
+    return out
 
 
 def _materialize(df) -> None:
@@ -525,7 +545,7 @@ def main() -> None:
     # sf1 stress pass to time the bounded-n/quadratic suspects first
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     only_set = set(only.split(",")) if only else None
-    for name in [*HEADLINE, *HEADLINE_R3, *HEADLINE_R4, *HEADLINE_R5]:
+    for name in [n for names in COHORTS.values() for n in names]:
         if name not in qs:
             continue
         if only_set is not None and name not in only_set:
@@ -558,29 +578,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "frozen_r02_total": round(
-            sum(t for n, t in timings.items() if n in HEADLINE), 3
-        ),
-        "r3_additions_total": round(
-            sum(t for n, t in timings.items() if n in HEADLINE_R3), 3
-        ),
-        "frozen_r03_total": round(
-            sum(t for n, t in timings.items()
-                if n in HEADLINE or n in HEADLINE_R3), 3
-        ),
-        "r4_additions_total": round(
-            sum(t for n, t in timings.items() if n in HEADLINE_R4), 3
-        ),
-        # r4 verdict #10: HEADLINE_R4 is now frozen too, so round 5+
-        # stays per-cohort comparable across all closed rounds
-        "frozen_r04_total": round(
-            sum(t for n, t in timings.items()
-                if n in HEADLINE or n in HEADLINE_R3
-                or n in HEADLINE_R4), 3
-        ),
-        "r5_additions_total": round(
-            sum(t for n, t in timings.items() if n in HEADLINE_R5), 3
-        ),
+        **cohort_totals(timings),
         "sf": sf,
         "cpus": int(cpus),
     }

@@ -3,6 +3,9 @@ queries()[k] on Spark and oracle_sql()[k] on DuckDB at a given sf dir,
 compare row count, sorted column names, and order-insensitive values.
 
 Usage: python scripts/check_oracle.py [sf_dir] [key ...]
+
+Prints one OK/FAIL/SKIP line per key, then the totals as
+`OK n / FAIL n / SKIP n`.
 """
 
 from __future__ import annotations
@@ -53,6 +56,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    passed = skipped = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -64,6 +68,7 @@ def main() -> int:
             continue
         if name not in oracles:
             print(f"SKIP {name}: no oracle (rows-only check) rows={len(got)}")
+            skipped += 1
             continue
         try:
             want = normalize(con.sql(oracles[name]).df())
@@ -92,9 +97,11 @@ def main() -> int:
             print(f"FAIL {name}: {'; '.join(problems)}")
         else:
             print(f"OK   {name}: rows={len(got)}")
+            passed += 1
 
     entrymod.clear_graph_cache()  # release session-pinned graphs
     spark.stop()
+    print(f"OK {passed} / FAIL {len(failures)} / SKIP {skipped}")
     return 1 if failures else 0
 
 

@@ -39,7 +39,6 @@ P31 = (1 << 31) - 1  # Mersenne prime 2^31-1, the affine-hash modulus
 # legacy small constants (kept for the positional fingerprint, where
 # min-wise mixing doesn't matter — it's a sum, not a min)
 A_MUL = 7919
-B_MUL = 104729
 B_ADD = 12345
 
 # MinHash/SimHash affine family h_j(x) = (A_J[j]*x + B_J[j]) mod P31.

@@ -29,6 +29,7 @@ from timeseriescorrelation_spark.functions.exact import (
     snap_np,
     wide,
 )
+from timeseriescorrelation_spark.session import cache_once
 
 
 def _to_double(col):
@@ -334,7 +335,7 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, n_iter: int = 2,
     math, and the corpus is never collected.  n_iter is small and fixed
     (Lloyd's converges fast on clustered data; unrolled iterations also
     keep the lineage bounded)."""
-    unit = with_unit_vectors(emb, vec_col, id_col).cache()
+    unit = cache_once(with_unit_vectors(emb, vec_col, id_col))
     assigned = unit.select(
         "vec_id", "v",
         F.pmod(F.col("vec_id"), F.lit(k)).cast("int").alias("cell"),
@@ -347,10 +348,10 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, n_iter: int = 2,
     # single action (a count per iteration costs ~2x in job overhead);
     # the intermediate caches and the corpus cache are then released,
     # so a long-lived session retains only the final k-row table.
-    cents = _mean_centroids(assigned).cache()
+    cents = cache_once(_mean_centroids(assigned))
     intermediates = [cents]
     for _ in range(n_iter):
-        cents = _mean_centroids(_assign_cells(unit, cents)).cache()
+        cents = cache_once(_mean_centroids(_assign_cells(unit, cents)))
         intermediates.append(cents)
     final = intermediates.pop()
     final.count()

@@ -19,7 +19,7 @@ vectors for every conversation that lasted ≥ m steps.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -32,16 +32,17 @@ from timeseriescorrelation_spark.operators.rollup import rollup_raw, rollup_tier
 from timeseriescorrelation_spark.operators.series import derive_series
 
 
+FILL_STEP = "1m"
+CHUNK = "day"
+CORR_METRIC = "token_len"
+CORR_THETA = 0.9
+CORR_STEPS = 64  # relative grid length m
+
+
 @dataclass
 class PipelineConfig:
     run_id: str = "run0"
     n_parts: int = 64
-    fill_step: str = "1m"
-    chunk: str = "day"
-    corr_metric: str = "token_len"
-    corr_theta: float = 0.9
-    corr_steps: int = 64  # relative grid length m
-    corr_step: str = "1m"
     stages: tuple = ("series", "filled_1m", "agg_1m", "agg_1h", "agg_1d", "chunks")
 
 
@@ -119,7 +120,7 @@ def run(
     if "filled_1m" in cfg.stages:
         out["filled_1m"] = stage(
             "filled_1m", dep("series"),
-            lambda df: fill_locf(df, cfg.fill_step),
+            lambda df: fill_locf(df, FILL_STEP),
         )
 
     if "agg_1m" in cfg.stages:
@@ -137,14 +138,14 @@ def run(
 
     if "chunks" in cfg.stages:
         out["chunks"] = stage(
-            "chunks", dep("series"), lambda df: encode_chunks(df, cfg.chunk)
+            "chunks", dep("series"), lambda df: encode_chunks(df, CHUNK)
         )
 
     if "corr" in cfg.stages:
         aligned = align_relative(
-            dep("filled_1m"), cfg.corr_metric, cfg.corr_steps, 60
+            dep("filled_1m"), CORR_METRIC, CORR_STEPS, 60
         )
-        report, counters = corr_report(aligned, cfg.corr_theta)
+        report, counters = corr_report(aligned, CORR_THETA)
         out["corr"] = report
         out["corr_counters"] = counters  # type: ignore[assignment]
 

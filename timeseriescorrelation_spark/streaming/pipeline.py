@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.schemas import tier_schema
 from timeseriescorrelation_spark.streaming.dedup_stream import stream_dedup
 from timeseriescorrelation_spark.streaming.rollup_stream import (
+    SERIES_SCHEMA,
     run_available_now,
     stream_rollup_1m,
 )
@@ -48,10 +49,6 @@ from timeseriescorrelation_spark.streaming.stateful_fill import (
     stream_fill_locf,
 )
 
-SERIES_SCHEMA = (
-    "conv_id string, metric string, ts timestamp, "
-    "turn_idx int, value double"
-)
 DEDUP_KEYS = ("conv_id", "metric", "turn_idx")
 
 

@@ -20,18 +20,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+SERIES_SCHEMA = (
+    "conv_id string, metric string, ts timestamp, "
+    "turn_idx int, value double"
+)
+
 
 def read_series_stream(spark: SparkSession, src_dir: str,
                        max_files: int = 16) -> DataFrame:
     """File-source stream of series parquet (conv_id, metric, ts,
     turn_idx, value) — the test/demo source; production would be Kafka
     or an Iceberg incremental read behind the same schema."""
-    schema = (
-        "conv_id string, metric string, ts timestamp, "
-        "turn_idx int, value double"
-    )
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(SERIES_SCHEMA)
         .option("maxFilesPerTrigger", max_files)
         .parquet(src_dir)
     )
