@@ -1,6 +1,6 @@
-"""Streaming 1m→1h continuous aggregate: two incremental drains of
-the silver tier produce a materialized hour tier identical to one
-batch rollup of everything."""
+"""Streaming 1m→1h→1d continuous aggregate: incremental drains of
+the silver tier produce materialized hour and day tiers identical to
+one batch rollup of everything, and replayed batches are no-ops."""
 
 from __future__ import annotations
 
@@ -14,7 +14,14 @@ from timeseriescorrelation_spark.operators.rollup import (
     rollup_raw_upsertable,
 )
 from timeseriescorrelation_spark.streaming.cascade_stream import (
+    fold_batch,
+    partials_1d_from_1m,
+    partials_1h_from_1m,
+    stream_cascade_1d,
     stream_cascade_1h,
+)
+from timeseriescorrelation_spark.streaming.pipeline import (
+    run_full_pipeline_once,
 )
 
 T0 = dt.datetime(2026, 2, 2, 0, 0, 0)
@@ -139,22 +146,26 @@ def test_cascade_late_chunk_refolds_existing_hours(spark):
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _cascade_1h_1d(spark, work):
+    """Stages 3 and 4 of the pipeline: both fold silver, each into its
+    own tier under its own checkpoint."""
+    stream_cascade_1h(spark, f"{work}/silver", f"{work}/gold1h",
+                      f"{work}/ck_1h")
+    stream_cascade_1d(spark, f"{work}/silver", f"{work}/gold1d",
+                      f"{work}/ck_1d")
+
+
 def test_cascade_1d_two_drains_equal_batch_with_day_refold(spark):
     """Full 1m->1h->1d cascade (per-stage checkpoints): drain 1 covers
     most of day 1 plus the start of day 2; drain 2 delivers LATE
     minutes that refold hours of day 1 — so the 1d stage must merge
-    into a day partition it already materialized, across the 1h->1d
-    boundary.  Result must equal one batch 1d rollup of everything
-    (and the 1h tier must equal the batch 1h rollup)."""
-    from timeseriescorrelation_spark.streaming.cascade_stream import (
-        stream_cascade_1h_1d,
-    )
-
+    into a day partition it already materialized.  Result must equal
+    one batch 1d rollup of everything (and the 1h tier must equal the
+    batch 1h rollup)."""
     work = tempfile.mkdtemp(prefix="cascade1d_")
     try:
         silver = f"{work}/silver"
         gold1h = f"{work}/gold1h"
-        log1h = f"{work}/log1h"
         gold1d = f"{work}/gold1d"
 
         # minutes spanning two days: 0..1500 (day 1 = 0..1439,
@@ -166,7 +177,7 @@ def test_cascade_1d_two_drains_equal_batch_with_day_refold(spark):
         _silver(spark, _series_rows(first)).write.mode(
             "append"
         ).parquet(silver)
-        stream_cascade_1h_1d(spark, silver, gold1h, log1h, gold1d, work)
+        _cascade_1h_1d(spark, work)
         # day 2 already exists after drain 1
         assert spark.read.parquet(gold1d).where(
             F.col("bucket_ts") == T0 + dt.timedelta(days=1)
@@ -175,7 +186,7 @@ def test_cascade_1d_two_drains_equal_batch_with_day_refold(spark):
         _silver(spark, _series_rows(late)).write.mode(
             "append"
         ).parquet(silver)
-        stream_cascade_1h_1d(spark, silver, gold1h, log1h, gold1d, work)
+        _cascade_1h_1d(spark, work)
 
         everything = spark.createDataFrame(
             _series_rows(all_minutes), SERIES_SCHEMA
@@ -189,66 +200,78 @@ def test_cascade_1d_two_drains_equal_batch_with_day_refold(spark):
 
 
 def test_cascade_1d_drain_without_new_input_is_noop(spark):
-    from timeseriescorrelation_spark.streaming.cascade_stream import (
-        stream_cascade_1h_1d,
-    )
-
     work = tempfile.mkdtemp(prefix="cascade1d_")
     try:
-        silver = f"{work}/silver"
-        dirs = (f"{work}/gold1h", f"{work}/log1h", f"{work}/gold1d")
         rows = _series_rows(list(range(0, 120, 5)))
-        _silver(spark, rows).write.mode("append").parquet(silver)
-        stream_cascade_1h_1d(spark, silver, *dirs, work)
-        before = _norm(spark.read.parquet(dirs[2]))
-        stream_cascade_1h_1d(spark, silver, *dirs, work)
-        assert _norm(spark.read.parquet(dirs[2])) == before
+        _silver(spark, rows).write.mode("append").parquet(f"{work}/silver")
+        _cascade_1h_1d(spark, work)
+        before = _norm(spark.read.parquet(f"{work}/gold1d"))
+        _cascade_1h_1d(spark, work)
+        assert _norm(spark.read.parquet(f"{work}/gold1d")) == before
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
 def test_fold_replay_same_batch_id_is_idempotent(spark):
     """foreachBatch is at-least-once (ADVICE r4): a driver crash
-    between the partials write and the checkpoint commit replays the
-    batch with the SAME batch id.  The production fold (fold_1m_batch,
-    the exact function stream_cascade_1h registers) must leave the
-    inter-stage log and the gold tier unchanged on replay — a blind
-    append would double the partials and permanently double-count the
-    1d tier."""
-    from timeseriescorrelation_spark.streaming.cascade_stream import (
-        fold_1m_batch,
-        partials_1d_from_1h,
-    )
-
+    between the gold write and the checkpoint commit replays the batch
+    with the SAME batch id.  The production fold (fold_batch, the
+    exact function both cascade stages register) must leave the 1h
+    and 1d tiers unchanged on replay — the merge is additive, so a
+    blind refold would permanently double-count the batch."""
     work = tempfile.mkdtemp(prefix="cascade_replay_")
     try:
-        gold = f"{work}/gold1h"
-        log = f"{work}/log1h"
+        tiers = ((f"{work}/gold1h", partials_1h_from_1m),
+                 (f"{work}/gold1d", partials_1d_from_1m))
         batch = _silver(spark, _series_rows(list(range(0, 120, 5))))
 
-        fold_1m_batch(batch, 0, gold, log)
-        once_log = _norm(spark.read.parquet(log))
-        once_gold = _norm(spark.read.parquet(gold))
-        once_1d = _norm(
-            partials_1d_from_1h(
-                spark.read.parquet(log).drop("batch_id")
-            )
-        )
+        for gold, to_partials in tiers:
+            fold_batch(batch, 0, gold, to_partials)
+        once = [_norm(spark.read.parquet(gold)) for gold, _ in tiers]
 
         # replay: same batch contents, same batch id
-        fold_1m_batch(batch, 0, gold, log)
-        assert _norm(spark.read.parquet(log)) == once_log
-        assert _norm(spark.read.parquet(gold)) == once_gold
-        assert _norm(
-            partials_1d_from_1h(
-                spark.read.parquet(log).drop("batch_id")
-            )
-        ) == once_1d
+        for gold, to_partials in tiers:
+            fold_batch(batch, 0, gold, to_partials)
+        assert [_norm(spark.read.parquet(g)) for g, _ in tiers] == once
 
         # a genuinely NEW batch still lands (idempotency is keyed by
-        # batch id, not a write-once log)
+        # batch id)
         late = _silver(spark, _series_rows(list(range(120, 180, 5))))
-        fold_1m_batch(late, 1, gold, log)
-        assert len(_norm(spark.read.parquet(log))) > len(once_log)
+        for gold, to_partials in tiers:
+            fold_batch(late, 1, gold, to_partials)
+        everything = spark.createDataFrame(
+            _series_rows(list(range(0, 120, 5)))
+            + _series_rows(list(range(120, 180, 5))), SERIES_SCHEMA
+        )
+        assert [_norm(spark.read.parquet(g)) for g, _ in tiers] == [
+            _norm(rollup_raw_upsertable(everything, t)) for t in ("1h", "1d")
+        ]
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_stage3_replay_after_stage4_drained_changes_nothing(spark, tmp_path):
+    """Stage 3 crashes after its gold write but before its checkpoint
+    commit, while stage 4 has already drained the same silver files:
+    deleting stage 3's last commit file makes the next run replay that
+    batch.  The replay must leave BOTH tiers unchanged — the 1h fold
+    through its ledger, and the 1d tier because stage 4 never sees
+    stage 3's output."""
+    rows = [("c1", "m", T0 + dt.timedelta(minutes=m), i, float(m % 13))
+            for i, m in enumerate(range(0, 2 * 24 * 60, 17))]
+    rows.append(("zz_sentinel", "m", T0 + dt.timedelta(days=4), 0, 0.0))
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, SERIES_SCHEMA).coalesce(1).write.parquet(src)
+    work = str(tmp_path / "work")
+    out = run_full_pipeline_once(spark, src, work)
+    before = [_norm(spark.read.parquet(out[t])) for t in ("gold_1h", "gold_1d")]
+
+    commits = tmp_path / "work" / "ckpt" / "gold_1h" / "commits"
+    last = max((f for f in commits.iterdir() if f.name.isdigit()),
+               key=lambda f: int(f.name))
+    last.unlink()
+    (commits / f".{last.name}.crc").unlink(missing_ok=True)
+
+    run_full_pipeline_once(spark, src, work)
+    assert [_norm(spark.read.parquet(out[t]))
+            for t in ("gold_1h", "gold_1d")] == before

@@ -1,10 +1,10 @@
 """Full-surface scalability lint (r4 verdict task #4): EVERY
 `queries()` key's physical plan passes plans.audit — no
 CartesianProduct, no partition-less ordered Window — except an
-explicit allowlist of documented oracle-mode sites, each entry
-carrying its citation.  The previous lint covered the bench HEADLINE
-only, so nothing *proved* the oracle-only global sort never leaked
-into a production path; this enumerates all keys.
+explicit allowlist of documented sites, each entry carrying its
+citation (empty: no key needs one).  The previous lint covered the
+bench HEADLINE only, so nothing *proved* the oracle-only global sort
+never leaked into a production path; this enumerates all keys.
 
 The scan executes no queries (plans only), but a handful of
 driver-paced keys (kmeans/ADF/greedy/markov) run their small pacing
@@ -26,23 +26,12 @@ from timeseriescorrelation_spark.plans.audit import audit_plan  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
-# key -> (allowed finding prefix, citation).  Every entry is an
-# ORACLE-REPLICATION-mode site: the gate wires these queries with
-# mode="vocab" so DuckDB can replay deterministic shingle ids
-# (operators/dedup.py:93 `shingle_vocab`, a global row_number over the
-# distinct-shingle set — "test/oracle mode only" per its docstring).
-# Production mode is mode="xxhash64" (operators/dedup.py:106), which
-# builds NO vocabulary; test_production_mode_dedup_plans_are_clean
-# below proves the same operators lint clean there, so the global
-# sort exists ONLY behind mode="vocab".
-ALLOW = {
-    "dedup_minhash_lsh": ("global_window", "entry.py q_dedup_minhash_lsh: mode='vocab'"),
-    "dedup_simhash": ("global_window", "entry.py q_dedup_simhash: mode='vocab'"),
-    "dedup_incremental": ("global_window", "entry.py dedup_incremental: vocab ids for the standing-index oracle"),
-    "doc_fingerprint": ("global_window", "entry.py q_doc_fingerprint: vocab token ranks for the rolling-hash oracle"),
-    "dsir_weights": ("global_window", "entry.py dsir_weights: vocab bigram buckets for the oracle"),
-    "minhash_error": ("global_window", "dedup.py:958 minhash_estimator_error: vocab ids so DuckDB replays exact signatures"),
-}
+# key -> (allowed finding prefix, citation).  Empty: the oracle-mode
+# vocabulary ids (operators/dedup.py `shingle_vocab`, textstats
+# `doc_fingerprints_vocab`, lm `dsir_weights`) are numbered by
+# ranks.global_row_number, so no key needs a partition-less window.
+# An entry must cite its site, and must still be load-bearing.
+ALLOW: dict[str, tuple[str, str]] = {}
 
 _KEYS = sorted(em.queries())
 

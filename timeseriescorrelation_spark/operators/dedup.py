@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import snap, wide
+from timeseriescorrelation_spark.operators.ranks import global_row_number
 
 P31 = (1 << 31) - 1  # Mersenne prime 2^31-1, the affine-hash modulus
 
@@ -94,14 +95,13 @@ def shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
 def shingle_vocab(sh: DataFrame) -> DataFrame:
     """Distinct shingles ranked 1..V in sort order (oracle-replicable ids).
 
-    Global sort over the distinct-shingle set — test/oracle mode only;
-    the scale path uses xxhash64 ids (no vocabulary)."""
-    w = Window.orderBy("shingle")
-    return (
-        sh.select("shingle")
-        .distinct()
-        .withColumn("tid", F.row_number().over(w).cast("long"))
+    Distributed global rank over the distinct-shingle set (no
+    single-partition window) — test/oracle mode only; the scale path
+    uses xxhash64 ids (no vocabulary)."""
+    vocab, _ = global_row_number(
+        sh.select("shingle").distinct(), ["shingle"], "tid"
     )
+    return vocab
 
 
 def shingle_ids(sh: DataFrame, mode: str = "vocab") -> DataFrame:

@@ -25,11 +25,12 @@ round-trips.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import snap, wide
 from timeseriescorrelation_spark.operators.dedup import tokenize
+from timeseriescorrelation_spark.operators.ranks import global_row_number
 
 
 def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -460,17 +461,15 @@ def dsir_weights(docs: DataFrame, target_source: str,
             F.pmod(F.xxhash64("bg"), F.lit(n_buckets)).alias("bkt"),
         )
     else:
-        w = Window.orderBy("bg")
-        vocab = (
-            bg.select("bg").distinct()
-            .withColumn("tid", F.row_number().over(w).cast("long"))
-            .select(
-                "bg",
-                F.pmod(
-                    F.col("tid") * F.lit(A_J[0]) + F.lit(B_J[0]),
-                    F.lit(P31),
-                ).__mod__(F.lit(n_buckets)).alias("bkt"),
-            )
+        ranked, _ = global_row_number(
+            bg.select("bg").distinct(), ["bg"], "tid"
+        )
+        vocab = ranked.select(
+            "bg",
+            F.pmod(
+                F.col("tid") * F.lit(A_J[0]) + F.lit(B_J[0]),
+                F.lit(P31),
+            ).__mod__(F.lit(n_buckets)).alias("bkt"),
         )
         bucketed = bg.join(F.broadcast(vocab), "bg").select(
             "doc_id", "source", "bkt"

@@ -25,6 +25,7 @@ from timeseriescorrelation_spark.operators.dedup import (
     P31,
     tokenize,
 )
+from timeseriescorrelation_spark.operators.ranks import global_row_number
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
@@ -147,15 +148,10 @@ def doc_fingerprints_vocab(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id") -> DataFrame:
     """Oracle-mode fingerprint: g over rank-in-vocabulary token ids
     (ANSI-SQL-replicable; same shape as `doc_fingerprints`)."""
-    from pyspark.sql import Window
-
     t = tokenize(docs, text_col, id_col).select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
     )
-    vocab = (
-        t.select("tok").distinct()
-        .withColumn("tid", F.row_number().over(Window.orderBy("tok")).cast("long"))
-    )
+    vocab, _ = global_row_number(t.select("tok").distinct(), ["tok"], "tid")
     g = (F.col("tid") * F.lit(A_MUL) + F.lit(B_ADD)) % F.lit(P31)
     # per-term mod 2^31 before the sum — see doc_fingerprints (int64
     # overflow guard; identical result, and the DuckDB oracle's HUGEINT

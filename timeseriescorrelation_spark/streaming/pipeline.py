@@ -122,41 +122,37 @@ def run_full_pipeline_once(spark: SparkSession, src_dir: str,
 
         1. bronze  — ingest dedup (replay horizon = watermark)
         2. silver  — streaming 1m tier (finalized buckets only)
-        3. gold 1h — cascade fold silver → materialized 1h tier,
-                     appending 1h partials to the batch-id'd log
-        4. gold 1d — cascade fold the partials log → 1d tier
+        3. gold 1h — cascade fold silver → materialized 1h tier
+        4. gold 1d — cascade fold silver → materialized 1d tier
 
-    Each stage owns its checkpoint under ``work_dir``, so the pipeline
-    resumes exactly where it stopped after a crash BETWEEN stages —
+    Stages 3 and 4 are siblings over the append-only silver tier, not
+    a chain, so a stage-3 replay can never reach stage 4.  Each stage
+    owns its checkpoint under ``work_dir``, so the pipeline resumes
+    exactly where it stopped after a crash BETWEEN stages —
     ``stop_after_stage`` simulates that crash for the chaos test
     (r4 verdict task #8): a run killed after stage j leaves stages
     j+1.. lagging, and the next call must catch them up with no
     double-counts (the stage-3/4 folds are ledger-idempotent) and no
-    losses.  Returns the stage output paths."""
-    from timeseriescorrelation_spark.streaming.cascade_stream import (
-        stream_cascade_1d,
-        stream_cascade_1h,
-    )
+    losses.  The cascade stages are looked up on their module at call
+    time, so a caller may wrap them (perfbench traces each as a span).
+    Returns the stage output paths."""
+    from timeseriescorrelation_spark.streaming import cascade_stream as cs
 
     paths = {n: os.path.join(work_dir, n)
-             for n in ("bronze", "silver", "gold_1h", "log_1h", "gold_1d")}
+             for n in ("bronze", "silver", "gold_1h", "gold_1d")}
     ck = os.path.join(work_dir, "ckpt")
     _bronze_silver(spark, src_dir, work_dir, watermark,
                    silver=stop_after_stage != 1)
     if stop_after_stage in (1, 2):
         return paths
 
-    stream_cascade_1h(
-        spark, paths["silver"], paths["gold_1h"],
-        os.path.join(ck, "gold_1h"), partials_dir=paths["log_1h"],
+    cs.stream_cascade_1h(
+        spark, paths["silver"], paths["gold_1h"], os.path.join(ck, "gold_1h")
     )
     if stop_after_stage == 3:
         return paths
 
-    # a drain in which stage 3 saw zero batches never created the log
-    # dir; stage 4's file source needs the path to exist
-    os.makedirs(paths["log_1h"], exist_ok=True)
-    stream_cascade_1d(
-        spark, paths["log_1h"], paths["gold_1d"], os.path.join(ck, "gold_1d")
+    cs.stream_cascade_1d(
+        spark, paths["silver"], paths["gold_1d"], os.path.join(ck, "gold_1d")
     )
     return paths
