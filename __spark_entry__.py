@@ -2008,8 +2008,7 @@ def q_mad_outliers(spark, sf_dir):
     from timeseriescorrelation_spark.operators.analytics import mad_outliers
 
     return mad_outliers(
-        _series_from_events(spark, sf_dir), k=3.0, keys=["metric"],
-        value_decimals=2,
+        _series_from_events(spark, sf_dir), k=3.0, keys=["metric"]
     )
 
 
@@ -2056,10 +2055,7 @@ def q_trend_daily(spark, sf_dir):
     both engines, so they match bit-for-bit."""
     from timeseriescorrelation_spark.operators.analytics import trend_daily
 
-    return trend_daily(
-        _series_from_events(spark, sf_dir), keys=["metric"],
-        value_decimals=2,
-    )
+    return trend_daily(_series_from_events(spark, sf_dir), keys=["metric"])
 
 
 def q_concurrency_1h(spark, sf_dir):
@@ -2093,8 +2089,7 @@ def q_lttb_1h(spark, sf_dir):
     )
 
     return lttb_downsample(
-        _series_from_events(spark, sf_dir), trunc="hour", keys=["metric"],
-        value_decimals=2,
+        _series_from_events(spark, sf_dir), trunc="hour", keys=["metric"]
     )
 
 
@@ -3022,8 +3017,7 @@ def q_seasonal_mad(spark, sf_dir):
         F.dayofweek("ts").alias("dow"),
         F.hour("ts").alias("hod"),
     )
-    return mad_outliers(s, k=3.0, keys=["metric", "dow", "hod"],
-                        value_decimals=2)
+    return mad_outliers(s, k=3.0, keys=["metric", "dow", "hod"])
 
 
 def q_hll_rolling_7d(spark, sf_dir):
@@ -4527,7 +4521,7 @@ def q_rolling_slope_24h(spark, sf_dir):
         rolling_slope,
     )
 
-    h = _hourly_cents(_series_from_events(spark, sf_dir), ["metric"], 2)
+    h = _hourly_cents(_series_from_events(spark, sf_dir), ["metric"])
     return rolling_slope(h, keys=["metric"], window_hours=24)
 
 
@@ -7782,7 +7776,7 @@ def q_counter_rate(spark, sf_dir):
         counter_increase,
     )
 
-    h = _hourly_cents(_series_from_events(spark, sf_dir), ["metric"], 2)
+    h = _hourly_cents(_series_from_events(spark, sf_dir), ["metric"])
     wd = (
         Window.partitionBy("metric", F.date_trunc("day", "hour_ts"))
         .orderBy("hour_ts")

@@ -5,11 +5,15 @@ compare row count, sorted column names, and order-insensitive values.
 Usage: python scripts/check_oracle.py [sf_dir] [key ...]
 
 Prints one OK/FAIL/SKIP line per key, then the totals as
-`OK n / FAIL n / SKIP n`.
+`OK n / FAIL n / SKIP n`.  Each OK and SKIP line ends in `fp=<hex>`, a
+short sha256 of Spark's normalized frame (column names, dtypes and the
+multiset of rows), so two runs' logs can be diffed to show the same
+schema and rows per key, the rows-only keys included.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -42,6 +46,24 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def _canon(v):
+    """Arrays as tuples (numpy's repr elides long ones) and numpy scalars
+    as Python ones, whose repr round-trips exactly."""
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return tuple(_canon(x) for x in v)
+    return v.item() if isinstance(v, np.generic) else v
+
+
+def fingerprint(df: pd.DataFrame) -> str:
+    """Short sha256 over a normalized frame: its column names and dtypes,
+    then the reprs of its canonical rows, sorted (row order is not
+    part of the result)."""
+    head = repr([(c, str(t)) for c, t in df.dtypes.items()])
+    rows = sorted(repr(tuple(_canon(v) for v in r))
+                  for r in df.itertuples(index=False, name=None))
+    return hashlib.sha256("\n".join([head, *rows]).encode()).hexdigest()[:16]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -67,7 +89,8 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             continue
         if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only check) rows={len(got)}")
+            print(f"SKIP {name}: no oracle (rows-only check) rows={len(got)}"
+                  f" fp={fingerprint(got)}")
             skipped += 1
             continue
         try:
@@ -96,7 +119,7 @@ def main() -> int:
             failures.append((name, "; ".join(problems)))
             print(f"FAIL {name}: {'; '.join(problems)}")
         else:
-            print(f"OK   {name}: rows={len(got)}")
+            print(f"OK   {name}: rows={len(got)} fp={fingerprint(got)}")
             passed += 1
 
     entrymod.clear_graph_cache()  # release session-pinned graphs

@@ -29,6 +29,9 @@ from timeseriescorrelation_spark.functions.exact import (
 )
 
 PKG = Path(__file__).resolve().parents[1] / "timeseriescorrelation_spark"
+# the functions whose value_decimals=None selects unsnapped doubles
+FLOAT_MODE = {"anomaly_zscore", "anomaly_zscore_sharded",
+              "time_weighted_avg", "_anomaly_moments"}
 I64 = 2 ** 63
 T0 = dt.datetime(2024, 1, 1)
 ZS_SCHEMA = ("conv_id string, metric string, ts timestamp, turn_idx int,"
@@ -360,3 +363,28 @@ def test_exact_rule_is_declared_only_in_the_kit():
                 snap_defs.append(f"{rel}:{n.lineno} {n.name}")
     assert type_sites == []
     assert snap_defs == []
+
+
+def test_value_grid_is_declared_only_in_the_kit():
+    """Values snap to the kit's one grid, VALUE_DECIMALS: no function
+    takes it as a value_decimals parameter, except the float-mode ones
+    whose None default selects a second, unsnapped semantics."""
+    sites, float_mode = [], set()
+    for p in sorted(PKG.rglob("*.py")):
+        rel = str(p.relative_to(PKG))
+        for n in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = n.args
+            if all(x.arg != "value_decimals"
+                   for x in a.posonlyargs + a.args + a.kwonlyargs):
+                continue
+            if n.name in FLOAT_MODE:
+                float_mode.add(n.name)
+            else:
+                sites.append(f"{rel}:{n.lineno} {n.name}")
+    assert not sites, (
+        f"{len(sites)} functions declare value_decimals:\n"
+        + "\n".join(sites)
+    )
+    assert float_mode == FLOAT_MODE

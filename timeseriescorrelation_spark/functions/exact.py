@@ -7,7 +7,9 @@ CCC, DiD, ACF, ...):
 1. **Snap** each value to integer units once — ``snap(x, d)`` rounds
    ``x·10ᵈ`` half away from zero to a long (Spark ``F.round`` and
    DuckDB ``round`` agree; numpy's ``rint`` is half-even, hence
-   `snap_np`).
+   `snap_np`).  Values snap to the one grid `VALUE_DECIMALS` (cents,
+   ``SCALE`` units per value unit) — the grid behind the oracles'
+   ``round(value * 100)``.
 2. **Widen** integer units to decimal(38,0) — DuckDB's hugeint —
    BEFORE any product or sum that can leave int64: ``wide(x) *
    wide(y)``, never ``(x * y)`` cast afterwards (that multiplies in
@@ -33,6 +35,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 WIDE = "decimal(38,0)"
+VALUE_DECIMALS = 2
+SCALE = 10 ** VALUE_DECIMALS
 _I64 = 1 << 63
 
 

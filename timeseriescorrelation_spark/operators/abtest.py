@@ -31,7 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import idiv, snap, wide
+from timeseriescorrelation_spark.functions.exact import (
+    VALUE_DECIMALS,
+    idiv,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 from timeseriescorrelation_spark.operators.sampling import hash_bucket
 
@@ -359,8 +364,7 @@ def isotonic_calibration(scored: DataFrame, score_col: str = "score",
 
 def odds_ratio_weekend(events: DataFrame, key: str = "event_type",
                        ts_col: str = "ts", value_col: str = "value",
-                       high_cents: int = 10_000,
-                       value_decimals: int = 2) -> DataFrame:
+                       high_cents: int = 10_000) -> DataFrame:
     """(metric, a, b, c, d, odds_ratio, ci_lo, ci_hi): weekend-vs-
     weekday odds of a HIGH-value observation per metric (the 2×2
     epidemiologist's view of "do expensive events cluster on
@@ -382,7 +386,7 @@ def odds_ratio_weekend(events: DataFrame, key: str = "event_type",
     dow = F.pmod(days + F.lit(4), F.lit(7))
     wkd = dow.isin(0, 6)
     hi = (
-        snap(F.col(value_col), value_decimals)
+        snap(F.col(value_col), VALUE_DECIMALS)
         > F.lit(int(high_cents))
     )
     agg = events.groupBy(F.col(key).alias("metric")).agg(

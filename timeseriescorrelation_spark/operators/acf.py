@@ -37,7 +37,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import co_moment, snap, wide
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    co_moment,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 HOUR_US = 3_600_000_000
@@ -159,8 +165,8 @@ def dominant_period(series: DataFrame, max_lag: int = 24,
 
 def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
                             keys: list[str] | None = None,
-                            ts_col: str = "ts", value_col: str = "value",
-                            value_decimals: int = 2) -> DataFrame:
+                            ts_col: str = "ts",
+                            value_col: str = "value") -> DataFrame:
     """(keys..., n_eval, sae_cents, mae_u, smape_u): backtest of the
     seasonal-naive forecast ŷ(t) = y(t − period) on hourly cent
     totals — the baseline every real forecaster must beat, and the
@@ -182,14 +188,13 @@ def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
     rows; one self-equi-join keyed (keys, hour); one final hash-agg.
     No windows, no dense grid (absent hours simply don't evaluate)."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     per_us = int(period_hours) * HOUR_US
     h = series.groupBy(
         *keys,
         (F.floor(epoch_us(F.col(ts_col)) / HOUR_US) * HOUR_US)
         .alias("h_us"),
     ).agg(
-        F.sum(snap(F.col(value_col), value_decimals)).alias("a")
+        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("a")
     )
     f = h.select(
         *keys,
@@ -213,7 +218,7 @@ def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
         F.col("sae").cast("long").alias("sae_cents"),
         F.floor(
             F.col("sae").cast("double") * F.lit(1_000_000.0)
-            / (F.col("n").cast("double") * F.lit(float(scale)))
+            / (F.col("n").cast("double") * F.lit(float(SCALE)))
         ).cast("long").alias("mae_u"),
         F.floor(
             F.col("ssm").cast("double") / F.col("n").cast("double")
@@ -222,8 +227,8 @@ def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
 
 
 def seasonal_strength(series: DataFrame, keys: list[str] | None = None,
-                      ts_col: str = "ts", value_col: str = "value",
-                      value_decimals: int = 2) -> DataFrame:
+                      ts_col: str = "ts",
+                      value_col: str = "value") -> DataFrame:
     """(keys..., n, r2_u): how much of a series' variance the
     (day-of-week × hour-of-day) profile explains — one-way-ANOVA R²
     in integer micro-units, the strength score that says whether
@@ -243,7 +248,7 @@ def seasonal_strength(series: DataFrame, keys: list[str] | None = None,
     Scale notes (100 TB): raw scan collapses map-side to ≤168 cells
     per key; two hash-aggs on (key, cell) then (key).  No windows."""
     keys = keys or ["metric"]
-    c = snap(F.col(value_col), value_decimals)
+    c = snap(F.col(value_col), VALUE_DECIMALS)
     pt = series.select(
         *keys,
         F.dayofweek(F.col(ts_col)).alias("dow"),
@@ -553,8 +558,7 @@ def pacf3(series: DataFrame, keys: list[str] | None = None,
 
 
 def semivariogram(series: DataFrame, max_lag: int = 6,
-                  keys: list[str] | None = None,
-                  value_decimals: int = 2) -> DataFrame:
+                  keys: list[str] | None = None) -> DataFrame:
     """(metric, lag_h, n_pairs, gamma): empirical semivariogram of
     the hourly cent-total series at lags 1..max_lag hours —
 
@@ -576,7 +580,7 @@ def semivariogram(series: DataFrame, max_lag: int = 6,
         *[F.col(k) for k in keys],
         F.date_trunc("hour", "ts").alias("h"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     lags = series.sparkSession.range(1, int(max_lag) + 1).select(
         F.col("id").cast("int").alias("lag_h")
@@ -652,8 +656,7 @@ def circadian_phase(series: DataFrame, keys: list[str] | None = None
 
 
 def harmonic_regression(series: DataFrame,
-                        keys: list[str] | None = None,
-                        value_decimals: int = 2) -> DataFrame:
+                        keys: list[str] | None = None) -> DataFrame:
     """(metric, n_hours, intercept, amplitude, phase_hour, r2): OLS
     fit of y_h = a + b·cos θ_h + c·sin θ_h over the hourly cent-total
     grid (θ = 2π·hour-of-day/24) — the VALUE-side seasonality model
@@ -672,13 +675,12 @@ def harmonic_regression(series: DataFrame,
     Scale: grid hash agg → per-metric hash agg → scalar algebra;
     |metrics| output rows."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     tau = 6.283185307179586
     g = series.groupBy(
         *keys,
         F.date_trunc("hour", "ts").alias("h"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     theta = (
         F.hour("h").cast("double") / F.lit(24.0) * F.lit(tau)
@@ -735,7 +737,7 @@ def harmonic_regression(series: DataFrame,
     phase = (
         F.when(ang < 0, ang + tau_l).otherwise(ang) / tau_l * F.lit(24.0)
     )
-    sc_v = F.lit(float(scale))
+    sc_v = F.lit(float(SCALE))
     return m.where(F.abs(det) > 0).select(
         *keys,
         F.col("n").cast("long").alias("n_hours"),
@@ -809,7 +811,6 @@ def spectral_entropy(series: DataFrame,
 
 def hod_quantile_bands(series: DataFrame,
                        keys: list[str] | None = None,
-                       value_decimals: int = 2,
                        min_days: int = 5) -> DataFrame:
     """(metric, hod, n_days, p10, p50, p90): the fan chart behind
     seasonal_profile's mean — per hour-of-day, the exact 10/50/90th
@@ -827,11 +828,10 @@ def hod_quantile_bands(series: DataFrame,
     (metric, hod) rank partition holds ≤ |days| rows — bounded,
     parallel windows; 24·|metrics| output rows."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     g = series.groupBy(
         *keys, F.date_trunc("hour", "ts").alias("h")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     ).select(
         *keys, F.hour("h").alias("hod"),
         F.date_trunc("day", "h").alias("d"), "y",
@@ -855,7 +855,7 @@ def hod_quantile_bands(series: DataFrame,
         pick(5, 10).alias("c50"),
         pick(9, 10).alias("c90"),
     ).where(F.col("n") >= int(min_days))
-    sc = F.lit(float(scale))
+    sc = F.lit(float(SCALE))
     return agg.select(
         *keys,
         F.col("hod").cast("int").alias("hod"),
@@ -869,8 +869,7 @@ def hod_quantile_bands(series: DataFrame,
 def lomb_scargle(series: DataFrame,
                  periods: tuple[int, ...] = (6, 8, 12, 24, 48, 84, 168),
                  keys: list[str] | None = None, ts_col: str = "ts",
-                 value_col: str = "value", value_decimals: int = 2,
-                 min_n: int = 16) -> DataFrame:
+                 value_col: str = "value", min_n: int = 16) -> DataFrame:
     """(keys..., period_h, n, power): Lomb–Scargle normalized
     periodogram of the RAW irregularly-timestamped value series —
     `periodogram` needs the dense hourly grid (and a gap-fill policy
@@ -920,7 +919,7 @@ def lomb_scargle(series: DataFrame,
     pt = series.select(
         *keys,
         epoch_us(F.col(ts_col)).alias("t_us"),
-        snap(F.col(value_col), value_decimals).alias("c"),
+        snap(F.col(value_col), VALUE_DECIMALS).alias("c"),
     )
     stats = pt.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),

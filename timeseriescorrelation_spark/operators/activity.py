@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap, wide
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 
@@ -205,8 +210,7 @@ def decayed_leaderboard(series: DataFrame, keys: list[str] | None = None,
                         series_col: str = "conv_id", ts_col: str = "ts",
                         value_col: str = "value",
                         half_life_s: float = 86400.0,
-                        top_k: int = 10,
-                        value_decimals: int = 2) -> DataFrame:
+                        top_k: int = 10) -> DataFrame:
     """Exponentially time-decayed top-k per key: each event contributes
     value · 2^(−Δt/half_life) with Δt measured back from the table's
     own max timestamp ("now", broadcast 1-row side) — the standard
@@ -229,10 +233,9 @@ def decayed_leaderboard(series: DataFrame, keys: list[str] | None = None,
     WindowGroupLimit so only k rows per key survive the shuffle.
     """
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     us = epoch_us(F.col(ts_col))
     now = series.agg(F.max(us).alias("_now_us"))
-    c = snap(F.col(value_col), value_decimals)
+    c = snap(F.col(value_col), VALUE_DECIMALS)
     expo = (us - F.col("_now_us")).cast("double") / F.lit(
         float(half_life_s) * 1e6
     )
@@ -254,7 +257,7 @@ def decayed_leaderboard(series: DataFrame, keys: list[str] | None = None,
         .select(
             *keys, "rank", "series",
             F.round(
-                F.col("score_cc").cast("double") / (100.0 * scale), 4
+                F.col("score_cc").cast("double") / (100.0 * SCALE), 4
             ).alias("score"),
         )
     )
@@ -264,7 +267,6 @@ def conformal_pvalue(series: DataFrame, keys: list[str] | None = None,
                      ts_col: str = "ts", value_col: str = "value",
                      window_days: int = 28,
                      alpha: float = 0.05,
-                     value_decimals: int = 2,
                      exact_cols: bool = False) -> DataFrame:
     """Conformal anomaly p-value per (keys..., day): the rank of
     today's daily mean among the trailing `window_days` daily means,
@@ -289,7 +291,7 @@ def conformal_pvalue(series: DataFrame, keys: list[str] | None = None,
         *keys, F.date_trunc("day", F.col(ts_col)).alias("day_ts")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap(F.col(value_col), value_decimals)).alias("sc"),
+        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("sc"),
     )
     a = daily.select(*keys, "day_ts", F.col("n").alias("na"),
                      F.col("sc").alias("sa"))
@@ -600,7 +602,6 @@ def rank_churn(events: DataFrame, cat_col: str = "event_type",
 
 def theil_index_daily(events: DataFrame, group_col: str = "event_type",
                       unit_col: str = "user_id",
-                      value_decimals: int = 2,
                       min_cells: int = 10) -> DataFrame:
     """(day_ts, n_cells, n_groups, theil_total, theil_between,
     theil_within): Theil T inequality index of per-day activity value
@@ -630,7 +631,7 @@ def theil_index_daily(events: DataFrame, group_col: str = "event_type",
         F.col(group_col).alias("grp"),
         F.col(unit_col).alias("unit"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     ).where(F.col("y") > 0)
     yd = F.col("y").cast("double")
     cells = cells.withColumn(
@@ -710,8 +711,7 @@ def hhi_hourly(events: DataFrame, cat_col: str = "event_type",
 
 
 def atkinson_daily(events: DataFrame, unit_col: str = "user_id",
-                   ts_col: str = "ts", value_col: str = "value",
-                   value_decimals: int = 2) -> DataFrame:
+                   ts_col: str = "ts", value_col: str = "value") -> DataFrame:
     """(day_ts, n_units, total_cents, atkinson1): Atkinson inequality
     index at ε = 1 of per-day per-unit value sums — the
     WELFARE-weighted member of the inequality family (gini_daily:
@@ -733,7 +733,7 @@ def atkinson_daily(events: DataFrame, unit_col: str = "user_id",
         F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
         F.col(unit_col).alias("unit"),
     ).agg(
-        F.sum(snap(F.col(value_col), value_decimals)).alias("y")
+        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("y")
     ).where(F.col("y") > 0)
     agg = cells.groupBy("day_ts").agg(
         F.count(F.lit(1)).alias("n_units"),
@@ -755,8 +755,7 @@ def atkinson_daily(events: DataFrame, unit_col: str = "user_id",
 
 def lorenz_deciles(events: DataFrame, unit_col: str = "user_id",
                    ts_col: str = "ts", value_col: str = "value",
-                   n_tiles: int = 10,
-                   value_decimals: int = 2) -> DataFrame:
+                   n_tiles: int = 10) -> DataFrame:
     """(day_ts, decile, n_units, decile_cents, cum_share): the Lorenz
     curve behind gini_daily, made inspectable — per day, units sorted
     by their cent sum into `n_tiles` ntile buckets (deterministic
@@ -772,7 +771,7 @@ def lorenz_deciles(events: DataFrame, unit_col: str = "user_id",
         F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
         F.col(unit_col).alias("unit"),
     ).agg(
-        F.sum(snap(F.col(value_col), value_decimals)).alias("y")
+        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("y")
     )
     w = Window.partitionBy("day_ts").orderBy("y", "unit")
     tiled = cells.select(

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     moments,
     snap,
@@ -35,8 +37,7 @@ from timeseriescorrelation_spark.functions.exact import (
 )
 
 
-def _complete_day_grid(series: DataFrame, key: str = "metric",
-                       value_decimals: int = 2) -> DataFrame:
+def _complete_day_grid(series: DataFrame, key: str = "metric") -> DataFrame:
     """(m, day_ts, y): daily cent-sum grid restricted to COMPLETE days
     (days on which every metric observed at least one point) — the
     balanced panel the classical agreement formulas assume.  Two
@@ -44,7 +45,7 @@ def _complete_day_grid(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     k = d.select(F.countDistinct("m").alias("k"))
     complete = (
@@ -55,8 +56,7 @@ def _complete_day_grid(series: DataFrame, key: str = "metric",
     return d.join(F.broadcast(complete), "day_ts")
 
 
-def icc_oneway(series: DataFrame, key: str = "metric",
-               value_decimals: int = 2) -> DataFrame:
+def icc_oneway(series: DataFrame, key: str = "metric") -> DataFrame:
     """One row (k_raters, n_days, grand_total, msb, msw, icc1):
     ICC(1), the one-way random-effects intraclass correlation of the
     k metrics' daily cent-sums over the complete-day panel —
@@ -75,7 +75,7 @@ def icc_oneway(series: DataFrame, key: str = "metric",
 
     Scale: grid agg → day agg → single-row final agg; nothing after
     the first hash agg sees raw rows."""
-    g = _complete_day_grid(series, key, value_decimals)
+    g = _complete_day_grid(series, key)
     day = g.groupBy("day_ts").agg(
         F.sum("y").alias("s_i"),
         F.sum(wide("y") * wide("y")).alias("sxx_i"),
@@ -117,8 +117,7 @@ def icc_oneway(series: DataFrame, key: str = "metric",
     )
 
 
-def cronbach_alpha(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2) -> DataFrame:
+def cronbach_alpha(series: DataFrame, key: str = "metric") -> DataFrame:
     """One row (k_items, n_days, item_var_sum, total_var, alpha):
     Cronbach's α of the k metrics as a scale over days —
 
@@ -134,7 +133,7 @@ def cronbach_alpha(series: DataFrame, key: str = "metric",
 
     Scale: same grid-then-aggregate shape as icc_oneway; the item
     pass and the day pass are both map-side-combined hash aggs."""
-    g = _complete_day_grid(series, key, value_decimals)
+    g = _complete_day_grid(series, key)
     item = g.groupBy("m").agg(
         F.sum("y").alias("c_j"),
         F.sum(wide("y") * wide("y")).alias("sxx_j"),
@@ -174,8 +173,7 @@ def cronbach_alpha(series: DataFrame, key: str = "metric",
     )
 
 
-def friedman_test(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2) -> DataFrame:
+def friedman_test(series: DataFrame, key: str = "metric") -> DataFrame:
     """One row (n_days, k_raters, dev2, tie_term, q_stat, q_tiecorr):
     Friedman's rank test — "does any metric SYSTEMATICALLY rate days
     higher than the others" (the nonparametric repeated-measures
@@ -195,7 +193,7 @@ def friedman_test(series: DataFrame, key: str = "metric",
 
     Scale: ranks come from a k-per-day self-join ON THE GRID (k²·D
     comparison rows, calendar-bounded), never a window over raw data."""
-    g = _complete_day_grid(series, key, value_decimals)
+    g = _complete_day_grid(series, key)
     o = g.select("day_ts", F.col("m").alias("mo"), F.col("y").alias("yo"))
     r2 = (
         g.join(o, "day_ts")
@@ -335,8 +333,7 @@ def cohen_kappa(events: DataFrame, ts_col: str = "ts",
     )
 
 
-def kendall_w(series: DataFrame, key: str = "metric",
-              value_decimals: int = 2) -> DataFrame:
+def kendall_w(series: DataFrame, key: str = "metric") -> DataFrame:
     """One row (n_days, k_raters, dev2, tie_term, w, w_tiecorr):
     Kendall's coefficient of concordance — the EFFECT SIZE behind
     friedman_test's p-value framing (W ∈ [0, 1]: 1 = the days rank
@@ -349,7 +346,7 @@ def kendall_w(series: DataFrame, key: str = "metric",
     exact integers friedman_test produces, so both statistics are one
     shared division over the same sufficient statistics (W = Q/(n(k−1))
     when tie-free, asserted in tests)."""
-    f = friedman_test(series, key, value_decimals)
+    f = friedman_test(series, key)
     n = F.col("n_days").cast("double")
     k = F.col("k_raters").cast("double")
     d2 = F.col("dev2").cast("double")
@@ -366,8 +363,7 @@ def kendall_w(series: DataFrame, key: str = "metric",
 
 
 def bland_altman(series: DataFrame, key_a: str, key_b: str,
-                 key: str = "metric",
-                 value_decimals: int = 2) -> DataFrame:
+                 key: str = "metric") -> DataFrame:
     """(n_hours, mean_diff, loa_low, loa_high, n_outside, pct_outside):
     Bland–Altman agreement of two metrics' hourly cent series — the
     method-comparison readout next to ICC/CCC/κ: instead of "how
@@ -386,7 +382,7 @@ def bland_altman(series: DataFrame, key_a: str, key_b: str,
     def part(k, alias):
         return series.where(F.col(key) == k).groupBy(
             F.date_trunc("hour", "ts").alias("hour_ts")
-        ).agg(F.sum(snap("value", value_decimals)).alias(alias))
+        ).agg(F.sum(snap("value", VALUE_DECIMALS)).alias(alias))
 
     j = part(key_a, "va").join(part(key_b, "vb"), "hour_ts").select(
         "hour_ts", (F.col("va") - F.col("vb")).alias("d")
@@ -416,7 +412,7 @@ def bland_altman(series: DataFrame, key_a: str, key_b: str,
             ).cast("long")
         ).alias("n_outside"),
     )
-    fs = F.lit(float(10 ** int(value_decimals)))
+    fs = F.lit(float(SCALE))
     return out.select(
         F.col("n").cast("long").alias("n_hours"),
         F.round(F.col("mu") / fs, 6).alias("mean_diff"),

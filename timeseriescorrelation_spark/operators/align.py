@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap
+from timeseriescorrelation_spark.functions.exact import VALUE_DECIMALS, snap
 
 MATCH = 2
 MISMATCH = -1
@@ -44,8 +44,7 @@ _SCHEMA = ("metric_a string, metric_b string, day_ts timestamp,"
            " score long, sim double")
 
 
-def _daily_symbol_pairs(series: DataFrame, key: str,
-                        value_decimals: int) -> DataFrame:
+def _daily_symbol_pairs(series: DataFrame, key: str) -> DataFrame:
     """Shared builder: (metric_a, metric_b, day_ts, pa, pb) where
     pa/pb are the sorted (h, s) symbol profiles of each metric's day
     (s ∈ {1, 2} by the doubled-median rule; silent hours are absent
@@ -55,7 +54,7 @@ def _daily_symbol_pairs(series: DataFrame, key: str,
         F.date_trunc("day", "ts").alias("day_ts"),
         F.hour("ts").alias("h"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     w_med = Window.partitionBy("k")
     med2 = snap(F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med))
@@ -76,8 +75,7 @@ def _daily_symbol_pairs(series: DataFrame, key: str,
     )
 
 
-def _align_pairs(series: DataFrame, key: str, value_decimals: int,
-                 dp) -> DataFrame:
+def _align_pairs(series: DataFrame, key: str, dp) -> DataFrame:
     """Parameterized kernel wrapper: runs ``dp(x, y) -> int`` (an
     integer DP over two dense 24-symbol vectors) over every
     (metric pair, day) via Arrow-batched mapInPandas; sim normalizes
@@ -85,7 +83,7 @@ def _align_pairs(series: DataFrame, key: str, value_decimals: int,
     import numpy as np
     import pandas as pd
 
-    pairs = _daily_symbol_pairs(series, key, value_decimals)
+    pairs = _daily_symbol_pairs(series, key)
 
     def _dense(hs) -> "np.ndarray":
         v = np.zeros(24, dtype=np.int64)
@@ -141,17 +139,15 @@ def _sw_dp(x, y) -> int:
     return best
 
 
-def nw_align_daily(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2) -> DataFrame:
+def nw_align_daily(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric_a, metric_b, day_ts, score, sim): per metric pair and
     day, the global-alignment score of the two 24-symbol activity
     strings and sim = score / (2·24) ∈ [−?, 1] (1 = identical
     strings; the normalizer is the perfect-match score)."""
-    return _align_pairs(series, key, value_decimals, _nw_dp)
+    return _align_pairs(series, key, _nw_dp)
 
 
-def sw_align_daily(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2) -> DataFrame:
+def sw_align_daily(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric_a, metric_b, day_ts, score, sim): Smith–Waterman LOCAL
     alignment of the same 24-symbol day strings — where NW scores the
     WHOLE day (one divergent evening drags everything down), SW finds
@@ -161,4 +157,4 @@ def sw_align_daily(series: DataFrame, key: str = "metric",
     mediocre global one.  Same +2/−1/−1 integers, same anti-diagonal
     oracle unroll (boundary cells 0, greatest(0, …), final max over
     all cells)."""
-    return _align_pairs(series, key, value_decimals, _sw_dp)
+    return _align_pairs(series, key, _sw_dp)

@@ -51,6 +51,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     idiv,
     moments,
@@ -58,6 +60,7 @@ from timeseriescorrelation_spark.functions.exact import (
     wide,
 )
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.operators.crossmetric import _daily_cents
 from timeseriescorrelation_spark.operators.rollup import packed_order_key
 
 KEYS = ["conv_id", "metric"]
@@ -1047,8 +1050,7 @@ def cusum(series: DataFrame, h: float = 5.0,
 
 
 def mad_outliers(series: DataFrame, k: float = 3.0,
-                 keys: list[str] | None = None,
-                 value_decimals: int = 2) -> DataFrame:
+                 keys: list[str] | None = None) -> DataFrame:
     """Robust outlier detection via median absolute deviation: flag
     points with |v - median| > k * MAD per key group.  Unlike the
     z-score detectors, both the center and the spread are medians, so
@@ -1057,7 +1059,7 @@ def mad_outliers(series: DataFrame, k: float = 3.0,
     MAD over stddev).
 
     Cross-engine exactness: values are snapped to integer units
-    (10^value_decimals), so the exact interpolated medians land on
+    (10^VALUE_DECIMALS), so the exact interpolated medians land on
     .5-steps and the deviations on .25-steps — all exact in binary
     floating point; the k*MAD comparison is therefore deterministic
     across engines (same contract as rolling_p95 / latency
@@ -1072,9 +1074,8 @@ def mad_outliers(series: DataFrame, k: float = 3.0,
     grouped aggregations + two small joins (the per-key median tables
     are tiny and broadcast)."""
     keys = keys or ["metric"]
-    scale = 10 ** value_decimals
     s = series.withColumn(
-        "_v", snap("value", value_decimals)
+        "_v", snap("value", VALUE_DECIMALS)
     )
     med = s.groupBy(*keys).agg(
         F.expr("percentile(_v, 0.5)").alias("_med")
@@ -1091,8 +1092,8 @@ def mad_outliers(series: DataFrame, k: float = 3.0,
     score = F.when(F.col("_mad") > 0, F.col("_dev") / F.col("_mad"))
     return out.select(
         *keys, "ts", "turn_idx", "value",
-        F.round(F.col("_med") / scale, 6).alias("med"),
-        F.round(F.col("_mad") / scale, 6).alias("mad"),
+        F.round(F.col("_med") / SCALE, 6).alias("med"),
+        F.round(F.col("_mad") / SCALE, 6).alias("mad"),
         F.round(score, 6).alias("score"),
     )
 
@@ -1159,14 +1160,13 @@ def spearman_hourly_pairs(series: DataFrame, min_n: int = 12,
     return out
 
 
-def trend_daily(series: DataFrame, keys: list[str] | None = None,
-                value_decimals: int = 2) -> DataFrame:
+def trend_daily(series: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Per-(key, day) least-squares linear trend — slope and intercept
     of value over time-of-day, the "is this metric drifting" primitive
     under every capacity dashboard.
 
     Exactness: x = seconds since day start (int), y = integer units of
-    10^value_decimals; per-row products x·y and x·x fit comfortably in
+    10^VALUE_DECIMALS; per-row products x·y and x·x fit comfortably in
     int64, and the MOMENT SUMS are decimal(38,0) (Spark) / hugeint
     (DuckDB) — exact 128-bit integers in both engines.  slope =
     (n·Σxy − Σx·Σy) / (n·Σxx − Σx²) has an exactly-integer numerator
@@ -1179,12 +1179,11 @@ def trend_daily(series: DataFrame, keys: list[str] | None = None,
     int64 Σxy overflows near n ≈ 10^6 rows/group (x·y ≈ 8.6e12 each),
     decimal38 not until n ≈ 10^25."""
     keys = keys or ["metric"]
-    scale = 10 ** value_decimals
     day = F.date_trunc("day", "ts")
     x = ((epoch_us(F.col("ts")) - epoch_us(day)) / F.lit(1_000_000)).cast(
         "long"
     )
-    y = snap("value", value_decimals)
+    y = snap("value", VALUE_DECIMALS)
     s = series.select(
         *keys, day.alias("day_ts"), x.alias("x"), y.alias("y")
     )
@@ -1195,7 +1194,7 @@ def trend_daily(series: DataFrame, keys: list[str] | None = None,
     den = co_moment("n", "sx", "sx", "sxx").cast("double")
     slope_units_per_sec = F.when(den > 0, num / den)
     # value-units per hour: * 3600 / scale (exact double scaling)
-    slope = slope_units_per_sec * F.lit(3600.0 / scale)
+    slope = slope_units_per_sec * F.lit(3600.0 / SCALE)
     intercept = F.when(
         den > 0,
         (
@@ -1203,7 +1202,7 @@ def trend_daily(series: DataFrame, keys: list[str] | None = None,
             - slope_units_per_sec * F.col("sx").cast("double")
         )
         / F.col("n").cast("double")
-        / F.lit(float(scale)),
+        / F.lit(float(SCALE)),
     )
     return g.select(
         *keys, "day_ts",
@@ -1214,8 +1213,7 @@ def trend_daily(series: DataFrame, keys: list[str] | None = None,
 
 
 def lttb_downsample(series: DataFrame, trunc: str = "hour",
-                    keys: list[str] | None = None,
-                    value_decimals: int = 2) -> DataFrame:
+                    keys: list[str] | None = None) -> DataFrame:
     """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013)
     — ONE representative point per (series, bucket), the one forming
     the largest triangle with its neighbor buckets' mean points.  The
@@ -1262,7 +1260,7 @@ def lttb_downsample(series: DataFrame, trunc: str = "hour",
             (epoch_us(F.col("ts")) - epoch_us(F.col("bucket_ts")))
             / F.lit(1_000_000)
         ).cast("long"),
-    ).withColumn("y", snap("value", value_decimals))
+    ).withColumn("y", snap("value", VALUE_DECIMALS))
 
     g = s.groupBy(*keys, "bucket_ts").agg(
         F.count("*").alias("bn"),
@@ -1390,7 +1388,6 @@ def des_brown(series: DataFrame, alpha: float = 0.3,
 
 
 def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
-                       value_decimals: int = 2,
                        min_n: int = 8,
                        ord_col: str = "turn_idx") -> DataFrame:
     """(keys..., day_ts, n, s_stat, z): Mann-Kendall trend test per
@@ -1426,7 +1423,7 @@ def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col(ord_col).cast("long").alias("o"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     a = pt.select(*keys, "day_ts", F.col("t_us").alias("ti"),
                   F.col("o").alias("oi"), F.col("c").alias("ci"))
@@ -1471,7 +1468,6 @@ def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
 
 
 def theil_sen_daily(series: DataFrame, keys: list[str] | None = None,
-                    value_decimals: int = 2,
                     min_n: int = 8,
                     ord_col: str = "turn_idx") -> DataFrame:
     """(keys..., day_ts, n, n_pairs, sen_slope_per_hour): Sen's slope
@@ -1496,13 +1492,12 @@ def theil_sen_daily(series: DataFrame, keys: list[str] | None = None,
     sensitivity; this operator is deliberately NOT in the headline
     bench for the same reason MK is not."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
-    num_mult = 3_600_000_000 // scale * 1  # per-hour in µs / scale
+    num_mult = 3_600_000_000 // SCALE * 1  # per-hour in µs / scale
     pt = series.select(
         *keys,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     a = pt.select(*keys, "day_ts", F.col("t_us").alias("ti"),
                   F.col("c").alias("ci"))
@@ -1530,8 +1525,7 @@ def theil_sen_daily(series: DataFrame, keys: list[str] | None = None,
 
 
 def quantile_transform_daily(series: DataFrame,
-                             keys: list[str] | None = None,
-                             value_decimals: int = 2) -> DataFrame:
+                             keys: list[str] | None = None) -> DataFrame:
     """(keys..., day_ts, ts, turn_idx, value, q): rank-based quantile
     normalization per (key, day) — each point's value mapped to its
     within-day ECDF position percent_rank = (rank−1)/(n−1) ∈ [0,1],
@@ -1555,7 +1549,7 @@ def quantile_transform_daily(series: DataFrame,
         "ts",
         "turn_idx",
         "value",
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     w = Window.partitionBy(*keys, "day_ts").orderBy("c")
     return pt.select(
@@ -1953,8 +1947,8 @@ def markov_entropy_daily(events: DataFrame, cat_col: str = "event_type",
     )
 
 
-def moments_daily(series: DataFrame, keys: list[str] | None = None,
-                  value_decimals: int = 2) -> DataFrame:
+def moments_daily(series: DataFrame,
+                  keys: list[str] | None = None) -> DataFrame:
     """Skewness g1 and excess kurtosis g2 per (keys..., day) — the
     shape of the value distribution beyond mean/std (heavy right tail?
     peaked?), from EXACT integer power sums of cent-snapped values in
@@ -1976,8 +1970,7 @@ def moments_daily(series: DataFrame, keys: list[str] | None = None,
     combine — the cheapest possible distributed shape; no window, no
     join, no second pass for the mean."""
     keys = keys or ["metric"]
-    scale = 10 ** value_decimals
-    x = wide(snap("value", value_decimals))
+    x = wide(snap("value", VALUE_DECIMALS))
     g = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
@@ -1998,8 +1991,8 @@ def moments_daily(series: DataFrame, keys: list[str] | None = None,
     return g.select(
         *keys, "day_ts",
         n.cast("long").alias("n"),
-        F.round(s1.cast("double") / nd / scale, 6).alias("mean"),
-        F.round(F.sqrt(b) / nd / scale, 6).alias("std"),
+        F.round(s1.cast("double") / nd / SCALE, 6).alias("mean"),
+        F.round(F.sqrt(b) / nd / SCALE, 6).alias("std"),
         F.when(b > 0, F.round(a / (b * F.sqrt(b)), 6)).alias("skew_g1"),
         F.when(b > 0, F.round(c / (b * b) - 3.0, 6)).alias("kurt_excess"),
     )
@@ -2389,8 +2382,7 @@ def croston(series: DataFrame, alpha_num: int = 3,
 
 
 def apdex_hourly(series: DataFrame, key: str = "metric",
-                 threshold: float = 50.0,
-                 value_decimals: int = 2) -> DataFrame:
+                 threshold: float = 50.0) -> DataFrame:
     """(metric, hour_ts, n, satisfied, tolerating, apdex, rating):
     Apdex score per metric-hour treating `value` as a latency —
     satisfied ≤ T, tolerating ≤ 4T, frustrated beyond:
@@ -2408,9 +2400,8 @@ def apdex_hourly(series: DataFrame, key: str = "metric",
     Scale (100 TB): one map-side-combined hash aggregation on
     (metric, hour) — conditional counts only, no distinct, no window;
     the output is grid-sized (|metrics|·|hours|)."""
-    scale = 10 ** int(value_decimals)
-    t_cents = int(round(threshold * scale))
-    cents = snap("value", value_decimals)
+    t_cents = int(round(threshold * SCALE))
+    cents = snap("value", VALUE_DECIMALS)
     one = F.lit(1)
     g = series.groupBy(
         F.col(key).alias("metric"),
@@ -2442,7 +2433,6 @@ def apdex_hourly(series: DataFrame, key: str = "metric",
 
 
 def capacity_projection(series: DataFrame, key: str = "metric",
-                        value_decimals: int = 2,
                         min_days: int = 7) -> DataFrame:
     """(metric, n_days, slope_cents_per_day, level_now, target_cents,
     days_to_2x): capacity-planning readout — per metric, the OLS
@@ -2465,7 +2455,7 @@ def capacity_projection(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     d0 = d.agg(F.min("day_ts").alias("d0"))
     dx = d.crossJoin(F.broadcast(d0)).select(
@@ -2548,8 +2538,7 @@ def brier_decomposition(series: DataFrame, num: int = 3,
 
 
 def kalman_level(series: DataFrame, keys: list[str] | None = None,
-                 q_var: float = 100.0, r_var: float = 10000.0,
-                 value_decimals: int = 2) -> DataFrame:
+                 q_var: float = 100.0, r_var: float = 10000.0) -> DataFrame:
     """(keys..., day_ts, y, level, gain): local-level Kalman filter
     over daily cent totals — EWMA's principled sibling: the gain
     ADAPTS (k_1 = 1, decaying toward the steady state fixed by the
@@ -2579,12 +2568,11 @@ def kalman_level(series: DataFrame, keys: list[str] | None = None,
     cumulative (1-k) products underflow past ~10^2 steps; the scan
     is the numerically honest form."""
     keys = keys or ["metric"]
-    scale = float(10 ** int(value_decimals))
     q, r = float(q_var), float(r_var)
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("yc")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("yc")
     )
     schema = (
         ", ".join(f"{k} string" for k in keys)
@@ -2616,8 +2604,8 @@ def kalman_level(series: DataFrame, keys: list[str] | None = None,
                 p = (1.0 - k) * p_pred
             lv[i], gn[i] = x, k
         out = pdf[[*keys, "day_ts"]].copy()
-        out["y"] = ys / scale
-        out["level"] = lv / scale
+        out["y"] = ys / float(SCALE)
+        out["level"] = lv / float(SCALE)
         out["gain"] = gn
         yield out
 
@@ -2637,8 +2625,7 @@ def kalman_level(series: DataFrame, keys: list[str] | None = None,
     )
 
 
-def theta_forecast(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2, alpha: float = 0.5,
+def theta_forecast(series: DataFrame, key: str = "metric", alpha: float = 0.5,
                    horizons: tuple = (1, 7),
                    min_days: int = 10) -> DataFrame:
     """(metric, n_days, level_v, fc_1, fc_7): the Theta-method
@@ -2665,8 +2652,7 @@ def theta_forecast(series: DataFrame, key: str = "metric",
     hash-partitioned, series contiguous — never per-group Arrow
     transfer).  Scale: the recursion is over per-metric DAY counts
     (≤ a few thousand rows per metric at any corpus size)."""
-    scale = 10 ** int(value_decimals)
-    d = _daily_cents(series, key, value_decimals)
+    d = _daily_cents(series, key)
     w = Window.partitionBy(key).orderBy("day_ts")
     dd = d.select(
         key, "y", F.row_number().over(w).cast("long").alias("t")
@@ -2682,7 +2668,7 @@ def theta_forecast(series: DataFrame, key: str = "metric",
     cols = [
         F.col(key),
         F.col("n").cast("long").alias("n_days"),
-        _quant(F.col("level") / F.lit(float(scale))).alias("level_v"),
+        _quant(F.col("level") / F.lit(float(SCALE))).alias("level_v"),
     ]
     for h in horizons:
         fc = (
@@ -2690,19 +2676,9 @@ def theta_forecast(series: DataFrame, key: str = "metric",
             + F.lit(0.5) * (a_d + b_d * (n_d + F.lit(float(h))))
         )
         cols.append(
-            _quant(fc / F.lit(float(scale))).alias(f"fc_{h}")
+            _quant(fc / F.lit(float(SCALE))).alias(f"fc_{h}")
         )
     return out.select(*cols)
-
-
-def _daily_cents(series: DataFrame, key: str,
-                 value_decimals: int) -> DataFrame:
-    return series.groupBy(
-        key, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", value_decimals))
-         .cast("long").alias("y")
-    )
 
 
 def _theta_fit(dd: DataFrame, key: str, alpha: float,
@@ -2759,8 +2735,7 @@ def _theta_fit(dd: DataFrame, key: str, alpha: float,
     return lvl.join(p, key)
 
 
-def theta_backtest(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2, alpha: float = 0.5,
+def theta_backtest(series: DataFrame, key: str = "metric", alpha: float = 0.5,
                    holdout: int = 7,
                    min_train: int = 10) -> DataFrame:
     """(metric, n_train, n_test, mae_theta, mae_naive, mase): rolling-
@@ -2782,8 +2757,7 @@ def theta_backtest(series: DataFrame, key: str = "metric",
     Scale: the split is one key-partitioned window pass; the fit rides
     _theta_fit; scoring is a broadcast join of the metadata-sized fit
     table onto holdout rows."""
-    scale = 10 ** int(value_decimals)
-    d = _daily_cents(series, key, value_decimals)
+    d = _daily_cents(series, key)
     w = Window.partitionBy(key).orderBy("day_ts")
     wf = Window.partitionBy(key)
     idx = d.select(
@@ -2823,7 +2797,7 @@ def theta_backtest(series: DataFrame, key: str = "metric",
         F.sum("et").alias("set"),
         F.sum("en").alias("sen"),
     )
-    den = F.lit(1e4) * F.lit(float(scale)) \
+    den = F.lit(1e4) * F.lit(float(SCALE)) \
         * F.col("n_test").cast("double")
     return g.select(
         key, "n_train", "n_test",
@@ -2842,7 +2816,6 @@ def theta_backtest(series: DataFrame, key: str = "metric",
 
 
 def seasonal_mann_kendall(series: DataFrame, key: str = "metric",
-                          value_decimals: int = 2,
                           min_days: int = 21) -> DataFrame:
     """(metric, n_days, n_strata, s_stat, z): Hirsch-Slack SEASONAL
     Mann-Kendall trend test per metric over the daily cent-sum
@@ -2871,7 +2844,7 @@ def seasonal_mann_kendall(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -2931,7 +2904,6 @@ def seasonal_mann_kendall(series: DataFrame, key: str = "metric",
 
 
 def lad_trend_daily(series: DataFrame, key: str = "metric",
-                    value_decimals: int = 2,
                     min_days: int = 5) -> DataFrame:
     """(metric, n_days, slope, intercept, lad_loss): EXACT least-
     absolute-deviations (median/L1) trend of the daily cent-sum
@@ -2956,11 +2928,10 @@ def lad_trend_daily(series: DataFrame, key: str = "metric",
     mann_kendall bounded-n policy (a year is 48M rows per metric,
     fine for a diagnostic; never in HEADLINE).  trend_daily is the
     O(T) scale path."""
-    scale = 10 ** int(value_decimals)
     d0 = series.groupBy(
         F.col(key), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     ed = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -3004,15 +2975,15 @@ def lad_trend_daily(series: DataFrame, key: str = "metric",
     return out.select(
         key,
         F.col("n_days").cast("long").alias("n_days"),
-        F.round(numd / dend / F.lit(float(scale)), 6).alias("slope"),
+        F.round(numd / dend / F.lit(float(SCALE)), 6).alias("slope"),
         F.round(
             (F.col("b.yi").cast("double") * dend
              - numd * F.col("b.xi").cast("double"))
-            / dend / F.lit(float(scale)), 6
+            / dend / F.lit(float(SCALE)), 6
         ).alias("intercept"),
         F.round(
             F.col("b.lu").cast("double") / F.lit(1e6)
-            / F.lit(float(scale)), 6
+            / F.lit(float(SCALE)), 6
         ).alias("lad_loss"),
     )
 
@@ -3073,7 +3044,6 @@ def skyline_volume_errors(events: DataFrame,
 
 
 def gmd_daily(series: DataFrame, key: str = "metric",
-              value_decimals: int = 2,
               min_n: int = 4) -> DataFrame:
     """(metric, day_ts, n, gmd): Gini mean difference per metric-day
     — E|X−X'|, the dispersion measure that is robust like the MAD
@@ -3093,11 +3063,10 @@ def gmd_daily(series: DataFrame, key: str = "metric",
 
     Scale: day-bounded window ranks (the grubbs policy) + one
     hash-agg."""
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         F.col(key),
         F.date_trunc("day", "ts").alias("day_ts"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     w = Window.partitionBy(key, "day_ts").orderBy("c")
     ranked = pt.select(
@@ -3119,13 +3088,12 @@ def gmd_daily(series: DataFrame, key: str = "metric",
         F.col("n").cast("long").alias("n"),
         F.round(
             F.lit(2.0) * F.col("s").cast("double")
-            / (nd * (nd - F.lit(1.0))) / F.lit(float(scale)), 6
+            / (nd * (nd - F.lit(1.0))) / F.lit(float(SCALE)), 6
         ).alias("gmd"),
     )
 
 
-def isotonic_trend_daily(series: DataFrame, key: str = "metric",
-                         value_decimals: int = 2) -> DataFrame:
+def isotonic_trend_daily(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, day_ts, value_raw, value_iso): isotonic (monotone
     non-decreasing) fit of the daily cent-sum series — the shape-
     constrained trend filter: where trend_daily forces a LINE and
@@ -3141,11 +3109,10 @@ def isotonic_trend_daily(series: DataFrame, key: str = "metric",
     one final divide.  The DuckDB oracle replays the minimax identity
     max_{j≤i} min_{k≥i} mean(y[j..k]) per metric — equal to the PAVA
     block means as rationals, hence as correctly-rounded doubles."""
-    scale = 10 ** int(value_decimals)
     g = series.groupBy(
         F.col(key), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("c")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("c")
     )
     rows = sorted(
         ((r[key], r["day_ts"], int(r["c"])) for r in g.collect()),
@@ -3172,8 +3139,8 @@ def isotonic_trend_daily(series: DataFrame, key: str = "metric",
             for day, c in members:
                 out.append((
                     m, day,
-                    round(c / scale, 6),
-                    round(s_blk / n_blk / scale, 6),
+                    round(c / SCALE, 6),
+                    round(s_blk / n_blk / SCALE, 6),
                 ))
     spark = series.sparkSession
     return spark.createDataFrame(
@@ -3183,8 +3150,7 @@ def isotonic_trend_daily(series: DataFrame, key: str = "metric",
     )
 
 
-def huber_trend(series: DataFrame, key: str = "metric",
-                value_decimals: int = 2, n_iter: int = 2,
+def huber_trend(series: DataFrame, key: str = "metric", n_iter: int = 2,
                 min_days: int = 10) -> DataFrame:
     """(metric, n_days, slope_per_day, intercept, sigma,
     n_downweighted): Huber-robust daily linear trend — trend_daily's
@@ -3201,7 +3167,7 @@ def huber_trend(series: DataFrame, key: str = "metric",
                 WLS via weighted moments snapped per term class
                 (w/w·u/w·u² at 1e-9; w·y/w·u·y at 1e-6 — chosen so
                 every round() argument stays ≤ 2⁵³ for daily cent
-                sums ≤ ~9e9; rescale value_decimals beyond that),
+                sums ≤ ~9e9; rescale VALUE_DECIMALS beyond that),
                 β from the 2×2 weighted normal equations.
 
     u = day − min(day) per metric (small integers), y = daily cent
@@ -3215,12 +3181,11 @@ def huber_trend(series: DataFrame, key: str = "metric",
     — O(iterations) grid scans, no windows."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     ).select(
         "metric", "y",
         (epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
@@ -3326,7 +3291,7 @@ def huber_trend(series: DataFrame, key: str = "metric",
             / (F.col("m").cast("double") - F.lit(2.0))
         ).alias("sig_mc"),
     ), "metric")
-    fs = F.lit(float(scale))
+    fs = F.lit(float(SCALE))
     return out.select(
         "metric",
         F.col("n_days"),
@@ -3426,7 +3391,6 @@ def markov_absorption(events: DataFrame, target: str = "purchase",
 
 def forecast_baselines(series: DataFrame, key: str = "metric",
                        horizon: int = 24, season: int = 24,
-                       value_decimals: int = 2,
                        min_train: int = 48) -> DataFrame:
     """(metric, model, n_test, mae): the M-competition baseline
     forecasters — naive (last value), seasonal-naive (value one
@@ -3447,12 +3411,11 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
 
     Scale: grid hash-agg → one rank window per metric → three
     metadata-sized joins against the per-metric anchor row."""
-    scale = 10 ** int(value_decimals)
     h = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("hour", "ts").alias("hour_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     w = Window.partitionBy("metric").orderBy("hour_ts")
     wn = Window.partitionBy("metric")
@@ -3489,7 +3452,7 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
         F.round(
             F.col("sae").cast("double")
             / F.col("n_test").cast("double")
-            / F.lit(float(scale)),
+            / F.lit(float(SCALE)),
             6,
         ).alias("mae"),
     )
@@ -3515,7 +3478,7 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
         F.round(
             F.col("sae").cast("double")
             / F.col("n_test").cast("double")
-            / F.lit(float(scale)),
+            / F.lit(float(SCALE)),
             6,
         ).alias("mae"),
     )
@@ -3536,7 +3499,7 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
             F.col("sae").cast("double")
             / F.col("n_test").cast("double")
             / F.col("den").cast("double")
-            / F.lit(float(scale)),
+            / F.lit(float(SCALE)),
             6,
         ).alias("mae"),
     )

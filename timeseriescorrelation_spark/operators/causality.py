@@ -29,16 +29,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import co_moment, snap, wide
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    co_moment,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
-def _dbl(c):
-    return c.cast("double")
-
-
 def engle_granger(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   min_hours: int = 48) -> DataFrame:
     """(metric_x, metric_y, n_hours, beta, rho_res, df_stat): the
     Engle-Granger cointegration screen for every ordered metric pair —
@@ -64,8 +65,7 @@ def engle_granger(series: DataFrame, key: str = "metric",
     aggregates, one hash-agg.  Residual micro-snap keeps every
     cross-engine sum over exact integers.
     """
-    scale = 10 ** int(value_decimals)
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     x = h.select(F.col(key).alias("mx"), "hour_ts", F.col("y").alias("vx"))
     y = h.select(F.col(key).alias("my"), "hour_ts", F.col("y").alias("vy"))
     pairs = x.join(y, "hour_ts").where(F.col("mx") != F.col("my"))
@@ -95,8 +95,8 @@ def engle_granger(series: DataFrame, key: str = "metric",
         F.col("sxxc") * (F.col("n") * F.col("vy") - F.col("sy"))
         - F.col("sxyc") * (F.col("n") * F.col("vx") - F.col("sx"))
     )
-    e_val = _dbl(num) / (
-        _dbl(F.col("n") * F.col("sxxc")) * F.lit(float(scale))
+    e_val = num.cast("double") / (
+        (F.col("n") * F.col("sxxc")).cast("double") * F.lit(float(SCALE))
     )
     e_u = snap(e_val, 6)
     wlag = Window.partitionBy("mx", "my").orderBy("hour_ts")
@@ -115,23 +115,22 @@ def engle_granger(series: DataFrame, key: str = "metric",
         F.sum(wide("eu") * wide("ep")).alias("s01"),
         F.sum(wide("ep") * wide("ep")).alias("s11"),
     ).where(F.col("s11") > 0)
-    rho = _dbl(F.col("s01")) / _dbl(F.col("s11"))
+    rho = F.col("s01").cast("double") / F.col("s11").cast("double")
     return g.select(
         F.col("mx").alias("metric_x"), F.col("my").alias("metric_y"),
         F.col("n").cast("long").alias("n_hours"),
-        F.round(_dbl(F.col("sxyc")) / _dbl(F.col("sxxc")), 6)
+        F.round(F.col("sxyc").cast("double") / F.col("sxxc").cast("double"), 6)
         .alias("beta"),
         F.round(rho, 6).alias("rho_res"),
         F.round(
-            _dbl(F.col("n_lag")) * (rho - F.lit(1.0)), 6
+            F.col("n_lag").cast("double") * (rho - F.lit(1.0)), 6
         ).alias("df_stat"),
     )
 
 
 def transfer_entropy(series: DataFrame, key_col: str = "metric",
                      ts_col: str = "ts", value_col: str = "value",
-                     n_bins: int = 4, value_decimals: int = 2,
-                     min_triples: int = 24) -> DataFrame:
+                     n_bins: int = 4, min_triples: int = 24) -> DataFrame:
     """(metric_x, metric_y, n_triples, te_u, te_nats): binned transfer
     entropy TE(X→Y) over the hourly grid — does knowing x at hour t−1
     reduce uncertainty about y at hour t beyond y's own past?
@@ -159,7 +158,7 @@ def transfer_entropy(series: DataFrame, key_col: str = "metric",
         F.date_trunc("hour", F.col(ts_col)).alias("h"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap(F.col(value_col), value_decimals)).alias("sc"),
+        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("sc"),
     ).select(
         "m", "h",
         (F.col("sc").cast("double") / F.col("n").cast("double"))
@@ -226,14 +225,13 @@ def transfer_entropy(series: DataFrame, key_col: str = "metric",
         .select(
             "metric_x", "metric_y", "n_triples",
             F.col("te_u").cast("long").alias("te_u"),
-            F.round(_dbl(F.col("te_u")) / F.lit(1e6), 6)
+            F.round(F.col("te_u").cast("double") / F.lit(1e6), 6)
             .alias("te_nats"),
         )
     )
 
 
 def its_readout(series: DataFrame, key: str = "metric",
-                value_decimals: int = 2,
                 min_days: int = 10) -> DataFrame:
     """(metric, n_days, break_day_idx, b0, slope_pre, level_change,
     slope_change, r2): interrupted time-series (segmented regression)
@@ -259,14 +257,13 @@ def its_readout(series: DataFrame, key: str = "metric",
 
     Scale: day-grid hash-agg → per-metric span agg (broadcast) → one
     hash-agg of moments.  Grid-sized throughout."""
-    scale = 10 ** int(value_decimals)
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
     d = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     ).select(
         "metric", "y",
         (epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
@@ -332,7 +329,7 @@ def its_readout(series: DataFrame, key: str = "metric",
     b3 = (S11 * (S22 * S3y - S23 * S2y)
           - S12 * (S12 * S3y - S2y * S13)
           + S1y * (S12 * S23 - S22 * S13)) / det
-    fs = F.lit(float(scale))
+    fs = F.lit(float(SCALE))
     b0 = (
         F.col("sy").cast("double")
         - b1 * F.col("s1").cast("double")

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     moments,
     snap,
@@ -50,7 +52,6 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 
 def changepoint_daily(series: DataFrame, keys: list[str] | None = None,
-                      value_decimals: int = 2,
                       min_n: int = 8) -> DataFrame:
     """(keys..., day_ts, n, split_ts, gain_ss, mean_left, mean_right):
     the best single level-shift split per (key, day).
@@ -61,7 +62,6 @@ def changepoint_daily(series: DataFrame, keys: list[str] | None = None,
     means.  Days with fewer than ``min_n`` points are dropped — a
     2-point "changepoint" is noise."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     day = F.date_trunc("day", "ts")
     pt = series.select(
         *keys,
@@ -69,7 +69,7 @@ def changepoint_daily(series: DataFrame, keys: list[str] | None = None,
         F.col("ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col("turn_idx"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     w = Window.partitionBy(*keys, "day_ts").orderBy("t_us", "turn_idx")
     wall = Window.partitionBy(*keys, "day_ts")
@@ -105,7 +105,7 @@ def changepoint_daily(series: DataFrame, keys: list[str] | None = None,
         )
     )
     b = F.col("b")
-    sc2 = float(scale) * float(scale)
+    sc2 = float(SCALE) * float(SCALE)
     return best.select(
         *keys,
         "day_ts",
@@ -114,12 +114,12 @@ def changepoint_daily(series: DataFrame, keys: list[str] | None = None,
         F.round(b["gain"] / F.lit(sc2), 6).alias("gain_ss"),
         F.round(
             b["sk"].cast("double")
-            / b["k"].cast("double") / F.lit(float(scale)),
+            / b["k"].cast("double") / F.lit(float(SCALE)),
             6,
         ).alias("mean_left"),
         F.round(
             (b["sn"] - b["sk"]).cast("double")
-            / (b["n"] - b["k"]).cast("double") / F.lit(float(scale)),
+            / (b["n"] - b["k"]).cast("double") / F.lit(float(SCALE)),
             6,
         ).alias("mean_right"),
     )
@@ -170,7 +170,6 @@ def burst_hours(events: DataFrame, keys: list[str] | None = None,
 
 
 def changepoints_multi(series: DataFrame, keys: list[str] | None = None,
-                       value_decimals: int = 2,
                        max_splits: int = 3,
                        min_gain: float = 0.0,
                        min_seg: int = 4) -> DataFrame:
@@ -192,13 +191,12 @@ def changepoints_multi(series: DataFrame, keys: list[str] | None = None,
     machinery; the emitted means are exact-integer sums over one
     double division."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         *keys,
         F.date_trunc("day", "ts").alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col("turn_idx"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     ).withColumn("seg", F.lit(0).cast("long")).localCheckpoint(
         eager=True
     )
@@ -232,7 +230,7 @@ def changepoints_multi(series: DataFrame, keys: list[str] | None = None,
             cand.withColumn("mg", F.max("gain").over(wall))
             .where(
                 (F.col("gain") == F.col("mg"))
-                & (F.col("gain") > F.lit(float(min_gain) * scale * scale))
+                & (F.col("gain") > F.lit(float(min_gain) * SCALE * SCALE))
             )
             .groupBy(*part)
             .agg(F.min_by(F.struct("t_us", "turn_idx"), F.col("k")).alias(
@@ -283,14 +281,13 @@ def changepoints_multi(series: DataFrame, keys: list[str] | None = None,
         F.col("n").cast("long").alias("n"),
         F.round(
             F.col("sc").cast("double") / F.col("n").cast("double")
-            / F.lit(float(scale)),
+            / F.lit(float(SCALE)),
             6,
         ).alias("mean"),
     )
 
 
 def pettitt_test(series: DataFrame, keys: list[str] | None = None,
-                 value_decimals: int = 2,
                  min_days: int = 8) -> DataFrame:
     """(metric, n_days, k_stat, change_day, p_approx): Pettitt's
     nonparametric single-changepoint test on the daily cent-sum
@@ -315,7 +312,7 @@ def pettitt_test(series: DataFrame, keys: list[str] | None = None,
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     i = d.select(*keys, F.col("day_ts").alias("di"),
                  F.col("y").alias("yi"))
@@ -379,7 +376,6 @@ def pettitt_test(series: DataFrame, keys: list[str] | None = None,
 
 
 def segmented_trend(series: DataFrame, keys: list[str] | None = None,
-                    value_decimals: int = 2,
                     min_days: int = 8,
                     min_seg: int = 3) -> DataFrame:
     """(metric, change_day, n_pre, n_post, slope_pre, slope_post,
@@ -406,15 +402,13 @@ def segmented_trend(series: DataFrame, keys: list[str] | None = None,
     days) + one day-grid hash-agg per side — raw rows are touched
     once, by the grid aggregation."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     bp = pettitt_test(
-        series, keys=keys, value_decimals=value_decimals,
-        min_days=min_days,
+        series, keys=keys, min_days=min_days,
     ).select(*keys, "change_day")
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     j = d.join(F.broadcast(bp), keys)
     x = wide(
@@ -432,7 +426,7 @@ def segmented_trend(series: DataFrame, keys: list[str] | None = None,
     num = co_moment("n", "sx", "sy", "sxy")
     slope = F.when(
         den > 0,
-        num.cast("double") / den.cast("double") / F.lit(float(scale)),
+        num.cast("double") / den.cast("double") / F.lit(float(SCALE)),
     )
     sides = per.select(*keys, "change_day", "seg",
                        F.col("n").cast("long").alias("n"),

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     moments,
     snap,
@@ -30,17 +32,23 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us
 _AB = "n sa sb saa sbb sab"
 
 
-def _hourly_cents(series: DataFrame, keys: list[str],
-                  value_decimals: int) -> DataFrame:
+def _hourly_cents(series: DataFrame, keys: list[str]) -> DataFrame:
     return series.groupBy(
         *keys, F.date_trunc("hour", "ts").alias("hour_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).cast("long").alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).cast("long").alias("y")
+    )
+
+
+def _daily_cents(series: DataFrame, key: str) -> DataFrame:
+    return series.groupBy(
+        key, F.date_trunc("day", "ts").alias("day_ts")
+    ).agg(
+        F.sum(snap("value", VALUE_DECIMALS)).cast("long").alias("y")
     )
 
 
 def corr_matrix_daily(series: DataFrame, key: str = "metric",
-                      value_decimals: int = 2,
                       min_hours: int = 4) -> DataFrame:
     """(metric_a, metric_b, day_ts, n_hours, r): Pearson correlation
     between every metric pair's hourly cent-sum series within each
@@ -52,7 +60,7 @@ def corr_matrix_daily(series: DataFrame, key: str = "metric",
     metric dimension: the ε-grid prune is unnecessary here because the
     pair space is k² over aggregates, not conversations² over raw
     rows."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     a = h.select(
         F.col(key).alias("metric_a"), "hour_ts", F.col("y").alias("ya")
     )
@@ -82,7 +90,6 @@ def corr_matrix_daily(series: DataFrame, key: str = "metric",
 
 
 def granger_gain(series: DataFrame, key: str = "metric",
-                 value_decimals: int = 2,
                  min_n: int = 24) -> DataFrame:
     """(metric_x, metric_y, n, r2_restricted, r2_full, gain): does
     metric x's PREVIOUS hour improve the prediction of metric y's
@@ -108,7 +115,7 @@ def granger_gain(series: DataFrame, key: str = "metric",
 
     Directional: (x, y) and (y, x) are both emitted — that asymmetry
     is the point of the screen."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     # a value observed at hour o serves as the lag-1 predictor for
     # hour o+1: re-key the lag sides FORWARD one hour
     nxt = F.col("hour_ts") + F.expr("INTERVAL 1 HOUR")
@@ -161,8 +168,7 @@ def mutual_information_pairs(series: DataFrame,
                              key_col: str = "metric",
                              ts_col: str = "ts",
                              value_col: str = "value",
-                             n_bins: int = 4,
-                             value_decimals: int = 2) -> DataFrame:
+                             n_bins: int = 4) -> DataFrame:
     """Pairwise mutual information between metrics over co-occurring
     hours — (metric_x, metric_y, n_hours, mi_u, mi_nats): the
     dependence measure that catches what Pearson/Spearman miss
@@ -195,7 +201,7 @@ def mutual_information_pairs(series: DataFrame,
         F.date_trunc("hour", F.col(ts_col)).alias("h"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap(F.col(value_col), value_decimals)).alias("sc"),
+        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("sc"),
     ).select(
         "m", "h",
         (F.col("sc").cast("double") / F.col("n").cast("double"))
@@ -244,7 +250,7 @@ def mutual_information_pairs(series: DataFrame,
 
 
 def beta_daily(series: DataFrame, key: str = "metric",
-               value_decimals: int = 2, min_hours: int = 4) -> DataFrame:
+               min_hours: int = 4) -> DataFrame:
     """(metric_x, metric_y, day_ts, n_hours, beta, alpha): per-day OLS
     of y's hourly cent sums on x's — the hedge-ratio / sensitivity
     companion to corr_matrix_daily (r says HOW TIGHTLY coupled; beta
@@ -264,8 +270,7 @@ def beta_daily(series: DataFrame, key: str = "metric",
     hash-agg to |metrics|·|hours| rows, pair join k²·H on aggregates,
     never raw rows.
     """
-    scale = 10 ** int(value_decimals)
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     x = h.select(F.col(key).alias("metric_x"), "hour_ts",
                  F.col("y").alias("vx"))
     y = h.select(F.col(key).alias("metric_y"), "hour_ts",
@@ -284,7 +289,7 @@ def beta_daily(series: DataFrame, key: str = "metric",
     beta = F.when(den > 0, num / den)
     alpha = (
         (F.col("sy").cast("double") - beta * F.col("sx").cast("double"))
-        / F.col("n").cast("double") / F.lit(float(scale))
+        / F.col("n").cast("double") / F.lit(float(SCALE))
     )
     return g.select(
         "metric_x", "metric_y", "day_ts",
@@ -295,8 +300,7 @@ def beta_daily(series: DataFrame, key: str = "metric",
 
 
 def lead_lag_best(series: DataFrame, key: str = "metric",
-                  max_lag_h: int = 3, value_decimals: int = 2,
-                  min_n: int = 24) -> DataFrame:
+                  max_lag_h: int = 3, min_n: int = 24) -> DataFrame:
     """(metric_x, metric_y, best_lag_h, n, r): for every ordered
     metric pair, the hourly lag in [−L, L] whose shifted Pearson
     correlation has the largest |r| — "does x LEAD y, lag it, or move
@@ -317,7 +321,7 @@ def lead_lag_best(series: DataFrame, key: str = "metric",
     on the shifted hour (equi-join, never theta); the argmax is one
     hash-agg over |metrics|²·|lags| rows.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     lag_list = list(range(-int(max_lag_h), int(max_lag_h) + 1))
     lags = F.array(*[F.lit(int(x)) for x in lag_list])
     x = h.select(
@@ -441,8 +445,7 @@ def partial_corr_daily(series: DataFrame, key: str = "metric",
 
 
 def ols2_daily(series: DataFrame, y_key: str, x1_key: str, x2_key: str,
-               key: str = "metric", value_decimals: int = 2,
-               min_hours: int = 4) -> DataFrame:
+               key: str = "metric", min_hours: int = 4) -> DataFrame:
     """Per-day TWO-regressor OLS with intercept — beta_daily's big
     sibling: y's hourly cent sums regressed on two other metrics
     jointly, which is what "does purchase volume follow clicks once
@@ -473,8 +476,7 @@ def ols2_daily(series: DataFrame, y_key: str, x1_key: str, x2_key: str,
     Scale notes: one map-side hash-agg to |metrics|·|hours| rows, a
     3-way hour equi-join on that aggregate (never raw rows), then a
     per-day hash-agg of 10 moments — no windows, no iteration."""
-    h = _hourly_cents(series, [key], value_decimals)
-    scale = 10 ** int(value_decimals)
+    h = _hourly_cents(series, [key])
 
     def part(k, alias):
         return h.where(F.col(key) == k).select(
@@ -508,7 +510,7 @@ def ols2_daily(series: DataFrame, y_key: str, x1_key: str, x2_key: str,
         F.col("sy").cast("double")
         - b1 * F.col("s1").cast("double")
         - b2 * F.col("s2").cast("double")
-    ) / F.col("n").cast("double") / F.lit(float(scale))
+    ) / F.col("n").cast("double") / F.lit(float(SCALE))
     r2 = F.when((det > 0) & (Syy > 0), (b1 * S1y + b2 * S2y) / Syy)
     return g.select(
         "day_ts",
@@ -520,8 +522,7 @@ def ols2_daily(series: DataFrame, y_key: str, x1_key: str, x2_key: str,
     )
 
 
-def corr_pair_moments(series: DataFrame, key: str = "metric",
-                      value_decimals: int = 2) -> DataFrame:
+def corr_pair_moments(series: DataFrame, key: str = "metric") -> DataFrame:
     """The mergeable state behind corr_matrix_daily: per (pair, day)
     the six exact decimal(38,0) moments (n, sa, sb, saa, sbb, sab)
     over hourly cent sums.  Moments over disjoint HOUR sets are
@@ -529,7 +530,7 @@ def corr_pair_moments(series: DataFrame, key: str = "metric",
     lets a correlation report update incrementally (sealed days +
     live tail) instead of rescanning history; hours are the atomic
     unit because splitting an hour breaks Σab additivity."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     a = h.select(F.col(key).alias("metric_a"), "hour_ts",
                  F.col("y").alias("ya"))
     b = h.select(F.col(key).alias("metric_b"), "hour_ts",
@@ -578,7 +579,6 @@ def corr_from_moments(m: DataFrame, min_hours: int = 4) -> DataFrame:
 
 
 def ccc_pairs(series: DataFrame, key: str = "metric",
-              value_decimals: int = 2,
               min_hours: int = 24) -> DataFrame:
     """(metric_a, metric_b, n_hours, r, ccc): Lin's concordance
     correlation coefficient per unordered metric pair over
@@ -596,7 +596,7 @@ def ccc_pairs(series: DataFrame, key: str = "metric",
 
     Scale: corr_matrix_daily's shape — one grid hash-agg, pair equi-
     join on hour, one hash-agg per pair."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     a = h.select(
         F.col(key).alias("metric_a"), "hour_ts", F.col("y").alias("ya")
     )
@@ -631,7 +631,6 @@ def ccc_pairs(series: DataFrame, key: str = "metric",
 
 
 def corr_deseasonalized(series: DataFrame, key: str = "metric",
-                        value_decimals: int = 2,
                         min_hours: int = 48) -> DataFrame:
     """(metric_a, metric_b, n_hours, r_deseason): Pearson between
     metric pairs AFTER removing each metric's own hour-of-day profile
@@ -648,8 +647,7 @@ def corr_deseasonalized(series: DataFrame, key: str = "metric",
 
     Scale: grid hash-agg → hod-mean window per (metric, hod) over
     aggregate rows → pair equi-join on hour → hash-agg."""
-    scale = 10 ** int(value_decimals)
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     from pyspark.sql import Window
 
     whod = Window.partitionBy(key, F.hour("hour_ts"))
@@ -662,7 +660,7 @@ def corr_deseasonalized(series: DataFrame, key: str = "metric",
             ).cast("double")
             / (
                 F.count(F.lit(1)).over(whod).cast("double")
-                * F.lit(float(scale))
+                * F.lit(float(SCALE))
             ),
             6,
         ).alias("ru"),
@@ -693,8 +691,7 @@ def corr_deseasonalized(series: DataFrame, key: str = "metric",
 
 
 def corr_winsorized(series: DataFrame, key: str = "metric",
-                    pct: int = 5, value_decimals: int = 2,
-                    min_hours: int = 24) -> DataFrame:
+                    pct: int = 5, min_hours: int = 24) -> DataFrame:
     """(metric_a, metric_b, n_hours, lo_clip_a?, r_wins): Pearson
     between metric pairs after winsorizing each metric's hourly cents
     at its own [pct, 100−pct] order statistics — the robust
@@ -710,7 +707,7 @@ def corr_winsorized(series: DataFrame, key: str = "metric",
 
     Scale: one rank window per metric over the aggregate grid, a
     broadcast-sized threshold join, then the usual pair machinery."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     from pyspark.sql import Window
 
     wr = Window.partitionBy(key).orderBy("y", "hour_ts")
@@ -756,7 +753,6 @@ def corr_winsorized(series: DataFrame, key: str = "metric",
 
 
 def kendall_tau_pairs(series: DataFrame, key: str = "metric",
-                      value_decimals: int = 2,
                       min_days: int = 10) -> DataFrame:
     """(metric_a, metric_b, n_days, concordant, discordant, tau_b):
     Kendall's τ-b between every unordered metric pair's DAILY cent-sum
@@ -788,7 +784,7 @@ def kendall_tau_pairs(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
@@ -840,7 +836,7 @@ def kendall_tau_pairs(series: DataFrame, key: str = "metric",
 
 
 def panel_fe(events: DataFrame, unit_col: str = "user_id",
-             value_decimals: int = 2, min_days: int = 2) -> DataFrame:
+             min_days: int = 2) -> DataFrame:
     """(beta, se, t_stat, r2_within, n_obs, n_entities): one-way
     fixed-effects (within) estimator of daily value-cents on daily
     event count across the user panel — "does a user's spend rise on
@@ -867,7 +863,7 @@ def panel_fe(events: DataFrame, unit_col: str = "user_id",
         F.col(unit_col).alias("u"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y"),
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y"),
         F.count(F.lit(1)).alias("x"),
     )
     um = cells.groupBy("u").agg(
@@ -915,7 +911,6 @@ def panel_fe(events: DataFrame, unit_col: str = "user_id",
 
 
 def distance_corr(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   min_days: int = 10) -> DataFrame:
     """(metric_a, metric_b, n_days, dcor2, dcor): Székely's DISTANCE
     correlation between every unordered metric pair's daily cent-sum
@@ -940,7 +935,7 @@ def distance_corr(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
@@ -1004,7 +999,6 @@ def distance_corr(series: DataFrame, key: str = "metric",
 
 
 def energy_distance_weekend(series: DataFrame, key: str = "metric",
-                            value_decimals: int = 2,
                             min_days: int = 4) -> DataFrame:
     """(metric, n_weekday, n_weekend, energy_dist, e_coef): Székely's
     ENERGY DISTANCE between the weekday and weekend distributions of
@@ -1022,11 +1016,10 @@ def energy_distance_weekend(series: DataFrame, key: str = "metric",
 
     Scale: one grid self-join per metric — D² rows at D days,
     raw-size-independent (the distance_corr policy)."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -1065,7 +1058,7 @@ def energy_distance_weekend(series: DataFrame, key: str = "metric",
     eyy = F.col("syy").cast("double") / (ny * ny)
     e = F.lit(2.0) * exy - exx - eyy
     coef = F.when(exy > 0, e / (F.lit(2.0) * exy))
-    sc = F.lit(float(scale))
+    sc = F.lit(float(SCALE))
     return j.select(
         F.col("m").alias("metric"),
         F.col("nx").cast("long").alias("n_weekday"),
@@ -1076,7 +1069,6 @@ def energy_distance_weekend(series: DataFrame, key: str = "metric",
 
 
 def tail_dependence(series: DataFrame, key: str = "metric",
-                    value_decimals: int = 2,
                     top_frac_num: int = 1, top_frac_den: int = 10,
                     min_days: int = 10) -> DataFrame:
     """(metric_a, metric_b, n_days, k_top, both_top, lambda_u): upper
@@ -1098,7 +1090,7 @@ def tail_dependence(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
@@ -1198,7 +1190,6 @@ def coburst_jaccard(series: DataFrame, key: str = "metric",
 
 
 def corr_grain_audit(series: DataFrame, key: str = "metric",
-                     value_decimals: int = 2,
                      min_hours: int = 24) -> DataFrame:
     """(metric_a, metric_b, n_minutes, n_hours, r_1m, r_1h, r_delta):
     the downsampling-fidelity audit for the tiered correlation
@@ -1223,7 +1214,7 @@ def corr_grain_audit(series: DataFrame, key: str = "metric",
         g = series.groupBy(
             F.col(key).alias("k"),
             F.date_trunc(trunc, "ts").alias("b"),
-        ).agg(F.sum(snap("value", value_decimals)).alias("y"))
+        ).agg(F.sum(snap("value", VALUE_DECIMALS)).alias("y"))
         a = g.select(F.col("k").alias("metric_a"), "b",
                      F.col("y").alias("ya"))
         bb = g.select(F.col("k").alias("metric_b"), "b",
@@ -1260,7 +1251,6 @@ def corr_grain_audit(series: DataFrame, key: str = "metric",
 
 
 def xcorr_prewhitened(series: DataFrame, key: str = "metric",
-                      value_decimals: int = 2,
                       min_hours: int = 24) -> DataFrame:
     """(metric_a, metric_b, n_hours, r_raw, r_prewhitened): cross-
     correlation per metric pair BEFORE and AFTER AR(1) prewhitening —
@@ -1283,7 +1273,7 @@ def xcorr_prewhitened(series: DataFrame, key: str = "metric",
     Scale: one grid hash-agg, two per-metric lag windows over grid
     rows, one k² aggregate-sized pair join per statistic — the
     corr_matrix_daily shape with a prewhitening stage in front."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     w = Window.partitionBy(key).orderBy("hour_ts")
     lagged = h.select(
         key, "hour_ts", "y",
@@ -1369,7 +1359,6 @@ def xcorr_prewhitened(series: DataFrame, key: str = "metric",
 
 
 def tier_info_loss(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2,
                    min_minutes: int = 60) -> DataFrame:
     """(metric, n_minutes, n_hours, var_within_share, var_retained):
     the VALUE-side tier-fidelity audit next to corr_grain_audit's
@@ -1394,7 +1383,7 @@ def tier_info_loss(series: DataFrame, key: str = "metric",
         F.col(key),
         F.date_trunc("minute", "ts").alias("b"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     hs = g.groupBy(
         key, F.date_trunc("hour", "b").alias("h")

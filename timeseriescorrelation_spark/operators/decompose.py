@@ -29,7 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import moments, snap, wide
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    moments,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 M = 1_000_000.0
@@ -243,7 +249,6 @@ def stl_anomaly(series: DataFrame, half_window_h: int = 84,
 
 
 def dow_contrasts(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   min_per_group: int = 3) -> DataFrame:
     """(metric, dow_a, dow_b, n_a, n_b, mean_diff, t_stat): all 21
     pairwise day-of-week mean contrasts per metric with the pooled
@@ -267,11 +272,10 @@ def dow_contrasts(series: DataFrame, key: str = "metric",
     join of broadcast-sized aggregates."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    scale = 10 ** int(value_decimals)
     hourly = series.groupBy(
         F.col(key), F.date_trunc("hour", "ts").alias("hour_ts")
     ).agg(
-        F.sum(snap("value", value_decimals))
+        F.sum(snap("value", VALUE_DECIMALS))
         .cast("long").alias("y")
     )
     ed = F.floor(
@@ -322,7 +326,7 @@ def dow_contrasts(series: DataFrame, key: str = "metric",
         F.col("dow_b").cast("int").alias("dow_b"),
         F.col("na").cast("long").alias("n_a"),
         F.col("nb").cast("long").alias("n_b"),
-        F.round(diff / F.lit(float(scale)), 6).alias("mean_diff"),
+        F.round(diff / F.lit(float(SCALE)), 6).alias("mean_diff"),
         F.when(F.col("msw") > 0, F.round(diff / se, 6))
         .alias("t_stat"),
     )

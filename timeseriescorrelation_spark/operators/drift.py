@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap
+from timeseriescorrelation_spark.functions.exact import VALUE_DECIMALS, snap
 
 M = 1_000_000
 
@@ -46,7 +46,6 @@ BENFORD_P = [
 
 
 def ks_drift_daily(series: DataFrame, keys: list[str] | None = None,
-                   value_decimals: int = 2,
                    min_n: int = 8) -> DataFrame:
     """(keys..., day_ts, n_prev, n_cur, d_num, d_stat): two-sample KS
     statistic between each (key, day)'s value distribution and the
@@ -60,7 +59,7 @@ def ks_drift_daily(series: DataFrame, keys: list[str] | None = None,
     pt = series.select(
         *keys,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     cur = pt.select(*keys, "day_ts", "c", F.lit(1).alias("is_b"))
     prev = pt.select(
@@ -143,7 +142,6 @@ def entropy_daily(events: DataFrame, cat_col: str = "event_type") -> DataFrame:
 
 
 def benford_check(series: DataFrame, keys: list[str] | None = None,
-                  value_decimals: int = 2,
                   min_n: int = 50) -> DataFrame:
     """(keys..., n, chi2): Pearson χ² of the first-significant-digit
     distribution of |value| against Benford's law, per key.  The digit
@@ -155,7 +153,7 @@ def benford_check(series: DataFrame, keys: list[str] | None = None,
     χ² terms are micro-snapped before the sum.  χ²(8 dof) > 20.1 is
     the usual 99% nonconformance call, left to the reader."""
     keys = keys or ["metric"]
-    c = snap(F.abs(F.col("value")), value_decimals)
+    c = snap(F.abs(F.col("value")), VALUE_DECIMALS)
     d = series.select(
         *keys, c.alias("c")
     ).where(F.col("c") > 0).select(

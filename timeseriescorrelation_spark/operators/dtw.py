@@ -23,11 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap,
+)
 
 
-def dtw_daily_pairs(series: DataFrame, key: str = "metric",
-                    value_decimals: int = 2, band: int = 3,
+def dtw_daily_pairs(series: DataFrame, key: str = "metric", band: int = 3,
                     z_norm: bool = True) -> DataFrame:
     """(metric_a, metric_b, day_ts, dtw): banded DTW distance between
     every metric pair's 24-point daily profile (missing hours are 0 —
@@ -40,13 +43,12 @@ def dtw_daily_pairs(series: DataFrame, key: str = "metric",
     import numpy as np
     import pandas as pd
 
-    scale = 10 ** int(value_decimals)
     hourly = series.groupBy(
         F.col(key).alias("k"),
         F.date_trunc("day", "ts").alias("day_ts"),
         F.hour("ts").alias("h"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     prof = hourly.groupBy("k", "day_ts").agg(
         F.array_sort(F.collect_list(F.struct("h", "y"))).alias("hy")
@@ -69,7 +71,7 @@ def dtw_daily_pairs(series: DataFrame, key: str = "metric",
         for e in hy:
             yv[int(e["h"])] = int(e["y"])
         if not zn:
-            return yv.astype(np.float64) / scale
+            return yv.astype(np.float64) / SCALE
         # z-norm as ONE double expression over exact integers:
         #   v_i = (24·y_i − T) / sqrt(24·S2 − T²)
         # algebraically identical to (v − mean)/std but replicable

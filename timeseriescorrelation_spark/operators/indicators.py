@@ -34,8 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap, wide
-from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap,
+    wide,
+)
+from timeseriescorrelation_spark.operators.crossmetric import (
+    _daily_cents,
+    _hourly_cents,
+)
 
 # 2·ln 2 − 1 and 4·ln 2, pinned as literals so both engines use the
 # identical double (not their own libm ln(2)).
@@ -43,22 +51,8 @@ _GK_CONST = 0.3862943611198906
 _PK_CONST = 2.772588722239781
 
 
-def _dbl(c):
-    return c.cast("double")
-
-
-def _daily_cents(series: DataFrame, key: str,
-                 value_decimals: int) -> DataFrame:
-    return series.groupBy(
-        F.col(key), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", value_decimals)).cast("long").alias("y")
-    )
-
-
 def rsi_cutler(series: DataFrame, key: str = "metric",
-               window: int = 14,
-               value_decimals: int = 2) -> DataFrame:
+               window: int = 14) -> DataFrame:
     """(metric, day_ts, n_win, sum_gain, sum_loss, rsi): Cutler's RSI
     over each metric's daily cent totals — the SMA form (rolling sums
     of gains and losses over `window` days), not Wilder's recursive
@@ -76,7 +70,7 @@ def rsi_cutler(series: DataFrame, key: str = "metric",
     math.  Wilder's recursive form is one ewma() composition away
     (operators/analytics.ewma) for callers who want it.
     """
-    d = _daily_cents(series, key, value_decimals)
+    d = _daily_cents(series, key)
     w = Window.partitionBy(key).orderBy("day_ts")
     delta = F.col("y") - F.lag("y", 1).over(w)
     t = d.select(F.col(key), "day_ts", delta.alias("dy")) \
@@ -99,15 +93,15 @@ def rsi_cutler(series: DataFrame, key: str = "metric",
         F.when(
             tot > 0,
             F.round(
-                F.lit(100.0) * _dbl(F.col("sum_gain")) / _dbl(tot), 6
+                F.lit(100.0) * F.col("sum_gain").cast("double")
+                / tot.cast("double"), 6
             ),
         ).alias("rsi"),
     )
 
 
 def bollinger_daily(series: DataFrame, key: str = "metric",
-                    window: int = 7, k: int = 2,
-                    value_decimals: int = 2) -> DataFrame:
+                    window: int = 7, k: int = 2) -> DataFrame:
     """(metric, day_ts, n_win, mid, upper, lower, above, below):
     Bollinger bands over daily cent totals — trailing `window`-day
     mean ± k·σ (population σ over the frame), with the breach flags
@@ -123,8 +117,7 @@ def bollinger_daily(series: DataFrame, key: str = "metric",
 
     Scale: daily grid → one bounded ROWS window per metric.
     """
-    scale = float(10 ** int(value_decimals))
-    d = _daily_cents(series, key, value_decimals)
+    d = _daily_cents(series, key)
     wf = Window.partitionBy(key).orderBy("day_ts") \
         .rowsBetween(-(window - 1), 0)
     g = d.select(
@@ -133,10 +126,11 @@ def bollinger_daily(series: DataFrame, key: str = "metric",
         F.sum(wide("y")).over(wf).alias("s"),
         F.sum(wide("y") * wide("y")).over(wf).alias("q"),
     ).where(F.col("n") >= window)
-    nd = _dbl(F.col("n"))
-    mean = _dbl(F.col("s")) / nd
+    nd = F.col("n").cast("double")
+    mean = F.col("s").cast("double") / nd
     sig = F.sqrt(
-        (nd * _dbl(F.col("q")) - _dbl(F.col("s")) * _dbl(F.col("s")))
+        (nd * F.col("q").cast("double")
+         - F.col("s").cast("double") * F.col("s").cast("double"))
         / (nd * nd)
     )
     # integer breach decision: dev = n·y − Σ, spread = n·Σy² − Σ²
@@ -145,10 +139,10 @@ def bollinger_daily(series: DataFrame, key: str = "metric",
     kk = F.lit(int(k) * int(k))
     return g.select(
         key, "day_ts", F.col("n").cast("long").alias("n_win"),
-        F.round(mean / F.lit(scale), 6).alias("mid"),
-        F.round((mean + F.lit(float(k)) * sig) / F.lit(scale), 6)
+        F.round(mean / F.lit(float(SCALE)), 6).alias("mid"),
+        F.round((mean + F.lit(float(k)) * sig) / F.lit(float(SCALE)), 6)
         .alias("upper"),
-        F.round((mean - F.lit(float(k)) * sig) / F.lit(scale), 6)
+        F.round((mean - F.lit(float(k)) * sig) / F.lit(float(SCALE)), 6)
         .alias("lower"),
         F.when((dev > 0) & (dev * dev > kk * spread), 1)
         .otherwise(0).cast("long").alias("above"),
@@ -158,8 +152,7 @@ def bollinger_daily(series: DataFrame, key: str = "metric",
 
 
 def stochastic_k(series: DataFrame, key: str = "metric",
-                 window: int = 14,
-                 value_decimals: int = 2) -> DataFrame:
+                 window: int = 14) -> DataFrame:
     """(metric, day_ts, n_win, pct_k, pct_d): stochastic oscillator
     over daily cent totals — %K locates today inside the trailing
     `window`-day range, %D is the 3-day average of %K:
@@ -180,7 +173,7 @@ def stochastic_k(series: DataFrame, key: str = "metric",
 
     Scale: daily grid → two bounded ROWS windows per metric.
     """
-    d = _daily_cents(series, key, value_decimals)
+    d = _daily_cents(series, key)
     wf = Window.partitionBy(key).orderBy("day_ts") \
         .rowsBetween(-(window - 1), 0)
     t = d.select(
@@ -214,19 +207,21 @@ def stochastic_k(series: DataFrame, key: str = "metric",
         F.when(
             k_ok,
             F.round(
-                F.lit(100.0) * _dbl(F.col("num")) / _dbl(F.col("den")),
+                F.lit(100.0) * F.col("num").cast("double")
+                / F.col("den").cast("double"),
                 6,
             ),
         ).alias("pct_k"),
         F.when(
             d_ok,
-            F.round(F.lit(100.0) * _dbl(dnum) / _dbl(dden), 6),
+            F.round(
+                F.lit(100.0) * dnum.cast("double") / dden.cast("double"), 6
+            ),
         ).alias("pct_d"),
     )
 
 
 def range_volatility(series: DataFrame, key: str = "metric",
-                     value_decimals: int = 2,
                      min_hours: int = 8) -> DataFrame:
     """(metric, day_ts, n_hours, o, h, l, c, gk_var, pk_var): daily
     range volatility from the OHLC of each metric's hourly cent-sum
@@ -248,8 +243,7 @@ def range_volatility(series: DataFrame, key: str = "metric",
     Scale: ONE hash-agg to |metrics|·|days| rows (min/max/arg_min/
     arg_max), in-row math after.
     """
-    scale = float(10 ** int(value_decimals))
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     g = h.groupBy(
         F.col(key), F.date_trunc("day", "hour_ts").alias("day_ts")
     ).agg(
@@ -259,20 +253,20 @@ def range_volatility(series: DataFrame, key: str = "metric",
         F.min("y").alias("l"),
         F.expr("max_by(y, hour_ts)").alias("c"),
     ).where((F.col("n_hours") >= min_hours) & (F.col("l") > 0))
-    lhl = snap(F.log(_dbl(F.col("h")) / _dbl(F.col("l"))), 8)
-    lco = snap(F.log(_dbl(F.col("c")) / _dbl(F.col("o"))), 8)
+    lhl = snap(F.log(F.col("h").cast("double") / F.col("l").cast("double")), 8)
+    lco = snap(F.log(F.col("c").cast("double") / F.col("o").cast("double")), 8)
     t = g.select(
         F.col(key), "day_ts", "n_hours", "o", "h", "l", "c",
         lhl.alias("lhl"), lco.alias("lco"),
     )
-    hl2 = _dbl(F.col("lhl") * F.col("lhl")) / F.lit(1e16)
-    co2 = _dbl(F.col("lco") * F.col("lco")) / F.lit(1e16)
+    hl2 = (F.col("lhl") * F.col("lhl")).cast("double") / F.lit(1e16)
+    co2 = (F.col("lco") * F.col("lco")).cast("double") / F.lit(1e16)
     return t.select(
         key, "day_ts", F.col("n_hours").cast("long").alias("n_hours"),
-        F.round(_dbl(F.col("o")) / F.lit(scale), 6).alias("o"),
-        F.round(_dbl(F.col("h")) / F.lit(scale), 6).alias("h"),
-        F.round(_dbl(F.col("l")) / F.lit(scale), 6).alias("l"),
-        F.round(_dbl(F.col("c")) / F.lit(scale), 6).alias("c"),
+        F.round(F.col("o").cast("double") / F.lit(float(SCALE)), 6).alias("o"),
+        F.round(F.col("h").cast("double") / F.lit(float(SCALE)), 6).alias("h"),
+        F.round(F.col("l").cast("double") / F.lit(float(SCALE)), 6).alias("l"),
+        F.round(F.col("c").cast("double") / F.lit(float(SCALE)), 6).alias("c"),
         F.round(
             F.lit(0.5) * hl2 - F.lit(_GK_CONST) * co2, 6
         ).alias("gk_var"),
@@ -280,8 +274,7 @@ def range_volatility(series: DataFrame, key: str = "metric",
     )
 
 
-def ohlc_daily(series: DataFrame, key: str = "metric",
-               value_decimals: int = 2) -> DataFrame:
+def ohlc_daily(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, day_ts, open, high, low, close, body, day_range, gap,
     n_hours): daily OHLC candles of the HOURLY cent-sum series — the
     exchange-bar readout under bollinger/rsi/stochastic (those consume
@@ -299,12 +292,11 @@ def ohlc_daily(series: DataFrame, key: str = "metric",
 
     Scale: hour-grid hash-agg → day hash-agg → one lag window over
     per-metric DAY rows."""
-    scale = 10 ** int(value_decimals)
     h = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("hour", "ts").alias("hour_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     g = h.groupBy(
         "metric", F.date_trunc("day", "hour_ts").alias("day_ts")
@@ -317,7 +309,7 @@ def ohlc_daily(series: DataFrame, key: str = "metric",
     )
     w = Window.partitionBy("metric").orderBy("day_ts")
     g = g.withColumn("pc", F.lag("c", 1).over(w))
-    fs = F.lit(float(scale))
+    fs = F.lit(float(SCALE))
     return g.select(
         "metric", "day_ts",
         F.round(F.col("o").cast("double") / fs, 6).alias("open"),

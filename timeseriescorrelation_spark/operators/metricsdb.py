@@ -22,11 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap
-
-
-def _dbl(c):
-    return c.cast("double")
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap,
+)
 
 
 def counter_increase(counters: DataFrame, key: str = "metric",
@@ -75,8 +75,7 @@ def counter_increase(counters: DataFrame, key: str = "metric",
 
 def histogram_quantile_est(series: DataFrame, edges_cents: list[int],
                            key: str = "metric",
-                           q_pct: int = 95,
-                           value_decimals: int = 2) -> DataFrame:
+                           q_pct: int = 95) -> DataFrame:
     """(metric, day_ts, n, p{q}_est): the `histogram_quantile`
     contract — per (metric, day), estimate the q-th percentile from
     FIXED bucket counts by linear interpolation inside the target
@@ -96,9 +95,8 @@ def histogram_quantile_est(series: DataFrame, edges_cents: list[int],
 
     Scale: one hash-agg to |keys|·|days|·|buckets| cells, then a
     ≤|buckets|-row window per group."""
-    scale = 10 ** int(value_decimals)
     edges = sorted(int(e) for e in edges_cents)
-    c = snap("value", value_decimals)
+    c = snap("value", VALUE_DECIMALS)
     b = sum(
         (c >= F.lit(e)).cast("int") for e in edges
     )  # 0..len(edges): number of edges passed
@@ -143,16 +141,16 @@ def histogram_quantile_est(series: DataFrame, edges_cents: list[int],
         ]),
         F.col("b") + 1,
     ).cast("double")
-    pos = F.lit(float(q_pct)) / F.lit(100.0) * _dbl(F.col("n"))
-    below = _dbl(F.col("cum")) - _dbl(F.col("nb"))
+    pos = F.lit(float(q_pct)) / F.lit(100.0) * F.col("n").cast("double")
+    below = F.col("cum").cast("double") - F.col("nb").cast("double")
     est = F.when(
         F.col("b") == len(edges), lo
     ).otherwise(
-        lo + (hi - lo) * (pos - below) / _dbl(F.col("nb"))
+        lo + (hi - lo) * (pos - below) / F.col("nb").cast("double")
     )
     return hit.select(
         key, "day_ts",
         F.col("n").cast("long").alias("n"),
-        F.round(est / F.lit(float(scale)), 6)
+        F.round(est / F.lit(float(SCALE)), 6)
         .alias(f"p{int(q_pct)}_est"),
     )

@@ -29,12 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import idiv, snap, wide
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    idiv,
+    snap,
+    wide,
+)
 from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
-
-
-def _dbl(c):
-    return c.cast("double")
 
 
 def chi2_independence(events: DataFrame, row_col: str = "event_type",
@@ -74,7 +76,8 @@ def chi2_independence(events: DataFrame, row_col: str = "event_type",
     )
     num = F.col("nn") * F.col("o") - F.col("r") * F.col("c")
     term_u = snap(
-        _dbl(num * num) / _dbl(F.col("nn") * F.col("r") * F.col("c")), 6
+        (num * num).cast("double")
+        / (F.col("nn") * F.col("r") * F.col("c")).cast("double"), 6
     )
     g = full.select("rv", "cv", "nn", term_u.alias("t_u")).groupBy().agg(
         F.max("nn").cast("long").alias("n_events"),
@@ -85,12 +88,11 @@ def chi2_independence(events: DataFrame, row_col: str = "event_type",
     return g.select(
         "n_events", "n_rows", "n_cols",
         ((F.col("n_rows") - 1) * (F.col("n_cols") - 1)).alias("df"),
-        F.round(_dbl(F.col("chi2_u")) / F.lit(1e6), 6).alias("chi2"),
+        F.round(F.col("chi2_u").cast("double") / F.lit(1e6), 6).alias("chi2"),
     )
 
 
-def kruskal_wallis(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2) -> DataFrame:
+def kruskal_wallis(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, n_hours, k_groups, tie_sum, h): Kruskal-Wallis H test
     of hourly cent-sum level across day-of-week groups per metric —
     dow_anova's rank-based twin (no normality assumption, immune to
@@ -114,7 +116,7 @@ def kruskal_wallis(series: DataFrame, key: str = "metric",
     Scale: grid hash-agg → per-metric rank window over ≤|hours| rows
     (aggregate-sized partitions) → two tiny hash-aggs.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     wr = Window.partitionBy(key).orderBy("y")
     wt = Window.partitionBy(key, "y")
     ranked = h.select(
@@ -140,15 +142,15 @@ def kruskal_wallis(series: DataFrame, key: str = "metric",
         ).alias("tt")
     )
     j = per_m.join(ties, key)
-    nd = _dbl(F.col("n"))
+    nd = F.col("n").cast("double")
     h_raw = (
-        F.lit(12.0) * (_dbl(F.col("s_u")) / F.lit(1e6))
+        F.lit(12.0) * (F.col("s_u").cast("double") / F.lit(1e6))
         / (nd * (nd + F.lit(1.0)))
         - F.lit(3.0) * (nd + F.lit(1.0))
     )
-    corr = F.lit(1.0) - _dbl(F.col("tt")) / _dbl(
+    corr = F.lit(1.0) - F.col("tt").cast("double") / (
         F.col("n") * F.col("n") * F.col("n") - F.col("n")
-    )
+    ).cast("double")
     h_stat = F.when((F.col("k_groups") >= 2) & (corr > 0), h_raw / corr)
     return j.select(
         key, F.col("n").cast("long").alias("n_hours"), "k_groups",
@@ -158,7 +160,6 @@ def kruskal_wallis(series: DataFrame, key: str = "metric",
 
 
 def sign_test_dod(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   min_pairs: int = 6) -> DataFrame:
     """(metric, day_ts, n_pairs, wins, losses, z): paired day-over-day
     sign test per metric-day — each observed hour is paired with the
@@ -173,7 +174,7 @@ def sign_test_dod(series: DataFrame, key: str = "metric",
     Scale: grid hash-agg, then ONE equi-join of the grid against
     itself shifted 24 h on (metric, hour) — aggregate-sized shuffle.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     prev = h.select(
         F.col(key),
         (F.col("hour_ts") + F.expr("INTERVAL 24 HOURS")).alias("hour_ts"),
@@ -188,7 +189,7 @@ def sign_test_dod(series: DataFrame, key: str = "metric",
         F.sum(F.when(F.col("y") < F.col("y_prev"), 1).otherwise(0))
         .alias("losses"),
     ).where(F.col("wins") + F.col("losses") >= min_pairs)
-    w, lo = _dbl(F.col("wins")), _dbl(F.col("losses"))
+    w, lo = F.col("wins").cast("double"), F.col("losses").cast("double")
     return g.select(
         key, "day_ts",
         (F.col("wins") + F.col("losses")).cast("long").alias("n_pairs"),
@@ -199,7 +200,6 @@ def sign_test_dod(series: DataFrame, key: str = "metric",
 
 
 def grubbs_daily(series: DataFrame, key: str = "metric",
-                 value_decimals: int = 2,
                  min_n: int = 3) -> DataFrame:
     """(metric, day_ts, n, mean_v, sd_v, suspect_value, g_stat):
     Grubbs' statistic per metric-day — the single-outlier screen
@@ -218,11 +218,10 @@ def grubbs_daily(series: DataFrame, key: str = "metric",
 
     Scale: one hash agg per (metric, day) — no self-join, no window,
     grid-sized output."""
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     agg = pt.groupBy("metric", "day_ts").agg(
         F.count(F.lit(1)).alias("n"),
@@ -248,17 +247,16 @@ def grubbs_daily(series: DataFrame, key: str = "metric",
     return agg.select(
         "metric", "day_ts",
         F.col("n").cast("long").alias("n"),
-        F.round(t / n / F.lit(float(scale)), 6).alias("mean_v"),
-        F.round(sd / F.lit(float(scale)), 6).alias("sd_v"),
+        F.round(t / n / F.lit(float(SCALE)), 6).alias("mean_v"),
+        F.round(sd / F.lit(float(SCALE)), 6).alias("sd_v"),
         F.round(
-            suspect_c.cast("double") / F.lit(float(scale)), 6
+            suspect_c.cast("double") / F.lit(float(SCALE)), 6
         ).alias("suspect_value"),
         F.round(g, 6).alias("g_stat"),
     )
 
 
-def _weekend_daily(series: DataFrame, key: str,
-                   value_decimals: int) -> DataFrame:
+def _weekend_daily(series: DataFrame, key: str) -> DataFrame:
     """(m, y, g): daily cent sums tagged weekend (g=1) / weekday by
     the integer epoch-day rule — shared scaffold of the two-sample
     family (Welch t / Mann-Whitney / energy distance)."""
@@ -267,7 +265,7 @@ def _weekend_daily(series: DataFrame, key: str,
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -277,7 +275,6 @@ def _weekend_daily(series: DataFrame, key: str,
 
 
 def welch_t_weekend(series: DataFrame, key: str = "metric",
-                    value_decimals: int = 2,
                     min_days: int = 4) -> DataFrame:
     """(metric, n_weekday, n_weekend, mean_diff, t_stat, df): Welch's
     unequal-variance t-test of weekend vs weekday daily value means —
@@ -289,7 +286,7 @@ def welch_t_weekend(series: DataFrame, key: str = "metric",
 
     Exact integer moments per arm (Σy, Σy² in decimal38); t and df
     are one shared double tree.  mean_diff in value units."""
-    dd = _weekend_daily(series, key, value_decimals)
+    dd = _weekend_daily(series, key)
     agg = dd.groupBy("m").agg(
         F.sum(F.lit(1) - F.col("g")).alias("nx"),
         F.sum("g").alias("ny"),
@@ -327,12 +324,11 @@ def welch_t_weekend(series: DataFrame, key: str = "metric",
         se2 * se2
         / (a * a / (nx - F.lit(1.0)) + b * b / (ny - F.lit(1.0))),
     )
-    scale = 10 ** int(value_decimals)
     return agg.select(
         F.col("m").alias("metric"),
         F.col("nx").cast("long").alias("n_weekday"),
         F.col("ny").cast("long").alias("n_weekend"),
-        F.round((sy / ny - sx / nx) / F.lit(float(scale)), 6)
+        F.round((sy / ny - sx / nx) / F.lit(float(SCALE)), 6)
         .alias("mean_diff"),
         F.round(t, 6).alias("t_stat"),
         F.round(df, 6).alias("df"),
@@ -340,7 +336,6 @@ def welch_t_weekend(series: DataFrame, key: str = "metric",
 
 
 def mann_whitney_weekend(series: DataFrame, key: str = "metric",
-                         value_decimals: int = 2,
                          min_days: int = 4) -> DataFrame:
     """(metric, n_weekday, n_weekend, u2_stat, z): Mann-Whitney
     rank-sum test of weekend vs weekday daily values — the
@@ -356,7 +351,7 @@ def mann_whitney_weekend(series: DataFrame, key: str = "metric",
 
     Scale: D² pair rows per metric over the calendar-bounded grid —
     same policy as energy_distance/pettitt."""
-    dd = _weekend_daily(series, key, value_decimals)
+    dd = _weekend_daily(series, key)
     x = dd.where(F.col("g") == 0).select("m", F.col("y").alias("yx"))
     y = dd.where(F.col("g") == 1).select("m", F.col("y").alias("yy"))
     u = x.join(y, "m").groupBy("m").agg(
@@ -403,7 +398,6 @@ def mann_whitney_weekend(series: DataFrame, key: str = "metric",
 
 
 def wilcoxon_signed(series: DataFrame, key: str = "metric",
-                    value_decimals: int = 2,
                     lag_days: int = 7,
                     min_pairs: int = 6) -> DataFrame:
     """(metric, n_pairs, w2_plus, tie_sum, z): Wilcoxon signed-rank
@@ -435,7 +429,7 @@ def wilcoxon_signed(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     prev = d.select(
         "m",
@@ -492,7 +486,6 @@ def wilcoxon_signed(series: DataFrame, key: str = "metric",
 
 
 def brown_forsythe_weekend(series: DataFrame, key: str = "metric",
-                           value_decimals: int = 2,
                            min_days: int = 4) -> DataFrame:
     """(metric, n_weekday, n_weekend, med_weekday, med_weekend,
     f_stat): Brown-Forsythe test (median-centered Levene) of weekend
@@ -523,7 +516,7 @@ def brown_forsythe_weekend(series: DataFrame, key: str = "metric",
     per-(metric, group) day counts (aggregate-sized) for the median,
     one broadcast-sized equi-join back, two hash-aggs.  No raw-row
     work after the first agg."""
-    dd = _weekend_daily(series, key, value_decimals)
+    dd = _weekend_daily(series, key)
     wg = Window.partitionBy("m", "g").orderBy("y")
     wc = Window.partitionBy("m", "g")
     # lower median: rn == (ng + 1) DIV 2 — integral comparison only
@@ -578,7 +571,7 @@ def brown_forsythe_weekend(series: DataFrame, key: str = "metric",
         (F.col("n0") + F.col("n1") - 2).cast("double")
         * bnum.cast("double") / wnum.cast("double"),
     )
-    scale_d = float(10 ** int(value_decimals))
+    scale_d = float(SCALE)
     return per_m.select(
         F.col("m").alias("metric"),
         F.col("n0").cast("long").alias("n_weekday"),
@@ -729,7 +722,7 @@ def chi2_cells(events: DataFrame, row_col: str = "event_type",
     # chi2 micro-terms exactly as chi2_independence computes them
     num = wide("nn") * wide("o") - wide("r") * wide("c")
     den = wide("nn") * wide("r") * wide("c")
-    t_u = snap(_dbl(num * num) / _dbl(den), 6)
+    t_u = snap((num * num).cast("double") / den.cast("double"), 6)
     terms = full.select(
         "rv", "dw", "nn", "r", "c", "o", t_u.alias("t_u")
     )
@@ -739,14 +732,14 @@ def chi2_cells(events: DataFrame, row_col: str = "event_type",
         F.countDistinct("dw").alias("n_cols"),
     )
     g = terms.crossJoin(F.broadcast(glob))
-    rd, cd, nd, od = (_dbl(F.col(x)) for x in ("r", "c", "nn", "o"))
+    rd, cd, nd, od = (F.col(x).cast("double") for x in ("r", "c", "nn", "o"))
     e = rd * cd / nd
     vfac = e * (F.lit(1.0) - rd / nd) * (F.lit(1.0) - cd / nd)
     resid = F.when(vfac > 0, (od - e) / F.sqrt(vfac))
     mindf = F.least(F.col("n_rows") - 1, F.col("n_cols") - 1)
     v = F.when(
         mindf > 0,
-        F.sqrt(_dbl(F.col("chi2_u")) / F.lit(1e6) / nd
+        F.sqrt(F.col("chi2_u").cast("double") / F.lit(1e6) / nd
                / mindf.cast("double")),
     )
     return g.select(
@@ -760,7 +753,6 @@ def chi2_cells(events: DataFrame, row_col: str = "event_type",
 
 
 def effect_sizes_weekend(series: DataFrame, key: str = "metric",
-                         value_decimals: int = 2,
                          min_days: int = 4) -> DataFrame:
     """(metric, n_weekday, n_weekend, cohens_d, hedges_g,
     cliffs_delta): the EFFECT-SIZE layer for the weekend two-sample
@@ -787,7 +779,7 @@ def effect_sizes_weekend(series: DataFrame, key: str = "metric",
 
     Scale: daily grid hash-agg, one aggregate-sized self-join for
     the pair counts, two tiny hash-aggs, one broadcast-sized join."""
-    dd = _weekend_daily(series, key, value_decimals)
+    dd = _weekend_daily(series, key)
     x = wide("y")
     mo = dd.groupBy("m").agg(
         F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).alias("n0"),
@@ -839,7 +831,6 @@ def effect_sizes_weekend(series: DataFrame, key: str = "metric",
 
 def esd_outliers(series: DataFrame, key: str = "metric",
                  k_rounds: int = 3,
-                 value_decimals: int = 2,
                  min_n: int = 8) -> DataFrame:
     """(metric, day_ts, round, n_remaining, suspect_value, g_stat):
     generalized ESD (Rosner) multi-outlier screen per metric-day —
@@ -862,13 +853,12 @@ def esd_outliers(series: DataFrame, key: str = "metric",
     calendar day's points)."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    scale = 10 ** int(value_decimals)
     pt = series.select(
         F.col(key).alias("m"),
         F.date_trunc("day", "ts").alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col("turn_idx").cast("long").alias("o"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     out_rounds = []
     cur = pt
@@ -899,7 +889,7 @@ def esd_outliers(series: DataFrame, key: str = "metric",
             F.lit(r).alias("round"),
             F.col("n").cast("long").alias("n_remaining"),
             F.round(
-                F.col("c").cast("double") / F.lit(float(scale)), 6
+                F.col("c").cast("double") / F.lit(float(SCALE)), 6
             ).alias("suspect_value"),
             F.round(g, 6).alias("g_stat"),
         ))

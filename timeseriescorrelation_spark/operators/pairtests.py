@@ -35,19 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap
+from timeseriescorrelation_spark.functions.exact import VALUE_DECIMALS, snap
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 from timeseriescorrelation_spark.operators.crossmetric import (
     _hourly_cents,
 )
 
 
-def _dbl(c):
-    return c.cast("double")
-
-
 def mcnemar_wow(series: DataFrame, key: str = "metric",
-                value_decimals: int = 2,
                 min_pairs: int = 10) -> DataFrame:
     """(metric, n_pairs, b01, b10, chi2_cc): McNemar's paired test of
     week-over-week change in the binary state "hour ran above the
@@ -65,7 +60,7 @@ def mcnemar_wow(series: DataFrame, key: str = "metric",
     Scale: hour-grid hash-agg, broadcast-sized median join, ONE
     equi-join of the grid against itself shifted one week on
     (metric, slot, week) — aggregate-sized throughout."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     # the median rides a grid WINDOW, not a join: a separate median
     # aggregate + join would re-scan the raw table a third time (the
     # grid is not cached by contract); the window runs over the
@@ -98,7 +93,7 @@ def mcnemar_wow(series: DataFrame, key: str = "metric",
     num = F.greatest(
         F.abs(F.col("b01") - F.col("b10")) - F.lit(1), F.lit(0)
     )
-    chi2 = F.when(disc > 0, _dbl(num * num) / _dbl(disc))
+    chi2 = F.when(disc > 0, (num * num).cast("double") / disc.cast("double"))
     return g.select(
         key,
         F.col("n_pairs").cast("long").alias("n_pairs"),
@@ -109,7 +104,6 @@ def mcnemar_wow(series: DataFrame, key: str = "metric",
 
 
 def cochran_q_dow(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   min_blocks: int = 3) -> DataFrame:
     """(metric, n_blocks, n_success, q_stat): Cochran's Q test of
     whether the binary state "day ran above the metric's median daily
@@ -129,7 +123,7 @@ def cochran_q_dow(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         F.col(key), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     w_med = Window.partitionBy(key)
     med2 = snap(F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med))
@@ -163,9 +157,9 @@ def cochran_q_dow(series: DataFrame, key: str = "metric",
     den = k7 * F.col("n_succ") - F.col("sum_r2")
     q = F.when(
         den > 0,
-        _dbl((k7 - 1) * (k7 * F.col("sum_c2")
-                         - F.col("n_succ") * F.col("n_succ")))
-        / _dbl(den),
+        ((k7 - 1) * (k7 * F.col("sum_c2")
+                         - F.col("n_succ") * F.col("n_succ"))).cast("double")
+        / den.cast("double"),
     )
     return j.select(
         key,
@@ -175,8 +169,7 @@ def cochran_q_dow(series: DataFrame, key: str = "metric",
     )
 
 
-def _ranked_weekend(series: DataFrame, key: str,
-                    value_decimals: int) -> DataFrame:
+def _ranked_weekend(series: DataFrame, key: str) -> DataFrame:
     """Shared rank scaffold of cvm/mood: daily cent sums split
     weekend/weekday with doubled combined midranks (r2 = 2·minrank +
     ties − 1, exact integer) and doubled own-sample order index i2 —
@@ -188,7 +181,7 @@ def _ranked_weekend(series: DataFrame, key: str,
     d = series.groupBy(
         F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     days = F.floor(
         epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
@@ -209,7 +202,6 @@ def _ranked_weekend(series: DataFrame, key: str,
 
 
 def cvm_weekend(series: DataFrame, key: str = "metric",
-                value_decimals: int = 2,
                 min_days: int = 4) -> DataFrame:
     """(metric, n_weekday, n_weekend, u4_stat, t_stat): two-sample
     Cramér–von Mises test of weekend vs weekday daily volume — the
@@ -229,7 +221,7 @@ def cvm_weekend(series: DataFrame, key: str = "metric",
 
     Scale: day-grid hash-agg then per-metric windows over ≤|days|
     rows — aggregate-sized."""
-    r = _ranked_weekend(series, key, value_decimals)
+    r = _ranked_weekend(series, key)
     # conditional aggregation, not a per-group split + self-join: the
     # rank scaffold is not cached by contract, so referencing it
     # twice would recompute it (and re-scan raw) twice
@@ -245,10 +237,10 @@ def cvm_weekend(series: DataFrame, key: str = "metric",
         (F.col("nx") >= int(min_days)) & (F.col("ny") >= int(min_days))
     )
     u4 = F.col("nx") * F.col("s4x") + F.col("ny") * F.col("s4y")
-    nx, ny = _dbl(F.col("nx")), _dbl(F.col("ny"))
+    nx, ny = F.col("nx").cast("double"), F.col("ny").cast("double")
     nn = nx + ny
     t = (
-        _dbl(u4) / (F.lit(4.0) * nn * nx * ny)
+        u4.cast("double") / (F.lit(4.0) * nn * nx * ny)
         - (F.lit(4.0) * nx * ny - F.lit(1.0)) / (F.lit(6.0) * nn)
     )
     return j.select(
@@ -261,7 +253,6 @@ def cvm_weekend(series: DataFrame, key: str = "metric",
 
 
 def mood_weekend(series: DataFrame, key: str = "metric",
-                 value_decimals: int = 2,
                  min_days: int = 4) -> DataFrame:
     """(metric, n_weekday, n_weekend, m4_stat, z): Mood's two-sample
     test of SCALE on weekend vs weekday daily volume — squared
@@ -278,7 +269,7 @@ def mood_weekend(series: DataFrame, key: str = "metric",
 
     Scale: identical shape to cvm_weekend — day-grid hash-agg plus
     per-metric windows."""
-    r = _ranked_weekend(series, key, value_decimals)
+    r = _ranked_weekend(series, key)
     # single-pass: m4 = Σ_{g=1}(r2 − (N+1))² expands to
     # Σr2² − 2(N+1)Σr2 + m(N+1)² over exact integers, so N never
     # needs a join back onto the scaffold
@@ -300,7 +291,7 @@ def mood_weekend(series: DataFrame, key: str = "metric",
         (F.col("sr22") - F.lit(2) * np1 * F.col("sr2")
          + F.col("ny") * np1 * np1).alias("m4"),
     )
-    nx, ny = _dbl(F.col("nx")), _dbl(F.col("ny"))
+    nx, ny = F.col("nx").cast("double"), F.col("ny").cast("double")
     nn = nx + ny
     e_m = ny * (nn * nn - F.lit(1.0)) / F.lit(12.0)
     var_m = (
@@ -309,7 +300,7 @@ def mood_weekend(series: DataFrame, key: str = "metric",
     )
     z = F.when(
         var_m > 0,
-        (_dbl(F.col("m4")) / F.lit(4.0) - e_m) / F.sqrt(var_m),
+        (F.col("m4").cast("double") / F.lit(4.0) - e_m) / F.sqrt(var_m),
     )
     return j.select(
         F.col("m").alias("metric"),

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     moments,
     snap,
@@ -205,8 +207,7 @@ def stickiness_daily(events: DataFrame, user_col: str = "user_id",
 
 
 def cohort_ltv(events: DataFrame, user_col: str = "user_id",
-               ts_col: str = "ts", value_col: str = "value",
-               value_decimals: int = 2) -> DataFrame:
+               ts_col: str = "ts", value_col: str = "value") -> DataFrame:
     """(cohort_week, age_week, active_users, cohort_size,
     week_value_per_user, cum_value_per_user): cohort LIFETIME-VALUE
     curves — cohort_retention answers "how many came back";
@@ -223,12 +224,11 @@ def cohort_ltv(events: DataFrame, user_col: str = "user_id",
     Scale: one (user, week) hash agg → one user-cohort join
     (aggregate-sized) → (cohort, age) agg → a cumulative window over
     ≤|weeks| rows per cohort partition."""
-    scale = 10 ** int(value_decimals)
     uw = events.groupBy(
         F.col(user_col).alias("u"),
         F.date_trunc("week", F.col(ts_col)).alias("w"),
     ).agg(
-        F.sum(snap(F.col(value_col), value_decimals)).alias("c")
+        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("c")
     )
     first = uw.groupBy("u").agg(F.min("w").alias("cw"))
     sizes = first.groupBy("cw").agg(
@@ -258,7 +258,7 @@ def cohort_ltv(events: DataFrame, user_col: str = "user_id",
         "cents", F.sum("cents").over(w).alias("cum_cents"),
     )
     cs = F.col("cohort_size").cast("double")
-    sc = F.lit(float(scale))
+    sc = F.lit(float(SCALE))
     return out.select(
         "cohort_week",
         F.col("age_week").cast("long").alias("age_week"),

@@ -190,10 +190,12 @@ def rollup_cascade_fused(series: DataFrame,
     satisfies ClusteredDistribution(conv_id, metric, bucket_ts) (the
     partitioning expressions are a subset of the grouping keys), so
     Catalyst inserts NO further exchanges — 1m, 1h and 1d aggregate
-    in place on the same partitioning.  This is the production shape
-    for tier builds: per-stage paths that read unbucketed parquet pay
-    one shuffle per tier instead (measured: the 1h re-agg stopped
-    scaling at 8→32 cores because its shuffle dominated).
+    in place on the same partitioning.  rollup_cascade_auto takes
+    this path for even keys.  The batch pipeline (plans/pipeline.run)
+    does not: it builds each tier as its own rollup_raw/rollup_tier
+    stage over unbucketed parquet and pays one shuffle per tier
+    (measured: the 1h re-agg stopped scaling at 8→32 cores because
+    its shuffle dominated).
 
     tests/test_plans.py asserts the single-exchange property."""
     return rollup_cascade(_spread(series, n_parts, "conv_id"))

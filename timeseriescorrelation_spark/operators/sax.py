@@ -28,7 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import co_moment, snap, wide
+from timeseriescorrelation_spark.functions.exact import (
+    VALUE_DECIMALS,
+    co_moment,
+    snap,
+    wide,
+)
 
 # N(0,1) quartile breakpoints for alphabet size 4
 BREAKS = (-0.6745, 0.0, 0.6745)
@@ -36,7 +41,6 @@ BREAKS = (-0.6745, 0.0, 0.6745)
 
 def sax_daily(series: DataFrame, keys: list[str] | None = None,
               ts_col: str = "ts", value_col: str = "value",
-              value_decimals: int = 2,
               segment_hours: int = 1) -> DataFrame:
     """(keys..., day_ts, n_hours, sax_word).
 
@@ -50,7 +54,7 @@ def sax_daily(series: DataFrame, keys: list[str] | None = None,
     whose collision space is small enough for motif mining
     (activity.sax_motifs)."""
     keys = keys or ["metric"]
-    cents = snap(F.col(value_col), value_decimals)
+    cents = snap(F.col(value_col), VALUE_DECIMALS)
     pt = series.select(
         *keys,
         F.date_trunc("day", F.col(ts_col)).alias("day_ts"),

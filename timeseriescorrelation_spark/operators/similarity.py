@@ -29,19 +29,12 @@ from timeseriescorrelation_spark.functions.exact import (
     snap_np,
     wide,
 )
+from timeseriescorrelation_spark.operators.correlation import _dot
 from timeseriescorrelation_spark.session import cache_once
 
 
 def _to_double(col):
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _norm(a):

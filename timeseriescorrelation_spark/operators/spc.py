@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     moments,
     snap,
@@ -32,8 +34,7 @@ from timeseriescorrelation_spark.functions.exact import (
 
 
 def p_chart(series: DataFrame, key: str = "metric",
-            defect_cents: int = 10_000,
-            value_decimals: int = 2) -> DataFrame:
+            defect_cents: int = 10_000) -> DataFrame:
     """(metric, day_ts, n, defects, p_day, p_bar, ucl, lcl, ooc):
     per-metric-day defect-proportion chart; a "defect" is an
     observation whose cent-snapped value exceeds `defect_cents`
@@ -50,7 +51,7 @@ def p_chart(series: DataFrame, key: str = "metric",
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            (snap("value", value_decimals)
+            (snap("value", VALUE_DECIMALS)
              > F.lit(int(defect_cents))).cast("long")
         ).alias("defects"),
     )
@@ -189,8 +190,8 @@ def we_rules(series: DataFrame, key: str = "metric") -> DataFrame:
 
 
 def ewma_chart(series: DataFrame, key: str = "metric",
-               lam_num: int = 1, lam_den: int = 4, k_window: int = 24,
-               value_decimals: int = 2) -> DataFrame:
+               lam_num: int = 1, lam_den: int = 4,
+               k_window: int = 24) -> DataFrame:
     """(metric, hour_ts, x, z, center, ucl, lcl, ooc): EWMA control
     chart over the hourly cent series — the small-persistent-shift
     detector between Shewhart (big jumps) and CUSUM (cumulative
@@ -217,7 +218,6 @@ def ewma_chart(series: DataFrame, key: str = "metric",
 
     Scale: grid hash-agg → one 24-lag window pass per metric → one
     broadcast join of per-metric moments.  Grid-sized everything."""
-    scale = 10 ** int(value_decimals)
     a, d = int(lam_num), int(lam_den)
     K = int(k_window)
     # w_j = a·(d−a)^j·d^(K−1−j) for j≥... weights of x_{t−j}; the
@@ -230,7 +230,7 @@ def ewma_chart(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("hour", "ts").alias("hour_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     win = Window.partitionBy("metric").orderBy("hour_ts")
     num = None
@@ -260,7 +260,7 @@ def ewma_chart(series: DataFrame, key: str = "metric",
         .when(z < lcl, F.lit(-1))
         .otherwise(F.lit(0))
     )
-    fs = F.lit(float(scale))
+    fs = F.lit(float(SCALE))
     return j2.select(
         "metric", "hour_ts",
         F.round(F.col("y").cast("double") / fs, 6).alias("x"),
@@ -272,8 +272,7 @@ def ewma_chart(series: DataFrame, key: str = "metric",
     )
 
 
-def xmr_chart(series: DataFrame, key: str = "metric",
-              value_decimals: int = 2) -> DataFrame:
+def xmr_chart(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, day_ts, x, mr, ucl_x, lcl_x, ucl_mr, ooc_x, ooc_mr):
     individuals + moving-range (I-MR) Shewhart chart over the daily
     cent series — the control chart for UNGROUPED measurements (one
@@ -292,12 +291,11 @@ def xmr_chart(series: DataFrame, key: str = "metric",
 
     Scale: day-grid hash-agg → one lag window → one broadcast join
     of per-metric centerlines."""
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     w = Window.partitionBy("metric").orderBy("day_ts")
     t = d.withColumn(
@@ -316,7 +314,7 @@ def xmr_chart(series: DataFrame, key: str = "metric",
     lcl_x = xbar - F.lit(2.66) * mrbar
     ucl_mr = F.lit(3.267) * mrbar
     yd = F.col("y").cast("double")
-    fs = F.lit(float(scale))
+    fs = F.lit(float(SCALE))
     return j.select(
         "metric", "day_ts",
         F.round(yd / fs, 6).alias("x"),
@@ -335,8 +333,7 @@ def xmr_chart(series: DataFrame, key: str = "metric",
 
 
 def process_capability(series: DataFrame, lsl: float, usl: float,
-                       key: str = "metric",
-                       value_decimals: int = 2) -> DataFrame:
+                       key: str = "metric") -> DataFrame:
     """(metric, n, mean, sigma, cp, cpk, pct_out): Cp/Cpk process
     capability of each metric's daily cent series against fixed spec
     limits — the SPC summary purchasing/SRE reviews quote ("is the
@@ -349,14 +346,13 @@ def process_capability(series: DataFrame, lsl: float, usl: float,
     [LSL, USL] by integer comparison against the cent-scaled limits
     (no float compare on data).  One hash-agg + one broadcast join.
     """
-    scale = 10 ** int(value_decimals)
-    lsl_c = int(round(lsl * scale))
-    usl_c = int(round(usl * scale))
+    lsl_c = int(round(lsl * SCALE))
+    usl_c = int(round(usl * SCALE))
     d = series.groupBy(
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     g = d.groupBy("metric").agg(
         *moments("y", names="n s ss"),
@@ -370,7 +366,7 @@ def process_capability(series: DataFrame, lsl: float, usl: float,
         co_moment("n", "s", "s", "ss")
         .cast("double") / (nn * (nn - F.lit(1.0)))
     )
-    fs = F.lit(float(scale))
+    fs = F.lit(float(SCALE))
     usl_d = F.lit(float(usl_c))
     lsl_d = F.lit(float(lsl_c))
     cp = F.when(sd > 0, (usl_d - lsl_d) / (F.lit(6.0) * sd))
@@ -465,8 +461,7 @@ def g_chart(events: DataFrame, adverse_type: str = "error",
 
 
 def u_chart(series: DataFrame, key: str = "metric",
-            defect_cents: int = 10_000,
-            value_decimals: int = 2) -> DataFrame:
+            defect_cents: int = 10_000) -> DataFrame:
     """(metric, day_ts, n, defects, u_day, u_bar, ucl, lcl, ooc):
     defects-per-UNIT chart with varying limits — the fourth classic
     attribute chart (p = proportion, c = fixed-opportunity count,
@@ -487,7 +482,7 @@ def u_chart(series: DataFrame, key: str = "metric",
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            (snap("value", value_decimals)
+            (snap("value", VALUE_DECIMALS)
              > F.lit(int(defect_cents))).cast("long")
         ).alias("defects"),
     )

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     moments,
     snap,
@@ -395,7 +397,6 @@ def cox_weekend(series: DataFrame, keys: list[str] | None = None,
 
 
 def gumbel_maxima(series: DataFrame, keys: list[str] | None = None,
-                  value_decimals: int = 2,
                   return_days: int = 100,
                   min_days: int = 5) -> DataFrame:
     """(keys..., n_days, mean_max, sd_max, gumbel_loc, gumbel_scale,
@@ -413,11 +414,10 @@ def gumbel_maxima(series: DataFrame, keys: list[str] | None = None,
 
     Scale: two stacked hash aggs, day-grid bounded."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     dm = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.max(snap("value", value_decimals)).alias("mx")
+        F.max(snap("value", VALUE_DECIMALS)).alias("mx")
     )
     agg = dm.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_days"),
@@ -434,7 +434,7 @@ def gumbel_maxima(series: DataFrame, keys: list[str] | None = None,
     loc = mean - F.lit(GAMMA_EM) * beta
     tt = float(int(return_days))
     rl = loc - beta * F.log(-F.log(F.lit(1.0 - 1.0 / tt)))
-    sc = F.lit(float(scale))
+    sc = F.lit(float(SCALE))
     return agg.select(
         *keys,
         F.col("n_days").cast("long").alias("n_days"),
@@ -491,7 +491,7 @@ def median_survival(series: DataFrame, keys: list[str] | None = None,
 
 
 def gpd_tail(series: DataFrame, keys: list[str] | None = None,
-             value_decimals: int = 2, tail_q: float = 0.9,
+             tail_q: float = 0.9,
              min_exceed: int = 8) -> DataFrame:
     """(keys..., n_days, n_exc, u, xi, beta): Generalized Pareto
     peaks-over-threshold fit per key on DAILY cent totals — the
@@ -523,11 +523,10 @@ def gpd_tail(series: DataFrame, keys: list[str] | None = None,
     NULL fit when A = B (degenerate spacing); no row when fewer
     than min_exceed exceedances."""
     keys = keys or ["metric"]
-    scale = 10 ** int(value_decimals)
     d = series.groupBy(
         *keys, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     w_rank = Window.partitionBy(*keys).orderBy("y", "day_ts")
     w_all = Window.partitionBy(*keys)
@@ -569,7 +568,7 @@ def gpd_tail(series: DataFrame, keys: list[str] | None = None,
         / (F.col("ne").cast("double") * (a_num - b_num))
     )
     ok = (a_num - b_num) != 0
-    sc = F.lit(float(scale))
+    sc = F.lit(float(SCALE))
     return agg.select(
         *keys,
         F.col("n_days").cast("long").alias("n_days"),

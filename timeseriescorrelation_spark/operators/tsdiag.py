@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
     co_moment,
     moments,
     snap,
@@ -37,12 +39,7 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us
 from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
-def _dbl(c):
-    return c.cast("double")
-
-
 def ar2_forecast(series: DataFrame, key: str = "metric",
-                 value_decimals: int = 2,
                  min_hours: int = 8) -> DataFrame:
     """(metric, day_ts, n_hours, r1, r2, phi1, phi2, forecast):
     per-day AR(2) fit by Yule-Walker over each metric's hourly
@@ -67,8 +64,7 @@ def ar2_forecast(series: DataFrame, key: str = "metric",
     drop out.  Scale: one hash-agg to the grid, one ≤24-row window
     per (metric, day), one hash-agg — no raw-row shuffle.
     """
-    h = _hourly_cents(series, [key], value_decimals)
-    scale = 10 ** int(value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     lagged = h.select(
         F.col(key), day.alias("day_ts"), "hour_ts", "y",
@@ -92,18 +88,18 @@ def ar2_forecast(series: DataFrame, key: str = "metric",
     ).where(F.col("n") >= min_hours)
 
     n, s = F.col("n"), F.col("s")
-    c0 = _dbl(n * n * F.col("p0") - n * s * (s + s) + n * s * s)
-    c1 = _dbl(n * n * F.col("p1") - n * s * (F.col("a1") + F.col("b1"))
-              + (n - 1) * s * s)
-    c2 = _dbl(n * n * F.col("p2") - n * s * (F.col("a2") + F.col("b2"))
-              + (n - 2) * s * s)
+    c0 = (n * n * F.col("p0") - n * s * (s + s) + n * s * s).cast("double")
+    c1 = (n * n * F.col("p1") - n * s * (F.col("a1") + F.col("b1"))
+              + (n - 1) * s * s).cast("double")
+    c2 = (n * n * F.col("p2") - n * s * (F.col("a2") + F.col("b2"))
+              + (n - 2) * s * s).cast("double")
     den = c0 * c0 - c1 * c1
     phi1 = F.when(den != 0, c1 * (c0 - c2) / den)
     phi2 = F.when(den != 0, (c2 * c0 - c1 * c1) / den)
-    m = _dbl(s) / _dbl(n)
+    m = s.cast("double") / n.cast("double")
     fc = (
-        (m + phi1 * (_dbl(F.col("xn")) - m)
-         + phi2 * (_dbl(F.col("xn1")) - m)) / F.lit(float(scale))
+        (m + phi1 * (F.col("xn").cast("double") - m)
+         + phi2 * (F.col("xn1").cast("double") - m)) / F.lit(float(SCALE))
     )
     return g.where(c0 > 0).select(
         key, "day_ts", n.cast("long").alias("n_hours"),
@@ -116,8 +112,7 @@ def ar2_forecast(series: DataFrame, key: str = "metric",
 
 
 def variance_ratio(series: DataFrame, key: str = "metric",
-                   q: int = 4, value_decimals: int = 2,
-                   min_hours: int = 10) -> DataFrame:
+                   q: int = 4, min_hours: int = 10) -> DataFrame:
     """(metric, day_ts, q, n1, nq, vr): Lo-MacKinlay variance-ratio
     test statistic per metric-day — VR(q) = Var(q-step deltas) /
     (q · Var(1-step deltas)) over overlapping windows of the hourly
@@ -132,7 +127,7 @@ def variance_ratio(series: DataFrame, key: str = "metric",
     Scale: identical shape to ar2_forecast — grid agg, per-(metric,
     day) ≤24-row lag window, hash-agg.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     wspec = Window.partitionBy(key, day).orderBy("hour_ts")
     d = h.select(
@@ -150,13 +145,13 @@ def variance_ratio(series: DataFrame, key: str = "metric",
     ).where(
         (F.col("n1") + 1 >= min_hours) & (F.col("nq") >= 2)
     )
-    var1 = _dbl(co_moment("n1", "s1", "s1", "s11"))
-    varq = _dbl(co_moment("nq", "sq", "sq", "sqq"))
+    var1 = co_moment("n1", "s1", "s1", "s11").cast("double")
+    varq = co_moment("nq", "sq", "sq", "sqq").cast("double")
     vr = F.when(
         var1 > 0,
-        varq * _dbl(F.col("n1")) * _dbl(F.col("n1"))
-        / (F.lit(float(q)) * _dbl(F.col("nq")) * _dbl(F.col("nq"))
-           * var1),
+        varq * F.col("n1").cast("double") * F.col("n1").cast("double")
+        / (F.lit(float(q)) * F.col("nq").cast("double")
+           * F.col("nq").cast("double") * var1),
     )
     return g.where(var1 > 0).select(
         key, "day_ts", F.lit(int(q)).alias("q"),
@@ -167,7 +162,6 @@ def variance_ratio(series: DataFrame, key: str = "metric",
 
 
 def runs_test(series: DataFrame, key: str = "metric",
-              value_decimals: int = 2,
               min_signs: int = 8) -> DataFrame:
     """(metric, day_ts, pos, neg, runs, z): Wald-Wolfowitz runs test
     on the SIGNS of nonzero hourly deltas per metric-day — too few
@@ -185,7 +179,7 @@ def runs_test(series: DataFrame, key: str = "metric",
     Scale: grid agg → two ≤24-row windows (delta, then sign-change
     over the filtered rows) → hash-agg; aggregates only.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     wspec = Window.partitionBy(key, day).orderBy("hour_ts")
     d = h.select(
@@ -209,8 +203,8 @@ def runs_test(series: DataFrame, key: str = "metric",
         (F.col("pos") > 0) & (F.col("neg") > 0)
         & (F.col("pos") + F.col("neg") >= min_signs)
     )
-    p, mm, r = (_dbl(F.col("pos")), _dbl(F.col("neg")),
-                _dbl(F.col("runs")))
+    p, mm, r = (F.col("pos").cast("double"), F.col("neg").cast("double"),
+                F.col("runs").cast("double"))
     nn = p + mm
     mu = F.lit(2.0) * p * mm / nn + F.lit(1.0)
     var = (F.lit(2.0) * p * mm * (F.lit(2.0) * p * mm - nn)
@@ -226,7 +220,6 @@ def runs_test(series: DataFrame, key: str = "metric",
 
 
 def turning_points(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2,
                    min_hours: int = 8) -> DataFrame:
     """(metric, day_ts, n_hours, tp, z): turning-points randomness
     test per metric-day — count strict local extrema of the hourly
@@ -241,7 +234,7 @@ def turning_points(series: DataFrame, key: str = "metric",
 
     Scale: grid agg → one ≤24-row lag/lead window → hash-agg.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     wspec = Window.partitionBy(key, day).orderBy("hour_ts")
     d = h.select(
@@ -258,7 +251,7 @@ def turning_points(series: DataFrame, key: str = "metric",
             ).otherwise(0)
         ).alias("tp"),
     ).where(F.col("n_hours") >= min_hours)
-    nd, td = _dbl(F.col("n_hours")), _dbl(F.col("tp"))
+    nd, td = F.col("n_hours").cast("double"), F.col("tp").cast("double")
     mu = F.lit(2.0) * (nd - F.lit(2.0)) / F.lit(3.0)
     var = (F.lit(16.0) * nd - F.lit(29.0)) / F.lit(90.0)
     return g.select(
@@ -269,8 +262,7 @@ def turning_points(series: DataFrame, key: str = "metric",
 
 
 def allan_variance(series: DataFrame, key: str = "metric",
-                   taus: tuple[int, ...] = (1, 2, 4),
-                   value_decimals: int = 2) -> DataFrame:
+                   taus: tuple[int, ...] = (1, 2, 4)) -> DataFrame:
     """(metric, tau_h, m_pairs, avar_num, avar): Allan variance of
     each metric's hourly cent-sum rate at averaging windows of τ
     hours — the clock-stability statistic, here reading "how stable
@@ -288,8 +280,7 @@ def allan_variance(series: DataFrame, key: str = "metric",
     Scale: one grid agg, one bucket hash-agg (|metrics|·|hours|/τ
     rows), one lag window over buckets, one final hash-agg.
     """
-    scale = 10 ** int(value_decimals)
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     hidx = (F.unix_micros("hour_ts") / F.lit(3_600_000_000)).cast(
         "long"
     )
@@ -316,11 +307,11 @@ def allan_variance(series: DataFrame, key: str = "metric",
             g.select(
                 key, F.lit(t).alias("tau_h"),
                 F.col("m_pairs").cast("long").alias("m_pairs"),
-                _dbl(F.col("num")).alias("avar_num"),
+                F.col("num").cast("double").alias("avar_num"),
                 F.round(
-                    _dbl(F.col("num"))
-                    / (F.lit(2.0) * _dbl(F.col("m_pairs"))
-                       * F.lit(float(t * t * scale * scale))),
+                    F.col("num").cast("double")
+                    / (F.lit(2.0) * F.col("m_pairs").cast("double")
+                       * F.lit(float(t * t * SCALE * SCALE))),
                     6,
                 ).alias("avar"),
             )
@@ -331,8 +322,7 @@ def allan_variance(series: DataFrame, key: str = "metric",
     return out
 
 
-def page_hinkley(series: DataFrame, key: str = "metric",
-                 value_decimals: int = 2) -> DataFrame:
+def page_hinkley(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, n_hours, ph_max, ph_hour_ts): Page-Hinkley drift scan
     per metric over the full hourly sequence — the maximum upward
     excursion of the cumulative deviation from the series' own mean:
@@ -350,8 +340,7 @@ def page_hinkley(series: DataFrame, key: str = "metric",
     partitions); one hash-agg ends it.  This is the batch scan; the
     streaming twin is the cusum family (`streaming/cusum_stream`).
     """
-    scale = 10 ** int(value_decimals)
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     wcum = (
         Window.partitionBy(key).orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -381,15 +370,14 @@ def page_hinkley(series: DataFrame, key: str = "metric",
     ).agg(
         F.max("n_all").cast("long").alias("n_hours"),
         F.round(
-            _dbl(F.max("ph_raw"))
-            / (_dbl(F.max("n_all")) * F.lit(float(scale))), 6
+            F.max("ph_raw").cast("double")
+            / (F.max("n_all").cast("double") * F.lit(float(SCALE))), 6
         ).alias("ph_max"),
         F.min("hour_ts").alias("ph_hour_ts"),
     )
 
 
-def record_counts(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2) -> DataFrame:
+def record_counts(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, n_hours, up_records, down_records, expected_records):
     record-counting trend test per metric over the full hourly
     cent-sum sequence — the number of strict running-maximum breaks
@@ -409,7 +397,7 @@ def record_counts(series: DataFrame, key: str = "metric",
     aggregate rows → per-metric hash-agg; the harmonic sum explodes a
     1..n sequence per METRIC (|metrics|·|hours| rows, born post-agg).
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     wprev = (
         Window.partitionBy(key).orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -441,14 +429,13 @@ def record_counts(series: DataFrame, key: str = "metric",
         F.col("n_hours").cast("long").alias("n_hours"),
         F.col("up_records").cast("long").alias("up_records"),
         F.col("down_records").cast("long").alias("down_records"),
-        F.round(_dbl(F.col("h_u")) / F.lit(1e6), 6)
+        F.round(F.col("h_u").cast("double") / F.lit(1e6), 6)
         .alias("expected_records"),
     )
 
 
 def newey_west(series: DataFrame, key: str = "metric",
-               max_lag: int = 6, value_decimals: int = 2,
-               min_hours: int = 24) -> DataFrame:
+               max_lag: int = 6, min_hours: int = 24) -> DataFrame:
     """(metric, n_hours, mean_v, se_iid, se_hac, hac_ratio): the
     serial-correlation-robust (Newey-West/HAC, Bartlett kernel)
     standard error of each metric's mean hourly cent sum — the honest
@@ -474,8 +461,7 @@ def newey_west(series: DataFrame, key: str = "metric",
     (max_lag lag columns in ONE window pass) → one hash-agg.
     """
     lags = list(range(1, int(max_lag) + 1))
-    h = _hourly_cents(series, [key], value_decimals)
-    scale = 10 ** int(value_decimals)
+    h = _hourly_cents(series, [key])
     wspec = Window.partitionBy(key).orderBy("hour_ts")
     sel = [F.col(key), F.col("y")]
     for k in lags:
@@ -504,14 +490,19 @@ def newey_west(series: DataFrame, key: str = "metric",
         )
         vprime = vprime + 2 * (max_lag + 1 - k) * ck
     lp1 = float(max_lag + 1)
-    nd = _dbl(n)
-    den = nd * nd * F.lit(float(scale))
-    se_iid = F.sqrt(_dbl(c0)) / den
-    se_hac = F.sqrt(_dbl(vprime) / F.lit(lp1)) / den
-    ratio = F.sqrt(_dbl(vprime) / (F.lit(lp1) * _dbl(c0)))
-    return g.where((_dbl(c0) > 0) & (_dbl(vprime) >= 0)).select(
+    nd = n.cast("double")
+    den = nd * nd * F.lit(float(SCALE))
+    se_iid = F.sqrt(c0.cast("double")) / den
+    se_hac = F.sqrt(vprime.cast("double") / F.lit(lp1)) / den
+    ratio = F.sqrt(
+        vprime.cast("double") / (F.lit(lp1) * c0.cast("double"))
+    )
+    return g.where(
+        (c0.cast("double") > 0) & (vprime.cast("double") >= 0)
+    ).select(
         key, n.cast("long").alias("n_hours"),
-        F.round(_dbl(s) / nd / F.lit(float(scale)), 6).alias("mean_v"),
+        F.round(s.cast("double") / nd / F.lit(float(SCALE)), 6)
+        .alias("mean_v"),
         F.round(se_iid, 6).alias("se_iid"),
         F.round(se_hac, 6).alias("se_hac"),
         F.round(ratio, 6).alias("hac_ratio"),
@@ -519,7 +510,6 @@ def newey_west(series: DataFrame, key: str = "metric",
 
 
 def crossing_rate(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   ord_col: str = "turn_idx") -> DataFrame:
     """(metric, day_ts, n, crossings, crossing_rate): mean-crossing
     count per metric-day — how often the (time-ordered) series crosses
@@ -539,7 +529,7 @@ def crossing_rate(series: DataFrame, key: str = "metric",
         F.date_trunc("day", "ts").alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
         F.col(ord_col).cast("long").alias("o"),
-        snap("value", value_decimals).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
     )
     day = pt.groupBy("metric", "day_ts").agg(
         F.count(F.lit(1)).alias("n"), F.sum("c").alias("t_tot")
@@ -571,8 +561,7 @@ def crossing_rate(series: DataFrame, key: str = "metric",
 
 
 def kpss_level(series: DataFrame, key: str = "metric",
-               max_lag: int = 6, value_decimals: int = 2,
-               min_hours: int = 24) -> DataFrame:
+               max_lag: int = 6, min_hours: int = 24) -> DataFrame:
     """(metric, n_hours, eta, is_level_stationary): the KPSS test for
     level stationarity per metric's hourly cent-sum series — the
     complement of a unit-root test: here STATIONARITY is the null, so
@@ -603,7 +592,7 @@ def kpss_level(series: DataFrame, key: str = "metric",
     running sum, L lag columns over aggregate rows) → one hash-agg."""
     lags = list(range(1, int(max_lag) + 1))
     lp1 = int(max_lag) + 1
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     w = Window.partitionBy(key).orderBy("hour_ts")
     w_full = Window.partitionBy(key)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -642,12 +631,12 @@ def kpss_level(series: DataFrame, key: str = "metric",
         )
         vprime = vprime + 2 * (lp1 - k) * ck
     g = g.withColumn("vp", vprime)
-    return g.where(_dbl(F.col("vp")) > 0).select(
+    return g.where(F.col("vp").cast("double") > 0).select(
         key,
         n.cast("long").alias("n_hours"),
         F.round(
-            F.lit(float(lp1)) * _dbl(F.col("sp2"))
-            / (_dbl(n) * _dbl(F.col("vp"))), 6
+            F.lit(float(lp1)) * F.col("sp2").cast("double")
+            / (n.cast("double") * F.col("vp").cast("double")), 6
         ).alias("eta"),
         (
             F.lit(1000 * lp1) * F.col("sp2")
@@ -657,7 +646,6 @@ def kpss_level(series: DataFrame, key: str = "metric",
 
 
 def df_unitroot(series: DataFrame, key: str = "metric",
-                value_decimals: int = 2,
                 min_hours: int = 24) -> DataFrame:
     """(metric, n_obs, gamma, t_stat, has_unit_root): the (un-augmented)
     Dickey-Fuller unit-root test per metric's hourly cent-sum series —
@@ -684,7 +672,7 @@ def df_unitroot(series: DataFrame, key: str = "metric",
     (Cxx·Czz = Cxz², constant, or m < min_hours) drop.
 
     Scale: grid hash-agg → one lag window per metric → one hash-agg."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     w = Window.partitionBy(key).orderBy("hour_ts")
     lagged = h.select(
         F.col(key),
@@ -700,8 +688,8 @@ def df_unitroot(series: DataFrame, key: str = "metric",
     cxz = co_moment("m", "sx", "sz", "sxz")
     g = g.select(
         key, m.alias("mm"),
-        _dbl(cxx).alias("dxx"), _dbl(czz).alias("dzz"),
-        _dbl(cxz).alias("dxz"),
+        cxx.cast("double").alias("dxx"), czz.cast("double").alias("dzz"),
+        cxz.cast("double").alias("dxz"),
     ).where(
         (F.col("dxx") > 0)
         & (F.col("dxx") * F.col("dzz")
@@ -709,7 +697,7 @@ def df_unitroot(series: DataFrame, key: str = "metric",
     )
     det = F.col("dxx") * F.col("dzz") - F.col("dxz") * F.col("dxz")
     t = (
-        F.col("dxz") * F.sqrt(_dbl(F.col("mm")) - F.lit(2.0))
+        F.col("dxz") * F.sqrt(F.col("mm").cast("double") - F.lit(2.0))
         / F.sqrt(det)
     )
     return g.select(
@@ -722,7 +710,6 @@ def df_unitroot(series: DataFrame, key: str = "metric",
 
 
 def adf_augmented(series: DataFrame, key: str = "metric", p: int = 1,
-                  value_decimals: int = 2,
                   min_hours: int = 30) -> DataFrame:
     """(metric, n_obs, gamma, t_stat, has_unit_root): AUGMENTED
     Dickey-Fuller with p ∈ {1, 2} lagged-difference regressors — the
@@ -754,7 +741,7 @@ def adf_augmented(series: DataFrame, key: str = "metric", p: int = 1,
     neighbours), matching df_unitroot."""
     if p not in (1, 2):
         raise ValueError("p must be 1 or 2")
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     w = Window.partitionBy(key).orderBy("hour_ts")
     z = F.col("y") - F.lag("y", 1).over(w)
     base = h.select(
@@ -845,8 +832,7 @@ def adf_augmented(series: DataFrame, key: str = "metric", p: int = 1,
     )
 
 
-def streak_report(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2) -> DataFrame:
+def streak_report(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, n_days, max_up_streak, max_down_streak, last_len,
     last_dir): longest consecutive-day up/down runs of each metric's
     daily cent sum, plus the streak it is currently on — the
@@ -865,7 +851,7 @@ def streak_report(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals))
+        F.sum(snap("value", VALUE_DECIMALS))
          .cast("long").alias("y")
     )
     w = Window.partitionBy(key).orderBy("day_ts")
@@ -910,7 +896,6 @@ def streak_report(series: DataFrame, key: str = "metric",
 
 
 def jarque_bera(series: DataFrame, key: str = "metric",
-                value_decimals: int = 2,
                 min_deltas: int = 6) -> DataFrame:
     """(metric, n_deltas, skew_g1, kurt_excess, jb, p_value):
     Jarque-Bera normality test per metric over the DAILY DELTAS of
@@ -944,7 +929,7 @@ def jarque_bera(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     w = Window.partitionBy(key).orderBy("day_ts")
     v = (F.col("y") - F.lag("y", 1).over(w))
@@ -982,7 +967,6 @@ def jarque_bera(series: DataFrame, key: str = "metric",
 
 
 def durbin_watson(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   min_days: int = 8) -> DataFrame:
     """(metric, n_days, dw, rho_lag1): Durbin-Watson statistic on the
     residuals of each metric's daily OLS trend — the classic "did the
@@ -1014,7 +998,7 @@ def durbin_watson(series: DataFrame, key: str = "metric",
     d = series.groupBy(
         key, F.date_trunc("day", "ts").alias("day_ts")
     ).agg(
-        F.sum(snap("value", value_decimals)).alias("y")
+        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
     )
     w = Window.partitionBy(key).orderBy("day_ts")
     dd = d.select(
@@ -1053,7 +1037,6 @@ def durbin_watson(series: DataFrame, key: str = "metric",
 
 
 def arch_lm(series: DataFrame, key: str = "metric",
-            value_decimals: int = 2,
             min_pairs: int = 12) -> DataFrame:
     """(metric, n_pairs, r2, lm_stat): Engle's ARCH LM test (lag 1)
     per metric over the HOURLY DELTAS of the cent-sum series — does
@@ -1079,7 +1062,7 @@ def arch_lm(series: DataFrame, key: str = "metric",
     Sequence convention: lags run over the observed hourly sequence
     (gaps splice, module policy).  Scale: one hash-agg to the hour
     grid, two lag windows per metric over grid rows, one hash-agg."""
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     w = Window.partitionBy(key).orderBy("hour_ts")
     d = h.select(
         key, "hour_ts",

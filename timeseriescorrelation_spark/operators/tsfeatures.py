@@ -31,16 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import wide
+from timeseriescorrelation_spark.functions.exact import SCALE, wide
 from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
-def _dbl(c):
-    return c.cast("double")
-
-
 def permutation_entropy(series: DataFrame, key: str = "metric",
-                        value_decimals: int = 2,
                         min_hours: int = 8) -> DataFrame:
     """(metric, day_ts, n_pat, n_distinct, pe, pe_norm): permutation
     entropy (Bandt–Pompe 2002) of order m=3 per metric-day — Shannon
@@ -62,7 +57,7 @@ def permutation_entropy(series: DataFrame, key: str = "metric",
     hash-agg on (metric, day, pat) → hash-agg.  No shuffle grows
     with raw rows.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(
@@ -82,10 +77,10 @@ def permutation_entropy(series: DataFrame, key: str = "metric",
     g = per_pat.groupBy(key, "day_ts").agg(
         F.sum("cnt").alias("n_pat"),
         F.count(F.lit(1)).alias("n_distinct"),
-        F.sum(_dbl(F.col("cnt")) * F.log(_dbl(F.col("cnt"))))
+        F.sum(F.col("cnt").cast("double") * F.log(F.col("cnt").cast("double")))
         .alias("slc"),
     ).where(F.col("n_pat") >= min_hours - 2)
-    nd = _dbl(F.col("n_pat"))
+    nd = F.col("n_pat").cast("double")
     pe = F.log(nd) - F.col("slc") / nd
     return g.select(
         key, "day_ts",
@@ -96,8 +91,7 @@ def permutation_entropy(series: DataFrame, key: str = "metric",
     )
 
 
-def sample_entropy(series: DataFrame, key: str = "metric",
-                   value_decimals: int = 2, r_cents: int = 500,
+def sample_entropy(series: DataFrame, key: str = "metric", r_cents: int = 500,
                    min_hours: int = 8) -> DataFrame:
     """(metric, day_ts, n_hours, b_m, a_m1, sampen): sample entropy
     (Richman–Moorman 2000) with template length m=2 and an INTEGER
@@ -122,7 +116,7 @@ def sample_entropy(series: DataFrame, key: str = "metric",
     bounded-quadratic budget as mann_kendall; groups shuffle once.
     For unbounded n, permutation_entropy is the O(n) scale path.
     """
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(
@@ -158,7 +152,9 @@ def sample_entropy(series: DataFrame, key: str = "metric",
     out = g.join(n_per, [key, "day_ts"])
     sampen = F.when(
         (F.col("a_m1") > 0) & (F.col("b_m") > 0),
-        F.round(-F.log(_dbl(F.col("a_m1")) / _dbl(F.col("b_m"))), 6),
+        F.round(-F.log(
+            F.col("a_m1").cast("double") / F.col("b_m").cast("double")
+        ), 6),
     )
     return out.select(
         key, "day_ts", F.col("n_hours").cast("long").alias("n_hours"),
@@ -169,7 +165,6 @@ def sample_entropy(series: DataFrame, key: str = "metric",
 
 
 def hjorth_params(series: DataFrame, key: str = "metric",
-                  value_decimals: int = 2,
                   min_hours: int = 8) -> DataFrame:
     """(metric, day_ts, n_hours, activity, mobility, complexity):
     Hjorth descriptors (1970) of each metric's hourly cent-sum
@@ -191,8 +186,7 @@ def hjorth_params(series: DataFrame, key: str = "metric",
 
     Scale: grid agg → one ≤24-row lag window → hash-agg.
     """
-    scale = float(10 ** int(value_decimals))
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(
@@ -214,9 +208,10 @@ def hjorth_params(series: DataFrame, key: str = "metric",
     ).where(F.col("n0") >= min_hours)
 
     def var(n, s, q):
-        nd = _dbl(F.col(n))
+        nd = F.col(n).cast("double")
         return (
-            nd * _dbl(F.col(q)) - _dbl(F.col(s)) * _dbl(F.col(s))
+            nd * F.col(q).cast("double")
+            - F.col(s).cast("double") * F.col(s).cast("double")
         ) / (nd * nd)
 
     v0, v1, v2 = var("n0", "s0", "q0"), var("n1", "s1", "q1"), \
@@ -231,7 +226,7 @@ def hjorth_params(series: DataFrame, key: str = "metric",
     mob = F.sqrt(v1 / v0)
     return g.select(
         key, "day_ts", F.col("n0").cast("long").alias("n_hours"),
-        F.round(v0 / F.lit(scale * scale), 6).alias("activity"),
+        F.round(v0 / F.lit(float(SCALE) * float(SCALE)), 6).alias("activity"),
         F.when(num0 > 0, F.round(mob, 6)).alias("mobility"),
         F.when(
             (num0 > 0) & (num1 > 0),
@@ -241,7 +236,6 @@ def hjorth_params(series: DataFrame, key: str = "metric",
 
 
 def complexity_stats(series: DataFrame, key: str = "metric",
-                     value_decimals: int = 2,
                      min_hours: int = 8) -> DataFrame:
     """(metric, day_ts, n_hours, cid_ce, cid_norm, c3, trev): the
     tsfresh nonlinearity trio per metric-day over the hourly grid:
@@ -260,8 +254,8 @@ def complexity_stats(series: DataFrame, key: str = "metric",
     |y| ≈ 10¹², loud ANSI overflow beyond.  One shared double tree,
     6 dp.  Scale: grid agg → ≤24-row lead window → hash-agg.
 
-    Outputs are reported in NATURAL value units (cents ÷ 10^d per
-    the value_decimals scale): cid_ce ÷ scale, c3/trev ÷ scale³.
+    Outputs are reported in NATURAL value units (cents ÷ the kit's
+    SCALE = 10^VALUE_DECIMALS): cid_ce ÷ SCALE, c3/trev ÷ SCALE³.
     This is not cosmetic — DuckDB's round(x, 6) on doubles ≳ 2³³
     is lossy (it detours through x·10⁶ which overflows exact double
     space) while Spark's BigDecimal round is exact, so 6-dp-rounded
@@ -270,8 +264,7 @@ def complexity_stats(series: DataFrame, key: str = "metric",
     engines (measured: duckdb round(9876543210987.555, 6) →
     …987.557).
     """
-    scale = float(10 ** int(value_decimals))
-    h = _hourly_cents(series, [key], value_decimals)
+    h = _hourly_cents(series, [key])
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(
@@ -293,24 +286,25 @@ def complexity_stats(series: DataFrame, key: str = "metric",
             - wide("a") * wide("a") * wide("b")
         ).alias("tr"),
     ).where(F.col("n_hours") >= min_hours)
-    nd = _dbl(F.col("n_hours"))
-    var = (nd * _dbl(F.col("q")) - _dbl(F.col("s")) * _dbl(F.col("s"))) \
+    nd = F.col("n_hours").cast("double")
+    var = (nd * F.col("q").cast("double")
+           - F.col("s").cast("double") * F.col("s").cast("double")) \
         / (nd * nd)
-    cid = F.sqrt(_dbl(F.col("dq")))
+    cid = F.sqrt(F.col("dq").cast("double"))
     n1d = nd - F.lit(1.0)
-    n3d = _dbl(F.col("n3"))
-    cube = F.lit(scale ** 3)
+    n3d = F.col("n3").cast("double")
+    cube = F.lit(float(SCALE) ** 3)
     # σ = 0 (constant day) ⇒ cid_norm undefined ⇒ NULL — guard on
     # the exact integer numerator, never the double.
     vnum = (wide("n_hours") * wide("q")
             - F.col("s") * F.col("s"))
     return g.select(
         key, "day_ts", F.col("n_hours").cast("long").alias("n_hours"),
-        F.round(cid / F.lit(scale), 6).alias("cid_ce"),
+        F.round(cid / F.lit(float(SCALE)), 6).alias("cid_ce"),
         F.when(
             vnum > 0,
             F.round(cid / F.sqrt(var) / F.sqrt(n1d), 6),
         ).alias("cid_norm"),
-        F.round(_dbl(F.col("p3")) / n3d / cube, 6).alias("c3"),
-        F.round(_dbl(F.col("tr")) / n1d / cube, 6).alias("trev"),
+        F.round(F.col("p3").cast("double") / n3d / cube, 6).alias("c3"),
+        F.round(F.col("tr").cast("double") / n1d / cube, 6).alias("trev"),
     )
