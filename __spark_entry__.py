@@ -21,6 +21,12 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from timeseriescorrelation_spark.functions.exact import (  # noqa: E402
+    SCALE,
+    VALUE_DECIMALS,
+    bucket_cents,
+    snap,
+)
 from timeseriescorrelation_spark.operators.correlation import (  # noqa: E402
     build_vectors,
     candidate_pairs,
@@ -1303,7 +1309,7 @@ def q_hdr_quantiles_day(spark, sf_dir):
         "metric",
         "bucket_ts",
         F.greatest(
-            F.round(F.col("value") * 100).cast("long"),
+            snap("value", VALUE_DECIMALS),
             F.lit(1).cast("long"),
         ).alias("v"),
     )
@@ -1363,7 +1369,7 @@ def q_rolling_corr_1h(spark, sf_dir):
         )
         .agg(
             F.count("*").cast("long").alias("x"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"),
+            F.sum(snap("value", VALUE_DECIMALS)).alias("y"),
         )
     )
     out = rolling_corr(
@@ -1502,17 +1508,12 @@ def q_rank_family(spark, sf_dir):
     ulp-ties between engines and silently permute every rank)."""
     from pyspark.sql import Window
 
-    daily = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("event_type").alias("metric"),
-            F.date_trunc("day", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "total_cents"
-            )
-        )
+    daily = bucket_cents(
+        _events(spark, sf_dir), [F.col("event_type").alias("metric")], "day"
+    ).select(
+        "metric",
+        F.col("day_ts").alias("bucket_ts"),
+        F.col("y").alias("total_cents"),
     )
     w = Window.partitionBy("metric").orderBy("total_cents", "bucket_ts")
     return daily.select(
@@ -1619,8 +1620,8 @@ def q_seasonal_profile(spark, sf_dir):
         .agg(
             F.count("*").alias("n"),
             F.round(
-                F.sum(F.round(F.col("value") * 100).cast("long"))
-                / (F.count("*") * 100.0),
+                F.sum(snap("value", VALUE_DECIMALS))
+                / (F.count("*") * float(SCALE)),
                 6,
             ).alias("mean_v"),
         )
@@ -1633,18 +1634,9 @@ def q_wow_delta(spark, sf_dir):
     A LEFT self-join on the shifted key, not lag(7) — rows must match
     by CALENDAR distance, and a missing day would silently misalign a
     row-offset lag."""
-    daily = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("event_type").alias("metric"),
-            F.date_trunc("day", F.col("ts")).alias("day_ts"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "total_cents"
-            )
-        )
-    )
+    daily = bucket_cents(
+        _events(spark, sf_dir), [F.col("event_type").alias("metric")], "day"
+    ).withColumnRenamed("y", "total_cents")
     prev = daily.select(
         F.col("metric").alias("_m"),
         (F.col("day_ts") + F.expr("interval 7 days")).alias("_d"),
@@ -1740,7 +1732,7 @@ def q_rolling_p95_1h(spark, sf_dir):
         "conv_id",
         "metric",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("_v"),
+        snap("value", VALUE_DECIMALS).alias("_v"),
     )
     w = (
         Window.partitionBy("conv_id", "metric")
@@ -1752,12 +1744,12 @@ def q_rolling_p95_1h(spark, sf_dir):
         "metric",
         "ts",
         F.count("_v").over(w).alias("roll_n"),
-        F.round(F.expr("percentile(_v, 0.5)").over(w) / 100.0, 6).alias(
-            "roll_p50"
-        ),
-        F.round(F.expr("percentile(_v, 0.95)").over(w) / 100.0, 6).alias(
-            "roll_p95"
-        ),
+        F.round(
+            F.expr("percentile(_v, 0.5)").over(w) / float(SCALE), 6
+        ).alias("roll_p50"),
+        F.round(
+            F.expr("percentile(_v, 0.95)").over(w) / float(SCALE), 6
+        ).alias("roll_p95"),
     )
 
 
@@ -2021,7 +2013,7 @@ def q_cube_counts(spark, sf_dir):
     e = _events(spark, sf_dir).select(
         "event_type",
         F.dayofweek("ts").alias("dow"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        snap("value", VALUE_DECIMALS).alias("cents"),
     )
     return (
         e.cube("event_type", "dow")
@@ -2115,7 +2107,7 @@ def q_heatmap_bins(spark, sf_dir):
     e = _events(spark, sf_dir).select(
         F.col("event_type").alias("metric"),
         F.hour("ts").alias("hod"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        snap("value", VALUE_DECIMALS).alias("cents"),
     )
     mm = e.groupBy("metric").agg(
         F.min("cents").alias("mn"), F.max("cents").alias("mx")
@@ -2143,7 +2135,7 @@ def q_minmax_scale(spark, sf_dir):
     both engines; constant metrics NULL-guarded."""
     s = _series_from_events(spark, sf_dir).select(
         "conv_id", "metric", "ts", "turn_idx",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        snap("value", VALUE_DECIMALS).alias("cents"),
     )
     mm = s.groupBy("metric").agg(
         F.min("cents").alias("mn"), F.max("cents").alias("mx")
@@ -3340,11 +3332,11 @@ def q_weighted_median(spark, sf_dir):
     s = _series_from_events(spark, sf_dir)
     conv = s.groupBy("metric", "conv_id").agg(
         F.count(F.lit(1)).alias("w"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("_sc"),
+        F.sum(snap("value", VALUE_DECIMALS)).alias("_sc"),
     ).select(
         "metric", "conv_id", "w",
         (F.col("_sc").cast("double")
-         / (F.col("w") * 100).cast("double")).alias("mean_v"),
+         / (F.col("w") * SCALE).cast("double")).alias("mean_v"),
     )
     return weighted_median(conv, ["metric"], "mean_v", "w")
 
@@ -4514,14 +4506,11 @@ def q_rolling_slope_24h(spark, sf_dir):
     """Trailing-24h OLS slope per metric over hourly cent sums (see
     rolling.rolling_slope) — the always-on trend monitor next to the
     per-calendar-day trend_daily."""
-    from timeseriescorrelation_spark.operators.crossmetric import (
-        _hourly_cents,
-    )
     from timeseriescorrelation_spark.operators.rolling import (
         rolling_slope,
     )
 
-    h = _hourly_cents(_series_from_events(spark, sf_dir), ["metric"])
+    h = bucket_cents(_series_from_events(spark, sf_dir), ["metric"], "hour")
     return rolling_slope(h, keys=["metric"], window_hours=24)
 
 
@@ -4561,7 +4550,7 @@ def q_hill_tail(spark, sf_dir):
     from pyspark.sql import Window
 
     k = 100
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = snap("value", VALUE_DECIMALS)
     e = _events(spark, sf_dir).select(
         F.col("event_type").alias("metric"), "event_id",
         cents.alias("c"),
@@ -4653,7 +4642,7 @@ def q_drawdown_daily(spark, sf_dir):
     from pyspark.sql import Window
 
     s = _series_from_events(spark, sf_dir)
-    v = F.round(F.col("value") * 100).cast("long")
+    v = snap("value", VALUE_DECIMALS)
     day = F.date_trunc("day", "ts").alias("day_ts")
     base = s.select("metric", day, "ts", "turn_idx", v.alias("_v"))
     w = (
@@ -4762,7 +4751,7 @@ def q_ab_cuped(spark, sf_dir):
             ).cast("long")
         ).alias("_mid")
     )
-    v = F.round(F.col("value") * 100).cast("long")
+    v = snap("value", VALUE_DECIMALS)
     per_user = (
         e.crossJoin(F.broadcast(mid))
         .groupBy((F.col("user_id") % 2).cast("int").alias("variant"),
@@ -5374,7 +5363,7 @@ def q_conv_quality(spark, sf_dir):
             "conv_id",
             us.alias("us"),
             F.col("metric"),
-            F.round(F.col("value") * 100).cast("long").alias("c"),
+            snap("value", VALUE_DECIMALS).alias("c"),
         )
         .groupBy("conv_id")
         .agg(
@@ -7769,14 +7758,11 @@ def q_counter_rate(spark, sf_dir):
     integer terms, per-day totals + reset counts."""
     from pyspark.sql import Window
 
-    from timeseriescorrelation_spark.operators.crossmetric import (
-        _hourly_cents,
-    )
     from timeseriescorrelation_spark.operators.metricsdb import (
         counter_increase,
     )
 
-    h = _hourly_cents(_series_from_events(spark, sf_dir), ["metric"])
+    h = bucket_cents(_series_from_events(spark, sf_dir), ["metric"], "hour")
     wd = (
         Window.partitionBy("metric", F.date_trunc("day", "hour_ts"))
         .orderBy("hour_ts")
@@ -7800,7 +7786,7 @@ def q_histogram_p95(spark, sf_dir):
 
     return histogram_quantile_est(
         _series_from_events(spark, sf_dir),
-        [int(e * 100) for e in PSI_EDGES],
+        [int(e * SCALE) for e in PSI_EDGES],
     )
 
 

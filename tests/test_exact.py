@@ -388,3 +388,105 @@ def test_value_grid_is_declared_only_in_the_kit():
         + "\n".join(sites)
     )
     assert float_mode == FLOAT_MODE
+
+
+def _sources(skip: str = ""):
+    """(path, AST) of every package module and of __spark_entry__.py,
+    except the one named ``skip``."""
+    root = PKG.parent
+    for p in [*sorted(PKG.rglob("*.py")), root / "__spark_entry__.py"]:
+        rel = str(p.relative_to(root))
+        if rel != skip:
+            yield rel, ast.parse(p.read_text())
+
+
+def _is_call(n, name: str) -> bool:
+    """``n`` calls ``name``, bare (``snap(…)``) or as an attribute
+    (``F.sum(…)``, ``df.groupBy(…)``)."""
+    return isinstance(n, ast.Call) and name in (
+        getattr(n.func, "id", None), getattr(n.func, "attr", None)
+    )
+
+
+def _calls(node, name: str) -> list:
+    return [n for n in ast.walk(node) if _is_call(n, name)]
+
+
+def _lit(n):
+    """The number a literal or an ``F.lit(<literal>)`` spells, else
+    None."""
+    if _is_call(n, "lit") and n.args:
+        n = n.args[0]
+    return n.value if isinstance(n, ast.Constant) else None
+
+
+def _is_value(n) -> bool:
+    """``"value"`` or ``F.col("value")``: the value column."""
+    if _is_call(n, "col") and n.args:
+        n = n.args[0]
+    return isinstance(n, ast.Constant) and n.value == "value"
+
+
+def _sites_message(what: str, sites: list) -> str:
+    return f"{len(sites)} {what}:\n" + "\n".join(sites)
+
+
+def test_cent_series_is_bucketed_only_in_the_kit():
+    """The calendar-bucketed cent series — groupBy(keys,
+    date_trunc(grain, ts)) with the one aggregate Σ snap(value) — is
+    built by exact.bucket_cents only.  Aggregations that also count or
+    take a max, and the operators that read ts/value column
+    parameters, spell their own out."""
+    sites = []
+    for rel, tree in _sources(skip=f"{PKG.name}/functions/exact.py"):
+        for n in ast.walk(tree):
+            if not (_is_call(n, "agg") and len(n.args) == 1
+                    and _is_call(n.func.value, "groupBy")):
+                continue
+            grouped = any(_calls(a, "date_trunc")
+                          for a in n.func.value.args)
+            summed = any(
+                _is_value(s.args[0])
+                for sm in _calls(n.args[0], "sum")
+                for s in _calls(sm, "snap") if s.args
+            )
+            if grouped and summed:
+                sites.append(f"{rel}:{n.lineno}")
+    assert not sites, _sites_message("hand-written cent series", sites)
+
+
+def test_values_snap_to_the_grid_constant():
+    """Every snap of the value column names the grid,
+    VALUE_DECIMALS: no snap/snap_np of it with a literal number of
+    decimals (the streaming kernels hold the column as ``vals``), and
+    no hand-rolled F.round(F.col("value") * 100)."""
+    sites = []
+    for rel, tree in _sources():
+        for n in ast.walk(tree):
+            if ((_is_call(n, "snap") or _is_call(n, "snap_np"))
+                    and len(n.args) > 1 and _lit(n.args[1]) is not None
+                    and any(_is_value(a) or getattr(a, "id", "") == "vals"
+                            for a in ast.walk(n.args[0]))):
+                sites.append(f"{rel}:{n.lineno} {ast.unparse(n)}")
+            if (_is_call(n, "round") and n.args
+                    and isinstance(n.args[0], ast.BinOp)
+                    and isinstance(n.args[0].op, ast.Mult)
+                    and _is_value(n.args[0].left)
+                    and _lit(n.args[0].right) is not None):
+                sites.append(f"{rel}:{n.lineno} {ast.unparse(n)}")
+    assert not sites, _sites_message("literal value grids", sites)
+
+
+def test_weekday_rule_is_declared_only_in_timeutil():
+    """The engine-neutral weekday, pmod(epoch_day + 4, 7), is spelled
+    out only by timeutil.weekday."""
+    sites = []
+    for rel, tree in _sources(skip=f"{PKG.name}/functions/timeutil.py"):
+        for n in ast.walk(tree):
+            if (_is_call(n, "pmod") and len(n.args) == 2
+                    and _lit(n.args[1]) == 7
+                    and isinstance(n.args[0], ast.BinOp)
+                    and isinstance(n.args[0].op, ast.Add)
+                    and _lit(n.args[0].right) == 4):
+                sites.append(f"{rel}:{n.lineno}")
+    assert not sites, _sites_message("weekday rules", sites)

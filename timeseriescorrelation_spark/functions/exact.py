@@ -19,7 +19,8 @@ CCC, DiD, ACF, ...):
 
 All of these statistics are sum-product functions of one moment vector
 (SPORES, VLDB 2020), so `moments` folds it and `co_moment` forms the
-n·Σab − Σa·Σb numerator that callers divide.
+n·Σab − Σa·Σb numerator that callers divide.  Most of them read the
+calendar-bucketed cent series `bucket_cents` builds.
 
 The numpy twins (`snap_np`, `wide_np`, `narrow`) serve the streaming
 kernels, which run the same integer arithmetic per micro-batch: numpy
@@ -31,7 +32,7 @@ its long state through the overflow check.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WIDE = "decimal(38,0)"
@@ -50,6 +51,15 @@ def snap(expr: Column | str, decimals: int = 0) -> Column:
     if decimals:
         x = x * F.lit(10 ** int(decimals))
     return F.round(x).cast("long")
+
+
+def bucket_cents(series: DataFrame, keys: list, grain: str) -> DataFrame:
+    """``(*keys, <grain>_ts, y)``: the cent series, ``y`` = the long
+    Σ snap(value, VALUE_DECIMALS) per ``(keys, date_trunc(grain, ts))``.
+    ``keys`` holds column names or (aliased) Columns."""
+    return series.groupBy(
+        *keys, F.date_trunc(grain, "ts").alias(f"{grain}_ts")
+    ).agg(F.sum(snap("value", VALUE_DECIMALS)).alias("y"))
 
 
 def wide(expr: Column | str) -> Column:

@@ -17,6 +17,20 @@ def epoch_us(col: Column | str) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
+def epoch_day(col: Column | str) -> Column:
+    """Whole days since 1970-01-01 (UTC), as a long.  The floor of the
+    double µs/86400e6 quotient cannot misround: its fractional part
+    is ≥ 1 µs/day, far above half an ulp."""
+    return F.floor(epoch_us(col) / F.lit(86_400_000_000))
+
+
+def weekday(col: Column | str) -> Column:
+    """Day of week, 0 = Sunday … 6 = Saturday (the weekend is
+    ``isin(0, 6)``): ``pmod(epoch_day + 4, 7)``, 1970-01-01 being a
+    Thursday.  Integer arithmetic, so every engine agrees."""
+    return F.pmod(epoch_day(col) + F.lit(4), F.lit(7))
+
+
 def const_partition(col: Column | str) -> Column:
     """A zero that Catalyst cannot constant-fold, for Window
     partitionBy on PROVABLY-BOUNDED inputs (day-carry prefixes,

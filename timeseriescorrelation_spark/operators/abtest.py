@@ -37,7 +37,7 @@ from timeseriescorrelation_spark.functions.exact import (
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 from timeseriescorrelation_spark.operators.sampling import hash_bucket
 
 
@@ -149,7 +149,7 @@ def did_readout(series: DataFrame, treat_frac: float = 0.5,
             F.col("conv_id").alias("unit"),
             F.when(epoch_us(F.col("ts")) < epoch_us(F.col("split_ts")),
                    F.lit("pre")).otherwise(F.lit("post")).alias("period"),
-            snap("value", 2).alias("c"),
+            snap("value", VALUE_DECIMALS).alias("c"),
         )
         .groupBy("unit", "period")
         .agg(
@@ -375,16 +375,9 @@ def odds_ratio_weekend(events: DataFrame, key: str = "event_type",
     a = weekend-high, b = weekend-low, c = weekday-high, d = low.
     NULL OR/CI when any cell is empty (the Wald form degenerates).
 
-    Weekend is decided by INTEGER epoch-day arithmetic
-    ((days + 4) mod 7 ∈ {0, 6}, anchored to 1970-01-01 = Thursday) —
-    no engine-specific dayofweek() convention ever consulted.  One
-    hash agg; four exact integer cells per metric."""
-    days = F.floor(
-        epoch_us(F.date_trunc("day", F.col(ts_col)))
-        / F.lit(86_400_000_000)
-    ).cast("long")
-    dow = F.pmod(days + F.lit(4), F.lit(7))
-    wkd = dow.isin(0, 6)
+    Weekend is `timeutil.weekday` ∈ {0, 6}, never an engine's
+    dayofweek().  One hash agg; four exact integer cells per metric."""
+    wkd = weekday(F.date_trunc("day", F.col(ts_col))).isin(0, 6)
     hi = (
         snap(F.col(value_col), VALUE_DECIMALS)
         > F.lit(int(high_cents))

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     snap,
     wide,
@@ -576,22 +577,18 @@ def semivariogram(series: DataFrame, max_lag: int = 6,
     Scale: grid agg then max_lag equi-joins on (keys, hour) — every
     join is grid-sized, shuffle bounded by |metrics|·|hours|·lags."""
     keys = keys or ["metric"]
-    g = series.groupBy(
-        *[F.col(k) for k in keys],
-        F.date_trunc("hour", "ts").alias("h"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    g = bucket_cents(series, keys, "hour")
     lags = series.sparkSession.range(1, int(max_lag) + 1).select(
         F.col("id").cast("int").alias("lag_h")
     )
     a = g.crossJoin(F.broadcast(lags)).select(
         *keys, "lag_h",
-        (F.col("h") + F.col("lag_h")
+        (F.col("hour_ts") + F.col("lag_h")
          * F.expr("INTERVAL 1 HOUR")).alias("h2"),
         F.col("y").alias("y1"),
     )
-    b = g.select(*keys, F.col("h").alias("h2"), F.col("y").alias("y2"))
+    b = g.select(*keys, F.col("hour_ts").alias("h2"),
+                 F.col("y").alias("y2"))
     pairs = a.join(b, [*keys, "h2"])
     dsq = (
         wide(F.col("y2") - F.col("y1"))
@@ -676,14 +673,9 @@ def harmonic_regression(series: DataFrame,
     |metrics| output rows."""
     keys = keys or ["metric"]
     tau = 6.283185307179586
-    g = series.groupBy(
-        *keys,
-        F.date_trunc("hour", "ts").alias("h"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    g = bucket_cents(series, keys, "hour")
     theta = (
-        F.hour("h").cast("double") / F.lit(24.0) * F.lit(tau)
+        F.hour("hour_ts").cast("double") / F.lit(24.0) * F.lit(tau)
     )
     cu = snap(F.cos(theta), 6)
     su = snap(F.sin(theta), 6)
@@ -828,13 +820,9 @@ def hod_quantile_bands(series: DataFrame,
     (metric, hod) rank partition holds ≤ |days| rows — bounded,
     parallel windows; 24·|metrics| output rows."""
     keys = keys or ["metric"]
-    g = series.groupBy(
-        *keys, F.date_trunc("hour", "ts").alias("h")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    ).select(
-        *keys, F.hour("h").alias("hod"),
-        F.date_trunc("day", "h").alias("d"), "y",
+    g = bucket_cents(series, keys, "hour").select(
+        *keys, F.hour("hour_ts").alias("hod"),
+        F.date_trunc("day", "hour_ts").alias("d"), "y",
     )
     w = Window.partitionBy(*keys, "hod").orderBy("y", "d")
     wn = Window.partitionBy(*keys, "hod")

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     snap,
     wide,
 )
@@ -626,12 +627,9 @@ def theil_index_daily(events: DataFrame, group_col: str = "event_type",
     days), all map-side combinable; no window, no join, output
     day-grid-sized."""
     m = 1_000_000
-    cells = events.groupBy(
-        F.date_trunc("day", "ts").alias("day_ts"),
-        F.col(group_col).alias("grp"),
-        F.col(unit_col).alias("unit"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
+    cells = bucket_cents(
+        events, [F.col(group_col).alias("grp"), F.col(unit_col).alias("unit")],
+        "day",
     ).where(F.col("y") > 0)
     yd = F.col("y").cast("double")
     cells = cells.withColumn(

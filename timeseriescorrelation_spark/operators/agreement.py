@@ -29,10 +29,9 @@ from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
-    VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     moments,
-    snap,
     wide,
 )
 
@@ -42,11 +41,7 @@ def _complete_day_grid(series: DataFrame, key: str = "metric") -> DataFrame:
     (days on which every metric observed at least one point) — the
     balanced panel the classical agreement formulas assume.  Two
     stacked hash aggs + one broadcast-sized semi-join."""
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
     k = d.select(F.countDistinct("m").alias("k"))
     complete = (
         d.groupBy("day_ts").agg(F.count(F.lit(1)).alias("c"))
@@ -379,14 +374,12 @@ def bland_altman(series: DataFrame, key_a: str, key_b: str,
 
     Scale: metric-filtered hour hash-agg ×2 → |hours| equi-join →
     one moment agg + one broadcast-join count pass."""
-    def part(k, alias):
-        return series.where(F.col(key) == k).groupBy(
-            F.date_trunc("hour", "ts").alias("hour_ts")
-        ).agg(F.sum(snap("value", VALUE_DECIMALS)).alias(alias))
+    def part(k):
+        return bucket_cents(series.where(F.col(key) == k), [], "hour")
 
-    j = part(key_a, "va").join(part(key_b, "vb"), "hour_ts").select(
-        "hour_ts", (F.col("va") - F.col("vb")).alias("d")
-    )
+    j = part(key_a).join(
+        part(key_b).withColumnRenamed("y", "vb"), "hour_ts"
+    ).select("hour_ts", (F.col("y") - F.col("vb")).alias("d"))
     m = j.agg(*moments("d", names="n sd_ sdd"))
     nn = F.col("n").cast("double")
     mu = F.col("sd_").cast("double") / nn

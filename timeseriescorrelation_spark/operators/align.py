@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import VALUE_DECIMALS, snap
+from timeseriescorrelation_spark.functions.exact import bucket_cents, snap
 
 MATCH = 2
 MISMATCH = -1
@@ -49,12 +49,8 @@ def _daily_symbol_pairs(series: DataFrame, key: str) -> DataFrame:
     pa/pb are the sorted (h, s) symbol profiles of each metric's day
     (s ∈ {1, 2} by the doubled-median rule; silent hours are absent
     and densify to 0 in the kernel)."""
-    hourly = series.groupBy(
-        F.col(key).alias("k"),
-        F.date_trunc("day", "ts").alias("day_ts"),
-        F.hour("ts").alias("h"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
+    hourly = bucket_cents(
+        series, [F.col(key).alias("k"), F.hour("ts").alias("h")], "day"
     )
     w_med = Window.partitionBy("k")
     med2 = snap(F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med))

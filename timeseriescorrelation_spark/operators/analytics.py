@@ -53,14 +53,14 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     idiv,
     moments,
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
-from timeseriescorrelation_spark.operators.crossmetric import _daily_cents
+from timeseriescorrelation_spark.functions.timeutil import epoch_day, epoch_us
 from timeseriescorrelation_spark.operators.rollup import packed_order_key
 
 KEYS = ["conv_id", "metric"]
@@ -1017,7 +1017,7 @@ def cusum(series: DataFrame, h: float = 5.0,
         .orderBy(epoch_us(F.col("ts")), "turn_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    v = snap("value", 2)
+    v = snap("value", VALUE_DECIMALS)
     base = series.select(
         *keys, "ts", "turn_idx", v.alias("_v")
     ).select(
@@ -1039,7 +1039,7 @@ def cusum(series: DataFrame, h: float = 5.0,
     var = (
         co_moment("_n", "_s1", "_s1", "_s2")
     ).cast("double")
-    scale = F.col("_n").cast("double") * F.lit(100.0)
+    scale = F.col("_n").cast("double") * F.lit(float(SCALE))
     hh = F.lit(float(h) * float(h))
     return scored.select(
         *keys, "ts", "turn_idx",
@@ -1578,7 +1578,7 @@ def trimmed_mean(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc(trunc, "ts").alias("bucket_ts"),
-        snap("value", 2).alias("_v"),
+        snap("value", VALUE_DECIMALS).alias("_v"),
     )
     w = Window.partitionBy(*keys, "bucket_ts").orderBy("_v")
     cnt = Window.partitionBy(*keys, "bucket_ts")
@@ -1598,7 +1598,7 @@ def trimmed_mean(series: DataFrame, keys: list[str] | None = None,
         *keys, "bucket_ts", "n", "n_kept",
         F.round(
             F.col("s").cast("double") / F.col("n_kept").cast("double")
-            / F.lit(100.0), 6
+            / F.lit(float(SCALE)), 6
         ).alias("mean_trimmed"),
     )
 
@@ -1623,7 +1623,7 @@ def peak_census(series: DataFrame, keys: list[str] | None = None) -> DataFrame:
         *keys, F.date_trunc("hour", "ts").alias("hour_ts")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap("value", 2)).alias("sc"),
+        F.sum(snap("value", VALUE_DECIMALS)).alias("sc"),
     ).select(
         *keys, "hour_ts",
         (F.col("sc").cast("double") / F.col("n").cast("double"))
@@ -1644,9 +1644,10 @@ def peak_census(series: DataFrame, keys: list[str] | None = None) -> DataFrame:
     return x.select(
         *keys,
         F.col("hour_ts").alias("peak_ts"),
-        F.round(F.col("m") / F.lit(100.0), 6).alias("mean_v"),
+        F.round(F.col("m") / F.lit(float(SCALE)), 6).alias("mean_v"),
         F.round(
-            (F.col("m") - F.greatest("_lo", "_hi")) / F.lit(100.0), 6
+            (F.col("m") - F.greatest("_lo", "_hi")) / F.lit(float(SCALE)),
+            6
         ).alias("drop"),
     )
 
@@ -1721,7 +1722,7 @@ def expanding_zscore(series: DataFrame, min_n: int = 3) -> DataFrame:
 
     Scale notes: one shuffle to (conv, metric) groups, one in-group
     sort shared by all three running sums — O(points) state-free."""
-    v = snap("value", 2)
+    v = snap("value", VALUE_DECIMALS)
     w = (
         Window.partitionBy("conv_id", "metric")
         .orderBy("ts", "turn_idx")
@@ -2016,14 +2017,14 @@ def cusum_fixed(series: DataFrame, mu: float, sigma: float,
     O(1) state per row; cents integers throughout, the only doubles
     are the final /100 rescale and the h·σ compare of exact ints."""
     keys = keys or KEYS
-    mu_c = int(round(mu * 100))
-    sig_c = int(round(sigma * 100))
+    mu_c = int(round(mu * SCALE))
+    sig_c = int(round(sigma * SCALE))
     word = (
         Window.partitionBy(*keys)
         .orderBy(epoch_us(F.col("ts")), "turn_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    dev = snap("value", 2) - F.lit(mu_c)
+    dev = snap("value", VALUE_DECIMALS) - F.lit(mu_c)
     p = F.sum(dev).over(word)
     scored = series.select(*keys, "ts", "turn_idx", "value").select(
         "*",
@@ -2036,8 +2037,8 @@ def cusum_fixed(series: DataFrame, mu: float, sigma: float,
     thr = float(h) * sig_c
     return scored.select(
         *keys, "ts", "turn_idx", "value",
-        (sp.cast("double") / 100).alias("s_plus"),
-        (sm.cast("double") / 100).alias("s_minus"),
+        (sp.cast("double") / SCALE).alias("s_plus"),
+        (sm.cast("double") / SCALE).alias("s_minus"),
         (
             (sp.cast("double") > F.lit(thr))
             | (sm.cast("double") > F.lit(thr))
@@ -2065,7 +2066,7 @@ def cvar_daily(series: DataFrame, alpha_denom: int = 20) -> DataFrame:
     partition, so at 10^12 rows this runs day-sharded with the same
     plan per shard.
     """
-    cents = snap("value", 2)
+    cents = snap("value", VALUE_DECIMALS)
     day = F.date_trunc("day", "ts")
     base = series.select(
         F.col("metric"), day.alias("day_ts"), cents.alias("c")
@@ -2097,10 +2098,10 @@ def cvar_daily(series: DataFrame, alpha_denom: int = 20) -> DataFrame:
         "day_ts",
         "n_points",
         "k_tail",
-        F.round(F.col("var_cents") / 100.0, 6).alias("var_amt"),
+        F.round(F.col("var_cents") / float(SCALE), 6).alias("var_amt"),
         F.round(
             F.col("tail_cents")
-            / (F.lit(100.0) * F.col("k_tail").cast("double")),
+            / (F.lit(float(SCALE)) * F.col("k_tail").cast("double")),
             6,
         ).alias("cvar_amt"),
     )
@@ -2451,12 +2452,7 @@ def capacity_projection(series: DataFrame, key: str = "metric",
     Scale: one day-grid hash agg, one broadcast of the 1-row global
     min, one per-metric agg.  Calendar-bounded like the trend
     family."""
-    d = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("day", "ts").alias("day_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("metric")], "day")
     d0 = d.agg(F.min("day_ts").alias("d0"))
     dx = d.crossJoin(F.broadcast(d0)).select(
         "metric", "y",
@@ -2569,11 +2565,7 @@ def kalman_level(series: DataFrame, keys: list[str] | None = None,
     is the numerically honest form."""
     keys = keys or ["metric"]
     q, r = float(q_var), float(r_var)
-    d = series.groupBy(
-        *keys, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("yc")
-    )
+    d = bucket_cents(series, keys, "day")
     schema = (
         ", ".join(f"{k} string" for k in keys)
         + ", day_ts timestamp, y double, level double, gain double"
@@ -2590,7 +2582,7 @@ def kalman_level(series: DataFrame, keys: list[str] | None = None,
         prev_key = None
         x = p = 0.0
         ks = [pdf[k].to_numpy() for k in keys]
-        ys = pdf["yc"].to_numpy()
+        ys = pdf["y"].to_numpy()
         for i in range(n):
             key = tuple(col[i] for col in ks)
             y = float(ys[i])
@@ -2652,7 +2644,7 @@ def theta_forecast(series: DataFrame, key: str = "metric", alpha: float = 0.5,
     hash-partitioned, series contiguous — never per-group Arrow
     transfer).  Scale: the recursion is over per-metric DAY counts
     (≤ a few thousand rows per metric at any corpus size)."""
-    d = _daily_cents(series, key)
+    d = bucket_cents(series, [key], "day")
     w = Window.partitionBy(key).orderBy("day_ts")
     dd = d.select(
         key, "y", F.row_number().over(w).cast("long").alias("t")
@@ -2757,7 +2749,7 @@ def theta_backtest(series: DataFrame, key: str = "metric", alpha: float = 0.5,
     Scale: the split is one key-partitioned window pass; the fit rides
     _theta_fit; scoring is a broadcast join of the metadata-sized fit
     table onto holdout rows."""
-    d = _daily_cents(series, key)
+    d = bucket_cents(series, [key], "day")
     w = Window.partitionBy(key).orderBy("day_ts")
     wf = Window.partitionBy(key)
     idx = d.select(
@@ -2839,16 +2831,8 @@ def seasonal_mann_kendall(series: DataFrame, key: str = "metric",
     Scale: the pair enumeration is (|days|/7)² per stratum per
     metric — calendar-bounded (the mann_kendall policy), never
     corpus-sized; one grid hash-agg in front."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    d = series.groupBy(
-        key, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
-    days = F.floor(
-        epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
-    ).cast("long")
+    d = bucket_cents(series, [key], "day")
+    days = epoch_day("day_ts")
     dd = d.select(
         key, F.col("day_ts"), F.col("y"),
         F.pmod(days + F.lit(3), F.lit(7)).cast("int").alias("w"),
@@ -2928,14 +2912,8 @@ def lad_trend_daily(series: DataFrame, key: str = "metric",
     mann_kendall bounded-n policy (a year is 48M rows per metric,
     fine for a diagnostic; never in HEADLINE).  trend_daily is the
     O(T) scale path."""
-    d0 = series.groupBy(
-        F.col(key), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
-    ed = F.floor(
-        epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
-    ).cast("long")
+    d0 = bucket_cents(series, [key], "day")
+    ed = epoch_day("day_ts")
     base = d0.groupBy(key).agg(
         F.min(ed).alias("x0"), F.count(F.lit(1)).alias("n_days")
     ).where(F.col("n_days") >= int(min_days))
@@ -3109,13 +3087,9 @@ def isotonic_trend_daily(series: DataFrame, key: str = "metric") -> DataFrame:
     one final divide.  The DuckDB oracle replays the minimax identity
     max_{j≤i} min_{k≥i} mean(y[j..k]) per metric — equal to the PAVA
     block means as rationals, hence as correctly-rounded doubles."""
-    g = series.groupBy(
-        F.col(key), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("c")
-    )
+    g = bucket_cents(series, [key], "day")
     rows = sorted(
-        ((r[key], r["day_ts"], int(r["c"])) for r in g.collect()),
+        ((r[key], r["day_ts"], int(r["y"])) for r in g.collect()),
         key=lambda t: (t[0], t[1]),
     )
     out = []
@@ -3179,17 +3153,8 @@ def huber_trend(series: DataFrame, key: str = "metric", n_iter: int = 2,
     Scale: day-grid hash-agg → per-metric span (broadcast) → n_iter+1
     moment hash-aggs with a broadcast 1-row-per-metric β join between
     — O(iterations) grid scans, no windows."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    d = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("day", "ts").alias("day_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    ).select(
-        "metric", "y",
-        (epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
-        .cast("long").alias("di"),
+    d = bucket_cents(series, [F.col(key).alias("metric")], "day").select(
+        "metric", "y", epoch_day("day_ts").alias("di"),
     )
     span = d.groupBy("metric").agg(
         F.min("di").alias("d0"), F.count(F.lit(1)).alias("nd")
@@ -3411,12 +3376,7 @@ def forecast_baselines(series: DataFrame, key: str = "metric",
 
     Scale: grid hash-agg → one rank window per metric → three
     metadata-sized joins against the per-metric anchor row."""
-    h = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("hour", "ts").alias("hour_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    h = bucket_cents(series, [F.col(key).alias("metric")], "hour")
     w = Window.partitionBy("metric").orderBy("hour_ts")
     wn = Window.partitionBy("metric")
     r = h.select(

@@ -32,11 +32,12 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     snap,
     wide,
 )
-from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
+from timeseriescorrelation_spark.functions.timeutil import epoch_day
 
 
 def engle_granger(series: DataFrame, key: str = "metric",
@@ -65,7 +66,7 @@ def engle_granger(series: DataFrame, key: str = "metric",
     aggregates, one hash-agg.  Residual micro-snap keeps every
     cross-engine sum over exact integers.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     x = h.select(F.col(key).alias("mx"), "hour_ts", F.col("y").alias("vx"))
     y = h.select(F.col(key).alias("my"), "hour_ts", F.col("y").alias("vy"))
     pairs = x.join(y, "hour_ts").where(F.col("mx") != F.col("my"))
@@ -257,17 +258,8 @@ def its_readout(series: DataFrame, key: str = "metric",
 
     Scale: day-grid hash-agg → per-metric span agg (broadcast) → one
     hash-agg of moments.  Grid-sized throughout."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    d = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("day", "ts").alias("day_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    ).select(
-        "metric", "y",
-        (epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
-        .cast("long").alias("di"),
+    d = bucket_cents(series, [F.col(key).alias("metric")], "day").select(
+        "metric", "y", epoch_day("day_ts").alias("di"),
     )
     span = d.groupBy("metric").agg(
         F.min("di").alias("lo"), F.max("di").alias("hi"),

@@ -43,12 +43,13 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     moments,
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.functions.timeutil import epoch_day, epoch_us
 
 
 def changepoint_daily(series: DataFrame, keys: list[str] | None = None,
@@ -309,11 +310,7 @@ def pettitt_test(series: DataFrame, keys: list[str] | None = None,
     metric regardless of corpus size (the bounded-quadratic policy);
     one partitioned cumulative window over T rows."""
     keys = keys or ["metric"]
-    d = series.groupBy(
-        *keys, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, keys, "day")
     i = d.select(*keys, F.col("day_ts").alias("di"),
                  F.col("y").alias("yi"))
     j = d.select(*keys, F.col("day_ts").alias("dj"),
@@ -405,16 +402,9 @@ def segmented_trend(series: DataFrame, keys: list[str] | None = None,
     bp = pettitt_test(
         series, keys=keys, min_days=min_days,
     ).select(*keys, "change_day")
-    d = series.groupBy(
-        *keys, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, keys, "day")
     j = d.join(F.broadcast(bp), keys)
-    x = wide(
-        F.floor(epoch_us(F.col("day_ts")) / F.lit(86_400_000_000))
-        - F.floor(epoch_us(F.col("change_day")) / F.lit(86_400_000_000))
-    )
+    x = wide(epoch_day("day_ts") - epoch_day("change_day"))
     seg = (F.col("day_ts") > F.col("change_day")).cast("int")
     per = j.select(
         *keys, "change_day", seg.alias("seg"), x.alias("x"),

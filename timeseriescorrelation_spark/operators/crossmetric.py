@@ -21,31 +21,16 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     moments,
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 
 # the (a, b) pair moments as `moments` names them here
 _AB = "n sa sb saa sbb sab"
-
-
-def _hourly_cents(series: DataFrame, keys: list[str]) -> DataFrame:
-    return series.groupBy(
-        *keys, F.date_trunc("hour", "ts").alias("hour_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).cast("long").alias("y")
-    )
-
-
-def _daily_cents(series: DataFrame, key: str) -> DataFrame:
-    return series.groupBy(
-        key, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).cast("long").alias("y")
-    )
 
 
 def corr_matrix_daily(series: DataFrame, key: str = "metric",
@@ -60,7 +45,7 @@ def corr_matrix_daily(series: DataFrame, key: str = "metric",
     metric dimension: the ε-grid prune is unnecessary here because the
     pair space is k² over aggregates, not conversations² over raw
     rows."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     a = h.select(
         F.col(key).alias("metric_a"), "hour_ts", F.col("y").alias("ya")
     )
@@ -115,7 +100,7 @@ def granger_gain(series: DataFrame, key: str = "metric",
 
     Directional: (x, y) and (y, x) are both emitted — that asymmetry
     is the point of the screen."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     # a value observed at hour o serves as the lag-1 predictor for
     # hour o+1: re-key the lag sides FORWARD one hour
     nxt = F.col("hour_ts") + F.expr("INTERVAL 1 HOUR")
@@ -270,7 +255,7 @@ def beta_daily(series: DataFrame, key: str = "metric",
     hash-agg to |metrics|·|hours| rows, pair join k²·H on aggregates,
     never raw rows.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     x = h.select(F.col(key).alias("metric_x"), "hour_ts",
                  F.col("y").alias("vx"))
     y = h.select(F.col(key).alias("metric_y"), "hour_ts",
@@ -321,7 +306,7 @@ def lead_lag_best(series: DataFrame, key: str = "metric",
     on the shifted hour (equi-join, never theta); the argmax is one
     hash-agg over |metrics|²·|lags| rows.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     lag_list = list(range(-int(max_lag_h), int(max_lag_h) + 1))
     lags = F.array(*[F.lit(int(x)) for x in lag_list])
     x = h.select(
@@ -476,7 +461,7 @@ def ols2_daily(series: DataFrame, y_key: str, x1_key: str, x2_key: str,
     Scale notes: one map-side hash-agg to |metrics|·|hours| rows, a
     3-way hour equi-join on that aggregate (never raw rows), then a
     per-day hash-agg of 10 moments — no windows, no iteration."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
 
     def part(k, alias):
         return h.where(F.col(key) == k).select(
@@ -530,7 +515,7 @@ def corr_pair_moments(series: DataFrame, key: str = "metric") -> DataFrame:
     lets a correlation report update incrementally (sealed days +
     live tail) instead of rescanning history; hours are the atomic
     unit because splitting an hour breaks Σab additivity."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     a = h.select(F.col(key).alias("metric_a"), "hour_ts",
                  F.col("y").alias("ya"))
     b = h.select(F.col(key).alias("metric_b"), "hour_ts",
@@ -596,7 +581,7 @@ def ccc_pairs(series: DataFrame, key: str = "metric",
 
     Scale: corr_matrix_daily's shape — one grid hash-agg, pair equi-
     join on hour, one hash-agg per pair."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     a = h.select(
         F.col(key).alias("metric_a"), "hour_ts", F.col("y").alias("ya")
     )
@@ -647,7 +632,7 @@ def corr_deseasonalized(series: DataFrame, key: str = "metric",
 
     Scale: grid hash-agg → hod-mean window per (metric, hod) over
     aggregate rows → pair equi-join on hour → hash-agg."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     from pyspark.sql import Window
 
     whod = Window.partitionBy(key, F.hour("hour_ts"))
@@ -707,7 +692,7 @@ def corr_winsorized(series: DataFrame, key: str = "metric",
 
     Scale: one rank window per metric over the aggregate grid, a
     broadcast-sized threshold join, then the usual pair machinery."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     from pyspark.sql import Window
 
     wr = Window.partitionBy(key).orderBy("y", "hour_ts")
@@ -781,11 +766,7 @@ def kendall_tau_pairs(series: DataFrame, key: str = "metric",
     single long series; at the pair-matrix shape the bounded
     quadratic over aggregates is simpler and shuffle-free beyond the
     one grid agg."""
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
     b = d.select(F.col("m").alias("metric_b"), "day_ts",
@@ -932,11 +913,7 @@ def distance_corr(series: DataFrame, key: str = "metric",
     whole operator is k²·n² grid rows regardless of raw corpus size
     (the kendall_tau/mann_kendall bounded-quadratic policy).  Three
     hash aggs + two grid joins; nothing raw-sized."""
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
     b = d.select(F.col("m").alias("metric_b"), "day_ts",
@@ -1011,20 +988,13 @@ def energy_distance_weekend(series: DataFrame, key: str = "metric",
 
     Every pair sum Σ|a−b| is an exact integer over the calendar-
     bounded day grid (ordered pairs incl. diagonal — the plain
-    V-statistic), weekend membership by the integer epoch-day rule;
+    V-statistic), weekend membership by `timeutil.weekday`;
     E is one shared double tree.
 
     Scale: one grid self-join per metric — D² rows at D days,
     raw-size-independent (the distance_corr policy)."""
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
-    days = F.floor(
-        epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
-    ).cast("long")
-    g1 = F.pmod(days + F.lit(4), F.lit(7)).isin(0, 6).cast("int")
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
+    g1 = weekday("day_ts").isin(0, 6).cast("int")
     dd = d.select("m", "y", g1.alias("g"))
     a = dd.select("m", F.col("y").alias("ya"), F.col("g").alias("ga"))
     b = dd.select("m", F.col("y").alias("yb"), F.col("g").alias("gb"))
@@ -1087,11 +1057,7 @@ def tail_dependence(series: DataFrame, key: str = "metric",
 
     Scale: the pair-day grid is |metrics|²·|days| aggregates; the
     rank windows partition per (pair, metric) — bounded, parallel."""
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
     a = d.select(F.col("m").alias("metric_a"), "day_ts",
                  F.col("y").alias("ya"))
     b = d.select(F.col("m").alias("metric_b"), "day_ts",
@@ -1211,15 +1177,13 @@ def corr_grain_audit(series: DataFrame, key: str = "metric",
     shape twice, no raw self-joins."""
 
     def _grain(trunc: str, rname: str, nname: str):
-        g = series.groupBy(
-            F.col(key).alias("k"),
-            F.date_trunc(trunc, "ts").alias("b"),
-        ).agg(F.sum(snap("value", VALUE_DECIMALS)).alias("y"))
-        a = g.select(F.col("k").alias("metric_a"), "b",
+        g = bucket_cents(series, [F.col(key).alias("k")], trunc)
+        b = f"{trunc}_ts"
+        a = g.select(F.col("k").alias("metric_a"), b,
                      F.col("y").alias("ya"))
-        bb = g.select(F.col("k").alias("metric_b"), "b",
+        bb = g.select(F.col("k").alias("metric_b"), b,
                       F.col("y").alias("yb"))
-        p = a.join(bb, "b").where(F.col("metric_a") < F.col("metric_b"))
+        p = a.join(bb, b).where(F.col("metric_a") < F.col("metric_b"))
         ya, yb = wide("ya"), wide("yb")
         m = p.groupBy("metric_a", "metric_b").agg(
             wide(F.count(F.lit(1))).alias("n"),
@@ -1273,7 +1237,7 @@ def xcorr_prewhitened(series: DataFrame, key: str = "metric",
     Scale: one grid hash-agg, two per-metric lag windows over grid
     rows, one k² aggregate-sized pair join per statistic — the
     corr_matrix_daily shape with a prewhitening stage in front."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     w = Window.partitionBy(key).orderBy("hour_ts")
     lagged = h.select(
         key, "hour_ts", "y",
@@ -1379,14 +1343,9 @@ def tier_info_loss(series: DataFrame, key: str = "metric",
 
     Scale: two grid hash-aggs (minute grain dominates), per-metric
     scalar algebra — no joins beyond aggregate-sized."""
-    g = series.groupBy(
-        F.col(key),
-        F.date_trunc("minute", "ts").alias("b"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    g = bucket_cents(series, [key], "minute")
     hs = g.groupBy(
-        key, F.date_trunc("hour", "b").alias("h")
+        key, F.date_trunc("hour", "minute_ts").alias("h")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("y").alias("s"),

@@ -32,11 +32,12 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     moments,
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 
 M = 1_000_000.0
 _H = 3_600_000_000  # one hour in µs
@@ -52,7 +53,7 @@ def stl_lite(series: DataFrame, half_window_h: int = 84,
         series.select(
             *keys,
             F.date_trunc("hour", "ts").alias("bucket_ts"),
-            snap("value", 2).alias("_vc"),
+            snap("value", VALUE_DECIMALS).alias("_vc"),
         )
         .groupBy(*keys, "bucket_ts")
         .agg(
@@ -71,10 +72,10 @@ def stl_lite(series: DataFrame, half_window_h: int = 84,
         F.sum("_n").over(w).alias("_nw"),
     ).select(
         *keys, "bucket_ts",
-        (F.col("_cs").cast("double") / F.col("_n").cast("double") / 100.0
-         ).alias("_mean"),
-        (F.col("_csw").cast("double") / F.col("_nw").cast("double") / 100.0
-         ).alias("_trend"),
+        (F.col("_cs").cast("double") / F.col("_n").cast("double")
+         / float(SCALE)).alias("_mean"),
+        (F.col("_csw").cast("double") / F.col("_nw").cast("double")
+         / float(SCALE)).alias("_trend"),
     )
     det = t.select(
         *keys, "bucket_ts", "_mean", "_trend",
@@ -130,12 +131,7 @@ def dow_anova(series: DataFrame, keys: list[str] | None = None) -> DataFrame:
     |metrics| — no windows, no joins except the final |metrics|-row
     assembly."""
     keys = keys or ["metric"]
-    hourly = series.groupBy(
-        *keys, F.date_trunc("hour", "ts").alias("hour_ts")
-    ).agg(
-        F.sum(snap("value", 2))
-        .cast("long").alias("y")
-    )
+    hourly = bucket_cents(series, keys, "hour")
     per_g = hourly.groupBy(
         *keys, F.dayofweek("hour_ts").alias("dow")
     ).agg(
@@ -261,29 +257,15 @@ def dow_contrasts(series: DataFrame, key: str = "metric",
     grubbs policy — no studentized-range function in either engine).
     MSW rides dow_anova's snapped-SSW recipe; group sums are exact
     decimal38; each contrast is one shared double tree, 6 dp; NULL
-    when MSW = 0.  Day-of-week labels use the engine-neutral
-    (epoch_day+4) mod 7 rule (0 = Sun … 6 = Sat: day 0, Thu
-    1970-01-01, maps to 4; integer arithmetic, no native
-    dayofweek() consulted — consistent with the isin(0,6) weekend
-    rule elsewhere) because unlike dow_anova this operator OUTPUTS
-    the labels.
+    when MSW = 0.  Day-of-week labels are `timeutil.weekday`'s
+    (0 = Sun … 6 = Sat), because unlike dow_anova this operator
+    OUTPUTS the labels.
 
     Scale: grid hash-agg → |metrics|·7 → a 21-row-per-metric pair
     join of broadcast-sized aggregates."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    hourly = series.groupBy(
-        F.col(key), F.date_trunc("hour", "ts").alias("hour_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS))
-        .cast("long").alias("y")
-    )
-    ed = F.floor(
-        epoch_us(F.date_trunc("day", "hour_ts"))
-        / F.lit(86_400_000_000)
-    ).cast("long")
+    hourly = bucket_cents(series, [key], "hour")
     per_g = hourly.groupBy(
-        key, F.pmod(ed + F.lit(4), F.lit(7)).alias("dow")
+        key, weekday(F.date_trunc("day", "hour_ts")).alias("dow")
     ).agg(
         *moments("y", names="ng sg sxxg"),
     ).where(F.col("ng") >= int(min_per_group))

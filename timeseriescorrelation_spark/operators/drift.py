@@ -32,7 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import VALUE_DECIMALS, snap
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap,
+)
 
 M = 1_000_000
 
@@ -218,7 +222,7 @@ def psi_daily(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc("day", "ts").alias("day_ts"),
-        snap("value", 2).alias("_v"),
+        snap("value", VALUE_DECIMALS).alias("_v"),
     )
     edges = v.groupBy(*keys, "day_ts").agg(
         F.percentile("_v", F.lit(pcts).cast("array<double>")).alias("_edges")
@@ -311,7 +315,7 @@ def js_drift_daily(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc("day", "ts").alias("day_ts"),
-        snap("value", 2).alias("_v"),
+        snap("value", VALUE_DECIMALS).alias("_v"),
     )
     edges = v.groupBy(*keys, "day_ts").agg(
         F.percentile("_v", F.lit(pcts).cast("array<double>")).alias("_edges")
@@ -415,7 +419,7 @@ def emd_drift_daily(series: DataFrame, keys: list[str] | None = None,
     v = series.select(
         *keys,
         F.date_trunc("day", "ts").alias("day_ts"),
-        snap("value", 2).alias("_v"),
+        snap("value", VALUE_DECIMALS).alias("_v"),
     )
     edges = v.groupBy(*keys, "day_ts").agg(
         F.percentile("_v", F.lit(pcts).cast("array<double>")).alias("_edges")
@@ -518,8 +522,8 @@ def psi_fixed_hourly(series: DataFrame, edges: list[float],
     window — never a per-bin join or a dense grid."""
     keys = keys or ["metric"]
     b_n = len(edges) + 1
-    edges_c = [int(round(e * 100)) for e in edges]
-    v = snap("value", 2)
+    edges_c = [int(round(e * SCALE)) for e in edges]
+    v = snap("value", VALUE_DECIMALS)
     bin_id = F.lit(1)
     for e in edges_c:
         bin_id = bin_id + F.when(v > e, 1).otherwise(0)

@@ -25,8 +25,7 @@ from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
-    VALUE_DECIMALS,
-    snap,
+    bucket_cents,
 )
 
 
@@ -43,12 +42,8 @@ def dtw_daily_pairs(series: DataFrame, key: str = "metric", band: int = 3,
     import numpy as np
     import pandas as pd
 
-    hourly = series.groupBy(
-        F.col(key).alias("k"),
-        F.date_trunc("day", "ts").alias("day_ts"),
-        F.hour("ts").alias("h"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
+    hourly = bucket_cents(
+        series, [F.col(key).alias("k"), F.hour("ts").alias("h")], "day"
     )
     prof = hourly.groupBy("k", "day_ts").agg(
         F.array_sort(F.collect_list(F.struct("h", "y"))).alias("hy")

@@ -40,12 +40,16 @@ from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.operators.rollup import (
     TIER_TRUNC,
+    TRUNC_US,
     packed_order_key,
 )
 
-STEP_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-
 _KEY = ["conv_id", "metric"]
+
+
+def _step_secs(step: str) -> int:
+    """A tier step's width in whole seconds (60 for "1m")."""
+    return TRUNC_US[TIER_TRUNC[step]] // 1_000_000
 
 
 def collapse_last_wins(series: DataFrame, step: str = "1m") -> DataFrame:
@@ -62,7 +66,7 @@ def collapse_last_wins(series: DataFrame, step: str = "1m") -> DataFrame:
 def make_grid(series: DataFrame, step: str = "1m") -> DataFrame:
     """Dense per-key timeline from min(ts) to max(ts), one row per step."""
     trunc = TIER_TRUNC[step]
-    secs = STEP_SECONDS[step]
+    secs = _step_secs(step)
     spans = series.groupBy(*_KEY).agg(
         F.date_trunc(trunc, F.min("ts")).alias("lo"),
         F.date_trunc(trunc, F.max("ts")).alias("hi"),
@@ -92,7 +96,7 @@ def _fill_ranges(series: DataFrame, step: str,
 
     Output: obs columns + next_v/next_ts (null at segment/series end)
     + fill_end (inclusive range end for this obs)."""
-    secs = STEP_SECONDS[step]
+    secs = _step_secs(step)
     obs = collapse_last_wins(series, step)
     w = Window.partitionBy(*_KEY).orderBy("grid_ts")
     nxt = F.lead("grid_ts").over(w)
@@ -129,7 +133,7 @@ def fill_locf(series: DataFrame, step: str = "1m",
     Every grid step between obs i and obs i+1 carries v_i, so each obs
     row simply explodes its own fill range post-shuffle (posexplode:
     pos 0 is the observation itself, pos>0 are carried)."""
-    secs = STEP_SECONDS[step]
+    secs = _step_secs(step)
     r = _fill_ranges(series, step, max_gap_steps)
     return r.select(
         *_KEY,
@@ -162,7 +166,7 @@ def fill_interpolate(series: DataFrame, step: str = "1m",
     gets  v_i + (v_{i+1} - v_i) * (g - t_i) / (t_{i+1} - t_i).
     The arithmetic matches the DuckDB oracle expression bit-for-bit
     (exact µs epochs, identical IEEE evaluation order)."""
-    secs = STEP_SECONDS[step]
+    secs = _step_secs(step)
     r = _fill_ranges(series, step, max_gap_steps)
 
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
@@ -197,7 +201,7 @@ def fill_interpolate_pandas(series: DataFrame, step: str = "1m") -> DataFrame:
     (`pandas.Series.interpolate(method='time')` per whole series —
     grouping the full (conv_id, metric) per UDF call avoids
     partition-edge artifacts, SURVEY §7 hard parts)."""
-    secs = STEP_SECONDS[step]
+    secs = _step_secs(step)
     obs = collapse_last_wins(series, step)
 
     out_schema = (

@@ -36,13 +36,9 @@ from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
-    VALUE_DECIMALS,
+    bucket_cents,
     snap,
     wide,
-)
-from timeseriescorrelation_spark.operators.crossmetric import (
-    _daily_cents,
-    _hourly_cents,
 )
 
 # 2·ln 2 − 1 and 4·ln 2, pinned as literals so both engines use the
@@ -70,7 +66,7 @@ def rsi_cutler(series: DataFrame, key: str = "metric",
     math.  Wilder's recursive form is one ewma() composition away
     (operators/analytics.ewma) for callers who want it.
     """
-    d = _daily_cents(series, key)
+    d = bucket_cents(series, [key], "day")
     w = Window.partitionBy(key).orderBy("day_ts")
     delta = F.col("y") - F.lag("y", 1).over(w)
     t = d.select(F.col(key), "day_ts", delta.alias("dy")) \
@@ -117,7 +113,7 @@ def bollinger_daily(series: DataFrame, key: str = "metric",
 
     Scale: daily grid → one bounded ROWS window per metric.
     """
-    d = _daily_cents(series, key)
+    d = bucket_cents(series, [key], "day")
     wf = Window.partitionBy(key).orderBy("day_ts") \
         .rowsBetween(-(window - 1), 0)
     g = d.select(
@@ -173,7 +169,7 @@ def stochastic_k(series: DataFrame, key: str = "metric",
 
     Scale: daily grid → two bounded ROWS windows per metric.
     """
-    d = _daily_cents(series, key)
+    d = bucket_cents(series, [key], "day")
     wf = Window.partitionBy(key).orderBy("day_ts") \
         .rowsBetween(-(window - 1), 0)
     t = d.select(
@@ -243,7 +239,7 @@ def range_volatility(series: DataFrame, key: str = "metric",
     Scale: ONE hash-agg to |metrics|·|days| rows (min/max/arg_min/
     arg_max), in-row math after.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     g = h.groupBy(
         F.col(key), F.date_trunc("day", "hour_ts").alias("day_ts")
     ).agg(
@@ -292,12 +288,7 @@ def ohlc_daily(series: DataFrame, key: str = "metric") -> DataFrame:
 
     Scale: hour-grid hash-agg → day hash-agg → one lag window over
     per-metric DAY rows."""
-    h = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("hour", "ts").alias("hour_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    h = bucket_cents(series, [F.col(key).alias("metric")], "hour")
     g = h.groupBy(
         "metric", F.date_trunc("day", "hour_ts").alias("day_ts")
     ).agg(

@@ -15,8 +15,7 @@ Day-of-week is used as a GROUPING only and never output by the test
 operators: Spark's dayofweek() is 1-7 Sunday-first and DuckDB's is
 0-6 Sunday-first — the induced partitions are identical, the labels
 are not.  The one op that DOES output a weekday (chi2_cells) derives
-an engine-neutral ISO label from the integer epoch-day rule instead
-of either engine's native function.
+an engine-neutral ISO label from `timeutil.weekday`'s integer rule.
 
 Scale notes (100 TB): each operator is one map-side-combined hash-agg
 from the raw scan down to |metrics|·|hours| (or |metrics|·7 /
@@ -32,11 +31,12 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     idiv,
     snap,
     wide,
 )
-from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
+from timeseriescorrelation_spark.functions.timeutil import epoch_day, weekday
 
 
 def chi2_independence(events: DataFrame, row_col: str = "event_type",
@@ -116,7 +116,7 @@ def kruskal_wallis(series: DataFrame, key: str = "metric") -> DataFrame:
     Scale: grid hash-agg → per-metric rank window over ≤|hours| rows
     (aggregate-sized partitions) → two tiny hash-aggs.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     wr = Window.partitionBy(key).orderBy("y")
     wt = Window.partitionBy(key, "y")
     ranked = h.select(
@@ -174,7 +174,7 @@ def sign_test_dod(series: DataFrame, key: str = "metric",
     Scale: grid hash-agg, then ONE equi-join of the grid against
     itself shifted 24 h on (metric, hour) — aggregate-sized shuffle.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     prev = h.select(
         F.col(key),
         (F.col("hour_ts") + F.expr("INTERVAL 24 HOURS")).alias("hour_ts"),
@@ -258,19 +258,10 @@ def grubbs_daily(series: DataFrame, key: str = "metric",
 
 def _weekend_daily(series: DataFrame, key: str) -> DataFrame:
     """(m, y, g): daily cent sums tagged weekend (g=1) / weekday by
-    the integer epoch-day rule — shared scaffold of the two-sample
+    `timeutil.weekday` — shared scaffold of the two-sample
     family (Welch t / Mann-Whitney / energy distance)."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
-    days = F.floor(
-        epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
-    ).cast("long")
-    g1 = F.pmod(days + F.lit(4), F.lit(7)).isin(0, 6).cast("int")
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
+    g1 = weekday("day_ts").isin(0, 6).cast("int")
     return d.select("m", "y", g1.alias("g"))
 
 
@@ -426,11 +417,7 @@ def wilcoxon_signed(series: DataFrame, key: str = "metric",
     grid against itself shifted `lag_days` on (metric, day), one rank
     window over per-metric day counts (aggregate-sized partitions),
     two hash-aggs.  No raw-row pair space anywhere."""
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
     prev = d.select(
         "m",
         (F.col("day_ts")
@@ -685,7 +672,7 @@ def chi2_cells(events: DataFrame, row_col: str = "event_type",
                     global association)
 
     Unlike chi2_independence, the weekday IS output — as dow_iso
-    (Mon=1..Sun=7) from the integer epoch-day rule pmod(days+3,7)+1,
+    (Mon=1..Sun=7), `timeutil.weekday` shifted to start on Monday,
     identical both engines (Spark's dayofweek() is 1-7 Sunday-first,
     DuckDB's 0-6 Sunday-first, so the NATIVE labels never cross the
     oracle).  χ² reuses the micro-snapped cell terms; e/std_resid
@@ -696,11 +683,7 @@ def chi2_cells(events: DataFrame, row_col: str = "event_type",
     Scale: one hash-agg to |rows|·7 cells, broadcast-sized margin
     joins, and one broadcast 1-row global agg for the χ² total —
     the grid never exceeds |distinct row values|·7."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    days = F.floor(
-        epoch_us(F.date_trunc("day", ts_col)) / F.lit(86_400_000_000)
-    ).cast("long")
+    days = epoch_day(F.date_trunc("day", ts_col))
     dow = (F.pmod(days + F.lit(3), F.lit(7)) + F.lit(1)).cast("int")
     cells = events.groupBy(
         F.col(row_col).alias("rv"), dow.alias("dw")

@@ -20,7 +20,7 @@ The binary threshold is the metric's doubled interpolated median
 exact integer either way, so `2y > med2` is an integer comparison).
 
 Calendar conventions are engine-neutral integer rules on the epoch
-day/hour (the nptests `(day+4) % 7` weekend rule; weeks block as
+day/hour (weekdays are `timeutil.weekday`; weeks block as
 `(day+4) DIV 7`): native dayofweek()/week() label differently across
 engines, integer arithmetic cannot.
 
@@ -35,10 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import VALUE_DECIMALS, snap
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
-from timeseriescorrelation_spark.operators.crossmetric import (
-    _hourly_cents,
+from timeseriescorrelation_spark.functions.exact import bucket_cents, snap
+from timeseriescorrelation_spark.functions.timeutil import (
+    epoch_day,
+    epoch_us,
+    weekday,
 )
 
 
@@ -60,7 +61,7 @@ def mcnemar_wow(series: DataFrame, key: str = "metric",
     Scale: hour-grid hash-agg, broadcast-sized median join, ONE
     equi-join of the grid against itself shifted one week on
     (metric, slot, week) — aggregate-sized throughout."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     # the median rides a grid WINDOW, not a join: a separate median
     # aggregate + join would re-scan the raw table a third time (the
     # grid is not cached by contract); the window runs over the
@@ -120,20 +121,14 @@ def cochran_q_dow(series: DataFrame, key: str = "metric",
 
     Scale: day-grid hash-agg (|metrics|·|days| rows), broadcast
     median join, two grid-sized re-aggregations."""
-    d = series.groupBy(
-        F.col(key), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [key], "day")
     w_med = Window.partitionBy(key)
     med2 = snap(F.lit(2) * F.percentile("y", F.lit(0.5)).over(w_med))
-    ed = F.floor(
-        epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
-    ).cast("long")
+    ed = epoch_day("day_ts")
     tagged = d.select(
         F.col(key),
         F.floor((ed + F.lit(4)) / F.lit(7)).cast("long").alias("week"),
-        F.pmod(ed + F.lit(4), F.lit(7)).cast("long").alias("dow"),
+        weekday("day_ts").cast("long").alias("dow"),
         (F.lit(2) * F.col("y") > med2).cast("long").alias("b"),
     )
     complete = (
@@ -178,15 +173,8 @@ def _ranked_weekend(series: DataFrame, key: str) -> DataFrame:
     # _weekend_daily drops day_ts, which the deterministic in-sample
     # tiebreak needs (the day grid is unique per (m, day), so (y,
     # day_ts) is a total order) — rebuild the tagged grid inline.
-    d = series.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
-    days = F.floor(
-        epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
-    ).cast("long")
-    g1 = F.pmod(days + F.lit(4), F.lit(7)).isin(0, 6).cast("int")
+    d = bucket_cents(series, [F.col(key).alias("m")], "day")
+    g1 = weekday("day_ts").isin(0, 6).cast("int")
     d = d.select("m", "day_ts", "y", g1.alias("g"))
     w_min = Window.partitionBy("m").orderBy("y")
     w_tie = Window.partitionBy("m", "y")

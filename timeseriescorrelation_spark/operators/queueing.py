@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import co_moment, moments
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 
 _HOUR_US = 3_600_000_000
 
@@ -339,20 +339,15 @@ def rate_ratio_weekend(events: DataFrame, key: str = "event_type",
     equal daily rates the weekend share is Binomial(N, ê).  All
     counts exact integers; RR and z are one shared double tree each,
     6 dp.  NULL RR when C0 = 0; NULL z when ê degenerates.
-    Weekend by the integer epoch-day rule (engine-neutral).
+    Weekend by `timeutil.weekday` (engine-neutral).
 
     Scale: one hash-agg raw→(metric, day), one to per-metric — no
     joins, no windows."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
     d = events.groupBy(
         F.col(key).alias("m"),
         F.date_trunc("day", ts_col).alias("day_ts"),
     ).agg(F.count(F.lit(1)).alias("c"))
-    days = F.floor(
-        epoch_us(F.col("day_ts")) / F.lit(86_400_000_000)
-    ).cast("long")
-    g1 = F.pmod(days + F.lit(4), F.lit(7)).isin(0, 6).cast("int")
+    g1 = weekday("day_ts").isin(0, 6).cast("int")
     dd = d.select("m", "c", g1.alias("g"))
     g = dd.groupBy("m").agg(
         F.sum(F.lit(1) - F.col("g")).alias("d0"),

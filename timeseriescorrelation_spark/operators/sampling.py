@@ -19,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import snap
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap,
+)
 
 N_BUCKETS = 1 << 16
 
@@ -191,7 +195,7 @@ def bootstrap_mean_ci(series: DataFrame, n_boot: int = 32,
     ).alias("b")
     rows = series.select(
         "metric",
-        snap("value", 2).alias("c"),
+        snap("value", VALUE_DECIMALS).alias("c"),
         F.col("turn_idx").cast("long").alias("eid"),
         b,
     )
@@ -235,7 +239,7 @@ def bootstrap_mean_ci(series: DataFrame, n_boot: int = 32,
     )
     point = series.groupBy("metric").agg(
         F.count(F.lit(1)).alias("n_points"),
-        F.sum(snap("value", 2)).alias("sc"),
+        F.sum(snap("value", VALUE_DECIMALS)).alias("sc"),
     )
     return (
         point.join(ci, "metric")
@@ -243,10 +247,10 @@ def bootstrap_mean_ci(series: DataFrame, n_boot: int = 32,
             "metric", "n_points",
             F.round(
                 F.col("sc").cast("double")
-                / (F.lit(100.0) * F.col("n_points").cast("double")),
+                / (F.lit(float(SCALE)) * F.col("n_points").cast("double")),
                 6,
             ).alias("mean_amt"),
-            F.round(F.col("lo_c") / 100.0, 6).alias("boot_lo"),
-            F.round(F.col("hi_c") / 100.0, 6).alias("boot_hi"),
+            F.round(F.col("lo_c") / float(SCALE), 6).alias("boot_lo"),
+            F.round(F.col("hi_c") / float(SCALE), 6).alias("boot_hi"),
         )
     )

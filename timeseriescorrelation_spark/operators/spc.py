@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     moments,
     snap,
@@ -226,12 +227,7 @@ def ewma_chart(series: DataFrame, key: str = "metric",
     W = sum(w)
     varfac = sum(x * x for x in w) / (W * W)  # exact-rational literal
 
-    h = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("hour", "ts").alias("hour_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    h = bucket_cents(series, [F.col(key).alias("metric")], "hour")
     win = Window.partitionBy("metric").orderBy("hour_ts")
     num = None
     for j in range(K):
@@ -291,12 +287,7 @@ def xmr_chart(series: DataFrame, key: str = "metric") -> DataFrame:
 
     Scale: day-grid hash-agg → one lag window → one broadcast join
     of per-metric centerlines."""
-    d = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("day", "ts").alias("day_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("metric")], "day")
     w = Window.partitionBy("metric").orderBy("day_ts")
     t = d.withColumn(
         "mr", F.abs(F.col("y") - F.lag("y", 1).over(w))
@@ -348,12 +339,7 @@ def process_capability(series: DataFrame, lsl: float, usl: float,
     """
     lsl_c = int(round(lsl * SCALE))
     usl_c = int(round(usl * SCALE))
-    d = series.groupBy(
-        F.col(key).alias("metric"),
-        F.date_trunc("day", "ts").alias("day_ts"),
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [F.col(key).alias("metric")], "day")
     g = d.groupBy("metric").agg(
         *moments("y", names="n s ss"),
         F.sum(

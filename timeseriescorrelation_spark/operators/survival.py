@@ -37,12 +37,13 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     moments,
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_us
+from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 
 M_U = 1_000_000.0
 
@@ -188,11 +189,8 @@ def logrank_weekend(series: DataFrame, keys: list[str] | None = None,
     Exactness: risk/death counts are exact integers from the same
     DESC-range window as km_survival; e1/v are per-row rationals
     snapped to integer MICRO-units before the (order-free) sum —
-    the engine's fixed-point policy.  Weekend membership is integer
-    epoch-day arithmetic on the conversation's FIRST event
-    ((days+4) mod 7 ∈ {0,6}; floor of an exact-µs/86400e6 division
-    cannot misround: the fractional part is ≥ 1 µs/day ≫ half an
-    ulp).
+    the engine's fixed-point policy.  Weekend membership is
+    `timeutil.weekday` of the conversation's FIRST event.
 
     Scale: one conv agg → per-(key, dur) counts → two partitioned
     windows — the km_survival shape with a 2-arm split, no grids."""
@@ -203,8 +201,7 @@ def logrank_weekend(series: DataFrame, keys: list[str] | None = None,
         F.max(epoch_us(F.col(ts_col))).alias("t1"),
     )
     fr = ev.groupBy(*keys).agg(F.max("t1").alias("fmax"))
-    days = F.floor(F.col("t0") / F.lit(86_400_000_000)).cast("long")
-    g1 = F.pmod(days + F.lit(4), F.lit(7)).isin(0, 6).cast("long")
+    g1 = weekday(F.timestamp_micros("t0")).isin(0, 6).cast("long")
     d = ev.join(F.broadcast(fr), keys).select(
         *keys,
         (F.col("t1") - F.col("t0")).alias("dur"),
@@ -281,14 +278,13 @@ def _cox_risk_table(series: DataFrame, keys: list[str],
                     h_us: int) -> DataFrame:
     """Shared Cox/log-rank death-time table: (keys..., d1, d0, n1, n0)
     at every pooled uncensored death duration, arm 1 = weekend-started
-    conversations (integer epoch-day rule)."""
+    conversations (`timeutil.weekday`)."""
     ev = series.groupBy(*keys, conv_col).agg(
         F.min(epoch_us(F.col(ts_col))).alias("t0"),
         F.max(epoch_us(F.col(ts_col))).alias("t1"),
     )
     fr = ev.groupBy(*keys).agg(F.max("t1").alias("fmax"))
-    days = F.floor(F.col("t0") / F.lit(86_400_000_000)).cast("long")
-    g1 = F.pmod(days + F.lit(4), F.lit(7)).isin(0, 6).cast("long")
+    g1 = weekday(F.timestamp_micros("t0")).isin(0, 6).cast("long")
     d = ev.join(F.broadcast(fr), keys).select(
         *keys,
         (F.col("t1") - F.col("t0")).alias("dur"),
@@ -523,11 +519,7 @@ def gpd_tail(series: DataFrame, keys: list[str] | None = None,
     NULL fit when A = B (degenerate spacing); no row when fewer
     than min_exceed exceedances."""
     keys = keys or ["metric"]
-    d = series.groupBy(
-        *keys, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, keys, "day")
     w_rank = Window.partitionBy(*keys).orderBy("y", "day_ts")
     w_all = Window.partitionBy(*keys)
     r = d.select(

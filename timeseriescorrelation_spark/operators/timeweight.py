@@ -45,12 +45,7 @@ from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import snap
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-_TRUNC_US = {
-    "minute": 60_000_000,
-    "hour": 3_600_000_000,
-    "day": 86_400_000_000,
-}
+from timeseriescorrelation_spark.operators.rollup import TRUNC_US
 
 
 def _bucket_end_us(ts: Column, trunc: str) -> Column:
@@ -60,7 +55,7 @@ def _bucket_end_us(ts: Column, trunc: str) -> Column:
     TIMESTAMP_NTZ; a civil-time/DST-aware variant would use the
     calendar stepping of operators/intervals.py instead).
     """
-    return epoch_us(F.date_trunc(trunc, ts)) + F.lit(_TRUNC_US[trunc])
+    return epoch_us(F.date_trunc(trunc, ts)) + F.lit(TRUNC_US[trunc])
 
 
 def _with_segment(df: DataFrame, part_keys: list[str], trunc: str,
@@ -142,7 +137,7 @@ def heartbeat_coverage(beats: DataFrame, interval_seconds: int,
     covered = F.least(
         F.col("_seg_end_us") - F.col("_ts_us"), F.lit(interval_us)
     )
-    width = _TRUNC_US[trunc]
+    width = TRUNC_US[trunc]
     return (
         seg.groupBy(
             "conv_id", F.date_trunc(trunc, F.col("ts")).alias("bucket_ts")

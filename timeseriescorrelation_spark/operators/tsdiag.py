@@ -5,7 +5,7 @@ variance, and a Page-Hinkley drift scan.
 
 All six follow the engine's aggregate-first discipline: the raw scan
 collapses to |metrics|·|hours| rows in ONE map-side-combined hash
-aggregation (exact integer cent sums, `crossmetric._hourly_cents`),
+aggregation (exact integer cent sums, `exact.bucket_cents`),
 and every statistic after that runs over the tiny grid — window lags
 partitioned per (metric, day) are ≤24-row frames over aggregates, so
 the whole family is 100-TB-safe regardless of raw turn count.
@@ -30,13 +30,13 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
     VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     moments,
     snap,
     wide,
 )
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
-from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
 
 
 def ar2_forecast(series: DataFrame, key: str = "metric",
@@ -64,7 +64,7 @@ def ar2_forecast(series: DataFrame, key: str = "metric",
     drop out.  Scale: one hash-agg to the grid, one ≤24-row window
     per (metric, day), one hash-agg — no raw-row shuffle.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     lagged = h.select(
         F.col(key), day.alias("day_ts"), "hour_ts", "y",
@@ -127,7 +127,7 @@ def variance_ratio(series: DataFrame, key: str = "metric",
     Scale: identical shape to ar2_forecast — grid agg, per-(metric,
     day) ≤24-row lag window, hash-agg.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     wspec = Window.partitionBy(key, day).orderBy("hour_ts")
     d = h.select(
@@ -179,7 +179,7 @@ def runs_test(series: DataFrame, key: str = "metric",
     Scale: grid agg → two ≤24-row windows (delta, then sign-change
     over the filtered rows) → hash-agg; aggregates only.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     wspec = Window.partitionBy(key, day).orderBy("hour_ts")
     d = h.select(
@@ -234,7 +234,7 @@ def turning_points(series: DataFrame, key: str = "metric",
 
     Scale: grid agg → one ≤24-row lag/lead window → hash-agg.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     wspec = Window.partitionBy(key, day).orderBy("hour_ts")
     d = h.select(
@@ -280,7 +280,7 @@ def allan_variance(series: DataFrame, key: str = "metric",
     Scale: one grid agg, one bucket hash-agg (|metrics|·|hours|/τ
     rows), one lag window over buckets, one final hash-agg.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     hidx = (F.unix_micros("hour_ts") / F.lit(3_600_000_000)).cast(
         "long"
     )
@@ -340,7 +340,7 @@ def page_hinkley(series: DataFrame, key: str = "metric") -> DataFrame:
     partitions); one hash-agg ends it.  This is the batch scan; the
     streaming twin is the cusum family (`streaming/cusum_stream`).
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     wcum = (
         Window.partitionBy(key).orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -397,7 +397,7 @@ def record_counts(series: DataFrame, key: str = "metric") -> DataFrame:
     aggregate rows → per-metric hash-agg; the harmonic sum explodes a
     1..n sequence per METRIC (|metrics|·|hours| rows, born post-agg).
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     wprev = (
         Window.partitionBy(key).orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -461,7 +461,7 @@ def newey_west(series: DataFrame, key: str = "metric",
     (max_lag lag columns in ONE window pass) → one hash-agg.
     """
     lags = list(range(1, int(max_lag) + 1))
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     wspec = Window.partitionBy(key).orderBy("hour_ts")
     sel = [F.col(key), F.col("y")]
     for k in lags:
@@ -592,7 +592,7 @@ def kpss_level(series: DataFrame, key: str = "metric",
     running sum, L lag columns over aggregate rows) → one hash-agg."""
     lags = list(range(1, int(max_lag) + 1))
     lp1 = int(max_lag) + 1
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     w = Window.partitionBy(key).orderBy("hour_ts")
     w_full = Window.partitionBy(key)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -672,7 +672,7 @@ def df_unitroot(series: DataFrame, key: str = "metric",
     (Cxx·Czz = Cxz², constant, or m < min_hours) drop.
 
     Scale: grid hash-agg → one lag window per metric → one hash-agg."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     w = Window.partitionBy(key).orderBy("hour_ts")
     lagged = h.select(
         F.col(key),
@@ -741,7 +741,7 @@ def adf_augmented(series: DataFrame, key: str = "metric", p: int = 1,
     neighbours), matching df_unitroot."""
     if p not in (1, 2):
         raise ValueError("p must be 1 or 2")
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     w = Window.partitionBy(key).orderBy("hour_ts")
     z = F.col("y") - F.lag("y", 1).over(w)
     base = h.select(
@@ -848,12 +848,7 @@ def streak_report(series: DataFrame, key: str = "metric") -> DataFrame:
 
     Scale: one lag window + one cumulative window over per-metric DAY
     counts (tiny partitions at any corpus size), two hash-aggs."""
-    d = series.groupBy(
-        key, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS))
-         .cast("long").alias("y")
-    )
+    d = bucket_cents(series, [key], "day")
     w = Window.partitionBy(key).orderBy("day_ts")
     sgn = F.signum(
         (F.col("y") - F.lag("y", 1).over(w)).cast("double")
@@ -926,11 +921,7 @@ def jarque_bera(series: DataFrame, key: str = "metric",
     Scale: one hash-agg to the per-metric day grid, one lag window
     over |days| rows per metric (calendar-bounded), one hash-agg —
     no raw-row second pass."""
-    d = series.groupBy(
-        key, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [key], "day")
     w = Window.partitionBy(key).orderBy("day_ts")
     v = (F.col("y") - F.lag("y", 1).over(w))
     dd = d.select(key, v.alias("v")).where(F.col("v").isNotNull())
@@ -995,11 +986,7 @@ def durbin_watson(series: DataFrame, key: str = "metric",
     Scale: one hash-agg to the per-metric day grid, one ordinal
     window + one broadcast-sized agg join, one lag window, one final
     hash-agg — every post-grid stage is calendar-bounded."""
-    d = series.groupBy(
-        key, F.date_trunc("day", "ts").alias("day_ts")
-    ).agg(
-        F.sum(snap("value", VALUE_DECIMALS)).alias("y")
-    )
+    d = bucket_cents(series, [key], "day")
     w = Window.partitionBy(key).orderBy("day_ts")
     dd = d.select(
         key, "day_ts",
@@ -1062,7 +1049,7 @@ def arch_lm(series: DataFrame, key: str = "metric",
     Sequence convention: lags run over the observed hourly sequence
     (gaps splice, module policy).  Scale: one hash-agg to the hour
     grid, two lag windows per metric over grid rows, one hash-agg."""
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     w = Window.partitionBy(key).orderBy("hour_ts")
     d = h.select(
         key, "hour_ts",

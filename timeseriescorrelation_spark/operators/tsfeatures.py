@@ -10,7 +10,7 @@ from organic traffic.
 All four operators follow the engine's aggregate-first discipline
 (same as operators/tsdiag.py): the raw scan collapses to
 |metrics|·|hours| rows in ONE map-side-combined hash aggregation
-(exact integer cent sums via `crossmetric._hourly_cents`), and every
+(exact integer cent sums via `exact.bucket_cents`), and every
 feature after that runs over the tiny grid — per-(metric, day) frames
 are ≤24 rows of aggregates, so the family is 100-TB-safe regardless
 of raw turn count.
@@ -31,8 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import SCALE, wide
-from timeseriescorrelation_spark.operators.crossmetric import _hourly_cents
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    bucket_cents,
+    wide,
+)
 
 
 def permutation_entropy(series: DataFrame, key: str = "metric",
@@ -57,7 +60,7 @@ def permutation_entropy(series: DataFrame, key: str = "metric",
     hash-agg on (metric, day, pat) → hash-agg.  No shuffle grows
     with raw rows.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(
@@ -116,7 +119,7 @@ def sample_entropy(series: DataFrame, key: str = "metric", r_cents: int = 500,
     bounded-quadratic budget as mann_kendall; groups shuffle once.
     For unbounded n, permutation_entropy is the O(n) scale path.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(
@@ -186,7 +189,7 @@ def hjorth_params(series: DataFrame, key: str = "metric",
 
     Scale: grid agg → one ≤24-row lag window → hash-agg.
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(
@@ -264,7 +267,7 @@ def complexity_stats(series: DataFrame, key: str = "metric",
     engines (measured: duckdb round(9876543210987.555, 6) →
     …987.557).
     """
-    h = _hourly_cents(series, [key])
+    h = bucket_cents(series, [key], "hour")
     day = F.date_trunc("day", "hour_ts")
     w = Window.partitionBy(key, day).orderBy("hour_ts")
     t = h.select(

@@ -32,7 +32,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from timeseriescorrelation_spark.functions.exact import narrow, snap_np
+from timeseriescorrelation_spark.functions.exact import (
+    VALUE_DECIMALS,
+    narrow,
+    snap_np,
+)
 from timeseriescorrelation_spark.streaming.scan import micros, stateful_scan
 
 OUT_SCHEMA = ("metric_a string, metric_b string, day_ts timestamp, "
@@ -123,7 +127,7 @@ def stream_corr(stream: DataFrame, pairs: list[tuple[str, str]],
 
         ts_us = micros(pdf["ts"])
         side = pdf["side"].to_numpy(dtype=np.int64)
-        cents = snap_np(pdf["value"].to_numpy(dtype=np.float64), 2)
+        cents = snap_np(pdf["value"].to_numpy(np.float64), VALUE_DECIMALS)
         for i in np.argsort(ts_us, kind="stable"):
             h = int(ts_us[i]) // HOUR_US * HOUR_US
             if open_h is None:

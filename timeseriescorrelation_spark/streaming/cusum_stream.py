@@ -19,7 +19,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from timeseriescorrelation_spark.functions.exact import snap_np
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap_np,
+)
 from timeseriescorrelation_spark.streaming.scan import (
     ordered_live,
     stateful_scan,
@@ -36,8 +40,8 @@ def stream_cusum(stream: DataFrame, mu: float, sigma: float,
                  h: float = 5.0, evict_seconds: int = 86400) -> DataFrame:
     """stream (conv_id, metric, ts, turn_idx, value) with a watermark
     on ts → append stream of online CUSUM scores + alert flags."""
-    mu_c = int(round(mu * 100))
-    thr = float(h) * int(round(sigma * 100))
+    mu_c = int(round(mu * SCALE))
+    thr = float(h) * int(round(sigma * SCALE))
 
     def _cusum(key, pdf, st):
         conv_id, metric = key
@@ -46,7 +50,7 @@ def stream_cusum(stream: DataFrame, mu: float, sigma: float,
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
-        p = p0 + np.cumsum(snap_np(vals, 2) - mu_c)
+        p = p0 + np.cumsum(snap_np(vals, VALUE_DECIMALS) - mu_c)
         # running extrema seeded by state: min(0, lo0, min p), identical
         # to the batch least(0, min over prefix)
         lo = np.minimum(np.minimum(np.minimum.accumulate(p), lo0), 0)
@@ -64,8 +68,8 @@ def stream_cusum(stream: DataFrame, mu: float, sigma: float,
                 "ts": ts_us.astype("datetime64[us]"),
                 "turn_idx": idx.astype(np.int32),
                 "value": vals,
-                "s_plus": sp / 100,
-                "s_minus": sm / 100,
+                "s_plus": sp / SCALE,
+                "s_minus": sm / SCALE,
                 "alert": (sp > thr) | (sm > thr),
             }
         )

@@ -32,7 +32,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from timeseriescorrelation_spark.functions.exact import snap_np
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap_np,
+)
 from timeseriescorrelation_spark.streaming.scan import (
     ordered_live,
     stateful_scan,
@@ -57,8 +61,8 @@ def stream_page_hinkley(stream: DataFrame, delta: float = 0.0,
     on ts → append stream of online Page-Hinkley scores (value units)
     + alert flags.  ``delta`` is the drift slack and ``lam`` the alert
     threshold, both in value units."""
-    delta_u = int(round(delta * 100)) * CENT_U
-    lam_u = int(round(lam * 100)) * CENT_U
+    delta_u = int(round(delta * SCALE)) * CENT_U
+    lam_u = int(round(lam * SCALE)) * CENT_U
 
     def _ph(key, pdf, st):
         conv_id, metric = key
@@ -68,7 +72,7 @@ def stream_page_hinkley(stream: DataFrame, delta: float = 0.0,
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
         # cent snap, then micro-cent fixed point
-        cents = snap_np(vals, 2)
+        cents = snap_np(vals, VALUE_DECIMALS)
         ph = np.empty(len(cents), dtype=np.float64)
         alert = np.empty(len(cents), dtype=bool)
         for i, c in enumerate(cents):
@@ -80,7 +84,7 @@ def stream_page_hinkley(stream: DataFrame, delta: float = 0.0,
             cum += xu - mean_u - delta_u
             lo = min(lo, cum)
             ph_u = cum - lo
-            ph[i] = ph_u / (100.0 * CENT_U)
+            ph[i] = ph_u / (float(SCALE) * CENT_U)
             alert[i] = ph_u > lam_u
         new = (
             int(ts_us[-1]), int(idx[-1]),

@@ -24,7 +24,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from timeseriescorrelation_spark.functions.exact import snap_np
+from timeseriescorrelation_spark.functions.exact import (
+    SCALE,
+    VALUE_DECIMALS,
+    snap_np,
+)
 from timeseriescorrelation_spark.streaming.scan import micros, stateful_scan
 
 OUT_SCHEMA = "metric string, hour_ts timestamp, n_total long, psi double"
@@ -53,7 +57,7 @@ def stream_psi(stream: DataFrame, edges: list[float],
                evict_seconds: int = 7 * 86400) -> DataFrame:
     """stream (metric, ts, value) with a watermark on ts → append
     stream of (metric, hour_ts, n_total, psi) rows at hour closures."""
-    edges_c = np.array([int(round(e * 100)) for e in edges],
+    edges_c = np.array([int(round(e * SCALE)) for e in edges],
                        dtype=np.int64)
     b_n = len(edges) + 1
 
@@ -76,7 +80,9 @@ def stream_psi(stream: DataFrame, edges: list[float],
         if open_h is not None:
             live = hours >= open_h
             hours, vals = hours[live], vals[live]
-        bins = np.searchsorted(edges_c, snap_np(vals, 2), side="left")
+        bins = np.searchsorted(
+            edges_c, snap_np(vals, VALUE_DECIMALS), side="left"
+        )
         for h in np.unique(hours):
             if open_h is not None and h > open_h:
                 closed += opened

@@ -35,8 +35,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from timeseriescorrelation_spark.operators.gapfill import STEP_SECONDS
-from timeseriescorrelation_spark.operators.rollup import idx_bits
+from timeseriescorrelation_spark.operators.rollup import (
+    TIER_TRUNC,
+    TRUNC_US,
+    idx_bits,
+)
 from timeseriescorrelation_spark.streaming.scan import (
     micros,
     stateful_scan,
@@ -55,7 +58,7 @@ def stream_fill_locf(stream: DataFrame, step: str = "1h",
 
     ``stream`` must already carry a watermark on ``ts`` (the stateful
     operator requires one for EventTimeTimeout eviction)."""
-    step_us = STEP_SECONDS[step] * 1_000_000
+    step_us = TRUNC_US[TIER_TRUNC[step]]
     step_ms = step_us // 1_000
     bits = idx_bits(step_us)
     cap = (1 << bits) - 1

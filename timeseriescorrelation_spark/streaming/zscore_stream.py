@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from timeseriescorrelation_spark.functions.exact import (
+    VALUE_DECIMALS,
     narrow,
     snap_np,
     wide_np,
@@ -52,7 +53,7 @@ def stream_zscore(stream: DataFrame, min_n: int = 3,
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
-        v = wide_np(snap_np(vals, 2))
+        v = wide_np(snap_np(vals, VALUE_DECIMALS))
         k = len(v)
         # expanding priors: state + everything earlier in this (sorted)
         # batch — exact integers throughout: n·Σx² leaves int64 long
