@@ -58,7 +58,6 @@ from timeseriescorrelation_spark.operators.series import derive_series  # noqa: 
 from timeseriescorrelation_spark.operators.similarity import (  # noqa: E402
     ann_topk_bruteforce,
     ann_topk_ivf,
-    cosine_neardup_pairs,
 )
 from timeseriescorrelation_spark.operators.textstats import (  # noqa: E402
     doc_fingerprints_vocab,
@@ -684,7 +683,7 @@ def q_event_sessions(spark, sf_dir):
         "n_events",
     )
     j = interval_join_binned(
-        e, spans, ["conv_id"], "ts", "start_ts", "end_ts", "hour"
+        e, spans, ["conv_id"], "hour"
     )
     return j.select(
         "event_id", "conv_id",
@@ -1299,7 +1298,7 @@ def q_hdr_quantiles_day(spark, sf_dir):
         F.date_trunc("hour", F.col("ts")).alias("_hour"),
         "value",
     )
-    hourly = hdr_sketch(e, ["metric", "bucket_ts", "_hour"], "value")
+    hourly = hdr_sketch(e, ["metric", "bucket_ts", "_hour"])
     daily = hdr_merge(hourly, ["metric", "bucket_ts"])
     est = hdr_quantiles(daily, ["metric", "bucket_ts"])
     # exact nearest-rank check column from the same integer cents
@@ -2067,7 +2066,7 @@ def q_concurrency_1h(spark, sf_dir):
         F.col("session_start").alias("start_ts"),
         F.col("session_end_ts").alias("end_ts"),
     )
-    return max_concurrency(spans, "start_ts", "end_ts", "hour")
+    return max_concurrency(spans, "hour")
 
 
 def q_lttb_1h(spark, sf_dir):
@@ -2604,7 +2603,7 @@ def q_mutual_info(spark, sf_dir):
     )
 
     return mutual_information_pairs(
-        _series_from_events(spark, sf_dir), key_col="metric"
+        _series_from_events(spark, sf_dir)
     ).where(F.col("n_hours") >= 24)
 
 
@@ -2734,7 +2733,7 @@ def q_entropy_daily(spark, sf_dir):
     per term before summation (the lm.py recipe)."""
     from timeseriescorrelation_spark.operators.drift import entropy_daily
 
-    return entropy_daily(_events(spark, sf_dir), cat_col="event_type")
+    return entropy_daily(_events(spark, sf_dir))
 
 
 def q_benford(spark, sf_dir):
@@ -3076,7 +3075,7 @@ def q_scd2_state(spark, sf_dir):
         "user_id", "ts", "event_id", F.col("event_type").alias("state")
     )
     return scd2_history(
-        e, keys=["user_id"], attr_cols=["state"], ts_col="ts",
+        e, keys=["user_id"], attr_cols=["state"],
         tie_col="event_id",
     )
 
@@ -3450,7 +3449,7 @@ def q_growth_accounting(spark, sf_dir):
     )
 
     return growth_accounting(
-        _series_from_events(spark, sf_dir), actor_col="conv_id"
+        _series_from_events(spark, sf_dir)
     )
 
 
@@ -4820,10 +4819,7 @@ def q_mm_audio(spark, sf_dir):
     exact integer arithmetic, so the DuckDB oracle reproduces every
     frame from the same bytes (the test payload is the docs' ASCII
     utf-8, where codepoint == byte)."""
-    from timeseriescorrelation_spark.operators.multimodal import (
-        attach_payload,
-        audio_energy,
-    )
+    from timeseriescorrelation_spark.operators.multimodal import audio_energy
 
     return audio_energy(
         attach_payload(_docs(spark, sf_dir)), frame_len=64
@@ -4865,7 +4861,7 @@ def q_pattern_matches(spark, sf_dir):
     )
     return pattern_matches(
         e, ["click", "view", "purchase"], keys=["conv_id"],
-        type_col="event_type", tie_col="event_id",
+        tie_col="event_id",
         within_seconds=86400,
     )
 
@@ -4894,7 +4890,7 @@ def q_scd2_enrich(spark, sf_dir):
         F.col("event_type").alias("status"),
     )
     hist = scd2_history(
-        dim_log, keys=["user_id"], attr_cols=["status"], ts_col="ts",
+        dim_log, keys=["user_id"], attr_cols=["status"],
         tie_col="event_id",
     )
     horizon = e.agg(
@@ -4911,7 +4907,7 @@ def q_scd2_enrich(spark, sf_dir):
         "user_id", "ts", "event_id"
     )
     j = interval_join_binned(
-        clicks, spans, ["user_id"], "ts", "start_ts", "end_ts", "day"
+        clicks, spans, ["user_id"], "day"
     )
     return j.groupBy("status").agg(
         F.count(F.lit(1)).alias("n_clicks"),
@@ -5582,7 +5578,7 @@ def q_fdr_anomalies(spark, sf_dir):
         _series_from_events(spark, sf_dir), exact_cols=True
     )
     out = bh_fdr(
-        pv, ["metric"], "p_num", "p_den", q_num=1, q_den=4,
+        pv, ["metric"], q_num=1, q_den=4,
         order_cols=["day_ts"],
     )
     return out.select(
@@ -6445,7 +6441,7 @@ def q_pair_scorecard(spark, sf_dir):
         F.col("metric_y").alias("metric_b"),
         "best_lag_h",
     )
-    mi = mutual_information_pairs(s, key_col="metric").where(
+    mi = mutual_information_pairs(s).where(
         F.col("n_hours") >= 24
     ).select(
         F.col("metric_x").alias("metric_a"),

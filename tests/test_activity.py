@@ -272,7 +272,7 @@ def test_growth_accounting_hand_case(spark):
     df = spark.createDataFrame(rows, "conv_id string, ts timestamp")
     got = {
         r.day_ts.day: r
-        for r in growth_accounting(df, actor_col="conv_id").collect()
+        for r in growth_accounting(df).collect()
     }
     assert (got[1].n_active, got[1].n_new, got[1].n_retained,
             got[1].n_resurrected, got[1].n_churned) == (2, 2, 0, 0, 0)

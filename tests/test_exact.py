@@ -390,6 +390,129 @@ def test_value_grid_is_declared_only_in_the_kit():
     assert float_mode == FLOAT_MODE
 
 
+def _defaults(fn) -> dict:
+    """``fn``'s defaulted parameters → their default nodes."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    pairs = [*zip(pos[len(pos) - len(a.defaults):], a.defaults),
+             *zip(a.kwonlyargs, a.kw_defaults)]
+    return {x.arg: d for x, d in pairs if d is not None}
+
+
+def _parameter_values():
+    """(vals, sites): the values each parameter of a package function
+    can take, and the defaulted ``*_col`` parameters by label.
+
+    A value is a literal, a non-literal default's node, or ``ANY``.  A
+    parameter takes its default and every value a call in the package,
+    __spark_entry__.py, bench.py, scripts/, perfbench/ or tests/ passes
+    it.  A name that a call passes stands for the values of the
+    enclosing function's parameter of that name, to a fixed point.
+    What the scan cannot follow is ``ANY``: another expression, a
+    parameter reassigned in its body, the parameters of a call with
+    ``*args``/``**kwargs``, and the required parameters of a function
+    passed as a value or named ``__*__``."""
+    root = PKG.parent
+    paths = [*PKG.rglob("*.py"), root / "__spark_entry__.py",
+             root / "bench.py",
+             *(p for d in ("scripts", "perfbench", "tests")
+               for p in (root / d).rglob("*.py"))]
+    ANY = object()
+    defs, vals, sites, calls, passed = {}, {}, {}, [], set()
+
+    def collect(node, rel, in_class=False):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(ch.name, []).append((ch, in_class))
+                a = ch.args
+                for x in a.posonlyargs + a.args + a.kwonlyargs:
+                    vals[ch, x.arg] = set()
+                for k, d in _defaults(ch).items():
+                    vals[ch, k].add(d.value if isinstance(d, ast.Constant)
+                                    else d)
+                    if k.endswith("_col"):
+                        sites[ch, k] = f"{rel}:{ch.lineno} {ch.name} {k}"
+            else:
+                collect(ch, rel, in_class or isinstance(ch, ast.ClassDef))
+
+    def walk(node, enclosing):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, ast.Call):
+                calls.append((ch, enclosing))
+            elif (isinstance(ch, (ast.Name, ast.Attribute))
+                  and isinstance(ch.ctx, ast.Load)
+                  and not (isinstance(node, ast.Call) and ch is node.func)
+                  and not (isinstance(node, ast.Attribute)
+                           and ch is node.value)):
+                passed.add(getattr(ch, "id", None) or ch.attr)
+            walk(ch, ch if isinstance(ch, (ast.FunctionDef,
+                                           ast.AsyncFunctionDef))
+                 else enclosing)
+
+    for p in sorted(paths):
+        tree = ast.parse(p.read_text())
+        if PKG in p.parents:
+            collect(tree, str(p.relative_to(PKG)))
+        walk(tree, None)
+
+    stored = {fn: {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)
+                   and not isinstance(n.ctx, ast.Load)}
+              for fns in defs.values() for fn, _ in fns}
+    for (fn, k), v in vals.items():
+        if not v and (fn.name in passed or fn.name.startswith("__")):
+            v.add(ANY)
+    binds = []
+    for c, enclosing in calls:
+        f = c.func
+        for fn, method in defs.get(getattr(f, "id", None)
+                                   or getattr(f, "attr", None), []):
+            pos = fn.args.posonlyargs + fn.args.args
+            if method and isinstance(f, ast.Attribute):
+                pos = pos[1:]
+            given = [(k.arg, k.value) for k in c.keywords if k.arg]
+            for x, a in zip(pos, c.args):
+                if isinstance(a, ast.Starred):
+                    break
+                given.append((x.arg, a))
+            if len(given) < len(c.args) + len(c.keywords):
+                for (g, k), v in vals.items():
+                    if g is fn:
+                        v.add(ANY)
+            binds += [(fn, k, a, enclosing) for k, a in given
+                      if (fn, k) in vals]
+
+    def values(a, enclosing):
+        if isinstance(a, ast.Constant):
+            return {a.value}
+        if (isinstance(a, ast.Name) and (enclosing, a.id) in vals
+                and a.id not in stored[enclosing]):
+            return vals[enclosing, a.id]
+        return {ANY}
+
+    changed = True
+    while changed:
+        changed = False
+        for fn, k, a, enclosing in binds:
+            new = values(a, enclosing) - vals[fn, k]
+            if new:
+                vals[fn, k] |= new
+                changed = True
+    return vals, sites
+
+
+def test_column_names_are_the_schemas():
+    """A defaulted ``*_col`` parameter of a package function stays only
+    while some call passes it a value other than its default
+    (`_parameter_values`): neither forwarding the caller's own unset
+    parameter nor forwarding a required one that every call sets to
+    the default counts.  Every other column name is the schema's,
+    spelled where it is read."""
+    vals, sites = _parameter_values()
+    unset = sorted(label for (fn, k), label in sites.items()
+                   if len(vals[fn, k]) == 1)
+    assert not unset, _sites_message("never-set *_col parameters", unset)
+
+
 def _sources(skip: str = ""):
     """(path, AST) of every package module and of __spark_entry__.py,
     except the one named ``skip``."""
@@ -435,8 +558,7 @@ def test_cent_series_is_bucketed_only_in_the_kit():
     """The calendar-bucketed cent series — groupBy(keys,
     date_trunc(grain, ts)) with the one aggregate Σ snap(value) — is
     built by exact.bucket_cents only.  Aggregations that also count or
-    take a max, and the operators that read ts/value column
-    parameters, spell their own out."""
+    take a max spell their own out."""
     sites = []
     for rel, tree in _sources(skip=f"{PKG.name}/functions/exact.py"):
         for n in ast.walk(tree):
@@ -479,7 +601,8 @@ def test_values_snap_to_the_grid_constant():
 
 def test_weekday_rule_is_declared_only_in_timeutil():
     """The engine-neutral weekday, pmod(epoch_day + 4, 7), is spelled
-    out only by timeutil.weekday."""
+    out only by timeutil.weekday; no module restates its
+    1970-01-01-is-Thursday anchor with the ISO offset + 3 either."""
     sites = []
     for rel, tree in _sources(skip=f"{PKG.name}/functions/timeutil.py"):
         for n in ast.walk(tree):
@@ -487,6 +610,6 @@ def test_weekday_rule_is_declared_only_in_timeutil():
                     and _lit(n.args[1]) == 7
                     and isinstance(n.args[0], ast.BinOp)
                     and isinstance(n.args[0].op, ast.Add)
-                    and _lit(n.args[0].right) == 4):
+                    and _lit(n.args[0].right) in (3, 4)):
                 sites.append(f"{rel}:{n.lineno}")
     assert not sites, _sites_message("weekday rules", sites)

@@ -9,7 +9,7 @@ def _bh(spark, rows, q_num=1, q_den=10):
 
     df = spark.createDataFrame(rows, "fam string, tid long, p_num long,"
                                      " p_den long")
-    out = bh_fdr(df, ["fam"], "p_num", "p_den", q_num, q_den,
+    out = bh_fdr(df, ["fam"], q_num, q_den,
                  order_cols=["tid"])
     return {r["tid"]: r.asDict() for r in out.collect()}
 

@@ -84,7 +84,7 @@ def _expected(spark, input_df, stage_dir):
     from the stage's input and the files in its directory."""
     n_in = {
         r["part_key"]: r["count"]
-        for r in with_part_key(input_df, "conv_id", N_PARTS)
+        for r in with_part_key(input_df, N_PARTS)
         .groupBy("part_key").count().collect()
     }
     hashed = {
@@ -127,12 +127,12 @@ def test_part_with_no_output_rows_is_recorded_done(
     spark, tiny_transcripts, tmp_path
 ):
     root = str(tmp_path / "wh")
-    keyed = with_part_key(tiny_transcripts, "conv_id", N_PARTS)
+    keyed = with_part_key(tiny_transcripts, N_PARTS)
     dropped = keyed.agg(F.min("part_key")).first()[0]
 
     def fn(df):
         # every input row of one part maps to no output row
-        return (with_part_key(df, "conv_id", N_PARTS)
+        return (with_part_key(df, N_PARTS)
                 .where(F.col("part_key") != dropped).drop("part_key"))
 
     def call():

@@ -346,7 +346,7 @@ def test_bh_adjust_agrees_with_bh_fdr(spark):
     rat = spark.createDataFrame(
         [("a", i, p, 1000) for i, p in enumerate(ps)],
         "fam string, tid long, p_num long, p_den long")
-    rej = {r.tid for r in bh_fdr(rat, ["fam"], "p_num", "p_den",
+    rej = {r.tid for r in bh_fdr(rat, ["fam"],
                                  1, 4, order_cols=["tid"]).collect()
            if r.rejected}
     dbl = spark.createDataFrame(

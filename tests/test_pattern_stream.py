@@ -49,7 +49,7 @@ def test_batch_pattern_hand_case(spark):
     df = spark.createDataFrame(_rows(), SCHEMA)
     got = sorted(
         pattern_matches(
-            df, STEPS, keys=["key"], type_col="event_type",
+            df, STEPS, keys=["key"],
             tie_col="turn_idx", within_seconds=3600,
         ).collect(),
         key=lambda r: r.start_ts,
@@ -81,7 +81,7 @@ def test_stream_pattern_bit_equal_across_midpattern_split(spark, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     run_available_now(
         stream_pattern(
-            stream, STEPS, key_col="key", tie_col="turn_idx",
+            stream, STEPS,
             within_seconds=3600,
         ),
         out, ckpt,
@@ -94,7 +94,7 @@ def test_stream_pattern_bit_equal_across_midpattern_split(spark, tmp_path):
         map(
             tuple,
             pattern_matches(
-                df, STEPS, keys=["key"], type_col="event_type",
+                df, STEPS, keys=["key"],
                 tie_col="turn_idx", within_seconds=3600,
             ).select("key", "start_ts", "end_ts", "duration_s").collect(),
         ),

@@ -20,8 +20,8 @@ T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 def test_split_is_deterministic_and_partitions(spark):
     df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    s1 = {r.doc_id: r.split for r in assign_split(df, "doc_id").collect()}
-    s2 = {r.doc_id: r.split for r in assign_split(df, "doc_id").collect()}
+    s1 = {r.doc_id: r.split for r in assign_split(df).collect()}
+    s2 = {r.doc_id: r.split for r in assign_split(df).collect()}
     assert s1 == s2                      # pure function of the id
     counts = {"train": 0, "val": 0, "test": 0}
     for v in s1.values():
@@ -38,8 +38,8 @@ def test_sample_is_subset_and_stable_under_union(spark):
     the property RNG sampling cannot give."""
     small = spark.range(0, 500).withColumnRenamed("id", "doc_id")
     big = spark.range(0, 5000).withColumnRenamed("id", "doc_id")
-    s_small = {r.doc_id for r in sample_fraction(small, 0.1, "doc_id").collect()}
-    s_big = {r.doc_id for r in sample_fraction(big, 0.1, "doc_id").collect()}
+    s_small = {r.doc_id for r in sample_fraction(small, 0.1).collect()}
+    s_big = {r.doc_id for r in sample_fraction(big, 0.1).collect()}
     assert s_small == {d for d in s_big if d < 500}
     assert 0.05 <= len(s_big) / 5000 <= 0.15
 
@@ -142,7 +142,7 @@ def test_interval_join_matches_naive_range_join(spark):
     got = sorted(
         (r.event_id, r.tag)
         for r in interval_join_binned(
-            events, spans, ["conv_id"], "ts", "start_ts", "end_ts", "hour"
+            events, spans, ["conv_id"], "hour"
         ).collect()
     )
     naive = sorted(

@@ -69,7 +69,7 @@ def test_hdr_merge_equals_sketch_of_union(spark):
     rows = [("a" if i % 2 else "b", (i % 997) * 0.37 + 0.01)
             for i in range(4000)]
     df = spark.createDataFrame(rows, "g string, value double")
-    parts = hdr_sketch(df, ["g"], "value")
+    parts = hdr_sketch(df, ["g"])
     merged = {
         r["idx"]: r["cnt"]
         for r in hdr_merge(
@@ -79,7 +79,7 @@ def test_hdr_merge_equals_sketch_of_union(spark):
     direct = {
         r["idx"]: r["cnt"]
         for r in hdr_sketch(
-            df.withColumn("k", F.lit(1)), ["k"], "value"
+            df.withColumn("k", F.lit(1)), ["k"]
         ).collect()
     }
     assert merged == direct
@@ -102,7 +102,7 @@ def test_hdr_quantile_relative_error_bound(spark):
     )
     got = {
         r["q_name"]: r["est"]
-        for r in hdr_quantiles(hdr_sketch(df, ["g"], "value"),
+        for r in hdr_quantiles(hdr_sketch(df, ["g"]),
                                ["g"]).collect()
     }
     cents = np.sort(np.maximum(np.round(np.array(vals) * 100), 1))
@@ -128,7 +128,7 @@ def test_hdr_small_values_exact(spark):
     )
     got = {
         r["q_name"]: r["est"]
-        for r in hdr_quantiles(hdr_sketch(df, ["g"], "value"),
+        for r in hdr_quantiles(hdr_sketch(df, ["g"]),
                                ["g"]).collect()
     }
     assert got["p50"] == 0.32  # rank ceil(63/2)=32 -> 32 cents

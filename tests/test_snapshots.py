@@ -387,7 +387,7 @@ def test_merge_cdc_nets_log_and_deletes_in_one_commit(spark, tmp_path):
         "k long, v long, op string, ts timestamp, seq long",
     )
     stats = snapshot_merge_cdc(
-        log, t, key_cols=["k"], op_col="op", ts_col="ts", tie_col="seq",
+        log, t, key_cols=["k"], tie_col="seq",
     )
     # changelog rows carry (k, v, op, ts, seq); op is dropped on apply
     after = {r["k"]: r["v"] for r in snapshot_read(spark, t).collect()}

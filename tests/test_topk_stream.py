@@ -57,7 +57,7 @@ def test_stream_mg_equals_batch_across_split(spark, tmp_path):
     )
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     run_available_now(
-        stream_heavy_hitters(stream, k=4, key_col="key"), out, ckpt
+        stream_heavy_hitters(stream, k=4), out, ckpt
     )
 
     snaps = spark.read.parquet(out)

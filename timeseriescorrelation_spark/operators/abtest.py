@@ -55,15 +55,13 @@ def ab_assign(units: DataFrame, id_col: str = "user_id",
 
 
 def ab_readout(events: DataFrame, target_event: str,
-               id_col: str = "user_id",
-               event_col: str = "event_type",
                treat_frac: float = 0.5) -> DataFrame:
     """One-row experiment readout (see module docstring).  Exposure =
     any event; conversion = ≥1 ``target_event``."""
     per_unit = (
         events.select(
-            F.col(id_col).alias("unit"),
-            (F.col(event_col) == F.lit(target_event)).cast("int")
+            F.col("user_id").alias("unit"),
+            (F.col("event_type") == F.lit(target_event)).cast("int")
             .alias("hit"),
         )
         .groupBy("unit")
@@ -127,8 +125,6 @@ def did_readout(series: DataFrame, treat_frac: float = 0.5,
     conditional-sum aggregate collapsing to a single row — no pivot
     join, no window.
     """
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
     bounds = series.agg(
         F.date_trunc("day", F.min("ts")).alias("d0"),
         F.date_trunc("day", F.max("ts")).alias("d1"),
@@ -207,11 +203,8 @@ def did_readout(series: DataFrame, treat_frac: float = 0.5,
 
 
 def rate_decomposition(events: DataFrame, target_event: str = "error",
-                       n_segments: int = 4,
-                       num: int = 1, den: int = 2,
-                       id_col: str = "user_id",
-                       type_col: str = "event_type",
-                       ts_col: str = "ts") -> DataFrame:
+                       n_segments: int = 4, num: int = 1,
+                       den: int = 2) -> DataFrame:
     """Kitagawa/Oaxaca rate decomposition — "the error rate moved:
     did the SEGMENTS get worse, or did the MIX shift toward worse
     segments?"  For period A (first num/den of the day span) vs
@@ -228,7 +221,7 @@ def rate_decomposition(events: DataFrame, target_event: str = "error",
 
     Segments here are md5-bucket unit cohorts (ab_assign's hash, mod
     n_segments — a deterministic placebo dimension; pass a real
-    segment column by pre-projecting it into id_col at call sites).
+    segment column by pre-projecting it into user_id at call sites).
     Every statistic is a fixed IEEE expression over six exact integer
     counts per row (no recursion, no order dependence), so the DuckDB
     oracle matches bit-for-bit; display columns round 6dp.  Segments
@@ -238,14 +231,9 @@ def rate_decomposition(events: DataFrame, target_event: str = "error",
     Scale shape: one hash-agg over raw rows to |segments|·2 cells,
     one self-join-free pivot via conditional sums — metadata-sized
     output regardless of input."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-    from timeseriescorrelation_spark.operators.sampling import (
-        hash_bucket,
-    )
-
     bounds = events.agg(
-        F.date_trunc("day", F.min(ts_col)).alias("d0"),
-        F.date_trunc("day", F.max(ts_col)).alias("d1"),
+        F.date_trunc("day", F.min("ts")).alias("d0"),
+        F.date_trunc("day", F.max("ts")).alias("d1"),
     ).select(
         F.to_timestamp(
             F.date_add(
@@ -260,11 +248,11 @@ def rate_decomposition(events: DataFrame, target_event: str = "error",
     cells = (
         events.crossJoin(F.broadcast(bounds))
         .select(
-            F.pmod(hash_bucket(id_col), F.lit(int(n_segments)))
+            F.pmod(hash_bucket("user_id"), F.lit(int(n_segments)))
             .cast("long").alias("segment"),
-            (epoch_us(F.col(ts_col))
+            (epoch_us(F.col("ts"))
              < epoch_us(F.col("split_ts"))).alias("is_a"),
-            (F.col(type_col) == target_event).cast("long").alias("e"),
+            (F.col("event_type") == target_event).cast("long").alias("e"),
         )
         .groupBy("segment")
         .agg(
@@ -298,8 +286,7 @@ def rate_decomposition(events: DataFrame, target_event: str = "error",
     )
 
 
-def isotonic_calibration(scored: DataFrame, score_col: str = "score",
-                         outcome_col: str = "outcome",
+def isotonic_calibration(scored: DataFrame,
                          score_decimals: int = 3) -> DataFrame:
     """(bin_idx, score, n, successes, rate_raw, rate_iso): isotonic
     (monotone non-decreasing) calibration of a probabilistic score
@@ -325,10 +312,10 @@ def isotonic_calibration(scored: DataFrame, score_col: str = "score",
     it to new traffic is a broadcast range join on score."""
     q = 10 ** int(score_decimals)
     g = scored.groupBy(
-        (F.round(F.col(score_col).cast("double") * q) / q).alias("score")
+        (F.round(F.col("score").cast("double") * q) / q).alias("score")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(outcome_col).cast("long")).alias("successes"),
+        F.sum(F.col("outcome").cast("long")).alias("successes"),
     )
     rows = sorted(
         ((r["score"], int(r["n"]), int(r["successes"]))
@@ -363,7 +350,6 @@ def isotonic_calibration(scored: DataFrame, score_col: str = "score",
 
 
 def odds_ratio_weekend(events: DataFrame, key: str = "event_type",
-                       ts_col: str = "ts", value_col: str = "value",
                        high_cents: int = 10_000) -> DataFrame:
     """(metric, a, b, c, d, odds_ratio, ci_lo, ci_hi): weekend-vs-
     weekday odds of a HIGH-value observation per metric (the 2×2
@@ -377,9 +363,9 @@ def odds_ratio_weekend(events: DataFrame, key: str = "event_type",
 
     Weekend is `timeutil.weekday` ∈ {0, 6}, never an engine's
     dayofweek().  One hash agg; four exact integer cells per metric."""
-    wkd = weekday(F.date_trunc("day", F.col(ts_col))).isin(0, 6)
+    wkd = weekday(F.date_trunc("day", F.col("ts"))).isin(0, 6)
     hi = (
-        snap(F.col(value_col), VALUE_DECIMALS)
+        snap(F.col("value"), VALUE_DECIMALS)
         > F.lit(int(high_cents))
     )
     agg = events.groupBy(F.col(key).alias("metric")).agg(
@@ -485,9 +471,7 @@ def sprt_readout(events: DataFrame, target_event: str = "purchase",
 
 
 def ipw_strata(events: DataFrame, treat_event: str = "click",
-               target_event: str = "purchase",
-               id_col: str = "user_id",
-               event_col: str = "event_type") -> DataFrame:
+               target_event: str = "purchase") -> DataFrame:
     """Stratified inverse-propensity readout for an OBSERVATIONAL
     contrast — the causal-inference counterpart of ab_readout when
     nobody randomized: users self-select into "treatment" (≥1
@@ -516,10 +500,10 @@ def ipw_strata(events: DataFrame, treat_event: str = "click",
     hash-agg of ≤|strata| rows.  No joins."""
     per_unit = (
         events.select(
-            F.col(id_col).alias("unit"),
-            (F.col(event_col) == F.lit(treat_event)).cast("int")
+            F.col("user_id").alias("unit"),
+            (F.col("event_type") == F.lit(treat_event)).cast("int")
             .alias("t"),
-            (F.col(event_col) == F.lit(target_event)).cast("int")
+            (F.col("event_type") == F.lit(target_event)).cast("int")
             .alias("y"),
         )
         .groupBy("unit")

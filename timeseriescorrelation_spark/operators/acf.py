@@ -50,8 +50,8 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us
 HOUR_US = 3_600_000_000
 
 
-def hourly_counts_dense(series: DataFrame, keys: list[str] | None = None,
-                        ts_col: str = "ts") -> DataFrame:
+def hourly_counts_dense(series: DataFrame,
+                        keys: list[str] | None = None) -> DataFrame:
     """(keys..., h_us, y): events-per-hour with missing hours as y=0.
 
     The grid spans each key's own [min hour, max hour] — generated
@@ -61,7 +61,7 @@ def hourly_counts_dense(series: DataFrame, keys: list[str] | None = None,
     h = (
         series.groupBy(
             *keys,
-            (F.floor(epoch_us(F.col(ts_col)) / HOUR_US) * HOUR_US)
+            (F.floor(epoch_us(F.col("ts")) / HOUR_US) * HOUR_US)
             .alias("h_us"),
         )
         .agg(F.count(F.lit(1)).alias("y"))
@@ -82,8 +82,7 @@ def hourly_counts_dense(series: DataFrame, keys: list[str] | None = None,
 
 
 def acf_spectrum(series: DataFrame, max_lag: int = 24,
-                 keys: list[str] | None = None, ts_col: str = "ts",
-                 min_n: int = 8) -> DataFrame:
+                 keys: list[str] | None = None, min_n: int = 8) -> DataFrame:
     """(keys..., lag_h, n_pairs, acf): Pearson of (y_t, y_{t+L}) on the
     dense hourly-count series, for L = 1..max_lag.
 
@@ -92,7 +91,7 @@ def acf_spectrum(series: DataFrame, max_lag: int = 24,
     NULL when fewer than min_n pairs or either side has zero variance.
     """
     keys = keys or ["metric"]
-    g = hourly_counts_dense(series, keys, ts_col)
+    g = hourly_counts_dense(series, keys)
     lags = F.explode(
         F.sequence(F.lit(1), F.lit(int(max_lag)))
     ).alias("lag_h")
@@ -138,15 +137,15 @@ def acf_spectrum(series: DataFrame, max_lag: int = 24,
     )
 
 
-def dominant_period(series: DataFrame, max_lag: int = 24,
-                    min_lag: int = 2, keys: list[str] | None = None,
-                    ts_col: str = "ts", min_n: int = 8) -> DataFrame:
+def dominant_period(series: DataFrame, max_lag: int = 24, min_lag: int = 2,
+                    keys: list[str] | None = None,
+                    min_n: int = 8) -> DataFrame:
     """(keys..., period_h, acf): the lag in [min_lag, max_lag] with the
     highest ACF per key — smallest lag wins ties, so the pick is
     deterministic on the 6-dp-rounded ρ both engines share.  min_lag
     defaults to 2: lag-1 is serial smoothness, not a season."""
     keys = keys or ["metric"]
-    spec = acf_spectrum(series, max_lag, keys, ts_col, min_n)
+    spec = acf_spectrum(series, max_lag, keys, min_n)
     w = Window.partitionBy(*keys).orderBy(
         F.desc("acf"), F.asc("lag_h")
     )
@@ -165,9 +164,7 @@ def dominant_period(series: DataFrame, max_lag: int = 24,
 
 
 def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
-                            keys: list[str] | None = None,
-                            ts_col: str = "ts",
-                            value_col: str = "value") -> DataFrame:
+                            keys: list[str] | None = None) -> DataFrame:
     """(keys..., n_eval, sae_cents, mae_u, smape_u): backtest of the
     seasonal-naive forecast ŷ(t) = y(t − period) on hourly cent
     totals — the baseline every real forecaster must beat, and the
@@ -192,10 +189,10 @@ def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
     per_us = int(period_hours) * HOUR_US
     h = series.groupBy(
         *keys,
-        (F.floor(epoch_us(F.col(ts_col)) / HOUR_US) * HOUR_US)
+        (F.floor(epoch_us(F.col("ts")) / HOUR_US) * HOUR_US)
         .alias("h_us"),
     ).agg(
-        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("a")
+        F.sum(snap(F.col("value"), VALUE_DECIMALS)).alias("a")
     )
     f = h.select(
         *keys,
@@ -227,9 +224,8 @@ def seasonal_naive_backtest(series: DataFrame, period_hours: int = 24,
     )
 
 
-def seasonal_strength(series: DataFrame, keys: list[str] | None = None,
-                      ts_col: str = "ts",
-                      value_col: str = "value") -> DataFrame:
+def seasonal_strength(series: DataFrame,
+                      keys: list[str] | None = None) -> DataFrame:
     """(keys..., n, r2_u): how much of a series' variance the
     (day-of-week × hour-of-day) profile explains — one-way-ANOVA R²
     in integer micro-units, the strength score that says whether
@@ -249,11 +245,11 @@ def seasonal_strength(series: DataFrame, keys: list[str] | None = None,
     Scale notes (100 TB): raw scan collapses map-side to ≤168 cells
     per key; two hash-aggs on (key, cell) then (key).  No windows."""
     keys = keys or ["metric"]
-    c = snap(F.col(value_col), VALUE_DECIMALS)
+    c = snap(F.col("value"), VALUE_DECIMALS)
     pt = series.select(
         *keys,
-        F.dayofweek(F.col(ts_col)).alias("dow"),
-        F.hour(F.col(ts_col)).alias("hod"),
+        F.dayofweek(F.col("ts")).alias("dow"),
+        F.hour(F.col("ts")).alias("hod"),
         c.alias("c"),
     )
     g = pt.groupBy(*keys, "dow", "hod").agg(
@@ -288,8 +284,7 @@ def seasonal_strength(series: DataFrame, keys: list[str] | None = None,
 
 def periodogram(series: DataFrame,
                 periods: tuple[int, ...] = (6, 8, 12, 24, 48, 84, 168),
-                keys: list[str] | None = None, ts_col: str = "ts",
-                ) -> DataFrame:
+                keys: list[str] | None = None) -> DataFrame:
     """Sinusoid amplitude at candidate periods — the frequency-domain
     companion to acf_spectrum (ACF answers "does it repeat"; the
     periodogram answers "how BIG is the P-hour cycle, in events/hour").
@@ -317,7 +312,7 @@ def periodogram(series: DataFrame,
     import math
 
     keys = keys or ["metric"]
-    d = hourly_counts_dense(series, keys, ts_col)
+    d = hourly_counts_dense(series, keys)
     w = Window.partitionBy(*keys)
     d2 = d.select(
         *keys, "y",
@@ -364,8 +359,7 @@ HURST_COEF = (-0.432808512266689, -0.14426950408889622,
               0.14426950408889638, 0.43280851226668915)
 
 
-def hurst_rs(series: DataFrame, keys: list[str] | None = None,
-             ts_col: str = "ts") -> DataFrame:
+def hurst_rs(series: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Hurst exponent per key by rescaled-range (R/S) analysis over
     the dense hourly count series — long-range dependence in one
     number (H ≈ 0.5 memoryless, > 0.5 persistent/trending, < 0.5
@@ -388,7 +382,7 @@ def hurst_rs(series: DataFrame, keys: list[str] | None = None,
     spanning < 256 h emit NULL H (fewer than two 128-blocks is not a
     regression)."""
     keys = keys or ["metric"]
-    d = hourly_counts_dense(series, keys, ts_col)
+    d = hourly_counts_dense(series, keys)
     wk = Window.partitionBy(*keys)
     d2 = d.select(
         *keys, "y",
@@ -462,8 +456,7 @@ def hurst_rs(series: DataFrame, keys: list[str] | None = None,
 
 
 def ljung_box(series: DataFrame, max_lag: int = 24,
-              keys: list[str] | None = None, ts_col: str = "ts",
-              min_n: int = 8) -> DataFrame:
+              keys: list[str] | None = None, min_n: int = 8) -> DataFrame:
     """(keys..., n_hours, k_used, q_lb): Ljung-Box portmanteau
     statistic per key over the dense hourly-count ACF — "is there ANY
     serial structure in the first max_lag lags?", the one-number
@@ -485,7 +478,7 @@ def ljung_box(series: DataFrame, max_lag: int = 24,
     the final reduction is |keys| rows.
     """
     keys = keys or ["metric"]
-    a = acf_spectrum(series, max_lag, keys, ts_col, min_n)
+    a = acf_spectrum(series, max_lag, keys, min_n)
     term_u = snap(F.col("acf") * F.col("acf") / F.col("n_pairs"), 12)
     g = a.select(
         *keys,
@@ -509,7 +502,7 @@ def ljung_box(series: DataFrame, max_lag: int = 24,
 
 
 def pacf3(series: DataFrame, keys: list[str] | None = None,
-          ts_col: str = "ts", min_n: int = 8) -> DataFrame:
+          min_n: int = 8) -> DataFrame:
     """(keys..., n_hours, phi11, phi22, phi33): partial autocorrelation
     at lags 1-3 per key via the Durbin-Levinson recursion over the
     dense hourly-count ACF — the classic AR-order identification
@@ -526,7 +519,7 @@ def pacf3(series: DataFrame, keys: list[str] | None = None,
     |keys| rows.
     """
     keys = keys or ["metric"]
-    a = acf_spectrum(series, 3, keys, ts_col, min_n)
+    a = acf_spectrum(series, 3, keys, min_n)
     p = a.groupBy(*keys).agg(
         F.max(F.col("n_pairs") + F.col("lag_h")).cast("long")
         .alias("n_hours"),
@@ -856,8 +849,7 @@ def hod_quantile_bands(series: DataFrame,
 
 def lomb_scargle(series: DataFrame,
                  periods: tuple[int, ...] = (6, 8, 12, 24, 48, 84, 168),
-                 keys: list[str] | None = None, ts_col: str = "ts",
-                 value_col: str = "value", min_n: int = 16) -> DataFrame:
+                 keys: list[str] | None = None, min_n: int = 16) -> DataFrame:
     """(keys..., period_h, n, power): Lomb–Scargle normalized
     periodogram of the RAW irregularly-timestamped value series —
     `periodogram` needs the dense hourly grid (and a gap-fill policy
@@ -906,8 +898,8 @@ def lomb_scargle(series: DataFrame,
     keys = keys or ["metric"]
     pt = series.select(
         *keys,
-        epoch_us(F.col(ts_col)).alias("t_us"),
-        snap(F.col(value_col), VALUE_DECIMALS).alias("c"),
+        epoch_us(F.col("ts")).alias("t_us"),
+        snap(F.col("value"), VALUE_DECIMALS).alias("c"),
     )
     stats = pt.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
@@ -966,7 +958,7 @@ def lomb_scargle(series: DataFrame,
 
 def cross_coherence(series: DataFrame,
                     periods: tuple[int, ...] = (6, 8, 12, 24),
-                    keys: list[str] | None = None, ts_col: str = "ts",
+                    keys: list[str] | None = None,
                     min_days: int = 5) -> DataFrame:
     """(ka, kb, period_h, n_days, coherence): magnitude-squared
     coherence between every key pair at candidate periods — "do these
@@ -999,7 +991,7 @@ def cross_coherence(series: DataFrame,
     import math
 
     assert all(24 % p == 0 for p in periods), "periods must divide 24"
-    g = hourly_counts_dense(series, keys, ts_col)
+    g = hourly_counts_dense(series, keys)
     day = g.select(
         *keys,
         F.timestamp_micros(
@@ -1073,7 +1065,6 @@ def cross_coherence(series: DataFrame,
 def dfa_fluctuation(series: DataFrame,
                     scales: tuple[int, ...] = (8, 16, 32, 64),
                     keys: list[str] | None = None,
-                    ts_col: str = "ts",
                     min_blocks: int = 4) -> DataFrame:
     """(keys..., scale_h, n_blocks, fluct): detrended fluctuation
     analysis of the hourly count series — the log-log slope of
@@ -1106,7 +1097,7 @@ def dfa_fluctuation(series: DataFrame,
     then (key, scale) — geometric block shrink, no joins, no raw-data
     windows."""
     keys = keys or ["metric"]
-    g = hourly_counts_dense(series, keys, ts_col)
+    g = hourly_counts_dense(series, keys)
     w = Window.partitionBy(*keys)
     wcum = (
         Window.partitionBy(*keys)
@@ -1178,8 +1169,7 @@ def dfa_fluctuation(series: DataFrame,
 
 
 def ess_hourly(series: DataFrame, max_lag: int = 24,
-               keys: list[str] | None = None,
-               ts_col: str = "ts", min_n: int = 8) -> DataFrame:
+               keys: list[str] | None = None, min_n: int = 8) -> DataFrame:
     """(keys..., n_hours, n_lags_used, tau, ess): integrated
     autocorrelation time and effective sample size of each key's dense
     hourly count series — the "how many INDEPENDENT hours is this
@@ -1203,7 +1193,7 @@ def ess_hourly(series: DataFrame, max_lag: int = 24,
     Scale: acf_spectrum's shape (grid + one lag equi-join + hash-agg)
     then a |keys|-row aggregate."""
     keys = keys or ["metric"]
-    a = acf_spectrum(series, max_lag, keys, ts_col, min_n)
+    a = acf_spectrum(series, max_lag, keys, min_n)
     t = a.groupBy(*keys).agg(
         F.max(F.col("n_pairs") + F.col("lag_h")).alias("n_hours"),
         F.sum(snap("acf", 6)).alias("su"),

@@ -27,7 +27,6 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 
 def trailing_distinct(events: DataFrame, keys: list[str] | None = None,
-                      actor_col: str = "conv_id", ts_col: str = "ts",
                       window_hours: int = 24) -> DataFrame:
     """Exact count of distinct actors active in the trailing
     `window_hours` hours, reported for every hour a window covers —
@@ -47,9 +46,9 @@ def trailing_distinct(events: DataFrame, keys: list[str] | None = None,
     phantom future buckets; the 1-row max side is broadcast.
     """
     keys = keys or ["metric"]
-    hour = F.date_trunc("hour", F.col(ts_col))
+    hour = F.date_trunc("hour", F.col("ts"))
     pairs = (
-        events.select(*keys, F.col(actor_col).alias("_actor"),
+        events.select(*keys, F.col("conv_id").alias("_actor"),
                       hour.alias("_h"))
         .distinct()
     )
@@ -77,9 +76,8 @@ def trailing_distinct(events: DataFrame, keys: list[str] | None = None,
     )
 
 
-def burstiness_daily(series: DataFrame, keys: list[str] | None = None,
-                     ts_col: str = "ts", ord_col: str = "turn_idx",
-                     series_col: str = "conv_id") -> DataFrame:
+def burstiness_daily(series: DataFrame,
+                     keys: list[str] | None = None) -> DataFrame:
     """Inter-arrival burstiness per (keys..., day): Goh–Barabási
     B = (σ−μ)/(σ+μ) over within-series gap lengths, plus the mean gap
     and coefficient of variation.  B → −1 for metronome streams,
@@ -100,14 +98,14 @@ def burstiness_daily(series: DataFrame, keys: list[str] | None = None,
     map-side; decimal(38,0) holds Σg² for ~1e16 gaps per group.
     """
     keys = keys or ["metric"]
-    w = Window.partitionBy(series_col, *keys).orderBy(
-        epoch_us(F.col(ts_col)), ord_col
+    w = Window.partitionBy("conv_id", *keys).orderBy(
+        epoch_us(F.col("ts")), "turn_idx"
     )
-    us = epoch_us(F.col(ts_col))
+    us = epoch_us(F.col("ts"))
     g = (
         series.select(
-            *keys, series_col,
-            F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
+            *keys, "conv_id",
+            F.date_trunc("day", F.col("ts")).alias("day_ts"),
             (us - F.lag(us).over(w)).alias("gap_us"),
         )
         .where(F.col("gap_us").isNotNull())
@@ -208,8 +206,6 @@ def sax_motifs(sax: DataFrame, keys: list[str] | None = None,
 
 
 def decayed_leaderboard(series: DataFrame, keys: list[str] | None = None,
-                        series_col: str = "conv_id", ts_col: str = "ts",
-                        value_col: str = "value",
                         half_life_s: float = 86400.0,
                         top_k: int = 10) -> DataFrame:
     """Exponentially time-decayed top-k per key: each event contributes
@@ -234,16 +230,16 @@ def decayed_leaderboard(series: DataFrame, keys: list[str] | None = None,
     WindowGroupLimit so only k rows per key survive the shuffle.
     """
     keys = keys or ["metric"]
-    us = epoch_us(F.col(ts_col))
+    us = epoch_us(F.col("ts"))
     now = series.agg(F.max(us).alias("_now_us"))
-    c = snap(F.col(value_col), VALUE_DECIMALS)
+    c = snap(F.col("value"), VALUE_DECIMALS)
     expo = (us - F.col("_now_us")).cast("double") / F.lit(
         float(half_life_s) * 1e6
     )
     term = snap(c.cast("double") * F.pow(F.lit(2.0), expo), 2)
     per = (
         series.join(F.broadcast(now))
-        .select(*keys, F.col(series_col).alias("series"),
+        .select(*keys, F.col("conv_id").alias("series"),
                 term.alias("t"))
         .groupBy(*keys, "series")
         .agg(F.sum("t").alias("score_cc"))
@@ -265,9 +261,7 @@ def decayed_leaderboard(series: DataFrame, keys: list[str] | None = None,
 
 
 def conformal_pvalue(series: DataFrame, keys: list[str] | None = None,
-                     ts_col: str = "ts", value_col: str = "value",
-                     window_days: int = 28,
-                     alpha: float = 0.05,
+                     window_days: int = 28, alpha: float = 0.05,
                      exact_cols: bool = False) -> DataFrame:
     """Conformal anomaly p-value per (keys..., day): the rank of
     today's daily mean among the trailing `window_days` daily means,
@@ -289,10 +283,10 @@ def conformal_pvalue(series: DataFrame, keys: list[str] | None = None,
     """
     keys = keys or ["metric"]
     daily = series.groupBy(
-        *keys, F.date_trunc("day", F.col(ts_col)).alias("day_ts")
+        *keys, F.date_trunc("day", F.col("ts")).alias("day_ts")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("sc"),
+        F.sum(snap(F.col("value"), VALUE_DECIMALS)).alias("sc"),
     )
     a = daily.select(*keys, "day_ts", F.col("n").alias("na"),
                      F.col("sc").alias("sa"))
@@ -342,10 +336,8 @@ def conformal_pvalue(series: DataFrame, keys: list[str] | None = None,
     )
 
 
-def bh_fdr(pvals: DataFrame, family_keys: list[str],
-           num_col: str = "p_num", den_col: str = "p_den",
-           q_num: int = 1, q_den: int = 10,
-           order_cols: list[str] | None = None) -> DataFrame:
+def bh_fdr(pvals: DataFrame, family_keys: list[str], q_num: int = 1,
+           q_den: int = 10, order_cols: list[str] | None = None) -> DataFrame:
     """Benjamini–Hochberg step-up over EXACT rational p-values, one
     test family per distinct `family_keys` tuple: with the family's m
     p-values sorted ascending, reject ranks 1..i* where
@@ -376,7 +368,7 @@ def bh_fdr(pvals: DataFrame, family_keys: list[str],
     order_cols = order_cols or []
     fam = Window.partitionBy(*family_keys)
     w = fam.orderBy(
-        (F.col(num_col).cast("double") / F.col(den_col)).asc(),
+        (F.col("p_num").cast("double") / F.col("p_den")).asc(),
         *[F.col(c).asc() for c in order_cols],
     )
     ranked = pvals.withColumn(
@@ -385,8 +377,8 @@ def bh_fdr(pvals: DataFrame, family_keys: list[str],
     passing = ranked.withColumn(
         "_pass_rank",
         F.when(
-            F.col(num_col) * F.lit(int(q_den)) * F.col("m")
-            <= F.col("rank_i") * F.lit(int(q_num)) * F.col(den_col),
+            F.col("p_num") * F.lit(int(q_den)) * F.col("m")
+            <= F.col("rank_i") * F.lit(int(q_num)) * F.col("p_den"),
             F.col("rank_i"),
         ),
     )
@@ -398,7 +390,6 @@ def bh_fdr(pvals: DataFrame, family_keys: list[str],
 
 
 def gini_concentration(series: DataFrame, keys: list[str] | None = None,
-                       actor_col: str = "conv_id",
                        trunc: str = "day") -> DataFrame:
     """Gini coefficient of per-actor activity within each (keys...,
     bucket) — "is this metric's volume spread across conversations or
@@ -426,7 +417,7 @@ def gini_concentration(series: DataFrame, keys: list[str] | None = None,
     per_actor = series.groupBy(
         *keys,
         F.date_trunc(trunc, "ts").alias("bucket_ts"),
-        F.col(actor_col).alias("_actor"),
+        F.col("conv_id").alias("_actor"),
     ).agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy(*keys, "bucket_ts").orderBy("c", "_actor")
     ranked = per_actor.select(
@@ -448,8 +439,7 @@ def gini_concentration(series: DataFrame, keys: list[str] | None = None,
     )
 
 
-def growth_accounting(events: DataFrame, actor_col: str = "conv_id",
-                      ts_col: str = "ts") -> DataFrame:
+def growth_accounting(events: DataFrame) -> DataFrame:
     """Daily growth accounting — the standard MAU-ledger decomposition:
     every active (actor, day) is exactly one of
 
@@ -472,8 +462,8 @@ def growth_accounting(events: DataFrame, actor_col: str = "conv_id",
     At 100 TB the only data-sized shuffles are the distinct and the
     per-actor window, both keyed on the actor."""
     ud = events.select(
-        F.col(actor_col).alias("_a"),
-        F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
+        F.col("conv_id").alias("_a"),
+        F.date_trunc("day", F.col("ts")).alias("day_ts"),
     ).distinct()
     w = Window.partitionBy("_a").orderBy("day_ts")
     flagged = ud.select(
@@ -508,8 +498,8 @@ def growth_accounting(events: DataFrame, actor_col: str = "conv_id",
     )
 
 
-def fano_factor_daily(series: DataFrame, keys: list[str] | None = None,
-                      ts_col: str = "ts") -> DataFrame:
+def fano_factor_daily(series: DataFrame,
+                      keys: list[str] | None = None) -> DataFrame:
     """Count overdispersion per (keys..., day): Fano factor
     Var(c)/Mean(c) of the 24 hourly event counts — the COUNT-side
     companion to burstiness_daily's inter-arrival view (Poisson
@@ -526,8 +516,8 @@ def fano_factor_daily(series: DataFrame, keys: list[str] | None = None,
     keys = keys or ["metric"]
     hc = series.groupBy(
         *keys,
-        F.date_trunc("day", ts_col).alias("day_ts"),
-        F.hour(ts_col).alias("_h"),
+        F.date_trunc("day", "ts").alias("day_ts"),
+        F.hour("ts").alias("_h"),
     ).agg(F.count(F.lit(1)).alias("c"))
     g = hc.groupBy(*keys, "day_ts").agg(
         F.sum("c").alias("s"),
@@ -547,8 +537,7 @@ def fano_factor_daily(series: DataFrame, keys: list[str] | None = None,
     )
 
 
-def rank_churn(events: DataFrame, cat_col: str = "event_type",
-               ts_col: str = "ts") -> DataFrame:
+def rank_churn(events: DataFrame) -> DataFrame:
     """(day_ts, cat, n_rows, rank_today, rank_prev, rank_delta):
     day-over-day leaderboard churn — each category's daily volume
     rank vs yesterday's (positive delta = climbed).  The "what moved"
@@ -563,11 +552,9 @@ def rank_churn(events: DataFrame, cat_col: str = "event_type",
     Scale: one hash-agg to |days|·|categories| rows, one rank window
     per day over that tiny table, one self-join shifted a day.
     """
-    from pyspark.sql import Window
-
     per = events.groupBy(
-        F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
-        F.col(cat_col).alias("cat"),
+        F.date_trunc("day", F.col("ts")).alias("day_ts"),
+        F.col("event_type").alias("cat"),
     ).agg(F.count(F.lit(1)).alias("n_rows"))
     wd = Window.partitionBy("day_ts").orderBy(
         F.col("n_rows").desc(), F.col("cat")
@@ -601,9 +588,7 @@ def rank_churn(events: DataFrame, cat_col: str = "event_type",
     )
 
 
-def theil_index_daily(events: DataFrame, group_col: str = "event_type",
-                      unit_col: str = "user_id",
-                      min_cells: int = 10) -> DataFrame:
+def theil_index_daily(events: DataFrame, min_cells: int = 10) -> DataFrame:
     """(day_ts, n_cells, n_groups, theil_total, theil_between,
     theil_within): Theil T inequality index of per-day activity value
     across (unit, group) cells, with the exact between/within
@@ -628,7 +613,8 @@ def theil_index_daily(events: DataFrame, group_col: str = "event_type",
     day-grid-sized."""
     m = 1_000_000
     cells = bucket_cents(
-        events, [F.col(group_col).alias("grp"), F.col(unit_col).alias("unit")],
+        events,
+        [F.col("event_type").alias("grp"), F.col("user_id").alias("unit")],
         "day",
     ).where(F.col("y") > 0)
     yd = F.col("y").cast("double")
@@ -670,8 +656,7 @@ def theil_index_daily(events: DataFrame, group_col: str = "event_type",
     )
 
 
-def hhi_hourly(events: DataFrame, cat_col: str = "event_type",
-               ts_col: str = "ts") -> DataFrame:
+def hhi_hourly(events: DataFrame) -> DataFrame:
     """(hour_ts, n, n_cats, hhi, hhi_norm): Herfindahl-Hirschman
     concentration of the category mix per hour — the antitrust
     statistic read as an ops one: hhi → 1 means one event type owns
@@ -684,8 +669,8 @@ def hhi_hourly(events: DataFrame, cat_col: str = "event_type",
     at fleet scale; squares overflow long).  One (cat, hour) hash
     agg then one hour agg — grid-sized, map-side combined."""
     per_cat = events.groupBy(
-        F.date_trunc("hour", F.col(ts_col)).alias("hour_ts"),
-        F.col(cat_col).alias("cat"),
+        F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
+        F.col("event_type").alias("cat"),
     ).agg(F.count(F.lit(1)).alias("n_c"))
     agg = per_cat.groupBy("hour_ts").agg(
         F.sum("n_c").alias("n"),
@@ -708,8 +693,7 @@ def hhi_hourly(events: DataFrame, cat_col: str = "event_type",
     )
 
 
-def atkinson_daily(events: DataFrame, unit_col: str = "user_id",
-                   ts_col: str = "ts", value_col: str = "value") -> DataFrame:
+def atkinson_daily(events: DataFrame) -> DataFrame:
     """(day_ts, n_units, total_cents, atkinson1): Atkinson inequality
     index at ε = 1 of per-day per-unit value sums — the
     WELFARE-weighted member of the inequality family (gini_daily:
@@ -727,11 +711,8 @@ def atkinson_daily(events: DataFrame, unit_col: str = "user_id",
 
     Scale: (unit, day) hash agg → day agg; grid-sized after the
     first pass."""
-    cells = events.groupBy(
-        F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
-        F.col(unit_col).alias("unit"),
-    ).agg(
-        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("y")
+    cells = bucket_cents(
+        events, [F.col("user_id").alias("unit")], "day"
     ).where(F.col("y") > 0)
     agg = cells.groupBy("day_ts").agg(
         F.count(F.lit(1)).alias("n_units"),
@@ -751,9 +732,7 @@ def atkinson_daily(events: DataFrame, unit_col: str = "user_id",
     )
 
 
-def lorenz_deciles(events: DataFrame, unit_col: str = "user_id",
-                   ts_col: str = "ts", value_col: str = "value",
-                   n_tiles: int = 10) -> DataFrame:
+def lorenz_deciles(events: DataFrame, n_tiles: int = 10) -> DataFrame:
     """(day_ts, decile, n_units, decile_cents, cum_share): the Lorenz
     curve behind gini_daily, made inspectable — per day, units sorted
     by their cent sum into `n_tiles` ntile buckets (deterministic
@@ -765,12 +744,7 @@ def lorenz_deciles(events: DataFrame, unit_col: str = "user_id",
     cents) rounded once.  The ntile window partitions by day; the
     cumulative window runs over n_tiles rows per day — both bounded,
     never a global sort."""
-    cells = events.groupBy(
-        F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
-        F.col(unit_col).alias("unit"),
-    ).agg(
-        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("y")
-    )
+    cells = bucket_cents(events, [F.col("user_id").alias("unit")], "day")
     w = Window.partitionBy("day_ts").orderBy("y", "unit")
     tiled = cells.select(
         "day_ts", "y", F.ntile(int(n_tiles)).over(w).alias("decile")
@@ -792,9 +766,7 @@ def lorenz_deciles(events: DataFrame, unit_col: str = "user_id",
     )
 
 
-def exit_rates(events: DataFrame, gap_minutes: int = 30,
-               cat_col: str = "event_type", user_col: str = "user_id",
-               ts_col: str = "ts", order_col: str = "event_id") -> DataFrame:
+def exit_rates(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """(event_type, n_contain, n_exit, n_bounce, exit_rate,
     bounce_share): per event type, the share of sessions CONTAINING
     the type that END on it (exit rate — "which step do journeys die
@@ -814,14 +786,12 @@ def exit_rates(events: DataFrame, gap_minutes: int = 30,
     Scale: two stacked windows over actor streams → per-session
     hash-agg → |types|-sized aggregates; distinct (session, type)
     bounds the contains table by events."""
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
     gap_us = int(gap_minutes) * 60 * 1_000_000
     base = events.select(
-        F.col(user_col).alias("u"),
-        F.col(cat_col).alias("t"),
-        epoch_us(F.col(ts_col)).alias("t_us"),
-        F.col(order_col).cast("long").alias("o"),
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("t"),
+        epoch_us(F.col("ts")).alias("t_us"),
+        F.col("event_id").cast("long").alias("o"),
     )
     w = Window.partitionBy("u").orderBy("t_us", "o")
     new_s = F.when(

@@ -253,9 +253,7 @@ def friedman_test(series: DataFrame, key: str = "metric") -> DataFrame:
     )
 
 
-def cohen_kappa(events: DataFrame, ts_col: str = "ts",
-                user_col: str = "user_id",
-                n_bands: int = 3) -> DataFrame:
+def cohen_kappa(events: DataFrame, n_bands: int = 3) -> DataFrame:
     """One row (n_subjects, n_agree, po, pe, kappa): Cohen's κ between
     two independent categorical labelers of the HOUR grid — rater A
     bands each hour by its event count, rater B by its distinct-user
@@ -275,10 +273,10 @@ def cohen_kappa(events: DataFrame, ts_col: str = "ts",
     Scale: hour grid = calendar-bounded; the window sorts |hours|
     rows per measure; the confusion matrix is ≤ n_bands² rows."""
     hours = events.groupBy(
-        F.date_trunc("hour", F.col(ts_col)).alias("hour_ts")
+        F.date_trunc("hour", F.col("ts")).alias("hour_ts")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct(F.col(user_col)).alias("n_users"),
+        F.countDistinct(F.col("user_id")).alias("n_users"),
     )
     long = hours.select(
         "hour_ts", F.lit("a").alias("meas"),

@@ -60,7 +60,11 @@ from timeseriescorrelation_spark.functions.exact import (
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_day, epoch_us
+from timeseriescorrelation_spark.functions.timeutil import (
+    epoch_day,
+    epoch_us,
+    weekday,
+)
 from timeseriescorrelation_spark.operators.rollup import packed_order_key
 
 KEYS = ["conv_id", "metric"]
@@ -748,7 +752,6 @@ def lagged_xcorr_pruned(series: DataFrame, theta: float = 0.6,
 
 
 def quantiles_bucketed(df: DataFrame, keys: list[str], qs: list[float],
-                       value_col: str = "value",
                        precision: float = 0.01) -> DataFrame:
     """Distributed EXACT interpolated quantiles with bounded memory —
     the 100 TB form of percentile() promised in latency_percentiles'
@@ -769,9 +772,9 @@ def quantiles_bucketed(df: DataFrame, keys: list[str], qs: list[float],
 
     floor() (not round()) does the quantization: round-half ties
     resolve differently across engines; floor is bit-identical."""
-    kcol = F.floor(F.col(value_col) / F.lit(float(precision)))
+    kcol = F.floor(F.col("value") / F.lit(float(precision)))
     counts = (
-        df.where(F.col(value_col).isNotNull())
+        df.where(F.col("value").isNotNull())
         .groupBy(*keys, kcol.alias("k"))
         .agg(F.count("*").alias("cnt"))
     )
@@ -1245,10 +1248,6 @@ def lttb_downsample(series: DataFrame, trunc: str = "hour",
     neighbors, one equi-join back to points, one per-bucket window
     for the argmax — shuffles keyed on (keys[, bucket]); no
     all-pairs, no driver collect."""
-    from timeseriescorrelation_spark.operators.rollup import (
-        packed_order_key,
-    )
-
     keys = keys or ["metric"]
 
     s = series.select(
@@ -1388,8 +1387,7 @@ def des_brown(series: DataFrame, alpha: float = 0.3,
 
 
 def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
-                       min_n: int = 8,
-                       ord_col: str = "turn_idx") -> DataFrame:
+                       min_n: int = 8) -> DataFrame:
     """(keys..., day_ts, n, s_stat, z): Mann-Kendall trend test per
     (key, day) — the NONPARAMETRIC companion to trend_daily's OLS
     slope: monotone-trend detection that no outlier can drag, the
@@ -1413,7 +1411,7 @@ def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
     outlier sensitivity — that trade is the point of having both.
 
     Time ties: observations sharing a microsecond are ordered by the
-    data's own ordinal (`ord_col`, default turn_idx) in the pair
+    data's own ordinal (turn_idx) in the pair
     condition, so they still contribute sign terms to S — a strict
     ti<tj condition would drop those pairs while Var(S) kept counting
     them in n, biasing z toward 0 on days with duplicate timestamps."""
@@ -1422,7 +1420,7 @@ def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
         *keys,
         F.date_trunc("day", F.col("ts")).alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
-        F.col(ord_col).cast("long").alias("o"),
+        F.col("turn_idx").cast("long").alias("o"),
         snap("value", VALUE_DECIMALS).alias("c"),
     )
     a = pt.select(*keys, "day_ts", F.col("t_us").alias("ti"),
@@ -1468,8 +1466,7 @@ def mann_kendall_daily(series: DataFrame, keys: list[str] | None = None,
 
 
 def theil_sen_daily(series: DataFrame, keys: list[str] | None = None,
-                    min_n: int = 8,
-                    ord_col: str = "turn_idx") -> DataFrame:
+                    min_n: int = 8) -> DataFrame:
     """(keys..., day_ts, n, n_pairs, sen_slope_per_hour): Sen's slope
     estimator per (key, day) — the median of all pairwise slopes
     (x_j−x_i)/(t_j−t_i), the robust companion to mann_kendall_daily
@@ -1871,9 +1868,7 @@ def holt_winters(series: DataFrame, period: int = 24,
     )
 
 
-def markov_entropy_daily(events: DataFrame, cat_col: str = "event_type",
-                         stream_col: str = "user_id",
-                         ord_col: str = "event_id") -> DataFrame:
+def markov_entropy_daily(events: DataFrame) -> DataFrame:
     """How predictable is the event stream — per day: the marginal
     entropy of the next-event distribution H(next), the first-order
     Markov conditional entropy H(next|prev), and their difference
@@ -1889,22 +1884,20 @@ def markov_entropy_daily(events: DataFrame, cat_col: str = "event_type",
     deterministic doubles).
 
     Transitions are (prev → next) lags within each stream's
-    (ts, ord_col)-ordered sequence, labeled by the NEXT event's day.
+    (ts, event_id)-ordered sequence, labeled by the NEXT event's day.
 
     Scale notes (100 TB): one per-stream window sort (the same
     partitioning every sequence operator here uses), then three
     hash-aggs over strictly shrinking keyspaces (day×type² → day×type
     → day); no joins, no global sort."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(stream_col).orderBy(
-        epoch_us(F.col("ts")), ord_col
+    w = Window.partitionBy("user_id").orderBy(
+        epoch_us(F.col("ts")), "event_id"
     )
     tr = (
         events.select(
-            stream_col, "ts", ord_col,
-            F.lag(cat_col).over(w).alias("prev"),
-            F.col(cat_col).alias("nxt"),
+            "user_id", "ts", "event_id",
+            F.lag("event_type").over(w).alias("prev"),
+            F.col("event_type").alias("nxt"),
         )
         .where(F.col("prev").isNotNull())
         .select(F.date_trunc("day", "ts").alias("day_ts"), "prev", "nxt")
@@ -2832,10 +2825,9 @@ def seasonal_mann_kendall(series: DataFrame, key: str = "metric",
     metric — calendar-bounded (the mann_kendall policy), never
     corpus-sized; one grid hash-agg in front."""
     d = bucket_cents(series, [key], "day")
-    days = epoch_day("day_ts")
     dd = d.select(
         key, F.col("day_ts"), F.col("y"),
-        F.pmod(days + F.lit(3), F.lit(7)).cast("int").alias("w"),
+        weekday("day_ts").cast("int").alias("w"),
     )
     a = dd.select(key, "w", F.col("day_ts").alias("di"),
                   F.col("y").alias("yi"))
@@ -2967,8 +2959,6 @@ def lad_trend_daily(series: DataFrame, key: str = "metric",
 
 
 def skyline_volume_errors(events: DataFrame,
-                          actor_col: str = "user_id",
-                          type_col: str = "event_type",
                           error_type: str = "error") -> DataFrame:
     """(actor, vol, errs, err_rate): the Pareto frontier (skyline) of
     actors over (volume ↑, error rate ↓) — "who does the most with
@@ -2990,9 +2980,9 @@ def skyline_volume_errors(events: DataFrame,
 
     Scale: one hash-agg to |actors|, one to |levels|, one broadcast
     theta-join probe."""
-    per = events.groupBy(F.col(actor_col).alias("actor")).agg(
+    per = events.groupBy(F.col("user_id").alias("actor")).agg(
         F.count(F.lit(1)).alias("vol"),
-        F.sum((F.col(type_col) == error_type).cast("long"))
+        F.sum((F.col("event_type") == error_type).cast("long"))
         .alias("errs"),
     )
     levels = per.groupBy("vol").agg(F.min("errs").alias("e_min"))
@@ -3268,9 +3258,7 @@ def huber_trend(series: DataFrame, key: str = "metric", n_iter: int = 2,
 
 
 def markov_absorption(events: DataFrame, target: str = "purchase",
-                      k_steps: int = 8, cat_col: str = "event_type",
-                      user_col: str = "user_id", ts_col: str = "ts",
-                      order_col: str = "event_id") -> DataFrame:
+                      k_steps: int = 8) -> DataFrame:
     """(state, n_out, p_absorb): probability that a user currently at
     `state` reaches `target` within `k_steps` transitions of the
     empirical event-type Markov chain — the funnel question asked of
@@ -3296,16 +3284,12 @@ def markov_absorption(events: DataFrame, target: str = "purchase",
     Scale: one lag window over the user stream → |states|² count
     hash-agg (metadata: event vocabularies are small); the K-level
     recursion runs on broadcast-sized tables."""
-    from pyspark.sql import Window
-
-    from timeseriescorrelation_spark.functions.timeutil import epoch_us
-
-    w = Window.partitionBy(user_col).orderBy(
-        epoch_us(F.col(ts_col)), order_col
+    w = Window.partitionBy("user_id").orderBy(
+        epoch_us(F.col("ts")), "event_id"
     )
     tr = events.select(
-        F.lag(cat_col).over(w).alias("src"),
-        F.col(cat_col).alias("dst"),
+        F.lag("event_type").over(w).alias("src"),
+        F.col("event_type").alias("dst"),
     ).where(F.col("src").isNotNull())
     t = tr.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("long").alias("c")

@@ -27,13 +27,12 @@ from pyspark.sql import functions as F
 EOW = "▁"  # end-of-word sentinel (SentencePiece-style marker)
 
 
-def word_freq(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def word_freq(docs: DataFrame) -> DataFrame:
     """(word, n): corpus word frequencies — the only corpus-wide pass."""
     from timeseriescorrelation_spark.operators.dedup import tokenize
 
     return (
-        tokenize(docs, text_col, id_col)
+        tokenize(docs)
         .select(F.explode("toks").alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
@@ -64,14 +63,13 @@ def _apply_merge(sym_col, left, right):
     )
 
 
-def bpe_learn(docs: DataFrame, n_merges: int = 10,
-              text_col: str = "text",
-              id_col: str = "doc_id") -> list[tuple[str, str, int]]:
+def bpe_learn(docs: DataFrame,
+              n_merges: int = 10) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns [(left, right, count)]
     in merge order.  Each iteration: pair counts (hash-agg over the
     vocab table) → argmax (count desc, pair asc) → native-fold merge
     application → localCheckpoint."""
-    wf = word_freq(docs, text_col, id_col)
+    wf = word_freq(docs)
     state = wf.select(
         "word", "n",
         F.concat(
@@ -110,14 +108,13 @@ def bpe_learn(docs: DataFrame, n_merges: int = 10,
     return merges
 
 
-def bpe_segment(docs: DataFrame, merges: list[tuple[str, str, int]],
-                text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def bpe_segment(docs: DataFrame,
+                merges: list[tuple[str, str, int]]) -> DataFrame:
     """(word, n, pieces): the vocab segmented under the learned merges
     (apply in learned order — BPE inference) plus corpus frequency.
     Joining back to docs is one explode away; the vocab-level output
     is what tokenizer training actually inspects."""
-    wf = word_freq(docs, text_col, id_col)
+    wf = word_freq(docs)
     syms = F.concat(F.split(F.col("word"), ""), F.array(F.lit(EOW)))
     out = wf.select("word", "n", syms.alias("pieces"))
     for left, right, _ in merges:

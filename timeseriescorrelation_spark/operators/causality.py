@@ -129,9 +129,8 @@ def engle_granger(series: DataFrame, key: str = "metric",
     )
 
 
-def transfer_entropy(series: DataFrame, key_col: str = "metric",
-                     ts_col: str = "ts", value_col: str = "value",
-                     n_bins: int = 4, min_triples: int = 24) -> DataFrame:
+def transfer_entropy(series: DataFrame, n_bins: int = 4,
+                     min_triples: int = 24) -> DataFrame:
     """(metric_x, metric_y, n_triples, te_u, te_nats): binned transfer
     entropy TE(X→Y) over the hourly grid — does knowing x at hour t−1
     reduce uncertainty about y at hour t beyond y's own past?
@@ -155,11 +154,11 @@ def transfer_entropy(series: DataFrame, key_col: str = "metric",
     everything sized by |metrics|²·|hours| aggregates.
     """
     hourly = series.groupBy(
-        F.col(key_col).alias("m"),
-        F.date_trunc("hour", F.col(ts_col)).alias("h"),
+        F.col("metric").alias("m"),
+        F.date_trunc("hour", F.col("ts")).alias("h"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("sc"),
+        F.sum(snap(F.col("value"), VALUE_DECIMALS)).alias("sc"),
     ).select(
         "m", "h",
         (F.col("sc").cast("double") / F.col("n").cast("double"))

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def build_vectors(aligned: DataFrame, id_col: str = "series_id") -> DataFrame:
+def build_vectors(aligned: DataFrame) -> DataFrame:
     """aligned (series_id, grid_ts, value) — one row per grid step, all
     series on the same grid → (series_id, m, vec) with vec z-normalized
     to unit norm.  Constant series (σ=0) are dropped (ρ undefined)."""
@@ -45,7 +45,7 @@ def build_vectors(aligned: DataFrame, id_col: str = "series_id") -> DataFrame:
         F.array_sort(F.collect_list(F.struct("grid_ts", "value"))),
         lambda s: s["value"],
     )
-    g = aligned.groupBy(id_col).agg(
+    g = aligned.groupBy("series_id").agg(
         vec.alias("raw"),
         F.avg("value").alias("mu"),
         F.stddev_pop("value").alias("sigma"),
@@ -55,7 +55,7 @@ def build_vectors(aligned: DataFrame, id_col: str = "series_id") -> DataFrame:
     return (
         g.where(F.col("sigma") > 0)
         .select(
-            id_col,
+            "series_id",
             "m",
             F.transform(
                 "raw", lambda v: (v - F.col("mu")) / denom
@@ -64,7 +64,7 @@ def build_vectors(aligned: DataFrame, id_col: str = "series_id") -> DataFrame:
     )
 
 
-def dft_sketch(vectors: DataFrame, k: int = 4, id_col: str = "series_id") -> DataFrame:
+def dft_sketch(vectors: DataFrame, k: int = 4) -> DataFrame:
     """(series_id, m, vec) → (series_id, vec, sketch[2k]) — scaled DFT
     prefix, one Arrow-vectorized numpy rfft per batch."""
 
@@ -79,7 +79,8 @@ def dft_sketch(vectors: DataFrame, k: int = 4, id_col: str = "series_id") -> Dat
         out[:, 1::2] = coef.imag
         return pd.Series(list(out))
 
-    return vectors.select(id_col, "m", "vec", _sketch("vec").alias("sketch"))
+    return vectors.select("series_id", "m", "vec",
+                          _sketch("vec").alias("sketch"))
 
 
 def _sq_dist(a, b):
@@ -142,7 +143,6 @@ BROADCAST_MAX_ELEMENTS = 16_000_000
 
 
 def exact_corr(cand: DataFrame, vectors: DataFrame, theta: float,
-               id_col: str = "series_id",
                broadcast_vectors: bool | None = None,
                n_elements: int | None = None) -> DataFrame:
     """Candidates → exact ρ via unit-vector dot product (A4/J2).
@@ -162,7 +162,7 @@ def exact_corr(cand: DataFrame, vectors: DataFrame, theta: float,
             m_width = int(first["_w"]) if first is not None else 0
             n_elements = vectors.count() * max(m_width, 1)
         broadcast_vectors = n_elements <= BROADCAST_MAX_ELEMENTS
-    v = vectors.select(F.col(id_col).alias("vid"), "vec")
+    v = vectors.select(F.col("series_id").alias("vid"), "vec")
     if broadcast_vectors:
         v = F.broadcast(v)
     paired = (
@@ -180,23 +180,22 @@ def exact_corr(cand: DataFrame, vectors: DataFrame, theta: float,
 
 
 def corr_report(aligned: DataFrame, theta: float, k: int = 4,
-                id_col: str = "series_id",
                 broadcast_vectors: bool | None = None) -> tuple[DataFrame, dict]:
     """Full tiered operator.  Returns (report_df sorted by ρ desc,
     pruning counters) — counters trigger computation (A5)."""
     from timeseriescorrelation_spark.session import cache_once
 
     vectors = cache_once(
-        dft_sketch(build_vectors(aligned, id_col), k, id_col)
+        dft_sketch(build_vectors(aligned), k)
     )
     n = vectors.count()
     first = vectors.select("m").first()
     m_width = int(first["m"]) if first is not None else 1
-    cand = candidate_pairs(vectors, theta, id_col)
+    cand = candidate_pairs(vectors, theta)
     cand = cache_once(cand)
     n_checked = cand.count()
     report = exact_corr(
-        cand, vectors, theta, id_col, broadcast_vectors,
+        cand, vectors, theta, broadcast_vectors,
         n_elements=n * m_width,
     ).orderBy(F.desc("rho"), "id_a", "id_b")
     n_reported = report.count()
@@ -210,13 +209,14 @@ def corr_report(aligned: DataFrame, theta: float, k: int = 4,
     return report, counters
 
 
-def corr_naive(aligned: DataFrame, theta: float,
-               id_col: str = "series_id") -> DataFrame:
+def corr_naive(aligned: DataFrame, theta: float) -> DataFrame:
     """All-pairs exact Pearson (no pruning) — the golden baseline the
     pruned report must equal (SURVEY §5.2 item 4)."""
-    vectors = build_vectors(aligned, id_col)
-    a = vectors.select(F.col(id_col).alias("id_a"), F.col("vec").alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), F.col("vec").alias("vb"))
+    vectors = build_vectors(aligned)
+    a = vectors.select(F.col("series_id").alias("id_a"),
+                       F.col("vec").alias("va"))
+    b = vectors.select(F.col("series_id").alias("id_b"),
+                       F.col("vec").alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", _dot(F.col("va"), F.col("vb")).alias("rho"))
@@ -224,8 +224,7 @@ def corr_naive(aligned: DataFrame, theta: float,
     )
 
 
-def rank_transform(aligned: DataFrame, id_col: str = "series_id",
-                   value_col: str = "value") -> DataFrame:
+def rank_transform(aligned: DataFrame) -> DataFrame:
     """Average-rank each series' values WITHIN its own aligned vector:
     rank_asc + (tie_cnt − 1)/2 — the same one-sort tie identity
     spearman_hourly_pairs uses, but over the fixed per-series grid.
@@ -246,9 +245,9 @@ def rank_transform(aligned: DataFrame, id_col: str = "series_id",
     Spearman is undefined there, matching SQL corr()'s NULL."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(value_col)
-    ties = Window.partitionBy(id_col, value_col)
+    w = Window.partitionBy("series_id").orderBy("value")
+    ties = Window.partitionBy("series_id", "value")
     return aligned.withColumn(
-        value_col,
+        "value",
         F.rank().over(w) + (F.count("*").over(ties) - 1) / 2.0,
     )

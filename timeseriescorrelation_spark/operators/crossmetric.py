@@ -149,11 +149,7 @@ def granger_gain(series: DataFrame, key: str = "metric",
     )
 
 
-def mutual_information_pairs(series: DataFrame,
-                             key_col: str = "metric",
-                             ts_col: str = "ts",
-                             value_col: str = "value",
-                             n_bins: int = 4) -> DataFrame:
+def mutual_information_pairs(series: DataFrame, n_bins: int = 4) -> DataFrame:
     """Pairwise mutual information between metrics over co-occurring
     hours — (metric_x, metric_y, n_hours, mi_u, mi_nats): the
     dependence measure that catches what Pearson/Spearman miss
@@ -179,14 +175,12 @@ def mutual_information_pairs(series: DataFrame,
     calendar-bounded metadata, like trend_daily's daily table.  The
     ntile window partitions per metric over those bounded rows.
     """
-    from pyspark.sql import Window
-
     hourly = series.groupBy(
-        F.col(key_col).alias("m"),
-        F.date_trunc("hour", F.col(ts_col)).alias("h"),
+        F.col("metric").alias("m"),
+        F.date_trunc("hour", F.col("ts")).alias("h"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("sc"),
+        F.sum(snap(F.col("value"), VALUE_DECIMALS)).alias("sc"),
     ).select(
         "m", "h",
         (F.col("sc").cast("double") / F.col("n").cast("double"))
@@ -633,8 +627,6 @@ def corr_deseasonalized(series: DataFrame, key: str = "metric",
     Scale: grid hash-agg → hod-mean window per (metric, hod) over
     aggregate rows → pair equi-join on hour → hash-agg."""
     h = bucket_cents(series, [key], "hour")
-    from pyspark.sql import Window
-
     whod = Window.partitionBy(key, F.hour("hour_ts"))
     res = h.select(
         F.col(key), "hour_ts",
@@ -693,8 +685,6 @@ def corr_winsorized(series: DataFrame, key: str = "metric",
     Scale: one rank window per metric over the aggregate grid, a
     broadcast-sized threshold join, then the usual pair machinery."""
     h = bucket_cents(series, [key], "hour")
-    from pyspark.sql import Window
-
     wr = Window.partitionBy(key).orderBy("y", "hour_ts")
     ranked = h.select(
         F.col(key), "hour_ts", "y",
@@ -816,8 +806,7 @@ def kendall_tau_pairs(series: DataFrame, key: str = "metric",
     ).orderBy("metric_a", "metric_b")
 
 
-def panel_fe(events: DataFrame, unit_col: str = "user_id",
-             min_days: int = 2) -> DataFrame:
+def panel_fe(events: DataFrame, min_days: int = 2) -> DataFrame:
     """(beta, se, t_stat, r2_within, n_obs, n_entities): one-way
     fixed-effects (within) estimator of daily value-cents on daily
     event count across the user panel — "does a user's spend rise on
@@ -841,7 +830,7 @@ def panel_fe(events: DataFrame, unit_col: str = "user_id",
     entities with < min_days cells carry zero within variance and are
     dropped (they only inflate dof)."""
     cells = events.groupBy(
-        F.col(unit_col).alias("u"),
+        F.col("user_id").alias("u"),
         F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(
         F.sum(snap("value", VALUE_DECIMALS)).alias("y"),

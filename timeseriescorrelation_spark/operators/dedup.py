@@ -54,19 +54,18 @@ A_J = [(_KNUTH * (2 * j + 1)) % P31 for j in range(64)]
 B_J = [(_KNUTH * (j + 17) + 912367) % P31 for j in range(64)]
 
 
-def tokenize(docs: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
-    """(id, text) -> (id, toks array<string>) lowercase whitespace tokens."""
+def tokenize(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, toks array<string>) lowercase
+    whitespace tokens."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.lower(F.col(text_col)), r"\s+").alias("toks"),
+        "doc_id",
+        F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
     )
 
 
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(id, text) -> distinct (doc_id, shingle) word n-grams."""
-    t = tokenize(docs, text_col, id_col)
+    t = tokenize(docs)
     # Guard short docs: sequence(1, 0) is DESCENDING [1,0] in Spark, and
     # element_at(toks, 0) then throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT.
     # Docs with < n tokens produce an empty index array instead; explode
@@ -119,24 +118,21 @@ def _affine(j: int, x):
     return (x * F.lit(A_J[j]) + F.lit(B_J[j])) % F.lit(P31)
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup: md5 groupBy -> (text_hash, n_dups, keeper_id).
 
     keeper_id = min id per group; at scale this is one hash-agg shuffled
     on the 128-bit digest (uniform keys, no skew)."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
         .agg(
             F.count("*").alias("n_dups"),
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
         )
     )
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_inter: int = 2,
-                        text_col: str = "text",
-                        id_col: str = "doc_id",
                         max_df: int | None = None) -> DataFrame:
     """Exact pairwise n-gram Jaccard via inverted-index self-join.
 
@@ -152,7 +148,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_inter: int = 2,
     the surviving shingles only (a df-capped Jaccard, like every
     production stop-word-filtered index — doc sizes stay full, so the
     score is a lower bound of true Jaccard)."""
-    sh = shingles(docs, n, text_col, id_col)
+    sh = shingles(docs, n)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     if max_df is not None:
         rare = (
@@ -247,8 +243,7 @@ def lsh_candidate_pairs(sig: DataFrame, n_hashes: int = 16,
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, n_hashes: int = 16,
                       bands: int = 4, tau_num: int = 1, tau_den: int = 5,
-                      mode: str = "vocab", text_col: str = "text",
-                      id_col: str = "doc_id",
+                      mode: str = "vocab",
                       max_bucket: int | None = None) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle -> signature -> band
     bucket-join -> exact Jaccard verify at tau = tau_num/tau_den.
@@ -257,7 +252,7 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, n_hashes: int = 16,
     Jaccard >= tau (integer cross-multiply — no float compare).  The
     verify joins candidates back to shingle-id sets collected per doc
     (broadcast at test scale; sort-merge on doc_id at 100 TB)."""
-    sh = shingles(docs, n, text_col, id_col)
+    sh = shingles(docs, n)
     ids = shingle_ids(sh, mode)
     cand = lsh_candidate_pairs(
         minhash_signatures(ids, n_hashes), n_hashes, bands, max_bucket
@@ -287,8 +282,7 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, n_hashes: int = 16,
 
 
 def simhash_fingerprints(docs: DataFrame, n: int = 3, n_bits: int = 32,
-                         mode: str = "vocab", text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+                         mode: str = "vocab") -> DataFrame:
     """(doc) -> (doc_id, fp) n_bits SimHash over shingle-id hashes.
 
     bit b of fp = sign of sum over shingles of (+1 if bit b of
@@ -297,7 +291,7 @@ def simhash_fingerprints(docs: DataFrame, n: int = 3, n_bits: int = 32,
     explosion (the earlier explode form multiplied the shingle rows by
     n_bits before the shuffle; this shuffles only |docs| x n_bits agg
     buffers and keeps every expression in codegen)."""
-    sh = shingles(docs, n, text_col, id_col)
+    sh = shingles(docs, n)
     ids = shingle_ids(sh, mode).select(
         "doc_id", _affine(0, F.col("tid")).alias("g")
     )
@@ -319,13 +313,12 @@ def simhash_fingerprints(docs: DataFrame, n: int = 3, n_bits: int = 32,
 
 
 def simhash_pairs(docs: DataFrame, n: int = 3, n_bits: int = 32,
-                  max_hamming: int = 6, mode: str = "vocab",
-                  text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+                  max_hamming: int = 6, mode: str = "vocab") -> DataFrame:
     """SimHash near-dup pairs: block on each of 4 bytes of the
     fingerprint (a pair within hamming<=6 of a 32-bit fp shares at least
     one exact byte when differing bits spread over <4 bytes — standard
     SimHash blocking), then exact hamming via bit_count(xor)."""
-    fp = simhash_fingerprints(docs, n, n_bits, mode, text_col, id_col)
+    fp = simhash_fingerprints(docs, n, n_bits, mode)
     nbytes = n_bits // 8
     blocks = fp.select(
         "doc_id",
@@ -390,12 +383,10 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     )
 
 
-def incremental_minhash_dedup(batch: DataFrame, corpus: DataFrame,
-                              n: int = 3, n_hashes: int = 16,
-                              bands: int = 8, tau_num: int = 1,
-                              tau_den: int = 5, mode: str = "vocab",
-                              text_col: str = "text",
-                              id_col: str = "doc_id",
+def incremental_minhash_dedup(batch: DataFrame, corpus: DataFrame, n: int = 3,
+                              n_hashes: int = 16, bands: int = 8,
+                              tau_num: int = 1, tau_den: int = 5,
+                              mode: str = "vocab",
                               max_bucket: int | None = None) -> DataFrame:
     """Continuous-ingest near-dup gate: score every BATCH (new) doc
     against the existing CORPUS only — the band join is batch-bands ⋈
@@ -424,10 +415,10 @@ def incremental_minhash_dedup(batch: DataFrame, corpus: DataFrame,
     bucket-local equi-join; `max_bucket` caps boilerplate-hot corpus
     buckets exactly like lsh_candidate_pairs; the verify joins tid
     SETS for candidate docs only (batch-sized left side)."""
-    b_docs = batch.select(F.col(id_col).alias("doc_id"), text_col)
-    c_docs = corpus.select(F.col(id_col).alias("doc_id"), text_col)
-    b_sh = shingles(b_docs, n, text_col)
-    c_sh = shingles(c_docs, n, text_col)
+    b_docs = batch.select("doc_id", "text")
+    c_docs = corpus.select("doc_id", "text")
+    b_sh = shingles(b_docs, n)
+    c_sh = shingles(c_docs, n)
     if mode == "vocab":
         # one shared id space: vocab over corpus ∪ batch (test/oracle
         # mode only — the scale path hashes and never builds a vocab)
@@ -534,9 +525,7 @@ def incremental_minhash_dedup(batch: DataFrame, corpus: DataFrame,
     )
 
 
-def connected_components(pairs: DataFrame, a_col: str = "id_a",
-                         b_col: str = "id_b",
-                         max_iter: int = 25, hops: int = 2,
+def connected_components(pairs: DataFrame, max_iter: int = 25, hops: int = 2,
                          stats: dict | None = None) -> DataFrame:
     """Near-duplicate pairs → clusters: min-label propagation until
     fixpoint.  Output (doc_id, cluster) where cluster is the smallest
@@ -562,7 +551,7 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     families), so diameter stays single-digit in practice — each
     round is one shuffle of |V|+|E| rows.  Raises after `max_iter`
     rounds rather than returning a half-converged labeling."""
-    e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+    e = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     edges = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -619,8 +608,7 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
 
 
 def prefix_jaccard_pairs(docs: DataFrame, n: int = 3, tau_num: int = 1,
-                         tau_den: int = 5, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+                         tau_den: int = 5) -> DataFrame:
     """Jaccard τ-join via PREFIX FILTERING (Chaudhuri/Ganti/
     Kaushik "SSJoin" ICDE'06, Xiao et al. "PPJoin" WWW'08) — the
     established deterministic alternative to MinHash-LSH for set-
@@ -686,7 +674,7 @@ def prefix_jaccard_pairs(docs: DataFrame, n: int = 3, tau_num: int = 1,
     caps any hash's row count at |docs|, and the task does a
     streaming count, so the hot-key ceiling is a count scan, not a
     buffered sort.)"""
-    sh = shingles(docs, n, text_col, id_col).select(
+    sh = shingles(docs, n).select(
         "doc_id", F.xxhash64("shingle").alias("h")
     )
     shd = sh.withColumn(
@@ -789,8 +777,7 @@ def prefix_jaccard_pairs(docs: DataFrame, n: int = 3, tau_num: int = 1,
     )
 
 
-def connected_components_star(pairs: DataFrame, a_col: str = "id_a",
-                              b_col: str = "id_b", max_iter: int = 25,
+def connected_components_star(pairs: DataFrame, max_iter: int = 25,
                               stats: dict | None = None) -> DataFrame:
     """Near-dup pairs → clusters via alternating large-star/small-star
     edge rewrites (Kiveris et al. 2014, "Connected Components in
@@ -822,7 +809,7 @@ def connected_components_star(pairs: DataFrame, a_col: str = "id_a",
     Output (doc_id, cluster): identical labeling contract to
     connected_components — cluster is the smallest reachable id;
     tests assert the two implementations agree exactly."""
-    e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    e = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     edges = (
         e.where(F.col("u") != F.col("v"))
         .select(
@@ -899,8 +886,7 @@ def connected_components_star(pairs: DataFrame, a_col: str = "id_a",
 
 
 def containment_pairs(docs: DataFrame, n: int = 3, min_inter: int = 2,
-                      tau_pct: int = 80, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+                      tau_pct: int = 80) -> DataFrame:
     """Asymmetric near-dup detection: doc pairs where the SMALLER
     shingle set is >= tau_pct% contained in the intersection —
     catches quote-inclusion / prefix-truncation dups that symmetric
@@ -920,7 +906,7 @@ def containment_pairs(docs: DataFrame, n: int = 3, min_inter: int = 2,
     shingle sets), which this function accepts unchanged since it
     keys only on (doc_id, shingle).
     """
-    sh = shingles(docs, n=n, text_col=text_col, id_col=id_col)
+    sh = shingles(docs, n=n)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -956,10 +942,8 @@ def containment_pairs(docs: DataFrame, n: int = 3, min_inter: int = 2,
     )
 
 
-def minhash_error_audit(docs: DataFrame, n: int = 3,
-                        n_hashes: int = 16, bands: int = 8,
-                        mode: str = "vocab", text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def minhash_error_audit(docs: DataFrame, n: int = 3, n_hashes: int = 16,
+                        bands: int = 8, mode: str = "vocab") -> DataFrame:
     """(n_pairs, bias, mae, max_abs_err): estimator QA for the
     MinHash pipeline — over every LSH candidate pair, compare the
     signature agreement estimate ĵ = matches/n_hashes against the
@@ -976,13 +960,12 @@ def minhash_error_audit(docs: DataFrame, n: int = 3,
     Scale: the signature table is |docs|×n_hashes ints; the candidate
     join is the LSH equi-join (bounded by banding); the verify join
     reuses the exact-Jaccard path on candidates only."""
-    sh = shingles(docs, n, text_col, id_col)
+    sh = shingles(docs, n)
     ids = shingle_ids(sh, mode)
     sig = minhash_signatures(ids, n_hashes)
     pairs = minhash_lsh_pairs(
         docs, n=n, n_hashes=n_hashes, bands=bands,
         tau_num=0, tau_den=1, mode=mode,
-        text_col=text_col, id_col=id_col,
     )
     sa = sig.select(
         F.col("doc_id").alias("id_a"),

@@ -148,9 +148,7 @@ def dq_ref_check(child: DataFrame, parent: DataFrame,
     )
 
 
-def dq_sequence(series: DataFrame, conv_col: str = "conv_id",
-                ts_col: str = "ts", idx_col: str = "turn_idx",
-                type_col: str = "metric") -> DataFrame:
+def dq_sequence(series: DataFrame) -> DataFrame:
     """Per-conversation SEQUENCE invariants — the transcript-shaped
     checks dq_checks' per-column counters can't see because they are
     properties of ADJACENT rows in turn order:
@@ -178,10 +176,10 @@ def dq_sequence(series: DataFrame, conv_col: str = "conv_id",
     same bound every per-conv op in the engine already carries."""
     w = Window.partitionBy("conv_id").orderBy("_ts", "_idx")
     flagged = series.select(
-        F.col(conv_col).alias("conv_id"),
-        F.col(ts_col).alias("_ts"),
-        F.col(idx_col).alias("_idx"),
-        F.col(type_col).alias("_tp"),
+        "conv_id",
+        F.col("ts").alias("_ts"),
+        F.col("turn_idx").alias("_idx"),
+        F.col("metric").alias("_tp"),
     ).select(
         "conv_id",
         (F.col("_tp") == F.lag("_tp").over(w)).cast("long")
@@ -205,8 +203,7 @@ def dq_sequence(series: DataFrame, conv_col: str = "conv_id",
     )
 
 
-def category_churn(events: DataFrame, cat_col: str = "event_type",
-                   ts_col: str = "ts") -> DataFrame:
+def category_churn(events: DataFrame) -> DataFrame:
     """(day_ts, n_cats, n_new, n_dropped, new_rows, new_rows_share):
     day-over-day category churn — the schema-drift tripwire upstream
     pipelines need ("a new event_type appeared yesterday; did anyone
@@ -222,8 +219,8 @@ def category_churn(events: DataFrame, cat_col: str = "event_type",
     rows.  Day 1 has no baseline and is excluded.
     """
     per = events.groupBy(
-        F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
-        F.col(cat_col).alias("cat"),
+        F.date_trunc("day", F.col("ts")).alias("day_ts"),
+        F.col("event_type").alias("cat"),
     ).agg(F.count(F.lit(1)).alias("rn"))
     today = per.select("day_ts", "cat", "rn")
     yest = per.select(
@@ -276,9 +273,8 @@ def category_churn(events: DataFrame, cat_col: str = "event_type",
     )
 
 
-def lateness_audit(series: DataFrame, keys: list[str] | None = None,
-                   arrival_col: str = "turn_idx",
-                   ts_col: str = "ts") -> DataFrame:
+def lateness_audit(series: DataFrame,
+                   keys: list[str] | None = None) -> DataFrame:
     """(metric, n, n_late, late_share, max_lateness_s, drop_1m,
     drop_5m, drop_15m): out-of-orderness audit — for each observation,
     lateness = (max event time among STRICTLY EARLIER arrivals) −
@@ -288,20 +284,20 @@ def lateness_audit(series: DataFrame, keys: list[str] | None = None,
     of X minutes would discard, computed on the batch corpus before
     anyone commits to a threshold.
 
-    Arrival order is the data's own ingest sequence (`arrival_col`;
-    event_id in the events table).  All counts are exact integers off
-    one lag-style window inside key partitions; shares are one
-    division.
+    Arrival order is the data's own ingest sequence (turn_idx, which
+    carries event_id in the events-derived series).  All counts are
+    exact integers off one lag-style window inside key partitions;
+    shares are one division.
 
     Scale: one partitioned window + one hash agg; no grids, no
     joins."""
     keys = keys or ["metric"]
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(arrival_col).cast("long"))
+        .orderBy(F.col("turn_idx").cast("long"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    t_us = epoch_us(F.col(ts_col))
+    t_us = epoch_us(F.col("ts"))
     lat = series.select(
         *keys,
         F.greatest(

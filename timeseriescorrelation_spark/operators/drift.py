@@ -114,7 +114,7 @@ def ks_drift_daily(series: DataFrame, keys: list[str] | None = None,
     )
 
 
-def entropy_daily(events: DataFrame, cat_col: str = "event_type") -> DataFrame:
+def entropy_daily(events: DataFrame) -> DataFrame:
     """(day_ts, n, n_types, entropy_nats): Shannon entropy of the
     categorical mix per day via H = ln(n) − (Σ c·ln c)/n — each
     c·ln(c) term micro-nat-snapped before the sum, so the only
@@ -122,7 +122,7 @@ def entropy_daily(events: DataFrame, cat_col: str = "event_type") -> DataFrame:
     DISTINCT type (micro-rounding absorbs the ulp)."""
     cnt = events.groupBy(
         F.date_trunc("day", "ts").alias("day_ts"),
-        F.col(cat_col).alias("cat"),
+        F.col("event_type").alias("cat"),
     ).agg(F.count(F.lit(1)).alias("c"))
     c = F.col("c").cast("double")
     term_u = snap(c * F.log(c), 6)
@@ -411,8 +411,6 @@ def emd_drift_daily(series: DataFrame, keys: list[str] | None = None,
     Scale notes: identical shape to psi_daily — two hash-aggs on cent
     values, a 1-day self-join of |keys|·|days|·B metadata rows, one
     cumulative window over B bins per (key, day)."""
-    from pyspark.sql import Window
-
     keys = keys or ["metric"]
     b = int(n_bins)
     pcts = [i / b for i in range(1, b)]

@@ -44,17 +44,15 @@ BASE_U = 150_000               # floor((1-d)·10⁶)
 M_U = 1_000_000
 
 
-def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 3,
-                        src_col: str = "src", dst_col: str = "dst",
-                        w_col: str = "w") -> DataFrame:
+def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """(node, pr_u): integer micro-unit PageRank after exactly n_iter
     power iterations from the uniform start (10⁶ per node)."""
-    e = edges.groupBy(src_col, dst_col).agg(
-        F.sum(w_col).cast("long").alias("w")
+    e = edges.groupBy("src", "dst").agg(
+        F.sum("w").cast("long").alias("w")
     )
-    wout = e.groupBy(src_col).agg(F.sum("w").alias("wout"))
-    e = e.join(wout, src_col).select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
+    wout = e.groupBy("src").agg(F.sum("w").alias("wout"))
+    e = e.join(wout, "src").select(
+        "src", "dst",
         "w", "wout",
     )
     nodes = (
@@ -86,8 +84,6 @@ def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 3,
 
 
 def pagerank_conserving(edges: DataFrame, n_iter: int = 3,
-                        src_col: str = "src", dst_col: str = "dst",
-                        w_col: str = "w",
                         teleport: DataFrame | None = None) -> DataFrame:
     """(node, pr_u): integer PageRank whose total mass is conserved at
     EXACTLY 10⁶·|V| every iteration — the dangling-mass seam
@@ -122,12 +118,12 @@ def pagerank_conserving(edges: DataFrame, n_iter: int = 3,
     reference and plan cost grows multiplicatively with n_iter (the
     dedup_clusters fixpoint lesson; measured 14.8 s → ~1 s at
     sf0.001)."""
-    e = edges.groupBy(src_col, dst_col).agg(
-        F.sum(w_col).cast("long").alias("w")
+    e = edges.groupBy("src", "dst").agg(
+        F.sum("w").cast("long").alias("w")
     )
-    wout = e.groupBy(src_col).agg(F.sum("w").alias("wout"))
-    e = e.join(wout, src_col).select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
+    wout = e.groupBy("src").agg(F.sum("w").alias("wout"))
+    e = e.join(wout, "src").select(
+        "src", "dst",
         "w", "wout",
     ).localCheckpoint(eager=True)
     wout = e.select("src", "wout").distinct()
@@ -229,7 +225,6 @@ def pagerank_conserving(edges: DataFrame, n_iter: int = 3,
 
 
 def bfs_depths(edges: DataFrame, seeds: DataFrame,
-               src_col: str = "src", dst_col: str = "dst",
                max_depth: int = 10) -> DataFrame:
     """Breadth-first shortest-hop depths from a seed set over an
     undirected edge list — (node, depth), unreachable nodes absent.
@@ -243,10 +238,10 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     each level's cost is |frontier ⋈ edges|.  Early-exits when the
     frontier empties; max_depth bounds pathological chains."""
     sym = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(
             edges.select(
-                F.col(dst_col).alias("a"), F.col(src_col).alias("b")
+                F.col("dst").alias("a"), F.col("src").alias("b")
             )
         )
         .distinct()
@@ -273,8 +268,7 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     return visited
 
 
-def degree_assortativity(edges: DataFrame, src_col: str = "src",
-                         dst_col: str = "dst") -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity of the undirected graph — one number for
     "do hubs attach to hubs" (r > 0, social-network-like) or "hubs to
     leaves" (r < 0, infrastructure-like), the fourth graph primitive
@@ -298,7 +292,7 @@ def degree_assortativity(edges: DataFrame, src_col: str = "src",
     # re-executes per reference (measured 29 shuffles on the
     # co-activity source; the pagerank_dangling fix, same cause)
     e = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
+        F.col("src").alias("a"), F.col("dst").alias("b")
     ).where(F.col("a") != F.col("b")).distinct().localCheckpoint(
         eager=True
     )
@@ -340,9 +334,7 @@ def degree_assortativity(edges: DataFrame, src_col: str = "src",
     )
 
 
-def edge_jaccard(edges: DataFrame, src_col: str = "src",
-                 dst_col: str = "dst",
-                 strategy: str = "wedge") -> DataFrame:
+def edge_jaccard(edges: DataFrame, strategy: str = "wedge") -> DataFrame:
     """SCAN-style structural similarity of every EDGE: for each
     connected pair (u, v), the Jaccard of their (open) neighbor sets
 
@@ -373,8 +365,8 @@ def edge_jaccard(edges: DataFrame, src_col: str = "src",
     node sets can't broadcast — the standard broadcast-vs-shuffle
     judgment, made explicit."""
     e = edges.select(
-        F.least(src_col, dst_col).alias("u"),
-        F.greatest(src_col, dst_col).alias("v"),
+        F.least("src", "dst").alias("u"),
+        F.greatest("src", "dst").alias("v"),
     ).where(F.col("u") != F.col("v")).distinct().localCheckpoint(
         eager=True
     )
@@ -440,8 +432,7 @@ def edge_jaccard(edges: DataFrame, src_col: str = "src",
     )
 
 
-def kcore_peel(edges: DataFrame, k: int, n_rounds: int,
-               src_col: str = "src", dst_col: str = "dst") -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int, n_rounds: int) -> DataFrame:
     """(node, core_deg): survivors of ``n_rounds`` of PARALLEL k-core
     peeling — each round simultaneously deletes every node whose
     degree inside the current survivor set is < k — with their degree
@@ -464,7 +455,7 @@ def kcore_peel(edges: DataFrame, k: int, n_rounds: int,
     Input may be directed or undirected; it is symmetrized and
     self-loops dropped before peeling.
     """
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     # materialize the symmetrized edge set ONCE: every round references
     # it twice (both semi-joins), so without lineage truncation the
     # plan re-derives the upstream edge build 2·n_rounds times and the
@@ -499,8 +490,6 @@ def kcore_peel(edges: DataFrame, k: int, n_rounds: int,
 
 
 def adamic_adar_scores(edges: DataFrame, top_k: int = 100,
-                       src_col: str = "src",
-                       dst_col: str = "dst",
                        strategy: str = "wedge") -> DataFrame:
     """Top-k link-prediction scores over an undirected graph given as
     distinct (src < dst) pairs: for each node pair (u, v) sharing at
@@ -526,7 +515,7 @@ def adamic_adar_scores(edges: DataFrame, top_k: int = 100,
     degree table is nodes-sized and broadcast; output is TakeOrdered
     top-k (aa_p desc, u, v), never a global sort.
     """
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     if strategy == "dense":
         # broadcast-adjacency ALL-PAIRS path: V**2 in-row
         # intersections + broadcast weight maps replace the
@@ -645,9 +634,7 @@ def adamic_adar_scores(edges: DataFrame, top_k: int = 100,
     )
 
 
-def label_propagation(edges: DataFrame, n_rounds: int,
-                      src_col: str = "src",
-                      dst_col: str = "dst") -> DataFrame:
+def label_propagation(edges: DataFrame, n_rounds: int) -> DataFrame:
     """(node, lbl): community labels after ``n_rounds`` of SYNCHRONOUS
     label propagation (Raghavan et al. 2007) — every node
     simultaneously adopts the most frequent label among its
@@ -671,7 +658,7 @@ def label_propagation(edges: DataFrame, n_rounds: int,
     per-round localCheckpoint truncates lineage (the
     pagerank_conserving lesson).
     """
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     und = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .where(F.col("a") != F.col("b"))
@@ -707,8 +694,7 @@ def label_propagation(edges: DataFrame, n_rounds: int,
     return lbl
 
 
-def clustering_coefficients(edges: DataFrame, src_col: str = "src",
-                            dst_col: str = "dst",
+def clustering_coefficients(edges: DataFrame,
                             strategy: str = "wedge") -> DataFrame:
     """Per-node local clustering coefficient — the fifth classic graph
     primitive next to CC / PageRank / BFS / assortativity: of the
@@ -729,7 +715,7 @@ def clustering_coefficients(edges: DataFrame, src_col: str = "src",
     Scale notes: inherits edge_jaccard's bound (wedge join capped by
     the hub-capped builder upstream); the per-node reduce adds one
     |E|-row unpivot and a nodes-sized hash-agg."""
-    ej = edge_jaccard(edges, src_col, dst_col, strategy=strategy)
+    ej = edge_jaccard(edges, strategy=strategy)
     stacked = ej.select(
         F.col("u").alias("node"), "common", F.col("deg_u").alias("deg")
     ).unionByName(
@@ -757,9 +743,7 @@ def clustering_coefficients(edges: DataFrame, src_col: str = "src",
     )
 
 
-def reciprocity(edges: DataFrame, src_col: str = "src",
-                dst_col: str = "dst",
-                weight_col: str = "w") -> DataFrame:
+def reciprocity(edges: DataFrame) -> DataFrame:
     """One row (n_edges, w_total, w_reciprocated, reciprocity):
     weighted reciprocity of a directed graph — the share of edge
     mass that flows back:
@@ -775,10 +759,10 @@ def reciprocity(edges: DataFrame, src_col: str = "src",
     division.  Scale: one self-equi-join on the AGGREGATED edge list
     (|V|² worst case, vocabulary-bounded), never on raw events."""
     e = edges.select(
-        F.col(src_col).alias("s"),
-        F.col(dst_col).alias("d"),
-        F.col(weight_col).cast("long").alias("w"),
-    ).where(F.col(src_col) != F.col(dst_col))
+        F.col("src").alias("s"),
+        F.col("dst").alias("d"),
+        F.col("w").cast("long").alias("w"),
+    ).where(F.col("src") != F.col("dst"))
     rev = e.select(
         F.col("s").alias("d"), F.col("d").alias("s"),
         F.col("w").alias("w_rev"),
@@ -802,9 +786,7 @@ def reciprocity(edges: DataFrame, src_col: str = "src",
     )
 
 
-def hits_fixedpoint(edges: DataFrame, n_iter: int = 2,
-                    src_col: str = "src", dst_col: str = "dst",
-                    w_col: str = "w") -> DataFrame:
+def hits_fixedpoint(edges: DataFrame, n_iter: int = 2) -> DataFrame:
     """(node, hub_u, auth_u): Kleinberg HITS after exactly n_iter
     UNNORMALIZED integer power iterations, normalized once at the end
     by integer DIV into micro-units — PageRank's companion question
@@ -828,10 +810,10 @@ def hits_fixedpoint(edges: DataFrame, n_iter: int = 2,
     count weights W_tot per node-neighborhood, h_K ~ (deg·w)^{2K};
     the widened scores hold 2 rounds at w·deg ≲ 10⁹ per hop (ANSI
     mode errors loudly beyond)."""
-    e = edges.groupBy(src_col, dst_col).agg(
-        F.sum(w_col).cast("long").alias("w")
+    e = edges.groupBy("src", "dst").agg(
+        F.sum("w").cast("long").alias("w")
     ).select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), "w"
+        "src", "dst", "w"
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -869,8 +851,7 @@ def hits_fixedpoint(edges: DataFrame, n_iter: int = 2,
     )
 
 
-def modularity(edges: DataFrame, labels: DataFrame,
-               src_col: str = "src", dst_col: str = "dst") -> DataFrame:
+def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Newman modularity contribution per community — the quality
     score that adjudicates a graph partition (label_propagation's
     output here): how much denser is each community than the
@@ -896,7 +877,7 @@ def modularity(edges: DataFrame, labels: DataFrame,
     total crossJoin (broadcast by construction).  Communities with no
     internal edge (sync-LPA 2-cycles can strand one) still appear via
     the left join, i_c = 0."""
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     und = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .where(F.col("a") != F.col("b"))

@@ -32,14 +32,14 @@ NANO = 1_000_000_000.0
 
 
 def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 20,
-             c: int = RRF_C, id_col: str = "doc_id") -> DataFrame:
+             c: int = RRF_C) -> DataFrame:
     """(doc_id, rank_lex, rank_sem, rrf_u): fuse two (id, rank)
     rankings; ids present in only one list contribute that list's
     term alone (standard RRF).  rrf_u is the exact integer nano-unit
     score; final order (rrf_u desc, id asc)."""
-    a = lex.select(F.col(id_col), F.col("rank").alias("rank_lex"))
-    b = sem.select(F.col(id_col), F.col("rank").alias("rank_sem"))
-    j = a.join(b, id_col, "full_outer")
+    a = lex.select(F.col("doc_id"), F.col("rank").alias("rank_lex"))
+    b = sem.select(F.col("doc_id"), F.col("rank").alias("rank_sem"))
+    j = a.join(b, "doc_id", "full_outer")
 
     def term(rank_col):
         return F.when(
@@ -49,7 +49,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 20,
 
     return (
         j.select(
-            id_col,
+            "doc_id",
             # absent-from-list is encoded as rank 0, not NULL — NULL
             # ints round-trip as float64/NaN through Arrow/pandas and
             # would make the oracle compare dtype-fragile
@@ -61,7 +61,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 20,
                 "rrf_u"
             ),
         )
-        .orderBy(F.desc("rrf_u"), F.asc(id_col))
+        .orderBy(F.desc("rrf_u"), F.asc("doc_id"))
         .limit(int(k))
     )
 

@@ -35,10 +35,7 @@ _BUCKET_STEP = {
 }
 
 
-def interval_join_binned(events: DataFrame, spans: DataFrame,
-                         keys: list[str], ts_col: str = "ts",
-                         start_col: str = "start_ts",
-                         end_col: str = "end_ts",
+def interval_join_binned(events: DataFrame, spans: DataFrame, keys: list[str],
                          bucket: str = "hour") -> DataFrame:
     """events ⋈ spans on (keys equal, start <= ts <= end), equi-binned.
 
@@ -48,21 +45,21 @@ def interval_join_binned(events: DataFrame, spans: DataFrame,
     explode rather than throwing ILLEGAL_SEQUENCE_BOUNDARIES and
     killing the job on one bad row."""
     span_buckets = spans.where(
-        F.col(end_col) >= F.col(start_col)
+        F.col("end_ts") >= F.col("start_ts")
     ).select(
         "*",
         F.explode(
             F.sequence(
-                F.date_trunc(bucket, F.col(start_col)),
-                F.date_trunc(bucket, F.col(end_col)),
+                F.date_trunc(bucket, F.col("start_ts")),
+                F.date_trunc(bucket, F.col("end_ts")),
                 F.expr(_BUCKET_STEP[bucket]),
             )
         ).alias("_bucket"),
     )
-    ev = events.withColumn("_bucket", F.date_trunc(bucket, F.col(ts_col)))
+    ev = events.withColumn("_bucket", F.date_trunc(bucket, F.col("ts")))
     return (
         ev.join(span_buckets, [*keys, "_bucket"])
-        .where(F.col(ts_col).between(F.col(start_col), F.col(end_col)))
+        .where(F.col("ts").between(F.col("start_ts"), F.col("end_ts")))
         .drop("_bucket")
     )
 
@@ -123,9 +120,7 @@ def interval_overlap_join(left: DataFrame, right: DataFrame,
     )
 
 
-def concurrency_levels(spans: DataFrame, start_col: str = "start_ts",
-                       end_col: str = "end_ts",
-                       shard: str = "day",
+def concurrency_levels(spans: DataFrame, shard: str = "day",
                        with_delta: bool = False) -> DataFrame:
     """Sweep-line concurrency: the number of spans active at each
     boundary instant (inclusive [start, end] — a span still counts AT
@@ -161,11 +156,11 @@ def concurrency_levels(spans: DataFrame, start_col: str = "start_ts",
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
     starts = spans.select(
-        epoch_us(F.col(start_col)).alias("ts_us"),
+        epoch_us(F.col("start_ts")).alias("ts_us"),
         F.lit(1).cast("long").alias("d"),
     )
     ends = spans.select(
-        (epoch_us(F.col(end_col)) + 1).alias("ts_us"),
+        (epoch_us(F.col("end_ts")) + 1).alias("ts_us"),
         F.lit(-1).cast("long").alias("d"),
     )
     deltas = (
@@ -209,9 +204,7 @@ def concurrency_levels(spans: DataFrame, start_col: str = "start_ts",
     return local.join(F.broadcast(carry), "shard_ts").select(*cols)
 
 
-def max_concurrency(spans: DataFrame, start_col: str = "start_ts",
-                    end_col: str = "end_ts",
-                    trunc: str = "hour") -> DataFrame:
+def max_concurrency(spans: DataFrame, trunc: str = "hour") -> DataFrame:
     """Max concurrent spans per bucket — concurrency_levels reduced to
     the per-hour peak.  The peak is seeded with the bucket's CARRY-IN
     level (the level entering the bucket = `level - delta` at the
@@ -221,7 +214,7 @@ def max_concurrency(spans: DataFrame, start_col: str = "start_ts",
     Only buckets containing a boundary appear; a bucket fully inside
     one flat stretch has no row, its level is the previous
     boundary's."""
-    lv = concurrency_levels(spans, start_col, end_col, with_delta=True)
+    lv = concurrency_levels(spans, with_delta=True)
     return lv.groupBy(
         F.date_trunc(trunc, "ts").alias("bucket_ts")
     ).agg(
@@ -233,8 +226,6 @@ def max_concurrency(spans: DataFrame, start_col: str = "start_ts",
 
 
 def interval_islands(spans: DataFrame, keys: list[str],
-                     start_col: str = "s_us",
-                     end_col: str = "e_us",
                      count_col: str | None = None) -> DataFrame:
     """Union coverage per key group via gaps-and-islands: merge
     overlapping/touching [start, end) spans into maximal islands and
@@ -263,27 +254,27 @@ def interval_islands(spans: DataFrame, keys: list[str],
     columns; group sizes are per-entity span counts (bounded by
     per-user activity), so no global sort and no hot key beyond what
     salting already handles for pathological entities."""
-    w_ord = Window.partitionBy(*keys).orderBy(start_col, end_col)
-    runmax = F.max(end_col).over(
+    w_ord = Window.partitionBy(*keys).orderBy("s_us", "e_us")
+    runmax = F.max("e_us").over(
         w_ord.rowsBetween(Window.unboundedPreceding, -1)
     )
     # count_col: when the input is PRE-MERGED spans (merge_spans),
     # n_spans still reports the raw count folded into them
     cnt = F.col(count_col) if count_col else F.lit(1)
     flagged = spans.select(
-        *keys, start_col, end_col, cnt.alias("_c"),
+        *keys, "s_us", "e_us", cnt.alias("_c"),
         F.when(
-            runmax.isNull() | (F.col(start_col) > runmax), F.lit(1)
+            runmax.isNull() | (F.col("s_us") > runmax), F.lit(1)
         ).otherwise(F.lit(0)).alias("_new"),
     ).select(
-        *keys, start_col, end_col, "_c",
+        *keys, "s_us", "e_us", "_c",
         F.sum("_new").over(
             w_ord.rowsBetween(Window.unboundedPreceding, 0)
         ).alias("_island"),
     )
     per_island = flagged.groupBy(*keys, "_island").agg(
-        F.min(start_col).alias("_s0"),
-        F.max(end_col).alias("_e1"),
+        F.min("s_us").alias("_s0"),
+        F.max("e_us").alias("_e1"),
         F.sum("_c").alias("_n"),
     )
     return per_island.groupBy(*keys).agg(
@@ -294,15 +285,13 @@ def interval_islands(spans: DataFrame, keys: list[str],
     )
 
 
-def merge_spans(spans: DataFrame, keys: list[str],
-                start_col: str = "s_us", end_col: str = "e_us",
-                count_col: str | None = None) -> DataFrame:
+def merge_spans(spans: DataFrame, keys: list[str]) -> DataFrame:
     """Merge overlapping/touching spans per key group and RETURN the
     merged spans (keys..., s_us, e_us, n_merged) instead of
     interval_islands' aggregates — the composable half of the
-    gaps-and-islands pair.  n_merged counts the RAW spans folded into
-    each island (or sums `count_col` when the input is itself
-    pre-merged), so multi-level merges preserve the original span
+    gaps-and-islands pair.  n_merged counts the spans folded into
+    each island; interval_islands(count_col="n_merged") sums it over
+    the merged spans, so a multi-level merge keeps the original span
     count.
 
     Union-merge is ASSOCIATIVE: merge per (day, user) first — cheap,
@@ -311,31 +300,29 @@ def merge_spans(spans: DataFrame, keys: list[str],
     is identical to one global merge (fleet_coverage does exactly
     this; the two-level form also bounds the per-day hot-key group at
     |users|·islands instead of |raw spans|)."""
-    w_ord = Window.partitionBy(*keys).orderBy(start_col, end_col)
-    runmax = F.max(end_col).over(
+    w_ord = Window.partitionBy(*keys).orderBy("s_us", "e_us")
+    runmax = F.max("e_us").over(
         w_ord.rowsBetween(Window.unboundedPreceding, -1)
     )
-    cnt = F.col(count_col) if count_col else F.lit(1)
     flagged = spans.select(
-        *keys, start_col, end_col, cnt.alias("_c"),
+        *keys, "s_us", "e_us", F.lit(1).alias("_c"),
         F.when(
-            runmax.isNull() | (F.col(start_col) > runmax), F.lit(1)
+            runmax.isNull() | (F.col("s_us") > runmax), F.lit(1)
         ).otherwise(F.lit(0)).alias("_new"),
     ).select(
-        *keys, start_col, end_col, "_c",
+        *keys, "s_us", "e_us", "_c",
         F.sum("_new").over(
             w_ord.rowsBetween(Window.unboundedPreceding, 0)
         ).alias("_island"),
     )
     return flagged.groupBy(*keys, "_island").agg(
-        F.min(start_col).alias(start_col),
-        F.max(end_col).alias(end_col),
+        F.min("s_us").alias("s_us"),
+        F.max("e_us").alias("e_us"),
         F.sum("_c").cast("long").alias("n_merged"),
     ).drop("_island")
 
 
-def sessions_capped(events: DataFrame, keys: list[str],
-                    ts_col: str = "ts", gap_minutes: int = 30,
+def sessions_capped(events: DataFrame, keys: list[str], gap_minutes: int = 30,
                     cap_hours: int = 24) -> DataFrame:
     """Web-analytics sessionization with BOTH standard rules: a new
     session opens after `gap_minutes` idle OR when `cap_hours` have
@@ -358,37 +345,36 @@ def sessions_capped(events: DataFrame, keys: list[str],
 
     gap_us = int(gap_minutes) * 60_000_000
     cap_us = int(cap_hours) * 3_600_000_000
-    w = Window.partitionBy(*keys).orderBy(ts_col)
-    ep = epoch_us(F.col(ts_col))
+    w = Window.partitionBy(*keys).orderBy("ts")
+    ep = epoch_us(F.col("ts"))
     new_sess = F.when(
-        F.lag(ts_col).over(w).isNull()
-        | (ep - epoch_us(F.lag(ts_col).over(w)) > gap_us),
+        F.lag("ts").over(w).isNull()
+        | (ep - epoch_us(F.lag("ts").over(w)) > gap_us),
         F.lit(1),
     ).otherwise(F.lit(0))
     islanded = events.select(
-        *keys, ts_col,
+        *keys, "ts",
         F.sum(new_sess).over(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ).alias("_island"),
     )
     w_is = Window.partitionBy(*keys, "_island")
     sliced = islanded.select(
-        *keys, ts_col, "_island",
+        *keys, "ts", "_island",
         F.floor(
             (ep - F.min(ep).over(w_is)) / F.lit(cap_us)
         ).alias("_slice"),
     )
     return sliced.groupBy(*keys, "_island", "_slice").agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end_ts"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end_ts"),
         F.count(F.lit(1)).alias("n_events"),
         (F.first("_slice") > 0).alias("capped"),
     ).drop("_island", "_slice")
 
 
-def pattern_matches(events: DataFrame, steps: list[str],
-                    keys: list[str], type_col: str = "event_type",
-                    ts_col: str = "ts", tie_col: str = "event_id",
+def pattern_matches(events: DataFrame, steps: list[str], keys: list[str],
+                    tie_col: str = "event_id",
                     within_seconds: int = 3600) -> DataFrame:
     """CEP-lite ordered-pattern detection (MATCH_RECOGNIZE's
     SEQ(A, B, C) core): per key, emit one row for every NON-OVERLAPPING
@@ -396,7 +382,7 @@ def pattern_matches(events: DataFrame, steps: list[str],
     match's first step.  Automaton contract (shared verbatim by the
     streaming twin, streaming/pattern_stream.py):
 
-    - events process in (ts_col, tie_col) order; non-step events are
+    - events process in (ts, tie_col) order; non-step events are
       ignored;
     - at stage k the automaton advances only on steps[k] (no skips,
       duplicates of earlier stages are ignored);
@@ -434,7 +420,7 @@ def pattern_matches(events: DataFrame, steps: list[str],
                 continue
             out_keys, out_s, out_e = [], [], []
             key_tup = list(zip(*(pdf[c] for c in keys)))
-            types = pdf[type_col].to_numpy()
+            types = pdf["event_type"].to_numpy()
             ords = pdf["_ord"].to_numpy()
             for k, ts_us, st in zip(key_tup, ords, types):
                 if k != cur_key:
@@ -466,10 +452,10 @@ def pattern_matches(events: DataFrame, steps: list[str],
             yield out[[*keys, "start_ts", "end_ts", "duration_s"]]
 
     pre = (
-        events.where(F.col(type_col).isin(*step_list))
+        events.where(F.col("event_type").isin(*step_list))
         .select(
-            *keys, type_col, tie_col,
-            epoch_us(F.col(ts_col)).alias("_ord"),
+            *keys, "event_type", tie_col,
+            epoch_us(F.col("ts")).alias("_ord"),
         )
         .repartition(*keys)
         .sortWithinPartitions(*keys, "_ord", tie_col)
@@ -480,9 +466,7 @@ def pattern_matches(events: DataFrame, steps: list[str],
 _US_PER = {"hour": 3_600_000_000, "day": 86_400_000_000}
 
 
-def clip_to_buckets(spans: DataFrame, bucket: str = "day",
-                    start_col: str = "s_us",
-                    end_col: str = "e_us") -> DataFrame:
+def clip_to_buckets(spans: DataFrame, bucket: str = "day") -> DataFrame:
     """Slice [start, end) µs spans at fixed bucket boundaries: each
     span explodes to one row per bucket it touches, with the piece
     clipped to that bucket —
@@ -508,28 +492,27 @@ def clip_to_buckets(spans: DataFrame, bucket: str = "day",
     if bucket not in _US_PER:
         raise ValueError(f"bucket must be one of {sorted(_US_PER)}")
     us = _US_PER[bucket]
-    b0 = F.floor(F.col(start_col) / us).cast("long")
+    b0 = F.floor(F.col("s_us") / us).cast("long")
     # e-1 so an end exactly on a boundary does not open an empty piece;
     # zero-length spans keep their own bucket
     b1 = F.floor(
-        (F.greatest(F.col(end_col) - 1, F.col(start_col))) / us
+        (F.greatest(F.col("e_us") - 1, F.col("s_us"))) / us
     ).cast("long")
-    keep = [c for c in spans.columns if c not in (start_col, end_col)]
+    keep = [c for c in spans.columns if c not in ("s_us", "e_us")]
     return (
         spans.withColumn("_b", F.explode(F.sequence(b0, b1)))
         .select(
             *keep,
             F.timestamp_micros(F.col("_b") * us).alias("bucket_ts"),
-            F.greatest(F.col(start_col), F.col("_b") * us)
-             .alias(start_col),
-            F.least(F.col(end_col), (F.col("_b") + 1) * us)
-             .alias(end_col),
+            F.greatest(F.col("s_us"), F.col("_b") * us)
+             .alias("s_us"),
+            F.least(F.col("e_us"), (F.col("_b") + 1) * us)
+             .alias("e_us"),
         )
     )
 
 
 def allen_census(series: DataFrame, key: str = "metric",
-                 ts_col: str = "ts",
                  min_hours: int = 8) -> DataFrame:
     """(metric_a, metric_b, n_hours, n_before, n_after, n_meets,
     n_equals, n_starts, n_finishes, n_during, n_overlaps): Allen
@@ -554,8 +537,8 @@ def allen_census(series: DataFrame, key: str = "metric",
     Scale: one hash-agg to the hourly span grid, one equi-join on
     hour, one hash-agg per pair."""
     spans = series.groupBy(
-        key, F.date_trunc("hour", F.col(ts_col)).alias("hour_ts")
-    ).agg(F.min(ts_col).alias("s"), F.max(ts_col).alias("e"))
+        key, F.date_trunc("hour", F.col("ts")).alias("hour_ts")
+    ).agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
     a = spans.select(
         F.col(key).alias("metric_a"), "hour_ts",
         F.col("s").alias("sa"), F.col("e").alias("ea"),

@@ -33,22 +33,18 @@ from timeseriescorrelation_spark.operators.dedup import tokenize
 from timeseriescorrelation_spark.operators.ranks import global_row_number
 
 
-def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return (
-        tokenize(docs, text_col, id_col)
-        .select("doc_id", F.explode("toks").alias("tok"))
-    )
+def _tokens(docs: DataFrame) -> DataFrame:
+    return tokenize(docs).select("doc_id", F.explode("toks").alias("tok"))
 
 
-def doc_surprisal(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def doc_surprisal(docs: DataFrame) -> DataFrame:
     """(doc_id, n_toks, surprisal_u): mean −ln p(tok) per doc in
     integer micro-nats; p(tok) = corpus_count(tok)/corpus_total, so
     every token's surprisal is ln of one exact-integer ratio.  The
     per-doc mean divides the exact integer sum by the exact token
     count — one IEEE division, bit-equal cross-engine — then floors
     back to integer micro-nats (floor, not round: ties impossible)."""
-    t = _tokens(docs, text_col, id_col)
+    t = _tokens(docs)
     vocab = t.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     tot = vocab.agg(F.sum("c").alias("n_total"))
     per_tok = (
@@ -78,8 +74,7 @@ def doc_surprisal(docs: DataFrame, text_col: str = "text",
     )
 
 
-def bigram_surprisal(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def bigram_surprisal(docs: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, surprisal2_u): per-document mean bigram
     surprisal −ln p(w_i | w_{i−1}) in integer micro-nats under the
     corpus bigram LM with Laplace(+1) smoothing:
@@ -103,7 +98,7 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
     with map-side combine (shuffle ~ |distinct bigrams| + |vocab|);
     scoring joins the bigram stream keyed by (a, b) with AQE's skew
     handling on the zipfian head, and V is a 1-row broadcast."""
-    t = tokenize(docs, text_col, id_col)
+    t = tokenize(docs)
     bg = t.select(
         "doc_id",
         F.explode(
@@ -151,9 +146,7 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
     )
 
 
-def source_drift(docs: DataFrame, text_col: str = "text",
-                 source_col: str = "source",
-                 id_col: str = "doc_id") -> DataFrame:
+def source_drift(docs: DataFrame) -> DataFrame:
     """(source, n_toks, kl_u): KL(source ‖ corpus) in integer
     micro-nats — Σ_tok p_s(tok)·ln(p_s(tok)/p(tok)), computed as the
     exact-integer-weighted sum of per-token micro-nat logs divided by
@@ -163,9 +156,8 @@ def source_drift(docs: DataFrame, text_col: str = "text",
     integer PRODUCTS, so both engines feed ln() the same double.
     Zero-count corpus tokens can't occur (source ⊆ corpus), so KL is
     always finite."""
-    t = _tokens(docs, text_col, id_col).join(
-        docs.select(F.col(id_col).alias("doc_id"),
-                    F.col(source_col).alias("source")),
+    t = _tokens(docs).join(
+        docs.select("doc_id", "source"),
         "doc_id",
     )
     per_src = t.groupBy("source", "tok").agg(
@@ -204,9 +196,7 @@ def source_drift(docs: DataFrame, text_col: str = "text",
     )
 
 
-def collocations_pmi(docs: DataFrame, min_pair_n: int = 5,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def collocations_pmi(docs: DataFrame, min_pair_n: int = 5) -> DataFrame:
     """(tok_a, tok_b, pair_n, pmi_u): adjacent-bigram pointwise mutual
     information in integer micro-nats — collocation discovery ("which
     token pairs co-occur far above chance?"), the classic first step
@@ -226,7 +216,7 @@ def collocations_pmi(docs: DataFrame, min_pair_n: int = 5,
     bigram tables collapse map-side to ~|vocab| and ~|bigram vocab|
     rows; the final join keys bigrams onto two broadcast-or-shuffled
     unigram lookups.  No windows, no driver loops."""
-    t = tokenize(docs, text_col, id_col)
+    t = tokenize(docs)
     big = t.select(
         F.explode(
             F.zip_with(
@@ -280,9 +270,7 @@ def collocations_pmi(docs: DataFrame, min_pair_n: int = 5,
     )
 
 
-def phrase_search(docs: DataFrame, phrase: list[str],
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def phrase_search(docs: DataFrame, phrase: list[str]) -> DataFrame:
     """(doc_id, n_hits): documents containing the exact token phrase,
     via a POSITIONAL inverted index — the retrieval primitive BM25's
     bag-of-words scoring can't express ("merge batch part", in that
@@ -301,7 +289,7 @@ def phrase_search(docs: DataFrame, phrase: list[str],
     per doc is one hash-agg."""
     if len(phrase) < 2:
         raise ValueError("phrase_search: need >= 2 tokens")
-    t = tokenize(docs, text_col, id_col)
+    t = tokenize(docs)
     idx = t.select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
     ).where(F.col("tok").isin(list(phrase)))
@@ -319,8 +307,7 @@ def phrase_search(docs: DataFrame, phrase: list[str],
     )
 
 
-def zipf_fit(docs: DataFrame, top_k: int = 100,
-             text_col: str = "text") -> DataFrame:
+def zipf_fit(docs: DataFrame, top_k: int = 100) -> DataFrame:
     """Zipf-law fit over the corpus token frequency spectrum: the
     log-log regression ln(freq) ~ α·ln(rank) over the top_k tokens —
     natural language sits near α ≈ −1, and a corpus that drifts far
@@ -345,7 +332,7 @@ def zipf_fit(docs: DataFrame, top_k: int = 100,
     tf = (
         docs.select(
             F.explode(
-                F.split(F.lower(F.col(text_col)), r"\s+")
+                F.split(F.lower(F.col("text")), r"\s+")
             ).alias("tok")
         )
         .where(F.col("tok") != "")
@@ -403,9 +390,7 @@ def zipf_fit(docs: DataFrame, top_k: int = 100,
     )
 
 
-def dsir_weights(docs: DataFrame, target_source: str,
-                 n_buckets: int = 4096, source_col: str = "source",
-                 text_col: str = "text", id_col: str = "doc_id",
+def dsir_weights(docs: DataFrame, target_source: str, n_buckets: int = 4096,
                  mode: str = "vocab") -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al.
     2023, "Data Selection for Language Models via Importance
@@ -436,9 +421,9 @@ def dsir_weights(docs: DataFrame, target_source: str,
     )
 
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(source_col).alias("source"),
-        F.split(F.lower(F.col(text_col)), r"\s+").alias("toks"),
+        "doc_id",
+        "source",
+        F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
     )
     idx = F.when(
         F.size("toks") >= 2, F.sequence(F.lit(1), F.size("toks") - 1)
@@ -507,9 +492,7 @@ def dsir_weights(docs: DataFrame, target_source: str,
     )
 
 
-def trigram_novelty(docs: DataFrame, n: int = 3,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def trigram_novelty(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, n_trigrams, n_novel, novelty): per document, the
     share of its distinct word n-grams that appear in NO
     earlier-id document — the curation-order novelty score.  A crawl
@@ -531,7 +514,7 @@ def trigram_novelty(docs: DataFrame, n: int = 3,
     the exact-dedup shape, no pair joins anywhere."""
     from timeseriescorrelation_spark.operators.dedup import shingles
 
-    sh = shingles(docs, n=n, text_col=text_col, id_col=id_col)
+    sh = shingles(docs, n=n)
     first = sh.groupBy("shingle").agg(
         F.min("doc_id").alias("first_doc")
     )
@@ -552,8 +535,7 @@ def trigram_novelty(docs: DataFrame, n: int = 3,
     )
 
 
-def lang_temperature_weights(docs: DataFrame, alpha: float = 0.3,
-                             lang_col: str = "lang") -> DataFrame:
+def lang_temperature_weights(docs: DataFrame, alpha: float = 0.3) -> DataFrame:
     """(lang, n_docs, p_nat, p_samp, boost): temperature-based
     multilingual sampling weights — the mC4/XLM-R α-sampling rule
     (Conneau et al. 2020) a multilingual training-data pipeline
@@ -576,7 +558,7 @@ def lang_temperature_weights(docs: DataFrame, alpha: float = 0.3,
 
     Scale: one hash-agg to |languages| rows; everything after is
     metadata-sized (broadcast total, window normalization)."""
-    g = docs.groupBy(F.col(lang_col).alias("lang")).agg(
+    g = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     tot = g.agg(F.sum("n_docs").alias("nn"))
@@ -615,10 +597,7 @@ def lang_temperature_weights(docs: DataFrame, alpha: float = 0.3,
     )
 
 
-def coverage_greedy(docs: DataFrame, k: int = 5,
-                    text_col: str = "text",
-                    id_col: str = "doc_id",
-                    ngram: int = 1) -> DataFrame:
+def coverage_greedy(docs: DataFrame, k: int = 5, ngram: int = 1) -> DataFrame:
     """(round, doc_id, gain, covered_total): greedy max-coverage
     selection of k documents by NEW distinct tokens covered — the
     submodular data-selection primitive (facility-location greedy,
@@ -642,16 +621,16 @@ def coverage_greedy(docs: DataFrame, k: int = 5,
     # empty tokens filtered BEFORE gram assembly so both engines see
     # identical grams)
     arr = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"),
+        F.split(F.lower(F.col("text")), r"\s+"),
         lambda x: x != F.lit(""),
     )
     if int(ngram) <= 1:
         toks = docs.select(
-            F.col(id_col).alias("doc_id"), F.explode(arr).alias("tok")
+            "doc_id", F.explode(arr).alias("tok")
         ).distinct().localCheckpoint(eager=True)
     else:
         n = int(ngram)
-        t = docs.select(F.col(id_col).alias("doc_id"), arr.alias("toks"))
+        t = docs.select("doc_id", arr.alias("toks"))
         idx = F.when(
             F.size("toks") >= n,
             F.sequence(F.lit(1), F.size("toks") - (n - 1)),
@@ -701,7 +680,7 @@ def coverage_greedy(docs: DataFrame, k: int = 5,
 
     schema = StructType([
         StructField("round", IntegerType(), False),
-        StructField("doc_id", docs.schema[id_col].dataType, True),
+        StructField("doc_id", docs.schema["doc_id"].dataType, True),
         StructField("gain", LongType(), False),
         StructField("covered_total", LongType(), False),
     ])

@@ -42,9 +42,8 @@ from timeseriescorrelation_spark.functions.exact import wide
 SNAP = 1.0e9
 
 
-def _features(docs: DataFrame, text_col: str, label_col: str,
-              pos_label: str) -> DataFrame:
-    lt = F.lower(F.col(text_col))
+def _features(docs: DataFrame, pos_label: str) -> DataFrame:
+    lt = F.lower(F.col("text"))
     vowels = F.regexp_count(lt, F.lit(r"[aeiou]"))
     letters = F.regexp_count(lt, F.lit(r"[a-z]"))
     vr_u = F.when(
@@ -54,8 +53,8 @@ def _features(docs: DataFrame, text_col: str, label_col: str,
         ),
     ).otherwise(F.lit(0.0)).cast("long")
     return docs.select(
-        (F.col(label_col) == pos_label).cast("int").alias("y"),
-        (F.length(text_col).cast("double") / F.lit(1000.0)).alias("x1"),
+        (F.col("lang") == pos_label).cast("int").alias("y"),
+        (F.length("text").cast("double") / F.lit(1000.0)).alias("x1"),
         (vr_u.cast("double") / F.lit(1e6)).alias("x2"),
     )
 
@@ -123,14 +122,13 @@ def _newton_step(feat: DataFrame, beta: DataFrame) -> DataFrame:
     )
 
 
-def logit_fit(docs: DataFrame, text_col: str = "text",
-              label_col: str = "lang", pos_label: str = "en",
+def logit_fit(docs: DataFrame, pos_label: str = "en",
               n_iter: int = 2) -> DataFrame:
     """(n_docs, n_pos, b0, b1, b2, train_acc): logistic regression of
     `label == pos_label` on (kchars, vowel ratio) after `n_iter`
     unrolled Newton steps; train_acc is the 0.5-threshold accuracy of
     the final plane (exact integer counts over the sign of z)."""
-    feat = _features(docs, text_col, label_col, pos_label)
+    feat = _features(docs, pos_label)
     spark = docs.sparkSession
     beta = spark.createDataFrame(
         [(0.0, 0.0, 0.0)], "b0 double, b1 double, b2 double"

@@ -37,11 +37,10 @@ from timeseriescorrelation_spark.schemas import manifest_schema
 MANIFEST_TABLE = "manifest"
 
 
-def with_part_key(df: DataFrame, key_col: str = "conv_id",
-                  n_parts: int = 64) -> DataFrame:
+def with_part_key(df: DataFrame, n_parts: int = 64) -> DataFrame:
     return df.withColumn(
         "part_key",
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_parts)).cast("int"),
+        F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_parts)).cast("int"),
     )
 
 
@@ -113,7 +112,6 @@ def run_stage(
     stage: str,
     input_df: DataFrame,
     fn,
-    key_col: str = "conv_id",
     n_parts: int = 64,
 ) -> DataFrame:
     """Run ``fn(todo_df) -> DataFrame`` over the not-yet-done logical
@@ -123,9 +121,9 @@ def run_stage(
     store = ManifestStore(spark, root)
     out_path = os.path.join(root, stage)
 
-    inp = with_part_key(input_df, key_col, n_parts)
+    inp = with_part_key(input_df, n_parts)
     todo = inp.where(~F.col("part_key").isin(store.done_parts(run_id, stage)))
-    out = with_part_key(fn(todo.drop("part_key")), key_col, n_parts)
+    out = with_part_key(fn(todo.drop("part_key")), n_parts)
     # Built lazily: its schema comes from analysis alone and pins every
     # read of the stage directory below (no schema-inference job).
     schema = out.schema

@@ -48,9 +48,8 @@ from timeseriescorrelation_spark.functions.exact import snap
 from timeseriescorrelation_spark.operators.acf import hourly_counts_dense
 
 
-def matrix_profile_daily(series: DataFrame,
-                         keys: list[str] | None = None,
-                         ts_col: str = "ts", m: int = 4) -> DataFrame:
+def matrix_profile_daily(series: DataFrame, keys: list[str] | None = None,
+                         m: int = 4) -> DataFrame:
     """(keys..., day_ts, idx, j_star, mp): per complete (key, day),
     the z-normalized nearest-neighbour distance `mp` of the length-m
     subsequence starting at hour `idx`, and its neighbour's start
@@ -61,7 +60,7 @@ def matrix_profile_daily(series: DataFrame,
     excl = m // 2
     n = 24
     last = n - m  # last valid subsequence start
-    g = hourly_counts_dense(series, keys, ts_col)
+    g = hourly_counts_dense(series, keys)
     day = g.select(
         *keys,
         F.timestamp_micros(

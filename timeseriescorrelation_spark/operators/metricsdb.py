@@ -30,8 +30,6 @@ from timeseriescorrelation_spark.functions.exact import (
 
 
 def counter_increase(counters: DataFrame, key: str = "metric",
-                     ts_col: str = "ts",
-                     counter_col: str = "cnt",
                      trunc: str = "day") -> DataFrame:
     """(key, bucket_ts, n_samples, n_resets, increase): Prometheus-
     style `increase()` over a cumulative counter column — per bucket,
@@ -49,17 +47,17 @@ def counter_increase(counters: DataFrame, key: str = "metric",
 
     Scale: one lag window over the key-partitioned sample sequence +
     one hash-agg to the bucket grid."""
-    w = Window.partitionBy(key).orderBy(ts_col)
+    w = Window.partitionBy(key).orderBy("ts")
     d = counters.select(
-        key, ts_col, counter_col,
-        (F.col(counter_col) - F.lag(counter_col, 1).over(w))
+        key, "ts", "cnt",
+        (F.col("cnt") - F.lag("cnt", 1).over(w))
         .alias("d"),
     )
     term = F.when(F.col("d").isNull(), F.lit(0)).when(
         F.col("d") >= 0, F.col("d")
-    ).otherwise(F.col(counter_col))
+    ).otherwise(F.col("cnt"))
     g = d.groupBy(
-        key, F.date_trunc(trunc, ts_col).alias("bucket_ts")
+        key, F.date_trunc(trunc, "ts").alias("bucket_ts")
     ).agg(
         F.count(F.lit(1)).alias("n_samples"),
         F.sum((F.col("d") < 0).cast("long")).alias("n_resets"),

@@ -44,13 +44,12 @@ def _decode_stub(payload: bytes) -> tuple[int, int, int, int]:
     return n, hs, 64 + hs % 512, 64 + (hs * 7) % 512
 
 
-def attach_payload(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def attach_payload(docs: DataFrame) -> DataFrame:
     """Test harness: use the utf-8 bytes of `text` as the opaque payload
     column (real pipelines read payloads from parquet binary columns)."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        "doc_id",
+        F.encode(F.col("text"), "utf-8").alias("payload"),
     )
 
 

@@ -36,13 +36,12 @@ from timeseriescorrelation_spark.functions.exact import (
     snap,
     wide,
 )
-from timeseriescorrelation_spark.functions.timeutil import epoch_day, weekday
+from timeseriescorrelation_spark.functions.timeutil import weekday
 
 
-def chi2_independence(events: DataFrame, row_col: str = "event_type",
-                      ts_col: str = "ts") -> DataFrame:
+def chi2_independence(events: DataFrame) -> DataFrame:
     """(n_events, n_rows, n_cols, df, chi2): Pearson chi-square test
-    of independence between `row_col` and day-of-week over raw event
+    of independence between event_type and day-of-week over raw event
     counts — "is the metric mix the same every weekday?".
 
         chi2 = Σ_cells (N·O − R·C)² / (N·R·C)
@@ -58,7 +57,7 @@ def chi2_independence(events: DataFrame, row_col: str = "event_type",
     margin joins — the grid never exceeds |distinct row values|·7.
     """
     cells = events.groupBy(
-        F.col(row_col).alias("rv"), F.dayofweek(ts_col).alias("cv")
+        F.col("event_type").alias("rv"), F.dayofweek("ts").alias("cv")
     ).agg(F.count(F.lit(1)).alias("o"))
     rows = cells.groupBy("rv").agg(F.sum("o").alias("r"))
     cols = cells.groupBy("cv").agg(F.sum("o").alias("c"))
@@ -572,7 +571,7 @@ def brown_forsythe_weekend(series: DataFrame, key: str = "metric",
 
 
 def bh_adjust(tests: DataFrame, key: str = "metric",
-              p_col: str = "p_approx", q: float = 0.05) -> DataFrame:
+              q: float = 0.05) -> DataFrame:
     """(key, p_raw, bh_rank, p_adj, significant): Benjamini-Hochberg
     ADJUSTED-p report over a FAMILY of per-key p-values — the
     multiple-testing layer the per-metric test battery (pettitt,
@@ -611,7 +610,7 @@ def bh_adjust(tests: DataFrame, key: str = "metric",
     joins broadcast the aggregate side (the BNLJ-with-tiny-broadcast
     pattern the audit module documents as acceptable)."""
     base = tests.select(
-        F.col(key).alias("k"), F.col(p_col).alias("p_raw")
+        F.col(key).alias("k"), F.col("p_approx").alias("p_raw")
     )
     tot = base.agg(F.count(F.lit(1)).alias("m"))
     rhs = base.select(
@@ -656,8 +655,7 @@ def bh_adjust(tests: DataFrame, key: str = "metric",
     )
 
 
-def chi2_cells(events: DataFrame, row_col: str = "event_type",
-               ts_col: str = "ts") -> DataFrame:
+def chi2_cells(events: DataFrame) -> DataFrame:
     """(metric, dow_iso, o, e, std_resid, cramers_v): the effect-size
     companion to chi2_independence — WHICH metric × weekday cell
     drives the dependence, and HOW MUCH dependence there is overall.
@@ -683,10 +681,9 @@ def chi2_cells(events: DataFrame, row_col: str = "event_type",
     Scale: one hash-agg to |rows|·7 cells, broadcast-sized margin
     joins, and one broadcast 1-row global agg for the χ² total —
     the grid never exceeds |distinct row values|·7."""
-    days = epoch_day(F.date_trunc("day", ts_col))
-    dow = (F.pmod(days + F.lit(3), F.lit(7)) + F.lit(1)).cast("int")
+    dow = (F.pmod(weekday("ts") + F.lit(6), F.lit(7)) + F.lit(1)).cast("int")
     cells = events.groupBy(
-        F.col(row_col).alias("rv"), dow.alias("dw")
+        F.col("event_type").alias("rv"), dow.alias("dw")
     ).agg(F.count(F.lit(1)).alias("o"))
     rows = cells.groupBy("rv").agg(F.sum("o").alias("r"))
     cols = cells.groupBy("dw").agg(F.sum("o").alias("c"))

@@ -37,9 +37,7 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 _HOUR_US = 3_600_000_000
 
 
-def littles_law(sessions: DataFrame,
-                start_col: str = "session_start",
-                end_col: str = "session_end_ts") -> DataFrame:
+def littles_law(sessions: DataFrame) -> DataFrame:
     """(hour_ts, arrivals, w_mean_sec, l_arrival, l_observed,
     flow_balance): per-hour Little's-law readout over sessions.
 
@@ -61,10 +59,10 @@ def littles_law(sessions: DataFrame,
     Exact: all sums are integer µs; each output is one double
     division mirrored verbatim in the oracle."""
     s = sessions.select(
-        F.col(start_col).alias("st"),
-        F.col(end_col).alias("en"),
-        epoch_us(F.col(start_col)).alias("st_us"),
-        epoch_us(F.col(end_col)).alias("en_us"),
+        F.col("session_start").alias("st"),
+        F.col("session_end_ts").alias("en"),
+        epoch_us(F.col("session_start")).alias("st_us"),
+        epoch_us(F.col("session_end_ts")).alias("en_us"),
     )
     arr = s.groupBy(F.date_trunc("hour", "st").alias("hour_ts")).agg(
         F.count(F.lit(1)).alias("arrivals"),
@@ -191,8 +189,7 @@ def mtbf_mttr(series: DataFrame, key: str = "metric") -> DataFrame:
 
 
 def erlang_staffing(series: DataFrame, keys: list[str] | None = None,
-                    ts_col: str = "ts", mu_per_hour: float = 1.0,
-                    target_wait_prob: float = 0.2,
+                    mu_per_hour: float = 1.0, target_wait_prob: float = 0.2,
                     max_agents: int = 64) -> DataFrame:
     """(keys..., hod, n_hours, lam, n_req, p_wait): Erlang-C staffing
     per hour-of-day — "how many parallel workers does the 3 pm load
@@ -228,7 +225,7 @@ def erlang_staffing(series: DataFrame, keys: list[str] | None = None,
     mu = float(mu_per_hour)
     tgt = float(target_wait_prob)
     nmax = int(max_agents)
-    g = hourly_counts_dense(series, keys, ts_col)
+    g = hourly_counts_dense(series, keys)
     hod = g.groupBy(
         *keys,
         ((F.col("h_us") % F.lit(86_400_000_000))
@@ -280,7 +277,6 @@ def erlang_staffing(series: DataFrame, keys: list[str] | None = None,
 
 
 def dispersion_test(events: DataFrame, key: str = "event_type",
-                    ts_col: str = "ts",
                     min_days: int = 8) -> DataFrame:
     """(metric, n_days, mean_count, dispersion_index, chi2): Poisson
     index-of-dispersion test on DAILY EVENT COUNTS per metric — the
@@ -301,7 +297,7 @@ def dispersion_test(events: DataFrame, key: str = "event_type",
     per-metric moments — the cheapest distributed shape, no joins,
     no windows."""
     d = events.groupBy(
-        F.col(key).alias("m"), F.date_trunc("day", ts_col).alias("day_ts")
+        F.col(key).alias("m"), F.date_trunc("day", "ts").alias("day_ts")
     ).agg(F.count(F.lit(1)).alias("c"))
     g = d.groupBy("m").agg(*moments("c", names="n s q")).where(
         F.col("n") >= int(min_days)
@@ -323,7 +319,6 @@ def dispersion_test(events: DataFrame, key: str = "event_type",
 
 
 def rate_ratio_weekend(events: DataFrame, key: str = "event_type",
-                       ts_col: str = "ts",
                        min_days: int = 4) -> DataFrame:
     """(metric, days_weekday, days_weekend, events_weekday,
     events_weekend, rate_ratio, z): exposure-adjusted weekend/weekday
@@ -345,7 +340,7 @@ def rate_ratio_weekend(events: DataFrame, key: str = "event_type",
     joins, no windows."""
     d = events.groupBy(
         F.col(key).alias("m"),
-        F.date_trunc("day", ts_col).alias("day_ts"),
+        F.date_trunc("day", "ts").alias("day_ts"),
     ).agg(F.count(F.lit(1)).alias("c"))
     g1 = weekday("day_ts").isin(0, 6).cast("int")
     dd = d.select("m", "c", g1.alias("g"))
@@ -377,11 +372,7 @@ def rate_ratio_weekend(events: DataFrame, key: str = "event_type",
     )
 
 
-def recovery_after_error(events: DataFrame,
-                         type_col: str = "event_type",
-                         actor_col: str = "user_id",
-                         ord_col: str = "event_id",
-                         error_type: str = "error",
+def recovery_after_error(events: DataFrame, error_type: str = "error",
                          window_s: int = 300) -> DataFrame:
     """(day_ts, n_errors, n_recovered, recovery_rate, mean_gap_s):
     per day, how often an actor's error is followed by ANY further
@@ -398,14 +389,14 @@ def recovery_after_error(events: DataFrame,
 
     Scale: one window over actor-partitioned sequences (the
     sessionization shuffle shape) + one day hash-agg."""
-    w = Window.partitionBy(actor_col).orderBy(
-        epoch_us(F.col("ts")), F.col(ord_col)
+    w = Window.partitionBy("user_id").orderBy(
+        epoch_us(F.col("ts")), F.col("event_id")
     )
     nxt = events.select(
-        type_col, "ts",
+        "event_type", "ts",
         (F.lead(epoch_us(F.col("ts")), 1).over(w)
          - epoch_us(F.col("ts"))).alias("gap_us"),
-    ).where(F.col(type_col) == error_type)
+    ).where(F.col("event_type") == error_type)
     rec = (F.col("gap_us").isNotNull()
            & (F.col("gap_us") <= F.lit(int(window_s) * 1_000_000)))
     g = nxt.groupBy(F.date_trunc("day", "ts").alias("day_ts")).agg(

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import (
     SCALE,
-    VALUE_DECIMALS,
+    bucket_cents,
     co_moment,
     moments,
     snap,
@@ -29,8 +29,7 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 
 def apply_retention(tier_df: DataFrame, now_df: DataFrame,
-                    keep_seconds: int | None,
-                    ts_col: str = "bucket_ts") -> DataFrame:
+                    keep_seconds: int | None) -> DataFrame:
     """Rows of one tier surviving the policy.  ``now_df`` is a 1-row
     (broadcast) frame with column `_now` — derived from the data (max
     event ts) or a literal; keeping it a frame makes the whole policy
@@ -40,14 +39,13 @@ def apply_retention(tier_df: DataFrame, now_df: DataFrame,
         return tier_df
     t = tier_df.join(F.broadcast(now_df))
     return t.where(
-        F.col(ts_col)
+        F.col("bucket_ts")
         >= F.col("_now") - F.expr(f"interval {int(keep_seconds)} seconds")
     ).drop("_now")
 
 
 def retention_report(tiers: dict[str, DataFrame], now_df: DataFrame,
-                     policy: dict[str, int | None],
-                     ts_col: str = "bucket_ts") -> DataFrame:
+                     policy: dict[str, int | None]) -> DataFrame:
     """(tier, kept_rows, dropped_rows, oldest_kept) per policy entry —
     the dry-run accounting a retention job logs before deleting.
     Counts coalesce to 0 on an empty tier (sum over zero rows is NULL
@@ -60,7 +58,7 @@ def retention_report(tiers: dict[str, DataFrame], now_df: DataFrame,
         if keep_seconds is None:
             kept = F.lit(True)
         else:
-            kept = F.col(ts_col) >= F.col("_now") - F.expr(
+            kept = F.col("bucket_ts") >= F.col("_now") - F.expr(
                 f"interval {int(keep_seconds)} seconds"
             )
         zero = F.lit(0).cast("long")
@@ -71,7 +69,7 @@ def retention_report(tiers: dict[str, DataFrame], now_df: DataFrame,
                 .alias("kept_rows"),
                 F.coalesce(F.sum(F.when(kept, 0).otherwise(1)), zero)
                 .alias("dropped_rows"),
-                F.min(F.when(kept, F.col(ts_col))).alias("oldest_kept"),
+                F.min(F.when(kept, F.col("bucket_ts"))).alias("oldest_kept"),
             )
         )
     out = parts[0]
@@ -80,10 +78,7 @@ def retention_report(tiers: dict[str, DataFrame], now_df: DataFrame,
     return out
 
 
-def rfm_features(orders: DataFrame, n_tiles: int = 5,
-                 cust_col: str = "o_custkey",
-                 date_col: str = "o_orderdate",
-                 amount_col: str = "o_totalprice") -> DataFrame:
+def rfm_features(orders: DataFrame, n_tiles: int = 5) -> DataFrame:
     """RFM (recency / frequency / monetary) customer features — the
     classic segmentation table a training-data pipeline derives before
     stratified sampling or label construction:
@@ -106,13 +101,13 @@ def rfm_features(orders: DataFrame, n_tiles: int = 5,
     row_number + O(P) driver offsets), never a single-partition
     ntile window; bucket assignment is ranks.ntile_expr's exact
     integer formula, pytest-asserted equal to SQL ntile."""
-    ref = orders.agg(F.max(date_col).alias("_ref"))
+    ref = orders.agg(F.max("o_orderdate").alias("_ref"))
     base = (
-        orders.groupBy(F.col(cust_col).alias("custkey"))
+        orders.groupBy(F.col("o_custkey").alias("custkey"))
         .agg(
-            F.max(date_col).alias("_last"),
+            F.max("o_orderdate").alias("_last"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(snap(F.col(amount_col), 2)).alias("monetary_c"),
+            F.sum(snap(F.col("o_totalprice"), 2)).alias("monetary_c"),
         )
         .crossJoin(F.broadcast(ref))
         .select(
@@ -160,9 +155,7 @@ def rfm_features(orders: DataFrame, n_tiles: int = 5,
     )
 
 
-def stickiness_daily(events: DataFrame, user_col: str = "user_id",
-                     ts_col: str = "ts",
-                     window_days: int = 30) -> DataFrame:
+def stickiness_daily(events: DataFrame, window_days: int = 30) -> DataFrame:
     """(day_ts, dau, mau, stickiness): DAU / trailing-`window_days`-
     distinct-users per day — the classic engagement ratio (a user base
     that shows up most days sticks near 1/1; a monthly-drive-by base
@@ -175,8 +168,8 @@ def stickiness_daily(events: DataFrame, user_col: str = "user_id",
     At fleets where even that is too much, hll_rolling_7d is the
     sketched scale path; this operator is the exact gate for it."""
     du = events.select(
-        F.col(user_col).alias("u"),
-        F.date_trunc("day", F.col(ts_col)).alias("d"),
+        F.col("user_id").alias("u"),
+        F.date_trunc("day", F.col("ts")).alias("d"),
     ).distinct()
     span = du.agg(F.max("d").alias("d1"))
     dau = du.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
@@ -206,8 +199,7 @@ def stickiness_daily(events: DataFrame, user_col: str = "user_id",
     )
 
 
-def cohort_ltv(events: DataFrame, user_col: str = "user_id",
-               ts_col: str = "ts", value_col: str = "value") -> DataFrame:
+def cohort_ltv(events: DataFrame) -> DataFrame:
     """(cohort_week, age_week, active_users, cohort_size,
     week_value_per_user, cum_value_per_user): cohort LIFETIME-VALUE
     curves — cohort_retention answers "how many came back";
@@ -224,27 +216,22 @@ def cohort_ltv(events: DataFrame, user_col: str = "user_id",
     Scale: one (user, week) hash agg → one user-cohort join
     (aggregate-sized) → (cohort, age) agg → a cumulative window over
     ≤|weeks| rows per cohort partition."""
-    uw = events.groupBy(
-        F.col(user_col).alias("u"),
-        F.date_trunc("week", F.col(ts_col)).alias("w"),
-    ).agg(
-        F.sum(snap(F.col(value_col), VALUE_DECIMALS)).alias("c")
-    )
-    first = uw.groupBy("u").agg(F.min("w").alias("cw"))
+    uw = bucket_cents(events, [F.col("user_id").alias("u")], "week")
+    first = uw.groupBy("u").agg(F.min("week_ts").alias("cw"))
     sizes = first.groupBy("cw").agg(
         F.count(F.lit(1)).alias("cohort_size")
     )
     j = uw.join(first, "u").select(
         F.col("cw").alias("cohort_week"),
         (
-            (epoch_us(F.col("w")) - epoch_us(F.col("cw")))
+            (epoch_us(F.col("week_ts")) - epoch_us(F.col("cw")))
             / F.lit(604_800_000_000)
         ).cast("long").alias("age_week"),
-        "c",
+        "y",
     )
     per = j.groupBy("cohort_week", "age_week").agg(
         F.count(F.lit(1)).alias("active_users"),
-        F.sum("c").alias("cents"),
+        F.sum("y").alias("cents"),
     )
     w = (
         Window.partitionBy("cohort_week").orderBy("age_week")
@@ -271,10 +258,7 @@ def cohort_ltv(events: DataFrame, user_col: str = "user_id",
     )
 
 
-def time_to_nth(events: DataFrame, n: int = 5,
-                user_col: str = "user_id",
-                ts_col: str = "ts",
-                ord_col: str = "event_id") -> DataFrame:
+def time_to_nth(events: DataFrame, n: int = 5) -> DataFrame:
     """(cohort_day, n_users, n_activated, activation_rate, p50_hours,
     p90_hours): activation latency — per user, the time from their
     FIRST event to their n-th, summarized by first-seen cohort day.
@@ -291,21 +275,21 @@ def time_to_nth(events: DataFrame, n: int = 5,
 
     Scale: one window over user-partitioned sequences + one cohort
     hash-agg; no self-joins."""
-    w = Window.partitionBy(user_col).orderBy(
-        epoch_us(F.col(ts_col)), F.col(ord_col)
+    w = Window.partitionBy("user_id").orderBy(
+        epoch_us(F.col("ts")), F.col("event_id")
     )
     seq = events.select(
-        user_col,
+        "user_id",
         F.row_number().over(w).alias("k"),
-        (epoch_us(F.col(ts_col))
-         - F.first(epoch_us(F.col(ts_col))).over(w)).alias("gap_us"),
-        F.first(F.date_trunc("day", F.col(ts_col))).over(w)
+        (epoch_us(F.col("ts"))
+         - F.first(epoch_us(F.col("ts"))).over(w)).alias("gap_us"),
+        F.first(F.date_trunc("day", F.col("ts"))).over(w)
         .alias("cohort_day"),
     ).where(F.col("k") == int(n))
-    users = events.groupBy(user_col).agg(
+    users = events.groupBy("user_id").agg(
         F.min(
-            F.struct(epoch_us(F.col(ts_col)), F.col(ord_col),
-                     F.date_trunc("day", F.col(ts_col)).alias("d"))
+            F.struct(epoch_us(F.col("ts")), F.col("event_id"),
+                     F.date_trunc("day", F.col("ts")).alias("d"))
         )["d"].alias("cohort_day")
     )
     base = users.groupBy("cohort_day").agg(
@@ -334,9 +318,7 @@ def time_to_nth(events: DataFrame, n: int = 5,
     )
 
 
-def capture_recapture(events: DataFrame,
-                      user_col: str = "user_id",
-                      ts_col: str = "ts") -> DataFrame:
+def capture_recapture(events: DataFrame) -> DataFrame:
     """(day_ts, n_day1, n_day2, n_both, n_hat, ci_lo, ci_hi): Chapman
     capture-recapture estimate of the TOTAL user population from each
     consecutive-day pair — the ecology estimator pointed at a product
@@ -358,8 +340,8 @@ def capture_recapture(events: DataFrame,
     Scale: one distinct hash-agg to |users|·|days|, one self-join
     shifted a day, day-grain output."""
     d = events.select(
-        F.col(user_col).alias("u"),
-        F.date_trunc("day", ts_col).alias("day_ts"),
+        F.col("user_id").alias("u"),
+        F.date_trunc("day", "ts").alias("day_ts"),
     ).distinct()
     n_by_day = d.groupBy("day_ts").agg(F.count(F.lit(1)).alias("n"))
     nxt = d.select(
@@ -404,9 +386,7 @@ def capture_recapture(events: DataFrame,
     )
 
 
-def retention_decay_fit(events: DataFrame, id_col: str = "user_id",
-                        ts_col: str = "ts",
-                        min_ages: int = 5) -> DataFrame:
+def retention_decay_fit(events: DataFrame, min_ages: int = 5) -> DataFrame:
     """(n_ages, exponent, intercept, r2, r_day1, r_day7): power-law
     fit of the pooled retention curve — the "retention curves are
     power laws" growth-analytics read (ln r(d) = a + b·ln d; b is the
@@ -428,8 +408,8 @@ def retention_decay_fit(events: DataFrame, id_col: str = "user_id",
     → age-grid joins of cohort-size METADATA (≤ calendar days rows)
     → one moment agg."""
     e = events.select(
-        F.col(id_col).alias("uid"),
-        F.date_trunc("day", F.col(ts_col)).alias("d"),
+        F.col("user_id").alias("uid"),
+        F.date_trunc("day", F.col("ts")).alias("d"),
     ).distinct()
     w = Window.partitionBy("uid")
     aged = e.select(

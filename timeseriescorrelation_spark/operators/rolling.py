@@ -27,9 +27,8 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
 
-def rolling_stats(df: DataFrame, keys: list[str], range_seconds: int,
-                  ts_col: str = "ts",
-                  value_col: str = "value") -> DataFrame:
+def rolling_stats(df: DataFrame, keys: list[str],
+                  range_seconds: int) -> DataFrame:
     """Append trailing-range aggregates to every input row.
 
     Output = input columns + (roll_cnt, roll_min, roll_max, roll_sum,
@@ -40,10 +39,10 @@ def rolling_stats(df: DataFrame, keys: list[str], range_seconds: int,
     range_us = int(range_seconds) * 1_000_000
     w = (
         Window.partitionBy(*keys)
-        .orderBy(epoch_us(F.col(ts_col)))
+        .orderBy(epoch_us(F.col("ts")))
         .rangeBetween(-range_us, 0)
     )
-    v = F.col(value_col)
+    v = F.col("value")
     return df.select(
         "*",
         F.count(v).over(w).alias("roll_cnt"),
@@ -55,8 +54,7 @@ def rolling_stats(df: DataFrame, keys: list[str], range_seconds: int,
 
 
 def rolling_corr(df: DataFrame, keys: list[str], range_seconds: int,
-                 ts_col: str = "ts", x_col: str = "x", y_col: str = "y",
-                 min_n: int = 5) -> DataFrame:
+                 ts_col: str = "ts", min_n: int = 5) -> DataFrame:
     """Trailing-range Pearson correlation between two INTEGER-valued
     columns — the reference's correlation moved into a sliding
     event-time frame ("is volume tracking rate over the last hour?").
@@ -88,8 +86,8 @@ def rolling_corr(df: DataFrame, keys: list[str], range_seconds: int,
         .orderBy(epoch_us(F.col(ts_col)))
         .rangeBetween(-range_us, 0)
     )
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
+    x = F.col("x").cast("long")
+    y = F.col("y").cast("long")
     n = F.count(F.lit(1)).over(w)
     sx = F.sum(x).over(w)
     sy = F.sum(y).over(w)
@@ -109,8 +107,7 @@ def rolling_corr(df: DataFrame, keys: list[str], range_seconds: int,
 
 
 def rolling_slope(hourly: DataFrame, keys: list[str],
-                  window_hours: int = 24, t_col: str = "hour_ts",
-                  y_col: str = "y") -> DataFrame:
+                  window_hours: int = 24) -> DataFrame:
     """Trailing OLS slope over the last `window_hours` hourly points —
     the continuous trend monitor ("is this metric accelerating RIGHT
     NOW"), where trend_daily answers the same per calendar day.
@@ -130,11 +127,11 @@ def rolling_slope(hourly: DataFrame, keys: list[str],
     key, one ordered pass, O(W) frame memory; never a range self-join.
     """
     w_us = 3_600_000_000
-    t = (epoch_us(F.col(t_col)) / w_us).cast("long")
+    t = (epoch_us(F.col("hour_ts")) / w_us).cast("long")
     src = hourly.select(
-        *keys, F.col(t_col),
+        *keys, F.col("hour_ts"),
         t.alias("_t"),
-        F.col(y_col).cast("long").alias("_y"),
+        F.col("y").cast("long").alias("_y"),
     )
     w = (
         Window.partitionBy(*keys)
@@ -149,8 +146,8 @@ def rolling_slope(hourly: DataFrame, keys: list[str],
     num = (n * sty - st * sy).cast("double")
     den = (n * stt - st * st).cast("double")
     return src.select(
-        *keys, t_col,
-        F.col("_y").alias(y_col),
+        *keys, "hour_ts",
+        F.col("_y").alias("y"),
         n.cast("long").alias("slope_n"),
         F.round(
             F.when(den > 0, num / den / 100.0), 6

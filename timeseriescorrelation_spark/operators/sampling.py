@@ -35,19 +35,18 @@ def hash_bucket(id_col: str) -> Column:
     ).cast("int")
 
 
-def sample_fraction(df: DataFrame, frac: float,
-                    id_col: str = "doc_id") -> DataFrame:
+def sample_fraction(df: DataFrame, frac: float) -> DataFrame:
     """Keep ~frac of units, deterministically (bucket < frac * 2^16)."""
-    return df.where(hash_bucket(id_col) < int(frac * N_BUCKETS))
+    return df.where(hash_bucket("doc_id") < int(frac * N_BUCKETS))
 
 
-def assign_split(df: DataFrame, id_col: str = "doc_id",
-                 train: float = 0.8, val: float = 0.1) -> DataFrame:
+def assign_split(df: DataFrame, train: float = 0.8,
+                 val: float = 0.1) -> DataFrame:
     """Append a 'split' column: train / val / test by hash range.
 
     Boundaries are exact bucket counts (floor), so the same id lands in
     the same split forever regardless of corpus size or order."""
-    b = hash_bucket(id_col)
+    b = hash_bucket("doc_id")
     t_hi = int(train * N_BUCKETS)
     v_hi = int((train + val) * N_BUCKETS)
     split = (
@@ -59,8 +58,7 @@ def assign_split(df: DataFrame, id_col: str = "doc_id",
 
 
 def weighted_sample_topk(df: DataFrame, strata: list[str], weight_col,
-                         k: int = 20,
-                         id_col: str = "doc_id") -> DataFrame:
+                         k: int = 20) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k per stratum, fully
     deterministic: Efraimidis–Spirakis A-ES — each unit draws
     u ~ U(0,1) and the k largest u^(1/w) win, which provably samples
@@ -82,7 +80,7 @@ def weighted_sample_topk(df: DataFrame, strata: list[str], weight_col,
     applies); never a global sort.  Weights must be > 0 — the caller
     clamps (a ≤ 0 weight has no u^(1/w) interpretation)."""
     h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
     ).cast("long")
     two60 = float((1 << 60) + 1)
     u = (h + F.lit(1)).cast("double") / F.lit(two60)
@@ -91,23 +89,21 @@ def weighted_sample_topk(df: DataFrame, strata: list[str], weight_col,
     from pyspark.sql import Window
 
     win = Window.partitionBy(*strata).orderBy(
-        F.desc("_es_key_n"), F.asc(id_col)
+        F.desc("_es_key_n"), F.asc("doc_id")
     )
     return (
         df.withColumn("_es_key_n", key)
         .withColumn("_rk", F.row_number().over(win))
         .where(F.col("_rk") <= int(k))
         .select(
-            *strata, id_col,
+            *strata, "doc_id",
             F.col("_rk").cast("int").alias("draw_rank"),
             F.col("_es_key_n").alias("es_key_n"),
         )
     )
 
 
-def source_mix_weights(docs: DataFrame, alpha: float = 0.5,
-                       mass_col: str = "n_chars",
-                       source_col: str = "source") -> DataFrame:
+def source_mix_weights(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Temperature-based source mixing weights for training-data
     assembly (the alpha-sampling rule from the multilingual-LM
     literature: p_s = m_s^alpha / sum_t m_t^alpha, alpha < 1 upweights
@@ -128,9 +124,9 @@ def source_mix_weights(docs: DataFrame, alpha: float = 0.5,
     Scale notes (100 TB): one hash-agg down to |sources| rows, then a
     broadcast of the 1-row total back onto it; the corpus itself is
     touched exactly once."""
-    per = docs.groupBy(source_col).agg(
+    per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col(mass_col).cast("long")).alias("mass"),
+        F.sum(F.col("n_chars").cast("long")).alias("mass"),
     ).withColumn(
         "_w",
         F.floor(F.pow(F.col("mass").cast("double"), F.lit(float(alpha)))
@@ -140,7 +136,7 @@ def source_mix_weights(docs: DataFrame, alpha: float = 0.5,
         F.sum("mass").alias("_m_tot"), F.sum("_w").alias("_w_tot")
     )
     return per.crossJoin(F.broadcast(tot)).select(
-        source_col,
+        "source",
         F.col("n_docs").cast("long").alias("n_docs"),
         F.col("mass").cast("long").alias("mass"),
         F.round(F.col("mass").cast("double") / F.col("_m_tot"), 6)

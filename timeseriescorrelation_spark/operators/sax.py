@@ -40,7 +40,6 @@ BREAKS = (-0.6745, 0.0, 0.6745)
 
 
 def sax_daily(series: DataFrame, keys: list[str] | None = None,
-              ts_col: str = "ts", value_col: str = "value",
               segment_hours: int = 1) -> DataFrame:
     """(keys..., day_ts, n_hours, sax_word).
 
@@ -54,11 +53,11 @@ def sax_daily(series: DataFrame, keys: list[str] | None = None,
     whose collision space is small enough for motif mining
     (activity.sax_motifs)."""
     keys = keys or ["metric"]
-    cents = snap(F.col(value_col), VALUE_DECIMALS)
+    cents = snap(F.col("value"), VALUE_DECIMALS)
     pt = series.select(
         *keys,
-        F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
-        (F.hour(F.col(ts_col)) / F.lit(int(segment_hours)))
+        F.date_trunc("day", F.col("ts")).alias("day_ts"),
+        (F.hour(F.col("ts")) / F.lit(int(segment_hours)))
         .cast("int").alias("hour_idx"),
         cents.alias("c"),
     )

@@ -30,14 +30,13 @@ from timeseriescorrelation_spark.functions.exact import wide
 
 
 def scd2_history(log: DataFrame, keys: list[str], attr_cols: list[str],
-                 ts_col: str = "ts",
                  tie_col: str | None = None) -> DataFrame:
     """Collapse a change log into SCD2 validity intervals.
 
     `tie_col` breaks timestamp ties deterministically (pass the event
     id / turn index); without a total order the run boundaries on tied
     timestamps would be engine-dependent."""
-    order = [F.col(ts_col)] + ([F.col(tie_col)] if tie_col else [])
+    order = [F.col("ts")] + ([F.col(tie_col)] if tie_col else [])
     w = Window.partitionBy(*keys).orderBy(*order)
     same_as_prev = reduce(
         lambda a, b: a & b,
@@ -47,13 +46,13 @@ def scd2_history(log: DataFrame, keys: list[str], attr_cols: list[str],
         (F.row_number().over(w) == 1) | ~same_as_prev, F.lit(1)
     ).otherwise(F.lit(0))
     versioned = log.select(
-        *keys, *attr_cols, ts_col,
+        *keys, *attr_cols, "ts",
         F.sum(chg).over(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ).alias("_ver"),
     )
     runs = versioned.groupBy(*keys, "_ver", *attr_cols).agg(
-        F.min(ts_col).alias("valid_from"),
+        F.min("ts").alias("valid_from"),
         F.count(F.lit(1)).cast("long").alias("n_rows"),
     )
     # order the collapsed table by the version id, not valid_from:
@@ -69,9 +68,7 @@ def scd2_history(log: DataFrame, keys: list[str], attr_cols: list[str],
     )
 
 
-def cdc_snapshot(changes: DataFrame, key_col: str = "user_id",
-                 ts_col: str = "ts", seq_col: str = "event_id",
-                 op_col: str = "op") -> DataFrame:
+def cdc_snapshot(changes: DataFrame) -> DataFrame:
     """Materialize the current snapshot from a CDC changelog — the
     MERGE-INTO semantics every lakehouse table maintenance job needs,
     re-expressed as two hash-aggs with ZERO window sorts:
@@ -97,18 +94,18 @@ def cdc_snapshot(changes: DataFrame, key_col: str = "user_id",
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
     ten19 = wide(F.lit("10000000000000000000"))
-    pk = wide(epoch_us(F.col(ts_col))) * ten19 + wide(seq_col)
+    pk = wide(epoch_us(F.col("ts"))) * ten19 + wide("event_id")
     ch = changes.withColumn("_pk", pk)
-    latest = ch.groupBy(key_col).agg(
+    latest = ch.groupBy("user_id").agg(
         F.max("_pk").alias("_mx"),
         F.count(F.lit(1)).alias("n_changes"),
-    ).withColumnRenamed(key_col, "_k")
+    ).withColumnRenamed("user_id", "_k")
     won = ch.join(
         latest,
-        (F.col(key_col) == F.col("_k")) & (F.col("_pk") == F.col("_mx")),
+        (F.col("user_id") == F.col("_k")) & (F.col("_pk") == F.col("_mx")),
     )
     return (
-        won.where(F.col(op_col) != F.lit("D"))
+        won.where(F.col("op") != F.lit("D"))
         .drop("_pk", "_mx", "_k")
-        .withColumnRenamed(ts_col, "last_ts")
+        .withColumnRenamed("ts", "last_ts")
     )

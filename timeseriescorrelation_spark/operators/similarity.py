@@ -41,8 +41,7 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding",
-                      id_col: str = "vec_id") -> DataFrame:
+def with_unit_vectors(emb: DataFrame) -> DataFrame:
     """(id, embedding float[]) -> (vec_id, v double[], n) L2-normalized.
 
     Pre-normalizing makes cosine a plain dot product downstream (one
@@ -50,7 +49,7 @@ def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding",
     per vector in a prior projection — inlining _norm(v) into the
     transform lambda would re-run the O(d) dot-product fold per element
     (O(d^2) per vector)."""
-    v = _to_double(F.col(vec_col))
+    v = _to_double(F.col("embedding"))
     # all-zero vectors map to the zero vector instead of dividing by
     # zero (an ANSI-mode DIVIDE_BY_ZERO would kill the whole job on one
     # degenerate row); cos(0-vector, anything) = 0, below every
@@ -61,7 +60,7 @@ def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding",
     ).otherwise(F.transform(F.col("_dv"), lambda x: x * F.lit(0.0)))
     return (
         emb.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             v.alias("_dv"),
         )
         .withColumn("_n", _norm(F.col("_dv")))
@@ -69,14 +68,12 @@ def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding",
     )
 
 
-def cosine_neardup_pairs(emb: DataFrame, min_cos: float,
-                         vec_col: str = "embedding",
-                         id_col: str = "vec_id") -> DataFrame:
+def cosine_neardup_pairs(emb: DataFrame, min_cos: float) -> DataFrame:
     """All pairs with cosine >= min_cos, brute force (id_a < id_b).
 
     Output (id_a, id_b, cos rounded to 6dp).  O(N^2) — verification
     scale; the LSH/IVF paths bound the pair space at 100 TB."""
-    u = with_unit_vectors(emb, vec_col, id_col)
+    u = with_unit_vectors(emb)
     a = u.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
     b = u.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
     return (
@@ -90,9 +87,7 @@ def cosine_neardup_pairs(emb: DataFrame, min_cos: float,
 
 
 def cosine_neardup_pairs_blocked(emb: DataFrame, min_cos: float,
-                                 n_blocks: int = 8,
-                                 vec_col: str = "embedding",
-                                 id_col: str = "vec_id") -> DataFrame:
+                                 n_blocks: int = 8) -> DataFrame:
     """Distributed block-pair matmul near-dup: no driver-side corpus
     materialization.  Vectors are hashed into ``n_blocks`` blocks; every
     unordered block pair (i, j), i <= j, becomes one shuffle group
@@ -117,9 +112,9 @@ def cosine_neardup_pairs_blocked(emb: DataFrame, min_cos: float,
     import numpy as np
     import pandas as pd
 
-    blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
+    blk = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int")
     base = emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("e"),
+        "vec_id", F.col("embedding").alias("e"),
         blk.alias("blk"),
     )
     rng = F.sequence(F.lit(0), F.lit(n_blocks - 1))
@@ -174,15 +169,14 @@ def cosine_neardup_pairs_blocked(emb: DataFrame, min_cos: float,
     return both.groupBy("bi", "bj").applyInPandas(_pairs, schema)
 
 
-def ann_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 10,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> DataFrame:
+def ann_topk_bruteforce(emb: DataFrame, queries: DataFrame,
+                        k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors per query vector (self excluded).
 
     queries: (vec_id, embedding) — broadcast against the corpus; ranking
     is a per-query window top-k (ties broken by neighbor id)."""
-    corpus = with_unit_vectors(emb, vec_col, id_col)
-    q = with_unit_vectors(queries, vec_col, id_col).select(
+    corpus = with_unit_vectors(emb)
+    q = with_unit_vectors(queries).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     scored = (
@@ -201,9 +195,8 @@ def ann_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def ann_topk_bruteforce_np(emb: DataFrame, queries_pdf, k: int = 10,
-                           vec_col: str = "embedding",
-                           id_col: str = "vec_id") -> DataFrame:
+def ann_topk_bruteforce_np(emb: DataFrame, queries_pdf,
+                           k: int = 10) -> DataFrame:
     """Numpy/Arrow scale path for brute-force top-k: the query matrix
     (small) is closed over and shipped to every task; each Arrow batch
     computes a Q x batch matmul and emits only its local top-k per
@@ -220,16 +213,16 @@ def ann_topk_bruteforce_np(emb: DataFrame, queries_pdf, k: int = 10,
     import numpy as np
     import pandas as pd
 
-    qids = queries_pdf[id_col].to_numpy()
-    qm = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
+    qids = queries_pdf["vec_id"].to_numpy()
+    qm = np.stack(queries_pdf["embedding"].to_numpy()).astype(np.float64)
     qm /= np.linalg.norm(qm, axis=1, keepdims=True)
 
     schema = "qid long, nid long, cos double"
 
     def _score(batches):
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy()
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             m /= np.linalg.norm(m, axis=1, keepdims=True)
             sims = qm @ m.T  # Q x batch
             kk = min(k + 1, sims.shape[1])  # +1: self may be in batch
@@ -243,7 +236,7 @@ def ann_topk_bruteforce_np(emb: DataFrame, queries_pdf, k: int = 10,
                         out_c.append(sims[qi, j])
             yield pd.DataFrame({"qid": out_q, "nid": out_n, "cos": out_c})
 
-    cand = emb.select(id_col, vec_col).mapInPandas(_score, schema)
+    cand = emb.select("vec_id", "embedding").mapInPandas(_score, schema)
     w = Window.partitionBy("qid").orderBy(
         F.desc(F.round("cos", 6)), F.asc("nid")
     )
@@ -254,17 +247,15 @@ def ann_topk_bruteforce_np(emb: DataFrame, queries_pdf, k: int = 10,
     )
 
 
-def centroids_by_label(emb: DataFrame, vec_col: str = "embedding",
-                       label_col: str = "label",
-                       id_col: str = "vec_id") -> DataFrame:
+def centroids_by_label(emb: DataFrame) -> DataFrame:
     """Element-wise mean vector per label -> (cell, c double[]).
 
     Stand-in coarse quantizer (deterministic; a kmeans fit would slot in
     here).  Shaped as (row, dim) explode -> avg -> re-assemble ordered
     by dim, all native."""
     dims = emb.select(
-        F.col(label_col).alias("cell"),
-        F.posexplode(_to_double(F.col(vec_col))).alias("dim", "x"),
+        F.col("label").alias("cell"),
+        F.posexplode(_to_double(F.col("embedding"))).alias("dim", "x"),
     )
     per_dim = dims.groupBy("cell", "dim").agg(F.avg("x").alias("m"))
     return per_dim.groupBy("cell").agg(
@@ -314,9 +305,7 @@ def _assign_cells(unit: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_centroids(emb: DataFrame, k: int = 8, n_iter: int = 2,
-                     vec_col: str = "embedding",
-                     id_col: str = "vec_id") -> DataFrame:
+def kmeans_centroids(emb: DataFrame, k: int = 8, n_iter: int = 2) -> DataFrame:
     """Lloyd's k-means (spherical: unit vectors, cosine assignment),
     DataFrame-native and fully deterministic -> (cell, c double[]).
 
@@ -328,7 +317,7 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, n_iter: int = 2,
     math, and the corpus is never collected.  n_iter is small and fixed
     (Lloyd's converges fast on clustered data; unrolled iterations also
     keep the lineage bounded)."""
-    unit = cache_once(with_unit_vectors(emb, vec_col, id_col))
+    unit = cache_once(with_unit_vectors(emb))
     assigned = unit.select(
         "vec_id", "v",
         F.pmod(F.col("vec_id"), F.lit(k)).cast("int").alias("cell"),
@@ -355,9 +344,7 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, n_iter: int = 2,
 
 
 def ann_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
-                 nprobe: int = 3, vec_col: str = "embedding",
-                 label_col: str = "label",
-                 id_col: str = "vec_id",
+                 nprobe: int = 3,
                  centroids: DataFrame | None = None) -> DataFrame:
     """IVF ANN: assign corpus to nearest centroid cell, probe the
     nprobe closest cells per query, exact-rank inside the probed cells.
@@ -369,15 +356,15 @@ def ann_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
     cents = (
         centroids
         if centroids is not None
-        else centroids_by_label(emb, vec_col, label_col, id_col)
+        else centroids_by_label(emb)
     )
-    corpus = with_unit_vectors(emb, vec_col, id_col)
+    corpus = with_unit_vectors(emb)
 
     # assign: nearest centroid by cosine (unit corpus x raw centroid —
     # argmax of dot/|c| == argmax of cosine)
     assigned = _assign_cells(corpus, cents)
 
-    q = with_unit_vectors(queries, vec_col, id_col).select(
+    q = with_unit_vectors(queries).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     c2 = cents.select("cell", "c", _norm(F.col("c")).alias("_cn"))
@@ -450,12 +437,9 @@ def _argmin_cell(sv, cells):
     )
 
 
-def pq_codebooks(emb: DataFrame, m: int = 4, ksub: int = 16,
-                 n_iter: int = 2, vec_col: str = "embedding",
-                 id_col: str = "vec_id",
-                 dim: int | None = None,
-                 normalize: bool = True,
-                 train_cap: int = 65536) -> DataFrame:
+def pq_codebooks(emb: DataFrame, m: int = 4, ksub: int = 16, n_iter: int = 2,
+                 vec_col: str = "embedding", dim: int | None = None,
+                 normalize: bool = True, train_cap: int = 65536) -> DataFrame:
     """Product-quantization codebooks -> (block, cell, c double[]):
     per-block Lloyd's k-means over the SUB-vectors of the
     unit-normalized corpus (Jégou et al.'s PQ — the memory-bounded ANN
@@ -487,10 +471,10 @@ def pq_codebooks(emb: DataFrame, m: int = 4, ksub: int = 16,
     # normalize=False feeds PRE-SHAPED vectors (e.g. IVF residuals,
     # which must NOT be re-normalized) straight into the quantizer
     unit = (
-        with_unit_vectors(emb, vec_col, id_col)
+        with_unit_vectors(emb)
         if normalize
         else emb.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             _to_double(F.col(vec_col)).alias("v"),
         )
     )
@@ -542,9 +526,7 @@ def pq_codebooks(emb: DataFrame, m: int = 4, ksub: int = 16,
 
 
 def pq_encode(emb: DataFrame, codebooks: DataFrame, m: int = 4,
-              vec_col: str = "embedding",
-              id_col: str = "vec_id",
-              dim: int | None = None,
+              vec_col: str = "embedding", dim: int | None = None,
               normalize: bool = True) -> DataFrame:
     """(vec_id, codes int[]): nearest-cell code per block — the m-byte
     compressed representation the ADC scan reads instead of the float
@@ -557,10 +539,10 @@ def pq_encode(emb: DataFrame, codebooks: DataFrame, m: int = 4,
     # normalize=False feeds PRE-SHAPED vectors (e.g. IVF residuals,
     # which must NOT be re-normalized) straight into the quantizer
     unit = (
-        with_unit_vectors(emb, vec_col, id_col)
+        with_unit_vectors(emb)
         if normalize
         else emb.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             _to_double(F.col(vec_col)).alias("v"),
         )
     )
@@ -642,13 +624,10 @@ def _adc_fold(codes_col, luts_col):
     )
 
 
-def pq_topk_adc(emb: DataFrame, queries: DataFrame, k: int = 10,
-                m: int = 4, ksub: int = 16, n_iter: int = 2,
-                vec_col: str = "embedding",
-                id_col: str = "vec_id",
+def pq_topk_adc(emb: DataFrame, queries: DataFrame, k: int = 10, m: int = 4,
+                ksub: int = 16, n_iter: int = 2,
                 codebooks: DataFrame | None = None,
-                codes: DataFrame | None = None,
-                refine: int = 0,
+                codes: DataFrame | None = None, refine: int = 0,
                 dim: int | None = None) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k: queries stay
     full-precision, the corpus is its PQ codes; score(q, v) =
@@ -680,20 +659,18 @@ def pq_topk_adc(emb: DataFrame, queries: DataFrame, k: int = 10,
     # one dim probe feeds the whole chain (the naive form ran the
     # same single-row parquet job three times)
     first_dim = dim if dim is not None else emb.select(
-        F.size(_to_double(F.col(vec_col))).alias("d")
+        F.size(_to_double(F.col("embedding"))).alias("d")
     ).first()["d"]
     dim = first_dim
     if codebooks is None:
-        codebooks = pq_codebooks(emb, m=m, ksub=ksub, n_iter=n_iter,
-                                 vec_col=vec_col, id_col=id_col, dim=dim)
+        codebooks = pq_codebooks(emb, m=m, ksub=ksub, n_iter=n_iter, dim=dim)
     if codes is None:
-        codes = pq_encode(emb, codebooks, m=m, vec_col=vec_col,
-                          id_col=id_col, dim=dim)
+        codes = pq_encode(emb, codebooks, m=m, dim=dim)
     first_dim = dim if dim is not None else emb.select(
-        F.size(_to_double(F.col(vec_col))).alias("d")
+        F.size(_to_double(F.col("embedding"))).alias("d")
     ).first()["d"]
     dsub = first_dim // m
-    qunit = with_unit_vectors(queries, vec_col, id_col).select(
+    qunit = with_unit_vectors(queries).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     # Pack each query's m·ksub contributions into one row (array over
@@ -724,7 +701,7 @@ def pq_topk_adc(emb: DataFrame, queries: DataFrame, k: int = 10,
     shortlist = ranked.where(F.col("rank") <= int(refine)).select(
         "qid", "vec_id"
     )
-    unit = with_unit_vectors(emb, vec_col, id_col)
+    unit = with_unit_vectors(emb)
     exact = (
         shortlist.join(unit, "vec_id")
         .join(F.broadcast(qunit), "qid")
@@ -745,11 +722,8 @@ def pq_topk_adc(emb: DataFrame, queries: DataFrame, k: int = 10,
 
 
 def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
-                n_cells: int = 8, nprobe: int = 4,
-                m: int = 16, ksub: int = 32, n_iter: int = 2,
-                refine: int = 0,
-                vec_col: str = "embedding",
-                id_col: str = "vec_id") -> DataFrame:
+                n_cells: int = 8, nprobe: int = 4, m: int = 16, ksub: int = 32,
+                n_iter: int = 2, refine: int = 0) -> DataFrame:
     """IVF-PQ with residual encoding — the production ANN architecture
     (FAISS's IVFx,PQy): a coarse k-means quantizer prunes the searched
     fraction to ~nprobe/n_cells, and inside the probed cells vectors
@@ -772,27 +746,26 @@ def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     rows-only driver check; recall pinned by pytest (the IVF/PQ
     policy)."""
     first_dim = emb.select(
-        F.size(_to_double(F.col(vec_col))).alias("d")
+        F.size(_to_double(F.col("embedding"))).alias("d")
     ).first()["d"]
     dsub = first_dim // m
-    cents = kmeans_centroids(emb, k=int(n_cells), n_iter=n_iter,
-                             vec_col=vec_col, id_col=id_col)
-    corpus = with_unit_vectors(emb, vec_col, id_col)
+    cents = kmeans_centroids(emb, k=int(n_cells), n_iter=n_iter)
+    corpus = with_unit_vectors(emb)
     assigned = _assign_cells(corpus, cents).localCheckpoint(eager=True)
     resid = assigned.join(F.broadcast(cents), "cell").select(
         "vec_id", "cell",
         F.zip_with("v", "c", lambda a, b: a - b).alias("r"),
     )
     cb = pq_codebooks(resid, m=m, ksub=ksub, n_iter=n_iter,
-                      vec_col="r", id_col="vec_id", dim=first_dim,
+                      vec_col="r", dim=first_dim,
                       normalize=False)
-    codes = pq_encode(resid, cb, m=m, vec_col="r", id_col="vec_id",
+    codes = pq_encode(resid, cb, m=m, vec_col="r",
                       dim=first_dim, normalize=False)
     codes_cells = codes.join(
         assigned.select("vec_id", "cell"), "vec_id"
     )
 
-    qunit = with_unit_vectors(queries, vec_col, id_col).select(
+    qunit = with_unit_vectors(queries).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     # probe the nprobe max-cosine cells; carry ⟨q, c⟩ as the offset
@@ -845,15 +818,13 @@ def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def centroid_drift(emb: DataFrame, batch_size: int = 200,
-                   vec_col: str = "embedding",
-                   id_col: str = "vec_id") -> DataFrame:
+def centroid_drift(emb: DataFrame, batch_size: int = 200) -> DataFrame:
     """Ingestion-batch embedding drift: cosine between consecutive
     batch centroids — (batch, n_vecs, cos_prev, drift) with
     drift = 1 − cos.  The monitor that catches "the encoder changed"
     or "the corpus mix shifted" before a retrain consumes the data.
 
-    Batches are `id_col // batch_size` (deterministic pseudo-time; at
+    Batches are `vec_id // batch_size` (deterministic pseudo-time; at
     100 TB pass a real ingestion-commit column instead).  Determinism:
     per-dim sums are EXACT int64 micro-units (round(x·10⁶) — float
     inputs widen to double identically in both engines first), so
@@ -867,9 +838,9 @@ def centroid_drift(emb: DataFrame, batch_size: int = 200,
     """
     per_dim = (
         emb.select(
-            (F.col(id_col) / F.lit(int(batch_size)))
+            (F.col("vec_id") / F.lit(int(batch_size)))
             .cast("long").alias("b"),
-            F.posexplode(_to_double(F.col(vec_col))).alias("dim", "x"),
+            F.posexplode(_to_double(F.col("embedding"))).alias("dim", "x"),
         )
         .groupBy("b", "dim")
         .agg(
@@ -899,9 +870,7 @@ def centroid_drift(emb: DataFrame, batch_size: int = 200,
 
 
 def dim_ablation_overlap(emb: DataFrame, n_queries: int = 5, k: int = 10,
-                         keep_dims: int | None = None,
-                         vec_col: str = "embedding",
-                         id_col: str = "vec_id") -> DataFrame:
+                         keep_dims: int | None = None) -> DataFrame:
     """Matryoshka-style dimension ablation: for each query, the overlap
     between the full-dimension cosine top-k and the top-k computed on
     the first `keep_dims` dimensions (re-normalized) —
@@ -918,14 +887,14 @@ def dim_ablation_overlap(emb: DataFrame, n_queries: int = 5, k: int = 10,
     scan is one pass over the corpus with an O(d) in-row fold; the
     overlap join touches 2·k rows per query.
     """
-    u_full = with_unit_vectors(emb, vec_col, id_col)
+    u_full = with_unit_vectors(emb)
     d = emb.select(
-        F.size(_to_double(F.col(vec_col))).alias("d")
+        F.size(_to_double(F.col("embedding"))).alias("d")
     ).first()["d"]
     kd = keep_dims if keep_dims is not None else d // 2
     trunc = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.slice(_to_double(F.col(vec_col)), 1, int(kd)).alias("_tv"),
+        "vec_id",
+        F.slice(_to_double(F.col("embedding")), 1, int(kd)).alias("_tv"),
     )
     u_trunc = (
         trunc.withColumn("_n", _norm(F.col("_tv")))
@@ -972,9 +941,8 @@ def dim_ablation_overlap(emb: DataFrame, n_queries: int = 5, k: int = 10,
     )
 
 
-def int8_quantize_recall(emb: DataFrame, n_queries: int = 5, k: int = 10,
-                         vec_col: str = "embedding",
-                         id_col: str = "vec_id") -> DataFrame:
+def int8_quantize_recall(emb: DataFrame, n_queries: int = 5,
+                         k: int = 10) -> DataFrame:
     """Int8 scalar-quantization recall: for each sample query, the
     overlap between the float cosine top-k and the top-k ranked by the
     symmetric-SQ int8 score — (qid, k, n_overlap, recall).  The go/no-go
@@ -992,7 +960,7 @@ def int8_quantize_recall(emb: DataFrame, n_queries: int = 5, k: int = 10,
     the map stage that writes the int8 index); scoring is two brute
     scans over broadcast sample queries, 2·k rows per query join after.
     """
-    u = with_unit_vectors(emb, vec_col, id_col)
+    u = with_unit_vectors(emb)
     qz = u.withColumn(
         "_s", F.array_max(F.transform("v", lambda x: F.abs(x)))
     ).select(
@@ -1055,7 +1023,7 @@ def _cov_from_moments(g: DataFrame) -> DataFrame:
     )
 
 
-def _gram_partials(emb: DataFrame, vec_col: str) -> DataFrame:
+def _gram_partials(emb: DataFrame) -> DataFrame:
     """Per-partition integer Gram: one mapInPandas pass computes the
     µ-snapped Xᵀ X, Σx, and row count of each partition with NO
     shuffle of exploded rows; the returned d(d+1)/2-per-partition
@@ -1081,7 +1049,7 @@ def _gram_partials(emb: DataFrame, vec_col: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             Xu = snap_np(X, 6)
             if d is None:
                 d = Xu.shape[1]
@@ -1107,12 +1075,10 @@ def _gram_partials(emb: DataFrame, vec_col: str) -> DataFrame:
             "sab": [Decimal(int(G[a, b])) for a, b in zip(iu, ju)],
         })
 
-    return emb.select(vec_col).mapInPandas(_partial, schema)
+    return emb.select("embedding").mapInPandas(_partial, schema)
 
 
-def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
-                         id_col: str = "vec_id",
-                         mode: str = "exact") -> DataFrame:
+def embedding_covariance(emb: DataFrame, mode: str = "exact") -> DataFrame:
     """Exact population covariance of the embedding matrix — the PCA
     precursor (eigen-decompose the returned d×d matrix on the driver;
     it is metadata-sized at any corpus scale):
@@ -1141,7 +1107,7 @@ def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
       are bit-identical to the exact form's — same cov to the last
       ulp, not an approximation."""
     if mode == "gram":
-        g = _gram_partials(emb, vec_col).groupBy("i", "j").agg(
+        g = _gram_partials(emb).groupBy("i", "j").agg(
             F.sum("n").alias("n"),
             F.sum("sa").alias("sa"),
             F.sum("sb").alias("sb"),
@@ -1149,8 +1115,8 @@ def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
         )
         return _cov_from_moments(g)
     x = emb.select(
-        F.col(id_col).alias("rid"),
-        F.posexplode(vec_col).alias("dim0", "v"),
+        F.col("vec_id").alias("rid"),
+        F.posexplode("embedding").alias("dim0", "v"),
     ).select(
         "rid",
         (F.col("dim0") + 1).alias("dim"),
@@ -1167,9 +1133,8 @@ def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
     return _cov_from_moments(g)
 
 
-def triplet_mining(emb: DataFrame, queries: DataFrame, k: int = 10,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   label_col: str = "label") -> DataFrame:
+def triplet_mining(emb: DataFrame, queries: DataFrame,
+                   k: int = 10) -> DataFrame:
     """Hard-negative triplet mining for contrastive training: per
     anchor, the nearest SAME-label vector (the positive) and the k
     nearest DIFFERENT-label vectors (the hard negatives), with the
@@ -1190,11 +1155,10 @@ def triplet_mining(emb: DataFrame, queries: DataFrame, k: int = 10,
     ride the SAME scored relation (one window sort per ranking, k
     small).  Past brute-force scale, feed the scored relation from
     ann_topk_ivf's probe set instead; the mining logic is unchanged."""
-    corpus = with_unit_vectors(emb, vec_col, id_col)
-    lbl = emb.select(F.col(id_col).alias("vec_id"),
-                     F.col(label_col).alias("n_label"))
+    corpus = with_unit_vectors(emb)
+    lbl = emb.select("vec_id", F.col("label").alias("n_label"))
     corpus = corpus.join(lbl, "vec_id")
-    q = with_unit_vectors(queries, vec_col, id_col).join(lbl, "vec_id") \
+    q = with_unit_vectors(queries).join(lbl, "vec_id") \
         .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
                 F.col("n_label").alias("q_label"))
     scored = (
@@ -1226,9 +1190,7 @@ def triplet_mining(emb: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def auc_by_label(emb: DataFrame, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 label_col: str = "label") -> DataFrame:
+def auc_by_label(emb: DataFrame) -> DataFrame:
     """One-vs-rest retrieval ROC-AUC per label — the embedding-space
     eval primitive: can "cosine to the class centroid" rank same-label
     vectors above the rest?  (label, n_pos, n_neg, auc) per label.
@@ -1252,9 +1214,9 @@ def auc_by_label(emb: DataFrame, id_col: str = "vec_id",
     the AUC window is metadata-sized per label.
     """
     base = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(label_col).alias("lab"),
-        F.posexplode(_to_double(F.col(vec_col))).alias("dim", "x"),
+        F.col("vec_id").alias("vid"),
+        F.col("label").alias("lab"),
+        F.posexplode(_to_double(F.col("embedding"))).alias("dim", "x"),
     ).select(
         "vid", "lab", "dim",
         snap("x", 6).alias("xu"),
@@ -1326,9 +1288,8 @@ NDCG_W10 = [1000000, 630930, 500000, 430677, 386853, 356207,
             333333, 315465, 301030, 289065]
 
 
-def ndcg_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
-                   vec_col: str = "embedding",
-                   id_col: str = "vec_id") -> DataFrame:
+def ndcg_int8_at_k(emb: DataFrame, n_queries: int = 5,
+                   k: int = 10) -> DataFrame:
     """Position-weighted ranking quality of the int8 index:
     NDCG@k of the symmetric-SQ int8 ranking against graded relevance
     from the exact cosine ranking (rel = k+1−exact_rank for the exact
@@ -1349,7 +1310,7 @@ def ndcg_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
     """
     if k != 10:
         raise ValueError("NDCG_W10 is precomputed for k=10")
-    u = with_unit_vectors(emb, vec_col, id_col)
+    u = with_unit_vectors(emb)
     qz = u.withColumn(
         "_s", F.array_max(F.transform("v", lambda x: F.abs(x)))
     ).select(
@@ -1425,9 +1386,8 @@ RBO_S10 = [5932493265528, 3412493265528, 2278493265528, 1598093265528,
 RBO_C10 = 16413303309480
 
 
-def rbo_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
-                  vec_col: str = "embedding",
-                  id_col: str = "vec_id") -> DataFrame:
+def rbo_int8_at_k(emb: DataFrame, n_queries: int = 5,
+                  k: int = 10) -> DataFrame:
     """Rank-biased overlap (Webber et al. 2010, truncated at k,
     p=0.9) between the exact-cosine and int8-quantized rankings —
     (qid, k, n_common, rbo_u, rbo).  The third member of the ranking-
@@ -1447,7 +1407,7 @@ def rbo_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
     """
     if k != 10:
         raise ValueError("RBO_S10 is precomputed for k=10")
-    u = with_unit_vectors(emb, vec_col, id_col)
+    u = with_unit_vectors(emb)
     qz = u.withColumn(
         "_s", F.array_max(F.transform("v", lambda x: F.abs(x)))
     ).select(
@@ -1509,9 +1469,8 @@ def rbo_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
     )
 
 
-def mrr_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
-                  vec_col: str = "embedding",
-                  id_col: str = "vec_id") -> DataFrame:
+def mrr_int8_at_k(emb: DataFrame, n_queries: int = 5,
+                  k: int = 10) -> DataFrame:
     """Mean-reciprocal-rank view of int8 quantization loss: where does
     each query's TRUE nearest neighbor (exact-cosine rank 1) land in
     the int8 ranking?  (qid, k, exact_top1, int8_pos, rr_u, rr) — the
@@ -1532,7 +1491,7 @@ def mrr_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
     exact top-1) against k rows per query."""
     if k != 10:
         raise ValueError("the 2520 reciprocal table is for k=10")
-    u = with_unit_vectors(emb, vec_col, id_col)
+    u = with_unit_vectors(emb)
     qz = u.withColumn(
         "_s", F.array_max(F.transform("v", lambda x: F.abs(x)))
     ).select(
@@ -1592,9 +1551,7 @@ def mrr_int8_at_k(emb: DataFrame, n_queries: int = 5, k: int = 10,
     )
 
 
-def pca_project(emb: DataFrame, n_components: int = 4,
-                whiten: bool = False, vec_col: str = "embedding",
-                id_col: str = "vec_id",
+def pca_project(emb: DataFrame, n_components: int = 4, whiten: bool = False,
                 cov_mode: str = "gram") -> DataFrame:
     """(vec_id, label?, pc1..pcP, evr1..evrP): project every embedding
     onto its corpus's top-P principal components — the standard
@@ -1628,10 +1585,10 @@ def pca_project(emb: DataFrame, n_components: int = 4,
     import numpy as np
 
     spark = emb.sparkSession
-    d = len(emb.select(vec_col).first()[0])
+    d = len(emb.select("embedding").first()[0])
     # exact mean (µ-snapped, same units as embedding_covariance)
     mean_rows = (
-        emb.select(F.posexplode(vec_col).alias("dim0", "v"))
+        emb.select(F.posexplode("embedding").alias("dim0", "v"))
         .groupBy("dim0")
         .agg(
             F.sum(snap(F.col("v").cast("double"), 6)).alias("s"),
@@ -1646,7 +1603,7 @@ def pca_project(emb: DataFrame, n_components: int = 4,
     # identical integers to the exact join form (see
     # embedding_covariance), without the d(d+1)/2× exploded shuffle
     cov_rows = embedding_covariance(
-        emb, vec_col, id_col, mode=cov_mode
+        emb, mode=cov_mode
     ).collect()
     cov = np.zeros((d, d))
     for r in cov_rows:
@@ -1667,7 +1624,7 @@ def pca_project(emb: DataFrame, n_components: int = 4,
     P = len(lam)
     pc_cols = ", ".join(f"pc{i + 1} double" for i in range(P))
     evr_cols = ", ".join(f"evr{i + 1} double" for i in range(P))
-    schema = f"{id_col} long, {pc_cols}, {evr_cols}"
+    schema = f"vec_id long, {pc_cols}, {evr_cols}"
     evr_r = [round(float(v), 6) for v in evr]
 
     def _proj(batches):
@@ -1676,21 +1633,20 @@ def pca_project(emb: DataFrame, n_components: int = 4,
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             sc = ((m - mean) @ W.T) * scale
-            out = {id_col: pdf[id_col].to_numpy()}
+            out = {"vec_id": pdf["vec_id"].to_numpy()}
             for i in range(P):
                 out[f"pc{i + 1}"] = np.round(sc[:, i], 6)
             for i in range(P):
                 out[f"evr{i + 1}"] = evr_r[i]
             yield pd.DataFrame(out)
 
-    return emb.select(id_col, vec_col).mapInPandas(_proj, schema)
+    return emb.select("vec_id", "embedding").mapInPandas(_proj, schema)
 
 
-def silhouette_clusters(emb: DataFrame, k: int = 8, n_iter: int = 2,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> DataFrame:
+def silhouette_clusters(emb: DataFrame, k: int = 8,
+                        n_iter: int = 2) -> DataFrame:
     """(cell, n, mean_silhouette): simplified (centroid-based)
     silhouette per k-means cluster — the clustering-quality gauge for
     emb_clusters/ann_ivf: for each point, a = cosine distance to its
@@ -1708,10 +1664,8 @@ def silhouette_clusters(emb: DataFrame, k: int = 8, n_iter: int = 2,
     MICRO-units before the mean (float means are addition-order-
     dependent; integer sums are not) — the same policy as theil's
     micro-nats.  a/b themselves come through max/min (order-free)."""
-    from pyspark.sql import functions as F
-
-    cents = kmeans_centroids(emb, k, n_iter, vec_col, id_col)
-    unit = with_unit_vectors(emb, vec_col, id_col)
+    cents = kmeans_centroids(emb, k, n_iter)
+    unit = with_unit_vectors(emb)
     asg = _assign_cells(unit, cents)
     c2 = cents.select(
         F.col("cell").alias("ccell"), "c",
@@ -1750,9 +1704,7 @@ def silhouette_clusters(emb: DataFrame, k: int = 8, n_iter: int = 2,
     )
 
 
-def embedding_mmd(emb: DataFrame, vec_col: str = "embedding",
-                  id_col: str = "vec_id",
-                  label_col: str = "label") -> DataFrame:
+def embedding_mmd(emb: DataFrame) -> DataFrame:
     """Degree-2 polynomial-kernel MMD² between every pair of embedding
     sources (labels) — the two-sample distribution-shift test a
     training-data pipeline runs before mixing corpora:
@@ -1779,9 +1731,9 @@ def embedding_mmd(emb: DataFrame, vec_col: str = "embedding",
     partial-Gram form noted there); stage 2 joins L·d(d+1)/2 rows
     pairwise — thousands of rows at any corpus size, broadcast-safe."""
     x = emb.select(
-        F.col(label_col).alias("lbl"),
-        F.col(id_col).alias("rid"),
-        F.posexplode(vec_col).alias("dim0", "v"),
+        F.col("label").alias("lbl"),
+        F.col("vec_id").alias("rid"),
+        F.posexplode("embedding").alias("dim0", "v"),
     ).select(
         "lbl", "rid",
         (F.col("dim0") + 1).alias("dim"),
@@ -1829,9 +1781,7 @@ def embedding_mmd(emb: DataFrame, vec_col: str = "embedding",
     )
 
 
-def embedding_mahalanobis(emb: DataFrame, vec_col: str = "embedding",
-                          id_col: str = "vec_id",
-                          label_col: str = "label") -> DataFrame:
+def embedding_mahalanobis(emb: DataFrame) -> DataFrame:
     """(vec_id, label, d_eff, md2, is_outlier): diagonal-covariance
     Mahalanobis distance of every embedding from ITS OWN source's
     centroid — the training-data QA pass that surfaces mislabeled or
@@ -1853,9 +1803,9 @@ def embedding_mahalanobis(emb: DataFrame, vec_col: str = "embedding",
     broadcast-equi-join → per-vector hash-agg, one shuffle keyed by
     vec_id.  No pair joins anywhere."""
     x = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(label_col).alias("lbl"),
-        F.posexplode(vec_col).alias("dim0", "v"),
+        F.col("vec_id").alias("vid"),
+        F.col("label").alias("lbl"),
+        F.posexplode("embedding").alias("dim0", "v"),
     ).select(
         "vid", "lbl",
         (F.col("dim0") + 1).alias("dim"),
@@ -1886,8 +1836,7 @@ def embedding_mahalanobis(emb: DataFrame, vec_col: str = "embedding",
     )
 
 
-def embedding_anisotropy(emb: DataFrame, vec_col: str = "embedding",
-                         id_col: str = "vec_id") -> DataFrame:
+def embedding_anisotropy(emb: DataFrame) -> DataFrame:
     """(n_vecs, n_dims, avg_cos, mean_norm2): corpus anisotropy — the
     average cosine similarity between all DISTINCT vector pairs, via
     the exact identity for unit vectors
@@ -1908,7 +1857,7 @@ def embedding_anisotropy(emb: DataFrame, vec_col: str = "embedding",
 
     Scale: one posexplode hash-agg to d rows, one d-row aggregate.
     At 100 TB the d-row shuffle is metadata."""
-    u = with_unit_vectors(emb, vec_col, id_col)
+    u = with_unit_vectors(emb)
     ex = u.select(
         F.posexplode("v").alias("dim", "x")
     ).select(

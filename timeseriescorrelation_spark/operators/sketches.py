@@ -177,8 +177,8 @@ def cms_sketch(df: DataFrame, item_col: str, d: int = 3,
     )
 
 
-def hdr_sketch(df: DataFrame, keys: list[str], value_col: str = "value",
-               sub_bits: int = 5, decimals: int = 2) -> DataFrame:
+def hdr_sketch(df: DataFrame, keys: list[str], sub_bits: int = 5,
+               decimals: int = 2) -> DataFrame:
     """Mergeable log2-bucket quantile sketch (HDR-histogram layout):
     (keys..., idx, cnt).
 
@@ -208,7 +208,7 @@ def hdr_sketch(df: DataFrame, keys: list[str], value_col: str = "value",
     the same bounded-shuffle shape as `hll_sketch`."""
     s = sub_bits
     v = F.greatest(
-        snap(F.col(value_col), decimals), F.lit(1).cast("long")
+        snap(F.col("value"), decimals), F.lit(1).cast("long")
     )
     base = df.select(*keys, v.alias("_v")).withColumn(
         "_e", (F.length(F.bin(F.col("_v"))) - 1).cast("long")
@@ -476,10 +476,8 @@ def hll_rolling(regs: DataFrame, keys: list[str], day_col: str,
     )
 
 
-def heavy_hitters_mg(events: DataFrame, keys: list[str],
-                     item_col: str, k: int = 8,
-                     ts_col: str = "ts",
-                     tie_col: str | None = None) -> DataFrame:
+def heavy_hitters_mg(events: DataFrame, keys: list[str], item_col: str,
+                     k: int = 8, tie_col: str | None = None) -> DataFrame:
     """Misra-Gries heavy hitters per key group with k counters of
     state — (keys..., item, mg_count, n_seen).  The bounded-memory
     answer to "top items over an unbounded stream": any item with true
@@ -487,7 +485,7 @@ def heavy_hitters_mg(events: DataFrame, keys: list[str],
     true_count − n/(k+1) ≤ mg_count ≤ true_count.
 
     The summary depends on PROCESSING ORDER, so the order is part of
-    the contract: (ts_col, tie_col) ascending.  The streaming twin
+    the contract: (ts, tie_col) ascending.  The streaming twin
     (streaming/topk_stream.py) carries the counter map across
     micro-batches and replays the identical sequence — asserted
     bit-equal in tests/test_topk_stream.py.  For order-independent
@@ -503,7 +501,7 @@ def heavy_hitters_mg(events: DataFrame, keys: list[str],
     kk = int(k)
     out_fields = ", ".join(f"{c} string" for c in keys)
     schema = f"{out_fields}, item string, mg_count long, n_seen long"
-    sort_cols = [ts_col] + ([tie_col] if tie_col else [])
+    sort_cols = ["ts"] + ([tie_col] if tie_col else [])
 
     def _mg(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
@@ -537,8 +535,7 @@ def heavy_hitters_mg(events: DataFrame, keys: list[str],
     ).groupBy(*keys).applyInPandas(_mg, schema)
 
 
-def bitmap_day_words(events: DataFrame, id_col: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
+def bitmap_day_words(events: DataFrame) -> DataFrame:
     """Per-day activity bitmaps, roaring-style: actor ids pack into
     32-bit words (word index = id DIV 32, bit = id % 32) so one int64
     row answers membership for 32 actors.  32-bit, not 64: a set bit
@@ -553,9 +550,9 @@ def bitmap_day_words(events: DataFrame, id_col: str = "user_id",
     word-level equi-join on (bkt), never a row-per-actor join.  This
     is the bitmap-index trick OLAP engines use for segment overlap."""
     act = events.select(
-        F.date_trunc("day", F.col(ts_col)).alias("day_ts"),
-        (F.col(id_col).cast("long") / 32).cast("long").alias("bkt"),
-        F.pmod(F.col(id_col).cast("long"), F.lit(32)).cast("int")
+        F.date_trunc("day", F.col("ts")).alias("day_ts"),
+        (F.col("user_id").cast("long") / 32).cast("long").alias("bkt"),
+        F.pmod(F.col("user_id").cast("long"), F.lit(32)).cast("int")
          .alias("bit"),
     ).distinct()
     return act.groupBy("day_ts", "bkt").agg(
@@ -565,8 +562,7 @@ def bitmap_day_words(events: DataFrame, id_col: str = "user_id",
     )
 
 
-def bitmap_retention(events: DataFrame, id_col: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
+def bitmap_retention(events: DataFrame) -> DataFrame:
     """Day-over-day actor retention computed ENTIRELY on bitmap words:
 
         (day_ts, active, active_prev, retained, new_actors, churned,
@@ -578,7 +574,7 @@ def bitmap_retention(events: DataFrame, id_col: str = "user_id",
     sketch error): bitmaps are lossless membership, just 32× denser
     than rows.  growth_accounting gives the same ledger row-shaped;
     this is the form that survives 10⁹-actor days."""
-    words = bitmap_day_words(events, id_col, ts_col)
+    words = bitmap_day_words(events)
     # rename the join key on one side: both sides descend from the
     # same `words` plan, so a["bkt"] == b["bkt"] resolves to the SAME
     # attribute and Spark logs "trivially true equals predicate" on

@@ -36,24 +36,22 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import wide
 
 
-def with_salt(df: DataFrame, buckets: int = 16,
-              row_col: str = "turn_idx", salt_col: str = "salt") -> DataFrame:
+def with_salt(df: DataFrame, buckets: int = 16) -> DataFrame:
     """Add a deterministic salt in [0, buckets) varying per row."""
     return df.withColumn(
-        salt_col,
-        F.pmod(F.xxhash64(F.col(row_col)), F.lit(buckets)).cast("int"),
+        "salt",
+        F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(buckets)).cast("int"),
     )
 
 
-def salted_repartition(df: DataFrame, n_parts: int, key_col: str = "conv_id",
-                       buckets: int = 16,
-                       row_col: str = "turn_idx") -> DataFrame:
+def salted_repartition(df: DataFrame, n_parts: int,
+                       buckets: int = 16) -> DataFrame:
     """Hash-repartition on (key, salt): heavy keys spread over
     ``buckets`` partitions, light keys unaffected (one bucket each
     lands in one partition anyway).  Follow with sortWithinPartitions
     for order-sensitive writes."""
-    return with_salt(df, buckets, row_col).repartition(
-        n_parts, key_col, "salt"
+    return with_salt(df, buckets).repartition(
+        n_parts, "conv_id", "salt"
     ).drop("salt")
 
 
@@ -97,8 +95,7 @@ def stats_two_phase(series: DataFrame, buckets: int = 16) -> DataFrame:
     )
 
 
-def key_skew_report(series: DataFrame, group_col: str = "metric",
-                    key_col: str = "conv_id") -> DataFrame:
+def key_skew_report(series: DataFrame) -> DataFrame:
     """(group, n_keys, n_rows, gini_u, top1_share_u): how skewed is the
     per-key row distribution inside each group — the measurement that
     DECIDES when the salting above is worth its shuffle (BASELINE's
@@ -120,16 +117,16 @@ def key_skew_report(series: DataFrame, group_col: str = "metric",
     buckets first (same telescoped-prefix trick as
     intervals.max_concurrency); at the engine's conv_id cardinalities
     the single per-group window is the right plan."""
-    counts = series.groupBy(group_col, key_col).agg(
+    counts = series.groupBy("metric", "conv_id").agg(
         F.count(F.lit(1)).alias("x")
     )
     from pyspark.sql import Window
 
-    w = Window.partitionBy(group_col).orderBy("x", key_col)
+    w = Window.partitionBy("metric").orderBy("x", "conv_id")
     ranked = counts.select(
-        group_col, "x", F.row_number().over(w).alias("i")
+        "metric", "x", F.row_number().over(w).alias("i")
     )
-    g = ranked.groupBy(group_col).agg(
+    g = ranked.groupBy("metric").agg(
         wide(F.count(F.lit(1))).alias("n"),
         F.sum(wide("x")).alias("sx"),
         F.sum(wide("i") * wide("x")).alias("six"),
@@ -140,7 +137,7 @@ def key_skew_report(series: DataFrame, group_col: str = "metric",
     ) * F.col("sx")
     den = F.col("n") * F.col("sx")
     return g.select(
-        F.col(group_col),
+        F.col("metric"),
         F.col("n").cast("long").alias("n_keys"),
         F.col("sx").cast("long").alias("n_rows"),
         F.floor(

@@ -373,9 +373,7 @@ def process_capability(series: DataFrame, lsl: float, usl: float,
     )
 
 
-def g_chart(events: DataFrame, adverse_type: str = "error",
-            cat_col: str = "event_type", user_col: str = "user_id",
-            ts_col: str = "ts", order_col: str = "event_id") -> DataFrame:
+def g_chart(events: DataFrame, adverse_type: str = "error") -> DataFrame:
     """(n_gaps, g_bar, ucl, n_above, max_gap, pct_above): G-chart
     (geometric chart) summary over events-between-adverse-events — the
     SPC form for RARE events where p/c charts starve ("how many
@@ -398,12 +396,12 @@ def g_chart(events: DataFrame, adverse_type: str = "error",
     adverse rows → one pooled aggregate."""
     from timeseriescorrelation_spark.functions.timeutil import epoch_us
 
-    w = Window.partitionBy(user_col).orderBy(
-        epoch_us(F.col(ts_col)), order_col
+    w = Window.partitionBy("user_id").orderBy(
+        epoch_us(F.col("ts")), "event_id"
     )
     pos = events.select(
-        F.col(user_col).alias("u"),
-        F.col(cat_col).alias("t"),
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("t"),
         F.row_number().over(w).alias("pos"),
     )
     err = pos.where(F.col("t") == adverse_type)

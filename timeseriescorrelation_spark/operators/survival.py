@@ -48,13 +48,13 @@ from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 M_U = 1_000_000.0
 
 
-def _risk_events(series: DataFrame, keys: list[str], conv_col: str,
-                 ts_col: str, horizon_us: int) -> DataFrame:
+def _risk_events(series: DataFrame, keys: list[str],
+                 horizon_us: int) -> DataFrame:
     """Shared KM/NA scaffold: (keys..., dur, d, n_risk) — death count
     and at-risk count at every uncensored event duration."""
-    ev = series.groupBy(*keys, conv_col).agg(
-        F.min(epoch_us(F.col(ts_col))).alias("t0"),
-        F.max(epoch_us(F.col(ts_col))).alias("t1"),
+    ev = series.groupBy(*keys, "conv_id").agg(
+        F.min(epoch_us(F.col("ts"))).alias("t0"),
+        F.max(epoch_us(F.col("ts"))).alias("t1"),
     )
     fr = ev.groupBy(*keys).agg(F.max("t1").alias("fmax"))
     d = ev.join(F.broadcast(fr), keys).select(
@@ -82,7 +82,6 @@ def _risk_events(series: DataFrame, keys: list[str], conv_col: str,
 
 
 def km_survival(series: DataFrame, keys: list[str] | None = None,
-                conv_col: str = "conv_id", ts_col: str = "ts",
                 censor_horizon_s: int = 3600) -> DataFrame:
     """(keys..., t_us, n_risk, d_events, logsurv_u, surv): the KM curve
     evaluated at every uncensored event time (duration since the
@@ -90,8 +89,7 @@ def km_survival(series: DataFrame, keys: list[str] | None = None,
     event lies within `censor_horizon_s` of its key's frontier is
     censored (still alive when observation ended)."""
     keys = keys or ["metric"]
-    events = _risk_events(series, keys, conv_col, ts_col,
-                          int(censor_horizon_s) * 1_000_000)
+    events = _risk_events(series, keys, int(censor_horizon_s) * 1_000_000)
     lnu = F.when(
         F.col("n_risk") > F.col("d"),
         snap(
@@ -129,7 +127,6 @@ def km_survival(series: DataFrame, keys: list[str] | None = None,
 
 
 def na_hazard(series: DataFrame, keys: list[str] | None = None,
-              conv_col: str = "conv_id", ts_col: str = "ts",
               censor_horizon_s: int = 3600) -> DataFrame:
     """(keys..., t_us, n_risk, d_events, cumhaz_u, cumhaz): the
     Nelson–Aalen cumulative-hazard estimator over the same
@@ -151,8 +148,7 @@ def na_hazard(series: DataFrame, keys: list[str] | None = None,
     Scale notes: identical to km_survival — map-side collapse to one
     row per (key, conv), then windows over distinct durations."""
     keys = keys or ["metric"]
-    events = _risk_events(series, keys, conv_col, ts_col,
-                          int(censor_horizon_s) * 1_000_000)
+    events = _risk_events(series, keys, int(censor_horizon_s) * 1_000_000)
     inc = snap(F.col("d").cast("double") / F.col("n_risk").cast("double"), 6)
     w_cum = (
         Window.partitionBy(*keys)
@@ -174,7 +170,6 @@ def na_hazard(series: DataFrame, keys: list[str] | None = None,
 
 
 def logrank_weekend(series: DataFrame, keys: list[str] | None = None,
-                    conv_col: str = "conv_id", ts_col: str = "ts",
                     censor_horizon_s: int = 3600) -> DataFrame:
     """(keys..., n_conv_wkend, n_conv_wkday, o1, e1, v, z, chi2): the
     log-rank test comparing KM survival of WEEKEND-started vs
@@ -196,9 +191,9 @@ def logrank_weekend(series: DataFrame, keys: list[str] | None = None,
     windows — the km_survival shape with a 2-arm split, no grids."""
     keys = keys or ["metric"]
     h_us = int(censor_horizon_s) * 1_000_000
-    ev = series.groupBy(*keys, conv_col).agg(
-        F.min(epoch_us(F.col(ts_col))).alias("t0"),
-        F.max(epoch_us(F.col(ts_col))).alias("t1"),
+    ev = series.groupBy(*keys, "conv_id").agg(
+        F.min(epoch_us(F.col("ts"))).alias("t0"),
+        F.max(epoch_us(F.col("ts"))).alias("t1"),
     )
     fr = ev.groupBy(*keys).agg(F.max("t1").alias("fmax"))
     g1 = weekday(F.timestamp_micros("t0")).isin(0, 6).cast("long")
@@ -274,14 +269,13 @@ GAMMA_EM = 0.5772156649015329
 
 
 def _cox_risk_table(series: DataFrame, keys: list[str],
-                    conv_col: str, ts_col: str,
                     h_us: int) -> DataFrame:
     """Shared Cox/log-rank death-time table: (keys..., d1, d0, n1, n0)
     at every pooled uncensored death duration, arm 1 = weekend-started
     conversations (`timeutil.weekday`)."""
-    ev = series.groupBy(*keys, conv_col).agg(
-        F.min(epoch_us(F.col(ts_col))).alias("t0"),
-        F.max(epoch_us(F.col(ts_col))).alias("t1"),
+    ev = series.groupBy(*keys, "conv_id").agg(
+        F.min(epoch_us(F.col("ts"))).alias("t0"),
+        F.max(epoch_us(F.col("ts"))).alias("t1"),
     )
     fr = ev.groupBy(*keys).agg(F.max("t1").alias("fmax"))
     g1 = weekday(F.timestamp_micros("t0")).isin(0, 6).cast("long")
@@ -337,7 +331,6 @@ def _cox_score_pass(r: DataFrame, keys: list[str],
 
 
 def cox_weekend(series: DataFrame, keys: list[str] | None = None,
-                conv_col: str = "conv_id", ts_col: str = "ts",
                 censor_horizon_s: int = 3600) -> DataFrame:
     """(keys..., n_deaths, beta, hazard_ratio, se, z): one-covariate
     Cox proportional-hazards fit per key — covariate x ∈ {0,1} =
@@ -360,8 +353,7 @@ def cox_weekend(series: DataFrame, keys: list[str] | None = None,
     agg + one partitioned DESC-range window); each Newton pass is a
     broadcast of a |keys|-row β table + one hash agg."""
     keys = keys or ["metric"]
-    r = _cox_risk_table(series, keys, conv_col, ts_col,
-                        int(censor_horizon_s) * 1_000_000)
+    r = _cox_risk_table(series, keys, int(censor_horizon_s) * 1_000_000)
     m = F.lit(1.0e6)
 
     def step(sc: DataFrame, prev_beta: DataFrame | None) -> DataFrame:
@@ -446,7 +438,6 @@ LN_HALF_U = -693148  # first integer micro-nat level with S < 0.5
 
 
 def median_survival(series: DataFrame, keys: list[str] | None = None,
-                    conv_col: str = "conv_id", ts_col: str = "ts",
                     censor_horizon_s: int = 3600) -> DataFrame:
     """(keys..., median_survival_s, final_surv, last_t_s): the KM
     median — the first uncensored duration where S(t) drops to or
@@ -464,7 +455,7 @@ def median_survival(series: DataFrame, keys: list[str] | None = None,
     Scale: km_survival's shape + one filtered min and one min/max
     agg."""
     keys = keys or ["metric"]
-    km = km_survival(series, keys, conv_col, ts_col, censor_horizon_s)
+    km = km_survival(series, keys, censor_horizon_s)
     qual = km.where(
         (F.col("logsurv_u") <= F.lit(LN_HALF_U))
         | (F.col("surv") == 0.0)
@@ -572,9 +563,7 @@ def gpd_tail(series: DataFrame, keys: list[str] | None = None,
 
 
 def weibull_fit(series: DataFrame, keys: list[str] | None = None,
-                conv_col: str = "conv_id", ts_col: str = "ts",
-                censor_horizon_s: int = 3600,
-                min_n: int = 10) -> DataFrame:
+                censor_horizon_s: int = 3600, min_n: int = 10) -> DataFrame:
     """(keys..., n, shape, ln_scale_hours, r2): Weibull parameters of
     the completed conversation-duration distribution via MEDIAN-RANK
     REGRESSION (the probability-plot method, Abernethy's standard):
@@ -603,9 +592,9 @@ def weibull_fit(series: DataFrame, keys: list[str] | None = None,
     Scale: per-conv span agg → per-key rank window over |convs| rows
     → one moment hash-agg."""
     keys = keys or ["metric"]
-    ev = series.groupBy(*keys, conv_col).agg(
-        F.min(epoch_us(F.col(ts_col))).alias("t0"),
-        F.max(epoch_us(F.col(ts_col))).alias("t1"),
+    ev = series.groupBy(*keys, "conv_id").agg(
+        F.min(epoch_us(F.col("ts"))).alias("t0"),
+        F.max(epoch_us(F.col("ts"))).alias("t1"),
     )
     fr = ev.groupBy(*keys).agg(F.max("t1").alias("fmax"))
     horizon_us = int(censor_horizon_s) * 1_000_000

@@ -33,8 +33,7 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 BPE_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 
-def text_stats(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def text_stats(docs: DataFrame) -> DataFrame:
     """Per-doc quality stats: (doc_id, n_chars, n_tokens, n_uniq,
     stop_cnt, bpe_cnt, avg_tok_len, stop_ratio).
 
@@ -49,9 +48,9 @@ def text_stats(docs: DataFrame, text_col: str = "text",
     # lowered text in-row (joining a separate tokenize() output back on
     # doc_id would shuffle the whole corpus for a per-row computation)
     joined = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.lower(F.col(text_col)).alias("_lt"),
+        "doc_id",
+        F.length(F.col("text")).alias("n_chars"),
+        F.lower(F.col("text")).alias("_lt"),
     ).withColumn("toks", F.split(F.col("_lt"), r"\s+"))
     return joined.select(
         "doc_id",
@@ -69,14 +68,13 @@ def text_stats(docs: DataFrame, text_col: str = "text",
     )
 
 
-def normalize_text(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def normalize_text(docs: DataFrame) -> DataFrame:
     """Canonical text cleaning for the training pipeline: lowercase,
     strip control characters, collapse whitespace runs to one space,
     trim.  Pure per-row projection (no shuffle); emits the cleaned text
     plus how many characters cleaning removed (a cheap quality signal —
     heavily-cleaned docs are usually junk)."""
-    raw = F.col(text_col)
+    raw = F.col("text")
     cleaned = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(raw), r"[\x00-\x1f\x7f]", " "),
@@ -84,21 +82,20 @@ def normalize_text(docs: DataFrame, text_col: str = "text",
         )
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         cleaned.alias("clean_text"),
         (F.length(raw) - F.length(cleaned)).alias("chars_removed"),
     )
 
 
-def langid_heuristic(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def langid_heuristic(docs: DataFrame) -> DataFrame:
     """Deterministic n-gram-style language heuristic ->
     (doc_id, vowel_ratio, pred_lang).
 
     Buckets the vowel/letter ratio (a real — if crude — char-ngram
     signal; the synthetic corpus is same-vocab so the value here is the
     oracle-checked plumbing, not linguistic accuracy)."""
-    lt = F.lower(F.col(text_col))
+    lt = F.lower(F.col("text"))
     vowels = F.regexp_count(lt, F.lit(r"[aeiou]"))
     letters = F.regexp_count(lt, F.lit(r"[a-z]"))
     ratio = F.when(letters > 0, vowels.cast("double") / letters.cast("double")).otherwise(F.lit(0.0))
@@ -110,14 +107,13 @@ def langid_heuristic(docs: DataFrame, text_col: str = "text",
         .otherwise(F.lit("de"))
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.round(ratio, 6).alias("vowel_ratio"),
         pred.alias("pred_lang"),
     )
 
 
-def doc_fingerprints(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """Order-sensitive positional fingerprint per doc:
 
         fp = sum over positions p (1-based) of p * g(token_p)  mod 2^31,
@@ -127,7 +123,7 @@ def doc_fingerprints(docs: DataFrame, text_col: str = "text",
     reimplementation is avoided by exposing token hashes via the vocab
     path in the driver query instead; this native version uses crc32 for
     the scale path.  Reordering any two distinct tokens changes fp."""
-    t = tokenize(docs, text_col, id_col)
+    t = tokenize(docs)
     g = (
         F.crc32(F.col("tok").cast("binary")) * F.lit(A_MUL) + F.lit(B_ADD)
     ) % F.lit(P31)
@@ -144,11 +140,10 @@ def doc_fingerprints(docs: DataFrame, text_col: str = "text",
     )
 
 
-def doc_fingerprints_vocab(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
+def doc_fingerprints_vocab(docs: DataFrame) -> DataFrame:
     """Oracle-mode fingerprint: g over rank-in-vocabulary token ids
     (ANSI-SQL-replicable; same shape as `doc_fingerprints`)."""
-    t = tokenize(docs, text_col, id_col).select(
+    t = tokenize(docs).select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
     )
     vocab, _ = global_row_number(t.select("tok").distinct(), ["tok"], "tid")
@@ -165,8 +160,7 @@ def doc_fingerprints_vocab(docs: DataFrame, text_col: str = "text",
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Within-document repetition measures (the Gopher/MassiveText
     repetition filters, adapted to whitespace tokens):
 
@@ -181,8 +175,8 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
     corpus scale: a groupBy-token alternative would shuffle every
     token of every document for a per-document answer.
     """
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("t"))
+    toks = F.split(F.lower(F.col("text")), r"\s+")
+    d = docs.select("doc_id", toks.alias("t"))
     n = F.size("t")
     nd = F.size(F.array_distinct("t"))
     idx2 = F.when(
@@ -240,13 +234,13 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
 
 
 def chunk_windows(docs: DataFrame, width: int = 50,
-                  stride: int = 40, text_col: str = "text") -> DataFrame:
+                  stride: int = 40) -> DataFrame:
     """Context-window chunking: token windows of `width` with `stride`,
     the tail covered exactly once (last start = 1 + stride·ceil((n −
     width)/stride)).  In-row generator, no shuffle; emits (doc_id,
     chunk_idx, n_toks, chunk_md5) so downstream checks can verify
     chunk CONTENT, not just counts."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = F.split(F.lower(F.col("text")), r"\s+")
     d = docs.select("doc_id", toks.alias("t"))
     n = F.size("t")
     last_start = F.lit(1) + F.lit(stride) * F.expr(
@@ -310,9 +304,7 @@ def chunk_dup_stats(docs: DataFrame, width: int = 50,
     )
 
 
-def pack_sequences(docs: DataFrame, budget: int = 2048,
-                   group_col: str = "source", text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = 2048) -> DataFrame:
     """Token-budget sequence packing — the training-batch construction
     step: assign docs to fixed-budget packs and report per pack
 
@@ -339,9 +331,9 @@ def pack_sequences(docs: DataFrame, budget: int = 2048,
         F.lit(0),
     )
     d = docs.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.lower(F.col(text_col)), r"\s+")).alias("_nt"),
+        F.col("source").alias("grp"),
+        "doc_id",
+        F.size(F.split(F.lower(F.col("text")), r"\s+")).alias("_nt"),
     ).withColumn(
         "pack_id", F.floor(pre / F.lit(int(budget))).cast("long")
     )
@@ -353,9 +345,7 @@ def pack_sequences(docs: DataFrame, budget: int = 2048,
     )
 
 
-def vocab_growth(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text",
-                 batch_size: int = 100) -> DataFrame:
+def vocab_growth(docs: DataFrame, batch_size: int = 100) -> DataFrame:
     """(batch_id, n_docs, batch_vocab, new_tokens, cum_vocab): the
     Heaps-law vocabulary-growth curve over ingestion order — how many
     NEVER-BEFORE-SEEN tokens each batch of `batch_size` docs
@@ -376,10 +366,10 @@ def vocab_growth(docs: DataFrame, id_col: str = "doc_id",
         const_partition,
     )
 
-    b = F.floor(F.col(id_col) / F.lit(int(batch_size))).cast("long")
+    b = F.floor(F.col("doc_id") / F.lit(int(batch_size))).cast("long")
     toks = docs.select(
         b.alias("batch_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok"),
+        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
     ).where(F.col("tok") != "").distinct()
     per_batch = toks.groupBy("batch_id").agg(
         F.count(F.lit(1)).cast("long").alias("batch_vocab")
@@ -389,7 +379,7 @@ def vocab_growth(docs: DataFrame, id_col: str = "doc_id",
         F.count(F.lit(1)).cast("long").alias("new_tokens")
     )
     ndocs = docs.groupBy(
-        F.floor(F.col(id_col) / F.lit(int(batch_size)))
+        F.floor(F.col("doc_id") / F.lit(int(batch_size)))
         .cast("long").alias("batch_id")
     ).agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     joined = (
@@ -412,9 +402,7 @@ def vocab_growth(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def source_scorecard(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     source_col: str = "source") -> DataFrame:
+def source_scorecard(docs: DataFrame) -> DataFrame:
     """Per-source training-data quality scorecard — the one-screen
     answer to "which corpus slices are worth their tokens": document
     and exact-duplicate counts, tokens/doc, distinct-token ratio,
@@ -437,10 +425,10 @@ def source_scorecard(docs: DataFrame, text_col: str = "text",
     |sources| rows."""
     stops = F.array(*[F.lit(s) for s in STOPWORDS])
     base = docs.select(
-        F.col(source_col).alias("source"),
-        F.md5(F.col(text_col)).alias("_h"),
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.lower(F.col(text_col)).alias("_lt"),
+        "source",
+        F.md5(F.col("text")).alias("_h"),
+        F.length(F.col("text")).alias("n_chars"),
+        F.lower(F.col("text")).alias("_lt"),
     ).withColumn("t", F.split(F.col("_lt"), r"\s+"))
     ints = base.select(
         "source", "_h", "n_chars",
@@ -460,11 +448,10 @@ def source_scorecard(docs: DataFrame, text_col: str = "text",
         F.sum("sc").alias("ss"),
         F.sum("bc").alias("sb"),
     )
-    lid = langid_heuristic(docs, text_col=text_col, id_col=id_col)
+    lid = langid_heuristic(docs)
     lmode = (
         lid.join(
-            docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(source_col).alias("source")),
+            docs.select("doc_id", "source"),
             "doc_id",
         )
         .groupBy("source", "pred_lang")
@@ -498,8 +485,7 @@ def source_scorecard(docs: DataFrame, text_col: str = "text",
     )
 
 
-def text_readability(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def text_readability(docs: DataFrame) -> DataFrame:
     """(doc_id, n_words, n_sentences, n_syllables, flesch, band):
     Flesch reading-ease per document — the classic training-data
     quality signal one tier up from text_stats' token ratios:
@@ -520,12 +506,12 @@ def text_readability(docs: DataFrame, text_col: str = "text",
     display-only.
 
     Scale: in-row, whole-stage-codegen'd, no shuffle."""
-    lt = F.lower(F.col(text_col))
+    lt = F.lower(F.col("text"))
     w = F.regexp_count(lt, F.lit(r"[a-z]+"))
-    s0 = F.regexp_count(F.col(text_col), F.lit(r"[.!?]+"))
+    s0 = F.regexp_count(F.col("text"), F.lit(r"[.!?]+"))
     y = F.regexp_count(lt, F.lit(r"[aeiouy]+"))
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         w.cast("long").alias("n_words"),
         F.greatest(s0, F.lit(1)).cast("long").alias("n_sentences"),
         y.cast("long").alias("n_syllables"),
@@ -544,8 +530,7 @@ def text_readability(docs: DataFrame, text_col: str = "text",
     )
 
 
-def hapax_share(docs: DataFrame, by_col: str = "source",
-                text_col: str = "text") -> DataFrame:
+def hapax_share(docs: DataFrame) -> DataFrame:
     """(source, n_tokens, vocab, hapax, hapax_share, type_token_ratio):
     hapax-legomena share per corpus slice — the vocabulary-health
     companion to zipf_fit/vocab_growth: a healthy natural corpus keeps
@@ -561,9 +546,9 @@ def hapax_share(docs: DataFrame, by_col: str = "source",
     Scale: the (source, token) agg is vocabulary-bounded after
     map-side combine; nothing beyond it sees document text."""
     tok = docs.select(
-        F.col(by_col).alias("src"),
+        F.col("source").alias("src"),
         F.explode(
-            F.split(F.lower(F.col(text_col)), r"\s+")
+            F.split(F.lower(F.col("text")), r"\s+")
         ).alias("t"),
     ).where(F.col("t") != "")
     per_tok = tok.groupBy("src", "t").agg(F.count(F.lit(1)).alias("c"))
@@ -588,8 +573,7 @@ def hapax_share(docs: DataFrame, by_col: str = "source",
     )
 
 
-def charset_report(docs: DataFrame, by_col: str = "source",
-                   text_col: str = "text") -> DataFrame:
+def charset_report(docs: DataFrame) -> DataFrame:
     """(source, n_docs, n_chars, letter_share, digit_share,
     space_share, nonascii_share, punct_share): character-class
     composition per corpus slice — the cheapest encoding-health
@@ -603,7 +587,7 @@ def charset_report(docs: DataFrame, by_col: str = "source",
     sums.  punct = everything not letter/digit/whitespace/non-ASCII.
 
     Scale: in-row counting + one hash agg; |slices| output rows."""
-    t = F.col(text_col)
+    t = F.col("text")
 
     def cnt(pat):
         return (
@@ -611,7 +595,7 @@ def charset_report(docs: DataFrame, by_col: str = "source",
         ).cast("long")
 
     per = docs.select(
-        F.col(by_col).alias("src"),
+        F.col("source").alias("src"),
         F.length(t).cast("long").alias("nc"),
         cnt("[A-Za-z]").alias("letters"),
         cnt("[0-9]").alias("digits"),
@@ -647,9 +631,7 @@ def charset_report(docs: DataFrame, by_col: str = "source",
     )
 
 
-def doc_compressibility(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        level: int = 6) -> DataFrame:
+def doc_compressibility(docs: DataFrame, level: int = 6) -> DataFrame:
     """(doc_id, n_bytes, z_bytes, ratio): zlib compression ratio per
     document — the classic cheap redundancy score in web-corpus
     pipelines (CCNet-style): boilerplate/template/repeated text
@@ -674,11 +656,11 @@ def doc_compressibility(docs: DataFrame, id_col: str = "doc_id",
             lambda s: len(zlib.compress(s.encode("utf-8"), lvl))
         )
 
-    b = F.octet_length(F.col(text_col)).cast("long")
+    b = F.octet_length(F.col("text")).cast("long")
     out = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         b.alias("n_bytes"),
-        _zlen(F.col(text_col)).alias("z_bytes"),
+        _zlen(F.col("text")).alias("z_bytes"),
     )
     return out.select(
         "doc_id", "n_bytes", "z_bytes",
@@ -692,8 +674,7 @@ def doc_compressibility(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def char_entropy(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """(doc_id, n_chars, n_distinct, char_entropy, entropy_norm):
     Shannon entropy of each document's (lowercased) character
     distribution — the cheap gibberish/encoding detector: natural
@@ -710,8 +691,8 @@ def char_entropy(docs: DataFrame, id_col: str = "doc_id",
     map-side to ≤|alphabet| rows per (doc, partition); everything
     after is per-doc aggregates."""
     t = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.lower(F.col(text_col)).alias("_lt"),
+        "doc_id",
+        F.lower(F.col("text")).alias("_lt"),
     ).where(F.length("_lt") > 0)
     chars = t.select(
         "doc_id",
@@ -744,9 +725,7 @@ def char_entropy(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def code_likeness(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  threshold_permille: int = 15) -> DataFrame:
+def code_likeness(docs: DataFrame, threshold_permille: int = 15) -> DataFrame:
     """(doc_id, n_chars, n_lines, n_symbols, n_indents, code_score,
     is_code): prose-vs-code triage for a training-data pipeline —
     the mix decision (how much code does this corpus carry, and do we
@@ -769,12 +748,12 @@ def code_likeness(docs: DataFrame, text_col: str = "text",
 
     Scale: pure in-row expressions, no shuffle at all; compose with
     source_scorecard for the per-source mix."""
-    t = F.col(text_col)
+    t = F.col("text")
 
     def cnt(s: str, sql_lit: str) -> Column:
         return (
             (F.length(t) - F.length(F.expr(
-                f"replace({text_col}, {sql_lit}, '')"
+                f"replace(text, {sql_lit}, '')"
             ))) / F.lit(len(s))
         ).cast("long")
 
@@ -793,7 +772,7 @@ def code_likeness(docs: DataFrame, text_col: str = "text",
     n_chars = F.length(t).cast("long")
     thr = int(threshold_permille)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         (nl + 1).alias("n_lines"),
         n_sym,
@@ -866,9 +845,7 @@ def boilerplate_ngrams(docs: DataFrame, min_df: int = 3,
     )
 
 
-def heaps_fit(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text", n: int = 3,
-              batch_size: int = 50) -> DataFrame:
+def heaps_fit(docs: DataFrame, n: int = 3, batch_size: int = 50) -> DataFrame:
     """(n_batches, beta, ln_k, r2): the Heaps'-law exponent fitted to
     the n-GRAM vocabulary-growth curve — V(N) ≈ K·N^β, the one-number
     answer to "is more data still buying new language?" (β → 0 means
@@ -895,10 +872,7 @@ def heaps_fit(docs: DataFrame, id_col: str = "doc_id",
 
     b = (F.floor(F.col("doc_id") / F.lit(int(batch_size)))
          .cast("long").alias("batch_id"))
-    sh = shingles(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)
-                    .alias("text")), n=n
-    )
+    sh = shingles(docs.select("doc_id", "text"), n=n)
     tk = sh.select(
         F.floor(F.col("doc_id") / F.lit(int(batch_size))).cast("long")
          .alias("batch_id"),
@@ -955,9 +929,7 @@ def heaps_fit(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def langid_confusion(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     label_col: str = "lang") -> DataFrame:
+def langid_confusion(docs: DataFrame) -> DataFrame:
     """(lang, pred_lang, n, share): confusion matrix of the langid
     heuristic against the labeled language column, with each cell's
     share of its TRUE-label row — the eval readout that turns
@@ -967,9 +939,9 @@ def langid_confusion(docs: DataFrame, text_col: str = "text",
 
     Scale: langid is in-row; the matrix is one hash-agg to
     |langs|² cells plus a broadcast-sized row-total join."""
-    pred = langid_heuristic(docs, text_col=text_col, id_col=id_col)
+    pred = langid_heuristic(docs)
     j = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(label_col).alias("lang")
+        "doc_id", "lang"
     ).join(pred, "doc_id")
     cells = j.groupBy("lang", "pred_lang").agg(
         F.count(F.lit(1)).alias("n")
@@ -985,9 +957,7 @@ def langid_confusion(docs: DataFrame, text_col: str = "text",
     )
 
 
-def burrows_delta(docs: DataFrame, top_k: int = 30,
-                  text_col: str = "text",
-                  group_col: str = "source") -> DataFrame:
+def burrows_delta(docs: DataFrame, top_k: int = 30) -> DataFrame:
     """(source_a, source_b, n_words, delta): Burrows' Delta stylometric
     distance between every source pair (Burrows 2002, the standard
     authorship-attribution measure): z-score each source's relative
@@ -1011,9 +981,9 @@ def burrows_delta(docs: DataFrame, top_k: int = 30,
     grid → K-row moment agg → (|sources|²/2)·K pair join of
     METADATA-sized tables."""
     toks = docs.select(
-        F.col(group_col).alias("src"),
+        F.col("source").alias("src"),
         F.explode(
-            F.split(F.lower(F.col(text_col)), r"\s+")
+            F.split(F.lower(F.col("text")), r"\s+")
         ).alias("w"),
     ).where(F.col("w") != "")
     topw = (

@@ -509,8 +509,7 @@ def newey_west(series: DataFrame, key: str = "metric",
     )
 
 
-def crossing_rate(series: DataFrame, key: str = "metric",
-                  ord_col: str = "turn_idx") -> DataFrame:
+def crossing_rate(series: DataFrame, key: str = "metric") -> DataFrame:
     """(metric, day_ts, n, crossings, crossing_rate): mean-crossing
     count per metric-day — how often the (time-ordered) series crosses
     its own daily mean; white noise crosses ≈ half the steps, a
@@ -528,7 +527,7 @@ def crossing_rate(series: DataFrame, key: str = "metric",
         F.col(key).alias("metric"),
         F.date_trunc("day", "ts").alias("day_ts"),
         epoch_us(F.col("ts")).alias("t_us"),
-        F.col(ord_col).cast("long").alias("o"),
+        F.col("turn_idx").cast("long").alias("o"),
         snap("value", VALUE_DECIMALS).alias("c"),
     )
     day = pt.groupBy("metric", "day_ts").agg(

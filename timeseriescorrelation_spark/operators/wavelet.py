@@ -46,8 +46,7 @@ from timeseriescorrelation_spark.operators.acf import hourly_counts_dense
 
 
 def haar_variance(series: DataFrame, keys: list[str] | None = None,
-                  ts_col: str = "ts", max_level: int = 4,
-                  min_blocks: int = 4) -> DataFrame:
+                  max_level: int = 4, min_blocks: int = 4) -> DataFrame:
     """(keys..., level, scale_h, n_blocks, nu2): Haar wavelet variance
     of the dense hourly event-count series at scales 2^1..2^max_level
     hours.
@@ -61,7 +60,7 @@ def haar_variance(series: DataFrame, keys: list[str] | None = None,
     level; linear trend of slope s per hour → nu2_j = s²·2^{3j-4}
     (each block's halves differ by exactly s·4^{j-1})."""
     keys = keys or ["metric"]
-    g = hourly_counts_dense(series, keys, ts_col)
+    g = hourly_counts_dense(series, keys)
     w = F.min("h_us").over(Window.partitionBy(*keys))
     idx = g.select(
         *keys, "y",

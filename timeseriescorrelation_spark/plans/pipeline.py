@@ -91,7 +91,7 @@ def run(
     def stage(name: str, input_df: DataFrame, fn) -> DataFrame:
         return run_stage(
             spark, root, cfg.run_id, name, input_df, fn,
-            key_col="conv_id", n_parts=cfg.n_parts,
+            n_parts=cfg.n_parts,
         )
 
     def dep(name: str) -> DataFrame:

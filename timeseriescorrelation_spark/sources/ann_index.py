@@ -33,21 +33,16 @@ from timeseriescorrelation_spark.operators.similarity import (
 )
 
 
-def build_pq_index(emb: DataFrame, path: str, m: int = 16,
-                   ksub: int = 32, n_iter: int = 2,
-                   vec_col: str = "embedding",
-                   id_col: str = "vec_id",
-                   dim: int | None = None) -> None:
+def build_pq_index(emb: DataFrame, path: str, m: int = 16, ksub: int = 32,
+                   n_iter: int = 2, dim: int | None = None) -> None:
     """Train codebooks (bounded-sample, driver-side) and encode the
     corpus; persist both under `path`."""
-    cb = pq_codebooks(emb, m=m, ksub=ksub, n_iter=n_iter,
-                      vec_col=vec_col, id_col=id_col, dim=dim)
+    cb = pq_codebooks(emb, m=m, ksub=ksub, n_iter=n_iter, dim=dim)
     cb.write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
     cb_back = emb.sparkSession.read.parquet(
         os.path.join(path, "codebooks")
     )
-    codes = pq_encode(emb, cb_back, m=m, vec_col=vec_col,
-                      id_col=id_col, dim=dim)
+    codes = pq_encode(emb, cb_back, m=m, dim=dim)
     codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
 
 
@@ -60,15 +55,11 @@ def load_pq_index(spark: SparkSession, path: str) -> tuple[DataFrame,
     )
 
 
-def pq_index_topk(emb: DataFrame, queries: DataFrame, path: str,
-                  k: int = 10, m: int = 16, ksub: int = 32,
-                  refine: int = 0,
-                  vec_col: str = "embedding",
-                  id_col: str = "vec_id") -> DataFrame:
+def pq_index_topk(emb: DataFrame, queries: DataFrame, path: str, k: int = 10,
+                  m: int = 16, ksub: int = 32, refine: int = 0) -> DataFrame:
     """ADC top-k against a PERSISTED index: no training, no corpus
     re-encode — the serving path.  `emb` is consulted only for the
     refine re-rank's float lookups (and not at all when refine=0)."""
     cb, codes = load_pq_index(emb.sparkSession, path)
     return pq_topk_adc(emb, queries, k=k, m=m, ksub=ksub,
-                       codebooks=cb, codes=codes, refine=refine,
-                       vec_col=vec_col, id_col=id_col)
+                       codebooks=cb, codes=codes, refine=refine)

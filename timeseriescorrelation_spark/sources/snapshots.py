@@ -984,13 +984,12 @@ def remove_orphan_files(spark: SparkSession, table_path: str,
 
 
 def snapshot_merge_cdc(changelog: DataFrame, table_path: str,
-                       key_cols: list[str], op_col: str = "op",
-                       ts_col: str = "ts",
+                       key_cols: list[str],
                        tie_col: str | None = None) -> dict:
     """Apply a CDC changelog in ONE atomic commit — MERGE INTO with
     WHEN MATCHED DELETE: ``changelog`` rows carry the table schema plus
-    an ``op_col`` ('I'/'U' upsert, 'D' delete).  The log is first
-    NETTED per key (latest record by (ts_col, tie_col) wins, so
+    an ``op`` column ('I'/'U' upsert, 'D' delete).  The log is first
+    NETTED per key (latest record by (ts, tie_col) wins, so
     U-then-D nets to a delete and D-then-U to an upsert), then applied
     with the same copy-on-write file surgery as snapshot_merge: only
     files containing a touched key are rewritten, the rest are carried
@@ -998,7 +997,7 @@ def snapshot_merge_cdc(changelog: DataFrame, table_path: str,
 
     Netting before applying is what makes replaying a Debezium/binlog
     batch idempotent and order-safe inside the batch; determinism of
-    the net requires (ts_col, tie_col) to totally order each key's
+    the net requires (ts, tie_col) to totally order each key's
     records (pass the log sequence number as tie_col).
 
     Returns {"version", "files_rewritten", "files_carried",
@@ -1011,7 +1010,7 @@ def snapshot_merge_cdc(changelog: DataFrame, table_path: str,
     from pyspark.sql import functions as F
 
     spark = changelog.sparkSession
-    order = [F.col(ts_col).desc()] + (
+    order = [F.col("ts").desc()] + (
         [F.col(tie_col).desc()] if tie_col else []
     )
     w = Window.partitionBy(*key_cols).orderBy(*order)
@@ -1036,8 +1035,8 @@ def snapshot_merge_cdc(changelog: DataFrame, table_path: str,
     # (op, and ts/tie when they aren't table columns) are projected
     # away, so a log can always carry more context than the table
     table_cols = [c for c in cur.columns if c != "_f"]
-    upserts = netted.where(F.col(op_col) != "D").select(*table_cols)
-    n_deletes = netted.where(F.col(op_col) == "D").count()
+    upserts = netted.where(F.col("op") != "D").select(*table_cols)
+    n_deletes = netted.where(F.col("op") == "D").count()
     keys = netted.select(*key_cols).distinct()
     import re
 

@@ -31,15 +31,14 @@ def read_ticks_csv(spark: SparkSession, path: str,
     )
 
 
-def parse_tick_lines(lines: DataFrame, sep: str = ",",
-                     value_col: str = "value") -> DataFrame:
+def parse_tick_lines(lines: DataFrame, sep: str = ",") -> DataFrame:
     """Raw text lines -> (series_id, ts, value, malformed).
 
     ``lines`` must have a single ``value`` string column (the
     spark.read.text contract).  A line parses iff it splits into 4
     fields with a valid timestamp and a numeric value; everything else
     is kept with malformed=true for quarantine accounting."""
-    parts = F.split(F.col(value_col), sep)
+    parts = F.split(F.col("value"), sep)
     # null-tolerant accessors throughout: ANSI mode (Spark 4 default)
     # raises on malformed input mid-job (bad index, bad cast, bad
     # timestamp); quarantine requires null-on-failure semantics

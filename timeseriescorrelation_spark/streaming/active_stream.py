@@ -35,10 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def stream_trailing_active(stream: DataFrame,
-                           keys: list[str] | None = None,
-                           actor_col: str = "conv_id",
-                           ts_col: str = "ts",
+def stream_trailing_active(stream: DataFrame, keys: list[str] | None = None,
                            window_hours: int = 24,
                            lateness_hours: int = 2) -> DataFrame:
     """Watermarked event stream → (keys..., bucket_ts, n_active) with
@@ -49,9 +46,9 @@ def stream_trailing_active(stream: DataFrame,
     standard streaming-exactness trade; the batch operator is the
     backfill."""
     keys = keys or ["metric"]
-    hour = F.date_trunc("hour", F.col(ts_col))
+    hour = F.date_trunc("hour", F.col("ts"))
     covered = stream.select(
-        *keys, F.col(actor_col).alias("_actor"),
+        *keys, F.col("conv_id").alias("_actor"),
         F.explode(
             F.sequence(
                 hour,

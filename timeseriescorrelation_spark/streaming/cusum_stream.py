@@ -46,7 +46,7 @@ def stream_cusum(stream: DataFrame, mu: float, sigma: float,
     def _cusum(key, pdf, st):
         conv_id, metric = key
         lt, li, p0, lo0, hi0 = st or (None, None, 0, 0, 0)
-        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]

@@ -39,9 +39,7 @@ STATE_SCHEMA = (
 )
 
 
-def stream_dq_sequence(stream: DataFrame, conv_col: str = "conv_id",
-                       ts_col: str = "ts", idx_col: str = "turn_idx",
-                       type_col: str = "metric",
+def stream_dq_sequence(stream: DataFrame,
                        evict_seconds: int = 86400) -> DataFrame:
     """stream (conv_id, ts, turn_idx, metric) with a watermark on ts →
     update stream of current per-conversation DQ counters."""
@@ -51,8 +49,8 @@ def stream_dq_sequence(stream: DataFrame, conv_col: str = "conv_id",
         lt, li, ltp, n_turns, n_same, n_ties, n_inv = (
             st or (None, None, None, 0, 0, 0, 0)
         )
-        ts_us, idx, pos = ordered_live(pdf, ts_col, idx_col, lt, li)
-        tps = pdf[type_col].astype(str).to_numpy()[pos]
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
+        tps = pdf["metric"].astype(str).to_numpy()[pos]
         for t, i, tp in zip(ts_us, idx, tps):
             if ltp is not None:
                 n_same += int(tp == ltp)
@@ -74,6 +72,6 @@ def stream_dq_sequence(stream: DataFrame, conv_col: str = "conv_id",
         )
 
     return stateful_scan(
-        stream, [conv_col], _scan, OUT_SCHEMA, STATE_SCHEMA,
+        stream, ["conv_id"], _scan, OUT_SCHEMA, STATE_SCHEMA,
         evict_seconds * 1_000, mode="update",
     )

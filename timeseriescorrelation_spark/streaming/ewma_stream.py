@@ -46,7 +46,7 @@ def stream_ewma(stream: DataFrame, alpha: float = 0.3,
     def _ewm(key, pdf, st):
         conv_id, metric = key
         lt, li, y0 = st or (None, None, None)
-        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]

@@ -30,8 +30,6 @@ STATE_SCHEMA = "last_ts_us long, last_idx long, stage int, t0_us long"
 
 
 def stream_pattern(stream: DataFrame, steps: list[str],
-                   key_col: str = "key", type_col: str = "event_type",
-                   ts_col: str = "ts", tie_col: str = "turn_idx",
                    within_seconds: int = 3600,
                    evict_seconds: int = 86400) -> DataFrame:
     """stream (key, event_type, ts, tie) with a watermark on ts →
@@ -42,10 +40,10 @@ def stream_pattern(stream: DataFrame, steps: list[str],
     def _scan(key, pdf, st):
         (key_val,) = key
         lt, li, stage, t0 = st or (None, None, 0, 0)
-        ts_us, idx, pos = ordered_live(pdf, ts_col, tie_col, lt, li)
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
         if not len(pos):
             return None, None
-        sts = pdf[type_col].astype(str).to_numpy()[pos]
+        sts = pdf["event_type"].astype(str).to_numpy()[pos]
         out_s, out_e = [], []
         for t, ev in zip(ts_us, sts):
             if ev not in step_list:
@@ -75,6 +73,6 @@ def stream_pattern(stream: DataFrame, steps: list[str],
         )
 
     return stateful_scan(
-        stream, [key_col], _scan, OUT_SCHEMA, STATE_SCHEMA,
+        stream, ["key"], _scan, OUT_SCHEMA, STATE_SCHEMA,
         evict_seconds * 1_000,
     )

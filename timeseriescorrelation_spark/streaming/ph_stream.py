@@ -67,7 +67,7 @@ def stream_page_hinkley(stream: DataFrame, delta: float = 0.0,
     def _ph(key, pdf, st):
         conv_id, metric = key
         lt, li, t, mean_u, cum, lo = st or (None, None, 0, 0, 0, 0)
-        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]

@@ -37,7 +37,7 @@ def stream_counter_increments(stream: DataFrame,
     def _inc(key, pdf, st):
         conv_id, metric = key
         lt, li, lv = st or (None, None, None)
-        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]

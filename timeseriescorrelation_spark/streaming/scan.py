@@ -7,8 +7,8 @@ pattern, ph, psi, rate, stateful_fill, topk, zscore) is a per-key
 single statement of the contract they share.
 
 Ordering/late-data contract: within a micro-batch a twin processes its
-rows in (ts, tie) order — `ordered_live` lexsorts on (ts, turn_idx or
-the twin's tie column).  A row at or before the state's last processed
+rows in (ts, tie) order — `ordered_live` lexsorts on (ts, turn_idx).
+A row at or before the state's last processed
 (ts, tie) is late past emission and is dropped: emitted values are
 never retracted.  Run with a watermark at least the expected disorder.
 The bucketed twins (psi, corr, stateful_fill) order by their own hour /
@@ -46,13 +46,13 @@ def micros(col: pd.Series) -> np.ndarray:
     return col.to_numpy().astype("datetime64[us]").view(np.int64)
 
 
-def ordered_live(pdf: pd.DataFrame, ts_col: str, tie_col: str,
-                 last_ts: int | None, last_idx: int | None):
-    """(ts, tie)-ordered rows of ``pdf`` past the replay cutoff →
-    (ts_us, tie, pos), where ``pos`` indexes the surviving rows of
+def ordered_live(pdf: pd.DataFrame, last_ts: int | None,
+                 last_idx: int | None):
+    """(ts, turn_idx)-ordered rows of ``pdf`` past the replay cutoff →
+    (ts_us, turn_idx, pos), where ``pos`` indexes the surviving rows of
     ``pdf`` in processing order."""
-    ts_us = micros(pdf[ts_col])
-    idx = pdf[tie_col].to_numpy().astype(np.int64)
+    ts_us = micros(pdf["ts"])
+    idx = pdf["turn_idx"].to_numpy().astype(np.int64)
     pos = np.lexsort((idx, ts_us))
     ts_us, idx = ts_us[pos], idx[pos]
     if last_ts is not None:

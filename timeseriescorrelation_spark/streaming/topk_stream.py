@@ -41,10 +41,6 @@ STATE_SCHEMA = (
 
 
 def stream_heavy_hitters(stream: DataFrame, k: int = 8,
-                         key_col: str = "key",
-                         item_col: str = "item",
-                         ts_col: str = "ts",
-                         tie_col: str = "turn_idx",
                          evict_seconds: int = 86400) -> DataFrame:
     """stream (key, item, ts, tie) with a watermark on ts → append
     stream of per-batch MG counter snapshots per key."""
@@ -57,10 +53,10 @@ def stream_heavy_hitters(stream: DataFrame, k: int = 8,
             counters = dict(zip(items, (int(c) for c in counts)))
         else:
             lt, li, n, counters = None, None, 0, {}
-        ts_us, idx, pos = ordered_live(pdf, ts_col, tie_col, lt, li)
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
         if not len(pos):
             return None, None
-        for it in pdf[item_col].astype(str).to_numpy()[pos]:
+        for it in pdf["item"].astype(str).to_numpy()[pos]:
             n += 1
             if it in counters:
                 counters[it] += 1
@@ -83,6 +79,6 @@ def stream_heavy_hitters(stream: DataFrame, k: int = 8,
         )
 
     return stateful_scan(
-        stream, [key_col], _mg, OUT_SCHEMA, STATE_SCHEMA,
+        stream, ["key"], _mg, OUT_SCHEMA, STATE_SCHEMA,
         evict_seconds * 1_000,
     )

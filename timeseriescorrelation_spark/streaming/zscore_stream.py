@@ -49,7 +49,7 @@ def stream_zscore(stream: DataFrame, min_n: int = 3,
     def _z(key, pdf, st):
         conv_id, metric = key
         lt, li, n0, s0, ss0 = st or (None, None, 0, 0, 0)
-        ts_us, idx, pos = ordered_live(pdf, "ts", "turn_idx", lt, li)
+        ts_us, idx, pos = ordered_live(pdf, lt, li)
         if not len(pos):
             return None, None
         vals = pdf["value"].to_numpy(dtype=np.float64)[pos]
