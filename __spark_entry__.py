@@ -1157,7 +1157,7 @@ def q_state_durations(spark, sf_dir):
         F.col("ts"),
         F.col("event_id").cast("int").alias("turn_idx"),
     )
-    return state_durations(e, "state", "day")
+    return state_durations(e, "day")
 
 
 def q_hll_distinct_day(spark, sf_dir):
@@ -1216,12 +1216,12 @@ def q_cms_tokens(spark, sf_dir):
     toks = _docs(spark, sf_dir).select(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
     )
-    sketch = cms_sketch(toks, "tok")
+    sketch = cms_sketch(toks)
     exact = toks.groupBy("tok").agg(
         F.count("*").cast("long").alias("exact_n")
     )
     top = exact.orderBy(F.col("exact_n").desc(), F.col("tok")).limit(20)
-    return cms_lookup(sketch, top, "tok").select(
+    return cms_lookup(sketch, top).select(
         "tok",
         "exact_n",
         "cms_est",
@@ -2500,7 +2500,7 @@ def q_hll_overlap(spark, sf_dir):
         F.col("event_type").alias("seg"),
         F.col("user_id").cast("string").alias("item"),
     )
-    return hll_overlap(e, "seg", "item", b=10)
+    return hll_overlap(e, b=10)
 
 
 def q_km_survival(spark, sf_dir):
@@ -3032,8 +3032,7 @@ def q_hll_rolling_7d(spark, sf_dir):
         F.col("user_id"),
     )
     daily = hll_sketch(e, ["event_type", "bucket_ts"], "user_id")
-    rolled = hll_rolling(daily, ["event_type"], "bucket_ts",
-                         window_days=7)
+    rolled = hll_rolling(daily, ["event_type"], window_days=7)
     est = hll_estimate(rolled, ["event_type", "bucket_ts"])
     days = e.select("event_type", "bucket_ts").distinct()
     exact = (
@@ -3092,9 +3091,7 @@ def q_weighted_sample(spark, sf_dir):
     )
 
     d = _docs(spark, sf_dir).where(F.col("n_chars") > 0)
-    return weighted_sample_topk(
-        d, strata=["lang"], weight_col="n_chars", k=20,
-    )
+    return weighted_sample_topk(d, strata=["lang"], k=20)
 
 
 def q_seq_packing(spark, sf_dir):
@@ -3337,7 +3334,7 @@ def q_weighted_median(spark, sf_dir):
         (F.col("_sc").cast("double")
          / (F.col("w") * SCALE).cast("double")).alias("mean_v"),
     )
-    return weighted_median(conv, ["metric"], "mean_v", "w")
+    return weighted_median(conv, ["metric"], "mean_v")
 
 
 def q_sax_motifs(spark, sf_dir):

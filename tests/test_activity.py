@@ -77,7 +77,7 @@ def test_weighted_median_rule_boundary(spark):
     df = spark.createDataFrame(
         [("m", "a", 1.0, 1), ("m", "b", 2.0, 1), ("m", "c", 3.0, 2)],
         "metric string, conv_id string, v double, w long")
-    row = weighted_median(df, ["metric"], "v", "w").collect()[0]
+    row = weighted_median(df, ["metric"], "v").collect()[0]
     assert (row["n_items"], row["total_w"]) == (3, 4)
     assert row["w_median"] == pytest.approx(2.0)
 
@@ -89,7 +89,7 @@ def test_weighted_median_dominant_weight(spark):
         [("m", c, float(i), 1) for i, c in enumerate("abcde")]
         + [("m", "z", 99.0, 100)],
         "metric string, conv_id string, v double, w long")
-    row = weighted_median(df, ["metric"], "v", "w").collect()[0]
+    row = weighted_median(df, ["metric"], "v").collect()[0]
     assert row["w_median"] == pytest.approx(99.0)
 
 

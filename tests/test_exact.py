@@ -399,9 +399,12 @@ def _defaults(fn) -> dict:
     return {x.arg: d for x, d in pairs if d is not None}
 
 
+ANY = object()
+
+
 def _parameter_values():
     """(vals, sites): the values each parameter of a package function
-    can take, and the defaulted ``*_col`` parameters by label.
+    can take, and the ``*_col`` parameters by label.
 
     A value is a literal, a non-literal default's node, or ``ANY``.  A
     parameter takes its default and every value a call in the package,
@@ -417,7 +420,6 @@ def _parameter_values():
              root / "bench.py",
              *(p for d in ("scripts", "perfbench", "tests")
                for p in (root / d).rglob("*.py"))]
-    ANY = object()
     defs, vals, sites, calls, passed = {}, {}, {}, [], set()
 
     def collect(node, rel, in_class=False):
@@ -427,11 +429,12 @@ def _parameter_values():
                 a = ch.args
                 for x in a.posonlyargs + a.args + a.kwonlyargs:
                     vals[ch, x.arg] = set()
+                    if x.arg.endswith("_col"):
+                        sites[ch, x.arg] = (
+                            f"{rel}:{ch.lineno} {ch.name} {x.arg}")
                 for k, d in _defaults(ch).items():
                     vals[ch, k].add(d.value if isinstance(d, ast.Constant)
                                     else d)
-                    if k.endswith("_col"):
-                        sites[ch, k] = f"{rel}:{ch.lineno} {ch.name} {k}"
             else:
                 collect(ch, rel, in_class or isinstance(ch, ast.ClassDef))
 
@@ -501,16 +504,19 @@ def _parameter_values():
 
 
 def test_column_names_are_the_schemas():
-    """A defaulted ``*_col`` parameter of a package function stays only
-    while some call passes it a value other than its default
-    (`_parameter_values`): neither forwarding the caller's own unset
-    parameter nor forwarding a required one that every call sets to
-    the default counts.  Every other column name is the schema's,
-    spelled where it is read."""
+    """A ``*_col`` parameter of a package function stays only while
+    it takes two values (`_parameter_values`): a defaulted one needs a
+    call that passes another value than its default, a required one
+    two calls that pass different values, or one the scan cannot
+    follow.  Neither forwarding the caller's own unset parameter nor
+    forwarding a required one that every call sets to the same value
+    counts.  Every other column name is the schema's, spelled where it
+    is read."""
     vals, sites = _parameter_values()
     unset = sorted(label for (fn, k), label in sites.items()
-                   if len(vals[fn, k]) == 1)
-    assert not unset, _sites_message("never-set *_col parameters", unset)
+                   if len(vals[fn, k]) == 1 and ANY not in vals[fn, k])
+    assert not unset, _sites_message("single-valued *_col parameters",
+                                     unset)
 
 
 def _sources(skip: str = ""):

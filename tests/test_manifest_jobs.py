@@ -24,8 +24,8 @@ N_PARTS = 8
 
 
 def _jobs(spark, fn):
-    """``(jobs, result)``: the Spark jobs submitted while ``fn()`` runs,
-    counted in a fresh job group, and what it returned."""
+    """``(jobs, result)``: the ids of the Spark jobs submitted while
+    ``fn()`` runs, found by a fresh job group, and what it returned."""
     sc = spark.sparkContext
     group = f"manifest-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group, False)
@@ -33,7 +33,25 @@ def _jobs(spark, fn):
         result = fn()
     finally:
         sc._jsc.clearJobGroup()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+    return list(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def _rdd_names(spark, jobs) -> set[str]:
+    """Class names of the RDDs in every stage of ``jobs`` (a
+    ``PythonRDD`` is a Python worker task), from the status store's
+    per-stage operation graphs."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    names, clusters = set(), []
+    for job in jobs:
+        for stage in sc.statusTracker().getJobInfo(job).stageIds:
+            clusters.append(store.operationGraphForStage(stage).rootCluster())
+    while clusters:
+        c = clusters.pop()
+        nodes, children = c.childNodes(), c.childClusters()
+        names |= {nodes.apply(i).name() for i in range(nodes.size())}
+        clusters += [children.apply(i) for i in range(children.size())]
+    return names
 
 
 def _files(*dirs: str) -> list[str]:
@@ -61,10 +79,25 @@ def test_stage_commit_job_budget(built):
     # done list, input counts, the write, the read-back hash, the append:
     # no schema-inference read, no join against the done parts
     root, jobs = built
-    assert 0 < jobs <= 10
+    assert 0 < len(jobs) <= 9
     # one manifest file per stage commit, however many cores wrote it
     manifest = _files(os.path.join(root, "manifest"))
     assert len([f for f in manifest if f.endswith(".parquet")]) == 2
+
+
+def test_stage_commit_runs_no_python_worker(spark, built):
+    # the manifest rows reach the JVM as Arrow, not as pickled rows
+    _, jobs = built
+    names = _rdd_names(spark, jobs)
+    assert "ParallelCollectionRDD" in names  # the append's local rows
+    assert "PythonRDD" not in names
+
+
+def test_missing_upstream_stage_is_actionable(spark, tiny_transcripts, tmp_path):
+    # the upstream read names its schema, so the missing path is the
+    # only failure it can raise
+    with pytest.raises(ValueError, match="needs upstream 'series'"):
+        _stage(spark, tiny_transcripts, str(tmp_path), "agg_1m")
 
 
 def test_full_resume_submits_few_jobs_and_writes_nothing(
@@ -74,7 +107,7 @@ def test_full_resume_submits_few_jobs_and_writes_nothing(
     dirs = (os.path.join(root, "agg_1m"), os.path.join(root, "manifest"))
     before = _files(*dirs)
     jobs, out = _jobs(spark, lambda: _stage(spark, tiny_transcripts, root, "agg_1m"))
-    assert jobs <= 3  # the done list and the input counts only
+    assert len(jobs) <= 3  # the done list and the input counts only
     assert _files(*dirs) == before
     assert out.columns == spark.read.parquet(dirs[0]).drop("part_key").columns
 

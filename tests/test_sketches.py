@@ -182,7 +182,7 @@ def test_hll_overlap_identical_and_disjoint(spark):
     )
     df = spark.createDataFrame(rows, "seg string, item string")
     got = {(r.seg_a, r.seg_b): r for r in
-           hll_overlap(df, "seg", "item").collect()}
+           hll_overlap(df).collect()}
     ab = got[("A", "B")]
     # identical segments: union == each side, overlap == cardinality
     assert ab.est_union == ab.est_a == ab.est_b

@@ -103,7 +103,7 @@ def test_state_durations_runs_and_totals(spark):
     # A(0..100) A(100..250) B(250..400) A(400..day end): A has 2 runs,
     # 3 events, 250 + (86400-400) s; B has 1 run, 150 s
     df = _events(spark, [(0, "A"), (100, "A"), (250, "B"), (400, "A")])
-    out = {r["state"]: r for r in state_durations(df, "state", "day").collect()}
+    out = {r["state"]: r for r in state_durations(df, "day").collect()}
     assert out["A"]["n_events"] == 3 and out["A"]["n_entries"] == 2
     assert out["A"]["total_s"] == 250.0 + (86400.0 - 400.0)
     assert out["B"]["n_events"] == 1 and out["B"]["n_entries"] == 1

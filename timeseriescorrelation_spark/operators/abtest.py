@@ -39,6 +39,7 @@ from timeseriescorrelation_spark.functions.exact import (
 )
 from timeseriescorrelation_spark.functions.timeutil import epoch_us, weekday
 from timeseriescorrelation_spark.operators.sampling import hash_bucket
+from timeseriescorrelation_spark.session import local_frame
 
 
 def ab_assign(units: DataFrame, id_col: str = "user_id",
@@ -341,9 +342,8 @@ def isotonic_calibration(scored: DataFrame,
                 round(s / n, 6), round(s_blk / n_blk, 6),
             ))
             idx += 1
-    spark = scored.sparkSession
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        scored.sparkSession, out,
         "bin_idx int, score double, n long, successes long,"
         " rate_raw double, rate_iso double",
     )

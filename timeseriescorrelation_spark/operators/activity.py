@@ -129,9 +129,9 @@ def burstiness_daily(series: DataFrame,
 
 
 def weighted_median(grouped: DataFrame, keys: list[str],
-                    value_col: str, weight_col: str) -> DataFrame:
+                    value_col: str) -> DataFrame:
     """Weighted median by the cumulative-weight rule: the smallest
-    value v whose running weight (ordered by value) reaches half the
+    value v whose running weight `w` (ordered by value) reaches half the
     total — (keys..., n_items, total_w, w_median).
 
     Integer weights keep the pick exact: the condition is
@@ -148,15 +148,15 @@ def weighted_median(grouped: DataFrame, keys: list[str],
     metrics over per-conv aggregates, which is the exact tool's lane.
     """
     other = [c for c in grouped.columns
-             if c not in (*keys, value_col, weight_col)]
+             if c not in (*keys, value_col, "w")]
     wsort = Window.partitionBy(*keys).orderBy(value_col, *other)
     wall = Window.partitionBy(*keys)
     ranked = grouped.select(
-        *keys, value_col, weight_col,
-        F.sum(weight_col).over(
+        *keys, value_col, "w",
+        F.sum("w").over(
             wsort.rowsBetween(Window.unboundedPreceding, 0)
         ).alias("_cumw"),
-        F.sum(weight_col).over(wall).alias("total_w"),
+        F.sum("w").over(wall).alias("total_w"),
         F.count(F.lit(1)).over(wall).alias("n_items"),
         F.row_number().over(wsort).alias("_rn"),
     )

@@ -66,6 +66,7 @@ from timeseriescorrelation_spark.functions.timeutil import (
     weekday,
 )
 from timeseriescorrelation_spark.operators.rollup import packed_order_key
+from timeseriescorrelation_spark.session import local_frame
 
 KEYS = ["conv_id", "metric"]
 
@@ -3106,9 +3107,8 @@ def isotonic_trend_daily(series: DataFrame, key: str = "metric") -> DataFrame:
                     round(c / SCALE, 6),
                     round(s_blk / n_blk / SCALE, 6),
                 ))
-    spark = series.sparkSession
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        series.sparkSession, out,
         f"{key} string, day_ts timestamp, value_raw double,"
         " value_iso double",
     )

@@ -37,6 +37,7 @@ from timeseriescorrelation_spark.functions.exact import (
     VALUE_DECIMALS,
     snap,
 )
+from timeseriescorrelation_spark.session import local_frame
 
 M = 1_000_000
 
@@ -166,8 +167,9 @@ def benford_check(series: DataFrame, keys: list[str] | None = None,
     )
     obs = d.groupBy(*keys, "d").agg(F.count(F.lit(1)).alias("o"))
     tot = d.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    digits = tot.sparkSession.createDataFrame(
-        [(i + 1, p) for i, p in enumerate(BENFORD_P)], "d int, p double"
+    digits = local_frame(
+        tot.sparkSession,
+        [(i + 1, p) for i, p in enumerate(BENFORD_P)], "d int, p double",
     )
     grid = tot.crossJoin(F.broadcast(digits)).join(
         obs, [*keys, "d"], "left"

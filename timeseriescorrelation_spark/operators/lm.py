@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from timeseriescorrelation_spark.functions.exact import snap, wide
 from timeseriescorrelation_spark.operators.dedup import tokenize
 from timeseriescorrelation_spark.operators.ranks import global_row_number
+from timeseriescorrelation_spark.session import local_frame
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -684,4 +685,4 @@ def coverage_greedy(docs: DataFrame, k: int = 5, ngram: int = 1) -> DataFrame:
         StructField("gain", LongType(), False),
         StructField("covered_total", LongType(), False),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.functions.exact import wide
+from timeseriescorrelation_spark.session import local_frame
 
 SNAP = 1.0e9
 
@@ -129,9 +130,8 @@ def logit_fit(docs: DataFrame, pos_label: str = "en",
     unrolled Newton steps; train_acc is the 0.5-threshold accuracy of
     the final plane (exact integer counts over the sign of z)."""
     feat = _features(docs, pos_label)
-    spark = docs.sparkSession
-    beta = spark.createDataFrame(
-        [(0.0, 0.0, 0.0)], "b0 double, b1 double, b2 double"
+    beta = local_frame(
+        docs.sparkSession, [(0.0, 0.0, 0.0)], "b0 double, b1 double, b2 double"
     )
     for _ in range(int(n_iter)):
         beta = _newton_step(feat, beta)

@@ -21,18 +21,21 @@ Design:
   input with ``part_key NOT IN (...)`` (J6) — no join, no broadcast.
 - Every read names its schema (the manifest's, or the stage plan's),
   so no read runs a schema-inference job.  The manifest rows of one
-  stage call are built on the driver and appended as one file.
+  stage call are built on the driver and appended as one file, sent to
+  the JVM as an Arrow table (``session.local_frame``): the commit runs
+  no Python worker.
 """
 
 from __future__ import annotations
 
 import os
-from datetime import datetime
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from timeseriescorrelation_spark.schemas import manifest_schema
+from timeseriescorrelation_spark.session import local_frame
 
 MANIFEST_TABLE = "manifest"
 
@@ -76,7 +79,7 @@ class ManifestStore:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], manifest_schema())
+            return local_frame(self.spark, [], manifest_schema())
         return self.spark.read.schema(manifest_schema()).parquet(self.path)
 
     def done_parts(self, run_id: str, stage: str) -> list[int]:
@@ -94,11 +97,12 @@ class ManifestStore:
         return sorted({int(r["part_key"]) for r in rows})
 
     def append(self, rows: list[tuple]) -> None:
-        """Append manifest rows (``manifest_schema`` order) as one file:
-        a local DataFrame has one partition per core, and every later
-        stage call re-reads each tiny file it would leave."""
+        """Append manifest rows (``manifest_schema`` order) as one file,
+        sent through Arrow (no Python worker runs): a local DataFrame can
+        span several partitions, and every later stage call re-reads
+        each tiny file it would leave."""
         (
-            self.spark.createDataFrame(rows, manifest_schema())
+            local_frame(self.spark, rows, manifest_schema())
             .coalesce(1)
             .write.mode("append")
             .parquet(self.path)
@@ -149,7 +153,7 @@ def run_stage(
             r["part_key"]: (r["output_rows"], r["content_hash"])
             for r in content_hash(written, ["part_key"]).collect()
         }
-        now = datetime.now()
+        now = datetime.now(timezone.utc)
         rows = []
         for part, n_in in sorted(input_rows.items()):
             # a part whose rows all map to no output is done too

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.session import local_frame
+
 
 def global_row_number(df: DataFrame, order_cols: list,
                       out_col: str = "rn",
@@ -63,9 +65,8 @@ def global_row_number(df: DataFrame, order_cols: list,
     # offsets ride back as a BROADCAST join, not a P-branch CASE
     # expression — at thousands of partitions the expression tree
     # would dwarf the plan; the join stays O(P) rows
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        offsets or [(0, 0)], ["_pid", "_off"]
+    off_df = local_frame(
+        df.sparkSession, offsets or [(0, 0)], "_pid int, _off long"
     )
     w = Window.partitionBy("_pid").orderBy(*cols)
     out = (

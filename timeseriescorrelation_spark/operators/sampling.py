@@ -57,13 +57,13 @@ def assign_split(df: DataFrame, train: float = 0.8,
     return df.withColumn("split", split)
 
 
-def weighted_sample_topk(df: DataFrame, strata: list[str], weight_col,
+def weighted_sample_topk(df: DataFrame, strata: list[str],
                          k: int = 20) -> DataFrame:
-    """Weighted sampling WITHOUT replacement, k per stratum, fully
-    deterministic: Efraimidis–Spirakis A-ES — each unit draws
-    u ~ U(0,1) and the k largest u^(1/w) win, which provably samples
-    with probability proportional to weight.  The uniform comes from
-    the same md5-integer recipe as hash_bucket (top 15 hex chars →
+    """Weighted sampling WITHOUT replacement, k per stratum, weighted
+    by `n_chars`, fully deterministic: Efraimidis–Spirakis A-ES — each
+    unit draws u ~ U(0,1) and the k largest u^(1/w) win, which provably
+    samples with probability proportional to weight.  The uniform comes
+    from the same md5-integer recipe as hash_bucket (top 15 hex chars →
     60-bit integer h; u = (h+1)/(2^60+1) ∈ (0,1)), so the draw is a
     pure function of the id: reproducible across clusters, restarts,
     and engines, and the DuckDB oracle replicates every key exactly.
@@ -84,8 +84,7 @@ def weighted_sample_topk(df: DataFrame, strata: list[str], weight_col,
     ).cast("long")
     two60 = float((1 << 60) + 1)
     u = (h + F.lit(1)).cast("double") / F.lit(two60)
-    wcol = weight_col if not isinstance(weight_col, str) else F.col(weight_col)
-    key = snap(F.log(u) / wcol.cast("double"), 9)
+    key = snap(F.log(u) / F.col("n_chars").cast("double"), 9)
     from pyspark.sql import Window
 
     win = Window.partitionBy(*strata).orderBy(

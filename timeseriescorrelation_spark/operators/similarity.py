@@ -30,7 +30,7 @@ from timeseriescorrelation_spark.functions.exact import (
     wide,
 )
 from timeseriescorrelation_spark.operators.correlation import _dot
-from timeseriescorrelation_spark.session import cache_once
+from timeseriescorrelation_spark.session import cache_once, local_frame
 
 
 def _to_double(col):
@@ -520,8 +520,8 @@ def pq_codebooks(emb: DataFrame, m: int = 4, ksub: int = 16, n_iter: int = 2,
         for b, (present, mu) in enumerate(cents)
         for c, mu_row in zip(present, mu)
     ]
-    return emb.sparkSession.createDataFrame(
-        rows, "block int, cell int, c array<double>"
+    return local_frame(
+        emb.sparkSession, rows, "block int, cell int, c array<double>"
     )
 
 

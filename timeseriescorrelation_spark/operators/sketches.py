@@ -143,9 +143,9 @@ def _cms_bucket(item: Column, j: int, w: int) -> Column:
     )
 
 
-def cms_sketch(df: DataFrame, item_col: str, d: int = 3,
-               w: int = 4096) -> DataFrame:
-    """Count-min sketch: (j, bucket, cnt) — d·w counters total.
+def cms_sketch(df: DataFrame, d: int = 3, w: int = 4096) -> DataFrame:
+    """Count-min sketch of the `tok` column: (j, bucket, cnt) — d·w
+    counters total.
 
     The exact heavy-hitter count (`token_topk`) shuffles one row per
     DISTINCT token; at 100 TB the long tail makes that shuffle huge.
@@ -164,7 +164,7 @@ def cms_sketch(df: DataFrame, item_col: str, d: int = 3,
         F.array(*[
             F.struct(
                 F.lit(j).alias("j"),
-                _cms_bucket(F.col(item_col), j, w).alias("bucket"),
+                _cms_bucket(F.col("tok"), j, w).alias("bucket"),
             )
             for j in range(d)
         ])
@@ -340,9 +340,9 @@ def bloom_probe(items: DataFrame, bloom: DataFrame, item_col: str,
     )
 
 
-def cms_lookup(sketch: DataFrame, items: DataFrame, item_col: str,
-               d: int = 3, w: int = 4096) -> DataFrame:
-    """Append `cms_est` to `items`: min over the d counters the item
+def cms_lookup(sketch: DataFrame, items: DataFrame, d: int = 3,
+               w: int = 4096) -> DataFrame:
+    """Append `cms_est` to `items`: min over the d counters its `tok`
     hashes to.  The sketch side is d·w rows — broadcast it; absent
     buckets mean a count of 0."""
     probes = items.select(
@@ -351,7 +351,7 @@ def cms_lookup(sketch: DataFrame, items: DataFrame, item_col: str,
             F.array(*[
                 F.struct(
                     F.lit(j).alias("j"),
-                    _cms_bucket(F.col(item_col), j, w).alias("bucket"),
+                    _cms_bucket(F.col("tok"), j, w).alias("bucket"),
                 )
                 for j in range(d)
             ])
@@ -365,10 +365,9 @@ def cms_lookup(sketch: DataFrame, items: DataFrame, item_col: str,
     )
 
 
-def hll_overlap(df: DataFrame, seg_col: str, item_col: str,
-                b: int = 10) -> DataFrame:
+def hll_overlap(df: DataFrame, b: int = 10) -> DataFrame:
     """(seg_a, seg_b, est_a, est_b, est_union, overlap_est): distinct-
-    item overlap between every segment pair by inclusion-exclusion on
+    `item` overlap between every `seg` pair by inclusion-exclusion on
     MERGED HLL sketches — the audience-overlap question ("how many
     users do metrics A and B share?") answered from the same mergeable
     registers the retention cascade already maintains, never by a
@@ -388,7 +387,7 @@ def hll_overlap(df: DataFrame, seg_col: str, item_col: str,
     segment count, not data volume, bounds it.  The segs×segs theta
     join is a broadcast of the tiny distinct-segment list."""
     regs = hll_sketch(
-        df.select(F.col(seg_col).alias("seg"), F.col(item_col).alias("it")),
+        df.select("seg", F.col("item").alias("it")),
         ["seg"], "it", b,
     )
     singles = hll_estimate(regs, ["seg"], b)
@@ -434,9 +433,9 @@ def hll_overlap(df: DataFrame, seg_col: str, item_col: str,
     )
 
 
-def hll_rolling(regs: DataFrame, keys: list[str], day_col: str,
+def hll_rolling(regs: DataFrame, keys: list[str],
                 window_days: int = 7) -> DataFrame:
-    """Trailing-W-day merged registers per (keys..., day): sliding-
+    """Trailing-W-day merged registers per (keys..., bucket_ts): sliding-
     window distinct counts from the SAME mergeable registers the daily
     tier already maintains ("distinct users in the last 7 days", the
     canonical DAU/WAU shape) — never a distinct scan over W days of
@@ -460,8 +459,8 @@ def hll_rolling(regs: DataFrame, keys: list[str], day_col: str,
         *keys, "reg", "rho",
         F.explode(
             F.sequence(
-                F.col(day_col),
-                F.col(day_col) + F.expr(f"interval {w - 1} days"),
+                F.col("bucket_ts"),
+                F.col("bucket_ts") + F.expr(f"interval {w - 1} days"),
                 step,
             )
         ).alias("_wday"),
@@ -469,10 +468,10 @@ def hll_rolling(regs: DataFrame, keys: list[str], day_col: str,
     merged = target.groupBy(*keys, "_wday", "reg").agg(
         F.max("rho").alias("rho")
     )
-    days = regs.select(*keys, F.col(day_col).alias("_wday")).distinct()
+    days = regs.select(*keys, F.col("bucket_ts").alias("_wday")).distinct()
     return (
         merged.join(days, [*keys, "_wday"], "left_semi")
-        .withColumnRenamed("_wday", day_col)
+        .withColumnRenamed("_wday", "bucket_ts")
     )
 
 

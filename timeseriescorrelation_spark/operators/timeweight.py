@@ -152,9 +152,8 @@ def heartbeat_coverage(beats: DataFrame, interval_seconds: int,
     )
 
 
-def state_durations(events: DataFrame, state_col: str,
-                    trunc: str = "day") -> DataFrame:
-    """Time spent in each state per conversation (`state_agg`).
+def state_durations(events: DataFrame, trunc: str = "day") -> DataFrame:
+    """Time spent in each `state` per conversation (`state_agg`).
 
     The state holds from its event until the next event of the SAME
     conversation (any state), clamped to the event's bucket end.  Per
@@ -166,14 +165,14 @@ def state_durations(events: DataFrame, state_col: str,
         epoch_us(F.col("ts")), "turn_idx"
     )
     seg = _with_segment(events, ["conv_id"], trunc)
-    prev_state = F.lag(state_col).over(w)
+    prev_state = F.lag("state").over(w)
     entry = F.when(
-        prev_state.isNull() | (prev_state != F.col(state_col)), 1
+        prev_state.isNull() | (prev_state != F.col("state")), 1
     ).otherwise(0)
     seg = seg.select("*", entry.alias("_entry"))
     dt = F.col("_seg_end_us") - F.col("_ts_us")
     return (
-        seg.groupBy("conv_id", F.col(state_col).alias("state"))
+        seg.groupBy("conv_id", "state")
         .agg(
             F.count("*").alias("n_events"),
             F.sum("_entry").cast("long").alias("n_entries"),

@@ -19,8 +19,10 @@ vectors for every conversation that lasted ≥ m steps.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +32,11 @@ from timeseriescorrelation_spark.operators.gapfill import fill_locf
 from timeseriescorrelation_spark.operators.manifest import run_stage
 from timeseriescorrelation_spark.operators.rollup import rollup_raw, rollup_tier
 from timeseriescorrelation_spark.operators.series import derive_series
+from timeseriescorrelation_spark.schemas import (
+    filled_schema,
+    series_schema,
+    tier_schema,
+)
 
 
 FILL_STEP = "1m"
@@ -37,6 +44,14 @@ CHUNK = "day"
 CORR_METRIC = "token_len"
 CORR_THETA = 0.9
 CORR_STEPS = 64  # relative grid length m
+
+# the stage directories a later stage reads back (``run``'s ``dep``)
+STAGE_SCHEMAS = {
+    "series": series_schema,
+    "filled_1m": filled_schema,
+    "agg_1m": tier_schema,
+    "agg_1h": tier_schema,
+}
 
 
 @dataclass
@@ -101,12 +116,14 @@ def run(
         tiers) works without recomputing upstream."""
         if name in out:
             return out[name]
-        import os
-
         path = os.path.join(root, name)
         try:
-            return spark.read.parquet(path).drop("part_key")
-        except Exception as e:  # path missing -> actionable message
+            # the declared schema: reading it runs no inference job
+            return (
+                spark.read.schema(STAGE_SCHEMAS[name]()).parquet(path)
+                .drop("part_key")
+            )
+        except AnalysisException as e:  # path missing -> actionable message
             raise ValueError(
                 f"stage subset {cfg.stages} needs upstream '{name}', "
                 f"which neither ran this invocation nor exists at "

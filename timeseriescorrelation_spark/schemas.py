@@ -25,6 +25,20 @@ def series_schema() -> T.StructType:
     )
 
 
+# Dense 1-minute LOCF grid (gapfill.fill_locf)
+
+def filled_schema() -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("metric", T.StringType(), False),
+            T.StructField("grid_ts", T.TimestampType(), False),
+            T.StructField("value", T.DoubleType(), True),
+            T.StructField("filled", T.BooleanType(), False),
+        ]
+    )
+
+
 # Continuous-aggregate tier row (SURVEY.md §1.2 #5, FIXTURES.md §3)
 
 def tier_schema() -> T.StructType:

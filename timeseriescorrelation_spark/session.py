@@ -8,8 +8,12 @@ the submit environment.
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 
 def get_spark(
@@ -80,6 +84,32 @@ def shuffle_partition_count(spark: SparkSession) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """A DataFrame of driver-built ``rows`` (tuples in ``schema`` order;
+    ``schema`` a StructType or a DDL string), sent to the JVM as one
+    Arrow table.  ``createDataFrame(rows, schema)`` would pickle the
+    rows through a ``PythonRDD`` map, a Python worker task per call.
+
+    Timestamps are converted to UTC first, so either path stores the
+    same instant: as on the pickled path, a naive ``datetime`` is the
+    Python process's local time (Arrow would read it in the session
+    zone), and an aware one keeps its offset (Arrow would drop it)."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = [list(c) for c in zip(*rows)] or [[] for _ in schema.fields]
+    for i, f in enumerate(schema.fields):
+        if isinstance(f.dataType, TimestampType):
+            cols[i] = [None if v is None else v.astimezone(timezone.utc)
+                       for v in cols[i]]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def cache_once(df):

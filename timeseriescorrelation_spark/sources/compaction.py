@@ -34,13 +34,11 @@ import math
 from pyspark.sql import SparkSession
 
 from timeseriescorrelation_spark.sources.snapshots import (
-    SNAP_DIR,  # noqa: F401  (re-export convenience for callers)
     _align,
     _fs,
     _manifest,
     _read_files,
     _versions,
-    snapshot_read,
     snapshot_write,
 )
 

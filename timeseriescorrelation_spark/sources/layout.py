@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timeseriescorrelation_spark.session import local_frame
+
 
 def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     """Morton-interleave the low `bits` bits of each ordinal column
@@ -112,8 +114,8 @@ def zone_map_report(spark, path: str, column: str):
                         ranges.append((st.min, st.max))
     n = len(ranges)
     if n == 0:
-        return spark.createDataFrame(
-            [(len(files), 0, None, None, None, None)],
+        return local_frame(
+            spark, [(len(files), 0, None, None, None, None)],
             "n_files long, n_row_groups long, global_min double, "
             "global_max double, avg_overlap_frac double, "
             "point_hit_frac double",
@@ -133,7 +135,8 @@ def zone_map_report(spark, path: str, column: str):
         sum(float(hi - lo) for lo, hi in ranges) / (n * width)
         if width > 0 else 1.0
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(files), n, float(gmin), float(gmax),
           round(avg_overlap, 6), round(point_hit, 6))],
         "n_files long, n_row_groups long, global_min double, "

@@ -46,6 +46,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from timeseriescorrelation_spark.session import local_frame
+
 SNAP_DIR = "_snapshots"
 
 
@@ -863,8 +865,8 @@ def snapshot_files_table(spark: SparkSession, table_path: str,
         ).getLen()
         rows.append((f, _data_commit_version(f), int(size), spec,
                      f in stats))
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "path string, committed_version int, size_bytes long, "
         "partition_spec string, has_stats boolean",
     )
@@ -880,8 +882,8 @@ def snapshot_history_table(spark: SparkSession,
          h["total_files"])
         for h in snapshot_log(spark, table_path)
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "version int, parent int, operation string, added_files int, "
         "total_files int",
     )
